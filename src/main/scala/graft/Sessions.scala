@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Local-mode session hardening shared by every entry point (bench, verify,
-  * plan dump, smoke) and the test suite's shared session.
+  * smoke) and the test suite's shared session.
   *
   * Round 14's driver runs (both bench sweeps and the test suite) died with
   * exit code 56 — `ExecutorExitCode.HEARTBEAT_FAILURE`: on a contended box
@@ -24,4 +24,18 @@ object Sessions {
     // Keep the default count explicit: 60 consecutive misses at 60s each
     // means the JVM only self-kills after ~an hour of total unresponsiveness.
     .config("spark.executor.heartbeat.maxFailures", "60")
+
+  /** A hardened `local[cpus]` session with as many shuffle partitions,
+    * UTC, no UI and WARN logging: the one shape every main and the test
+    * suite run in. */
+  def local(cpus: String): SparkSession = {
+    val s = harden(SparkSession.builder())
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 }

@@ -2,14 +2,13 @@ package graft
 
 import graft.operators._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The operator registry: every module's [[Op]]s, one per key.
   *
-  * `queries` is the full operator inventory (SURVEY.md §2), one entry per
-  * key; `oracleSql` carries the DuckDB-equivalent SQL for every
-  * hash-verifiable entry. Keys without oracle SQL are covered by
-  * property/parity tests in `src/test` instead.
+  * `queries` is the full operator inventory (SURVEY.md §2); `oracleSql`
+  * carries the DuckDB-equivalent SQL for every hash-verifiable key. Keys
+  * without oracle SQL are covered by property/parity tests in `src/test`
+  * instead.
   */
 object SparkEntry {
 
@@ -18,44 +17,30 @@ object SparkEntry {
     * smoke-checks rows > 0 on sf0.001. */
   def entry(spark: SparkSession): DataFrame = {
     val dir = "/root/testdata/sf0.001"
-    Tables.events(spark, dir)
-      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
-      .agg(count(lit(1)).as("n_events"), Tables.dsum6(col("value")).as("sum_value"))
-      .select(col("user_id"), col("sw.start").as("session_start"),
-        col("sw.end").as("session_end"), col("n_events"), col("sum_value"))
-      .orderBy("user_id", "session_start")
+    queries("sessionize_native")(spark, dir)
   }
 
-  private val modules: Seq[(Map[String, Tables.Q], Map[String, String])] = Seq(
-    (Scans.queries, Scans.oracle),
-    (Filters.queries, Filters.oracle),
-    (Joins.queries, Joins.oracle),
-    (Aggregates.queries, Aggregates.oracle),
-    (SortSetOps.queries, SortSetOps.oracle),
-    (WindowFuncs.queries, WindowFuncs.oracle),
-    (Sessionization.queries, Sessionization.oracle),
-    (ScalarFuncs.queries, ScalarFuncs.oracle),
-    (TextOps.queries, TextOps.oracle),
-    (DedupOps.queries, DedupOps.oracle),
-    (SimilarityOps.queries, SimilarityOps.oracle),
-    (MultimodalOps.queries, MultimodalOps.oracle),
-    (SkewOps.queries, SkewOps.oracle),
-    (RelationalExt.queries, RelationalExt.oracle),
-    (TpchOps.queries, TpchOps.oracle),
-    (AnalyticsExt.queries, AnalyticsExt.oracle),
-    (StatsExt.queries, StatsExt.oracle),
-    (SegmentOps.queries, SegmentOps.oracle),
-    (GraphOps.queries, GraphOps.oracle),
-    (Aggregates.sketchQueries, Map.empty[String, String]),
-    (SortSetOps.evolutionQueries, SortSetOps.evolutionOracle),
-  )
+  /** Every operator, in module order. A key declared twice fails here, at
+    * initialization, instead of one declaration silently shadowing the
+    * other in the maps below. */
+  val ops: Seq[Op] = distinctKeys(Seq(Scans.ops, Filters.ops, Joins.ops,
+    Aggregates.ops, SortSetOps.ops, WindowFuncs.ops, Sessionization.ops,
+    ScalarFuncs.ops, TextOps.ops, DedupOps.ops, SimilarityOps.ops,
+    MultimodalOps.ops, SkewOps.ops, RelationalExt.ops, TpchOps.ops,
+    AnalyticsExt.ops, StatsExt.ops, SegmentOps.ops, GraphOps.ops).flatten)
+
+  private[graft] def distinctKeys(ops: Seq[Op]): Seq[Op] = {
+    val dups = ops.groupBy(_.key).collect { case (k, v) if v.size > 1 => k }
+    require(dups.isEmpty, s"operator keys declared twice: ${dups.toSeq.sorted.mkString(", ")}")
+    ops
+  }
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    modules.iterator.map(_._1).reduce(_ ++ _)
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    ops.map(o => o.key -> o.build).toMap
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    modules.iterator.map(_._2).reduce(_ ++ _)
+  /** For each oracle-verified key, equivalent ANSI SQL runnable by DuckDB
+    * on the same parquet tables. */
+  val oracleSql: Map[String, String] =
+    ops.collect { case Op(k, _, Some(sql)) => k -> sql }.toMap
 }

@@ -37,6 +37,17 @@ object Tables {
     else df.repartition(p, keys: _*)
   }
 
+  /** Drop managed table `name` and delete its warehouse location; call
+    * before each `saveAsTable`. A fresh JVM starts with an empty
+    * in-memory catalog, but the location a killed run left behind
+    * outlives it, and `saveAsTable` then fails with
+    * LOCATION_ALREADY_EXISTS. */
+  def dropManagedTable(s: SparkSession, name: String): Unit = {
+    s.sql(s"DROP TABLE IF EXISTS $name")
+    val loc = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"), name)
+    loc.getFileSystem(s.sparkContext.hadoopConfiguration).delete(loc, true)
+  }
+
   /** Schema-adaptive `ts` normalization. The driver's testdata has shipped
     * `events.ts` in two encodings across regens:
     *  - parquet timestamp[ns], which Spark 4.x refuses to read natively

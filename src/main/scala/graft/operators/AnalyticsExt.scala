@@ -199,13 +199,61 @@ object AnalyticsExt {
       .orderBy("look")
   }
 
-  val queries: Map[String, Q] = Map(
+  /** Interleave the low 16 bits of `x` (even positions) and `y` (odd):
+    * the standard Morton spread via doubling shifts + masks. Result fits
+    * in 32 bits — no sign hazard. */
+  def zorderKey(x: org.apache.spark.sql.Column, y: org.apache.spark.sql.Column)
+      : org.apache.spark.sql.Column = {
+    def spread16(c: org.apache.spark.sql.Column) = {
+      val v0 = c.bitwiseAND(lit(0xFFFFL))
+      val v1 = (v0.bitwiseOR(shiftleft(v0, 8))).bitwiseAND(lit(0x00FF00FFL))
+      val v2 = (v1.bitwiseOR(shiftleft(v1, 4))).bitwiseAND(lit(0x0F0F0F0FL))
+      val v3 = (v2.bitwiseOR(shiftleft(v2, 2))).bitwiseAND(lit(0x33333333L))
+      (v3.bitwiseOR(shiftleft(v3, 1))).bitwiseAND(lit(0x55555555L))
+    }
+    spread16(x).bitwiseOR(shiftleft(spread16(y), 1))
+  }
+
+  /** DuckDB twin of [[zorderKey]] (same spread, SQL operators). */
+  def zorderSql(x: String, y: String): String = {
+    def spread16(e: String) = {
+      val v0 = s"($e & 65535)"
+      val v1 = s"(($v0 | ($v0 << 8)) & 16711935)"
+      val v2 = s"(($v1 | ($v1 << 4)) & 252645135)"
+      val v3 = s"(($v2 | ($v2 << 2)) & 858993459)"
+      s"(($v3 | ($v3 << 1)) & 1431655765)"
+    }
+    s"(${spread16(x)} | (${spread16(y)} << 1))"
+  }
+
+  /** Lateness-bucket report over (user_id, event_id, us): each event's
+    * event-time lag behind its user's running high-water mark in ARRIVAL
+    * order (event_id). Factored out of the `ts_out_of_order_stats` key
+    * so the spec can drive the disorder buckets with a scrambled
+    * fixture. */
+  private[graft] def outOfOrderStats(ev: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val w = Window.partitionBy("user_id").orderBy("event_id")
+    ev.withColumn("late_us", max("us").over(w) - col("us"))
+      .select(
+        when(col("late_us") === 0L, "a_on_time")
+          .when(col("late_us") <= 60L * 1000000, "b_within_1m")
+          .when(col("late_us") <= 600L * 1000000, "c_within_10m")
+          .when(col("late_us") <= 3600L * 1000000, "d_within_1h")
+          .otherwise("e_over_1h").as("bucket"),
+        col("late_us"))
+      .groupBy("bucket")
+      .agg(count(lit(1)).as("n_events"), max("late_us").as("max_late_us"))
+      .orderBy("bucket")
+  }
+
+  val ops: Seq[Op] = Seq(
     // Least-squares y = slope·x + intercept per group, from exact DECIMAL
     // sufficient statistics (NOT the built-in regr_* functions, whose
     // double accumulation is summation-order-dependent and so not
     // bit-stable across engines/partitionings). The final arithmetic runs
     // on exact sums → identical doubles in Spark and DuckDB.
-    "agg_regression" -> ((s, dir) => {
+    Op("agg_regression", (s, dir) => {
       val x = col("l_quantity")
       val y = col("l_extendedprice")
       val g = t(s, dir, "lineitem").groupBy("l_returnflag").agg(
@@ -220,13 +268,26 @@ object AnalyticsExt {
           round((col("sy") - (cov / varx) * col("sx")) / col("n"), 9).as("intercept"),
           round((cov * cov) / (varx * vary), 9).as("r2"))
         .orderBy("l_returnflag")
-    }),
+    },
+      Some(s"""WITH g AS (SELECT l_returnflag,
+              | CAST(count(*) AS DOUBLE) AS n,
+              | ${dsumSql("l_quantity")} AS sx, ${dsumSql("l_extendedprice")} AS sy,
+              | ${dsumSql("l_quantity * l_extendedprice")} AS sxy,
+              | ${dsumSql("l_quantity * l_quantity")} AS sxx,
+              | ${dsumSql("l_extendedprice * l_extendedprice")} AS syy
+              |FROM lineitem GROUP BY 1)
+              |SELECT l_returnflag,
+              | round((n*sxy - sx*sy) / (n*sxx - sx*sx), 9) AS slope,
+              | round((sy - (n*sxy - sx*sy) / (n*sxx - sx*sx) * sx) / n, 9) AS intercept,
+              | round((n*sxy - sx*sy) * (n*sxy - sx*sy)
+              |   / ((n*sxx - sx*sx) * (n*syy - sy*sy)), 9) AS r2
+              |FROM g ORDER BY l_returnflag""".stripMargin)),
 
     // Batch MERGE (CDC upsert without a lakehouse format): target =
     // latest purchase per user before the cutoff, source = changes after
     // it. MATCHED → update value/ts, NOT MATCHED → insert; target rows
     // with no change survive untouched. One full-outer join + coalesce.
-    "cdc_merge_upsert" -> ((s, dir) => {
+    Op("cdc_merge_upsert", (s, dir) => {
       val cutoff = lit("2024-01-08 00:00:00").cast("timestamp")
       def latest(df: org.apache.spark.sql.DataFrame) =
         df.groupBy("user_id").agg(max_by(
@@ -245,7 +306,24 @@ object AnalyticsExt {
           when(col("t_ts").isNull, "insert")
             .when(col("s_ts").isNull, "keep").otherwise("update").as("action"))
         .orderBy("user_id")
-    }),
+    },
+      Some("""WITH ev AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id, value
+             |  FROM events WHERE event_type = 'purchase'),
+             | target AS (SELECT user_id, ts AS t_ts, value AS t_value FROM (
+             |   SELECT *, row_number() OVER (PARTITION BY user_id
+             |     ORDER BY ts DESC, event_id DESC) AS rk
+             |   FROM ev WHERE ts < TIMESTAMP '2024-01-08 00:00:00') WHERE rk = 1),
+             | source AS (SELECT user_id, ts AS s_ts, value AS s_value FROM (
+             |   SELECT *, row_number() OVER (PARTITION BY user_id
+             |     ORDER BY ts DESC, event_id DESC) AS rk
+             |   FROM ev WHERE ts >= TIMESTAMP '2024-01-08 00:00:00') WHERE rk = 1)
+             |SELECT coalesce(target.user_id, source.user_id) AS user_id,
+             | coalesce(s_ts, t_ts) AS ts,
+             | coalesce(s_value, t_value) AS value,
+             | CASE WHEN t_ts IS NULL THEN 'insert'
+             |      WHEN s_ts IS NULL THEN 'keep' ELSE 'update' END AS action
+             |FROM target FULL OUTER JOIN source ON target.user_id = source.user_id
+             |ORDER BY user_id""".stripMargin)),
 
     // Ordered conversion funnel view → click → purchase: per user, the
     // first view, the first click strictly AFTER it, the first purchase
@@ -256,7 +334,7 @@ object AnalyticsExt {
     // by user makes them co-located scans); step frames only ever carry
     // (user_id, micros). Time-to-convert sums exact integer micros —
     // engine-identical division at the end.
-    "funnel_steps" -> ((s, dir) => {
+    Op("funnel_steps", (s, dir) => {
       val e = events(s, dir).select("user_id", "ts", "event_type")
       val t1 = e.filter(col("event_type") === "view")
         .groupBy("user_id").agg(min("ts").as("t1"))
@@ -271,7 +349,21 @@ object AnalyticsExt {
         .crossJoin(t3.agg(count(lit(1)).as("n_purchase_after_click"),
           round(sum(unix_micros(col("t3")) - unix_micros(col("t1")))
             / count(lit(1)) / lit(1000000.0), 6).as("avg_view_to_purchase_s")))
-    }),
+    },
+      Some("""WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_type FROM events),
+             | t1 AS (SELECT user_id, min(ts) AS t1 FROM e
+             |   WHERE event_type = 'view' GROUP BY 1),
+             | t2 AS (SELECT e.user_id, min(t1.t1) AS t1, min(e.ts) AS t2
+             |   FROM e JOIN t1 USING (user_id)
+             |   WHERE event_type = 'click' AND e.ts > t1.t1 GROUP BY 1),
+             | t3 AS (SELECT e.user_id, min(t2.t1) AS t1, min(e.ts) AS t3
+             |   FROM e JOIN t2 USING (user_id)
+             |   WHERE event_type = 'purchase' AND e.ts > t2.t2 GROUP BY 1)
+             |SELECT (SELECT count(*) FROM t1) AS n_view,
+             | (SELECT count(*) FROM t2) AS n_click_after_view,
+             | (SELECT count(*) FROM t3) AS n_purchase_after_click,
+             | (SELECT round(sum(epoch_us(t3) - epoch_us(t1)) / count(*) / 1000000.0, 6)
+             |  FROM t3) AS avg_view_to_purchase_s""".stripMargin)),
 
     // OHLC downsampling: open/high/low/close of `value` per user per
     // 1-hour tumbling window — the classic time-series compaction
@@ -284,7 +376,7 @@ object AnalyticsExt {
     // max_by carry — folds map-side to constant state per (user, window)
     // regardless of window population, so the single exchange moves one
     // partial row per (user, window, map task), never raw events.
-    "window_ohlc" -> ((s, dir) =>
+    Op("window_ohlc", (s, dir) =>
       events(s, dir)
         .groupBy(col("user_id"), window(col("ts"), "1 hour").as("w"))
         .agg(min_by(col("value"), col("ts")).as("open_value"),
@@ -295,7 +387,12 @@ object AnalyticsExt {
         .select(col("user_id"), col("w.start").as("w_start"),
           col("open_value"), col("high_value"), col("low_value"),
           col("close_value"), col("n_events"))
-        .orderBy("user_id", "w_start")),
+        .orderBy("user_id", "w_start"),
+      Some("""SELECT user_id, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS w_start,
+             | arg_min(value, ts) AS open_value, max(value) AS high_value,
+             | min(value) AS low_value, arg_max(value, ts) AS close_value,
+             | count(*) AS n_events
+             |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
 
     // Per-stream EWMA (α = 1/2) — a genuinely RECURSIVE op (s_t depends
     // on s_{t-1}, inexpressible as any window frame) done exactly: each
@@ -315,12 +412,17 @@ object AnalyticsExt {
     // exchange moves ≤ one partial row per cell per task regardless of
     // event volume. Spark dayofweek is 1=Sunday; the oracle shifts
     // DuckDB's 0=Sunday to match.
-    "ts_dow_hour_profile" -> ((s, dir) =>
+    Op("ts_dow_hour_profile", (s, dir) =>
       events(s, dir)
         .groupBy(col("event_type"),
           dayofweek(col("ts")).as("dow"), hour(col("ts")).as("hr"))
         .agg(count(lit(1)).as("n_events"), dsum6(col("value")).as("sum_value"))
-        .orderBy("event_type", "dow", "hr")),
+        .orderBy("event_type", "dow", "hr"),
+      Some(s"""SELECT event_type,
+              | CAST(dayofweek(CAST(ts AS TIMESTAMP)) + 1 AS INT) AS dow,
+              | CAST(hour(CAST(ts AS TIMESTAMP)) AS INT) AS hr,
+              | count(*) AS n_events, ${dsum6Sql("value")} AS sum_value
+              |FROM events GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin)),
 
     // Seasonal decomposition (classical additive, weekly period): the
     // hourly series minus its (dow × hour) seasonal profile leaves the
@@ -334,8 +436,21 @@ object AnalyticsExt {
     // bucket sums ride dsum6; the profile mean divides an exact DECIMAL
     // sum by an exact count, terminally rounded before the residual
     // subtraction (one IEEE op on two 6-dp-rounded doubles).
-    "ts_seasonal_decompose" -> ((s, dir) =>
-      seasonalFrame(s, dir).orderBy("hour_ts")),
+    Op("ts_seasonal_decompose", (s, dir) =>
+      seasonalFrame(s, dir).orderBy("hour_ts"),
+      Some("""WITH hourly AS (
+             |  SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hour_ts,
+             |    round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 6) AS actual
+             |  FROM events GROUP BY 1),
+             | h2 AS (SELECT hour_ts, CAST(dayofweek(hour_ts) + 1 AS INT) AS dow,
+             |    CAST(hour(hour_ts) AS INT) AS hr, actual FROM hourly),
+             | prof AS (SELECT dow, hr,
+             |    round(CAST(sum(CAST(actual AS DECIMAL(18,6))) AS DOUBLE) / count(*), 6)
+             |      AS expected
+             |  FROM h2 GROUP BY 1, 2)
+             |SELECT h2.hour_ts, h2.dow, h2.hr, h2.actual, prof.expected,
+             | round(h2.actual - prof.expected, 6) AS residual
+             |FROM h2 JOIN prof USING (dow, hr) ORDER BY hour_ts""".stripMargin)),
 
     // SEASONAL-STRENGTH READOUT (round 10) — Hyndman's F_s = max(0,
     // 1 − Var(residual)/Var(actual)) over the decompose frame: the
@@ -359,7 +474,7 @@ object AnalyticsExt {
     // percentile ↔ quantile_cont pairing (agg_percentile precedent);
     // the intercept is median(y − slope·x) with the 1-row slope frame
     // broadcast back.
-    "ts_theil_sen" -> ((s, dir) => {
+    Op("ts_theil_sen", (s, dir) => {
       val hourly = events(s, dir)
         .groupBy(date_trunc("hour", col("ts")).as("hour_ts"))
         .agg(round(dsum6(col("value")), 6).as("y"))
@@ -381,7 +496,24 @@ object AnalyticsExt {
       icpt.select(col("n_hours"), col("n_pairs"),
         round(col("m_slope"), 9).as("slope"),
         round(col("m_icpt"), 6).as("intercept"))
-    }),
+    },
+      Some("""WITH hourly AS (
+             |  SELECT CAST(epoch_us(date_trunc('hour', CAST(ts AS TIMESTAMP)))
+             |      AS BIGINT) // 3600000000 AS x,
+             |    round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 6) AS y
+             |  FROM events GROUP BY 1),
+             | slopes AS (SELECT (b.y - a.y) / (b.x - a.x) AS slope
+             |  FROM hourly a JOIN hourly b ON a.x < b.x),
+             | med AS (SELECT count(*) AS n_pairs,
+             |   quantile_cont(slope, 0.5) AS m_slope FROM slopes),
+             | icpt AS (SELECT max(n_pairs) AS n_pairs, max(m_slope) AS m_slope,
+             |   count(*) AS n_hours,
+             |   quantile_cont(y - m_slope * x, 0.5) AS m_icpt
+             |  FROM hourly CROSS JOIN med)
+             |SELECT CAST(n_hours AS BIGINT) AS n_hours,
+             | CAST(n_pairs AS BIGINT) AS n_pairs,
+             | round(m_slope, 9) AS slope, round(m_icpt, 6) AS intercept
+             |FROM icpt""".stripMargin)),
 
     // MANN–KENDALL TREND TEST (round 10) — Theil–Sen's inseparable
     // companion (the pair always reported together: MK decides IF a
@@ -392,7 +524,7 @@ object AnalyticsExt {
     // masses are EXACT INTEGERS (a sign fold and a value-count agg);
     // z is one IEEE tree over them. Shape: one corpus pass (hourly
     // agg), grid² sign pairs, two 1-row frames crossed.
-    "ts_mann_kendall" -> ((s, dir) => {
+    Op("ts_mann_kendall", (s, dir) => {
       val hourly = events(s, dir)
         .groupBy(date_trunc("hour", col("ts")).as("hour_ts"))
         .agg(round(dsum6(col("value")), 6).as("y"))
@@ -417,7 +549,32 @@ object AnalyticsExt {
         .select(col("n").as("n_hours"), col("s").as("s_stat"),
           round(varS, 6).as("var_s"), round(z, 6).as("z"),
           (abs(round(z, 6)) > lit(1.96)).as("is_trending"))
-    }),
+    },
+      Some("""WITH hourly AS (
+             |  SELECT CAST(epoch_us(date_trunc('hour', CAST(ts AS TIMESTAMP)))
+             |      AS BIGINT) // 3600000000 AS x,
+             |    round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 6) AS y
+             |  FROM events GROUP BY 1),
+             | sp AS (SELECT CAST(sum(CAST(sign(b.y - a.y) AS BIGINT)) AS BIGINT)
+             |    AS s
+             |  FROM hourly a JOIN hourly b ON a.x < b.x),
+             | ties AS (SELECT CAST(count(*) AS BIGINT) AS n_distinct,
+             |   CAST(sum(t) AS BIGINT) AS n,
+             |   CAST(sum(t * (t - 1) * (t * 2 + 5)) AS BIGINT) AS tmass
+             |  FROM (SELECT y, count(*) AS t FROM hourly GROUP BY 1)),
+             | v AS (SELECT s, n,
+             |   (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)
+             |     * (CAST(n AS DOUBLE) * 2.0 + 5.0)
+             |     - CAST(tmass AS DOUBLE)) / 18.0 AS var_s
+             |  FROM sp CROSS JOIN ties),
+             | zz AS (SELECT n, s, var_s,
+             |   CASE WHEN s > 0 THEN (CAST(s AS DOUBLE) - 1.0) / sqrt(var_s)
+             |     WHEN s < 0 THEN (CAST(s AS DOUBLE) + 1.0) / sqrt(var_s)
+             |     ELSE 0.0 END AS z
+             |  FROM v)
+             |SELECT n AS n_hours, s AS s_stat, round(var_s, 6) AS var_s,
+             | round(z, 6) AS z, (abs(round(z, 6)) > 1.96) AS is_trending
+             |FROM zz""".stripMargin)),
 
     // LEAD/LAG CROSS-CORRELATION (the "does clicking now buy later?"
     // readout): Pearson corr between the click hourly series at t and
@@ -431,7 +588,7 @@ object AnalyticsExt {
     // double→decimal snap inside the double's 17 significant digits, so
     // both engines snap product doubles identically); zero-variance
     // lags release NULL, not ±Inf.
-    "ts_lead_lag_corr" -> ((s, dir) => {
+    Op("ts_lead_lag_corr", (s, dir) => {
       val dec = "decimal(28,6)"
       val hourly = events(s, dir)
         .filter(col("event_type").isin("click", "purchase"))
@@ -460,9 +617,32 @@ object AnalyticsExt {
             round((col("n") * col("sxy") - col("sx") * col("sy"))
               / sqrt(vx * vy), 6)).as("xcorr"))
         .orderBy("lag")
-    }),
+    },
+      Some("""WITH hourly AS (SELECT event_type,
+             |   CAST(epoch_us(date_trunc('hour', CAST(ts AS TIMESTAMP))) AS BIGINT)
+             |     // 3600000000 AS hi,
+             |   round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 6) AS v
+             |  FROM events WHERE event_type IN ('click', 'purchase')
+             |  GROUP BY 1, 2),
+             | x AS (SELECT hi, v AS x FROM hourly WHERE event_type = 'click'),
+             | y AS (SELECT hi AS hiy, v AS y FROM hourly
+             |  WHERE event_type = 'purchase'),
+             | lags AS (SELECT CAST(unnest(generate_series(0, 6)) AS INT) AS lag),
+             | m AS (SELECT lag, CAST(count(*) AS DOUBLE) AS n,
+             |   CAST(sum(CAST(x AS DECIMAL(28,6))) AS DOUBLE) AS sx,
+             |   CAST(sum(CAST(y AS DECIMAL(28,6))) AS DOUBLE) AS sy,
+             |   CAST(sum(CAST(x * y AS DECIMAL(28,6))) AS DOUBLE) AS sxy,
+             |   CAST(sum(CAST(x * x AS DECIMAL(28,6))) AS DOUBLE) AS sxx,
+             |   CAST(sum(CAST(y * y AS DECIMAL(28,6))) AS DOUBLE) AS syy
+             |  FROM x CROSS JOIN lags JOIN y ON hiy = hi + lag GROUP BY 1)
+             |SELECT lag, CAST(n AS BIGINT) AS n_hours,
+             | CASE WHEN (n * sxx - sx * sx) > 0.0 AND (n * syy - sy * sy) > 0.0
+             |   THEN round((n * sxy - sx * sy)
+             |     / sqrt((n * sxx - sx * sx) * (n * syy - sy * sy)), 6)
+             |   END AS xcorr
+             |FROM m ORDER BY lag""".stripMargin)),
 
-    "ts_seasonal_strength" -> ((s, dir) => {
+    Op("ts_seasonal_strength", (s, dir) => {
       // DECIMAL(28,12), not (18,6): `actual` (6dp) squares to 12dp — exact
       // on the wide lattice — and (18,6)'s 12 integer digits overflow once
       // actual > 1e6, i.e. the cast is a scale cliff the SS accumulators
@@ -484,9 +664,34 @@ object AnalyticsExt {
         round(va, 6).as("var_actual"), round(vr, 6).as("var_residual"),
         round(greatest(lit(0.0), lit(1.0) - vr / va), 6)
           .as("seasonal_strength"))
-    }),
+    },
+      Some("""WITH hourly AS (
+             |  SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hour_ts,
+             |    round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 6) AS actual
+             |  FROM events GROUP BY 1),
+             | h2 AS (SELECT hour_ts, CAST(dayofweek(hour_ts) + 1 AS INT) AS dow,
+             |    CAST(hour(hour_ts) AS INT) AS hr, actual FROM hourly),
+             | prof AS (SELECT dow, hr,
+             |    round(CAST(sum(CAST(actual AS DECIMAL(18,6))) AS DOUBLE) / count(*), 6)
+             |      AS expected
+             |  FROM h2 GROUP BY 1, 2),
+             | f AS (SELECT h2.actual,
+             |    round(h2.actual - prof.expected, 6) AS residual
+             |   FROM h2 JOIN prof USING (dow, hr)),
+             | st AS (SELECT CAST(count(*) AS DOUBLE) AS n,
+             |   CAST(sum(CAST(actual AS DECIMAL(28,12))) AS DOUBLE) AS sa,
+             |   CAST(sum(CAST(actual * actual AS DECIMAL(28,12))) AS DOUBLE) AS saa,
+             |   CAST(sum(CAST(residual AS DECIMAL(28,12))) AS DOUBLE) AS sr,
+             |   CAST(sum(CAST(residual * residual AS DECIMAL(28,12))) AS DOUBLE) AS srr
+             |  FROM f),
+             | v AS (SELECT n, (saa - sa * sa / n) / (n - 1.0) AS va,
+             |   (srr - sr * sr / n) / (n - 1.0) AS vr FROM st)
+             |SELECT CAST(n AS BIGINT) AS n_hours, round(va, 6) AS var_actual,
+             | round(vr, 6) AS var_residual,
+             | round(greatest(0.0, 1.0 - vr / va), 6) AS seasonal_strength
+             |FROM v""".stripMargin)),
 
-    "ts_ewma" -> ((s, dir) =>
+    Op("ts_ewma", (s, dir) =>
       events(s, dir)
         .select(col("user_id"), col("event_type"), col("ts"), col("event_id"),
           (col("value").cast("decimal(18,4)") * 10000).cast("long").as("vi"))
@@ -498,7 +703,15 @@ object AnalyticsExt {
         .select(col("user_id"), col("event_type"), col("n_events"),
           expr("aggregate(slice(vis, 2, size(vis)), vis[0]," +
             " (acc, x) -> (acc + x) div 2)").as("ewma_micro"))
-        .orderBy("user_id", "event_type")),
+        .orderBy("user_id", "event_type"),
+      Some("""WITH e AS (SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS ts2,
+             |   event_id, CAST(CAST(value AS DECIMAL(18,4)) * 10000 AS BIGINT) AS vi
+             | FROM events),
+             |g AS (SELECT user_id, event_type, count(*) AS n_events,
+             |   list(vi ORDER BY ts2, event_id) AS vis FROM e GROUP BY 1, 2)
+             |SELECT user_id, event_type, n_events,
+             | list_reduce(vis, (acc, x) -> (acc + x) // 2) AS ewma_micro
+             |FROM g ORDER BY user_id, event_type""".stripMargin)),
 
     // DEBOUNCE / rate-limit thinning — keep an event only if ≥ 10 min
     // have passed since the last KEPT event (dedup of bursty repeats:
@@ -510,7 +723,7 @@ object AnalyticsExt {
     // a RECURSIVE CTE stepping rn → rn+1. The streaming twin
     // (StreamingDebounce) holds the same 2-long state per key forever —
     // O(1), the throttle/suppress shape of a stream processor.
-    "ts_debounce" -> ((s, dir) =>
+    Op("ts_debounce", (s, dir) =>
       events(s, dir)
         .select(col("user_id"), unix_micros(col("ts")).as("tu"), col("event_id"))
         .groupBy("user_id")
@@ -524,7 +737,23 @@ object AnalyticsExt {
             " (acc, x) -> IF(x >= acc.last + 600000000," +
             "   named_struct('last', x, 'n', acc.n + 1), acc)).n")
             .as("n_kept"))
-        .orderBy("user_id")),
+        .orderBy("user_id"),
+      Some("""WITH RECURSIVE e AS (SELECT user_id,
+             |   epoch_us(CAST(ts AS TIMESTAMP)) AS tu, event_id FROM events),
+             |o AS (SELECT user_id, tu, row_number() OVER (
+             |   PARTITION BY user_id ORDER BY tu, event_id) AS rn FROM e),
+             |n AS (SELECT user_id, count(*) AS n_events FROM o GROUP BY 1),
+             |r AS (
+             | SELECT user_id, rn, tu AS last, CAST(1 AS BIGINT) AS n
+             | FROM o WHERE rn = 1
+             | UNION ALL
+             | SELECT o.user_id, o.rn,
+             |  CASE WHEN o.tu >= r.last + 600000000 THEN o.tu ELSE r.last END,
+             |  CASE WHEN o.tu >= r.last + 600000000 THEN r.n + 1 ELSE r.n END
+             | FROM r JOIN o ON o.user_id = r.user_id AND o.rn = r.rn + 1)
+             |SELECT n.user_id, n.n_events, r.n AS n_kept
+             |FROM r JOIN n ON r.user_id = n.user_id AND r.rn = n.n_events
+             |ORDER BY n.user_id""".stripMargin)),
 
     // Pairwise Pearson correlation matrix per group from the same
     // exact-DECIMAL sufficient statistics as agg_regression (never the
@@ -534,7 +763,7 @@ object AnalyticsExt {
     // doubles in both engines, partition-count invariant. The shape is
     // the standard "feature-stats pass" of a training pipeline: adding
     // columns widens the map-side accumulator row, never adds a pass.
-    "agg_corr_matrix" -> ((s, dir) => {
+    Op("agg_corr_matrix", (s, dir) => {
       val x = col("l_quantity")
       val y = col("l_extendedprice")
       val z = col("l_discount")
@@ -556,7 +785,23 @@ object AnalyticsExt {
           corrOf(col("sy"), col("sz"), col("syz"), col("syy"), col("szz"))
             .as("corr_price_disc"))
         .orderBy("l_returnflag")
-    }),
+    },
+      Some(s"""WITH g AS (SELECT l_returnflag,
+              |  CAST(count(*) AS DOUBLE) AS n,
+              |  ${dsumSql("l_quantity")} AS sx, ${dsumSql("l_extendedprice")} AS sy,
+              |  ${dsum6Sql("l_discount")} AS sz,
+              |  ${dsumSql("l_quantity * l_extendedprice")} AS sxy,
+              |  ${dsum6Sql("l_quantity * l_discount")} AS sxz,
+              |  ${dsum6Sql("l_extendedprice * l_discount")} AS syz,
+              |  ${dsumSql("l_quantity * l_quantity")} AS sxx,
+              |  ${dsumSql("l_extendedprice * l_extendedprice")} AS syy,
+              |  ${dsum6Sql("l_discount * l_discount")} AS szz
+              | FROM lineitem GROUP BY 1)
+              |SELECT l_returnflag,
+              | round((n*sxy - sx*sy) / sqrt((n*sxx - sx*sx) * (n*syy - sy*sy)), 6) AS corr_qty_price,
+              | round((n*sxz - sx*sz) / sqrt((n*sxx - sx*sx) * (n*szz - sz*sz)), 6) AS corr_qty_disc,
+              | round((n*syz - sy*sz) / sqrt((n*syy - sy*sy) * (n*szz - sz*sz)), 6) AS corr_price_disc
+              |FROM g ORDER BY l_returnflag""".stripMargin)),
 
     // Trailing-window 3σ anomaly detection per (user, event_type) stream:
     // flag events whose value deviates from the mean of the previous ≤20
@@ -582,7 +827,7 @@ object AnalyticsExt {
     // percentile ↔ quantile_cont pairing agg_percentile pins) and the
     // fence comparison is correctly-rounded arithmetic on them. Same
     // one-exchange per-key window shape as the sigma twin.
-    "ts_anomaly_iqr" -> ((s, dir) => {
+    Op("ts_anomaly_iqr", (s, dir) => {
       val fr = Window.partitionBy("user_id", "event_type")
         .orderBy(col("ts"), col("event_id")).rowsBetween(-20, -1)
       events(s, dir)
@@ -597,9 +842,23 @@ object AnalyticsExt {
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"), round(col("q1"), 6).as("q1"), round(col("q3"), 6).as("q3"))
         .orderBy("event_id")
-    }),
+    },
+      Some("""WITH e AS (SELECT event_id, user_id, event_type, value,
+             |   CAST(ts AS TIMESTAMP) AS ts FROM events),
+             | w AS (SELECT event_id, user_id, event_type, value,
+             |   count(*) OVER fr AS cnt,
+             |   quantile_cont(value, 0.25) OVER fr AS q1,
+             |   quantile_cont(value, 0.75) OVER fr AS q3
+             |  FROM e WINDOW fr AS (PARTITION BY user_id, event_type
+             |   ORDER BY ts, event_id ROWS BETWEEN 20 PRECEDING AND 1 PRECEDING))
+             |SELECT event_id, user_id, event_type, value,
+             | round(q1, 6) AS q1, round(q3, 6) AS q3
+             |FROM w
+             |WHERE cnt >= 10 AND (value > q3 + 1.5 * (q3 - q1)
+             |  OR value < q1 - 1.5 * (q3 - q1))
+             |ORDER BY event_id""".stripMargin)),
 
-    "ts_anomaly_sigma" -> ((s, dir) => {
+    Op("ts_anomaly_sigma", (s, dir) => {
       val fr = Window.partitionBy("user_id", "event_type")
         .orderBy(col("ts"), col("event_id")).rowsBetween(-20, -1)
       events(s, dir)
@@ -614,7 +873,22 @@ object AnalyticsExt {
             lit(9L) * (col("cnt") * col("sxx") - col("sx") * col("sx")))
         .select("event_id", "user_id", "event_type", "value")
         .orderBy("event_id")
-    }),
+    },
+      Some("""WITH e AS (SELECT event_id, user_id, event_type, value,
+             |   CAST(ts AS TIMESTAMP) AS ts2,
+             |   CAST(CAST(value AS DECIMAL(18,4)) * 10000 AS BIGINT) AS vi
+             | FROM events),
+             |w AS (SELECT event_id, user_id, event_type, value, vi,
+             |   count(*) OVER fr AS cnt,
+             |   CAST(sum(vi) OVER fr AS BIGINT) AS sx,
+             |   CAST(sum(vi * vi) OVER fr AS BIGINT) AS sxx
+             | FROM e
+             | WINDOW fr AS (PARTITION BY user_id, event_type ORDER BY ts2, event_id
+             |   ROWS BETWEEN 20 PRECEDING AND 1 PRECEDING))
+             |SELECT event_id, user_id, event_type, value FROM w
+             |WHERE cnt >= 10
+             | AND (vi * cnt - sx) * (vi * cnt - sx) > 9 * (cnt * sxx - sx * sx)
+             |ORDER BY event_id""".stripMargin)),
 
     // Modal value per key (most frequent event_type per user) with a
     // deterministic lexicographic tie-break — the built-in `mode()` keeps
@@ -624,7 +898,7 @@ object AnalyticsExt {
     // map-side PARTIAL counts (≤ |types| rows per map task per user, not
     // events); the window's exchange re-keys the finished aggregate —
     // |users|·|types| rows — so nothing corpus-sized moves twice.
-    "agg_mode" -> ((s, dir) => {
+    Op("agg_mode", (s, dir) => {
       val counts = events(s, dir)
         .groupBy("user_id", "event_type").agg(count(lit(1)).as("cnt"))
       val w = Window.partitionBy("user_id")
@@ -633,7 +907,13 @@ object AnalyticsExt {
         .filter(col("rn") === 1)
         .select(col("user_id"), col("event_type").as("mode_type"), col("cnt"))
         .orderBy("user_id")
-    }),
+    },
+      Some("""SELECT user_id, event_type AS mode_type, cnt FROM (
+             | SELECT user_id, event_type, count(*) AS cnt,
+             |  row_number() OVER (PARTITION BY user_id
+             |    ORDER BY count(*) DESC, event_type) AS rn
+             | FROM events GROUP BY 1, 2)
+             |WHERE rn = 1 ORDER BY user_id""".stripMargin)),
 
     // Last-touch attribution: each purchase credits the most recent click
     // strictly before it (in (ts, event_id) order — the id tiebreak makes
@@ -646,7 +926,7 @@ object AnalyticsExt {
     // edge). Scale: the running last-click state is O(1) per row and the
     // window never buffers the frame (last over a growing frame is
     // incremental), so per-user timeline length doesn't change memory.
-    "funnel_attribution" -> ((s, dir) => {
+    Op("funnel_attribution", (s, dir) => {
       val ev = events(s, dir)
         .filter(col("event_type").isin("click", "purchase"))
         .select(col("event_id"), col("user_id"), col("ts"), col("event_type"))
@@ -666,7 +946,26 @@ object AnalyticsExt {
           col("attributed"),
           when(col("attributed"), col("lag_us")).as("lag_us"))
         .orderBy("event_id")
-    }),
+    },
+      Some("""WITH e AS (
+             | SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, event_type
+             | FROM events WHERE event_type IN ('click', 'purchase')),
+             |a AS (
+             | SELECT event_id, user_id, ts, event_type,
+             |  last_value(CASE WHEN event_type = 'click' THEN ts END IGNORE NULLS)
+             |   OVER (PARTITION BY user_id ORDER BY ts, event_id
+             |         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+             |   AS last_click_ts
+             | FROM e),
+             |b AS (
+             | SELECT *, epoch_us(ts) - epoch_us(last_click_ts) AS raw_lag,
+             |  last_click_ts IS NOT NULL AND
+             |   epoch_us(ts) - epoch_us(last_click_ts) <= 604800000000 AS attributed
+             | FROM a WHERE event_type = 'purchase')
+             |SELECT event_id, user_id, ts AS purchase_ts,
+             | CASE WHEN attributed THEN last_click_ts END AS click_ts, attributed,
+             | CASE WHEN attributed THEN raw_lag END AS lag_us
+             |FROM b ORDER BY event_id""".stripMargin)),
 
     // Cohort retention triangle: users cohorted by the ISO week of their
     // first event; each later active week counts them once at its offset
@@ -677,7 +976,7 @@ object AnalyticsExt {
     // exchange for the user window; the distinct-user rollup then
     // two-phases over (cohort, offset, user) — map-side dedup means the
     // agg exchanges carry at most one row per user-week, not events.
-    "cohort_retention" -> ((s, dir) => {
+    Op("cohort_retention", (s, dir) => {
       val ev = events(s, dir).select(col("user_id"), to_date(col("ts")).as("d"))
       val w = Window.partitionBy("user_id")
       ev.withColumn("first_d", min(col("d")).over(w))
@@ -689,7 +988,15 @@ object AnalyticsExt {
         .groupBy("cohort_week", "week_offset")
         .agg(countDistinct("user_id").as("n_active"))
         .orderBy("cohort_week", "week_offset")
-    }),
+    },
+      Some("""WITH ev AS (
+             | SELECT user_id, CAST(ts AS DATE) AS d,
+             |  min(CAST(ts AS DATE)) OVER (PARTITION BY user_id) AS first_d
+             | FROM events)
+             |SELECT CAST(date_trunc('week', first_d) AS DATE) AS cohort_week,
+             | CAST(floor(datediff('day', first_d, d) / 7) AS INT) AS week_offset,
+             | count(DISTINCT user_id) AS n_active
+             |FROM ev GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
 
     // Cohort LTV triangle — cohort_retention's revenue twin: users
     // cohorted by first-activity week, purchase value rolled up per
@@ -700,7 +1007,7 @@ object AnalyticsExt {
     // frame is the aggregated triangle (|cohorts|·|offsets| rows), not
     // events. Same scale shape as cohort_retention: one raw-event
     // exchange for the first-seen window, then aggregate-sized frames.
-    "cohort_ltv" -> ((s, dir) => {
+    Op("cohort_ltv", (s, dir) => {
       val w = Window.partitionBy("user_id")
       val tri = events(s, dir)
         .withColumn("first_d", min(to_date(col("ts"))).over(w))
@@ -718,7 +1025,23 @@ object AnalyticsExt {
           sum(col("week_value").cast(org.apache.spark.sql.types.DecimalType(18, 6)))
             .over(wc).cast("double"))
         .orderBy("cohort_week", "week_offset")
-    }),
+    },
+      Some(s"""WITH ev AS (
+              | SELECT user_id, CAST(ts AS TIMESTAMP) AS ts2, event_type, value,
+              |  min(CAST(ts AS DATE)) OVER (PARTITION BY user_id) AS first_d
+              | FROM events),
+              |tri AS (
+              | SELECT CAST(date_trunc('week', first_d) AS DATE) AS cohort_week,
+              |  CAST(floor(datediff('day', first_d, CAST(ts2 AS DATE)) / 7) AS INT)
+              |    AS week_offset,
+              |  ${dsum6Sql("value")} AS week_value
+              | FROM ev WHERE event_type = 'purchase' GROUP BY 1, 2)
+              |SELECT cohort_week, week_offset, week_value,
+              | CAST(sum(CAST(week_value AS DECIMAL(18,6))) OVER (
+              |   PARTITION BY cohort_week ORDER BY week_offset
+              |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
+              |  AS cum_value
+              |FROM tri ORDER BY cohort_week, week_offset""".stripMargin)),
 
     // Longest consecutive-day purchase streak per user — the classic
     // gaps-and-islands shape (gamified streaks, SLA uptime runs,
@@ -729,7 +1052,7 @@ object AnalyticsExt {
     // the feed to ≤ one row per (user, day) BEFORE the window (map-side
     // partial distinct), and the two follow-up aggs reuse the window's
     // user_id hash partitioning — day-rows shuffle once, events never do.
-    "ts_activity_streak" -> ((s, dir) => {
+    Op("ts_activity_streak", (s, dir) => {
       val days = events(s, dir).filter(col("event_type") === "purchase")
         .select(col("user_id"),
           datediff(to_date(col("ts")), lit("1970-01-01")).as("dn"))
@@ -741,7 +1064,19 @@ object AnalyticsExt {
         .agg(max(col("len")).as("max_streak_days"),
           count(lit(1)).as("n_streaks"))
         .orderBy("user_id")
-    }),
+    },
+      Some("""WITH days AS (
+             | SELECT DISTINCT user_id,
+             |  datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS dn
+             | FROM events WHERE event_type = 'purchase'),
+             |isl AS (
+             | SELECT user_id,
+             |  dn - row_number() OVER (PARTITION BY user_id ORDER BY dn) AS anchor
+             | FROM days),
+             |runs AS (
+             | SELECT user_id, anchor, count(*) AS len FROM isl GROUP BY 1, 2)
+             |SELECT user_id, max(len) AS max_streak_days, count(*) AS n_streaks
+             |FROM runs GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // Linear interpolation over a dense hourly grid (time-series repair):
     // sparse observed points (hourly purchase sums) are stretched onto the
@@ -755,7 +1090,7 @@ object AnalyticsExt {
     // op-for-op, so results hash-match bit-exactly. Rows outside the
     // first/last observation (leading edge) stay NULL — interpolation
     // never extrapolates.
-    "ts_interpolate" -> ((s, dir) => {
+    Op("ts_interpolate", (s, dir) => {
       val obs = events(s, dir).filter(col("event_type") === "purchase")
         .groupBy(col("user_id"), date_trunc("hour", col("ts")).as("bucket"))
         .agg(dsum6(col("value")).as("v"))
@@ -788,7 +1123,41 @@ object AnalyticsExt {
             * 1000000.0d + 0.5d) / 1000000.0d).as("value"),
           col("v").isNotNull.as("observed"))
         .orderBy("user_id", "bucket")
-    }),
+    },
+      Some("""WITH obs AS (
+             | SELECT user_id, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
+             |  CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
+             | FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
+             |span AS (
+             | SELECT user_id,
+             |  unnest(generate_series(min(bucket), max(bucket), INTERVAL 1 HOUR)) AS bucket
+             | FROM obs GROUP BY user_id),
+             |g AS (
+             | SELECT span.user_id, span.bucket, obs.v
+             | FROM span LEFT JOIN obs
+             |  ON span.user_id = obs.user_id AND span.bucket = obs.bucket),
+             |r AS (
+             | SELECT *, CAST(row_number() OVER wr AS DOUBLE) AS rn FROM g
+             | WINDOW wr AS (PARTITION BY user_id ORDER BY bucket)),
+             |f AS (
+             | SELECT user_id, bucket, v, rn,
+             |  last_value(v IGNORE NULLS) OVER wp AS v0,
+             |  last_value(CASE WHEN v IS NOT NULL THEN rn END IGNORE NULLS)
+             |    OVER wp AS rn0,
+             |  first_value(v IGNORE NULLS) OVER wn AS v1,
+             |  first_value(CASE WHEN v IS NOT NULL THEN rn END IGNORE NULLS)
+             |    OVER wn AS rn1
+             | FROM r
+             | WINDOW wp AS (PARTITION BY user_id ORDER BY bucket
+             |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
+             |  wn AS (PARTITION BY user_id ORDER BY bucket
+             |   ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
+             |SELECT user_id, bucket,
+             | floor((CASE WHEN v IS NOT NULL THEN v
+             |   ELSE (v0 * (rn1 - rn) + v1 * (rn - rn0)) / (rn1 - rn0) END)
+             |  * 1000000.0 + 0.5) / 1000000.0 AS value,
+             | (v IS NOT NULL) AS observed
+             |FROM f ORDER BY user_id, bucket""".stripMargin)),
 
     // Holt double exponential smoothing (level + trend, α = β = 1/2) —
     // the one-step-ahead forecaster a metrics pipeline runs per stream.
@@ -814,7 +1183,7 @@ object AnalyticsExt {
     // inside one executor task (inherent to exponential smoothing; the
     // corpus is never the fold input). Released: the 24 seasonal
     // offsets + final level/trend.
-    "ts_holt_winters" -> ((s, dir) => {
+    Op("ts_holt_winters", (s, dir) => {
       val hourly = events(s, dir)
         .groupBy(date_trunc("hour", col("ts")).as("h"))
         .agg(sum((col("value").cast("decimal(18,6)") * 1000000)
@@ -841,9 +1210,43 @@ object AnalyticsExt {
         .select(col("hr"), col("seasonal_micro"), col("level_micro"),
           col("trend_micro"), col("n_hours"))
         .orderBy("hr")
-    }),
+    },
+      // The fold is replayed as a RECURSIVE CTE stepping rn → rn+1 (the
+      // dedup_cluster oracle pattern), NOT via list_reduce with a struct
+      // accumulator: DuckDB's lambda struct_pack binds fields sequentially,
+      // so a later field referencing acc sees the already-updated earlier
+      // field — probed empirically ((acc,x) -> {l: acc.l+x.l, b: acc.l}
+      // yields b = the NEW l). Scalar recursion has no such hazard and `//`
+      // truncates toward zero exactly like Spark's `div`.
+      Some("""WITH RECURSIVE hourly AS (
+             |  SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
+             |   CAST(sum(CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT))
+             |     AS BIGINT) AS vi
+             |  FROM events GROUP BY 1),
+             | o AS (SELECT h, CAST(hour(h) AS INT) AS hr, vi,
+             |   row_number() OVER (ORDER BY h) AS rn FROM hourly),
+             | nn AS (SELECT count(*) AS n_hours FROM o),
+             | r AS (
+             |  SELECT rn, vi AS l, CAST(0 AS BIGINT) AS b,
+             |   list_transform(range(24), j -> CAST(0 AS BIGINT)) AS s
+             |  FROM o WHERE rn = 1
+             |  UNION ALL
+             |  SELECT o.rn,
+             |   (o.vi - r.s[o.hr + 1] + r.l + r.b) // 2,
+             |   (((o.vi - r.s[o.hr + 1] + r.l + r.b) // 2) - r.l + r.b) // 2,
+             |   list_transform(range(24), j -> CASE WHEN j = o.hr
+             |     THEN (o.vi - ((o.vi - r.s[o.hr + 1] + r.l + r.b) // 2)
+             |       + r.s[o.hr + 1]) // 2
+             |     ELSE r.s[j + 1] END)
+             |  FROM r JOIN o ON o.rn = r.rn + 1),
+             | last AS (SELECT * FROM r ORDER BY rn DESC LIMIT 1)
+             |SELECT CAST(j AS INT) AS hr, s[j + 1] AS seasonal_micro,
+             | l AS level_micro, b AS trend_micro,
+             | (SELECT CAST(n_hours AS BIGINT) FROM nn) AS n_hours
+             |FROM last, (SELECT unnest(range(24)) AS j) g
+             |ORDER BY hr""".stripMargin)),
 
-    "ts_holt" -> ((s, dir) =>
+    Op("ts_holt", (s, dir) =>
       events(s, dir)
         .select(col("user_id"), col("event_type"), col("ts"), col("event_id"),
           (col("value").cast("decimal(18,4)") * 10000).cast("long").as("vi"))
@@ -860,7 +1263,30 @@ object AnalyticsExt {
         .select(col("user_id"), col("event_type"), col("n_events"),
           col("hs.l").as("level_micro"), col("hs.b").as("trend_micro"),
           (col("hs.l") + col("hs.b")).as("forecast_micro"))
-        .orderBy("user_id", "event_type")),
+        .orderBy("user_id", "event_type"),
+      Some("""WITH RECURSIVE e AS (SELECT user_id, event_type,
+             |   CAST(ts AS TIMESTAMP) AS ts2, event_id,
+             |   CAST(CAST(value AS DECIMAL(18,4)) * 10000 AS BIGINT) AS vi
+             | FROM events),
+             |o AS (SELECT user_id, event_type, vi, row_number() OVER (
+             |   PARTITION BY user_id, event_type ORDER BY ts2, event_id) AS rn
+             | FROM e),
+             |n AS (SELECT user_id, event_type, count(*) AS n_events
+             | FROM o GROUP BY 1, 2),
+             |r AS (
+             | SELECT user_id, event_type, rn, vi AS l, CAST(0 AS BIGINT) AS b
+             | FROM o WHERE rn = 1
+             | UNION ALL
+             | SELECT o.user_id, o.event_type, o.rn,
+             |  (o.vi + r.l + r.b) // 2 AS l,
+             |  ((o.vi + r.l + r.b) // 2 - r.l + r.b) // 2 AS b
+             | FROM r JOIN o ON o.user_id = r.user_id
+             |  AND o.event_type = r.event_type AND o.rn = r.rn + 1)
+             |SELECT n.user_id, n.event_type, n.n_events, r.l AS level_micro,
+             | r.b AS trend_micro, r.l + r.b AS forecast_micro
+             |FROM r JOIN n ON r.user_id = n.user_id
+             | AND r.event_type = n.event_type AND r.rn = n.n_events
+             |ORDER BY n.user_id, n.event_type""".stripMargin)),
 
     // Lag-1 autocorrelation per (user, type) stream — the "is this metric
     // trending or white noise" diagnostic. The (v_t, v_{t−1}) pairs come
@@ -869,7 +1295,7 @@ object AnalyticsExt {
     // statistics in ONE two-phase agg, final arithmetic on exact sums →
     // identical doubles in both engines. The window and the agg share the
     // (user, type)-keyed exchange; n ≥ 20 floors out degenerate streams.
-    "ts_autocorr_lag1" -> ((s, dir) => {
+    Op("ts_autocorr_lag1", (s, dir) => {
       val w = Window.partitionBy("user_id", "event_type")
         .orderBy(col("ts"), col("event_id"))
       val pairs = events(s, dir)
@@ -891,7 +1317,23 @@ object AnalyticsExt {
                    (col("n") * col("syy") - col("sy") * col("sy"))), 6))
             .as("autocorr"))
         .orderBy("user_id", "event_type")
-    }),
+    },
+      Some(s"""WITH e AS (SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS ts2,
+              |   event_id, value FROM events),
+              |p AS (SELECT user_id, event_type, value,
+              |   lag(value) OVER (PARTITION BY user_id, event_type
+              |     ORDER BY ts2, event_id) AS pv FROM e),
+              |g AS (SELECT user_id, event_type, CAST(count(*) AS DOUBLE) AS n,
+              |   ${dsum6Sql("pv")} AS sx, ${dsum6Sql("value")} AS sy,
+              |   ${dsum6Sql("pv * value")} AS sxy,
+              |   ${dsum6Sql("pv * pv")} AS sxx, ${dsum6Sql("value * value")} AS syy
+              | FROM p WHERE pv IS NOT NULL GROUP BY 1, 2)
+              |SELECT user_id, event_type, CAST(n AS BIGINT) AS n_pairs,
+              | CASE WHEN (n * sxx - sx * sx) > 0.0 AND (n * syy - sy * sy) > 0.0
+              |   THEN round((n * sxy - sx * sy) /
+              |     sqrt((n * sxx - sx * sx) * (n * syy - sy * sy)), 6)
+              |   ELSE NULL END AS autocorr
+              |FROM g WHERE n >= 20 ORDER BY user_id, event_type""".stripMargin)),
 
     // CUSUM changepoint per (user, type) stream: the index t maximizing
     // |n·S_t − t·S_n| — the classic cumulative-deviation statistic
@@ -903,7 +1345,7 @@ object AnalyticsExt {
     // one filter, all riding ONE (user, type) exchange — the running
     // sum and row number share a frame pass, the totals are an
     // unbounded frame over the same sort, the pick re-sorts in-partition.
-    "ts_cusum_changepoint" -> ((s, dir) => {
+    Op("ts_cusum_changepoint", (s, dir) => {
       val ord = Window.partitionBy("user_id", "event_type")
         .orderBy(col("ts"), col("event_id"))
       val run = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -925,7 +1367,27 @@ object AnalyticsExt {
         .select(col("user_id"), col("event_type"), col("n").as("n_events"),
           col("ts").as("cp_ts"), col("rn").as("cp_index"), col("dev").as("cusum_dev"))
         .orderBy("user_id", "event_type")
-    }),
+    },
+      Some("""WITH e AS (SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS ts2,
+             |   event_id, CAST(CAST(value AS DECIMAL(18,4)) * 10000 AS BIGINT) AS vi
+             | FROM events),
+             |w AS (SELECT user_id, event_type, ts2,
+             |   row_number() OVER ord AS rn,
+             |   CAST(sum(vi) OVER (PARTITION BY user_id, event_type
+             |     ORDER BY ts2, event_id
+             |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS st,
+             |   count(*) OVER grp AS n,
+             |   CAST(sum(vi) OVER grp AS BIGINT) AS stot
+             | FROM e
+             | WINDOW ord AS (PARTITION BY user_id, event_type ORDER BY ts2, event_id),
+             |  grp AS (PARTITION BY user_id, event_type)),
+             |d AS (SELECT *, abs(n * st - rn * stot) AS dev,
+             |   row_number() OVER (PARTITION BY user_id, event_type
+             |     ORDER BY abs(n * st - rn * stot) DESC, rn) AS rk
+             | FROM w)
+             |SELECT user_id, event_type, n AS n_events, ts2 AS cp_ts,
+             | rn AS cp_index, dev AS cusum_dev
+             |FROM d WHERE rk = 1 ORDER BY user_id, event_type""".stripMargin)),
 
     // DAU / trailing-7-day WAU — the canonical engagement rollup, done
     // EXACTLY and distributed: the naive form (a count-distinct over a
@@ -937,7 +1399,7 @@ object AnalyticsExt {
     // fan out, only the deduped activity grid (≤ users × days rows)
     // does. At 100 TB: one feed-sized exchange for the distinct, then
     // aggregate-sized frames; the 7× explode is scan-stage.
-    "ts_active_users" -> ((s, dir) => {
+    Op("ts_active_users", (s, dir) => {
       val dayUsers = events(s, dir)
         .select(to_date(col("ts")).as("d"), col("user_id")).distinct()
       // ONE pass over the cover explosion: DAU is the off=0 lane of the
@@ -953,7 +1415,15 @@ object AnalyticsExt {
           countDistinct(col("user_id")).as("wau7"))
         .filter(col("dau") > 0)
         .orderBy("d")
-    }),
+    },
+      Some("""WITH du AS (SELECT DISTINCT CAST(ts AS DATE) AS d, user_id FROM events),
+             | cover AS (SELECT du.d + CAST(off AS INT) AS d, off, user_id
+             |   FROM du, (SELECT unnest(generate_series(0, 6)) AS off))
+             |SELECT d, count(DISTINCT CASE WHEN off = 0 THEN user_id END) AS dau,
+             | count(DISTINCT user_id) AS wau7
+             |FROM cover GROUP BY 1
+             |HAVING count(DISTINCT CASE WHEN off = 0 THEN user_id END) > 0
+             |ORDER BY d""".stripMargin)),
 
     // Winsorization — the robust-preprocessing projection of a training
     // pipeline: clip each stream's values at its own [p05, p95] so tail
@@ -963,7 +1433,7 @@ object AnalyticsExt {
     // the corpus never shuffles. Exact `percentile` ↔ percentile_cont
     // (the agg_percentile pairing); the clamp is least/greatest on the
     // same doubles in both engines.
-    "ts_winsorize" -> ((s, dir) => {
+    Op("ts_winsorize", (s, dir) => {
       val bounds = events(s, dir).groupBy("event_type")
         .agg(percentile(col("value"), lit(0.05)).as("lo"),
           percentile(col("value"), lit(0.95)).as("hi"))
@@ -974,18 +1444,35 @@ object AnalyticsExt {
           (col("value") < col("lo") || col("value") > col("hi"))
             .as("clipped"))
         .orderBy("event_id")
-    }),
+    },
+      Some("""WITH b AS (SELECT event_type,
+             |   percentile_cont(0.05) WITHIN GROUP (ORDER BY value) AS lo,
+             |   percentile_cont(0.95) WITHIN GROUP (ORDER BY value) AS hi
+             | FROM events GROUP BY 1)
+             |SELECT event_id, e.event_type, value,
+             | least(greatest(value, lo), hi) AS winsorized,
+             | (value < lo OR value > hi) AS clipped
+             |FROM events e JOIN b ON e.event_type = b.event_type
+             |ORDER BY event_id""".stripMargin)),
 
     // Per-event session assignment — sessionize_batch's ROW-level dual:
     // expose the session ordinal on every event so downstream joins can
     // key on (user, session) without re-deriving the gap rule. One
     // user_id window exchange (the shared withSessionSeq), pure
     // projection after.
-    "sessionize_assign" -> ((s, dir) =>
+    Op("sessionize_assign", (s, dir) =>
       graft.operators.Sessionization.withSessionSeq(events(s, dir))
         .select(col("event_id"), col("user_id"), col("ts"),
           col("session_seq"))
-        .orderBy("event_id")),
+        .orderBy("event_id"),
+      Some("""WITH e AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
+             | g AS (SELECT *, CASE WHEN lag(ts) OVER w IS NULL
+             |     OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000 THEN 1 ELSE 0 END AS new_s
+             |   FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
+             |SELECT event_id, user_id, ts,
+             | CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
+             |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_seq
+             |FROM g ORDER BY event_id""".stripMargin)),
 
     // Welch's two-sample t-statistic between every pair of event types —
     // the A/B-experiment significance readout, computed the exact-stats
@@ -994,7 +1481,7 @@ object AnalyticsExt {
     // |types|-row aggregate (bounded by construction — the cartesian is
     // of finished aggregates, never facts) and the t arithmetic runs as
     // the same correctly-rounded IEEE expression in both engines.
-    "agg_ab_ttest" -> ((s, dir) => {
+    Op("agg_ab_ttest", (s, dir) => {
       val st = events(s, dir).groupBy("event_type").agg(
         count(lit(1)).cast("double").as("n"),
         dsum6(col("value")).as("sx"),
@@ -1013,7 +1500,17 @@ object AnalyticsExt {
           round((col("sxa") / col("na") - col("sxb") / col("nb")) /
             sqrt(sea + seb), 6).as("t_stat"))
         .orderBy("type_a", "type_b")
-    }),
+    },
+      Some(s"""WITH st AS (SELECT event_type, CAST(count(*) AS DOUBLE) AS n,
+              |   ${dsum6Sql("value")} AS sx, ${dsum6Sql("value * value")} AS sxx
+              | FROM events GROUP BY 1)
+              |SELECT a.event_type AS type_a, b.event_type AS type_b,
+              | CAST(a.n AS BIGINT) AS n_a, CAST(b.n AS BIGINT) AS n_b,
+              | round((a.sx / a.n - b.sx / b.n) / sqrt(
+              |   (a.sxx - a.sx * a.sx / a.n) / (a.n - 1.0) / a.n
+              |   + (b.sxx - b.sx * b.sx / b.n) / (b.n - 1.0) / b.n), 6) AS t_stat
+              |FROM st a CROSS JOIN st b WHERE a.event_type < b.event_type
+              |ORDER BY 1, 2""".stripMargin)),
 
     // ONE-WAY ANOVA F (round 10) — the parametric omnibus beside
     // agg_kruskal_wallis: same "do ANY of the k variants differ?"
@@ -1026,7 +1523,7 @@ object AnalyticsExt {
     // and the cross-group SS sums accumulate on the DECIMAL(28,12)
     // lattice (the Kruskal–Wallis rule — the one place engine-ordered
     // float addition could sneak in).
-    "agg_anova_oneway" -> ((s, dir) => {
+    Op("agg_anova_oneway", (s, dir) => {
       val dec = "decimal(28,12)"
       val st = events(s, dir).groupBy("event_type").agg(
         count(lit(1)).cast("double").as("n"),
@@ -1050,7 +1547,24 @@ object AnalyticsExt {
         round(col("ssb"), 6).as("ss_between"),
         round(col("ssw"), 6).as("ss_within"),
         round(f, 6).as("f_stat"))
-    }),
+    },
+      Some(s"""WITH st AS (SELECT event_type, CAST(count(*) AS DOUBLE) AS n,
+              |   ${dsum6Sql("value")} AS sx, ${dsum6Sql("value * value")} AS sxx
+              | FROM events GROUP BY 1),
+              | tot AS (SELECT
+              |   CAST(sum(CAST(n AS DECIMAL(28,12))) AS DOUBLE) AS nt,
+              |   CAST(sum(CAST(sx AS DECIMAL(28,12))) AS DOUBLE) AS sxt,
+              |   count(*) AS k FROM st),
+              | ss AS (SELECT nt, k,
+              |   CAST(sum(CAST(n * ((sx / n - sxt / nt) * (sx / n - sxt / nt))
+              |     AS DECIMAL(28,12))) AS DOUBLE) AS ssb,
+              |   CAST(sum(CAST(sxx - sx * sx / n AS DECIMAL(28,12)))
+              |     AS DOUBLE) AS ssw
+              |  FROM st CROSS JOIN tot GROUP BY 1, 2)
+              |SELECT CAST(k AS BIGINT) AS n_groups, CAST(nt AS BIGINT) AS n_total,
+              | round(ssb, 6) AS ss_between, round(ssw, 6) AS ss_within,
+              | round((ssb / (k - 1.0)) / (ssw / (nt - k)), 6) AS f_stat
+              |FROM ss""".stripMargin)),
 
     // BROWN–FORSYTHE (median-Levene) VARIANCE-HOMOGENEITY TEST (round
     // 10) — the check on the assumption agg_anova_oneway silently
@@ -1070,7 +1584,7 @@ object AnalyticsExt {
     // shortest-string cast and DuckDB's scaled-binary rounding can
     // disagree by 1e-6. The cross-group SS sums ride the same
     // DECIMAL(28,12) lattice as ANOVA/Kruskal–Wallis.
-    "agg_levene_bf" -> ((s, dir) => {
+    Op("agg_levene_bf", (s, dir) => {
       val dec = "decimal(28,12)"
       val ev = events(s, dir).select(col("event_type"),
         (col("value").cast("decimal(18,6)") * 1000000).cast("long").as("vi"))
@@ -1113,7 +1627,38 @@ object AnalyticsExt {
         (col("ssw") / (col("nt") - col("k")))
       ss.select(col("k").as("n_groups"), col("nt").cast("long").as("n_total"),
         round(f, 6).as("w_stat"))
-    }),
+    },
+      Some("""WITH ev AS (SELECT event_type,
+             |   CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS vi
+             |  FROM events),
+             | meds AS (SELECT event_type,
+             |   CAST(2 * quantile_cont(vi, 0.5) AS BIGINT) AS med2
+             |  FROM ev GROUP BY 1),
+             | zz AS (SELECT e.event_type, abs(2 * e.vi - m.med2) AS z2
+             |  FROM ev e JOIN meds m USING (event_type)),
+             | sums AS (SELECT event_type, CAST(count(*) AS DOUBLE) AS n,
+             |   sum(CAST(z2 AS HUGEINT)) AS sz,
+             |   sum(CAST(z2 AS HUGEINT) * z2) AS szz
+             |  FROM zz GROUP BY 1),
+             | st AS (SELECT event_type, n,
+             |   (CAST(sz // 4294967296 AS DOUBLE) * 4294967296.0
+             |     + CAST(sz % 4294967296 AS DOUBLE)) / 2000000.0 AS sx,
+             |   (CAST(szz // 4294967296 AS DOUBLE) * 4294967296.0
+             |     + CAST(szz % 4294967296 AS DOUBLE)) / 4000000000000.0 AS sxx
+             |  FROM sums),
+             | tot AS (SELECT
+             |   CAST(sum(CAST(n AS DECIMAL(28,12))) AS DOUBLE) AS nt,
+             |   CAST(sum(CAST(sx AS DECIMAL(28,12))) AS DOUBLE) AS sxt,
+             |   count(*) AS k FROM st),
+             | ss AS (SELECT nt, k,
+             |   CAST(sum(CAST(n * ((sx / n - sxt / nt) * (sx / n - sxt / nt))
+             |     AS DECIMAL(28,12))) AS DOUBLE) AS ssb,
+             |   CAST(sum(CAST(sxx - sx * sx / n AS DECIMAL(28,12)))
+             |     AS DOUBLE) AS ssw
+             |  FROM st CROSS JOIN tot GROUP BY 1, 2)
+             |SELECT CAST(k AS BIGINT) AS n_groups, CAST(nt AS BIGINT) AS n_total,
+             | round((ssb / (k - 1.0)) / (ssw / (nt - k)), 6) AS w_stat
+             |FROM ss""".stripMargin)),
 
     // MOOD'S MEDIAN TEST (round 11) — the bluntest k-group location
     // test: classify every event as above/≤ the GRAND median, then a
@@ -1125,7 +1670,7 @@ object AnalyticsExt {
     // corpus agg; each cell term is one IEEE tree over exact integers
     // and the cross-type sum rides the DECIMAL(28,12) lattice (the
     // agg_chisq_independence rule).
-    "agg_mood_median_test" -> ((s, dir) => {
+    Op("agg_mood_median_test", (s, dir) => {
       val dec = "decimal(28,12)"
       val med = events(s, dir)
         .agg(percentile(col("value"), lit(0.5)).as("gm"))
@@ -1150,7 +1695,27 @@ object AnalyticsExt {
           col("at").cast("long").as("n_above"), col("grand_median"),
           round(col("chi2"), 6).as("chi2"),
           (col("n_groups") - 1).as("df"))
-    }),
+    },
+      Some("""WITH med AS (SELECT quantile_cont(value, 0.5) AS gm FROM events),
+             | o AS (SELECT event_type, count(*) AS n,
+             |   sum(CASE WHEN value > gm THEN 1 ELSE 0 END) AS above,
+             |   max(gm) AS gm
+             |  FROM events CROSS JOIN med GROUP BY 1),
+             | tot AS (SELECT CAST(sum(n) AS BIGINT) AS nt,
+             |   CAST(sum(above) AS BIGINT) AS at FROM o),
+             | c AS (SELECT o.event_type, o.n, o.above, o.gm, tot.nt, tot.at,
+             |   CAST(o.n AS DOUBLE) * tot.at / tot.nt AS ea,
+             |   CAST(o.n AS DOUBLE) * (tot.nt - tot.at) / tot.nt AS eb
+             |  FROM o CROSS JOIN tot)
+             |SELECT CAST(count(*) AS BIGINT) AS n_groups,
+             | max(nt) AS n_total, max(at) AS n_above,
+             | round(max(gm), 6) AS grand_median,
+             | round(CAST(sum(CAST(
+             |   (above - ea) * (above - ea) / ea
+             |   + ((n - above) - eb) * ((n - above) - eb) / eb
+             |   AS DECIMAL(28,12))) AS DOUBLE), 6) AS chi2,
+             | CAST(count(*) - 1 AS BIGINT) AS df
+             |FROM c""".stripMargin)),
 
     // χ² TEST OF INDEPENDENCE (round 10) — event_type × day-of-week
     // contingency: "does the traffic MIX change by weekday?" — the
@@ -1160,7 +1725,7 @@ object AnalyticsExt {
     // exact longs; each cell's (O−E)²/E is one IEEE tree and the
     // cross-cell sum rides the DECIMAL(28,12) lattice (the bounded
     // |types|×7 grid is the only thing past the first agg).
-    "agg_chisq_independence" -> ((s, dir) => {
+    Op("agg_chisq_independence", (s, dir) => {
       val dec = "decimal(28,12)"
       val o = events(s, dir)
         .groupBy(col("event_type"), dayofweek(col("ts")).as("dow"))
@@ -1187,7 +1752,32 @@ object AnalyticsExt {
           round(sqrt(col("chi2") /
             (col("n_total").cast("double") * col("mindim"))), 6)
             .as("cramers_v"))
-    }),
+    },
+      Some("""WITH o AS (SELECT event_type,
+             |   CAST(dayofweek(CAST(ts AS TIMESTAMP)) + 1 AS INT) AS dow,
+             |   count(*) AS o FROM events GROUP BY 1, 2),
+             | rt AS (SELECT event_type, CAST(sum(o) AS BIGINT) AS rt
+             |  FROM o GROUP BY 1),
+             | ct AS (SELECT dow, CAST(sum(o) AS BIGINT) AS ct FROM o GROUP BY 1),
+             | nt AS (SELECT CAST(sum(o) AS BIGINT) AS n FROM o),
+             | cells AS (SELECT o.event_type, o.dow, o.o, rt.rt, ct.ct, nt.n,
+             |   CAST(rt.rt AS DOUBLE) * ct.ct / n AS e
+             |  FROM o JOIN rt USING (event_type) JOIN ct USING (dow)
+             |   CROSS JOIN nt),
+             | agg AS (SELECT count(*) AS n_cells,
+             |   (count(DISTINCT event_type) - 1) * (count(DISTINCT dow) - 1)
+             |     AS dof,
+             |   least(count(DISTINCT event_type) - 1, count(DISTINCT dow) - 1)
+             |     AS mindim,
+             |   max(n) AS n_total,
+             |   CAST(sum(CAST(
+             |     ((CAST(o AS DOUBLE) - e) * (CAST(o AS DOUBLE) - e)) / e
+             |     AS DECIMAL(28,12))) AS DOUBLE) AS chi2
+             |  FROM cells)
+             |SELECT n_cells, dof, round(chi2, 6) AS chi2,
+             | round(sqrt(chi2 / (CAST(n_total AS DOUBLE) * mindim)), 6)
+             |   AS cramers_v
+             |FROM agg""".stripMargin)),
 
     // GROUP-SEQUENTIAL MONITORING, O'Brien–Fleming boundaries (round
     // 10) — the "peeking" discipline: an experiment read weekly needs
@@ -1202,7 +1792,7 @@ object AnalyticsExt {
     // one IEEE tree over those exact cumulative moments, and the
     // crossing verdict compares 6-dp-released values. Shape: one
     // corpus agg → 8 rows; the window and join are grid-sized.
-    "agg_group_sequential_obf" -> ((s, dir) => {
+    Op("agg_group_sequential_obf", (s, dir) => {
       val dec = "decimal(18,6)"
       val base = events(s, dir)
         .withColumn("variant",
@@ -1223,7 +1813,36 @@ object AnalyticsExt {
         sum("sx").over(w).cast("double").as("csx"),
         sum("sxx").over(w).cast("double").as("csxx"))
       obfRelease(cum)
-    }),
+    },
+      Some("""WITH base AS (SELECT value,
+             |   CASE WHEN substr(md5('srm42:' || CAST(user_id AS VARCHAR)), 1, 1) < '8'
+             |     THEN 'A' ELSE 'B' END AS variant,
+             |   ((CAST(ts AS DATE) - DATE '2024-01-01') // 7) + 1 AS look
+             |  FROM events),
+             | pl AS (SELECT variant, look, count(*) AS n,
+             |   sum(CAST(value AS DECIMAL(18,6))) AS sx,
+             |   sum(CAST(value * value AS DECIMAL(18,6))) AS sxx
+             |  FROM base WHERE look <= 4 GROUP BY 1, 2),
+             | cum AS (SELECT variant, look,
+             |   CAST(sum(n) OVER w AS DOUBLE) AS cn,
+             |   CAST(sum(sx) OVER w AS DOUBLE) AS csx,
+             |   CAST(sum(sxx) OVER w AS DOUBLE) AS csxx
+             |  FROM pl WINDOW w AS (PARTITION BY variant ORDER BY look
+             |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
+             | j AS (SELECT a.look, a.cn AS na, a.csx AS sxa, a.csxx AS sxxa,
+             |   b.cn AS nb, b.csx AS sxb, b.csxx AS sxxb
+             |  FROM cum a JOIN cum b ON a.look = b.look
+             |  WHERE a.variant = 'A' AND b.variant = 'B'),
+             | zz AS (SELECT look, na, nb,
+             |   round((sxa / na - sxb / nb)
+             |     / sqrt(((sxxa - sxa * sxa / na) / (na - 1.0)) / na
+             |       + ((sxxb - sxb * sxb / nb) / (nb - 1.0)) / nb), 6) AS z,
+             |   round(2.024 * sqrt(4.0 / look), 6) AS boundary
+             |  FROM j)
+             |SELECT CAST(look AS INT) AS look,
+             | CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
+             | z, boundary, (abs(z) > boundary) AS crossed
+             |FROM zz ORDER BY look""".stripMargin)),
 
     // STANDARDIZED EFFECT SIZE (round 10) — Cohen's d with the Hedges
     // g small-sample correction per type pair: the number the review
@@ -1232,7 +1851,7 @@ object AnalyticsExt {
     // Hedges correction uses the standard J ≈ 1 − 3/(4·df − 1)
     // approximation (a rational expression — no gamma function, so it
     // is engine-exact). One corpus agg, |types|²/2 arithmetic rows.
-    "agg_effect_size" -> ((s, dir) => {
+    Op("agg_effect_size", (s, dir) => {
       val st = events(s, dir).groupBy("event_type").agg(
         count(lit(1)).cast("double").as("n"),
         dsum6(col("value")).as("sx"),
@@ -1253,7 +1872,19 @@ object AnalyticsExt {
           round(d * j, 6).as("hedges_g"),
           round(abs(d), 6).as("abs_d"))
         .orderBy("type_a", "type_b")
-    }),
+    },
+      Some(s"""WITH st AS (SELECT event_type, CAST(count(*) AS DOUBLE) AS n,
+              |   ${dsum6Sql("value")} AS sx, ${dsum6Sql("value * value")} AS sxx
+              | FROM events GROUP BY 1),
+              | p AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
+              |   (a.sx / a.n - b.sx / b.n)
+              |     / sqrt(((a.sxx - a.sx * a.sx / a.n)
+              |       + (b.sxx - b.sx * b.sx / b.n)) / (a.n + b.n - 2.0)) AS d,
+              |   1.0 - 3.0 / (4.0 * (a.n + b.n - 2.0) - 1.0) AS j
+              |  FROM st a CROSS JOIN st b WHERE a.event_type < b.event_type)
+              |SELECT type_a, type_b, round(d, 6) AS cohens_d,
+              | round(d * j, 6) AS hedges_g, round(abs(d), 6) AS abs_d
+              |FROM p ORDER BY type_a, type_b""".stripMargin)),
 
     // TOST EQUIVALENCE TEST (round 10) — the launch criterion
     // agg_ab_ttest can't express: "show the variants are the SAME
@@ -1266,7 +1897,7 @@ object AnalyticsExt {
     // bounded aggregate self-cross as agg_ab_ttest; the verdict
     // compares 6-dp-rounded t's so both engines decide on identical
     // released values.
-    "agg_tost_equivalence" -> ((s, dir) => {
+    Op("agg_tost_equivalence", (s, dir) => {
       val st = events(s, dir).groupBy("event_type").agg(
         count(lit(1)).cast("double").as("n"),
         dsum6(col("value")).as("sx"),
@@ -1291,7 +1922,25 @@ object AnalyticsExt {
           tLo.as("t_lower"), tUp.as("t_upper"),
           (tLo > lit(1.645) && tUp < lit(-1.645)).as("is_equivalent"))
         .orderBy("type_a", "type_b")
-    }),
+    },
+      Some(s"""WITH st AS (SELECT event_type, CAST(count(*) AS DOUBLE) AS n,
+              |   ${dsum6Sql("value")} AS sx, ${dsum6Sql("value * value")} AS sxx
+              | FROM events GROUP BY 1),
+              | p AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
+              |   a.sx / a.n - b.sx / b.n AS diff,
+              |   0.05 * ((a.sx / a.n + b.sx / b.n) / 2.0) AS margin,
+              |   sqrt((a.sxx - a.sx * a.sx / a.n) / (a.n - 1.0) / a.n
+              |     + (b.sxx - b.sx * b.sx / b.n) / (b.n - 1.0) / b.n) AS se
+              |  FROM st a CROSS JOIN st b WHERE a.event_type < b.event_type),
+              | tt AS (SELECT type_a, type_b, round(diff, 6) AS diff_r,
+              |   round(margin, 6) AS margin_r,
+              |   round((diff + margin) / se, 6) AS t_lower,
+              |   round((diff - margin) / se, 6) AS t_upper
+              |  FROM p)
+              |SELECT type_a, type_b, diff_r AS diff, margin_r AS margin,
+              | t_lower, t_upper,
+              | (t_lower > 1.645 AND t_upper < -1.645) AS is_equivalent
+              |FROM tt ORDER BY type_a, type_b""".stripMargin)),
 
     // MANN–WHITNEY U (Wilcoxon rank-sum) between every pair of event
     // types (round 10) — the NONPARAMETRIC twin of agg_ab_ttest, the
@@ -1314,7 +1963,7 @@ object AnalyticsExt {
     // is the same exact long the MW key accumulates; r is one division
     // off exact integers, and the favored arm is read off the ROUNDED r
     // so the verdict column can't flake at a near-zero boundary.
-    "agg_rank_biserial" -> ((s, dir) => {
+    Op("agg_rank_biserial", (s, dir) => {
       val cum = denseTypeValueCum(s, dir)
       val a = cum.select(col("event_type").as("type_a"), col("value"),
         col("cnt").as("ca"))
@@ -1332,7 +1981,33 @@ object AnalyticsExt {
           when(r6 > 0, col("type_a")).when(r6 < 0, col("type_b"))
             .otherwise(lit("tie")).as("favored"))
         .orderBy("type_a", "type_b")
-    }),
+    },
+      Some("""WITH vc AS (SELECT event_type, value, count(*) AS cnt
+             |  FROM events GROUP BY 1, 2),
+             | vals AS (SELECT DISTINCT value FROM vc),
+             | types AS (SELECT DISTINCT event_type FROM vc),
+             | dense AS (SELECT t.event_type, v.value, COALESCE(cnt, 0) AS cnt
+             |  FROM vals v CROSS JOIN types t
+             |  LEFT JOIN vc ON vc.event_type = t.event_type AND vc.value = v.value),
+             | cum AS (SELECT event_type, value, cnt,
+             |   sum(cnt) OVER (PARTITION BY event_type ORDER BY value
+             |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+             |  FROM dense),
+             | pair AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
+             |   sum(a.cnt) AS n_a, sum(b.cnt) AS n_b,
+             |   sum(a.cnt * (b.cum - b.cnt) * 2 + a.cnt * b.cnt) AS u2
+             |  FROM cum a JOIN cum b ON a.value = b.value
+             |   AND a.event_type < b.event_type
+             |  GROUP BY 1, 2),
+             | r AS (SELECT type_a, type_b,
+             |   CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
+             |   round(CAST(u2 AS DOUBLE) / (CAST(n_a AS DOUBLE) * n_b)
+             |     - 1.0, 6) AS r_rb
+             |  FROM pair)
+             |SELECT type_a, type_b, n_a, n_b, r_rb,
+             | CASE WHEN r_rb > 0 THEN type_a WHEN r_rb < 0 THEN type_b
+             |   ELSE 'tie' END AS favored
+             |FROM r ORDER BY type_a, type_b""".stripMargin)),
 
     // YUEN'S TRIMMED-MEAN t-TEST (Yuen 1974) — the robust two-sample
     // location test an experiment platform runs when heavy tails make
@@ -1347,7 +2022,7 @@ object AnalyticsExt {
     // g·boundary terms to the trimmed DECIMAL sums — so Σw and Σw² are
     // exact lattice sums and Yuen's t / Welch–Satterthwaite df are one
     // IEEE tree over them. g = ⌊n/10⌋ per group, h = n − 2g.
-    "agg_yuen_trimmed_ttest" -> ((s, dir) => {
+    Op("agg_yuen_trimmed_ttest", (s, dir) => {
       val cum = denseTypeValueCum(s, dir)
       val tot = cum.groupBy("event_type").agg(sum("cnt").as("n"))
       val g = expr("n div 10")
@@ -1398,9 +2073,67 @@ object AnalyticsExt {
           round((tmA - tmB) / sqrt(dA + dB), 6).as("t_yuen"),
           round(dfY, 6).as("df"))
         .orderBy("type_a", "type_b")
-    }),
+    },
+      Some("""WITH vc AS (SELECT event_type, value, count(*) AS cnt
+             |  FROM events GROUP BY 1, 2),
+             | vals AS (SELECT DISTINCT value FROM vc),
+             | types AS (SELECT DISTINCT event_type FROM vc),
+             | dense AS (SELECT t.event_type, v.value, COALESCE(cnt, 0) AS cnt
+             |  FROM vals v CROSS JOIN types t
+             |  LEFT JOIN vc ON vc.event_type = t.event_type AND vc.value = v.value),
+             | cum AS (SELECT event_type, value, cnt,
+             |   sum(cnt) OVER (PARTITION BY event_type ORDER BY value
+             |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+             |  FROM dense),
+             | tot AS (SELECT event_type, CAST(sum(cnt) AS BIGINT) AS n
+             |  FROM vc GROUP BY 1),
+             | k AS (SELECT c.event_type, c.value, c.cnt, c.cum, t.n,
+             |   t.n // 10 AS g FROM cum c JOIN tot t USING (event_type)),
+             | st0 AS (SELECT event_type, n, g,
+             |   sum(CAST(value AS DECIMAL(19,6)) * CAST(greatest(0,
+             |     least(cum, n - g) - greatest(cum - cnt, g)) AS DECIMAL(12,0)))
+             |     AS tsum,
+             |   sum(CAST(CAST(value AS DECIMAL(19,6)) * CAST(value AS DECIMAL(12,6))
+             |       AS DECIMAL(26,12))
+             |     * CAST(greatest(0, least(cum, n - g) - greatest(cum - cnt, g))
+             |       AS DECIMAL(12,0))) AS tss,
+             |   min(CASE WHEN cum >= g + 1
+             |     THEN CAST(value AS DECIMAL(12,6)) END) AS v_lo,
+             |   min(CASE WHEN cum >= n - g
+             |     THEN CAST(value AS DECIMAL(12,6)) END) AS v_hi
+             |  FROM k GROUP BY 1, 2, 3),
+             | st AS (SELECT event_type, n, n - 2 * g AS h,
+             |   CAST(tsum + CAST(g AS DECIMAL(19,0)) * (v_lo + v_hi)
+             |     AS DOUBLE) AS wsum,
+             |   CAST(tss + CAST(g AS DECIMAL(10,0))
+             |     * CAST(CAST(v_lo AS DECIMAL(19,6)) * v_lo
+             |         + CAST(v_hi AS DECIMAL(19,6)) * v_hi AS DECIMAL(28,12))
+             |     AS DOUBLE) AS wss,
+             |   CAST(tsum AS DOUBLE) AS tsum
+             |  FROM st0),
+             | p AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
+             |   CAST(a.h AS BIGINT) AS h_a, CAST(b.h AS BIGINT) AS h_b,
+             |   CAST(a.n AS DOUBLE) AS na, CAST(b.n AS DOUBLE) AS nb,
+             |   CAST(a.h AS DOUBLE) AS ha, CAST(b.h AS DOUBLE) AS hb,
+             |   a.wsum AS wsuma, a.wss AS wssa, a.tsum AS tsuma,
+             |   b.wsum AS wsumb, b.wss AS wssb, b.tsum AS tsumb
+             |  FROM st a JOIN st b ON a.event_type < b.event_type),
+             | q AS (SELECT *,
+             |   swa * (na - 1.0) / (ha * (ha - 1.0)) AS da,
+             |   swb * (nb - 1.0) / (hb * (hb - 1.0)) AS db
+             |  FROM (SELECT *,
+             |    (wssa - wsuma * wsuma / na) / (na - 1.0) AS swa,
+             |    (wssb - wsumb * wsumb / nb) / (nb - 1.0) AS swb FROM p))
+             |SELECT type_a, type_b, h_a, h_b,
+             | round(tsuma / ha, 6) AS trimmed_mean_a,
+             | round(tsumb / hb, 6) AS trimmed_mean_b,
+             | round((tsuma / ha - tsumb / hb) / sqrt(da + db), 6) AS t_yuen,
+             | round(1.0 / ((da / (da + db)) * (da / (da + db)) / (ha - 1.0)
+             |   + (1.0 - da / (da + db)) * (1.0 - da / (da + db)) / (hb - 1.0)),
+             |   6) AS df
+             |FROM q ORDER BY type_a, type_b""".stripMargin)),
 
-    "agg_mann_whitney" -> ((s, dir) => {
+    Op("agg_mann_whitney", (s, dir) => {
       val cum = denseTypeValueCum(s, dir)
       val a = cum.select(col("event_type").as("type_a"), col("value"),
         col("cnt").as("ca"))
@@ -1428,7 +2161,35 @@ object AnalyticsExt {
                   / ((col("n_a") + col("n_b"))
                     * (col("n_a") + col("n_b") - 1.0)))), 6).as("z"))
         .orderBy("type_a", "type_b")
-    }),
+    },
+      Some("""WITH vc AS (SELECT event_type, value, count(*) AS cnt
+             |  FROM events GROUP BY 1, 2),
+             | vals AS (SELECT DISTINCT value FROM vc),
+             | types AS (SELECT DISTINCT event_type FROM vc),
+             | dense AS (SELECT t.event_type, v.value, COALESCE(cnt, 0) AS cnt
+             |  FROM vals v CROSS JOIN types t
+             |  LEFT JOIN vc ON vc.event_type = t.event_type AND vc.value = v.value),
+             | cum AS (SELECT event_type, value, cnt,
+             |   sum(cnt) OVER (PARTITION BY event_type ORDER BY value
+             |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+             |  FROM dense),
+             | pair AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
+             |   sum(a.cnt) AS n_a, sum(b.cnt) AS n_b,
+             |   sum(a.cnt * (b.cum - b.cnt) * 2 + a.cnt * b.cnt) AS u2,
+             |   sum((a.cnt + b.cnt) * (a.cnt + b.cnt) * (a.cnt + b.cnt)
+             |     - (a.cnt + b.cnt)) AS t3t
+             |  FROM cum a JOIN cum b ON a.value = b.value
+             |   AND a.event_type < b.event_type
+             |  GROUP BY 1, 2)
+             |SELECT type_a, type_b,
+             | CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
+             | u2 / 2.0 AS u_a,
+             | round((u2 / 2.0 - CAST(n_a AS DOUBLE) * n_b / 2.0)
+             |   / sqrt(CAST(n_a AS DOUBLE) * n_b / 12.0
+             |     * ((n_a + n_b + 1.0)
+             |       - CAST(t3t AS DOUBLE) / ((n_a + n_b) * (n_a + n_b - 1.0)))), 6)
+             |   AS z
+             |FROM pair ORDER BY type_a, type_b""".stripMargin)),
 
     // KOLMOGOROV–SMIRNOV two-sample D between every type pair (round
     // 10) — the distribution-shift test that reads the WHOLE CDF where
@@ -1440,7 +2201,7 @@ object AnalyticsExt {
     // float CDF ever compared. Released beside the α=0.05 two-sample
     // threshold c(α)·√((nA+nB)/(nA·nB)), c = 1.358 (fixed literal), so
     // the verdict column is self-contained.
-    "agg_ks_test" -> ((s, dir) => {
+    Op("agg_ks_test", (s, dir) => {
       val cumBase = denseTypeValueCum(s, dir)
       val tot = cumBase.groupBy("event_type").agg(sum("cnt").as("n"))
       val cum = cumBase.join(broadcast(tot), "event_type")
@@ -1463,7 +2224,36 @@ object AnalyticsExt {
           col("d_stat"), col("d_crit"),
           (col("d_stat") > col("d_crit")).as("is_significant"))
         .orderBy("type_a", "type_b")
-    }),
+    },
+      Some("""WITH vc AS (SELECT event_type, value, count(*) AS cnt
+             |  FROM events GROUP BY 1, 2),
+             | vals AS (SELECT DISTINCT value FROM vc),
+             | types AS (SELECT DISTINCT event_type FROM vc),
+             | tot AS (SELECT event_type, CAST(sum(cnt) AS BIGINT) AS n
+             |  FROM vc GROUP BY 1),
+             | dense AS (SELECT t.event_type, v.value, COALESCE(cnt, 0) AS cnt
+             |  FROM vals v CROSS JOIN types t
+             |  LEFT JOIN vc ON vc.event_type = t.event_type AND vc.value = v.value),
+             | cum AS (SELECT d.event_type, d.value,
+             |   CAST(sum(cnt) OVER (PARTITION BY d.event_type ORDER BY value
+             |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+             |     AS cum, n
+             |  FROM dense d JOIN tot USING (event_type)),
+             | pair AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
+             |   a.n AS n_a, b.n AS n_b,
+             |   max(abs(a.cum * b.n - b.cum * a.n)) AS maxdiff
+             |  FROM cum a JOIN cum b ON a.value = b.value
+             |   AND a.event_type < b.event_type
+             |  GROUP BY 1, 2, 3, 4)
+             |SELECT type_a, type_b, n_a, n_b,
+             | round(CAST(maxdiff AS DOUBLE)
+             |   / (CAST(n_a AS DOUBLE) * n_b), 6) AS d_stat,
+             | round(1.358 * sqrt((CAST(n_a AS DOUBLE) + n_b)
+             |   / (CAST(n_a AS DOUBLE) * n_b)), 6) AS d_crit,
+             | round(CAST(maxdiff AS DOUBLE) / (CAST(n_a AS DOUBLE) * n_b), 6)
+             |   > round(1.358 * sqrt((CAST(n_a AS DOUBLE) + n_b)
+             |     / (CAST(n_a AS DOUBLE) * n_b)), 6) AS is_significant
+             |FROM pair ORDER BY type_a, type_b""".stripMargin)),
 
     // KRUSKAL–WALLIS H (1952) across ALL event types at once (round 10)
     // — the k-group omnibus generalization of agg_mann_whitney: "do ANY
@@ -1481,7 +2271,7 @@ object AnalyticsExt {
     // group's term is produced by the same correctly-rounded IEEE
     // expression in both engines. Tie correction C = 1 − Σ(t³−t)/(N³−N)
     // from exact integer tie masses; H_tied = H/C.
-    "agg_kruskal_wallis" -> ((s, dir) => {
+    Op("agg_kruskal_wallis", (s, dir) => {
       val cum = denseTypeValueCum(s, dir)
       val byVal = cum.groupBy("value")
         .agg(sum("cnt").as("cntall"), sum("cum").as("cumall"))
@@ -1508,7 +2298,40 @@ object AnalyticsExt {
         (col("n_groups") - 1).as("df"),
         round(hRaw, 6).as("h_stat"),
         round(hRaw / tieC, 6).as("h_tied"))
-    }),
+    },
+      Some("""WITH vc AS (SELECT event_type, value, count(*) AS cnt
+             |  FROM events GROUP BY 1, 2),
+             | vals AS (SELECT DISTINCT value FROM vc),
+             | types AS (SELECT DISTINCT event_type FROM vc),
+             | dense AS (SELECT t.event_type, v.value, COALESCE(cnt, 0) AS cnt
+             |  FROM vals v CROSS JOIN types t
+             |  LEFT JOIN vc ON vc.event_type = t.event_type AND vc.value = v.value),
+             | cum AS (SELECT event_type, value, cnt,
+             |   sum(cnt) OVER (PARTITION BY event_type ORDER BY value
+             |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+             |  FROM dense),
+             | byval AS (SELECT value, sum(cnt) AS cntall, sum(cum) AS cumall
+             |  FROM cum GROUP BY 1),
+             | grp AS (SELECT d.event_type, sum(d.cnt) AS n_g,
+             |   sum(d.cnt * ((b.cumall - b.cntall) * 2 + b.cntall + 1)) AS u2r
+             |  FROM dense d JOIN byval b USING (value) GROUP BY 1),
+             | tot AS (SELECT sum(cntall) AS n,
+             |   sum(cntall * cntall * cntall - cntall) AS t3t FROM byval),
+             | q AS (SELECT n, t3t, count(*) AS n_groups,
+             |   CAST(sum(CAST((u2r / 2.0) * (u2r / 2.0) / n_g
+             |     / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) + 1.0))
+             |     AS DECIMAL(28,12))) AS DOUBLE) AS sq
+             |  FROM grp CROSS JOIN tot GROUP BY 1, 2),
+             | h AS (SELECT CAST(n_groups AS BIGINT) AS n_groups,
+             |   CAST(n AS BIGINT) AS n_total,
+             |   CAST(n_groups AS BIGINT) - 1 AS df,
+             |   12.0 * sq - 3.0 * (CAST(n AS DOUBLE) + 1.0) AS h_raw,
+             |   1.0 - CAST(t3t AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
+             |     * CAST(n AS DOUBLE) - CAST(n AS DOUBLE)) AS c
+             |  FROM q)
+             |SELECT n_groups, n_total, df, round(h_raw, 6) AS h_stat,
+             | round(h_raw / c, 6) AS h_tied
+             |FROM h""".stripMargin)),
 
     // CUPED VARIANCE REDUCTION (Deng et al. 2013, "Improving the
     // Sensitivity of Online Controlled Experiments by Utilizing
@@ -1547,7 +2370,7 @@ object AnalyticsExt {
     // unrounded. Degenerate prior (zero variance or non-positive k)
     // falls back to the lattice MLE in both engines. Shape: one corpus
     // hash agg → |users| rows; two 1-row prior frames broadcast back.
-    "agg_eb_shrinkage" -> ((s, dir) => {
+    Op("agg_eb_shrinkage", (s, dir) => {
       val per = events(s, dir).groupBy("user_id").agg(
           count(lit(1)).as("n"),
           sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
@@ -1573,9 +2396,36 @@ object AnalyticsExt {
             .otherwise(col("p_micro").cast("double") / lit(1000000.0d))
             .as("p_shrunk"))
         .orderBy("user_id")
-    }),
+    },
+      Some("""WITH per AS (SELECT user_id, count(*) AS n,
+             |   CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
+             |     AS BIGINT) AS x
+             |  FROM events GROUP BY 1),
+             | pm AS (SELECT user_id, n, x, (1000000 * x) // n AS p_micro
+             |  FROM per),
+             | pri AS (SELECT count(*) AS nu, sum(p_micro) AS sp FROM pm),
+             | mm AS (SELECT nu, sp // nu AS m_micro FROM pri),
+             | s2 AS (SELECT mm.nu AS nu, mm.m_micro AS m_micro,
+             |   sum((pm.p_micro - mm.m_micro) * (pm.p_micro - mm.m_micro))
+             |     AS sd2
+             |  FROM pm, mm GROUP BY 1, 2),
+             | pr AS (SELECT sd2,
+             |   CAST(m_micro AS DOUBLE) / 1000000.0 AS m,
+             |   (CAST(sd2 // 4294967296 AS DOUBLE) * 4294967296.0
+             |     + CAST(sd2 % 4294967296 AS DOUBLE))
+             |    / (CAST(nu AS DOUBLE) * 1e12) AS v
+             |  FROM s2),
+             | kk AS (SELECT sd2, m, v,
+             |   CASE WHEN sd2 > 0 THEN m * (1.0 - m) / v - 1.0 END AS k
+             |  FROM pr)
+             |SELECT pm.user_id, pm.x, pm.n,
+             | CAST(pm.p_micro AS DOUBLE) / 1000000.0 AS p_mle,
+             | CASE WHEN kk.k IS NOT NULL AND kk.k > 0
+             |      THEN (pm.x + kk.m * kk.k) / (pm.n + kk.k)
+             |      ELSE CAST(pm.p_micro AS DOUBLE) / 1000000.0 END AS p_shrunk
+             |FROM pm, kk ORDER BY pm.user_id""".stripMargin)),
 
-    "agg_cuped_adjustment" -> ((s, dir) => {
+    Op("agg_cuped_adjustment", (s, dir) => {
       val dec = "decimal(28,12)"
       // dn projected once in the scan stage (not inside each aggregate
       // expression — the two when() branches would evaluate the
@@ -1621,7 +2471,38 @@ object AnalyticsExt {
                 * sum(col("y").cast(dec)).cast("double")
                 / count(lit(1))), 6).as("var_reduction"))
         .orderBy("variant")
-    }),
+    },
+      Some("""WITH per AS (SELECT user_id,
+             |   CAST(sum(CASE WHEN (CAST(ts AS DATE) - DATE '2024-01-01' + 1) <= 15
+             |     THEN CAST(value AS DECIMAL(18,6)) ELSE CAST(0.0 AS DECIMAL(18,6)) END) AS DOUBLE) AS x,
+             |   CAST(sum(CASE WHEN (CAST(ts AS DATE) - DATE '2024-01-01' + 1) > 15
+             |     THEN CAST(value AS DECIMAL(18,6)) ELSE CAST(0.0 AS DECIMAL(18,6)) END) AS DOUBLE) AS y
+             | FROM events GROUP BY 1),
+             | st AS (SELECT CAST(count(*) AS DOUBLE) AS n,
+             |   CAST(sum(CAST(x AS DECIMAL(28,12))) AS DOUBLE) AS sx,
+             |   CAST(sum(CAST(y AS DECIMAL(28,12))) AS DOUBLE) AS sy,
+             |   CAST(sum(CAST(x * y AS DECIMAL(28,12))) AS DOUBLE) AS sxy,
+             |   CAST(sum(CAST(x * x AS DECIMAL(28,12))) AS DOUBLE) AS sxx
+             | FROM per),
+             | adj AS (SELECT per.*,
+             |   (sxy - sx * sy / n) / (sxx - sx * sx / n) AS theta,
+             |   y - (sxy - sx * sy / n) / (sxx - sx * sx / n) * (x - sx / n) AS y_adj,
+             |   CASE WHEN substr(md5('srm42:' || CAST(user_id AS VARCHAR)), 1, 1) < '8'
+             |     THEN 'A' ELSE 'B' END AS variant
+             | FROM per CROSS JOIN st)
+             |SELECT variant, count(*) AS n_users,
+             | round(max(theta), 6) AS theta,
+             | round(CAST(sum(CAST(y AS DECIMAL(28,12))) AS DOUBLE) / count(*), 6) AS mean_y,
+             | round(CAST(sum(CAST(y_adj AS DECIMAL(28,12))) AS DOUBLE) / count(*), 6) AS mean_y_adj,
+             | round(1.0 -
+             |   (CAST(sum(CAST(y_adj * y_adj AS DECIMAL(28,12))) AS DOUBLE)
+             |     - CAST(sum(CAST(y_adj AS DECIMAL(28,12))) AS DOUBLE)
+             |       * CAST(sum(CAST(y_adj AS DECIMAL(28,12))) AS DOUBLE) / count(*))
+             |   / (CAST(sum(CAST(y * y AS DECIMAL(28,12))) AS DOUBLE)
+             |     - CAST(sum(CAST(y AS DECIMAL(28,12))) AS DOUBLE)
+             |       * CAST(sum(CAST(y AS DECIMAL(28,12))) AS DOUBLE) / count(*)), 6)
+             |   AS var_reduction
+             |FROM adj GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // DELTA-METHOD RATIO-METRIC CI (round 10) — the experiment readout
     // for ratio metrics whose numerator AND denominator are both
@@ -1636,7 +2517,7 @@ object AnalyticsExt {
     // the CI is one correctly-rounded IEEE expression over exact
     // moments. Shape: one user-keyed exchange, then a |variants|-row
     // frame — nothing corpus-sized past the first agg.
-    "agg_delta_method_ratio" -> ((s, dir) => {
+    Op("agg_delta_method_ratio", (s, dir) => {
       val dec = "decimal(28,12)"
       val st = perUserXY(s, dir).groupBy("variant").agg(
         count(lit(1)).cast("double").as("n"),
@@ -1659,7 +2540,29 @@ object AnalyticsExt {
           round(r - lit(1.96) * se, 6).as("ci_lo"),
           round(r + lit(1.96) * se, 6).as("ci_hi"))
         .orderBy("variant")
-    }),
+    },
+      Some("""WITH per AS (SELECT user_id, CAST(count(*) AS DOUBLE) AS x,
+             |   CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS y,
+             |   CASE WHEN substr(md5('srm42:' || CAST(user_id AS VARCHAR)), 1, 1) < '8'
+             |     THEN 'A' ELSE 'B' END AS variant
+             |  FROM events GROUP BY 1),
+             | st AS (SELECT variant, CAST(count(*) AS DOUBLE) AS n,
+             |   CAST(sum(CAST(x AS DECIMAL(28,12))) AS DOUBLE) AS sx,
+             |   CAST(sum(CAST(y AS DECIMAL(28,12))) AS DOUBLE) AS sy,
+             |   CAST(sum(CAST(x * y AS DECIMAL(28,12))) AS DOUBLE) AS sxy,
+             |   CAST(sum(CAST(x * x AS DECIMAL(28,12))) AS DOUBLE) AS sxx,
+             |   CAST(sum(CAST(y * y AS DECIMAL(28,12))) AS DOUBLE) AS syy
+             |  FROM per GROUP BY 1),
+             | d AS (SELECT variant, n, sy / sx AS r, sx / n AS xbar,
+             |   (syy - sy * sy / n) / (n - 1.0) AS vy,
+             |   (sxx - sx * sx / n) / (n - 1.0) AS vx,
+             |   (sxy - sx * sy / n) / (n - 1.0) AS cxy FROM st),
+             | e AS (SELECT variant, n, r,
+             |   sqrt((vy - 2.0 * r * cxy + r * r * vx) / n) / xbar AS se FROM d)
+             |SELECT variant, CAST(n AS BIGINT) AS n_users, round(r, 6) AS ratio,
+             | round(se, 6) AS se, round(r - 1.96 * se, 6) AS ci_lo,
+             | round(r + 1.96 * se, 6) AS ci_hi
+             |FROM e ORDER BY variant""".stripMargin)),
 
     // JACKKNIFE RATIO VARIANCE (round 10) — the delta method's
     // empirical cross-check, and the estimator large A/B platforms
@@ -1672,7 +2575,7 @@ object AnalyticsExt {
     // its moments accumulate on the DECIMAL(28,12) lattice, so the
     // release is bit-portable. A DeterminismSpec property pins
     // se_jackknife ≈ se_delta (they agree to O(1/n) on this metric).
-    "agg_jackknife_ratio_var" -> ((s, dir) => {
+    Op("agg_jackknife_ratio_var", (s, dir) => {
       val dec = "decimal(28,12)"
       val tot = perUserXY(s, dir).groupBy("variant").agg(
         count(lit(1)).cast("double").as("n"),
@@ -1694,7 +2597,28 @@ object AnalyticsExt {
           round(r - lit(1.96) * se, 6).as("ci_lo"),
           round(r + lit(1.96) * se, 6).as("ci_hi"))
         .orderBy("variant")
-    }),
+    },
+      Some("""WITH per AS (SELECT user_id, CAST(count(*) AS DOUBLE) AS x,
+             |   CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS y,
+             |   CASE WHEN substr(md5('srm42:' || CAST(user_id AS VARCHAR)), 1, 1) < '8'
+             |     THEN 'A' ELSE 'B' END AS variant
+             |  FROM events GROUP BY 1),
+             | tot AS (SELECT variant, CAST(count(*) AS DOUBLE) AS n,
+             |   CAST(sum(CAST(x AS DECIMAL(28,12))) AS DOUBLE) AS sx,
+             |   CAST(sum(CAST(y AS DECIMAL(28,12))) AS DOUBLE) AS sy
+             |  FROM per GROUP BY 1),
+             | ps AS (SELECT per.variant, n, sx, sy,
+             |   (sy - y) / (sx - x) AS rl FROM per JOIN tot USING (variant)),
+             | st AS (SELECT variant, max(n) AS n, max(sx) AS sx, max(sy) AS sy,
+             |   CAST(sum(CAST(rl AS DECIMAL(28,12))) AS DOUBLE) AS srl,
+             |   CAST(sum(CAST(rl * rl AS DECIMAL(28,12))) AS DOUBLE) AS srr
+             |  FROM ps GROUP BY 1),
+             | e AS (SELECT variant, n, sy / sx AS r,
+             |   sqrt((n - 1.0) / n * (srr - srl * srl / n)) AS se FROM st)
+             |SELECT variant, CAST(n AS BIGINT) AS n_users, round(r, 6) AS ratio,
+             | round(se, 6) AS se_jackknife, round(r - 1.96 * se, 6) AS ci_lo,
+             | round(r + 1.96 * se, 6) AS ci_hi
+             |FROM e ORDER BY variant""".stripMargin)),
 
     // POWER / MINIMUM-DETECTABLE-EFFECT READOUT (round 10) — the
     // question every experiment review asks BEFORE launch: "at this
@@ -1707,7 +2631,7 @@ object AnalyticsExt {
     // literals (1.96, 0.8416); everything else is one correctly-rounded
     // IEEE expression over exact moments. One two-phase corpus agg →
     // |types| rows; nothing else moves.
-    "agg_power_mde" -> ((s, dir) => {
+    Op("agg_power_mde", (s, dir) => {
       val st = events(s, dir).groupBy("event_type").agg(
         count(lit(1)).cast("double").as("n"),
         dsum6(col("value")).as("sx"),
@@ -1725,7 +2649,21 @@ object AnalyticsExt {
             ((lit(0.01) * mean) * (lit(0.01) * mean)))
             .cast("long").as("n_per_arm_1pct"))
         .orderBy("event_type")
-    }),
+    },
+      Some("""WITH st AS (SELECT event_type, CAST(count(*) AS DOUBLE) AS n,
+             |   CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sx,
+             |   CAST(sum(CAST(value * value AS DECIMAL(18,6))) AS DOUBLE) AS sxx
+             |  FROM events GROUP BY 1),
+             | d AS (SELECT event_type, n, sx / n AS mean,
+             |   (sxx - sx * sx / n) / (n - 1.0) AS vr FROM st),
+             | e AS (SELECT event_type, n, mean, vr,
+             |   (1.96 + 0.8416) * sqrt(vr) * sqrt(2.0 / (n / 2.0)) AS mde FROM d)
+             |SELECT event_type, CAST(n AS BIGINT) AS n_obs, round(mean, 6) AS mean,
+             | round(sqrt(vr), 6) AS sd, round(mde, 6) AS mde_abs,
+             | round(mde / mean, 6) AS mde_rel,
+             | CAST(ceil(2.0 * vr * (1.96 + 0.8416) * (1.96 + 0.8416)
+             |   / ((0.01 * mean) * (0.01 * mean))) AS BIGINT) AS n_per_arm_1pct
+             |FROM e ORDER BY event_type""".stripMargin)),
 
     // NELSON–AALEN CHURN HAZARD — survival analysis over the user base:
     // a user "churns" on their last active day (observed if it falls
@@ -1740,7 +2678,7 @@ object AnalyticsExt {
     // (calendar-bounded, like ts_gap_fill's grid), two day-keyed counts
     // and one ≤25-row window. At 100 TB the spans frame IS the user
     // lifecycle table the retention team already materializes.
-    "ts_survival_hazard" -> ((s, dir) => {
+    Op("ts_survival_hazard", (s, dir) => {
       val censorDay = 25
       val spans = events(s, dir)
         .select(col("user_id"),
@@ -1772,7 +2710,26 @@ object AnalyticsExt {
           round(col("hazard"), 6).as("hazard"),
           round(col("cum_hazard"), 6).as("cum_hazard"))
         .orderBy("day")
-    }),
+    },
+      Some("""WITH spans AS (SELECT user_id,
+             |   min(CAST(ts AS DATE) - DATE '2024-01-01' + 1) AS fd,
+             |   max(CAST(ts AS DATE) - DATE '2024-01-01' + 1) AS ld
+             | FROM events GROUP BY 1),
+             | risk AS (SELECT day, count(*) AS n_risk FROM (
+             |   SELECT unnest(generate_series(fd, least(ld, 25))) AS day FROM spans)
+             |  GROUP BY 1),
+             | churn AS (SELECT ld AS day, count(*) AS d_churn FROM spans
+             |  WHERE ld <= 25 GROUP BY 1),
+             | j AS (SELECT risk.day, n_risk, COALESCE(d_churn, 0) AS d_churn,
+             |   CAST(COALESCE(d_churn, 0) AS DOUBLE) / n_risk AS hazard
+             |  FROM risk LEFT JOIN churn USING (day))
+             |SELECT CAST(day AS INT) AS day, CAST(n_risk AS BIGINT) AS n_risk,
+             | CAST(d_churn AS BIGINT) AS d_churn,
+             | round(hazard, 6) AS hazard,
+             | round(CAST(sum(CAST(hazard AS DECIMAL(28,12))) OVER (ORDER BY day
+             |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE), 6)
+             |   AS cum_hazard
+             |FROM j ORDER BY day""".stripMargin)),
 
     // POPULATION STABILITY INDEX — the drift monitor a scoring pipeline
     // runs between a reference window and current traffic: PSI =
@@ -1785,7 +2742,7 @@ object AnalyticsExt {
     // pattern), contributions sum on the decimal lattice; the '~total'
     // row IS the PSI (rule of thumb: <0.1 stable, >0.25 drifted).
     // Shape: two histogram aggs over the scan + |buckets|-row math.
-    "ts_psi_drift" -> ((s, dir) => {
+    Op("ts_psi_drift", (s, dir) => {
       val dn = datediff(to_date(col("ts")), lit("2024-01-01")) + 1
       val bucketed = events(s, dir)
         .select(least(floor(col("value") / 25.0), lit(19.0))
@@ -1808,7 +2765,27 @@ object AnalyticsExt {
         .select(col("bucket"), col("n_ref"), col("n_cur"),
           round(col("contrib"), 6).as("psi_contrib"))
         .orderBy("bucket")
-    }),
+    },
+      Some("""WITH b AS (SELECT CAST(least(floor(value / 25.0), 19.0) AS BIGINT) AS bucket,
+             |   (CAST(ts AS DATE) - DATE '2024-01-01' + 1) <= 7 AS is_ref
+             | FROM events),
+             | h AS (SELECT bucket,
+             |   CAST(sum(CASE WHEN is_ref THEN 1 ELSE 0 END) AS BIGINT) AS n_ref,
+             |   CAST(sum(CASE WHEN NOT is_ref THEN 1 ELSE 0 END) AS BIGINT) AS n_cur
+             |  FROM b GROUP BY 1),
+             | t AS (SELECT CAST(sum(n_ref) AS BIGINT) AS tr,
+             |   CAST(sum(n_cur) AS BIGINT) AS tc, count(*) AS nb FROM h),
+             | per AS (SELECT bucket, n_ref, n_cur,
+             |   ((n_ref + 0.5) / (tr + 0.5 * nb) - (n_cur + 0.5) / (tc + 0.5 * nb))
+             |     * round(ln(((n_ref + 0.5) / (tr + 0.5 * nb))
+             |       / ((n_cur + 0.5) / (tc + 0.5 * nb))), 4) AS contrib
+             |  FROM h CROSS JOIN t)
+             |SELECT bucket, n_ref, n_cur, round(contrib, 6) AS psi_contrib FROM per
+             |UNION ALL
+             |SELECT -1, CAST(sum(n_ref) AS BIGINT), CAST(sum(n_cur) AS BIGINT),
+             | round(CAST(sum(CAST(contrib AS DECIMAL(28,12))) AS DOUBLE), 6)
+             |FROM per
+             |ORDER BY bucket""".stripMargin)),
 
     // SEASONAL-NAIVE FORECAST BACKTEST — the baseline every demand/load
     // forecaster must beat, evaluated the honest way: walk the hourly
@@ -1834,7 +2811,7 @@ object AnalyticsExt {
     // each released as ONE 6dp-rounded scalar so the per-hour
     // subtraction runs on the decimal lattice). Everything after the
     // one events pass touches ≤ |hours| rows.
-    "ts_changepoint_cusum" -> ((s, dir) => {
+    Op("ts_changepoint_cusum", (s, dir) => {
       val dec = "decimal(28,12)"
       val hourly = events(s, dir)
         .groupBy(date_trunc("hour", col("ts")).as("h"))
@@ -1863,9 +2840,32 @@ object AnalyticsExt {
         .select(col("h"), col("x"), col("sp6").as("s_plus"),
           (col("sp6") > col("k") * 4).as("is_alarm"))
         .orderBy("h")
-    }),
+    },
+      Some("""WITH hourly AS (SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
+             |   CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS x
+             | FROM events GROUP BY 1),
+             | ref AS (SELECT round(sx / n, 6) AS mu0,
+             |   round(sqrt((sxx - sx * sx / n) / n) / 2.0, 6) AS k
+             |  FROM (SELECT CAST(count(*) AS DOUBLE) AS n,
+             |    CAST(sum(CAST(x AS DECIMAL(28,12))) AS DOUBLE) AS sx,
+             |    CAST(sum(CAST(x * x AS DECIMAL(28,12))) AS DOUBLE) AS sxx
+             |   FROM hourly WHERE h < TIMESTAMP '2024-01-08 00:00:00')),
+             | c AS (SELECT h, x, k,
+             |   sum(CAST(x AS DECIMAL(28,12)) - CAST(mu0 AS DECIMAL(28,12))
+             |       - CAST(k AS DECIMAL(28,12)))
+             |     OVER (ORDER BY h ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+             |     AS cc
+             |  FROM hourly CROSS JOIN ref),
+             | s AS (SELECT h, x, k,
+             |   cc - least(min(cc) OVER (ORDER BY h
+             |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
+             |     CAST(0 AS DECIMAL(28,12))) AS s_plus
+             |  FROM c)
+             |SELECT h, x, round(CAST(s_plus AS DOUBLE), 6) AS s_plus,
+             | round(CAST(s_plus AS DOUBLE), 6) > k * 4 AS is_alarm
+             |FROM s ORDER BY h""".stripMargin)),
 
-    "ts_backtest_snaive" -> ((s, dir) => {
+    Op("ts_backtest_snaive", (s, dir) => {
       val dec = "decimal(28,12)"
       val hourly = events(s, dir)
         .groupBy(date_trunc("hour", col("ts")).as("h"))
@@ -1881,7 +2881,20 @@ object AnalyticsExt {
             / count(lit(1)), 6).as("mae_snaive_168"),
           round(sum(abs(col("v") - col("v24")).cast(dec)).cast("double")
             / count(lit(1)), 6).as("mae_snaive_24"))
-    }),
+    },
+      Some("""WITH hourly AS (SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
+             |   CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
+             | FROM events GROUP BY 1),
+             | lg AS (SELECT h, v,
+             |   lag(v, 168) OVER (ORDER BY h) AS v168,
+             |   lag(v, 24) OVER (ORDER BY h) AS v24
+             | FROM hourly)
+             |SELECT count(*) AS n_hours,
+             | round(CAST(sum(CAST(abs(v - v168) AS DECIMAL(28,12))) AS DOUBLE)
+             |   / count(*), 6) AS mae_snaive_168,
+             | round(CAST(sum(CAST(abs(v - v24) AS DECIMAL(28,12))) AS DOUBLE)
+             |   / count(*), 6) AS mae_snaive_24
+             |FROM lg WHERE v168 IS NOT NULL AND v24 IS NOT NULL""".stripMargin)),
 
     // POISSON-BOOTSTRAP MEDIAN CI (Chamandy et al. 2012, "Estimating
     // Uncertainty for Massive Data Streams" — the bootstrap that works
@@ -1907,7 +2920,7 @@ object AnalyticsExt {
     //     (type, rep) exchange as the cumsum as a full-frame window sum,
     //     replacing the second expansion scan + join of the round-10
     //     form (wdf was computed twice: once for tot, once for cum).
-    "agg_bootstrap_median_ci" -> ((s, dir) => {
+    Op("agg_bootstrap_median_ci", (s, dir) => {
       val bReps = 20
       // Explicit fan-out BEFORE the weight projection: the events scan
       // of a compact parquet is a single split, and without this the
@@ -1992,7 +3005,53 @@ object AnalyticsExt {
         .select(col("event_type"), col("median_value"), col("ci_lo"),
           col("ci_hi"))
         .orderBy("event_type")
-    }),
+    },
+      Some("""WITH ev AS (SELECT event_type, event_id, value FROM events),
+             | hx AS (SELECT ev.*, c,
+             |     md5('boot:' || CAST(c AS VARCHAR) || ':' || CAST(event_id AS VARCHAR)) AS h
+             |   FROM ev CROSS JOIN (SELECT CAST(unnest(generate_series(0, 4)) AS INT) AS c)),
+             | reps AS (SELECT CAST(unnest(generate_series(1, 20)) AS INT) AS rep),
+             | x AS (SELECT event_type, event_id, value, rep,
+             |     substr(h, ((rep - 1) % 4) * 8 + 1, 8) AS u8
+             |   FROM hx JOIN reps ON (rep - 1) // 4 = c),
+             | uw AS (SELECT event_type, event_id, value, rep,
+             |     ((CAST(strpos('0123456789abcdef', substr(u8, 1, 1)) AS BIGINT) - 1) * 268435456
+             |   + (CAST(strpos('0123456789abcdef', substr(u8, 2, 1)) AS BIGINT) - 1) * 16777216
+             |   + (CAST(strpos('0123456789abcdef', substr(u8, 3, 1)) AS BIGINT) - 1) * 1048576
+             |   + (CAST(strpos('0123456789abcdef', substr(u8, 4, 1)) AS BIGINT) - 1) * 65536
+             |   + (CAST(strpos('0123456789abcdef', substr(u8, 5, 1)) AS BIGINT) - 1) * 4096
+             |   + (CAST(strpos('0123456789abcdef', substr(u8, 6, 1)) AS BIGINT) - 1) * 256
+             |   + (CAST(strpos('0123456789abcdef', substr(u8, 7, 1)) AS BIGINT) - 1) * 16
+             |   + (CAST(strpos('0123456789abcdef', substr(u8, 8, 1)) AS BIGINT) - 1)
+             |     + 0.5) / 4294967296.0 AS u
+             |   FROM x),
+             | wd AS (SELECT event_type, event_id, value, rep,
+             |     CASE WHEN u < 0.36787944117144233 THEN 0
+             |          WHEN u < 0.7357588823428847 THEN 1
+             |          WHEN u < 0.9196986029286058 THEN 2
+             |          WHEN u < 0.9810118431238462 THEN 3
+             |          WHEN u < 0.9963401531726563 THEN 4
+             |          WHEN u < 0.9994058151824183 THEN 5
+             |          ELSE 6 END AS w
+             |   FROM uw),
+             | wf AS (SELECT * FROM wd WHERE w > 0),
+             | cum AS (SELECT event_type, rep, value,
+             |     CAST(sum(w) OVER (PARTITION BY event_type, rep
+             |       ORDER BY value, event_id
+             |       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cw,
+             |     CAST(sum(w) OVER (PARTITION BY event_type, rep) AS BIGINT) AS wtot
+             |   FROM wf),
+             | med AS (SELECT event_type, rep, min(value) AS med
+             |   FROM cum WHERE cw * 2 >= wtot GROUP BY 1, 2),
+             | ci AS (SELECT event_type,
+             |     round(quantile_cont(med, 0.025), 6) AS ci_lo,
+             |     round(quantile_cont(med, 0.975), 6) AS ci_hi
+             |   FROM med GROUP BY 1),
+             | pt AS (SELECT event_type,
+             |     round(quantile_cont(value, 0.5), 6) AS median_value
+             |   FROM ev GROUP BY 1)
+             |SELECT pt.event_type, median_value, ci_lo, ci_hi
+             |FROM pt JOIN ci USING (event_type) ORDER BY event_type""".stripMargin)),
 
     // DAILY CONVERSION RATE with WILSON 95% CI — the uncertainty-aware
     // form of the funnel readout (a 3/7 day and a 300/700 day have the
@@ -2004,7 +3063,7 @@ object AnalyticsExt {
     // cross-engine before the 6-dp release. Shape: one distinct-agg per
     // day (two-phase, Expand for the two distincts); the interval is a
     // scalar projection on the |days|-row aggregate.
-    "agg_conversion_wilson_ci" -> ((s, dir) => {
+    Op("agg_conversion_wilson_ci", (s, dir) => {
       val z = 1.959964
       val d = events(s, dir).select(
         to_date(col("ts")).as("day"), col("user_id"),
@@ -2025,7 +3084,25 @@ object AnalyticsExt {
           round(center - half, 6).as("ci_lo"),
           round(center + half, 6).as("ci_hi"))
         .orderBy("day")
-    }),
+    },
+      Some("""WITH d AS (SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day, user_id,
+             |   event_type = 'purchase' AS conv FROM events),
+             | a AS (SELECT day, count(DISTINCT user_id) AS n,
+             |     count(DISTINCT CASE WHEN conv THEN user_id END) AS k
+             |   FROM d GROUP BY 1),
+             | w AS (SELECT day, n, k,
+             |     CAST(k AS DOUBLE) / n AS p,
+             |     1.959964 * 1.959964 AS z2,
+             |     CAST(n AS DOUBLE) AS nd
+             |   FROM a)
+             |SELECT day, n, k, round(p, 6) AS rate,
+             | round(((p + z2 / (2.0 * nd)) / (1.0 + z2 / nd))
+             |   - (1.959964 * sqrt(p * (1.0 - p) / nd + z2 / (4.0 * nd * nd))
+             |      / (1.0 + z2 / nd)), 6) AS ci_lo,
+             | round(((p + z2 / (2.0 * nd)) / (1.0 + z2 / nd))
+             |   + (1.959964 * sqrt(p * (1.0 - p) / nd + z2 / (4.0 * nd * nd))
+             |      / (1.0 + z2 / nd)), 6) AS ci_hi
+             |FROM w ORDER BY day""".stripMargin)),
 
     // SAMPLE-RATIO-MISMATCH check (the experimentation-platform health
     // gate: is the 50/50 variant assignment actually landing 50/50?) —
@@ -2041,7 +3118,7 @@ object AnalyticsExt {
     // events scan; the chi-square arithmetic runs on the |types|-row
     // aggregate. At 100 TB the unit-level hash rides the scan
     // projection — no shuffle beyond the one agg exchange.
-    "agg_srm_chisq" -> ((s, dir) => {
+    Op("agg_srm_chisq", (s, dir) => {
       val ev = events(s, dir).withColumn("variant",
         when(substring(md5(concat(lit("srm42:"), col("user_id"))), 1, 1) < "8",
           lit("A")).otherwise(lit("B")))
@@ -2055,7 +3132,21 @@ object AnalyticsExt {
             .as("chisq"))
         .withColumn("srm_flag", col("chisq") > 3.841459)
         .orderBy("event_type")
-    }),
+    },
+      Some("""WITH v AS (SELECT event_type,
+             |   CASE WHEN substr(md5('srm42:' || CAST(user_id AS VARCHAR)), 1, 1) < '8'
+             |     THEN 'A' ELSE 'B' END AS variant
+             | FROM events),
+             | c AS (SELECT event_type,
+             |   CAST(sum(CASE WHEN variant = 'A' THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
+             |   CAST(sum(CASE WHEN variant = 'B' THEN 1 ELSE 0 END) AS BIGINT) AS n_b
+             | FROM v GROUP BY 1),
+             | x AS (SELECT event_type, n_a, n_b, (n_a + n_b) / 2.0 AS e FROM c)
+             |SELECT event_type, n_a, n_b,
+             | round((n_a - e) * (n_a - e) / e + (n_b - e) * (n_b - e) / e, 6) AS chisq,
+             | (round((n_a - e) * (n_a - e) / e + (n_b - e) * (n_b - e) / e, 6)
+             |   > 3.841459) AS srm_flag
+             |FROM x ORDER BY event_type""".stripMargin)),
 
     // RATE LIMITER / THROTTLE — keep the first 3 events per (user, hour)
     // by event time, drop the rest: the ingest-side guard a pipeline
@@ -2079,12 +3170,24 @@ object AnalyticsExt {
     // (The driver's synthetic feed happens to be perfectly ordered, so
     // the oracle pins the all-on-time report; the disorder buckets are
     // exercised by OperatorSmokeSpec on a scrambled fixture.)
-    "ts_out_of_order_stats" -> ((s, dir) =>
+    Op("ts_out_of_order_stats", (s, dir) =>
       outOfOrderStats(
         events(s, dir).select(col("user_id"), col("event_id"),
-          unix_micros(col("ts")).as("us")))),
+          unix_micros(col("ts")).as("us"))),
+      Some("""WITH e AS (SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us
+             |  FROM events),
+             | l AS (SELECT user_id, event_id,
+             |     max(us) OVER (PARTITION BY user_id ORDER BY event_id) - us AS late_us
+             |   FROM e),
+             | b AS (SELECT CASE WHEN late_us = 0 THEN 'a_on_time'
+             |     WHEN late_us <= 60000000 THEN 'b_within_1m'
+             |     WHEN late_us <= 600000000 THEN 'c_within_10m'
+             |     WHEN late_us <= 3600000000 THEN 'd_within_1h'
+             |     ELSE 'e_over_1h' END AS bucket, late_us FROM l)
+             |SELECT bucket, count(*) AS n_events, max(late_us) AS max_late_us
+             |FROM b GROUP BY 1 ORDER BY 1""".stripMargin)),
 
-    "ts_throttle" -> ((s, dir) => {
+    Op("ts_throttle", (s, dir) => {
       val w = Window.partitionBy(col("user_id"), date_trunc("hour", col("ts")))
         .orderBy(col("ts"), col("event_id"))
       events(s, dir)
@@ -2093,7 +3196,14 @@ object AnalyticsExt {
         .select(col("event_id"), col("user_id"),
           date_trunc("hour", col("ts")).as("w_start"), col("ts"), col("rk"))
         .orderBy("event_id")
-    }),
+    },
+      Some("""WITH e AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
+             | r AS (SELECT event_id, user_id, date_trunc('hour', ts) AS w_start, ts,
+             |     CAST(row_number() OVER (PARTITION BY user_id, date_trunc('hour', ts)
+             |       ORDER BY ts, event_id) AS BIGINT) AS rk
+             |   FROM e)
+             |SELECT event_id, user_id, w_start, ts, rk
+             |FROM r WHERE rk <= 3 ORDER BY event_id""".stripMargin)),
 
     // Median absolute deviation per group — the robust dispersion measure
     // (outliers move stddev, not MAD). Two passes by definition (the
@@ -2103,7 +3213,7 @@ object AnalyticsExt {
     // size invariant that justifies the hint). Both engines interpolate
     // the order statistic identically (percentile ↔ percentile_cont,
     // the pairing agg_percentile already pins).
-    "agg_mad" -> ((s, dir) => {
+    Op("agg_mad", (s, dir) => {
       val med = t(s, dir, "lineitem").groupBy("l_returnflag")
         .agg(percentile(col("l_quantity"), lit(0.5)).as("med"))
       t(s, dir, "lineitem").select("l_returnflag", "l_quantity")
@@ -2113,7 +3223,15 @@ object AnalyticsExt {
           round(percentile(abs(col("l_quantity") - col("med")), lit(0.5)), 4)
             .as("mad_qty"))
         .orderBy("l_returnflag")
-    }),
+    },
+      Some("""WITH med AS (SELECT l_returnflag,
+             |   percentile_cont(0.5) WITHIN GROUP (ORDER BY l_quantity) AS med
+             | FROM lineitem GROUP BY 1)
+             |SELECT l.l_returnflag, round(max(med), 4) AS median_qty,
+             | round(percentile_cont(0.5) WITHIN GROUP
+             |   (ORDER BY abs(l.l_quantity - med)), 4) AS mad_qty
+             |FROM lineitem l JOIN med ON l.l_returnflag = med.l_returnflag
+             |GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // Event-type TRANSITION MATRIX (the first-order Markov model of user
     // journeys — what follows what): lead over the per-user time order
@@ -2124,7 +3242,7 @@ object AnalyticsExt {
     // after it is free at any corpus size. The probability is a single
     // correctly-rounded IEEE division of two exact counts — bit-identical
     // across engines, no rounding needed.
-    "ts_transition_matrix" -> ((s, dir) => {
+    Op("ts_transition_matrix", (s, dir) => {
       val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
       val pairs = events(s, dir)
         .withColumn("next_type", lead(col("event_type"), 1).over(w))
@@ -2134,7 +3252,17 @@ object AnalyticsExt {
       pairs.withColumn("p",
           col("n") / sum(col("n")).over(Window.partitionBy("from_type")))
         .orderBy("from_type", "to_type")
-    }),
+    },
+      Some("""WITH e AS (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts, event_type
+             |  FROM events),
+             | p AS (SELECT event_type AS from_type,
+             |    lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS to_type
+             |  FROM e),
+             | c AS (SELECT from_type, to_type, count(*) AS n FROM p
+             |  WHERE to_type IS NOT NULL GROUP BY 1, 2)
+             |SELECT from_type, to_type, n,
+             | n / sum(n) OVER (PARTITION BY from_type) AS p
+             |FROM c ORDER BY from_type, to_type""".stripMargin)),
 
     // Sequence-PATTERN detection (MATCH_RECOGNIZE / funnel-regex lite):
     // count, per user, the strictly-consecutive view→click→purchase
@@ -2148,16 +3276,18 @@ object AnalyticsExt {
     // exchange; row-local conjunction predicate; exact µs integer gap
     // test) — the template object is ALSO what the streaming DFA twin
     // consumes, so batch and stream can never drift.
-    "ts_pattern_detect" -> ((s, dir) =>
-      Cep.detectBatch(events(s, dir), Cep.ViewClickPurchase)),
+    Op("ts_pattern_detect", (s, dir) =>
+      Cep.detectBatch(events(s, dir), Cep.ViewClickPurchase),
+      Some(Cep.detectSql(Cep.ViewClickPurchase))),
 
     // A second template through the identical engine: signup→purchase
     // within 12 h (the activation funnel, length 2 — the minimum DFA,
     // one streaming slot). Parity with StreamingPattern on this template
     // is pinned in StreamingSpec; the oracle SQL is GENERATED from the
     // same CepTemplate object as the Spark plan.
-    "ts_pattern_template" -> ((s, dir) =>
-      Cep.detectBatch(events(s, dir), Cep.SignupPurchase)),
+    Op("ts_pattern_template", (s, dir) =>
+      Cep.detectBatch(events(s, dir), Cep.SignupPurchase),
+      Some(Cep.detectSql(Cep.SignupPurchase))),
 
     // AUDIENCE OVERLAP: distinct users per event-type PAIR (the co-
     // occurrence / cross-feature matrix behind "users who error also
@@ -2166,7 +3296,7 @@ object AnalyticsExt {
     // and the pair expansion is a self-join WITHIN each user's ≤5-row
     // group (co-partitioned equi-join on user_id, no blowup), so the
     // final pair aggregate counts each user once by construction.
-    "agg_audience_overlap" -> ((s, dir) => {
+    Op("agg_audience_overlap", (s, dir) => {
       val d = events(s, dir).select("user_id", "event_type").distinct()
       val a = d.select(col("user_id"), col("event_type").as("type_a"))
       val b = d.select(col("user_id"), col("event_type").as("type_b"))
@@ -2174,7 +3304,13 @@ object AnalyticsExt {
         .groupBy("type_a", "type_b")
         .agg(count(lit(1)).as("n_users"))
         .orderBy("type_a", "type_b")
-    }),
+    },
+      Some("""WITH d AS (SELECT DISTINCT user_id, event_type FROM events)
+             |SELECT a.event_type AS type_a, b.event_type AS type_b,
+             | count(*) AS n_users
+             |FROM d a JOIN d b ON a.user_id = b.user_id
+             | AND a.event_type < b.event_type
+             |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
 
     // Z-order (Morton) key: interleave the low 16 bits of two join/filter
     // columns via the classic mask-and-shift spread — pure integer bit
@@ -2182,11 +3318,14 @@ object AnalyticsExt {
     // write by this key bounds parquet row-group min/max stats on BOTH
     // dimensions (LayoutSpec proves the skipping); this is the multi-
     // column data-skipping layout lever for 100 TB scans.
-    "fn_zorder" -> ((s, dir) =>
+    Op("fn_zorder", (s, dir) =>
       t(s, dir, "orders").select(
         col("o_orderkey"), col("o_custkey"),
         zorderKey(col("o_orderkey"), col("o_custkey")).as("zkey"))
-        .orderBy("o_orderkey")),
+        .orderBy("o_orderkey"),
+      Some(s"""SELECT o_orderkey, o_custkey,
+              | ${zorderSql("o_orderkey", "o_custkey")} AS zkey
+              |FROM orders ORDER BY o_orderkey""".stripMargin)),
 
     // LOCAL-PEAK DETECTION (round 11) — strict local maxima of the
     // dense hourly event-count series with their prominence over the
@@ -2196,7 +3335,7 @@ object AnalyticsExt {
     // peak. Corpus → ONE hourly agg; the lag/lead window runs on the
     // calendar-bounded dense grid (~720 rows/month — the
     // ts_backtest_snaive allowlist class). Pure integer counts.
-    "ts_peak_detect" -> ((s, dir) => {
+    Op("ts_peak_detect", (s, dir) => {
       val hourly = events(s, dir)
         .groupBy(date_trunc("hour", col("ts")).as("h"))
         .agg(count(lit(1)).as("cnt"))
@@ -2214,7 +3353,22 @@ object AnalyticsExt {
           (col("cnt") - greatest(col("prev_cnt"), col("next_cnt")))
             .as("prominence"))
         .orderBy("h")
-    }),
+    },
+      Some("""WITH hourly AS (SELECT
+             |   date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
+             |   count(*) AS cnt FROM events GROUP BY 1),
+             | grid AS (SELECT unnest(generate_series(
+             |   (SELECT min(h) FROM hourly), (SELECT max(h) FROM hourly),
+             |   INTERVAL 1 HOUR)) AS h),
+             | dense AS (SELECT g.h, COALESCE(cnt, 0) AS cnt
+             |  FROM grid g LEFT JOIN hourly USING (h)),
+             | ll AS (SELECT h, cnt, lag(cnt) OVER (ORDER BY h) AS prev_cnt,
+             |   lead(cnt) OVER (ORDER BY h) AS next_cnt FROM dense)
+             |SELECT h, cnt, prev_cnt, next_cnt,
+             | CAST(cnt - greatest(prev_cnt, next_cnt) AS BIGINT) AS prominence
+             |FROM ll WHERE prev_cnt IS NOT NULL AND next_cnt IS NOT NULL
+             |  AND cnt > prev_cnt AND cnt > next_cnt
+             |ORDER BY h""".stripMargin)),
 
     // MARKOV STATIONARY DISTRIBUTION (round 11) — the long-run state
     // occupancy of the event-type transition chain (ts_transition_matrix
@@ -2229,14 +3383,18 @@ object AnalyticsExt {
     // runs driver-side on the collected ≤|types|² grid behind a
     // tripwired `require` (the MMR-page bounded-collect idiom — the
     // state grid is vocabulary-bounded, never corpus-sized).
-    "ts_markov_steady" -> ((s, dir) => {
+    Op("ts_markov_steady", (s, dir) => {
       val (_, v) = markovFixedPoint(s, dir)
       import s.implicits._
       v.toSeq.sortBy(_._1).toDF("event_type", "stationary_micro")
         .select(col("event_type"), col("stationary_micro"),
           round(col("stationary_micro") / lit(1000000.0), 6).as("stationary"))
         .orderBy("event_type")
-    }),
+    },
+      Some(s"""$markovCtesSql
+              |SELECT state AS event_type, v AS stationary_micro,
+              | round(v / 1000000.0, 6) AS stationary
+              |FROM v12 ORDER BY event_type""".stripMargin)),
 
     // MARKOV ENTROPY RATE (round 11) — how unpredictable is the NEXT
     // action given the current one? H = −Σ_i π_i Σ_j p_ij·ln p_ij over
@@ -2251,7 +3409,7 @@ object AnalyticsExt {
     // Spark via v.getOrElse(i, 0), the oracle via LEFT JOIN +
     // COALESCE(v, 0) — so n_states/n_cells agree even on a corpus with
     // a first-event-only type.
-    "ts_markov_entropy_rate" -> ((s, dir) => {
+    Op("ts_markov_entropy_rate", (s, dir) => {
       val (pm, v) = markovFixedPoint(s, dir)
       import s.implicits._
       val cells = pm.toSeq.map { case (i, j, p) => (i, j, p, v.getOrElse(i, 0L)) }
@@ -2262,7 +3420,15 @@ object AnalyticsExt {
         .agg(countDistinct(col("i")).as("n_states"),
           count(lit(1)).as("n_cells"),
           round(-sum(term).cast("double"), 6).as("entropy_rate_nats"))
-    }),
+    },
+      Some(s"""$markovCtesSql
+              |SELECT CAST(count(DISTINCT pm.i) AS BIGINT) AS n_states,
+              | count(*) AS n_cells,
+              | round(-CAST(sum(CAST((COALESCE(v, 0) / 1000000.0)
+              |   * (pm / 1000000.0)
+              |   * ln(pm / 1000000.0) AS DECIMAL(28,12))) AS DOUBLE), 6)
+              |   AS entropy_rate_nats
+              |FROM pm LEFT JOIN v12 ON pm.i = v12.state WHERE pm > 0""".stripMargin)),
 
     // NEW-vs-RETURNING DAILY SPLIT (round 11) — the growth chart every
     // product review opens with: per day, how many active users are
@@ -2270,7 +3436,7 @@ object AnalyticsExt {
     // min-over-user window as cohort_retention (no self-join onto the
     // feed); the daily rollup runs on the deduped (user, day) frame —
     // events shuffle once, integer counts only.
-    "ts_new_vs_returning" -> ((s, dir) => {
+    Op("ts_new_vs_returning", (s, dir) => {
       val w = Window.partitionBy("user_id")
       events(s, dir).select(col("user_id"), to_date(col("ts")).as("d"))
         .withColumn("first_d", min(col("d")).over(w))
@@ -2285,7 +3451,19 @@ object AnalyticsExt {
           round(col("n_new").cast("double") / col("n_active"), 6)
             .as("new_share"))
         .orderBy("day")
-    }),
+    },
+      Some("""WITH ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS d
+             |  FROM events),
+             | f AS (SELECT user_id, min(d) AS first_d FROM ud GROUP BY 1)
+             |SELECT d AS day,
+             | CAST(sum(CASE WHEN d = first_d THEN 1 ELSE 0 END) AS BIGINT)
+             |   AS n_new,
+             | CAST(sum(CASE WHEN d > first_d THEN 1 ELSE 0 END) AS BIGINT)
+             |   AS n_returning,
+             | count(*) AS n_active,
+             | round(CAST(sum(CASE WHEN d = first_d THEN 1 ELSE 0 END)
+             |   AS DOUBLE) / count(*), 6) AS new_share
+             |FROM ud JOIN f USING (user_id) GROUP BY d ORDER BY day""".stripMargin)),
 
     // INTER-ARRIVAL DISTRIBUTION (round 11) — the Poisson-process
     // health check: per-user gaps between consecutive events, bucketed
@@ -2294,7 +3472,7 @@ object AnalyticsExt {
     // key is how the sessionizer's 30-minute gap gets justified from
     // data). One per-user lag window (user-partitioned — scale-safe),
     // then a ≤8-row bucket agg; all integer µs arithmetic.
-    "ts_interarrival_hist" -> ((s, dir) => {
+    Op("ts_interarrival_hist", (s, dir) => {
       val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
       val gaps = events(s, dir)
         .select(col("user_id"), col("ts"), col("event_id"))
@@ -2320,1276 +3498,27 @@ object AnalyticsExt {
             .as("share"),
           col("max_gap_us"))
         .orderBy("bucket")
-    }),
-  )
-
-  /** Interleave the low 16 bits of `x` (even positions) and `y` (odd):
-    * the standard Morton spread via doubling shifts + masks. Result fits
-    * in 32 bits — no sign hazard. */
-  def zorderKey(x: org.apache.spark.sql.Column, y: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column = {
-    def spread16(c: org.apache.spark.sql.Column) = {
-      val v0 = c.bitwiseAND(lit(0xFFFFL))
-      val v1 = (v0.bitwiseOR(shiftleft(v0, 8))).bitwiseAND(lit(0x00FF00FFL))
-      val v2 = (v1.bitwiseOR(shiftleft(v1, 4))).bitwiseAND(lit(0x0F0F0F0FL))
-      val v3 = (v2.bitwiseOR(shiftleft(v2, 2))).bitwiseAND(lit(0x33333333L))
-      (v3.bitwiseOR(shiftleft(v3, 1))).bitwiseAND(lit(0x55555555L))
-    }
-    spread16(x).bitwiseOR(shiftleft(spread16(y), 1))
-  }
-
-  /** DuckDB twin of [[zorderKey]] (same spread, SQL operators). */
-  def zorderSql(x: String, y: String): String = {
-    def spread16(e: String) = {
-      val v0 = s"($e & 65535)"
-      val v1 = s"(($v0 | ($v0 << 8)) & 16711935)"
-      val v2 = s"(($v1 | ($v1 << 4)) & 252645135)"
-      val v3 = s"(($v2 | ($v2 << 2)) & 858993459)"
-      s"(($v3 | ($v3 << 1)) & 1431655765)"
-    }
-    s"(${spread16(x)} | (${spread16(y)} << 1))"
-  }
-
-  /** Lateness-bucket report over (user_id, event_id, us): each event's
-    * event-time lag behind its user's running high-water mark in ARRIVAL
-    * order (event_id). Factored out of the `ts_out_of_order_stats` key
-    * so the spec can drive the disorder buckets with a scrambled
-    * fixture. */
-  private[graft] def outOfOrderStats(ev: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy("event_id")
-    ev.withColumn("late_us", max("us").over(w) - col("us"))
-      .select(
-        when(col("late_us") === 0L, "a_on_time")
-          .when(col("late_us") <= 60L * 1000000, "b_within_1m")
-          .when(col("late_us") <= 600L * 1000000, "c_within_10m")
-          .when(col("late_us") <= 3600L * 1000000, "d_within_1h")
-          .otherwise("e_over_1h").as("bucket"),
-        col("late_us"))
-      .groupBy("bucket")
-      .agg(count(lit(1)).as("n_events"), max("late_us").as("max_late_us"))
-      .orderBy("bucket")
-  }
-
-  val oracle: Map[String, String] = Map(
-    "ts_transition_matrix" ->
-      """WITH e AS (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts, event_type
-        |  FROM events),
-        | p AS (SELECT event_type AS from_type,
-        |    lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS to_type
-        |  FROM e),
-        | c AS (SELECT from_type, to_type, count(*) AS n FROM p
-        |  WHERE to_type IS NOT NULL GROUP BY 1, 2)
-        |SELECT from_type, to_type, n,
-        | n / sum(n) OVER (PARTITION BY from_type) AS p
-        |FROM c ORDER BY from_type, to_type""".stripMargin,
-    "ts_pattern_detect" -> Cep.detectSql(Cep.ViewClickPurchase),
-    "ts_pattern_template" -> Cep.detectSql(Cep.SignupPurchase),
-    "agg_audience_overlap" ->
-      """WITH d AS (SELECT DISTINCT user_id, event_type FROM events)
-        |SELECT a.event_type AS type_a, b.event_type AS type_b,
-        | count(*) AS n_users
-        |FROM d a JOIN d b ON a.user_id = b.user_id
-        | AND a.event_type < b.event_type
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // The fold is replayed as a RECURSIVE CTE stepping rn → rn+1 (the
-    // dedup_cluster oracle pattern), NOT via list_reduce with a struct
-    // accumulator: DuckDB's lambda struct_pack binds fields sequentially,
-    // so a later field referencing acc sees the already-updated earlier
-    // field — probed empirically ((acc,x) -> {l: acc.l+x.l, b: acc.l}
-    // yields b = the NEW l). Scalar recursion has no such hazard and `//`
-    // truncates toward zero exactly like Spark's `div`.
-    "ts_holt_winters" ->
-      """WITH RECURSIVE hourly AS (
-        |  SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
-        |   CAST(sum(CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT))
-        |     AS BIGINT) AS vi
-        |  FROM events GROUP BY 1),
-        | o AS (SELECT h, CAST(hour(h) AS INT) AS hr, vi,
-        |   row_number() OVER (ORDER BY h) AS rn FROM hourly),
-        | nn AS (SELECT count(*) AS n_hours FROM o),
-        | r AS (
-        |  SELECT rn, vi AS l, CAST(0 AS BIGINT) AS b,
-        |   list_transform(range(24), j -> CAST(0 AS BIGINT)) AS s
-        |  FROM o WHERE rn = 1
-        |  UNION ALL
-        |  SELECT o.rn,
-        |   (o.vi - r.s[o.hr + 1] + r.l + r.b) // 2,
-        |   (((o.vi - r.s[o.hr + 1] + r.l + r.b) // 2) - r.l + r.b) // 2,
-        |   list_transform(range(24), j -> CASE WHEN j = o.hr
-        |     THEN (o.vi - ((o.vi - r.s[o.hr + 1] + r.l + r.b) // 2)
-        |       + r.s[o.hr + 1]) // 2
-        |     ELSE r.s[j + 1] END)
-        |  FROM r JOIN o ON o.rn = r.rn + 1),
-        | last AS (SELECT * FROM r ORDER BY rn DESC LIMIT 1)
-        |SELECT CAST(j AS INT) AS hr, s[j + 1] AS seasonal_micro,
-        | l AS level_micro, b AS trend_micro,
-        | (SELECT CAST(n_hours AS BIGINT) FROM nn) AS n_hours
-        |FROM last, (SELECT unnest(range(24)) AS j) g
-        |ORDER BY hr""".stripMargin,
-    "ts_holt" ->
-      """WITH RECURSIVE e AS (SELECT user_id, event_type,
-        |   CAST(ts AS TIMESTAMP) AS ts2, event_id,
-        |   CAST(CAST(value AS DECIMAL(18,4)) * 10000 AS BIGINT) AS vi
-        | FROM events),
-        |o AS (SELECT user_id, event_type, vi, row_number() OVER (
-        |   PARTITION BY user_id, event_type ORDER BY ts2, event_id) AS rn
-        | FROM e),
-        |n AS (SELECT user_id, event_type, count(*) AS n_events
-        | FROM o GROUP BY 1, 2),
-        |r AS (
-        | SELECT user_id, event_type, rn, vi AS l, CAST(0 AS BIGINT) AS b
-        | FROM o WHERE rn = 1
-        | UNION ALL
-        | SELECT o.user_id, o.event_type, o.rn,
-        |  (o.vi + r.l + r.b) // 2 AS l,
-        |  ((o.vi + r.l + r.b) // 2 - r.l + r.b) // 2 AS b
-        | FROM r JOIN o ON o.user_id = r.user_id
-        |  AND o.event_type = r.event_type AND o.rn = r.rn + 1)
-        |SELECT n.user_id, n.event_type, n.n_events, r.l AS level_micro,
-        | r.b AS trend_micro, r.l + r.b AS forecast_micro
-        |FROM r JOIN n ON r.user_id = n.user_id
-        | AND r.event_type = n.event_type AND r.rn = n.n_events
-        |ORDER BY n.user_id, n.event_type""".stripMargin,
-    "ts_debounce" ->
-      """WITH RECURSIVE e AS (SELECT user_id,
-        |   epoch_us(CAST(ts AS TIMESTAMP)) AS tu, event_id FROM events),
-        |o AS (SELECT user_id, tu, row_number() OVER (
-        |   PARTITION BY user_id ORDER BY tu, event_id) AS rn FROM e),
-        |n AS (SELECT user_id, count(*) AS n_events FROM o GROUP BY 1),
-        |r AS (
-        | SELECT user_id, rn, tu AS last, CAST(1 AS BIGINT) AS n
-        | FROM o WHERE rn = 1
-        | UNION ALL
-        | SELECT o.user_id, o.rn,
-        |  CASE WHEN o.tu >= r.last + 600000000 THEN o.tu ELSE r.last END,
-        |  CASE WHEN o.tu >= r.last + 600000000 THEN r.n + 1 ELSE r.n END
-        | FROM r JOIN o ON o.user_id = r.user_id AND o.rn = r.rn + 1)
-        |SELECT n.user_id, n.n_events, r.n AS n_kept
-        |FROM r JOIN n ON r.user_id = n.user_id AND r.rn = n.n_events
-        |ORDER BY n.user_id""".stripMargin,
-    "ts_autocorr_lag1" ->
-      s"""WITH e AS (SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS ts2,
-         |   event_id, value FROM events),
-         |p AS (SELECT user_id, event_type, value,
-         |   lag(value) OVER (PARTITION BY user_id, event_type
-         |     ORDER BY ts2, event_id) AS pv FROM e),
-         |g AS (SELECT user_id, event_type, CAST(count(*) AS DOUBLE) AS n,
-         |   ${dsum6Sql("pv")} AS sx, ${dsum6Sql("value")} AS sy,
-         |   ${dsum6Sql("pv * value")} AS sxy,
-         |   ${dsum6Sql("pv * pv")} AS sxx, ${dsum6Sql("value * value")} AS syy
-         | FROM p WHERE pv IS NOT NULL GROUP BY 1, 2)
-         |SELECT user_id, event_type, CAST(n AS BIGINT) AS n_pairs,
-         | CASE WHEN (n * sxx - sx * sx) > 0.0 AND (n * syy - sy * sy) > 0.0
-         |   THEN round((n * sxy - sx * sy) /
-         |     sqrt((n * sxx - sx * sx) * (n * syy - sy * sy)), 6)
-         |   ELSE NULL END AS autocorr
-         |FROM g WHERE n >= 20 ORDER BY user_id, event_type""".stripMargin,
-    "ts_cusum_changepoint" ->
-      """WITH e AS (SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS ts2,
-        |   event_id, CAST(CAST(value AS DECIMAL(18,4)) * 10000 AS BIGINT) AS vi
-        | FROM events),
-        |w AS (SELECT user_id, event_type, ts2,
-        |   row_number() OVER ord AS rn,
-        |   CAST(sum(vi) OVER (PARTITION BY user_id, event_type
-        |     ORDER BY ts2, event_id
-        |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS st,
-        |   count(*) OVER grp AS n,
-        |   CAST(sum(vi) OVER grp AS BIGINT) AS stot
-        | FROM e
-        | WINDOW ord AS (PARTITION BY user_id, event_type ORDER BY ts2, event_id),
-        |  grp AS (PARTITION BY user_id, event_type)),
-        |d AS (SELECT *, abs(n * st - rn * stot) AS dev,
-        |   row_number() OVER (PARTITION BY user_id, event_type
-        |     ORDER BY abs(n * st - rn * stot) DESC, rn) AS rk
-        | FROM w)
-        |SELECT user_id, event_type, n AS n_events, ts2 AS cp_ts,
-        | rn AS cp_index, dev AS cusum_dev
-        |FROM d WHERE rk = 1 ORDER BY user_id, event_type""".stripMargin,
-    "ts_active_users" ->
-      """WITH du AS (SELECT DISTINCT CAST(ts AS DATE) AS d, user_id FROM events),
-        | cover AS (SELECT du.d + CAST(off AS INT) AS d, off, user_id
-        |   FROM du, (SELECT unnest(generate_series(0, 6)) AS off))
-        |SELECT d, count(DISTINCT CASE WHEN off = 0 THEN user_id END) AS dau,
-        | count(DISTINCT user_id) AS wau7
-        |FROM cover GROUP BY 1
-        |HAVING count(DISTINCT CASE WHEN off = 0 THEN user_id END) > 0
-        |ORDER BY d""".stripMargin,
-    "ts_winsorize" ->
-      """WITH b AS (SELECT event_type,
-        |   percentile_cont(0.05) WITHIN GROUP (ORDER BY value) AS lo,
-        |   percentile_cont(0.95) WITHIN GROUP (ORDER BY value) AS hi
-        | FROM events GROUP BY 1)
-        |SELECT event_id, e.event_type, value,
-        | least(greatest(value, lo), hi) AS winsorized,
-        | (value < lo OR value > hi) AS clipped
-        |FROM events e JOIN b ON e.event_type = b.event_type
-        |ORDER BY event_id""".stripMargin,
-    "sessionize_assign" ->
-      """WITH e AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
-        | g AS (SELECT *, CASE WHEN lag(ts) OVER w IS NULL
-        |     OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000 THEN 1 ELSE 0 END AS new_s
-        |   FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-        |SELECT event_id, user_id, ts,
-        | CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_seq
-        |FROM g ORDER BY event_id""".stripMargin,
-    "agg_ab_ttest" ->
-      s"""WITH st AS (SELECT event_type, CAST(count(*) AS DOUBLE) AS n,
-         |   ${dsum6Sql("value")} AS sx, ${dsum6Sql("value * value")} AS sxx
-         | FROM events GROUP BY 1)
-         |SELECT a.event_type AS type_a, b.event_type AS type_b,
-         | CAST(a.n AS BIGINT) AS n_a, CAST(b.n AS BIGINT) AS n_b,
-         | round((a.sx / a.n - b.sx / b.n) / sqrt(
-         |   (a.sxx - a.sx * a.sx / a.n) / (a.n - 1.0) / a.n
-         |   + (b.sxx - b.sx * b.sx / b.n) / (b.n - 1.0) / b.n), 6) AS t_stat
-         |FROM st a CROSS JOIN st b WHERE a.event_type < b.event_type
-         |ORDER BY 1, 2""".stripMargin,
-    "agg_anova_oneway" ->
-      s"""WITH st AS (SELECT event_type, CAST(count(*) AS DOUBLE) AS n,
-         |   ${dsum6Sql("value")} AS sx, ${dsum6Sql("value * value")} AS sxx
-         | FROM events GROUP BY 1),
-         | tot AS (SELECT
-         |   CAST(sum(CAST(n AS DECIMAL(28,12))) AS DOUBLE) AS nt,
-         |   CAST(sum(CAST(sx AS DECIMAL(28,12))) AS DOUBLE) AS sxt,
-         |   count(*) AS k FROM st),
-         | ss AS (SELECT nt, k,
-         |   CAST(sum(CAST(n * ((sx / n - sxt / nt) * (sx / n - sxt / nt))
-         |     AS DECIMAL(28,12))) AS DOUBLE) AS ssb,
-         |   CAST(sum(CAST(sxx - sx * sx / n AS DECIMAL(28,12)))
-         |     AS DOUBLE) AS ssw
-         |  FROM st CROSS JOIN tot GROUP BY 1, 2)
-         |SELECT CAST(k AS BIGINT) AS n_groups, CAST(nt AS BIGINT) AS n_total,
-         | round(ssb, 6) AS ss_between, round(ssw, 6) AS ss_within,
-         | round((ssb / (k - 1.0)) / (ssw / (nt - k)), 6) AS f_stat
-         |FROM ss""".stripMargin,
-    "agg_levene_bf" ->
-      """WITH ev AS (SELECT event_type,
-        |   CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS vi
-        |  FROM events),
-        | meds AS (SELECT event_type,
-        |   CAST(2 * quantile_cont(vi, 0.5) AS BIGINT) AS med2
-        |  FROM ev GROUP BY 1),
-        | zz AS (SELECT e.event_type, abs(2 * e.vi - m.med2) AS z2
-        |  FROM ev e JOIN meds m USING (event_type)),
-        | sums AS (SELECT event_type, CAST(count(*) AS DOUBLE) AS n,
-        |   sum(CAST(z2 AS HUGEINT)) AS sz,
-        |   sum(CAST(z2 AS HUGEINT) * z2) AS szz
-        |  FROM zz GROUP BY 1),
-        | st AS (SELECT event_type, n,
-        |   (CAST(sz // 4294967296 AS DOUBLE) * 4294967296.0
-        |     + CAST(sz % 4294967296 AS DOUBLE)) / 2000000.0 AS sx,
-        |   (CAST(szz // 4294967296 AS DOUBLE) * 4294967296.0
-        |     + CAST(szz % 4294967296 AS DOUBLE)) / 4000000000000.0 AS sxx
-        |  FROM sums),
-        | tot AS (SELECT
-        |   CAST(sum(CAST(n AS DECIMAL(28,12))) AS DOUBLE) AS nt,
-        |   CAST(sum(CAST(sx AS DECIMAL(28,12))) AS DOUBLE) AS sxt,
-        |   count(*) AS k FROM st),
-        | ss AS (SELECT nt, k,
-        |   CAST(sum(CAST(n * ((sx / n - sxt / nt) * (sx / n - sxt / nt))
-        |     AS DECIMAL(28,12))) AS DOUBLE) AS ssb,
-        |   CAST(sum(CAST(sxx - sx * sx / n AS DECIMAL(28,12)))
-        |     AS DOUBLE) AS ssw
-        |  FROM st CROSS JOIN tot GROUP BY 1, 2)
-        |SELECT CAST(k AS BIGINT) AS n_groups, CAST(nt AS BIGINT) AS n_total,
-        | round((ssb / (k - 1.0)) / (ssw / (nt - k)), 6) AS w_stat
-        |FROM ss""".stripMargin,
-    "agg_mood_median_test" ->
-      """WITH med AS (SELECT quantile_cont(value, 0.5) AS gm FROM events),
-        | o AS (SELECT event_type, count(*) AS n,
-        |   sum(CASE WHEN value > gm THEN 1 ELSE 0 END) AS above,
-        |   max(gm) AS gm
-        |  FROM events CROSS JOIN med GROUP BY 1),
-        | tot AS (SELECT CAST(sum(n) AS BIGINT) AS nt,
-        |   CAST(sum(above) AS BIGINT) AS at FROM o),
-        | c AS (SELECT o.event_type, o.n, o.above, o.gm, tot.nt, tot.at,
-        |   CAST(o.n AS DOUBLE) * tot.at / tot.nt AS ea,
-        |   CAST(o.n AS DOUBLE) * (tot.nt - tot.at) / tot.nt AS eb
-        |  FROM o CROSS JOIN tot)
-        |SELECT CAST(count(*) AS BIGINT) AS n_groups,
-        | max(nt) AS n_total, max(at) AS n_above,
-        | round(max(gm), 6) AS grand_median,
-        | round(CAST(sum(CAST(
-        |   (above - ea) * (above - ea) / ea
-        |   + ((n - above) - eb) * ((n - above) - eb) / eb
-        |   AS DECIMAL(28,12))) AS DOUBLE), 6) AS chi2,
-        | CAST(count(*) - 1 AS BIGINT) AS df
-        |FROM c""".stripMargin,
-    "agg_chisq_independence" ->
-      """WITH o AS (SELECT event_type,
-        |   CAST(dayofweek(CAST(ts AS TIMESTAMP)) + 1 AS INT) AS dow,
-        |   count(*) AS o FROM events GROUP BY 1, 2),
-        | rt AS (SELECT event_type, CAST(sum(o) AS BIGINT) AS rt
-        |  FROM o GROUP BY 1),
-        | ct AS (SELECT dow, CAST(sum(o) AS BIGINT) AS ct FROM o GROUP BY 1),
-        | nt AS (SELECT CAST(sum(o) AS BIGINT) AS n FROM o),
-        | cells AS (SELECT o.event_type, o.dow, o.o, rt.rt, ct.ct, nt.n,
-        |   CAST(rt.rt AS DOUBLE) * ct.ct / n AS e
-        |  FROM o JOIN rt USING (event_type) JOIN ct USING (dow)
-        |   CROSS JOIN nt),
-        | agg AS (SELECT count(*) AS n_cells,
-        |   (count(DISTINCT event_type) - 1) * (count(DISTINCT dow) - 1)
-        |     AS dof,
-        |   least(count(DISTINCT event_type) - 1, count(DISTINCT dow) - 1)
-        |     AS mindim,
-        |   max(n) AS n_total,
-        |   CAST(sum(CAST(
-        |     ((CAST(o AS DOUBLE) - e) * (CAST(o AS DOUBLE) - e)) / e
-        |     AS DECIMAL(28,12))) AS DOUBLE) AS chi2
-        |  FROM cells)
-        |SELECT n_cells, dof, round(chi2, 6) AS chi2,
-        | round(sqrt(chi2 / (CAST(n_total AS DOUBLE) * mindim)), 6)
-        |   AS cramers_v
-        |FROM agg""".stripMargin,
-    "agg_group_sequential_obf" ->
-      """WITH base AS (SELECT value,
-        |   CASE WHEN substr(md5('srm42:' || CAST(user_id AS VARCHAR)), 1, 1) < '8'
-        |     THEN 'A' ELSE 'B' END AS variant,
-        |   ((CAST(ts AS DATE) - DATE '2024-01-01') // 7) + 1 AS look
-        |  FROM events),
-        | pl AS (SELECT variant, look, count(*) AS n,
-        |   sum(CAST(value AS DECIMAL(18,6))) AS sx,
-        |   sum(CAST(value * value AS DECIMAL(18,6))) AS sxx
-        |  FROM base WHERE look <= 4 GROUP BY 1, 2),
-        | cum AS (SELECT variant, look,
-        |   CAST(sum(n) OVER w AS DOUBLE) AS cn,
-        |   CAST(sum(sx) OVER w AS DOUBLE) AS csx,
-        |   CAST(sum(sxx) OVER w AS DOUBLE) AS csxx
-        |  FROM pl WINDOW w AS (PARTITION BY variant ORDER BY look
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        | j AS (SELECT a.look, a.cn AS na, a.csx AS sxa, a.csxx AS sxxa,
-        |   b.cn AS nb, b.csx AS sxb, b.csxx AS sxxb
-        |  FROM cum a JOIN cum b ON a.look = b.look
-        |  WHERE a.variant = 'A' AND b.variant = 'B'),
-        | zz AS (SELECT look, na, nb,
-        |   round((sxa / na - sxb / nb)
-        |     / sqrt(((sxxa - sxa * sxa / na) / (na - 1.0)) / na
-        |       + ((sxxb - sxb * sxb / nb) / (nb - 1.0)) / nb), 6) AS z,
-        |   round(2.024 * sqrt(4.0 / look), 6) AS boundary
-        |  FROM j)
-        |SELECT CAST(look AS INT) AS look,
-        | CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
-        | z, boundary, (abs(z) > boundary) AS crossed
-        |FROM zz ORDER BY look""".stripMargin,
-    "agg_effect_size" ->
-      s"""WITH st AS (SELECT event_type, CAST(count(*) AS DOUBLE) AS n,
-         |   ${dsum6Sql("value")} AS sx, ${dsum6Sql("value * value")} AS sxx
-         | FROM events GROUP BY 1),
-         | p AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
-         |   (a.sx / a.n - b.sx / b.n)
-         |     / sqrt(((a.sxx - a.sx * a.sx / a.n)
-         |       + (b.sxx - b.sx * b.sx / b.n)) / (a.n + b.n - 2.0)) AS d,
-         |   1.0 - 3.0 / (4.0 * (a.n + b.n - 2.0) - 1.0) AS j
-         |  FROM st a CROSS JOIN st b WHERE a.event_type < b.event_type)
-         |SELECT type_a, type_b, round(d, 6) AS cohens_d,
-         | round(d * j, 6) AS hedges_g, round(abs(d), 6) AS abs_d
-         |FROM p ORDER BY type_a, type_b""".stripMargin,
-    "agg_tost_equivalence" ->
-      s"""WITH st AS (SELECT event_type, CAST(count(*) AS DOUBLE) AS n,
-         |   ${dsum6Sql("value")} AS sx, ${dsum6Sql("value * value")} AS sxx
-         | FROM events GROUP BY 1),
-         | p AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
-         |   a.sx / a.n - b.sx / b.n AS diff,
-         |   0.05 * ((a.sx / a.n + b.sx / b.n) / 2.0) AS margin,
-         |   sqrt((a.sxx - a.sx * a.sx / a.n) / (a.n - 1.0) / a.n
-         |     + (b.sxx - b.sx * b.sx / b.n) / (b.n - 1.0) / b.n) AS se
-         |  FROM st a CROSS JOIN st b WHERE a.event_type < b.event_type),
-         | tt AS (SELECT type_a, type_b, round(diff, 6) AS diff_r,
-         |   round(margin, 6) AS margin_r,
-         |   round((diff + margin) / se, 6) AS t_lower,
-         |   round((diff - margin) / se, 6) AS t_upper
-         |  FROM p)
-         |SELECT type_a, type_b, diff_r AS diff, margin_r AS margin,
-         | t_lower, t_upper,
-         | (t_lower > 1.645 AND t_upper < -1.645) AS is_equivalent
-         |FROM tt ORDER BY type_a, type_b""".stripMargin,
-    "agg_rank_biserial" ->
-      """WITH vc AS (SELECT event_type, value, count(*) AS cnt
-        |  FROM events GROUP BY 1, 2),
-        | vals AS (SELECT DISTINCT value FROM vc),
-        | types AS (SELECT DISTINCT event_type FROM vc),
-        | dense AS (SELECT t.event_type, v.value, COALESCE(cnt, 0) AS cnt
-        |  FROM vals v CROSS JOIN types t
-        |  LEFT JOIN vc ON vc.event_type = t.event_type AND vc.value = v.value),
-        | cum AS (SELECT event_type, value, cnt,
-        |   sum(cnt) OVER (PARTITION BY event_type ORDER BY value
-        |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |  FROM dense),
-        | pair AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
-        |   sum(a.cnt) AS n_a, sum(b.cnt) AS n_b,
-        |   sum(a.cnt * (b.cum - b.cnt) * 2 + a.cnt * b.cnt) AS u2
-        |  FROM cum a JOIN cum b ON a.value = b.value
-        |   AND a.event_type < b.event_type
-        |  GROUP BY 1, 2),
-        | r AS (SELECT type_a, type_b,
-        |   CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-        |   round(CAST(u2 AS DOUBLE) / (CAST(n_a AS DOUBLE) * n_b)
-        |     - 1.0, 6) AS r_rb
-        |  FROM pair)
-        |SELECT type_a, type_b, n_a, n_b, r_rb,
-        | CASE WHEN r_rb > 0 THEN type_a WHEN r_rb < 0 THEN type_b
-        |   ELSE 'tie' END AS favored
-        |FROM r ORDER BY type_a, type_b""".stripMargin,
-    "agg_yuen_trimmed_ttest" ->
-      """WITH vc AS (SELECT event_type, value, count(*) AS cnt
-        |  FROM events GROUP BY 1, 2),
-        | vals AS (SELECT DISTINCT value FROM vc),
-        | types AS (SELECT DISTINCT event_type FROM vc),
-        | dense AS (SELECT t.event_type, v.value, COALESCE(cnt, 0) AS cnt
-        |  FROM vals v CROSS JOIN types t
-        |  LEFT JOIN vc ON vc.event_type = t.event_type AND vc.value = v.value),
-        | cum AS (SELECT event_type, value, cnt,
-        |   sum(cnt) OVER (PARTITION BY event_type ORDER BY value
-        |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |  FROM dense),
-        | tot AS (SELECT event_type, CAST(sum(cnt) AS BIGINT) AS n
-        |  FROM vc GROUP BY 1),
-        | k AS (SELECT c.event_type, c.value, c.cnt, c.cum, t.n,
-        |   t.n // 10 AS g FROM cum c JOIN tot t USING (event_type)),
-        | st0 AS (SELECT event_type, n, g,
-        |   sum(CAST(value AS DECIMAL(19,6)) * CAST(greatest(0,
-        |     least(cum, n - g) - greatest(cum - cnt, g)) AS DECIMAL(12,0)))
-        |     AS tsum,
-        |   sum(CAST(CAST(value AS DECIMAL(19,6)) * CAST(value AS DECIMAL(12,6))
-        |       AS DECIMAL(26,12))
-        |     * CAST(greatest(0, least(cum, n - g) - greatest(cum - cnt, g))
-        |       AS DECIMAL(12,0))) AS tss,
-        |   min(CASE WHEN cum >= g + 1
-        |     THEN CAST(value AS DECIMAL(12,6)) END) AS v_lo,
-        |   min(CASE WHEN cum >= n - g
-        |     THEN CAST(value AS DECIMAL(12,6)) END) AS v_hi
-        |  FROM k GROUP BY 1, 2, 3),
-        | st AS (SELECT event_type, n, n - 2 * g AS h,
-        |   CAST(tsum + CAST(g AS DECIMAL(19,0)) * (v_lo + v_hi)
-        |     AS DOUBLE) AS wsum,
-        |   CAST(tss + CAST(g AS DECIMAL(10,0))
-        |     * CAST(CAST(v_lo AS DECIMAL(19,6)) * v_lo
-        |         + CAST(v_hi AS DECIMAL(19,6)) * v_hi AS DECIMAL(28,12))
-        |     AS DOUBLE) AS wss,
-        |   CAST(tsum AS DOUBLE) AS tsum
-        |  FROM st0),
-        | p AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
-        |   CAST(a.h AS BIGINT) AS h_a, CAST(b.h AS BIGINT) AS h_b,
-        |   CAST(a.n AS DOUBLE) AS na, CAST(b.n AS DOUBLE) AS nb,
-        |   CAST(a.h AS DOUBLE) AS ha, CAST(b.h AS DOUBLE) AS hb,
-        |   a.wsum AS wsuma, a.wss AS wssa, a.tsum AS tsuma,
-        |   b.wsum AS wsumb, b.wss AS wssb, b.tsum AS tsumb
-        |  FROM st a JOIN st b ON a.event_type < b.event_type),
-        | q AS (SELECT *,
-        |   swa * (na - 1.0) / (ha * (ha - 1.0)) AS da,
-        |   swb * (nb - 1.0) / (hb * (hb - 1.0)) AS db
-        |  FROM (SELECT *,
-        |    (wssa - wsuma * wsuma / na) / (na - 1.0) AS swa,
-        |    (wssb - wsumb * wsumb / nb) / (nb - 1.0) AS swb FROM p))
-        |SELECT type_a, type_b, h_a, h_b,
-        | round(tsuma / ha, 6) AS trimmed_mean_a,
-        | round(tsumb / hb, 6) AS trimmed_mean_b,
-        | round((tsuma / ha - tsumb / hb) / sqrt(da + db), 6) AS t_yuen,
-        | round(1.0 / ((da / (da + db)) * (da / (da + db)) / (ha - 1.0)
-        |   + (1.0 - da / (da + db)) * (1.0 - da / (da + db)) / (hb - 1.0)),
-        |   6) AS df
-        |FROM q ORDER BY type_a, type_b""".stripMargin,
-    "agg_mann_whitney" ->
-      """WITH vc AS (SELECT event_type, value, count(*) AS cnt
-        |  FROM events GROUP BY 1, 2),
-        | vals AS (SELECT DISTINCT value FROM vc),
-        | types AS (SELECT DISTINCT event_type FROM vc),
-        | dense AS (SELECT t.event_type, v.value, COALESCE(cnt, 0) AS cnt
-        |  FROM vals v CROSS JOIN types t
-        |  LEFT JOIN vc ON vc.event_type = t.event_type AND vc.value = v.value),
-        | cum AS (SELECT event_type, value, cnt,
-        |   sum(cnt) OVER (PARTITION BY event_type ORDER BY value
-        |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |  FROM dense),
-        | pair AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
-        |   sum(a.cnt) AS n_a, sum(b.cnt) AS n_b,
-        |   sum(a.cnt * (b.cum - b.cnt) * 2 + a.cnt * b.cnt) AS u2,
-        |   sum((a.cnt + b.cnt) * (a.cnt + b.cnt) * (a.cnt + b.cnt)
-        |     - (a.cnt + b.cnt)) AS t3t
-        |  FROM cum a JOIN cum b ON a.value = b.value
-        |   AND a.event_type < b.event_type
-        |  GROUP BY 1, 2)
-        |SELECT type_a, type_b,
-        | CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-        | u2 / 2.0 AS u_a,
-        | round((u2 / 2.0 - CAST(n_a AS DOUBLE) * n_b / 2.0)
-        |   / sqrt(CAST(n_a AS DOUBLE) * n_b / 12.0
-        |     * ((n_a + n_b + 1.0)
-        |       - CAST(t3t AS DOUBLE) / ((n_a + n_b) * (n_a + n_b - 1.0)))), 6)
-        |   AS z
-        |FROM pair ORDER BY type_a, type_b""".stripMargin,
-    "agg_ks_test" ->
-      """WITH vc AS (SELECT event_type, value, count(*) AS cnt
-        |  FROM events GROUP BY 1, 2),
-        | vals AS (SELECT DISTINCT value FROM vc),
-        | types AS (SELECT DISTINCT event_type FROM vc),
-        | tot AS (SELECT event_type, CAST(sum(cnt) AS BIGINT) AS n
-        |  FROM vc GROUP BY 1),
-        | dense AS (SELECT t.event_type, v.value, COALESCE(cnt, 0) AS cnt
-        |  FROM vals v CROSS JOIN types t
-        |  LEFT JOIN vc ON vc.event_type = t.event_type AND vc.value = v.value),
-        | cum AS (SELECT d.event_type, d.value,
-        |   CAST(sum(cnt) OVER (PARTITION BY d.event_type ORDER BY value
-        |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |     AS cum, n
-        |  FROM dense d JOIN tot USING (event_type)),
-        | pair AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
-        |   a.n AS n_a, b.n AS n_b,
-        |   max(abs(a.cum * b.n - b.cum * a.n)) AS maxdiff
-        |  FROM cum a JOIN cum b ON a.value = b.value
-        |   AND a.event_type < b.event_type
-        |  GROUP BY 1, 2, 3, 4)
-        |SELECT type_a, type_b, n_a, n_b,
-        | round(CAST(maxdiff AS DOUBLE)
-        |   / (CAST(n_a AS DOUBLE) * n_b), 6) AS d_stat,
-        | round(1.358 * sqrt((CAST(n_a AS DOUBLE) + n_b)
-        |   / (CAST(n_a AS DOUBLE) * n_b)), 6) AS d_crit,
-        | round(CAST(maxdiff AS DOUBLE) / (CAST(n_a AS DOUBLE) * n_b), 6)
-        |   > round(1.358 * sqrt((CAST(n_a AS DOUBLE) + n_b)
-        |     / (CAST(n_a AS DOUBLE) * n_b)), 6) AS is_significant
-        |FROM pair ORDER BY type_a, type_b""".stripMargin,
-    "agg_kruskal_wallis" ->
-      """WITH vc AS (SELECT event_type, value, count(*) AS cnt
-        |  FROM events GROUP BY 1, 2),
-        | vals AS (SELECT DISTINCT value FROM vc),
-        | types AS (SELECT DISTINCT event_type FROM vc),
-        | dense AS (SELECT t.event_type, v.value, COALESCE(cnt, 0) AS cnt
-        |  FROM vals v CROSS JOIN types t
-        |  LEFT JOIN vc ON vc.event_type = t.event_type AND vc.value = v.value),
-        | cum AS (SELECT event_type, value, cnt,
-        |   sum(cnt) OVER (PARTITION BY event_type ORDER BY value
-        |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |  FROM dense),
-        | byval AS (SELECT value, sum(cnt) AS cntall, sum(cum) AS cumall
-        |  FROM cum GROUP BY 1),
-        | grp AS (SELECT d.event_type, sum(d.cnt) AS n_g,
-        |   sum(d.cnt * ((b.cumall - b.cntall) * 2 + b.cntall + 1)) AS u2r
-        |  FROM dense d JOIN byval b USING (value) GROUP BY 1),
-        | tot AS (SELECT sum(cntall) AS n,
-        |   sum(cntall * cntall * cntall - cntall) AS t3t FROM byval),
-        | q AS (SELECT n, t3t, count(*) AS n_groups,
-        |   CAST(sum(CAST((u2r / 2.0) * (u2r / 2.0) / n_g
-        |     / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) + 1.0))
-        |     AS DECIMAL(28,12))) AS DOUBLE) AS sq
-        |  FROM grp CROSS JOIN tot GROUP BY 1, 2),
-        | h AS (SELECT CAST(n_groups AS BIGINT) AS n_groups,
-        |   CAST(n AS BIGINT) AS n_total,
-        |   CAST(n_groups AS BIGINT) - 1 AS df,
-        |   12.0 * sq - 3.0 * (CAST(n AS DOUBLE) + 1.0) AS h_raw,
-        |   1.0 - CAST(t3t AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
-        |     * CAST(n AS DOUBLE) - CAST(n AS DOUBLE)) AS c
-        |  FROM q)
-        |SELECT n_groups, n_total, df, round(h_raw, 6) AS h_stat,
-        | round(h_raw / c, 6) AS h_tied
-        |FROM h""".stripMargin,
-    "agg_delta_method_ratio" ->
-      """WITH per AS (SELECT user_id, CAST(count(*) AS DOUBLE) AS x,
-        |   CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS y,
-        |   CASE WHEN substr(md5('srm42:' || CAST(user_id AS VARCHAR)), 1, 1) < '8'
-        |     THEN 'A' ELSE 'B' END AS variant
-        |  FROM events GROUP BY 1),
-        | st AS (SELECT variant, CAST(count(*) AS DOUBLE) AS n,
-        |   CAST(sum(CAST(x AS DECIMAL(28,12))) AS DOUBLE) AS sx,
-        |   CAST(sum(CAST(y AS DECIMAL(28,12))) AS DOUBLE) AS sy,
-        |   CAST(sum(CAST(x * y AS DECIMAL(28,12))) AS DOUBLE) AS sxy,
-        |   CAST(sum(CAST(x * x AS DECIMAL(28,12))) AS DOUBLE) AS sxx,
-        |   CAST(sum(CAST(y * y AS DECIMAL(28,12))) AS DOUBLE) AS syy
-        |  FROM per GROUP BY 1),
-        | d AS (SELECT variant, n, sy / sx AS r, sx / n AS xbar,
-        |   (syy - sy * sy / n) / (n - 1.0) AS vy,
-        |   (sxx - sx * sx / n) / (n - 1.0) AS vx,
-        |   (sxy - sx * sy / n) / (n - 1.0) AS cxy FROM st),
-        | e AS (SELECT variant, n, r,
-        |   sqrt((vy - 2.0 * r * cxy + r * r * vx) / n) / xbar AS se FROM d)
-        |SELECT variant, CAST(n AS BIGINT) AS n_users, round(r, 6) AS ratio,
-        | round(se, 6) AS se, round(r - 1.96 * se, 6) AS ci_lo,
-        | round(r + 1.96 * se, 6) AS ci_hi
-        |FROM e ORDER BY variant""".stripMargin,
-    "agg_jackknife_ratio_var" ->
-      """WITH per AS (SELECT user_id, CAST(count(*) AS DOUBLE) AS x,
-        |   CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS y,
-        |   CASE WHEN substr(md5('srm42:' || CAST(user_id AS VARCHAR)), 1, 1) < '8'
-        |     THEN 'A' ELSE 'B' END AS variant
-        |  FROM events GROUP BY 1),
-        | tot AS (SELECT variant, CAST(count(*) AS DOUBLE) AS n,
-        |   CAST(sum(CAST(x AS DECIMAL(28,12))) AS DOUBLE) AS sx,
-        |   CAST(sum(CAST(y AS DECIMAL(28,12))) AS DOUBLE) AS sy
-        |  FROM per GROUP BY 1),
-        | ps AS (SELECT per.variant, n, sx, sy,
-        |   (sy - y) / (sx - x) AS rl FROM per JOIN tot USING (variant)),
-        | st AS (SELECT variant, max(n) AS n, max(sx) AS sx, max(sy) AS sy,
-        |   CAST(sum(CAST(rl AS DECIMAL(28,12))) AS DOUBLE) AS srl,
-        |   CAST(sum(CAST(rl * rl AS DECIMAL(28,12))) AS DOUBLE) AS srr
-        |  FROM ps GROUP BY 1),
-        | e AS (SELECT variant, n, sy / sx AS r,
-        |   sqrt((n - 1.0) / n * (srr - srl * srl / n)) AS se FROM st)
-        |SELECT variant, CAST(n AS BIGINT) AS n_users, round(r, 6) AS ratio,
-        | round(se, 6) AS se_jackknife, round(r - 1.96 * se, 6) AS ci_lo,
-        | round(r + 1.96 * se, 6) AS ci_hi
-        |FROM e ORDER BY variant""".stripMargin,
-    "agg_power_mde" ->
-      """WITH st AS (SELECT event_type, CAST(count(*) AS DOUBLE) AS n,
-        |   CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sx,
-        |   CAST(sum(CAST(value * value AS DECIMAL(18,6))) AS DOUBLE) AS sxx
-        |  FROM events GROUP BY 1),
-        | d AS (SELECT event_type, n, sx / n AS mean,
-        |   (sxx - sx * sx / n) / (n - 1.0) AS vr FROM st),
-        | e AS (SELECT event_type, n, mean, vr,
-        |   (1.96 + 0.8416) * sqrt(vr) * sqrt(2.0 / (n / 2.0)) AS mde FROM d)
-        |SELECT event_type, CAST(n AS BIGINT) AS n_obs, round(mean, 6) AS mean,
-        | round(sqrt(vr), 6) AS sd, round(mde, 6) AS mde_abs,
-        | round(mde / mean, 6) AS mde_rel,
-        | CAST(ceil(2.0 * vr * (1.96 + 0.8416) * (1.96 + 0.8416)
-        |   / ((0.01 * mean) * (0.01 * mean))) AS BIGINT) AS n_per_arm_1pct
-        |FROM e ORDER BY event_type""".stripMargin,
-    "agg_eb_shrinkage" ->
-      """WITH per AS (SELECT user_id, count(*) AS n,
-        |   CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-        |     AS BIGINT) AS x
-        |  FROM events GROUP BY 1),
-        | pm AS (SELECT user_id, n, x, (1000000 * x) // n AS p_micro
-        |  FROM per),
-        | pri AS (SELECT count(*) AS nu, sum(p_micro) AS sp FROM pm),
-        | mm AS (SELECT nu, sp // nu AS m_micro FROM pri),
-        | s2 AS (SELECT mm.nu AS nu, mm.m_micro AS m_micro,
-        |   sum((pm.p_micro - mm.m_micro) * (pm.p_micro - mm.m_micro))
-        |     AS sd2
-        |  FROM pm, mm GROUP BY 1, 2),
-        | pr AS (SELECT sd2,
-        |   CAST(m_micro AS DOUBLE) / 1000000.0 AS m,
-        |   (CAST(sd2 // 4294967296 AS DOUBLE) * 4294967296.0
-        |     + CAST(sd2 % 4294967296 AS DOUBLE))
-        |    / (CAST(nu AS DOUBLE) * 1e12) AS v
-        |  FROM s2),
-        | kk AS (SELECT sd2, m, v,
-        |   CASE WHEN sd2 > 0 THEN m * (1.0 - m) / v - 1.0 END AS k
-        |  FROM pr)
-        |SELECT pm.user_id, pm.x, pm.n,
-        | CAST(pm.p_micro AS DOUBLE) / 1000000.0 AS p_mle,
-        | CASE WHEN kk.k IS NOT NULL AND kk.k > 0
-        |      THEN (pm.x + kk.m * kk.k) / (pm.n + kk.k)
-        |      ELSE CAST(pm.p_micro AS DOUBLE) / 1000000.0 END AS p_shrunk
-        |FROM pm, kk ORDER BY pm.user_id""".stripMargin,
-    "agg_cuped_adjustment" ->
-      """WITH per AS (SELECT user_id,
-        |   CAST(sum(CASE WHEN (CAST(ts AS DATE) - DATE '2024-01-01' + 1) <= 15
-        |     THEN CAST(value AS DECIMAL(18,6)) ELSE CAST(0.0 AS DECIMAL(18,6)) END) AS DOUBLE) AS x,
-        |   CAST(sum(CASE WHEN (CAST(ts AS DATE) - DATE '2024-01-01' + 1) > 15
-        |     THEN CAST(value AS DECIMAL(18,6)) ELSE CAST(0.0 AS DECIMAL(18,6)) END) AS DOUBLE) AS y
-        | FROM events GROUP BY 1),
-        | st AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-        |   CAST(sum(CAST(x AS DECIMAL(28,12))) AS DOUBLE) AS sx,
-        |   CAST(sum(CAST(y AS DECIMAL(28,12))) AS DOUBLE) AS sy,
-        |   CAST(sum(CAST(x * y AS DECIMAL(28,12))) AS DOUBLE) AS sxy,
-        |   CAST(sum(CAST(x * x AS DECIMAL(28,12))) AS DOUBLE) AS sxx
-        | FROM per),
-        | adj AS (SELECT per.*,
-        |   (sxy - sx * sy / n) / (sxx - sx * sx / n) AS theta,
-        |   y - (sxy - sx * sy / n) / (sxx - sx * sx / n) * (x - sx / n) AS y_adj,
-        |   CASE WHEN substr(md5('srm42:' || CAST(user_id AS VARCHAR)), 1, 1) < '8'
-        |     THEN 'A' ELSE 'B' END AS variant
-        | FROM per CROSS JOIN st)
-        |SELECT variant, count(*) AS n_users,
-        | round(max(theta), 6) AS theta,
-        | round(CAST(sum(CAST(y AS DECIMAL(28,12))) AS DOUBLE) / count(*), 6) AS mean_y,
-        | round(CAST(sum(CAST(y_adj AS DECIMAL(28,12))) AS DOUBLE) / count(*), 6) AS mean_y_adj,
-        | round(1.0 -
-        |   (CAST(sum(CAST(y_adj * y_adj AS DECIMAL(28,12))) AS DOUBLE)
-        |     - CAST(sum(CAST(y_adj AS DECIMAL(28,12))) AS DOUBLE)
-        |       * CAST(sum(CAST(y_adj AS DECIMAL(28,12))) AS DOUBLE) / count(*))
-        |   / (CAST(sum(CAST(y * y AS DECIMAL(28,12))) AS DOUBLE)
-        |     - CAST(sum(CAST(y AS DECIMAL(28,12))) AS DOUBLE)
-        |       * CAST(sum(CAST(y AS DECIMAL(28,12))) AS DOUBLE) / count(*)), 6)
-        |   AS var_reduction
-        |FROM adj GROUP BY 1 ORDER BY 1""".stripMargin,
-    "ts_anomaly_iqr" ->
-      """WITH e AS (SELECT event_id, user_id, event_type, value,
-        |   CAST(ts AS TIMESTAMP) AS ts FROM events),
-        | w AS (SELECT event_id, user_id, event_type, value,
-        |   count(*) OVER fr AS cnt,
-        |   quantile_cont(value, 0.25) OVER fr AS q1,
-        |   quantile_cont(value, 0.75) OVER fr AS q3
-        |  FROM e WINDOW fr AS (PARTITION BY user_id, event_type
-        |   ORDER BY ts, event_id ROWS BETWEEN 20 PRECEDING AND 1 PRECEDING))
-        |SELECT event_id, user_id, event_type, value,
-        | round(q1, 6) AS q1, round(q3, 6) AS q3
-        |FROM w
-        |WHERE cnt >= 10 AND (value > q3 + 1.5 * (q3 - q1)
-        |  OR value < q1 - 1.5 * (q3 - q1))
-        |ORDER BY event_id""".stripMargin,
-    "ts_survival_hazard" ->
-      """WITH spans AS (SELECT user_id,
-        |   min(CAST(ts AS DATE) - DATE '2024-01-01' + 1) AS fd,
-        |   max(CAST(ts AS DATE) - DATE '2024-01-01' + 1) AS ld
-        | FROM events GROUP BY 1),
-        | risk AS (SELECT day, count(*) AS n_risk FROM (
-        |   SELECT unnest(generate_series(fd, least(ld, 25))) AS day FROM spans)
-        |  GROUP BY 1),
-        | churn AS (SELECT ld AS day, count(*) AS d_churn FROM spans
-        |  WHERE ld <= 25 GROUP BY 1),
-        | j AS (SELECT risk.day, n_risk, COALESCE(d_churn, 0) AS d_churn,
-        |   CAST(COALESCE(d_churn, 0) AS DOUBLE) / n_risk AS hazard
-        |  FROM risk LEFT JOIN churn USING (day))
-        |SELECT CAST(day AS INT) AS day, CAST(n_risk AS BIGINT) AS n_risk,
-        | CAST(d_churn AS BIGINT) AS d_churn,
-        | round(hazard, 6) AS hazard,
-        | round(CAST(sum(CAST(hazard AS DECIMAL(28,12))) OVER (ORDER BY day
-        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE), 6)
-        |   AS cum_hazard
-        |FROM j ORDER BY day""".stripMargin,
-    "ts_changepoint_cusum" ->
-      """WITH hourly AS (SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
-        |   CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS x
-        | FROM events GROUP BY 1),
-        | ref AS (SELECT round(sx / n, 6) AS mu0,
-        |   round(sqrt((sxx - sx * sx / n) / n) / 2.0, 6) AS k
-        |  FROM (SELECT CAST(count(*) AS DOUBLE) AS n,
-        |    CAST(sum(CAST(x AS DECIMAL(28,12))) AS DOUBLE) AS sx,
-        |    CAST(sum(CAST(x * x AS DECIMAL(28,12))) AS DOUBLE) AS sxx
-        |   FROM hourly WHERE h < TIMESTAMP '2024-01-08 00:00:00')),
-        | c AS (SELECT h, x, k,
-        |   sum(CAST(x AS DECIMAL(28,12)) - CAST(mu0 AS DECIMAL(28,12))
-        |       - CAST(k AS DECIMAL(28,12)))
-        |     OVER (ORDER BY h ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |     AS cc
-        |  FROM hourly CROSS JOIN ref),
-        | s AS (SELECT h, x, k,
-        |   cc - least(min(cc) OVER (ORDER BY h
-        |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-        |     CAST(0 AS DECIMAL(28,12))) AS s_plus
-        |  FROM c)
-        |SELECT h, x, round(CAST(s_plus AS DOUBLE), 6) AS s_plus,
-        | round(CAST(s_plus AS DOUBLE), 6) > k * 4 AS is_alarm
-        |FROM s ORDER BY h""".stripMargin,
-    "ts_psi_drift" ->
-      """WITH b AS (SELECT CAST(least(floor(value / 25.0), 19.0) AS BIGINT) AS bucket,
-        |   (CAST(ts AS DATE) - DATE '2024-01-01' + 1) <= 7 AS is_ref
-        | FROM events),
-        | h AS (SELECT bucket,
-        |   CAST(sum(CASE WHEN is_ref THEN 1 ELSE 0 END) AS BIGINT) AS n_ref,
-        |   CAST(sum(CASE WHEN NOT is_ref THEN 1 ELSE 0 END) AS BIGINT) AS n_cur
-        |  FROM b GROUP BY 1),
-        | t AS (SELECT CAST(sum(n_ref) AS BIGINT) AS tr,
-        |   CAST(sum(n_cur) AS BIGINT) AS tc, count(*) AS nb FROM h),
-        | per AS (SELECT bucket, n_ref, n_cur,
-        |   ((n_ref + 0.5) / (tr + 0.5 * nb) - (n_cur + 0.5) / (tc + 0.5 * nb))
-        |     * round(ln(((n_ref + 0.5) / (tr + 0.5 * nb))
-        |       / ((n_cur + 0.5) / (tc + 0.5 * nb))), 4) AS contrib
-        |  FROM h CROSS JOIN t)
-        |SELECT bucket, n_ref, n_cur, round(contrib, 6) AS psi_contrib FROM per
-        |UNION ALL
-        |SELECT -1, CAST(sum(n_ref) AS BIGINT), CAST(sum(n_cur) AS BIGINT),
-        | round(CAST(sum(CAST(contrib AS DECIMAL(28,12))) AS DOUBLE), 6)
-        |FROM per
-        |ORDER BY bucket""".stripMargin,
-    "ts_backtest_snaive" ->
-      """WITH hourly AS (SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
-        |   CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
-        | FROM events GROUP BY 1),
-        | lg AS (SELECT h, v,
-        |   lag(v, 168) OVER (ORDER BY h) AS v168,
-        |   lag(v, 24) OVER (ORDER BY h) AS v24
-        | FROM hourly)
-        |SELECT count(*) AS n_hours,
-        | round(CAST(sum(CAST(abs(v - v168) AS DECIMAL(28,12))) AS DOUBLE)
-        |   / count(*), 6) AS mae_snaive_168,
-        | round(CAST(sum(CAST(abs(v - v24) AS DECIMAL(28,12))) AS DOUBLE)
-        |   / count(*), 6) AS mae_snaive_24
-        |FROM lg WHERE v168 IS NOT NULL AND v24 IS NOT NULL""".stripMargin,
-    "agg_bootstrap_median_ci" ->
-      """WITH ev AS (SELECT event_type, event_id, value FROM events),
-        | hx AS (SELECT ev.*, c,
-        |     md5('boot:' || CAST(c AS VARCHAR) || ':' || CAST(event_id AS VARCHAR)) AS h
-        |   FROM ev CROSS JOIN (SELECT CAST(unnest(generate_series(0, 4)) AS INT) AS c)),
-        | reps AS (SELECT CAST(unnest(generate_series(1, 20)) AS INT) AS rep),
-        | x AS (SELECT event_type, event_id, value, rep,
-        |     substr(h, ((rep - 1) % 4) * 8 + 1, 8) AS u8
-        |   FROM hx JOIN reps ON (rep - 1) // 4 = c),
-        | uw AS (SELECT event_type, event_id, value, rep,
-        |     ((CAST(strpos('0123456789abcdef', substr(u8, 1, 1)) AS BIGINT) - 1) * 268435456
-        |   + (CAST(strpos('0123456789abcdef', substr(u8, 2, 1)) AS BIGINT) - 1) * 16777216
-        |   + (CAST(strpos('0123456789abcdef', substr(u8, 3, 1)) AS BIGINT) - 1) * 1048576
-        |   + (CAST(strpos('0123456789abcdef', substr(u8, 4, 1)) AS BIGINT) - 1) * 65536
-        |   + (CAST(strpos('0123456789abcdef', substr(u8, 5, 1)) AS BIGINT) - 1) * 4096
-        |   + (CAST(strpos('0123456789abcdef', substr(u8, 6, 1)) AS BIGINT) - 1) * 256
-        |   + (CAST(strpos('0123456789abcdef', substr(u8, 7, 1)) AS BIGINT) - 1) * 16
-        |   + (CAST(strpos('0123456789abcdef', substr(u8, 8, 1)) AS BIGINT) - 1)
-        |     + 0.5) / 4294967296.0 AS u
-        |   FROM x),
-        | wd AS (SELECT event_type, event_id, value, rep,
-        |     CASE WHEN u < 0.36787944117144233 THEN 0
-        |          WHEN u < 0.7357588823428847 THEN 1
-        |          WHEN u < 0.9196986029286058 THEN 2
-        |          WHEN u < 0.9810118431238462 THEN 3
-        |          WHEN u < 0.9963401531726563 THEN 4
-        |          WHEN u < 0.9994058151824183 THEN 5
-        |          ELSE 6 END AS w
-        |   FROM uw),
-        | wf AS (SELECT * FROM wd WHERE w > 0),
-        | cum AS (SELECT event_type, rep, value,
-        |     CAST(sum(w) OVER (PARTITION BY event_type, rep
-        |       ORDER BY value, event_id
-        |       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cw,
-        |     CAST(sum(w) OVER (PARTITION BY event_type, rep) AS BIGINT) AS wtot
-        |   FROM wf),
-        | med AS (SELECT event_type, rep, min(value) AS med
-        |   FROM cum WHERE cw * 2 >= wtot GROUP BY 1, 2),
-        | ci AS (SELECT event_type,
-        |     round(quantile_cont(med, 0.025), 6) AS ci_lo,
-        |     round(quantile_cont(med, 0.975), 6) AS ci_hi
-        |   FROM med GROUP BY 1),
-        | pt AS (SELECT event_type,
-        |     round(quantile_cont(value, 0.5), 6) AS median_value
-        |   FROM ev GROUP BY 1)
-        |SELECT pt.event_type, median_value, ci_lo, ci_hi
-        |FROM pt JOIN ci USING (event_type) ORDER BY event_type""".stripMargin,
-    "agg_conversion_wilson_ci" ->
-      """WITH d AS (SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day, user_id,
-        |   event_type = 'purchase' AS conv FROM events),
-        | a AS (SELECT day, count(DISTINCT user_id) AS n,
-        |     count(DISTINCT CASE WHEN conv THEN user_id END) AS k
-        |   FROM d GROUP BY 1),
-        | w AS (SELECT day, n, k,
-        |     CAST(k AS DOUBLE) / n AS p,
-        |     1.959964 * 1.959964 AS z2,
-        |     CAST(n AS DOUBLE) AS nd
-        |   FROM a)
-        |SELECT day, n, k, round(p, 6) AS rate,
-        | round(((p + z2 / (2.0 * nd)) / (1.0 + z2 / nd))
-        |   - (1.959964 * sqrt(p * (1.0 - p) / nd + z2 / (4.0 * nd * nd))
-        |      / (1.0 + z2 / nd)), 6) AS ci_lo,
-        | round(((p + z2 / (2.0 * nd)) / (1.0 + z2 / nd))
-        |   + (1.959964 * sqrt(p * (1.0 - p) / nd + z2 / (4.0 * nd * nd))
-        |      / (1.0 + z2 / nd)), 6) AS ci_hi
-        |FROM w ORDER BY day""".stripMargin,
-    "agg_srm_chisq" ->
-      """WITH v AS (SELECT event_type,
-        |   CASE WHEN substr(md5('srm42:' || CAST(user_id AS VARCHAR)), 1, 1) < '8'
-        |     THEN 'A' ELSE 'B' END AS variant
-        | FROM events),
-        | c AS (SELECT event_type,
-        |   CAST(sum(CASE WHEN variant = 'A' THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-        |   CAST(sum(CASE WHEN variant = 'B' THEN 1 ELSE 0 END) AS BIGINT) AS n_b
-        | FROM v GROUP BY 1),
-        | x AS (SELECT event_type, n_a, n_b, (n_a + n_b) / 2.0 AS e FROM c)
-        |SELECT event_type, n_a, n_b,
-        | round((n_a - e) * (n_a - e) / e + (n_b - e) * (n_b - e) / e, 6) AS chisq,
-        | (round((n_a - e) * (n_a - e) / e + (n_b - e) * (n_b - e) / e, 6)
-        |   > 3.841459) AS srm_flag
-        |FROM x ORDER BY event_type""".stripMargin,
-    "ts_out_of_order_stats" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us
-        |  FROM events),
-        | l AS (SELECT user_id, event_id,
-        |     max(us) OVER (PARTITION BY user_id ORDER BY event_id) - us AS late_us
-        |   FROM e),
-        | b AS (SELECT CASE WHEN late_us = 0 THEN 'a_on_time'
-        |     WHEN late_us <= 60000000 THEN 'b_within_1m'
-        |     WHEN late_us <= 600000000 THEN 'c_within_10m'
-        |     WHEN late_us <= 3600000000 THEN 'd_within_1h'
-        |     ELSE 'e_over_1h' END AS bucket, late_us FROM l)
-        |SELECT bucket, count(*) AS n_events, max(late_us) AS max_late_us
-        |FROM b GROUP BY 1 ORDER BY 1""".stripMargin,
-    "ts_throttle" ->
-      """WITH e AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
-        | r AS (SELECT event_id, user_id, date_trunc('hour', ts) AS w_start, ts,
-        |     CAST(row_number() OVER (PARTITION BY user_id, date_trunc('hour', ts)
-        |       ORDER BY ts, event_id) AS BIGINT) AS rk
-        |   FROM e)
-        |SELECT event_id, user_id, w_start, ts, rk
-        |FROM r WHERE rk <= 3 ORDER BY event_id""".stripMargin,
-    "agg_mad" ->
-      """WITH med AS (SELECT l_returnflag,
-        |   percentile_cont(0.5) WITHIN GROUP (ORDER BY l_quantity) AS med
-        | FROM lineitem GROUP BY 1)
-        |SELECT l.l_returnflag, round(max(med), 4) AS median_qty,
-        | round(percentile_cont(0.5) WITHIN GROUP
-        |   (ORDER BY abs(l.l_quantity - med)), 4) AS mad_qty
-        |FROM lineitem l JOIN med ON l.l_returnflag = med.l_returnflag
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "funnel_steps" ->
-      """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_type FROM events),
-        | t1 AS (SELECT user_id, min(ts) AS t1 FROM e
-        |   WHERE event_type = 'view' GROUP BY 1),
-        | t2 AS (SELECT e.user_id, min(t1.t1) AS t1, min(e.ts) AS t2
-        |   FROM e JOIN t1 USING (user_id)
-        |   WHERE event_type = 'click' AND e.ts > t1.t1 GROUP BY 1),
-        | t3 AS (SELECT e.user_id, min(t2.t1) AS t1, min(e.ts) AS t3
-        |   FROM e JOIN t2 USING (user_id)
-        |   WHERE event_type = 'purchase' AND e.ts > t2.t2 GROUP BY 1)
-        |SELECT (SELECT count(*) FROM t1) AS n_view,
-        | (SELECT count(*) FROM t2) AS n_click_after_view,
-        | (SELECT count(*) FROM t3) AS n_purchase_after_click,
-        | (SELECT round(sum(epoch_us(t3) - epoch_us(t1)) / count(*) / 1000000.0, 6)
-        |  FROM t3) AS avg_view_to_purchase_s""".stripMargin,
-    "window_ohlc" ->
-      """SELECT user_id, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS w_start,
-        | arg_min(value, ts) AS open_value, max(value) AS high_value,
-        | min(value) AS low_value, arg_max(value, ts) AS close_value,
-        | count(*) AS n_events
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "ts_seasonal_decompose" ->
-      """WITH hourly AS (
-        |  SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hour_ts,
-        |    round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 6) AS actual
-        |  FROM events GROUP BY 1),
-        | h2 AS (SELECT hour_ts, CAST(dayofweek(hour_ts) + 1 AS INT) AS dow,
-        |    CAST(hour(hour_ts) AS INT) AS hr, actual FROM hourly),
-        | prof AS (SELECT dow, hr,
-        |    round(CAST(sum(CAST(actual AS DECIMAL(18,6))) AS DOUBLE) / count(*), 6)
-        |      AS expected
-        |  FROM h2 GROUP BY 1, 2)
-        |SELECT h2.hour_ts, h2.dow, h2.hr, h2.actual, prof.expected,
-        | round(h2.actual - prof.expected, 6) AS residual
-        |FROM h2 JOIN prof USING (dow, hr) ORDER BY hour_ts""".stripMargin,
-    "ts_mann_kendall" ->
-      """WITH hourly AS (
-        |  SELECT CAST(epoch_us(date_trunc('hour', CAST(ts AS TIMESTAMP)))
-        |      AS BIGINT) // 3600000000 AS x,
-        |    round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 6) AS y
-        |  FROM events GROUP BY 1),
-        | sp AS (SELECT CAST(sum(CAST(sign(b.y - a.y) AS BIGINT)) AS BIGINT)
-        |    AS s
-        |  FROM hourly a JOIN hourly b ON a.x < b.x),
-        | ties AS (SELECT CAST(count(*) AS BIGINT) AS n_distinct,
-        |   CAST(sum(t) AS BIGINT) AS n,
-        |   CAST(sum(t * (t - 1) * (t * 2 + 5)) AS BIGINT) AS tmass
-        |  FROM (SELECT y, count(*) AS t FROM hourly GROUP BY 1)),
-        | v AS (SELECT s, n,
-        |   (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)
-        |     * (CAST(n AS DOUBLE) * 2.0 + 5.0)
-        |     - CAST(tmass AS DOUBLE)) / 18.0 AS var_s
-        |  FROM sp CROSS JOIN ties),
-        | zz AS (SELECT n, s, var_s,
-        |   CASE WHEN s > 0 THEN (CAST(s AS DOUBLE) - 1.0) / sqrt(var_s)
-        |     WHEN s < 0 THEN (CAST(s AS DOUBLE) + 1.0) / sqrt(var_s)
-        |     ELSE 0.0 END AS z
-        |  FROM v)
-        |SELECT n AS n_hours, s AS s_stat, round(var_s, 6) AS var_s,
-        | round(z, 6) AS z, (abs(round(z, 6)) > 1.96) AS is_trending
-        |FROM zz""".stripMargin,
-    "ts_theil_sen" ->
-      """WITH hourly AS (
-        |  SELECT CAST(epoch_us(date_trunc('hour', CAST(ts AS TIMESTAMP)))
-        |      AS BIGINT) // 3600000000 AS x,
-        |    round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 6) AS y
-        |  FROM events GROUP BY 1),
-        | slopes AS (SELECT (b.y - a.y) / (b.x - a.x) AS slope
-        |  FROM hourly a JOIN hourly b ON a.x < b.x),
-        | med AS (SELECT count(*) AS n_pairs,
-        |   quantile_cont(slope, 0.5) AS m_slope FROM slopes),
-        | icpt AS (SELECT max(n_pairs) AS n_pairs, max(m_slope) AS m_slope,
-        |   count(*) AS n_hours,
-        |   quantile_cont(y - m_slope * x, 0.5) AS m_icpt
-        |  FROM hourly CROSS JOIN med)
-        |SELECT CAST(n_hours AS BIGINT) AS n_hours,
-        | CAST(n_pairs AS BIGINT) AS n_pairs,
-        | round(m_slope, 9) AS slope, round(m_icpt, 6) AS intercept
-        |FROM icpt""".stripMargin,
-    "ts_lead_lag_corr" ->
-      """WITH hourly AS (SELECT event_type,
-        |   CAST(epoch_us(date_trunc('hour', CAST(ts AS TIMESTAMP))) AS BIGINT)
-        |     // 3600000000 AS hi,
-        |   round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 6) AS v
-        |  FROM events WHERE event_type IN ('click', 'purchase')
-        |  GROUP BY 1, 2),
-        | x AS (SELECT hi, v AS x FROM hourly WHERE event_type = 'click'),
-        | y AS (SELECT hi AS hiy, v AS y FROM hourly
-        |  WHERE event_type = 'purchase'),
-        | lags AS (SELECT CAST(unnest(generate_series(0, 6)) AS INT) AS lag),
-        | m AS (SELECT lag, CAST(count(*) AS DOUBLE) AS n,
-        |   CAST(sum(CAST(x AS DECIMAL(28,6))) AS DOUBLE) AS sx,
-        |   CAST(sum(CAST(y AS DECIMAL(28,6))) AS DOUBLE) AS sy,
-        |   CAST(sum(CAST(x * y AS DECIMAL(28,6))) AS DOUBLE) AS sxy,
-        |   CAST(sum(CAST(x * x AS DECIMAL(28,6))) AS DOUBLE) AS sxx,
-        |   CAST(sum(CAST(y * y AS DECIMAL(28,6))) AS DOUBLE) AS syy
-        |  FROM x CROSS JOIN lags JOIN y ON hiy = hi + lag GROUP BY 1)
-        |SELECT lag, CAST(n AS BIGINT) AS n_hours,
-        | CASE WHEN (n * sxx - sx * sx) > 0.0 AND (n * syy - sy * sy) > 0.0
-        |   THEN round((n * sxy - sx * sy)
-        |     / sqrt((n * sxx - sx * sx) * (n * syy - sy * sy)), 6)
-        |   END AS xcorr
-        |FROM m ORDER BY lag""".stripMargin,
-    "ts_seasonal_strength" ->
-      """WITH hourly AS (
-        |  SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hour_ts,
-        |    round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 6) AS actual
-        |  FROM events GROUP BY 1),
-        | h2 AS (SELECT hour_ts, CAST(dayofweek(hour_ts) + 1 AS INT) AS dow,
-        |    CAST(hour(hour_ts) AS INT) AS hr, actual FROM hourly),
-        | prof AS (SELECT dow, hr,
-        |    round(CAST(sum(CAST(actual AS DECIMAL(18,6))) AS DOUBLE) / count(*), 6)
-        |      AS expected
-        |  FROM h2 GROUP BY 1, 2),
-        | f AS (SELECT h2.actual,
-        |    round(h2.actual - prof.expected, 6) AS residual
-        |   FROM h2 JOIN prof USING (dow, hr)),
-        | st AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-        |   CAST(sum(CAST(actual AS DECIMAL(28,12))) AS DOUBLE) AS sa,
-        |   CAST(sum(CAST(actual * actual AS DECIMAL(28,12))) AS DOUBLE) AS saa,
-        |   CAST(sum(CAST(residual AS DECIMAL(28,12))) AS DOUBLE) AS sr,
-        |   CAST(sum(CAST(residual * residual AS DECIMAL(28,12))) AS DOUBLE) AS srr
-        |  FROM f),
-        | v AS (SELECT n, (saa - sa * sa / n) / (n - 1.0) AS va,
-        |   (srr - sr * sr / n) / (n - 1.0) AS vr FROM st)
-        |SELECT CAST(n AS BIGINT) AS n_hours, round(va, 6) AS var_actual,
-        | round(vr, 6) AS var_residual,
-        | round(greatest(0.0, 1.0 - vr / va), 6) AS seasonal_strength
-        |FROM v""".stripMargin,
-    "ts_dow_hour_profile" ->
-      s"""SELECT event_type,
-         | CAST(dayofweek(CAST(ts AS TIMESTAMP)) + 1 AS INT) AS dow,
-         | CAST(hour(CAST(ts AS TIMESTAMP)) AS INT) AS hr,
-         | count(*) AS n_events, ${dsum6Sql("value")} AS sum_value
-         |FROM events GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-    "ts_ewma" ->
-      """WITH e AS (SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS ts2,
-        |   event_id, CAST(CAST(value AS DECIMAL(18,4)) * 10000 AS BIGINT) AS vi
-        | FROM events),
-        |g AS (SELECT user_id, event_type, count(*) AS n_events,
-        |   list(vi ORDER BY ts2, event_id) AS vis FROM e GROUP BY 1, 2)
-        |SELECT user_id, event_type, n_events,
-        | list_reduce(vis, (acc, x) -> (acc + x) // 2) AS ewma_micro
-        |FROM g ORDER BY user_id, event_type""".stripMargin,
-    "agg_corr_matrix" ->
-      s"""WITH g AS (SELECT l_returnflag,
-         |  CAST(count(*) AS DOUBLE) AS n,
-         |  ${dsumSql("l_quantity")} AS sx, ${dsumSql("l_extendedprice")} AS sy,
-         |  ${dsum6Sql("l_discount")} AS sz,
-         |  ${dsumSql("l_quantity * l_extendedprice")} AS sxy,
-         |  ${dsum6Sql("l_quantity * l_discount")} AS sxz,
-         |  ${dsum6Sql("l_extendedprice * l_discount")} AS syz,
-         |  ${dsumSql("l_quantity * l_quantity")} AS sxx,
-         |  ${dsumSql("l_extendedprice * l_extendedprice")} AS syy,
-         |  ${dsum6Sql("l_discount * l_discount")} AS szz
-         | FROM lineitem GROUP BY 1)
-         |SELECT l_returnflag,
-         | round((n*sxy - sx*sy) / sqrt((n*sxx - sx*sx) * (n*syy - sy*sy)), 6) AS corr_qty_price,
-         | round((n*sxz - sx*sz) / sqrt((n*sxx - sx*sx) * (n*szz - sz*sz)), 6) AS corr_qty_disc,
-         | round((n*syz - sy*sz) / sqrt((n*syy - sy*sy) * (n*szz - sz*sz)), 6) AS corr_price_disc
-         |FROM g ORDER BY l_returnflag""".stripMargin,
-    "ts_anomaly_sigma" ->
-      """WITH e AS (SELECT event_id, user_id, event_type, value,
-        |   CAST(ts AS TIMESTAMP) AS ts2,
-        |   CAST(CAST(value AS DECIMAL(18,4)) * 10000 AS BIGINT) AS vi
-        | FROM events),
-        |w AS (SELECT event_id, user_id, event_type, value, vi,
-        |   count(*) OVER fr AS cnt,
-        |   CAST(sum(vi) OVER fr AS BIGINT) AS sx,
-        |   CAST(sum(vi * vi) OVER fr AS BIGINT) AS sxx
-        | FROM e
-        | WINDOW fr AS (PARTITION BY user_id, event_type ORDER BY ts2, event_id
-        |   ROWS BETWEEN 20 PRECEDING AND 1 PRECEDING))
-        |SELECT event_id, user_id, event_type, value FROM w
-        |WHERE cnt >= 10
-        | AND (vi * cnt - sx) * (vi * cnt - sx) > 9 * (cnt * sxx - sx * sx)
-        |ORDER BY event_id""".stripMargin,
-    "agg_mode" ->
-      """SELECT user_id, event_type AS mode_type, cnt FROM (
-        | SELECT user_id, event_type, count(*) AS cnt,
-        |  row_number() OVER (PARTITION BY user_id
-        |    ORDER BY count(*) DESC, event_type) AS rn
-        | FROM events GROUP BY 1, 2)
-        |WHERE rn = 1 ORDER BY user_id""".stripMargin,
-    "funnel_attribution" ->
-      """WITH e AS (
-        | SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, event_type
-        | FROM events WHERE event_type IN ('click', 'purchase')),
-        |a AS (
-        | SELECT event_id, user_id, ts, event_type,
-        |  last_value(CASE WHEN event_type = 'click' THEN ts END IGNORE NULLS)
-        |   OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        |   AS last_click_ts
-        | FROM e),
-        |b AS (
-        | SELECT *, epoch_us(ts) - epoch_us(last_click_ts) AS raw_lag,
-        |  last_click_ts IS NOT NULL AND
-        |   epoch_us(ts) - epoch_us(last_click_ts) <= 604800000000 AS attributed
-        | FROM a WHERE event_type = 'purchase')
-        |SELECT event_id, user_id, ts AS purchase_ts,
-        | CASE WHEN attributed THEN last_click_ts END AS click_ts, attributed,
-        | CASE WHEN attributed THEN raw_lag END AS lag_us
-        |FROM b ORDER BY event_id""".stripMargin,
-    "cohort_ltv" ->
-      s"""WITH ev AS (
-         | SELECT user_id, CAST(ts AS TIMESTAMP) AS ts2, event_type, value,
-         |  min(CAST(ts AS DATE)) OVER (PARTITION BY user_id) AS first_d
-         | FROM events),
-         |tri AS (
-         | SELECT CAST(date_trunc('week', first_d) AS DATE) AS cohort_week,
-         |  CAST(floor(datediff('day', first_d, CAST(ts2 AS DATE)) / 7) AS INT)
-         |    AS week_offset,
-         |  ${dsum6Sql("value")} AS week_value
-         | FROM ev WHERE event_type = 'purchase' GROUP BY 1, 2)
-         |SELECT cohort_week, week_offset, week_value,
-         | CAST(sum(CAST(week_value AS DECIMAL(18,6))) OVER (
-         |   PARTITION BY cohort_week ORDER BY week_offset
-         |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
-         |  AS cum_value
-         |FROM tri ORDER BY cohort_week, week_offset""".stripMargin,
-    "cohort_retention" ->
-      """WITH ev AS (
-        | SELECT user_id, CAST(ts AS DATE) AS d,
-        |  min(CAST(ts AS DATE)) OVER (PARTITION BY user_id) AS first_d
-        | FROM events)
-        |SELECT CAST(date_trunc('week', first_d) AS DATE) AS cohort_week,
-        | CAST(floor(datediff('day', first_d, d) / 7) AS INT) AS week_offset,
-        | count(DISTINCT user_id) AS n_active
-        |FROM ev GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "ts_activity_streak" ->
-      """WITH days AS (
-        | SELECT DISTINCT user_id,
-        |  datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS dn
-        | FROM events WHERE event_type = 'purchase'),
-        |isl AS (
-        | SELECT user_id,
-        |  dn - row_number() OVER (PARTITION BY user_id ORDER BY dn) AS anchor
-        | FROM days),
-        |runs AS (
-        | SELECT user_id, anchor, count(*) AS len FROM isl GROUP BY 1, 2)
-        |SELECT user_id, max(len) AS max_streak_days, count(*) AS n_streaks
-        |FROM runs GROUP BY 1 ORDER BY 1""".stripMargin,
-    "ts_interpolate" ->
-      """WITH obs AS (
-        | SELECT user_id, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-        |  CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
-        | FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
-        |span AS (
-        | SELECT user_id,
-        |  unnest(generate_series(min(bucket), max(bucket), INTERVAL 1 HOUR)) AS bucket
-        | FROM obs GROUP BY user_id),
-        |g AS (
-        | SELECT span.user_id, span.bucket, obs.v
-        | FROM span LEFT JOIN obs
-        |  ON span.user_id = obs.user_id AND span.bucket = obs.bucket),
-        |r AS (
-        | SELECT *, CAST(row_number() OVER wr AS DOUBLE) AS rn FROM g
-        | WINDOW wr AS (PARTITION BY user_id ORDER BY bucket)),
-        |f AS (
-        | SELECT user_id, bucket, v, rn,
-        |  last_value(v IGNORE NULLS) OVER wp AS v0,
-        |  last_value(CASE WHEN v IS NOT NULL THEN rn END IGNORE NULLS)
-        |    OVER wp AS rn0,
-        |  first_value(v IGNORE NULLS) OVER wn AS v1,
-        |  first_value(CASE WHEN v IS NOT NULL THEN rn END IGNORE NULLS)
-        |    OVER wn AS rn1
-        | FROM r
-        | WINDOW wp AS (PARTITION BY user_id ORDER BY bucket
-        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-        |  wn AS (PARTITION BY user_id ORDER BY bucket
-        |   ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
-        |SELECT user_id, bucket,
-        | floor((CASE WHEN v IS NOT NULL THEN v
-        |   ELSE (v0 * (rn1 - rn) + v1 * (rn - rn0)) / (rn1 - rn0) END)
-        |  * 1000000.0 + 0.5) / 1000000.0 AS value,
-        | (v IS NOT NULL) AS observed
-        |FROM f ORDER BY user_id, bucket""".stripMargin,
-    "fn_zorder" ->
-      s"""SELECT o_orderkey, o_custkey,
-         | ${zorderSql("o_orderkey", "o_custkey")} AS zkey
-         |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "agg_regression" ->
-      s"""WITH g AS (SELECT l_returnflag,
-         | CAST(count(*) AS DOUBLE) AS n,
-         | ${dsumSql("l_quantity")} AS sx, ${dsumSql("l_extendedprice")} AS sy,
-         | ${dsumSql("l_quantity * l_extendedprice")} AS sxy,
-         | ${dsumSql("l_quantity * l_quantity")} AS sxx,
-         | ${dsumSql("l_extendedprice * l_extendedprice")} AS syy
-         |FROM lineitem GROUP BY 1)
-         |SELECT l_returnflag,
-         | round((n*sxy - sx*sy) / (n*sxx - sx*sx), 9) AS slope,
-         | round((sy - (n*sxy - sx*sy) / (n*sxx - sx*sx) * sx) / n, 9) AS intercept,
-         | round((n*sxy - sx*sy) * (n*sxy - sx*sy)
-         |   / ((n*sxx - sx*sx) * (n*syy - sy*sy)), 9) AS r2
-         |FROM g ORDER BY l_returnflag""".stripMargin,
-    "cdc_merge_upsert" ->
-      """WITH ev AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id, value
-        |  FROM events WHERE event_type = 'purchase'),
-        | target AS (SELECT user_id, ts AS t_ts, value AS t_value FROM (
-        |   SELECT *, row_number() OVER (PARTITION BY user_id
-        |     ORDER BY ts DESC, event_id DESC) AS rk
-        |   FROM ev WHERE ts < TIMESTAMP '2024-01-08 00:00:00') WHERE rk = 1),
-        | source AS (SELECT user_id, ts AS s_ts, value AS s_value FROM (
-        |   SELECT *, row_number() OVER (PARTITION BY user_id
-        |     ORDER BY ts DESC, event_id DESC) AS rk
-        |   FROM ev WHERE ts >= TIMESTAMP '2024-01-08 00:00:00') WHERE rk = 1)
-        |SELECT coalesce(target.user_id, source.user_id) AS user_id,
-        | coalesce(s_ts, t_ts) AS ts,
-        | coalesce(s_value, t_value) AS value,
-        | CASE WHEN t_ts IS NULL THEN 'insert'
-        |      WHEN s_ts IS NULL THEN 'keep' ELSE 'update' END AS action
-        |FROM target FULL OUTER JOIN source ON target.user_id = source.user_id
-        |ORDER BY user_id""".stripMargin,
-    "ts_markov_steady" ->
-      s"""$markovCtesSql
-         |SELECT state AS event_type, v AS stationary_micro,
-         | round(v / 1000000.0, 6) AS stationary
-         |FROM v12 ORDER BY event_type""".stripMargin,
-
-    "ts_markov_entropy_rate" ->
-      s"""$markovCtesSql
-         |SELECT CAST(count(DISTINCT pm.i) AS BIGINT) AS n_states,
-         | count(*) AS n_cells,
-         | round(-CAST(sum(CAST((COALESCE(v, 0) / 1000000.0)
-         |   * (pm / 1000000.0)
-         |   * ln(pm / 1000000.0) AS DECIMAL(28,12))) AS DOUBLE), 6)
-         |   AS entropy_rate_nats
-         |FROM pm LEFT JOIN v12 ON pm.i = v12.state WHERE pm > 0""".stripMargin,
-
-    "ts_new_vs_returning" ->
-      """WITH ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS d
-        |  FROM events),
-        | f AS (SELECT user_id, min(d) AS first_d FROM ud GROUP BY 1)
-        |SELECT d AS day,
-        | CAST(sum(CASE WHEN d = first_d THEN 1 ELSE 0 END) AS BIGINT)
-        |   AS n_new,
-        | CAST(sum(CASE WHEN d > first_d THEN 1 ELSE 0 END) AS BIGINT)
-        |   AS n_returning,
-        | count(*) AS n_active,
-        | round(CAST(sum(CASE WHEN d = first_d THEN 1 ELSE 0 END)
-        |   AS DOUBLE) / count(*), 6) AS new_share
-        |FROM ud JOIN f USING (user_id) GROUP BY d ORDER BY day""".stripMargin,
-
-    "ts_interarrival_hist" ->
-      """WITH g AS (SELECT user_id,
-        |   epoch_us(CAST(ts AS TIMESTAMP))
-        |     - lag(epoch_us(CAST(ts AS TIMESTAMP))) OVER (
-        |       PARTITION BY user_id ORDER BY ts, event_id) AS gap_us
-        |  FROM events),
-        | gg AS (SELECT gap_us FROM g WHERE gap_us IS NOT NULL),
-        | tot AS (SELECT count(*) AS ng FROM gg),
-        | b AS (SELECT CASE
-        |    WHEN gap_us < 1000000 THEN 'a_lt_1s'
-        |    WHEN gap_us < 10000000 THEN 'b_1s_10s'
-        |    WHEN gap_us < 60000000 THEN 'c_10s_1m'
-        |    WHEN gap_us < 600000000 THEN 'd_1m_10m'
-        |    WHEN gap_us < 3600000000 THEN 'e_10m_1h'
-        |    WHEN gap_us < 21600000000 THEN 'f_1h_6h'
-        |    WHEN gap_us < 86400000000 THEN 'g_6h_24h'
-        |    ELSE 'h_ge_24h' END AS bucket, gap_us FROM gg)
-        |SELECT bucket, count(*) AS n_gaps,
-        | round(CAST(count(*) AS DOUBLE)
-        |   / (SELECT CAST(ng AS DOUBLE) FROM tot), 6) AS share,
-        | CAST(max(gap_us) AS BIGINT) AS max_gap_us
-        |FROM b GROUP BY bucket ORDER BY bucket""".stripMargin,
-
-    "ts_peak_detect" ->
-      """WITH hourly AS (SELECT
-        |   date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
-        |   count(*) AS cnt FROM events GROUP BY 1),
-        | grid AS (SELECT unnest(generate_series(
-        |   (SELECT min(h) FROM hourly), (SELECT max(h) FROM hourly),
-        |   INTERVAL 1 HOUR)) AS h),
-        | dense AS (SELECT g.h, COALESCE(cnt, 0) AS cnt
-        |  FROM grid g LEFT JOIN hourly USING (h)),
-        | ll AS (SELECT h, cnt, lag(cnt) OVER (ORDER BY h) AS prev_cnt,
-        |   lead(cnt) OVER (ORDER BY h) AS next_cnt FROM dense)
-        |SELECT h, cnt, prev_cnt, next_cnt,
-        | CAST(cnt - greatest(prev_cnt, next_cnt) AS BIGINT) AS prominence
-        |FROM ll WHERE prev_cnt IS NOT NULL AND next_cnt IS NOT NULL
-        |  AND cnt > prev_cnt AND cnt > next_cnt
-        |ORDER BY h""".stripMargin,
+    },
+      Some("""WITH g AS (SELECT user_id,
+             |   epoch_us(CAST(ts AS TIMESTAMP))
+             |     - lag(epoch_us(CAST(ts AS TIMESTAMP))) OVER (
+             |       PARTITION BY user_id ORDER BY ts, event_id) AS gap_us
+             |  FROM events),
+             | gg AS (SELECT gap_us FROM g WHERE gap_us IS NOT NULL),
+             | tot AS (SELECT count(*) AS ng FROM gg),
+             | b AS (SELECT CASE
+             |    WHEN gap_us < 1000000 THEN 'a_lt_1s'
+             |    WHEN gap_us < 10000000 THEN 'b_1s_10s'
+             |    WHEN gap_us < 60000000 THEN 'c_10s_1m'
+             |    WHEN gap_us < 600000000 THEN 'd_1m_10m'
+             |    WHEN gap_us < 3600000000 THEN 'e_10m_1h'
+             |    WHEN gap_us < 21600000000 THEN 'f_1h_6h'
+             |    WHEN gap_us < 86400000000 THEN 'g_6h_24h'
+             |    ELSE 'h_ge_24h' END AS bucket, gap_us FROM gg)
+             |SELECT bucket, count(*) AS n_gaps,
+             | round(CAST(count(*) AS DOUBLE)
+             |   / (SELECT CAST(ng AS DOUBLE) FROM tot), 6) AS share,
+             | CAST(max(gap_us) AS BIGINT) AS max_gap_us
+             |FROM b GROUP BY bucket ORDER BY bucket""".stripMargin)),
   )
 }

@@ -35,456 +35,6 @@ object DedupOps {
     x2.bitwiseXOR(shiftleft(x2, 17))
   }
 
-  val queries: Map[String, Q] = Map(
-    // Exact dedup: group identical content, keep the smallest doc_id.
-    "dedup_exact" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .groupBy("text")
-        .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("dup_cnt"))
-        .select("keep_id", "dup_cnt", "text")
-        .orderBy("keep_id")),
-
-    // URL-CANONICAL dedup — the first screen of any web crawl: the same
-    // payload is reachable under protocol / host-case / default-port /
-    // tracking-param variants, so the dedup key is the CANONICAL form
-    // (lowercased host, port and utm_* noise dropped, the identifying
-    // query param kept), not the raw string. The URL is synthesized
-    // deterministically (this testdata ships no URL column) with exactly
-    // those variations; canonicalization is real `parse_url` work in the
-    // scan stage (HOST via java.net.URL drops the port for free), and
-    // the dedup itself is dedup_exact's one two-phase agg on the canonical
-    // key — zero extra exchanges at any corpus size. The oracle states
-    // the canonical closed form straight from (source, doc_id).
-    "dedup_url_canonical" -> ((s, dir) => {
-      val url = concat(
-        when(col("doc_id") % 2 === 0, lit("https://")).otherwise(lit("http://")),
-        when(col("doc_id") % 3 === 0, upper(col("source"))).otherwise(col("source")),
-        lit(".Example.org"),
-        when(col("doc_id") % 5 === 0, lit(":443")).otherwise(lit("")),
-        lit("/docs/"), (col("doc_id") % 40).cast("string"),
-        lit("?utm_campaign=feed&id="), (col("doc_id") % 5).cast("string"))
-      t(s, dir, "documents").select(col("doc_id"), url.as("url"))
-        .withColumn("canon", concat(
-          lower(parse_url(col("url"), lit("HOST"))),
-          parse_url(col("url"), lit("PATH")),
-          lit("?id="), parse_url(col("url"), lit("QUERY"), lit("id"))))
-        .groupBy("canon")
-        .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("dup_cnt"))
-        .orderBy("canon")
-    }),
-
-    // BLOOM-SCREENED incremental dedup — the "is this new batch already
-    // in the corpus?" membership check restructured for 100 TB: an exact
-    // semi join of batch×corpus would shuffle the full corpus digest set
-    // on every ingest; instead the corpus folds into ONE mergeable bloom
-    // sketch (bloom_filter_agg partials, a scalar subquery broadcast to
-    // every batch task), `might_contain` clears definite-new docs with
-    // zero joins (no false negatives), and only the maybe-dup survivors
-    // — |batch| × corpus-hit-rate rows — reach the exact semi join that
-    // resolves false positives. The RESULT is exact (the bloom is pure
-    // pruning), so the oracle is the plain membership SQL.
-    "dedup_bloom_screen" -> ((s, dir) => {
-      graft.functions.VecFunctions.registerMightContain(s)
-      val docs = t(s, dir, "documents")
-      docs.filter(col("doc_id") % 10 =!= 0).select(md5(col("text")).as("h"))
-        .createOrReplaceTempView("graft_bloom_corpus")
-      val corpus = s.table("graft_bloom_corpus")
-      val batch = docs.filter(col("doc_id") % 10 === 0)
-        .select(col("doc_id"), md5(col("text")).as("h"))
-      val screened = batch.withColumn("maybe_dup", expr(
-        """might_contain(
-          |  (SELECT bloom_filter_agg(xxhash64(h), 5000L, 50000L)
-          |   FROM graft_bloom_corpus),
-          |  xxhash64(h))""".stripMargin))
-      val confirmed = screened.filter(col("maybe_dup"))
-        .join(corpus, Seq("h"), "left_semi")
-        .select(col("doc_id"), lit(true).as("is_dup"))
-      screened.filter(!col("maybe_dup"))
-        .select(col("doc_id"), lit(false).as("is_dup"))
-        .unionByName(confirmed)
-        // a maybe-dup that the exact join rejects is a bloom false
-        // positive — it re-enters as new
-        .unionByName(screened.filter(col("maybe_dup"))
-          .join(corpus, Seq("h"), "left_anti")
-          .select(col("doc_id"), lit(false).as("is_dup")))
-        .orderBy("doc_id")
-    }),
-
-    // Exact 3-gram-shingle Jaccard pairs ≥ 0.6 via the inverted index
-    // ([[jaccardPairs]] — shared with the GraphOps near-dup graph).
-    //
-    // Scale ledger (measured sf0.1, 5k docs / 260k index rows): pair
-    // expansion is Σ_sh c·(c−1)/2 = 1.27M rows — linear in corpus size as
-    // long as per-shingle doc-frequency stays bounded (max 25 here). For
-    // corpora with ultra-hot shingles, put a prefix filter (Chaudhuri et
-    // al.) in front of the SAME pipeline: rank shingles by rarity per doc,
-    // index only each doc's rarest n−⌈τn⌉+1 shingles to generate candidate
-    // pairs, then verify. We profiled that variant: candidate generation is
-    // 4× cheaper (300k vs 1.27M rows) but array-based verification costs
-    // ~90µs/row in column→JVM conversion (27s total) — a net 10× LOSS at
-    // this shingle-frequency distribution. The group-count plan wins
-    // whenever the expansion is near-linear; switch to prefix+verify only
-    // when hot shingles make the expansion super-linear.
-    "dedup_ngram_jaccard" -> ((s, dir) =>
-      tau0Pairs(s, dir).filter(col("jaccard") >= 0.6)
-        .select(col("d1"), col("d2"), col("inter"), col("n1"), col("n2"),
-          round(col("jaccard"), 6).as("jaccard"))
-        .orderBy("d1", "d2")),
-
-    // Top-3 nearest neighbors per document by exact shingle Jaccard —
-    // the kNN REPORT over the same inverted-index miner (τ = 0, ≥ 2
-    // shared shingles to floor out incidental single-shingle overlap):
-    // where the dedup keys answer "which pairs exceed the threshold",
-    // this answers "what is each doc's closest neighborhood" (threshold
-    // tuning, boilerplate diagnosis, doc-level novelty). Pair mining
-    // cost is IDENTICAL to dedup_containment (the τ filter was always
-    // post-agg); the additions are the symmetric expansion (2× pair
-    // rows, ids + one double) and the top-3 pick — which runs as the
-    // mergeable bounded-heap TopKAgg (agg_topk_heap's aggregator, same
-    // (score desc, id asc) total order the row_number oracle states),
-    // NOT a window: a per-doc window would re-shuffle and sort ALL 2×
-    // pair rows, the heap truncates map-side so only docs×3 pairs cross
-    // the exchange — at the 10× point that is the difference between a
-    // ~20M-row sort and a 50k×3 aggregate. The unrounded jaccard
-    // doubles are identical integer ratios in both engines, so the pick
-    // is deterministic.
-    "text_jaccard_knn" -> ((s, dir) =>
-      jaccardKnn(tau0Pairs(s, dir).filter(col("inter") >= 2))),
-
-    // Jaccard threshold tuning curve: pair counts per similarity decile
-    // from ONE miner pass — the report that picks τ for the dedup keys
-    // (where does the distribution shoulder off from incidental overlap
-    // to true duplication). The decile is INTEGER arithmetic
-    // ((10·inter) div union — never floor(jac·10), whose double product
-    // can land on either side of a decile boundary), so the histogram
-    // is bit-portable. Cost: the shared inverted-index miner + one
-    // 11-cell two-phase agg.
-    "dedup_threshold_sweep" -> ((s, dir) =>
-      tau0Pairs(s, dir)
-        .groupBy(expr("(10 * inter) div (n1 + n2 - inter)").cast("int")
-          .as("jac_decile"))
-        .agg(count(lit(1)).as("n_pairs"))
-        .orderBy("jac_decile")),
-
-    // The 100 TB form of the threshold sweep: the exact key's pair
-    // expansion rides Σ_sh df·(df−1)/2, which densifies super-linearly
-    // on a fixed shingle vocabulary (measured ×162.8 at the 10× point —
-    // SCALE.md §9a), so the tuning curve gets a DF-CAPPED twin: postings
-    // of a shingle hotter than the adaptive [[minerDfCap]] are thinned to
-    // ~cap survivors by a DETERMINISTIC salted-md5 residue (keep iff
-    // hex₁₋₈(md5(salt:shingle:doc)) mod df < cap — a fixed pseudo-random
-    // subset, NOT a per-run sample, so the histogram is bit-identical
-    // cross-engine and oracle-checkable), bounding per-shingle pair
-    // fan-out at ~cap²/2 and making the sweep linear at any scale.
-    // Doc sizes (n1, n2) stay EXACT — only intersections thin — so the
-    // decile of a surviving pair can only drift down, and only on pairs
-    // whose overlap is mostly boilerplate-hot shingles; measured decile
-    // mass drift vs the exact key ≤1% at sf0.1 (OperatorSmokeSpec pin).
-    // Round 13: the thinned miner is the SHARED [[cappedTau0Pairs]] memo
-    // under the ADAPTIVE [[minerDfCap]] (see its scaladoc for why a
-    // fixed cap=16 fails at 10×), consumed by all four `_capped` twins.
-    "dedup_threshold_sweep_capped" -> ((s, dir) =>
-      cappedTau0Pairs(s, dir)
-        .groupBy(expr("(10 * inter) div (n1 + n2 - inter)").cast("int")
-          .as("jac_decile"))
-        .agg(count(lit(1)).as("n_pairs"))
-        .orderBy("jac_decile")),
-
-    // The 100 TB form of dedup_ngram_jaccard: identical semantics over
-    // the df-capped miner. Sizes stay exact and intersections only thin,
-    // so capped jaccard ≤ exact jaccard pairwise — the survivor set is a
-    // SUBSET of the exact key's (pinned), losing only pairs whose overlap
-    // is mostly boilerplate-hot shingles; measured recall at sf0.1 is
-    // pinned in OperatorSmokeSpec. Keep the exact key as the oracle
-    // anchor at test scale; ship THIS one against a real corpus.
-    "dedup_ngram_jaccard_capped" -> ((s, dir) =>
-      cappedTau0Pairs(s, dir).filter(col("jaccard") >= 0.6)
-        .select(col("d1"), col("d2"), col("inter"), col("n1"), col("n2"),
-          round(col("jaccard"), 6).as("jaccard"))
-        .orderBy("d1", "d2")),
-
-    // The 100 TB form of dedup_containment: inter / min(n1, n2) over the
-    // capped miner — same subset guarantee (least(n1,n2) exact, inter
-    // thinned ⇒ capped containment ≤ exact containment pairwise).
-    "dedup_containment_capped" -> ((s, dir) =>
-      cappedTau0Pairs(s, dir)
-        .withColumn("containment", col("inter") / least(col("n1"), col("n2")))
-        .filter(col("containment") >= 0.8)
-        .select(col("d1"), col("d2"), col("inter"), col("n1"), col("n2"),
-          round(col("containment"), 6).as("containment"))
-        .orderBy("d1", "d2")),
-
-    // The 100 TB form of text_jaccard_knn: same bounded-heap top-3 over
-    // the capped miner. Neighbor RANKINGS can reorder where thinning
-    // bites (scores drift down non-uniformly), so the pin here is top-1
-    // agreement rate + mean score drift, not subset.
-    "text_jaccard_knn_capped" -> ((s, dir) =>
-      jaccardKnn(cappedTau0Pairs(s, dir).filter(col("inter") >= 2))),
-
-    // Asymmetric CONTAINMENT dedup: inter / min(n1, n2) — the metric
-    // that catches subset duplicates symmetric Jaccard misses (a short
-    // doc pasted whole into a long one scores containment 1.0 but
-    // Jaccard n1/n2 ≈ 0; boilerplate-wrapper dups are exactly this
-    // shape). Same inverted-index miner as dedup_ngram_jaccard (tau = 0
-    // keeps every co-occurring pair; the aggregation cost is identical —
-    // the jaccard threshold was applied after the pair agg anyway), so
-    // the scale ledger there applies unchanged.
-    "dedup_containment" -> ((s, dir) =>
-      tau0Pairs(s, dir)
-        .withColumn("containment", col("inter") / least(col("n1"), col("n2")))
-        .filter(col("containment") >= 0.8)
-        .select(col("d1"), col("d2"), col("inter"), col("n1"), col("n2"),
-          round(col("containment"), 6).as("containment"))
-        .orderBy("d1", "d2")),
-
-    // The dedup REPORT every cleaning run reads before committing: the
-    // cluster-size histogram (how much mass sits in how-big duplicate
-    // clusters), singletons included — un-clustered docs are size-1
-    // clusters, counted via one anti join, so corpus_docs =
-    // Σ size·n_clusters reconciles exactly (pinned in the spec). Scale:
-    // two id-only aggs over the CC labels + one anti join of ids; the
-    // histogram itself is at most |distinct sizes| rows.
-    "dedup_cluster_stats" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val labels = corpusLabelsFull(s, dir)
-      val hist = labels.groupBy("cluster_id").agg(count(lit(1)).as("sz"))
-        .groupBy("sz").agg(count(lit(1)).as("n_clusters"))
-      val singles = docs.join(labels, Seq("doc_id"), "left_anti")
-        .agg(count(lit(1)).as("n_clusters"))
-        .select(lit(1L).as("sz"), col("n_clusters"))
-      hist.union(singles)
-        .groupBy("sz").agg(sum("n_clusters").as("n_clusters"))
-        .select(col("sz").as("cluster_size"), col("n_clusters"))
-        .orderBy("cluster_size")
-    }),
-
-    // 32-bit SimHash from the per-nibble high bit of each token's MD5:
-    // bit_j = sign of Σ_tokens (±1). Engine-portable (no platform hash).
-    "dedup_simhash" -> ((s, dir) =>
-      simhashes(t(s, dir, "documents")).orderBy("doc_id")),
-
-    // SimHash near-dup PAIRS at hamming distance ≤ 3, found by pigeonhole
-    // banding: split the 32-bit hash into 4 disjoint 8-bit blocks — any
-    // pair within distance 3 must agree on ≥1 whole block (3 flipped bits
-    // touch at most 3 of 4 blocks), so the block equi-join has exact
-    // recall. Verification is one codegen'd bit_count(xor). The same
-    // banding bounds candidates at corpus scale: pairs per block-bucket,
-    // not |docs|². The pair frame is the session-memoized corpus
-    // artifact ([[corpusSimhashPairs]]) the cluster keys also read.
-    "dedup_simhash_pairs" -> ((s, dir) =>
-      corpusSimhashPairs(s, dir).orderBy("d1", "d2")),
-
-    // Near-dup CLUSTERS from the SimHash pair graph: min-label
-    // propagation + pointer jumping iterated to a measured fixpoint
-    // assigns every clustered doc the smallest doc_id reachable from it —
-    // the canonical-representative step that turns pair mining into
-    // actual dedup. Each round is two equi-joins + one min-agg (all
-    // codegen'd); pointer jumping doubles the horizon per round, so
-    // diameter-D components converge in O(log D) rounds, and the
-    // zero-changes exit means NO diameter silently under-merges. Shuffle
-    // width is driven by the measured |edges|, not the corpus setting.
-    // Oracle: DuckDB recursive CTE to the true fixpoint. The label table
-    // is the session-memoized corpus artifact ([[corpusLabelsFull]]) —
-    // mined and clustered once per (session, corpus), shared with the
-    // cluster-stats report, exactly as a production pipeline persists
-    // its label table once per corpus snapshot.
-    "dedup_cluster" -> ((s, dir) =>
-      corpusLabelsFull(s, dir).orderBy("doc_id")),
-
-    // INCREMENTAL ingest form of dedup_cluster: the corpus (80% of docs)
-    // carries persisted labels; the ingest batch (doc_id % 5 = 0) mines
-    // its pairs by PROBING the band index (simhashPairsProbe — never a
-    // corpus self-join) and labels update through the bounded root graph
-    // (incrementalClusters). The oracle is the full-recompute fixpoint
-    // over the union pair set — incremental maintenance must be
-    // bit-identical to recomputation, which is exactly what makes it
-    // safe to run per-batch at 100 TB instead of re-clustering the
-    // corpus on every ingest.
-    "dedup_cluster_incremental" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      // Existing labels AND the corpus band index come from session
-      // memos (the persisted-state stand-ins a production ingest reads);
-      // the per-batch work this key times is banding THE BATCH, the
-      // index probe and the root-graph update — which is what an ingest
-      // pays. Round 15: the probe formerly re-banded (re-simhashed) the
-      // ENTIRE corpus per call; per-batch cost must scale with the
-      // batch, not the corpus (guide §2.4 / the key's own contract).
-      val oldLabels = corpusLabels80(s, dir)
-      val newPairs = simhashPairsProbeIndexed(
-        corpusBanded64(s, dir),
-        banded64(docs.filter(col("doc_id") % 5 === 0)),
-        maxHamming = 3).select("d1", "d2")
-      incrementalClusters(oldLabels, newPairs).orderBy("doc_id")
-    }),
-
-    // MinHash(64) + LSH(16 bands × 4 rows) with an EXACT-Jaccard verify
-    // stage — the full MinHash-dedup pipeline a curation run deploys:
-    // band collisions MINE candidates (never an all-pairs join), then
-    // each candidate is re-verified against the true shingle Jaccard and
-    // only verified survivors (J ≥ 0.8) are emitted. Because the output
-    // is the exact-verified pair set, the key is ORACLE-CHECKABLE (the
-    // all-pairs exact SQL at the same τ) — the sketch's job is recall,
-    // and at τ=0.8 the 16×4 banding misses a qualifying pair with prob
-    // (1−J⁴)¹⁶ ≤ 2.2e-4 (pinned exactly = 100% on both test SFs by the
-    // oracle hash; the recall property in DedupSimilaritySpec covers the
-    // sketch itself). Scale: candidates carry only id pairs through the
-    // band join (signatures never shuffle); [[cappedBandPairs]] caps hot
-    // buckets so mass duplication can't mine c²; the verify stage joins
-    // ONLY candidate docs' shingles (a semi-join-pruned frame), so its
-    // cost is |candidates|·|shingles/doc|, linear in the mined set —
-    // the inverted-index miner's full shingle self-join never runs.
-    "dedup_near_minhash" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val sh = docShingles(docs)
-      val sigs = minhashSignatures(sh)
-      val bands = sigs.select(col("doc_id"),
-        posexplode(col("bands")).as(Seq("band_id", "band_hash")))
-      // Both bounded frames are referenced by three downstream branches
-      // each; localCheckpoint (the simhashPairsProbe pattern) mines each
-      // ONCE instead of re-running the band join / shingle prune per
-      // branch, and keeps the final plan's exchange count flat.
-      val cand = cappedBandPairs(bands, "doc_id", Seq("band_id", "band_hash"))
-        .select("d1", "d2").localCheckpoint()
-      val candIds = cand.select(explode(array(col("d1"), col("d2")))
-        .as("doc_id")).distinct()
-      // Shingle ONLY the candidate docs for the verify stage (prune the
-      // corpus first, then explode) — re-exploding the whole corpus here
-      // measured ~2× the verify stage's cost at sf0.1.
-      val shC = docShingles(docs.join(candIds, "doc_id")).localCheckpoint()
-      val cnt = shC.groupBy("doc_id").agg(count(lit(1)).as("n"))
-      cand
-        .join(shC.select(col("doc_id").as("d1"), col("shingle")), "d1")
-        .join(shC.select(col("doc_id").as("d2"), col("shingle")),
-          Seq("d2", "shingle"))
-        .groupBy("d1", "d2").agg(count(lit(1)).as("inter"))
-        .join(cnt.select(col("doc_id").as("d1"), col("n").as("n1")), "d1")
-        .join(cnt.select(col("doc_id").as("d2"), col("n").as("n2")), "d2")
-        .withColumn("jaccard",
-          col("inter") / (col("n1") + col("n2") - col("inter")))
-        .filter(col("jaccard") >= 0.8)
-        .select(col("d1"), col("d2"), col("inter"), col("n1"), col("n2"),
-          round(col("jaccard"), 6).as("jaccard"))
-        .orderBy("d1", "d2")
-    }),
-
-    // Exact-substring span dedup (Lee et al. 2022, "Deduplicating
-    // Training Data Makes Language Models Better"): a doc position is
-    // duplicated if its 30-char window occurs verbatim in ≥2 distinct
-    // docs. Per-doc coverage = the fraction of positions that are
-    // duplicated — the signal used to drop or trim mass-copied spans.
-    // Linear by construction: window extraction is a projection, the
-    // cross-doc df is an agg (never a pair join), so boilerplate can't
-    // go quadratic here. 3 bounded shuffles: (win,doc) agg → df window
-    // riding the win partitioning → per-doc agg.
-    "dedup_substring" -> ((s, dir) => {
-      // Round 15 (guide §2.3): same narrow-key treatment as the pair
-      // key — the window text is only a grouping identity, so xxhash64
-      // it before the (win, doc) agg and the df window.
-      val pd = perDocWindows(t(s, dir, "documents"), SubstringWindowLen)
-        .select(xxhash64(col("win")).as("win"), col("doc_id"))
-        .groupBy("win", "doc_id").agg(count(lit(1)).as("pos_cnt"))
-        .withColumn("df", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("win")))
-      pd.groupBy("doc_id").agg(
-          sum("pos_cnt").as("n_windows"),
-          sum(when(col("df") >= 2, col("pos_cnt")).otherwise(0L)).as("dup_windows"))
-        .withColumn("dup_bp",
-          floor(col("dup_windows") * 10000 / col("n_windows")))
-        .orderBy("doc_id")
-    }),
-
-    // Doc pairs ranked by the number of distinct 30-char windows they
-    // share — the text_contamination plan shape: the df count rides a
-    // window over the SAME win partitioning the group-collect needs, the
-    // df ceiling (window in > SubstringPairDfCeiling docs = boilerplate)
-    // filters BEFORE collect_set so every id buffer is ≤ ceiling ids,
-    // and pairs explode from the collected sets (fan-out ≤ ceiling² per
-    // window) instead of a self-join that would evaluate the whole
-    // window-extraction chain twice. Ceiling mirrored in the oracle.
-    "dedup_substring_pairs" -> ((s, dir) => {
-      // Round 14: explicit round-robin fan-out before the window explode
-      // (the 1c250bb pattern) — the compact test parquet is ONE scan
-      // split, so the per-position substring explode ran single-task;
-      // not a keyed shuffle, hash-exchange budget unchanged. Round 15:
-      // gated on actual scan parallelism (fanOutIfCompact) so a
-      // multi-split production corpus skips the shuffle, and the 30-char
-      // window collapses to xxhash64 before the distinct/df-window/
-      // collect exchanges (guide §2.3) — the window text never reaches
-      // the output, only pair counts do, and at the 10× point the
-      // string-keyed exchanges cost 13.0 s (superlinear in bytes).
-      perDocWindows(fanOutIfCompact(t(s, dir, "documents")),
-        SubstringWindowLen)
-        .select(xxhash64(col("win")).as("win"), col("doc_id")).distinct()
-        .withColumn("df", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("win")))
-        .filter(col("df") >= 2 && col("df") <= SubstringPairDfCeiling)
-        .groupBy("win").agg(collect_set(col("doc_id")).as("ds"))
-        .select(explode(col("ds")).as("d1"), col("ds"))
-        .select(col("d1"), explode(col("ds")).as("d2"))
-        .filter(col("d1") < col("d2"))
-        .groupBy("d1", "d2").agg(count(lit(1)).as("n_shared"))
-        .orderBy(col("n_shared").desc, col("d1"), col("d2"))
-        .limit(100)
-    }),
-
-    // CONTENT-DEFINED CHUNKING dedup (round 10) — the rsync/LBFS cut
-    // rule (Muthitacharoen et al. 2001) applied to corpus text: a cut
-    // lands after position i when the 8-char gram ending at i hashes
-    // into the cut class (first md5 hex digit '0' ⇒ P(cut) = 1/16,
-    // expected chunk ≈ 16 chars). Because the rule depends only on
-    // CONTENT, an insertion early in a doc shifts every byte but
-    // re-synchronizes the chunk stream at the next cut point — the
-    // property fixed-stride windows (dedup_substring) lack, and the
-    // reason storage dedup and incremental corpus diffs chunk this way.
-    // Release: per-doc chunk census + how much chunk mass also appears
-    // in ≥2 distinct docs. Shape: the gram scan is a bounded projection
-    // (one row per position, the perDocWindows cost), cuts collapse to
-    // ≤len/16 boundary rows per doc, the span window rides a doc_id
-    // partition, and the digest df is one hash agg — linear end to end,
-    // no pair join anywhere. Docs shorter than the gram width get the
-    // whole-doc chunk via the unioned terminal boundary (and the
-    // sequence() is guarded: Spark emits a DESCENDING range when
-    // start > stop — the ts_survival_hazard latent-bug class).
-    "dedup_cdc_chunks" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      // Round 14: the whole cut-scan → boundary-dedup → lag-window →
-      // text re-join pipeline is ONE codegen'd generator
-      // ([[graft.functions.CdcChunks]]) — the compositional form
-      // materialized a row per character position through a distinct
-      // and a per-doc sort window, then re-joined the corpus text to
-      // digest each chunk (4 exchanges before the df agg; now the df
-      // agg's is the first). Windows, cut rule, boundary dedup and
-      // digests are bit-identical (same substring semantics, same md5
-      // bytes) — guide §1.2 step 1 + §2.4.
-      // Explicit fan-out before the chunker (the agg_bootstrap pattern):
-      // the compact test parquet is ONE scan split, and a single task
-      // would otherwise run every doc's per-position md5 alone — a 100 TB
-      // corpus arrives in thousands of splits and, per the round-15
-      // fanOutIfCompact gate, skips the shuffle outright.
-      val inst = fanOutIfCompact(docs, col("doc_id"))
-        .select(col("doc_id"),
-          explode(graft.functions.CdcChunks.cdcChunks(col("text"), 8))
-            .as("c"))
-        .select(col("doc_id"), col("c.digest").as("digest"),
-          col("c.clen").as("clen"))
-      val dup = inst.groupBy("digest")
-        .agg(countDistinct(col("doc_id")).as("nd"))
-      inst.join(dup, "digest")
-        .groupBy("doc_id").agg(
-          count(lit(1)).as("n_chunks"),
-          sum(when(col("nd") >= 2, 1L).otherwise(0L)).as("n_dup_chunks"),
-          sum(when(col("nd") >= 2, col("clen")).otherwise(0L))
-            .as("dup_chars"))
-        .join(docs.select(col("doc_id"), length(col("text")).as("len")),
-          "doc_id")
-        .select(col("doc_id"), col("n_chunks"), col("n_dup_chunks"),
-          col("dup_chars"),
-          round(col("dup_chars").cast("double") / col("len"), 6)
-            .as("dup_frac"))
-        .orderBy("doc_id")
-    }),
-  )
-
   /** Character-window length for the exact-substring dedup keys — long
     * enough that a verbatim match is copying rather than coincidence on
     * this vocabulary (≈6 words), short enough that real copied spans
@@ -556,14 +106,6 @@ object DedupOps {
         explode(sequence(lit(1), length(col("text")) - (len - 1))).as("i"))
       .select(col("doc_id"), col("text").substr(col("i"), lit(len)).as("win"))
 
-  /** The minhash band frame (doc_id, band_id, band_hash) for `dir`'s
-    * documents — exposed for the dev bucket profiler (ProfileBuckets). */
-  private[graft] def minhashBands(s: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    minhashSignatures(docShingles(t(s, dir, "documents")))
-      .select(col("doc_id"),
-        posexplode(col("bands")).as(Seq("band_id", "band_hash")))
-
   /** Persist the corpus MinHash band index as bucketed tables — the
     * ingestion-time analog of [[SimilarityOps.ivfIndexSave]]: `name`
     * holds (doc_id, band_id, band_hash) bucketed on the band keys (so a
@@ -572,10 +114,12 @@ object DedupOps {
     * dedup then probes these tables without re-mining the corpus. */
   def minhashIndexSave(docs: DataFrame, name: String, nBuckets: Int = 16): Unit = {
     val sigs = minhashSignatures(docShingles(docs)).persist()
+    dropManagedTable(docs.sparkSession, name)
     sigs.select(col("doc_id"),
         posexplode(col("bands")).as(Seq("band_id", "band_hash")))
       .write.bucketBy(nBuckets, "band_id", "band_hash")
       .mode("overwrite").saveAsTable(name)
+    dropManagedTable(docs.sparkSession, s"${name}_sigs")
     sigs.select("doc_id", "sig").write.mode("overwrite")
       .saveAsTable(s"${name}_sigs")
     sigs.unpersist()
@@ -928,7 +472,7 @@ object DedupOps {
     * window (count + min per bucket) whose partitioning the small-bucket
     * self-join then reuses (same keys), and the hot side emits O(c) rows
     * with no join at all. Measured bucket maxima that informed the
-    * default cap (ProfileBuckets): minhash 16×4 bands — 4 (sf0.1) /
+    * default cap (a dev bucket profiler): minhash 16×4 bands — 4 (sf0.1) /
     * 9 (sf1, 10×); size-adaptive LSH — 122 (sf0.1, 5×5-bit) /
     * 223 (sf1, 14×9-bit). The cap sits ~2× above the largest observed
     * bucket at 10× test scale. */
@@ -1166,7 +710,7 @@ object DedupOps {
     * overridable so the routing branch can be pinned by tests with tiny
     * graphs; production callers always use the measured default.
     *
-    * Measured crossover evidence (ProfileJac `cc_regimes`, sf0.1 + the
+    * Measured crossover evidence (a warm dev profiler, sf0.1 + the
     * ScaleGen'd 10× point, SCALE.md §9): on the real simhash pair graph
     * union-find beats the forced iterative path 11× at 1,925 edges
     * (0.53 s vs 5.8 s) and still 5–9× at 166,342 edges (1.0–1.7 s vs
@@ -1384,216 +928,643 @@ object DedupOps {
        | p AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter
        |   FROM sc a JOIN sc b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "dedup_url_canonical" ->
-      """WITH c AS (SELECT doc_id,
-        |   lower(source) || '.example.org/docs/' || CAST(doc_id % 40 AS VARCHAR)
-        |     || '?id=' || CAST(doc_id % 5 AS VARCHAR) AS canon
-        | FROM documents)
-        |SELECT canon, min(doc_id) AS keep_id, count(*) AS dup_cnt
-        |FROM c GROUP BY canon ORDER BY canon""".stripMargin,
-    "dedup_bloom_screen" ->
-      """SELECT d.doc_id,
-        | EXISTS (SELECT 1 FROM documents c
-        |   WHERE c.doc_id % 10 <> 0 AND c.text = d.text) AS is_dup
-        |FROM documents d WHERE d.doc_id % 10 = 0
-        |ORDER BY d.doc_id""".stripMargin,
-    "dedup_exact" ->
-      """SELECT min(doc_id) AS keep_id, count(*) AS dup_cnt, text
-        |FROM documents GROUP BY text ORDER BY keep_id""".stripMargin,
-    "dedup_ngram_jaccard" ->
-      """WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-        | s AS (SELECT DISTINCT doc_id, array_to_string(toks[i:i+2], ' ') AS sh
-        |   FROM (SELECT doc_id, toks,
-        |     unnest(generate_series(1, len(toks) - 2)) AS i FROM t)),
-        | n AS (SELECT doc_id, count(*) AS n FROM s GROUP BY 1),
-        | p AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter
-        |   FROM s a JOIN s b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2)
-        |SELECT d1, d2, inter, x.n AS n1, y.n AS n2,
-        | round(inter / (x.n + y.n - inter), 6) AS jaccard
-        |FROM p JOIN n x ON d1 = x.doc_id JOIN n y ON d2 = y.doc_id
-        |WHERE inter / (x.n + y.n - inter) >= 0.6
-        |ORDER BY d1, d2""".stripMargin,
-    // The MinHash key emits the EXACT-verified survivor set, so its
-    // oracle is the all-pairs exact Jaccard at the same τ=0.8 — the
-    // banding may only MISS pairs (never invent them), and a hash match
-    // here certifies 100% recall of the sketch path on this corpus.
-    "dedup_near_minhash" ->
-      """WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-        | s AS (SELECT DISTINCT doc_id, array_to_string(toks[i:i+2], ' ') AS sh
-        |   FROM (SELECT doc_id, toks,
-        |     unnest(generate_series(1, len(toks) - 2)) AS i FROM t)),
-        | n AS (SELECT doc_id, count(*) AS n FROM s GROUP BY 1),
-        | p AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter
-        |   FROM s a JOIN s b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2)
-        |SELECT d1, d2, inter, x.n AS n1, y.n AS n2,
-        | round(inter / (x.n + y.n - inter), 6) AS jaccard
-        |FROM p JOIN n x ON d1 = x.doc_id JOIN n y ON d2 = y.doc_id
-        |WHERE inter / (x.n + y.n - inter) >= 0.8
-        |ORDER BY d1, d2""".stripMargin,
-    "dedup_threshold_sweep" ->
-      """WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-        | s AS (SELECT DISTINCT doc_id, array_to_string(toks[i:i+2], ' ') AS sh
-        |   FROM (SELECT doc_id, toks,
-        |     unnest(generate_series(1, len(toks) - 2)) AS i FROM t)),
-        | n AS (SELECT doc_id, count(*) AS n FROM s GROUP BY 1),
-        | p AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter
-        |   FROM s a JOIN s b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2)
-        |SELECT CAST((10 * inter) // (x.n + y.n - inter) AS INT) AS jac_decile,
-        | count(*) AS n_pairs
-        |FROM p JOIN n x ON d1 = x.doc_id JOIN n y ON d2 = y.doc_id
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // hex₁₋₈ of the salted md5 decoded positionally (the sample_weighted
-    // idiom — DuckDB has no base-conv builtin); cap mirrored literally.
-    // The CTE prefix (shared df-capped pair miner) serves all four
-    // `_capped` oracles, exactly as [[cappedTau0Pairs]] serves the keys.
-    "dedup_threshold_sweep_capped" ->
-      s"""$cappedPairCtes
-         |SELECT CAST((10 * inter) // (x.n + y.n - inter) AS INT) AS jac_decile,
-         | count(*) AS n_pairs
-         |FROM p JOIN n x ON d1 = x.doc_id JOIN n y ON d2 = y.doc_id
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "dedup_ngram_jaccard_capped" ->
-      s"""$cappedPairCtes
-         |SELECT d1, d2, inter, x.n AS n1, y.n AS n2,
-         | round(inter / (x.n + y.n - inter), 6) AS jaccard
-         |FROM p JOIN n x ON d1 = x.doc_id JOIN n y ON d2 = y.doc_id
-         |WHERE inter / (x.n + y.n - inter) >= 0.6
-         |ORDER BY d1, d2""".stripMargin,
-    "dedup_containment_capped" ->
-      s"""$cappedPairCtes
-         |SELECT d1, d2, inter, x.n AS n1, y.n AS n2,
-         | round(inter / least(x.n, y.n), 6) AS containment
-         |FROM p JOIN n x ON d1 = x.doc_id JOIN n y ON d2 = y.doc_id
-         |WHERE inter / least(x.n, y.n) >= 0.8
-         |ORDER BY d1, d2""".stripMargin,
-    "text_jaccard_knn_capped" ->
-      s"""$cappedPairCtes,
-         | pj AS (SELECT d1, d2, inter / (x.n + y.n - inter) AS jac
-         |   FROM p JOIN n x ON d1 = x.doc_id JOIN n y ON d2 = y.doc_id
-         |   WHERE inter >= 2),
-         | sym AS (SELECT d1 AS doc_id, d2 AS nbr, jac FROM pj
-         |   UNION ALL SELECT d2, d1, jac FROM pj),
-         | r AS (SELECT doc_id, nbr, jac, row_number() OVER (
-         |     PARTITION BY doc_id ORDER BY jac DESC, nbr) AS rk FROM sym)
-         |SELECT doc_id, rk, nbr, round(jac, 6) AS jaccard FROM r
-         |WHERE rk <= 3 ORDER BY doc_id, rk""".stripMargin,
-    "text_jaccard_knn" ->
-      """WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-        | s AS (SELECT DISTINCT doc_id, array_to_string(toks[i:i+2], ' ') AS sh
-        |   FROM (SELECT doc_id, toks,
-        |     unnest(generate_series(1, len(toks) - 2)) AS i FROM t)),
-        | n AS (SELECT doc_id, count(*) AS n FROM s GROUP BY 1),
-        | p AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter
-        |   FROM s a JOIN s b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        | pj AS (SELECT d1, d2, inter / (x.n + y.n - inter) AS jac
-        |   FROM p JOIN n x ON d1 = x.doc_id JOIN n y ON d2 = y.doc_id
-        |   WHERE inter >= 2),
-        | sym AS (SELECT d1 AS doc_id, d2 AS nbr, jac FROM pj
-        |   UNION ALL SELECT d2, d1, jac FROM pj),
-        | r AS (SELECT doc_id, nbr, jac, row_number() OVER (
-        |     PARTITION BY doc_id ORDER BY jac DESC, nbr) AS rk FROM sym)
-        |SELECT doc_id, rk, nbr, round(jac, 6) AS jaccard FROM r
-        |WHERE rk <= 3 ORDER BY doc_id, rk""".stripMargin,
-    "dedup_containment" ->
-      """WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-        | s AS (SELECT DISTINCT doc_id, array_to_string(toks[i:i+2], ' ') AS sh
-        |   FROM (SELECT doc_id, toks,
-        |     unnest(generate_series(1, len(toks) - 2)) AS i FROM t)),
-        | n AS (SELECT doc_id, count(*) AS n FROM s GROUP BY 1),
-        | p AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter
-        |   FROM s a JOIN s b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2)
-        |SELECT d1, d2, inter, x.n AS n1, y.n AS n2,
-        | round(inter / least(x.n, y.n), 6) AS containment
-        |FROM p JOIN n x ON d1 = x.doc_id JOIN n y ON d2 = y.doc_id
-        |WHERE inter / least(x.n, y.n) >= 0.8
-        |ORDER BY d1, d2""".stripMargin,
-    "dedup_simhash" ->
-      s"""$simhashCte
-         |SELECT doc_id, simhash FROM sim ORDER BY doc_id""".stripMargin,
-    // Oracle is the brute-force O(n²) pair scan over the 64-bit hash —
-    // fine at verify scale; the Spark side must reproduce it exactly
-    // through the banding.
-    // True connected-components fixpoint via recursive CTE over the same
-    // brute-force 64-bit-hamming pair set the pairs oracle uses.
-    "dedup_cluster" ->
-      s"""WITH ${clusterLabelsSql("documents")}
-         |SELECT doc_id, cluster_id FROM labels ORDER BY doc_id""".stripMargin,
-    // Incremental maintenance ≡ full recompute: same fixpoint CTE as
-    // dedup_cluster — the equality IS the contract under test.
-    "dedup_cluster_incremental" ->
-      s"""WITH ${clusterLabelsSql("documents")}
-         |SELECT doc_id, cluster_id FROM labels ORDER BY doc_id""".stripMargin,
-    "dedup_cluster_stats" ->
-      s"""WITH ${clusterLabelsSql("documents")},
-         | cs AS (SELECT cluster_id, count(*) AS sz FROM labels GROUP BY 1),
-         | hist AS (SELECT sz, count(*) AS n_clusters FROM cs GROUP BY 1
-         |   UNION ALL
-         |   SELECT 1, (SELECT count(*) FROM documents)
-         |           - (SELECT count(*) FROM labels))
-         |SELECT sz AS cluster_size, CAST(sum(n_clusters) AS BIGINT) AS n_clusters
-         |FROM hist GROUP BY 1 ORDER BY 1""".stripMargin,
-    "dedup_simhash_pairs" ->
-      s"""$simhash64Cte
-         |SELECT a.doc_id AS d1, b.doc_id AS d2,
-         | CAST(bit_count(xor(a.sh_lo, b.sh_lo))
-         |   + bit_count(xor(a.sh_hi, b.sh_hi)) AS BIGINT) AS hamming
-         |FROM sim64 a JOIN sim64 b ON a.doc_id < b.doc_id
-         |WHERE bit_count(xor(a.sh_lo, b.sh_lo))
-         |   + bit_count(xor(a.sh_hi, b.sh_hi)) <= 3
-         |ORDER BY d1, d2""".stripMargin,
-    "dedup_substring" ->
-      s"""WITH w AS (SELECT doc_id, substr(text, i, $SubstringWindowLen) AS win
-         |   FROM (SELECT doc_id, text,
-         |     unnest(generate_series(1, length(text) - ${SubstringWindowLen - 1})) AS i
-         |    FROM documents WHERE length(text) >= $SubstringWindowLen)),
-         | pd AS (SELECT win, doc_id, count(*) AS pos_cnt FROM w GROUP BY 1, 2),
-         | wd AS (SELECT win, count(*) AS df FROM pd GROUP BY 1)
-         |SELECT doc_id, CAST(sum(pos_cnt) AS BIGINT) AS n_windows,
-         | CAST(sum(CASE WHEN df >= 2 THEN pos_cnt ELSE 0 END) AS BIGINT) AS dup_windows,
-         | CAST(floor(sum(CASE WHEN df >= 2 THEN pos_cnt ELSE 0 END) * 10000
-         |   / sum(pos_cnt)) AS BIGINT) AS dup_bp
-         |FROM pd JOIN wd USING (win) GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "dedup_substring_pairs" ->
-      s"""WITH w AS (SELECT doc_id, substr(text, i, $SubstringWindowLen) AS win
-         |   FROM (SELECT doc_id, text,
-         |     unnest(generate_series(1, length(text) - ${SubstringWindowLen - 1})) AS i
-         |    FROM documents WHERE length(text) >= $SubstringWindowLen)),
-         | pd AS (SELECT DISTINCT win, doc_id FROM w),
-         | ok AS (SELECT win FROM pd GROUP BY win
-         |   HAVING count(*) >= 2 AND count(*) <= $SubstringPairDfCeiling)
-         |SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS n_shared
-         |FROM pd a JOIN pd b ON a.win = b.win AND a.doc_id < b.doc_id
-         |JOIN ok ON a.win = ok.win
-         |GROUP BY 1, 2
-         |ORDER BY n_shared DESC, d1, d2 LIMIT 100""".stripMargin,
-    "dedup_cdc_chunks" ->
-      """WITH d AS (SELECT doc_id, text, length(text) AS len FROM documents),
-        | cuts AS (SELECT doc_id, i FROM (
-        |    SELECT doc_id, text, unnest(generate_series(8, len)) AS i
-        |    FROM d WHERE len >= 8)
-        |   WHERE substr(md5(substr(text, i - 7, 8)), 1, 1) = '0'),
-        | bnd AS (SELECT DISTINCT doc_id, i FROM (
-        |    SELECT doc_id, i FROM cuts
-        |    UNION ALL SELECT doc_id, len FROM d)),
-        | spans AS (SELECT doc_id, i,
-        |    COALESCE(lag(i) OVER (PARTITION BY doc_id ORDER BY i), 0) + 1
-        |      AS start
-        |   FROM bnd),
-        | inst AS (SELECT s.doc_id, md5(substr(text, start, i - start + 1))
-        |     AS digest, i - start + 1 AS clen
-        |   FROM spans s JOIN d USING (doc_id)),
-        | dup AS (SELECT digest, count(DISTINCT doc_id) AS nd
-        |   FROM inst GROUP BY 1),
-        | per AS (SELECT doc_id, count(*) AS n_chunks,
-        |    sum(CASE WHEN nd >= 2 THEN 1 ELSE 0 END) AS n_dup_chunks,
-        |    sum(CASE WHEN nd >= 2 THEN clen ELSE 0 END) AS dup_chars
-        |   FROM inst JOIN dup USING (digest) GROUP BY 1)
-        |SELECT per.doc_id, CAST(n_chunks AS BIGINT) AS n_chunks,
-        | CAST(n_dup_chunks AS BIGINT) AS n_dup_chunks,
-        | CAST(dup_chars AS BIGINT) AS dup_chars,
-        | round(CAST(dup_chars AS DOUBLE) / len, 6) AS dup_frac
-        |FROM per JOIN d USING (doc_id) ORDER BY doc_id""".stripMargin,
+  val ops: Seq[Op] = Seq(
+    // Exact dedup: group identical content, keep the smallest doc_id.
+    Op("dedup_exact", (s, dir) =>
+      t(s, dir, "documents")
+        .groupBy("text")
+        .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("dup_cnt"))
+        .select("keep_id", "dup_cnt", "text")
+        .orderBy("keep_id"),
+      Some("""SELECT min(doc_id) AS keep_id, count(*) AS dup_cnt, text
+             |FROM documents GROUP BY text ORDER BY keep_id""".stripMargin)),
+
+    // URL-CANONICAL dedup — the first screen of any web crawl: the same
+    // payload is reachable under protocol / host-case / default-port /
+    // tracking-param variants, so the dedup key is the CANONICAL form
+    // (lowercased host, port and utm_* noise dropped, the identifying
+    // query param kept), not the raw string. The URL is synthesized
+    // deterministically (this testdata ships no URL column) with exactly
+    // those variations; canonicalization is real `parse_url` work in the
+    // scan stage (HOST via java.net.URL drops the port for free), and
+    // the dedup itself is dedup_exact's one two-phase agg on the canonical
+    // key — zero extra exchanges at any corpus size. The oracle states
+    // the canonical closed form straight from (source, doc_id).
+    Op("dedup_url_canonical", (s, dir) => {
+      val url = concat(
+        when(col("doc_id") % 2 === 0, lit("https://")).otherwise(lit("http://")),
+        when(col("doc_id") % 3 === 0, upper(col("source"))).otherwise(col("source")),
+        lit(".Example.org"),
+        when(col("doc_id") % 5 === 0, lit(":443")).otherwise(lit("")),
+        lit("/docs/"), (col("doc_id") % 40).cast("string"),
+        lit("?utm_campaign=feed&id="), (col("doc_id") % 5).cast("string"))
+      t(s, dir, "documents").select(col("doc_id"), url.as("url"))
+        .withColumn("canon", concat(
+          lower(parse_url(col("url"), lit("HOST"))),
+          parse_url(col("url"), lit("PATH")),
+          lit("?id="), parse_url(col("url"), lit("QUERY"), lit("id"))))
+        .groupBy("canon")
+        .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("dup_cnt"))
+        .orderBy("canon")
+    },
+      Some("""WITH c AS (SELECT doc_id,
+             |   lower(source) || '.example.org/docs/' || CAST(doc_id % 40 AS VARCHAR)
+             |     || '?id=' || CAST(doc_id % 5 AS VARCHAR) AS canon
+             | FROM documents)
+             |SELECT canon, min(doc_id) AS keep_id, count(*) AS dup_cnt
+             |FROM c GROUP BY canon ORDER BY canon""".stripMargin)),
+
+    // BLOOM-SCREENED incremental dedup — the "is this new batch already
+    // in the corpus?" membership check restructured for 100 TB: an exact
+    // semi join of batch×corpus would shuffle the full corpus digest set
+    // on every ingest; instead the corpus folds into ONE mergeable bloom
+    // sketch (bloom_filter_agg partials, a scalar subquery broadcast to
+    // every batch task), `might_contain` clears definite-new docs with
+    // zero joins (no false negatives), and only the maybe-dup survivors
+    // — |batch| × corpus-hit-rate rows — reach the exact semi join that
+    // resolves false positives. The RESULT is exact (the bloom is pure
+    // pruning), so the oracle is the plain membership SQL.
+    Op("dedup_bloom_screen", (s, dir) => {
+      graft.functions.VecFunctions.registerMightContain(s)
+      val docs = t(s, dir, "documents")
+      docs.filter(col("doc_id") % 10 =!= 0).select(md5(col("text")).as("h"))
+        .createOrReplaceTempView("graft_bloom_corpus")
+      val corpus = s.table("graft_bloom_corpus")
+      val batch = docs.filter(col("doc_id") % 10 === 0)
+        .select(col("doc_id"), md5(col("text")).as("h"))
+      val screened = batch.withColumn("maybe_dup", expr(
+        """might_contain(
+          |  (SELECT bloom_filter_agg(xxhash64(h), 5000L, 50000L)
+          |   FROM graft_bloom_corpus),
+          |  xxhash64(h))""".stripMargin))
+      val confirmed = screened.filter(col("maybe_dup"))
+        .join(corpus, Seq("h"), "left_semi")
+        .select(col("doc_id"), lit(true).as("is_dup"))
+      screened.filter(!col("maybe_dup"))
+        .select(col("doc_id"), lit(false).as("is_dup"))
+        .unionByName(confirmed)
+        // a maybe-dup that the exact join rejects is a bloom false
+        // positive — it re-enters as new
+        .unionByName(screened.filter(col("maybe_dup"))
+          .join(corpus, Seq("h"), "left_anti")
+          .select(col("doc_id"), lit(false).as("is_dup")))
+        .orderBy("doc_id")
+    },
+      Some("""SELECT d.doc_id,
+             | EXISTS (SELECT 1 FROM documents c
+             |   WHERE c.doc_id % 10 <> 0 AND c.text = d.text) AS is_dup
+             |FROM documents d WHERE d.doc_id % 10 = 0
+             |ORDER BY d.doc_id""".stripMargin)),
+
+    // Exact 3-gram-shingle Jaccard pairs ≥ 0.6 via the inverted index
+    // ([[jaccardPairs]] — shared with the GraphOps near-dup graph).
+    //
+    // Scale ledger (measured sf0.1, 5k docs / 260k index rows): pair
+    // expansion is Σ_sh c·(c−1)/2 = 1.27M rows — linear in corpus size as
+    // long as per-shingle doc-frequency stays bounded (max 25 here). For
+    // corpora with ultra-hot shingles, put a prefix filter (Chaudhuri et
+    // al.) in front of the SAME pipeline: rank shingles by rarity per doc,
+    // index only each doc's rarest n−⌈τn⌉+1 shingles to generate candidate
+    // pairs, then verify. We profiled that variant: candidate generation is
+    // 4× cheaper (300k vs 1.27M rows) but array-based verification costs
+    // ~90µs/row in column→JVM conversion (27s total) — a net 10× LOSS at
+    // this shingle-frequency distribution. The group-count plan wins
+    // whenever the expansion is near-linear; switch to prefix+verify only
+    // when hot shingles make the expansion super-linear.
+    Op("dedup_ngram_jaccard", (s, dir) =>
+      tau0Pairs(s, dir).filter(col("jaccard") >= 0.6)
+        .select(col("d1"), col("d2"), col("inter"), col("n1"), col("n2"),
+          round(col("jaccard"), 6).as("jaccard"))
+        .orderBy("d1", "d2"),
+      Some("""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
+             | s AS (SELECT DISTINCT doc_id, array_to_string(toks[i:i+2], ' ') AS sh
+             |   FROM (SELECT doc_id, toks,
+             |     unnest(generate_series(1, len(toks) - 2)) AS i FROM t)),
+             | n AS (SELECT doc_id, count(*) AS n FROM s GROUP BY 1),
+             | p AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter
+             |   FROM s a JOIN s b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2)
+             |SELECT d1, d2, inter, x.n AS n1, y.n AS n2,
+             | round(inter / (x.n + y.n - inter), 6) AS jaccard
+             |FROM p JOIN n x ON d1 = x.doc_id JOIN n y ON d2 = y.doc_id
+             |WHERE inter / (x.n + y.n - inter) >= 0.6
+             |ORDER BY d1, d2""".stripMargin)),
+
+    // Top-3 nearest neighbors per document by exact shingle Jaccard —
+    // the kNN REPORT over the same inverted-index miner (τ = 0, ≥ 2
+    // shared shingles to floor out incidental single-shingle overlap):
+    // where the dedup keys answer "which pairs exceed the threshold",
+    // this answers "what is each doc's closest neighborhood" (threshold
+    // tuning, boilerplate diagnosis, doc-level novelty). Pair mining
+    // cost is IDENTICAL to dedup_containment (the τ filter was always
+    // post-agg); the additions are the symmetric expansion (2× pair
+    // rows, ids + one double) and the top-3 pick — which runs as the
+    // mergeable bounded-heap TopKAgg (agg_topk_heap's aggregator, same
+    // (score desc, id asc) total order the row_number oracle states),
+    // NOT a window: a per-doc window would re-shuffle and sort ALL 2×
+    // pair rows, the heap truncates map-side so only docs×3 pairs cross
+    // the exchange — at the 10× point that is the difference between a
+    // ~20M-row sort and a 50k×3 aggregate. The unrounded jaccard
+    // doubles are identical integer ratios in both engines, so the pick
+    // is deterministic.
+    Op("text_jaccard_knn", (s, dir) =>
+      jaccardKnn(tau0Pairs(s, dir).filter(col("inter") >= 2)),
+      Some("""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
+             | s AS (SELECT DISTINCT doc_id, array_to_string(toks[i:i+2], ' ') AS sh
+             |   FROM (SELECT doc_id, toks,
+             |     unnest(generate_series(1, len(toks) - 2)) AS i FROM t)),
+             | n AS (SELECT doc_id, count(*) AS n FROM s GROUP BY 1),
+             | p AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter
+             |   FROM s a JOIN s b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2),
+             | pj AS (SELECT d1, d2, inter / (x.n + y.n - inter) AS jac
+             |   FROM p JOIN n x ON d1 = x.doc_id JOIN n y ON d2 = y.doc_id
+             |   WHERE inter >= 2),
+             | sym AS (SELECT d1 AS doc_id, d2 AS nbr, jac FROM pj
+             |   UNION ALL SELECT d2, d1, jac FROM pj),
+             | r AS (SELECT doc_id, nbr, jac, row_number() OVER (
+             |     PARTITION BY doc_id ORDER BY jac DESC, nbr) AS rk FROM sym)
+             |SELECT doc_id, rk, nbr, round(jac, 6) AS jaccard FROM r
+             |WHERE rk <= 3 ORDER BY doc_id, rk""".stripMargin)),
+
+    // Jaccard threshold tuning curve: pair counts per similarity decile
+    // from ONE miner pass — the report that picks τ for the dedup keys
+    // (where does the distribution shoulder off from incidental overlap
+    // to true duplication). The decile is INTEGER arithmetic
+    // ((10·inter) div union — never floor(jac·10), whose double product
+    // can land on either side of a decile boundary), so the histogram
+    // is bit-portable. Cost: the shared inverted-index miner + one
+    // 11-cell two-phase agg.
+    Op("dedup_threshold_sweep", (s, dir) =>
+      tau0Pairs(s, dir)
+        .groupBy(expr("(10 * inter) div (n1 + n2 - inter)").cast("int")
+          .as("jac_decile"))
+        .agg(count(lit(1)).as("n_pairs"))
+        .orderBy("jac_decile"),
+      Some("""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
+             | s AS (SELECT DISTINCT doc_id, array_to_string(toks[i:i+2], ' ') AS sh
+             |   FROM (SELECT doc_id, toks,
+             |     unnest(generate_series(1, len(toks) - 2)) AS i FROM t)),
+             | n AS (SELECT doc_id, count(*) AS n FROM s GROUP BY 1),
+             | p AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter
+             |   FROM s a JOIN s b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2)
+             |SELECT CAST((10 * inter) // (x.n + y.n - inter) AS INT) AS jac_decile,
+             | count(*) AS n_pairs
+             |FROM p JOIN n x ON d1 = x.doc_id JOIN n y ON d2 = y.doc_id
+             |GROUP BY 1 ORDER BY 1""".stripMargin)),
+
+    // The 100 TB form of the threshold sweep: the exact key's pair
+    // expansion rides Σ_sh df·(df−1)/2, which densifies super-linearly
+    // on a fixed shingle vocabulary (measured ×162.8 at the 10× point —
+    // SCALE.md §9a), so the tuning curve gets a DF-CAPPED twin: postings
+    // of a shingle hotter than the adaptive [[minerDfCap]] are thinned to
+    // ~cap survivors by a DETERMINISTIC salted-md5 residue (keep iff
+    // hex₁₋₈(md5(salt:shingle:doc)) mod df < cap — a fixed pseudo-random
+    // subset, NOT a per-run sample, so the histogram is bit-identical
+    // cross-engine and oracle-checkable), bounding per-shingle pair
+    // fan-out at ~cap²/2 and making the sweep linear at any scale.
+    // Doc sizes (n1, n2) stay EXACT — only intersections thin — so the
+    // decile of a surviving pair can only drift down, and only on pairs
+    // whose overlap is mostly boilerplate-hot shingles; measured decile
+    // mass drift vs the exact key ≤1% at sf0.1 (OperatorSmokeSpec pin).
+    // Round 13: the thinned miner is the SHARED [[cappedTau0Pairs]] memo
+    // under the ADAPTIVE [[minerDfCap]] (see its scaladoc for why a
+    // fixed cap=16 fails at 10×), consumed by all four `_capped` twins.
+    Op("dedup_threshold_sweep_capped", (s, dir) =>
+      cappedTau0Pairs(s, dir)
+        .groupBy(expr("(10 * inter) div (n1 + n2 - inter)").cast("int")
+          .as("jac_decile"))
+        .agg(count(lit(1)).as("n_pairs"))
+        .orderBy("jac_decile"),
+      // hex₁₋₈ of the salted md5 decoded positionally (the sample_weighted
+      // idiom — DuckDB has no base-conv builtin); cap mirrored literally.
+      // The CTE prefix (shared df-capped pair miner) serves all four
+      // `_capped` oracles, exactly as [[cappedTau0Pairs]] serves the keys.
+      Some(s"""$cappedPairCtes
+              |SELECT CAST((10 * inter) // (x.n + y.n - inter) AS INT) AS jac_decile,
+              | count(*) AS n_pairs
+              |FROM p JOIN n x ON d1 = x.doc_id JOIN n y ON d2 = y.doc_id
+              |GROUP BY 1 ORDER BY 1""".stripMargin)),
+
+    // The 100 TB form of dedup_ngram_jaccard: identical semantics over
+    // the df-capped miner. Sizes stay exact and intersections only thin,
+    // so capped jaccard ≤ exact jaccard pairwise — the survivor set is a
+    // SUBSET of the exact key's (pinned), losing only pairs whose overlap
+    // is mostly boilerplate-hot shingles; measured recall at sf0.1 is
+    // pinned in OperatorSmokeSpec. Keep the exact key as the oracle
+    // anchor at test scale; ship THIS one against a real corpus.
+    Op("dedup_ngram_jaccard_capped", (s, dir) =>
+      cappedTau0Pairs(s, dir).filter(col("jaccard") >= 0.6)
+        .select(col("d1"), col("d2"), col("inter"), col("n1"), col("n2"),
+          round(col("jaccard"), 6).as("jaccard"))
+        .orderBy("d1", "d2"),
+      Some(s"""$cappedPairCtes
+              |SELECT d1, d2, inter, x.n AS n1, y.n AS n2,
+              | round(inter / (x.n + y.n - inter), 6) AS jaccard
+              |FROM p JOIN n x ON d1 = x.doc_id JOIN n y ON d2 = y.doc_id
+              |WHERE inter / (x.n + y.n - inter) >= 0.6
+              |ORDER BY d1, d2""".stripMargin)),
+
+    // The 100 TB form of dedup_containment: inter / min(n1, n2) over the
+    // capped miner — same subset guarantee (least(n1,n2) exact, inter
+    // thinned ⇒ capped containment ≤ exact containment pairwise).
+    Op("dedup_containment_capped", (s, dir) =>
+      cappedTau0Pairs(s, dir)
+        .withColumn("containment", col("inter") / least(col("n1"), col("n2")))
+        .filter(col("containment") >= 0.8)
+        .select(col("d1"), col("d2"), col("inter"), col("n1"), col("n2"),
+          round(col("containment"), 6).as("containment"))
+        .orderBy("d1", "d2"),
+      Some(s"""$cappedPairCtes
+              |SELECT d1, d2, inter, x.n AS n1, y.n AS n2,
+              | round(inter / least(x.n, y.n), 6) AS containment
+              |FROM p JOIN n x ON d1 = x.doc_id JOIN n y ON d2 = y.doc_id
+              |WHERE inter / least(x.n, y.n) >= 0.8
+              |ORDER BY d1, d2""".stripMargin)),
+
+    // The 100 TB form of text_jaccard_knn: same bounded-heap top-3 over
+    // the capped miner. Neighbor RANKINGS can reorder where thinning
+    // bites (scores drift down non-uniformly), so the pin here is top-1
+    // agreement rate + mean score drift, not subset.
+    Op("text_jaccard_knn_capped", (s, dir) =>
+      jaccardKnn(cappedTau0Pairs(s, dir).filter(col("inter") >= 2)),
+      Some(s"""$cappedPairCtes,
+              | pj AS (SELECT d1, d2, inter / (x.n + y.n - inter) AS jac
+              |   FROM p JOIN n x ON d1 = x.doc_id JOIN n y ON d2 = y.doc_id
+              |   WHERE inter >= 2),
+              | sym AS (SELECT d1 AS doc_id, d2 AS nbr, jac FROM pj
+              |   UNION ALL SELECT d2, d1, jac FROM pj),
+              | r AS (SELECT doc_id, nbr, jac, row_number() OVER (
+              |     PARTITION BY doc_id ORDER BY jac DESC, nbr) AS rk FROM sym)
+              |SELECT doc_id, rk, nbr, round(jac, 6) AS jaccard FROM r
+              |WHERE rk <= 3 ORDER BY doc_id, rk""".stripMargin)),
+
+    // Asymmetric CONTAINMENT dedup: inter / min(n1, n2) — the metric
+    // that catches subset duplicates symmetric Jaccard misses (a short
+    // doc pasted whole into a long one scores containment 1.0 but
+    // Jaccard n1/n2 ≈ 0; boilerplate-wrapper dups are exactly this
+    // shape). Same inverted-index miner as dedup_ngram_jaccard (tau = 0
+    // keeps every co-occurring pair; the aggregation cost is identical —
+    // the jaccard threshold was applied after the pair agg anyway), so
+    // the scale ledger there applies unchanged.
+    Op("dedup_containment", (s, dir) =>
+      tau0Pairs(s, dir)
+        .withColumn("containment", col("inter") / least(col("n1"), col("n2")))
+        .filter(col("containment") >= 0.8)
+        .select(col("d1"), col("d2"), col("inter"), col("n1"), col("n2"),
+          round(col("containment"), 6).as("containment"))
+        .orderBy("d1", "d2"),
+      Some("""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
+             | s AS (SELECT DISTINCT doc_id, array_to_string(toks[i:i+2], ' ') AS sh
+             |   FROM (SELECT doc_id, toks,
+             |     unnest(generate_series(1, len(toks) - 2)) AS i FROM t)),
+             | n AS (SELECT doc_id, count(*) AS n FROM s GROUP BY 1),
+             | p AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter
+             |   FROM s a JOIN s b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2)
+             |SELECT d1, d2, inter, x.n AS n1, y.n AS n2,
+             | round(inter / least(x.n, y.n), 6) AS containment
+             |FROM p JOIN n x ON d1 = x.doc_id JOIN n y ON d2 = y.doc_id
+             |WHERE inter / least(x.n, y.n) >= 0.8
+             |ORDER BY d1, d2""".stripMargin)),
+
+    // The dedup REPORT every cleaning run reads before committing: the
+    // cluster-size histogram (how much mass sits in how-big duplicate
+    // clusters), singletons included — un-clustered docs are size-1
+    // clusters, counted via one anti join, so corpus_docs =
+    // Σ size·n_clusters reconciles exactly (pinned in the spec). Scale:
+    // two id-only aggs over the CC labels + one anti join of ids; the
+    // histogram itself is at most |distinct sizes| rows.
+    Op("dedup_cluster_stats", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      val labels = corpusLabelsFull(s, dir)
+      val hist = labels.groupBy("cluster_id").agg(count(lit(1)).as("sz"))
+        .groupBy("sz").agg(count(lit(1)).as("n_clusters"))
+      val singles = docs.join(labels, Seq("doc_id"), "left_anti")
+        .agg(count(lit(1)).as("n_clusters"))
+        .select(lit(1L).as("sz"), col("n_clusters"))
+      hist.union(singles)
+        .groupBy("sz").agg(sum("n_clusters").as("n_clusters"))
+        .select(col("sz").as("cluster_size"), col("n_clusters"))
+        .orderBy("cluster_size")
+    },
+      Some(s"""WITH ${clusterLabelsSql("documents")},
+              | cs AS (SELECT cluster_id, count(*) AS sz FROM labels GROUP BY 1),
+              | hist AS (SELECT sz, count(*) AS n_clusters FROM cs GROUP BY 1
+              |   UNION ALL
+              |   SELECT 1, (SELECT count(*) FROM documents)
+              |           - (SELECT count(*) FROM labels))
+              |SELECT sz AS cluster_size, CAST(sum(n_clusters) AS BIGINT) AS n_clusters
+              |FROM hist GROUP BY 1 ORDER BY 1""".stripMargin)),
+
+    // 32-bit SimHash from the per-nibble high bit of each token's MD5:
+    // bit_j = sign of Σ_tokens (±1). Engine-portable (no platform hash).
+    Op("dedup_simhash", (s, dir) =>
+      simhashes(t(s, dir, "documents")).orderBy("doc_id"),
+      Some(s"""$simhashCte
+              |SELECT doc_id, simhash FROM sim ORDER BY doc_id""".stripMargin)),
+
+    // SimHash near-dup PAIRS at hamming distance ≤ 3, found by pigeonhole
+    // banding: split the 32-bit hash into 4 disjoint 8-bit blocks — any
+    // pair within distance 3 must agree on ≥1 whole block (3 flipped bits
+    // touch at most 3 of 4 blocks), so the block equi-join has exact
+    // recall. Verification is one codegen'd bit_count(xor). The same
+    // banding bounds candidates at corpus scale: pairs per block-bucket,
+    // not |docs|². The pair frame is the session-memoized corpus
+    // artifact ([[corpusSimhashPairs]]) the cluster keys also read.
+    Op("dedup_simhash_pairs", (s, dir) =>
+      corpusSimhashPairs(s, dir).orderBy("d1", "d2"),
+      Some(s"""$simhash64Cte
+              |SELECT a.doc_id AS d1, b.doc_id AS d2,
+              | CAST(bit_count(xor(a.sh_lo, b.sh_lo))
+              |   + bit_count(xor(a.sh_hi, b.sh_hi)) AS BIGINT) AS hamming
+              |FROM sim64 a JOIN sim64 b ON a.doc_id < b.doc_id
+              |WHERE bit_count(xor(a.sh_lo, b.sh_lo))
+              |   + bit_count(xor(a.sh_hi, b.sh_hi)) <= 3
+              |ORDER BY d1, d2""".stripMargin)),
+
+    // Near-dup CLUSTERS from the SimHash pair graph: min-label
+    // propagation + pointer jumping iterated to a measured fixpoint
+    // assigns every clustered doc the smallest doc_id reachable from it —
+    // the canonical-representative step that turns pair mining into
+    // actual dedup. Each round is two equi-joins + one min-agg (all
+    // codegen'd); pointer jumping doubles the horizon per round, so
+    // diameter-D components converge in O(log D) rounds, and the
+    // zero-changes exit means NO diameter silently under-merges. Shuffle
+    // width is driven by the measured |edges|, not the corpus setting.
+    // Oracle: DuckDB recursive CTE to the true fixpoint. The label table
+    // is the session-memoized corpus artifact ([[corpusLabelsFull]]) —
+    // mined and clustered once per (session, corpus), shared with the
+    // cluster-stats report, exactly as a production pipeline persists
+    // its label table once per corpus snapshot.
+    Op("dedup_cluster", (s, dir) =>
+      corpusLabelsFull(s, dir).orderBy("doc_id"),
+      // Oracle is the brute-force O(n²) pair scan over the 64-bit hash —
+      // fine at verify scale; the Spark side must reproduce it exactly
+      // through the banding.
+      // True connected-components fixpoint via recursive CTE over the same
+      // brute-force 64-bit-hamming pair set the pairs oracle uses.
+      Some(s"""WITH ${clusterLabelsSql("documents")}
+              |SELECT doc_id, cluster_id FROM labels ORDER BY doc_id""".stripMargin)),
+
+    // INCREMENTAL ingest form of dedup_cluster: the corpus (80% of docs)
+    // carries persisted labels; the ingest batch (doc_id % 5 = 0) mines
+    // its pairs by PROBING the band index (simhashPairsProbe — never a
+    // corpus self-join) and labels update through the bounded root graph
+    // (incrementalClusters). The oracle is the full-recompute fixpoint
+    // over the union pair set — incremental maintenance must be
+    // bit-identical to recomputation, which is exactly what makes it
+    // safe to run per-batch at 100 TB instead of re-clustering the
+    // corpus on every ingest.
+    Op("dedup_cluster_incremental", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      // Existing labels AND the corpus band index come from session
+      // memos (the persisted-state stand-ins a production ingest reads);
+      // the per-batch work this key times is banding THE BATCH, the
+      // index probe and the root-graph update — which is what an ingest
+      // pays. Round 15: the probe formerly re-banded (re-simhashed) the
+      // ENTIRE corpus per call; per-batch cost must scale with the
+      // batch, not the corpus (guide §2.4 / the key's own contract).
+      val oldLabels = corpusLabels80(s, dir)
+      val newPairs = simhashPairsProbeIndexed(
+        corpusBanded64(s, dir),
+        banded64(docs.filter(col("doc_id") % 5 === 0)),
+        maxHamming = 3).select("d1", "d2")
+      incrementalClusters(oldLabels, newPairs).orderBy("doc_id")
+    },
+      // Incremental maintenance ≡ full recompute: same fixpoint CTE as
+      // dedup_cluster — the equality IS the contract under test.
+      Some(s"""WITH ${clusterLabelsSql("documents")}
+              |SELECT doc_id, cluster_id FROM labels ORDER BY doc_id""".stripMargin)),
+
+    // MinHash(64) + LSH(16 bands × 4 rows) with an EXACT-Jaccard verify
+    // stage — the full MinHash-dedup pipeline a curation run deploys:
+    // band collisions MINE candidates (never an all-pairs join), then
+    // each candidate is re-verified against the true shingle Jaccard and
+    // only verified survivors (J ≥ 0.8) are emitted. Because the output
+    // is the exact-verified pair set, the key is ORACLE-CHECKABLE (the
+    // all-pairs exact SQL at the same τ) — the sketch's job is recall,
+    // and at τ=0.8 the 16×4 banding misses a qualifying pair with prob
+    // (1−J⁴)¹⁶ ≤ 2.2e-4 (pinned exactly = 100% on both test SFs by the
+    // oracle hash; the recall property in DedupSimilaritySpec covers the
+    // sketch itself). Scale: candidates carry only id pairs through the
+    // band join (signatures never shuffle); [[cappedBandPairs]] caps hot
+    // buckets so mass duplication can't mine c²; the verify stage joins
+    // ONLY candidate docs' shingles (a semi-join-pruned frame), so its
+    // cost is |candidates|·|shingles/doc|, linear in the mined set —
+    // the inverted-index miner's full shingle self-join never runs.
+    Op("dedup_near_minhash", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      val sh = docShingles(docs)
+      val sigs = minhashSignatures(sh)
+      val bands = sigs.select(col("doc_id"),
+        posexplode(col("bands")).as(Seq("band_id", "band_hash")))
+      // Both bounded frames are referenced by three downstream branches
+      // each; localCheckpoint (the simhashPairsProbe pattern) mines each
+      // ONCE instead of re-running the band join / shingle prune per
+      // branch, and keeps the final plan's exchange count flat.
+      val cand = cappedBandPairs(bands, "doc_id", Seq("band_id", "band_hash"))
+        .select("d1", "d2").localCheckpoint()
+      val candIds = cand.select(explode(array(col("d1"), col("d2")))
+        .as("doc_id")).distinct()
+      // Shingle ONLY the candidate docs for the verify stage (prune the
+      // corpus first, then explode) — re-exploding the whole corpus here
+      // measured ~2× the verify stage's cost at sf0.1.
+      val shC = docShingles(docs.join(candIds, "doc_id")).localCheckpoint()
+      val cnt = shC.groupBy("doc_id").agg(count(lit(1)).as("n"))
+      cand
+        .join(shC.select(col("doc_id").as("d1"), col("shingle")), "d1")
+        .join(shC.select(col("doc_id").as("d2"), col("shingle")),
+          Seq("d2", "shingle"))
+        .groupBy("d1", "d2").agg(count(lit(1)).as("inter"))
+        .join(cnt.select(col("doc_id").as("d1"), col("n").as("n1")), "d1")
+        .join(cnt.select(col("doc_id").as("d2"), col("n").as("n2")), "d2")
+        .withColumn("jaccard",
+          col("inter") / (col("n1") + col("n2") - col("inter")))
+        .filter(col("jaccard") >= 0.8)
+        .select(col("d1"), col("d2"), col("inter"), col("n1"), col("n2"),
+          round(col("jaccard"), 6).as("jaccard"))
+        .orderBy("d1", "d2")
+    },
+      // The MinHash key emits the EXACT-verified survivor set, so its
+      // oracle is the all-pairs exact Jaccard at the same τ=0.8 — the
+      // banding may only MISS pairs (never invent them), and a hash match
+      // here certifies 100% recall of the sketch path on this corpus.
+      Some("""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
+             | s AS (SELECT DISTINCT doc_id, array_to_string(toks[i:i+2], ' ') AS sh
+             |   FROM (SELECT doc_id, toks,
+             |     unnest(generate_series(1, len(toks) - 2)) AS i FROM t)),
+             | n AS (SELECT doc_id, count(*) AS n FROM s GROUP BY 1),
+             | p AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter
+             |   FROM s a JOIN s b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2)
+             |SELECT d1, d2, inter, x.n AS n1, y.n AS n2,
+             | round(inter / (x.n + y.n - inter), 6) AS jaccard
+             |FROM p JOIN n x ON d1 = x.doc_id JOIN n y ON d2 = y.doc_id
+             |WHERE inter / (x.n + y.n - inter) >= 0.8
+             |ORDER BY d1, d2""".stripMargin)),
+
+    // Exact-substring span dedup (Lee et al. 2022, "Deduplicating
+    // Training Data Makes Language Models Better"): a doc position is
+    // duplicated if its 30-char window occurs verbatim in ≥2 distinct
+    // docs. Per-doc coverage = the fraction of positions that are
+    // duplicated — the signal used to drop or trim mass-copied spans.
+    // Linear by construction: window extraction is a projection, the
+    // cross-doc df is an agg (never a pair join), so boilerplate can't
+    // go quadratic here. 3 bounded shuffles: (win,doc) agg → df window
+    // riding the win partitioning → per-doc agg.
+    Op("dedup_substring", (s, dir) => {
+      // Round 15 (guide §2.3): same narrow-key treatment as the pair
+      // key — the window text is only a grouping identity, so xxhash64
+      // it before the (win, doc) agg and the df window.
+      val pd = perDocWindows(t(s, dir, "documents"), SubstringWindowLen)
+        .select(xxhash64(col("win")).as("win"), col("doc_id"))
+        .groupBy("win", "doc_id").agg(count(lit(1)).as("pos_cnt"))
+        .withColumn("df", count(lit(1)).over(
+          org.apache.spark.sql.expressions.Window.partitionBy("win")))
+      pd.groupBy("doc_id").agg(
+          sum("pos_cnt").as("n_windows"),
+          sum(when(col("df") >= 2, col("pos_cnt")).otherwise(0L)).as("dup_windows"))
+        .withColumn("dup_bp",
+          floor(col("dup_windows") * 10000 / col("n_windows")))
+        .orderBy("doc_id")
+    },
+      Some(s"""WITH w AS (SELECT doc_id, substr(text, i, $SubstringWindowLen) AS win
+              |   FROM (SELECT doc_id, text,
+              |     unnest(generate_series(1, length(text) - ${SubstringWindowLen - 1})) AS i
+              |    FROM documents WHERE length(text) >= $SubstringWindowLen)),
+              | pd AS (SELECT win, doc_id, count(*) AS pos_cnt FROM w GROUP BY 1, 2),
+              | wd AS (SELECT win, count(*) AS df FROM pd GROUP BY 1)
+              |SELECT doc_id, CAST(sum(pos_cnt) AS BIGINT) AS n_windows,
+              | CAST(sum(CASE WHEN df >= 2 THEN pos_cnt ELSE 0 END) AS BIGINT) AS dup_windows,
+              | CAST(floor(sum(CASE WHEN df >= 2 THEN pos_cnt ELSE 0 END) * 10000
+              |   / sum(pos_cnt)) AS BIGINT) AS dup_bp
+              |FROM pd JOIN wd USING (win) GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+
+    // Doc pairs ranked by the number of distinct 30-char windows they
+    // share — the text_contamination plan shape: the df count rides a
+    // window over the SAME win partitioning the group-collect needs, the
+    // df ceiling (window in > SubstringPairDfCeiling docs = boilerplate)
+    // filters BEFORE collect_set so every id buffer is ≤ ceiling ids,
+    // and pairs explode from the collected sets (fan-out ≤ ceiling² per
+    // window) instead of a self-join that would evaluate the whole
+    // window-extraction chain twice. Ceiling mirrored in the oracle.
+    Op("dedup_substring_pairs", (s, dir) => {
+      // Round 14: explicit round-robin fan-out before the window explode
+      // (the 1c250bb pattern) — the compact test parquet is ONE scan
+      // split, so the per-position substring explode ran single-task;
+      // not a keyed shuffle, hash-exchange budget unchanged. Round 15:
+      // gated on actual scan parallelism (fanOutIfCompact) so a
+      // multi-split production corpus skips the shuffle, and the 30-char
+      // window collapses to xxhash64 before the distinct/df-window/
+      // collect exchanges (guide §2.3) — the window text never reaches
+      // the output, only pair counts do, and at the 10× point the
+      // string-keyed exchanges cost 13.0 s (superlinear in bytes).
+      perDocWindows(fanOutIfCompact(t(s, dir, "documents")),
+        SubstringWindowLen)
+        .select(xxhash64(col("win")).as("win"), col("doc_id")).distinct()
+        .withColumn("df", count(lit(1)).over(
+          org.apache.spark.sql.expressions.Window.partitionBy("win")))
+        .filter(col("df") >= 2 && col("df") <= SubstringPairDfCeiling)
+        .groupBy("win").agg(collect_set(col("doc_id")).as("ds"))
+        .select(explode(col("ds")).as("d1"), col("ds"))
+        .select(col("d1"), explode(col("ds")).as("d2"))
+        .filter(col("d1") < col("d2"))
+        .groupBy("d1", "d2").agg(count(lit(1)).as("n_shared"))
+        .orderBy(col("n_shared").desc, col("d1"), col("d2"))
+        .limit(100)
+    },
+      Some(s"""WITH w AS (SELECT doc_id, substr(text, i, $SubstringWindowLen) AS win
+              |   FROM (SELECT doc_id, text,
+              |     unnest(generate_series(1, length(text) - ${SubstringWindowLen - 1})) AS i
+              |    FROM documents WHERE length(text) >= $SubstringWindowLen)),
+              | pd AS (SELECT DISTINCT win, doc_id FROM w),
+              | ok AS (SELECT win FROM pd GROUP BY win
+              |   HAVING count(*) >= 2 AND count(*) <= $SubstringPairDfCeiling)
+              |SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS n_shared
+              |FROM pd a JOIN pd b ON a.win = b.win AND a.doc_id < b.doc_id
+              |JOIN ok ON a.win = ok.win
+              |GROUP BY 1, 2
+              |ORDER BY n_shared DESC, d1, d2 LIMIT 100""".stripMargin)),
+
+    // CONTENT-DEFINED CHUNKING dedup (round 10) — the rsync/LBFS cut
+    // rule (Muthitacharoen et al. 2001) applied to corpus text: a cut
+    // lands after position i when the 8-char gram ending at i hashes
+    // into the cut class (first md5 hex digit '0' ⇒ P(cut) = 1/16,
+    // expected chunk ≈ 16 chars). Because the rule depends only on
+    // CONTENT, an insertion early in a doc shifts every byte but
+    // re-synchronizes the chunk stream at the next cut point — the
+    // property fixed-stride windows (dedup_substring) lack, and the
+    // reason storage dedup and incremental corpus diffs chunk this way.
+    // Release: per-doc chunk census + how much chunk mass also appears
+    // in ≥2 distinct docs. Shape: the gram scan is a bounded projection
+    // (one row per position, the perDocWindows cost), cuts collapse to
+    // ≤len/16 boundary rows per doc, the span window rides a doc_id
+    // partition, and the digest df is one hash agg — linear end to end,
+    // no pair join anywhere. Docs shorter than the gram width get the
+    // whole-doc chunk via the unioned terminal boundary (and the
+    // sequence() is guarded: Spark emits a DESCENDING range when
+    // start > stop — the ts_survival_hazard latent-bug class).
+    Op("dedup_cdc_chunks", (s, dir) => {
+      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      // Round 14: the whole cut-scan → boundary-dedup → lag-window →
+      // text re-join pipeline is ONE codegen'd generator
+      // ([[graft.functions.CdcChunks]]) — the compositional form
+      // materialized a row per character position through a distinct
+      // and a per-doc sort window, then re-joined the corpus text to
+      // digest each chunk (4 exchanges before the df agg; now the df
+      // agg's is the first). Windows, cut rule, boundary dedup and
+      // digests are bit-identical (same substring semantics, same md5
+      // bytes) — guide §1.2 step 1 + §2.4.
+      // Explicit fan-out before the chunker (the agg_bootstrap pattern):
+      // the compact test parquet is ONE scan split, and a single task
+      // would otherwise run every doc's per-position md5 alone — a 100 TB
+      // corpus arrives in thousands of splits and, per the round-15
+      // fanOutIfCompact gate, skips the shuffle outright.
+      val inst = fanOutIfCompact(docs, col("doc_id"))
+        .select(col("doc_id"),
+          explode(graft.functions.CdcChunks.cdcChunks(col("text"), 8))
+            .as("c"))
+        .select(col("doc_id"), col("c.digest").as("digest"),
+          col("c.clen").as("clen"))
+      val dup = inst.groupBy("digest")
+        .agg(countDistinct(col("doc_id")).as("nd"))
+      inst.join(dup, "digest")
+        .groupBy("doc_id").agg(
+          count(lit(1)).as("n_chunks"),
+          sum(when(col("nd") >= 2, 1L).otherwise(0L)).as("n_dup_chunks"),
+          sum(when(col("nd") >= 2, col("clen")).otherwise(0L))
+            .as("dup_chars"))
+        .join(docs.select(col("doc_id"), length(col("text")).as("len")),
+          "doc_id")
+        .select(col("doc_id"), col("n_chunks"), col("n_dup_chunks"),
+          col("dup_chars"),
+          round(col("dup_chars").cast("double") / col("len"), 6)
+            .as("dup_frac"))
+        .orderBy("doc_id")
+    },
+      Some("""WITH d AS (SELECT doc_id, text, length(text) AS len FROM documents),
+             | cuts AS (SELECT doc_id, i FROM (
+             |    SELECT doc_id, text, unnest(generate_series(8, len)) AS i
+             |    FROM d WHERE len >= 8)
+             |   WHERE substr(md5(substr(text, i - 7, 8)), 1, 1) = '0'),
+             | bnd AS (SELECT DISTINCT doc_id, i FROM (
+             |    SELECT doc_id, i FROM cuts
+             |    UNION ALL SELECT doc_id, len FROM d)),
+             | spans AS (SELECT doc_id, i,
+             |    COALESCE(lag(i) OVER (PARTITION BY doc_id ORDER BY i), 0) + 1
+             |      AS start
+             |   FROM bnd),
+             | inst AS (SELECT s.doc_id, md5(substr(text, start, i - start + 1))
+             |     AS digest, i - start + 1 AS clen
+             |   FROM spans s JOIN d USING (doc_id)),
+             | dup AS (SELECT digest, count(DISTINCT doc_id) AS nd
+             |   FROM inst GROUP BY 1),
+             | per AS (SELECT doc_id, count(*) AS n_chunks,
+             |    sum(CASE WHEN nd >= 2 THEN 1 ELSE 0 END) AS n_dup_chunks,
+             |    sum(CASE WHEN nd >= 2 THEN clen ELSE 0 END) AS dup_chars
+             |   FROM inst JOIN dup USING (digest) GROUP BY 1)
+             |SELECT per.doc_id, CAST(n_chunks AS BIGINT) AS n_chunks,
+             | CAST(n_dup_chunks AS BIGINT) AS n_dup_chunks,
+             | CAST(dup_chars AS BIGINT) AS dup_chars,
+             | round(CAST(dup_chars AS DOUBLE) / len, 6) AS dup_frac
+             |FROM per JOIN d USING (doc_id) ORDER BY doc_id""".stripMargin)),
   )
 
   /** Shared DuckDB CTE list computing `sim64(doc_id, sh_lo, sh_hi)` — the

@@ -424,186 +424,6 @@ object GraphOps {
     out
   }
 
-  val queries: Map[String, Q] = Map(
-    // PARTITION MODULARITY of the near-dup graph against the LANGUAGE
-    // attribute (Newman 2004 Q, computed per part): how concentrated are
-    // near-dup edges inside language boundaries vs the degree-preserving
-    // random expectation? A healthy multilingual corpus near-dups almost
-    // entirely within-language (Q near its max); cross-language near-dup
-    // mass flags translation leakage or template boilerplate. Every
-    // input to Q is an exact integer (edge counts, degree sums), so each
-    // q_contrib = m_l/m − (d_l/2m)² is two correctly-rounded divisions
-    // and a multiply — bit-identical cross-engine; the total row sums
-    // raw contributions on the DECIMAL lattice. Shape: the memoized
-    // pair frame joined twice to a broadcast (doc_id, lang) projection;
-    // every aggregate after that is |langs|-sized.
-    "graph_modularity_lang" -> ((s, dir) => {
-      val lang = t(s, dir, "documents").select("doc_id", "lang")
-      val lp = nearDupPairs(s, dir)
-        .join(broadcast(lang.select(col("doc_id").as("d1"), col("lang").as("l1"))), "d1")
-        .join(broadcast(lang.select(col("doc_id").as("d2"), col("lang").as("l2"))), "d2")
-      val m = lp.agg(count(lit(1)).as("m"))
-      val deg = lp.select(col("d1").as("doc_id"), col("l1").as("lang"))
-        .unionAll(lp.select(col("d2"), col("l2")))
-        .groupBy("doc_id", "lang").agg(count(lit(1)).as("d"))
-      val pl = deg.groupBy("lang").agg(
-        count_distinct(col("doc_id")).as("n_nodes"), sum("d").as("d_sum"))
-      val il = lp.filter(col("l1") === col("l2"))
-        .groupBy(col("l1").as("lang")).agg(count(lit(1)).as("m_intra"))
-      val dd = col("d_sum").cast("double") / (lit(2.0) * col("m"))
-      val perLang = pl.join(il, Seq("lang"), "left").crossJoin(broadcast(m))
-        .select(col("lang"), col("n_nodes"),
-          coalesce(col("m_intra"), lit(0L)).as("m_intra"), col("d_sum"),
-          (coalesce(col("m_intra"), lit(0L)).cast("double") / col("m")
-            - dd * dd).as("qc"))
-      val total = perLang.agg(
-        sum("n_nodes").as("n_nodes"), sum("m_intra").as("m_intra"),
-        sum("d_sum").as("d_sum"),
-        sum(col("qc").cast("decimal(28,12)")).cast("double").as("qc"))
-        .select(lit("~total").as("lang"), col("n_nodes"), col("m_intra"),
-          col("d_sum"), col("qc"))
-      perLang.select(col("lang"), col("n_nodes"), col("m_intra"),
-          col("d_sum"), col("qc"))
-        .unionAll(total)
-        .select(col("lang"), col("n_nodes"), col("m_intra"), col("d_sum"),
-          round(col("qc"), 6).as("q_contrib"))
-        .orderBy("lang")
-    }),
-
-    // 4-round deterministic label propagation over the near-dup graph —
-    // community readout: (community label, member count, smallest member).
-    // Bit-exact vs the oracle's unrolled-CTE replay of the identical
-    // plurality/min-label recurrence.
-    "graph_label_propagation" -> ((s, dir) =>
-      labelPropagation(nearDupPairs(s, dir), rounds = 4)
-        .groupBy(col("lbl").as("community"))
-        .agg(count(lit(1)).as("n_members"), min("node").as("min_doc"))
-        .orderBy("community")),
-
-    // Fixed-3-round PageRank over the near-dup graph: bit-exact vs the
-    // DuckDB oracle because the whole recurrence is integer arithmetic —
-    // the oracle unrolls the same three rounds as chained CTEs with `//`
-    // floor division. Ranks are micro-units of 1e12 total mass.
-    "graph_pagerank" -> ((s, dir) =>
-      pageRank(nearDupPairs(s, dir), iters = 3)
-        .orderBy(desc("pr"), col("doc_id"))),
-
-    // The production variant: iterate to a measured fixpoint instead of
-    // a fixed round count. No SQL oracle (the round count is data-
-    // dependent) — property-tested in GraphSpec instead: bit-equality
-    // with pageRank at the same round count, L1 contraction per round,
-    // mass conservation, and hub dominance on a star graph.
-    "graph_pagerank_converged" -> ((s, dir) =>
-      pageRankConverged(nearDupPairs(s, dir), tolMicro = 1000L)
-        .orderBy(desc("pr"), col("doc_id"))),
-
-    // Triangle listing over the near-dup graph — triangles are the
-    // smallest evidence of duplication CLUSTERS (two pairwise matches
-    // that share a member), and the triangle count per component is the
-    // standard cluster-cohesion diagnostic a dedup report tracks. The
-    // oracle enumerates the same triangles from the d1<d2 pair list with
-    // a 3-way join; the engine's degree-ordered plan produces the
-    // identical set at O(m^1.5) wedge cost.
-    "graph_triangles" -> ((s, dir) =>
-      triangles(nearDupPairs(s, dir)).orderBy("a", "b", "c")),
-
-    // Degree distribution of the near-dup graph — the one-glance skew
-    // diagnostic (a fat tail = boilerplate hub documents that pair with
-    // everything; the signal that routes a corpus to the hot-bucket
-    // capped miner).
-    "graph_degree_dist" -> ((s, dir) =>
-      degreeDist(nearDupPairs(s, dir)).orderBy("degree")),
-
-    // Per-node clustering coefficient over the near-dup graph — the
-    // node-level clique-vs-hub verdict (see clusteringCoeff).
-    "graph_clustering_coeff" -> ((s, dir) =>
-      clusteringCoeff(nearDupPairs(s, dir)).orderBy("doc_id")),
-
-    // Per-cluster cohesion report: (nodes, edges, triangles) for every
-    // near-dup component — the diagnostic that separates true duplicate
-    // sets (near-cliques: edges ≈ n(n−1)/2, triangle-rich) from chained
-    // false merges (paths through a boilerplate hub: edges ≈ n−1, zero
-    // triangles), i.e. which clusters are safe to collapse to one
-    // canonical and which need a second look. Pure composition of
-    // verified pieces: the pair miner runs ONCE (persisted — it feeds
-    // CC, the edge/node counts, and the triangle enumeration), labels
-    // and triangles are checkpointed leaves, and everything downstream
-    // is id-keyed aggs and joins.
-    "graph_cluster_cohesion" -> ((s, dir) =>
-      clusterCohesion(nearDupPairs(s, dir)).orderBy("cluster_id")),
-
-    // 2-core of the near-dup graph — documents with corroborated
-    // duplication evidence (see kCore). 4 peel rounds: GraphSpec pins
-    // that the testdata fixpoint lands within 3, so the oracle's
-    // identical unrolled peels see the same final edge set.
-    "graph_kcore" -> ((s, dir) =>
-      kCore(nearDupPairs(s, dir), k = 2, rounds = 4)
-        .orderBy("doc_id")),
-
-    // Common-neighbors link prediction over the near-dup graph — the
-    // "pairs the τ-threshold miner missed" candidate list: non-adjacent
-    // doc pairs sharing ≥ 2 near-dup neighbors.
-    "graph_common_neighbors" -> ((s, dir) =>
-      commonNeighbors(nearDupPairs(s, dir), minShared = 2L)
-        .orderBy("a", "b")),
-
-    // Adamic–Adar link prediction (round 10) — the common-neighbors
-    // list re-ranked by neighbor RARITY (Σ 1/ln deg over shared
-    // neighbors): the standard upgrade when a shared boilerplate
-    // quasi-hub shouldn't weigh as much as a shared rare document. Same
-    // wedge plan, hub ceiling, and anti join; see adamicAdar for the
-    // ln-snap determinism rule.
-    "graph_adamic_adar" -> ((s, dir) =>
-      adamicAdar(nearDupPairs(s, dir), minShared = 2L)
-        .orderBy("a", "b")),
-
-    // Node-neighborhood Jaccard (round 11) — the NORMALIZED member of
-    // the link-prediction trio (counts → common_neighbors, rarity →
-    // adamic_adar, overlap fraction → this): |N(a)∩N(b)| / |N(a)∪N(b)|
-    // distinguishes "shares 3 of its 4 neighbors" from "shares 3 of
-    // 400" — the score cluster-refinement reads before merging two
-    // near-dup groups. Rides the identical wedge machine (hub ceiling,
-    // known-edge anti join, same memoized pair frame); degrees attach
-    // from the symmetric edge list, and since (a,b) is never itself an
-    // edge, |N(a)∪N(b)| = deg_a + deg_b − common exactly. Released on
-    // the integer 1e-6 lattice ((1e6·common) div union — both engines'
-    // truncating integer division), so no float crosses engines.
-    "graph_node_jaccard" -> ((s, dir) =>
-      nodeJaccard(nearDupPairs(s, dir), minShared = 2L)
-        .orderBy("a", "b")),
-
-    // DEGREE ASSORTATIVITY (Newman 2002) — one number summarizing the
-    // near-dup graph's mixing pattern: r > 0 = hubs pair with hubs
-    // (dense boilerplate families that survive clustering), r < 0 =
-    // hubs pair with leaves (star-shaped template graphs where the
-    // canonical-pick rule matters most). Pearson correlation of the
-    // endpoint degrees over the SYMMETRIC edge list (each undirected
-    // edge counted in both orientations — Newman's convention, and it
-    // makes the x/y margins identical). Exact: degrees are integers,
-    // all five moment sums ride DECIMAL(38,0) and release through the
-    // 2^32 hi/lo split; NULL on a degree-regular graph (zero
-    // variance), like agg_spearman_corr's guard.
-    "graph_assortativity" -> ((s, dir) =>
-      assortativity(nearDupPairs(s, dir))),
-
-    // HITS hubs & authorities (Kleinberg 1999) — the second classic
-    // link-analysis scorer beside PageRank, on the near-dup pair list
-    // read as a DIRECTED endorsement d1→d2 (the dedup-canonical
-    // convention: the lower id is the retained representative, so an
-    // edge reads "d1 vouches for its higher-id duplicate d2"). A good
-    // AUTHORITY is a document many retained representatives point at
-    // (a magnet for duplication); a good HUB is one that points at
-    // many strong authorities (a template/boilerplate source). Two
-    // UNNORMALIZED integer rounds: magnitudes are bounded by deg², so
-    // the whole recurrence is exact long arithmetic (the pageRank
-    // determinism contract — no L2 normalization float ever enters),
-    // and the oracle replays it as unrolled CTEs. Per round: one
-    // equi-join + one map-side-combined sum per direction, ids only.
-    "graph_hits" -> ((s, dir) =>
-      hits(nearDupPairs(s, dir), iters = 2)
-        .orderBy(desc("hub"), desc("auth"), col("doc_id"))),
-  )
-
   /** Degree-assortativity coefficient over an undirected pair set:
     * Pearson r of (deg u, deg v) across the symmetric edge list.
     * Returns one row (n_edges_directed, r_assort) — NULL r on a
@@ -764,188 +584,354 @@ object GraphOps {
        |     row_number() OVER (PARTITION BY node ORDER BY c DESC, lbl) AS rn
        |   FROM r$k) WHERE rn = 1)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "graph_modularity_lang" -> (GraphCtes + ",\n" +
-      """ lp AS (SELECT pj.d1, pj.d2, da.lang AS l1, db.lang AS l2
-        |   FROM pj JOIN documents da ON pj.d1 = da.doc_id
-        |   JOIN documents db ON pj.d2 = db.doc_id),
-        | m AS (SELECT count(*) AS m FROM lp),
-        | dg AS (SELECT doc_id, lang, count(*) AS d FROM (
-        |     SELECT d1 AS doc_id, l1 AS lang FROM lp
-        |     UNION ALL SELECT d2, l2 FROM lp) GROUP BY 1, 2),
-        | pl AS (SELECT lang, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_nodes,
-        |     CAST(sum(d) AS BIGINT) AS d_sum FROM dg GROUP BY 1),
-        | il AS (SELECT l1 AS lang, CAST(count(*) AS BIGINT) AS m_intra
-        |   FROM lp WHERE l1 = l2 GROUP BY 1),
-        | per AS (SELECT pl.lang, n_nodes,
-        |     COALESCE(m_intra, 0) AS m_intra, d_sum,
-        |     CAST(COALESCE(m_intra, 0) AS DOUBLE) / m.m
-        |       - (CAST(d_sum AS DOUBLE) / (2.0 * m.m))
-        |         * (CAST(d_sum AS DOUBLE) / (2.0 * m.m)) AS qc
-        |   FROM pl LEFT JOIN il USING (lang) CROSS JOIN m),
-        | tt AS (SELECT '~total' AS lang, CAST(sum(n_nodes) AS BIGINT) AS n_nodes,
-        |     CAST(sum(m_intra) AS BIGINT) AS m_intra,
-        |     CAST(sum(d_sum) AS BIGINT) AS d_sum,
-        |     CAST(sum(CAST(qc AS DECIMAL(28,12))) AS DOUBLE) AS qc FROM per)
-        |SELECT lang, n_nodes, m_intra, d_sum, round(qc, 6) AS q_contrib
-        |FROM (SELECT * FROM per UNION ALL SELECT * FROM tt)
-        |ORDER BY lang""".stripMargin),
+  val ops: Seq[Op] = Seq(
+    // PARTITION MODULARITY of the near-dup graph against the LANGUAGE
+    // attribute (Newman 2004 Q, computed per part): how concentrated are
+    // near-dup edges inside language boundaries vs the degree-preserving
+    // random expectation? A healthy multilingual corpus near-dups almost
+    // entirely within-language (Q near its max); cross-language near-dup
+    // mass flags translation leakage or template boilerplate. Every
+    // input to Q is an exact integer (edge counts, degree sums), so each
+    // q_contrib = m_l/m − (d_l/2m)² is two correctly-rounded divisions
+    // and a multiply — bit-identical cross-engine; the total row sums
+    // raw contributions on the DECIMAL lattice. Shape: the memoized
+    // pair frame joined twice to a broadcast (doc_id, lang) projection;
+    // every aggregate after that is |langs|-sized.
+    Op("graph_modularity_lang", (s, dir) => {
+      val lang = t(s, dir, "documents").select("doc_id", "lang")
+      val lp = nearDupPairs(s, dir)
+        .join(broadcast(lang.select(col("doc_id").as("d1"), col("lang").as("l1"))), "d1")
+        .join(broadcast(lang.select(col("doc_id").as("d2"), col("lang").as("l2"))), "d2")
+      val m = lp.agg(count(lit(1)).as("m"))
+      val deg = lp.select(col("d1").as("doc_id"), col("l1").as("lang"))
+        .unionAll(lp.select(col("d2"), col("l2")))
+        .groupBy("doc_id", "lang").agg(count(lit(1)).as("d"))
+      val pl = deg.groupBy("lang").agg(
+        count_distinct(col("doc_id")).as("n_nodes"), sum("d").as("d_sum"))
+      val il = lp.filter(col("l1") === col("l2"))
+        .groupBy(col("l1").as("lang")).agg(count(lit(1)).as("m_intra"))
+      val dd = col("d_sum").cast("double") / (lit(2.0) * col("m"))
+      val perLang = pl.join(il, Seq("lang"), "left").crossJoin(broadcast(m))
+        .select(col("lang"), col("n_nodes"),
+          coalesce(col("m_intra"), lit(0L)).as("m_intra"), col("d_sum"),
+          (coalesce(col("m_intra"), lit(0L)).cast("double") / col("m")
+            - dd * dd).as("qc"))
+      val total = perLang.agg(
+        sum("n_nodes").as("n_nodes"), sum("m_intra").as("m_intra"),
+        sum("d_sum").as("d_sum"),
+        sum(col("qc").cast("decimal(28,12)")).cast("double").as("qc"))
+        .select(lit("~total").as("lang"), col("n_nodes"), col("m_intra"),
+          col("d_sum"), col("qc"))
+      perLang.select(col("lang"), col("n_nodes"), col("m_intra"),
+          col("d_sum"), col("qc"))
+        .unionAll(total)
+        .select(col("lang"), col("n_nodes"), col("m_intra"), col("d_sum"),
+          round(col("qc"), 6).as("q_contrib"))
+        .orderBy("lang")
+    },
+      Some(GraphCtes + ",\n" +
+        """ lp AS (SELECT pj.d1, pj.d2, da.lang AS l1, db.lang AS l2
+          |   FROM pj JOIN documents da ON pj.d1 = da.doc_id
+          |   JOIN documents db ON pj.d2 = db.doc_id),
+          | m AS (SELECT count(*) AS m FROM lp),
+          | dg AS (SELECT doc_id, lang, count(*) AS d FROM (
+          |     SELECT d1 AS doc_id, l1 AS lang FROM lp
+          |     UNION ALL SELECT d2, l2 FROM lp) GROUP BY 1, 2),
+          | pl AS (SELECT lang, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_nodes,
+          |     CAST(sum(d) AS BIGINT) AS d_sum FROM dg GROUP BY 1),
+          | il AS (SELECT l1 AS lang, CAST(count(*) AS BIGINT) AS m_intra
+          |   FROM lp WHERE l1 = l2 GROUP BY 1),
+          | per AS (SELECT pl.lang, n_nodes,
+          |     COALESCE(m_intra, 0) AS m_intra, d_sum,
+          |     CAST(COALESCE(m_intra, 0) AS DOUBLE) / m.m
+          |       - (CAST(d_sum AS DOUBLE) / (2.0 * m.m))
+          |         * (CAST(d_sum AS DOUBLE) / (2.0 * m.m)) AS qc
+          |   FROM pl LEFT JOIN il USING (lang) CROSS JOIN m),
+          | tt AS (SELECT '~total' AS lang, CAST(sum(n_nodes) AS BIGINT) AS n_nodes,
+          |     CAST(sum(m_intra) AS BIGINT) AS m_intra,
+          |     CAST(sum(d_sum) AS BIGINT) AS d_sum,
+          |     CAST(sum(CAST(qc AS DECIMAL(28,12))) AS DOUBLE) AS qc FROM per)
+          |SELECT lang, n_nodes, m_intra, d_sum, round(qc, 6) AS q_contrib
+          |FROM (SELECT * FROM per UNION ALL SELECT * FROM tt)
+          |ORDER BY lang""".stripMargin)),
 
-    "graph_pagerank" -> (GraphCtes + ",\n" +
-      """ p0 AS (SELECT deg.u AS node, deg.outdeg, 1000000000000 // cnt AS pr
-        |   FROM deg CROSS JOIN nn),""".stripMargin + "\n" +
-      (1 to 3).map(oracleRound).mkString(",\n") + "\n" +
-      """SELECT node AS doc_id, pr FROM p3 ORDER BY pr DESC, doc_id""".stripMargin),
+    // 4-round deterministic label propagation over the near-dup graph —
+    // community readout: (community label, member count, smallest member).
+    // Bit-exact vs the oracle's unrolled-CTE replay of the identical
+    // plurality/min-label recurrence.
+    Op("graph_label_propagation", (s, dir) =>
+      labelPropagation(nearDupPairs(s, dir), rounds = 4)
+        .groupBy(col("lbl").as("community"))
+        .agg(count(lit(1)).as("n_members"), min("node").as("min_doc"))
+        .orderBy("community"),
+      Some(GraphCtes +
+        ",\n l0 AS (SELECT u AS node, u AS lbl FROM deg),\n" +
+        (1 to 4).map(lpaRound).mkString(",\n") + "\n" +
+        """SELECT lbl AS community, CAST(count(*) AS BIGINT) AS n_members,
+          | min(node) AS min_doc
+          |FROM l4 GROUP BY 1 ORDER BY community""".stripMargin)),
 
-    "graph_label_propagation" -> (GraphCtes +
-      ",\n l0 AS (SELECT u AS node, u AS lbl FROM deg),\n" +
-      (1 to 4).map(lpaRound).mkString(",\n") + "\n" +
-      """SELECT lbl AS community, CAST(count(*) AS BIGINT) AS n_members,
-        | min(node) AS min_doc
-        |FROM l4 GROUP BY 1 ORDER BY community""".stripMargin),
+    // Fixed-3-round PageRank over the near-dup graph: bit-exact vs the
+    // DuckDB oracle because the whole recurrence is integer arithmetic —
+    // the oracle unrolls the same three rounds as chained CTEs with `//`
+    // floor division. Ranks are micro-units of 1e12 total mass.
+    Op("graph_pagerank", (s, dir) =>
+      pageRank(nearDupPairs(s, dir), iters = 3)
+        .orderBy(desc("pr"), col("doc_id")),
+      Some(GraphCtes + ",\n" +
+        """ p0 AS (SELECT deg.u AS node, deg.outdeg, 1000000000000 // cnt AS pr
+          |   FROM deg CROSS JOIN nn),""".stripMargin + "\n" +
+        (1 to 3).map(oracleRound).mkString(",\n") + "\n" +
+        """SELECT node AS doc_id, pr FROM p3 ORDER BY pr DESC, doc_id""".stripMargin)),
 
-    // Each triangle {a<b<c} appears exactly once: (a,b),(b,c),(a,c) are
-    // all in the d1<d2-normalized pair list pj.
-    "graph_triangles" -> (GraphCtes + "\n" +
-      """SELECT x.d1 AS a, x.d2 AS b, y.d2 AS c
-        |FROM pj x JOIN pj y ON x.d2 = y.d1
-        | JOIN pj z ON z.d1 = x.d1 AND z.d2 = y.d2
-        |ORDER BY a, b, c""".stripMargin),
+    // The production variant: iterate to a measured fixpoint instead of
+    // a fixed round count. No SQL oracle (the round count is data-
+    // dependent) — property-tested in GraphSpec instead: bit-equality
+    // with pageRank at the same round count, L1 contraction per round,
+    // mass conservation, and hub dominance on a star graph.
+    Op("graph_pagerank_converged", (s, dir) =>
+      pageRankConverged(nearDupPairs(s, dir), tolMicro = 1000L)
+        .orderBy(desc("pr"), col("doc_id")),
+      None),
 
-    "graph_degree_dist" -> (GraphCtes + "\n" +
-      """SELECT outdeg AS degree, CAST(count(*) AS BIGINT) AS n_nodes
-        |FROM deg GROUP BY 1 ORDER BY 1""".stripMargin),
+    // Triangle listing over the near-dup graph — triangles are the
+    // smallest evidence of duplication CLUSTERS (two pairwise matches
+    // that share a member), and the triangle count per component is the
+    // standard cluster-cohesion diagnostic a dedup report tracks. The
+    // oracle enumerates the same triangles from the d1<d2 pair list with
+    // a 3-way join; the engine's degree-ordered plan produces the
+    // identical set at O(m^1.5) wedge cost.
+    Op("graph_triangles", (s, dir) =>
+      triangles(nearDupPairs(s, dir)).orderBy("a", "b", "c"),
+      // Each triangle {a<b<c} appears exactly once: (a,b),(b,c),(a,c) are
+      // all in the d1<d2-normalized pair list pj.
+      Some(GraphCtes + "\n" +
+        """SELECT x.d1 AS a, x.d2 AS b, y.d2 AS c
+          |FROM pj x JOIN pj y ON x.d2 = y.d1
+          | JOIN pj z ON z.d1 = x.d1 AND z.d2 = y.d2
+          |ORDER BY a, b, c""".stripMargin)),
 
-    "graph_clustering_coeff" -> (GraphCtes + ",\n" +
-      """ tri AS (SELECT x.d1 AS a, x.d2 AS b, y.d2 AS c
-        |   FROM pj x JOIN pj y ON x.d2 = y.d1
-        |    JOIN pj z ON z.d1 = x.d1 AND z.d2 = y.d2),
-        | tn AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tri FROM (
-        |    SELECT a AS doc_id FROM tri
-        |    UNION ALL SELECT b FROM tri
-        |    UNION ALL SELECT c FROM tri) GROUP BY 1)
-        |SELECT deg.u AS doc_id, deg.outdeg AS degree,
-        | coalesce(tn.n_tri, 0) AS n_tri,
-        | round(coalesce(tn.n_tri, 0) * 2.0
-        |   / (deg.outdeg * (deg.outdeg - 1)), 6) AS coeff
-        |FROM deg LEFT JOIN tn ON deg.u = tn.doc_id
-        |WHERE deg.outdeg >= 2 ORDER BY doc_id""".stripMargin),
+    // Degree distribution of the near-dup graph — the one-glance skew
+    // diagnostic (a fat tail = boilerplate hub documents that pair with
+    // everything; the signal that routes a corpus to the hot-bucket
+    // capped miner).
+    Op("graph_degree_dist", (s, dir) =>
+      degreeDist(nearDupPairs(s, dir)).orderBy("degree"),
+      Some(GraphCtes + "\n" +
+        """SELECT outdeg AS degree, CAST(count(*) AS BIGINT) AS n_nodes
+          |FROM deg GROUP BY 1 ORDER BY 1""".stripMargin)),
 
-    // Four unrolled peel rounds, identical to kCore(k=2, rounds=4):
-    // k<i> = surviving nodes after peel i, e<i> = edges among them,
-    // d<i> = residual degrees. Output = degrees of the final edge set.
-    "graph_kcore" -> (GraphCtes + ",\n" +
-      (1 to 4).map { i =>
-        val (prevE, prevD) = (if (i == 1) "e" else s"e${i - 1}",
-          if (i == 1) "deg" else s"d${i - 1}")
-        val degCol = if (i == 1) "outdeg" else "deg"
-        s""" k$i AS (SELECT u FROM $prevD WHERE $degCol >= 2),
-           | e$i AS (SELECT $prevE.u, $prevE.v FROM $prevE
-           |   JOIN k$i a ON $prevE.u = a.u JOIN k$i b ON $prevE.v = b.u),
-           | d$i AS (SELECT u, count(*) AS deg FROM e$i GROUP BY 1)""".stripMargin
-      }.mkString(",\n") + "\n" +
-      """SELECT u AS doc_id, deg AS core_deg FROM d4 ORDER BY doc_id""".stripMargin),
+    // Per-node clustering coefficient over the near-dup graph — the
+    // node-level clique-vs-hub verdict (see clusteringCoeff).
+    Op("graph_clustering_coeff", (s, dir) =>
+      clusteringCoeff(nearDupPairs(s, dir)).orderBy("doc_id"),
+      Some(GraphCtes + ",\n" +
+        """ tri AS (SELECT x.d1 AS a, x.d2 AS b, y.d2 AS c
+          |   FROM pj x JOIN pj y ON x.d2 = y.d1
+          |    JOIN pj z ON z.d1 = x.d1 AND z.d2 = y.d2),
+          | tn AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tri FROM (
+          |    SELECT a AS doc_id FROM tri
+          |    UNION ALL SELECT b FROM tri
+          |    UNION ALL SELECT c FROM tri) GROUP BY 1)
+          |SELECT deg.u AS doc_id, deg.outdeg AS degree,
+          | coalesce(tn.n_tri, 0) AS n_tri,
+          | round(coalesce(tn.n_tri, 0) * 2.0
+          |   / (deg.outdeg * (deg.outdeg - 1)), 6) AS coeff
+          |FROM deg LEFT JOIN tn ON deg.u = tn.doc_id
+          |WHERE deg.outdeg >= 2 ORDER BY doc_id""".stripMargin)),
 
-    // Wedges at centers of degree ≤ 50 (the engine's WedgeCenterCap),
-    // counted per (a < b) endpoint pair, minus known edges (pj is the
-    // d1<d2-normalized pair list).
-    "graph_common_neighbors" -> (GraphCtes + ",\n" +
-      """ c AS (SELECT u FROM deg WHERE outdeg <= 50),
-        | w AS (SELECT e1.v AS a, e2.v AS b, count(*) AS common_neighbors
-        |   FROM e e1 JOIN e e2 ON e1.u = e2.u JOIN c ON c.u = e1.u
-        |   WHERE e1.v < e2.v GROUP BY 1, 2)
-        |SELECT a, b, common_neighbors FROM w
-        |WHERE common_neighbors >= 2
-        | AND NOT EXISTS (SELECT 1 FROM pj WHERE pj.d1 = w.a AND pj.d2 = w.b)
-        |ORDER BY a, b""".stripMargin),
+    // Per-cluster cohesion report: (nodes, edges, triangles) for every
+    // near-dup component — the diagnostic that separates true duplicate
+    // sets (near-cliques: edges ≈ n(n−1)/2, triangle-rich) from chained
+    // false merges (paths through a boilerplate hub: edges ≈ n−1, zero
+    // triangles), i.e. which clusters are safe to collapse to one
+    // canonical and which need a second look. Pure composition of
+    // verified pieces: the pair miner runs ONCE (persisted — it feeds
+    // CC, the edge/node counts, and the triangle enumeration), labels
+    // and triangles are checkpointed leaves, and everything downstream
+    // is id-keyed aggs and joins.
+    Op("graph_cluster_cohesion", (s, dir) =>
+      clusterCohesion(nearDupPairs(s, dir)).orderBy("cluster_id"),
+      // The same recursive min-label walk the dedup_cluster oracle uses,
+      // over GraphCtes' symmetric edge list e(u, v).
+      Some(GraphCtes + ",\n" +
+        """ labels AS (SELECT doc_id, min(lbl) AS cluster_id FROM (
+          |   WITH RECURSIVE walk(doc_id, lbl) AS (
+          |     SELECT u, u FROM e
+          |     UNION
+          |     SELECT e.u, w.lbl FROM e JOIN walk w ON e.v = w.doc_id)
+          |   SELECT doc_id, lbl FROM walk)
+          |  GROUP BY doc_id),
+          | npc AS (SELECT cluster_id, count(*) AS n_nodes FROM labels GROUP BY 1),
+          | epc AS (SELECT l.cluster_id, count(*) AS n_edges
+          |   FROM pj JOIN labels l ON pj.d1 = l.doc_id GROUP BY 1),
+          | tri AS (SELECT x.d1 AS a FROM pj x JOIN pj y ON x.d2 = y.d1
+          |   JOIN pj z ON z.d1 = x.d1 AND z.d2 = y.d2),
+          | tpc AS (SELECT l.cluster_id, count(*) AS n_triangles
+          |   FROM tri JOIN labels l ON tri.a = l.doc_id GROUP BY 1)
+          |SELECT npc.cluster_id, CAST(n_nodes AS BIGINT) AS n_nodes,
+          | CAST(n_edges AS BIGINT) AS n_edges,
+          | CAST(COALESCE(n_triangles, 0) AS BIGINT) AS n_triangles
+          |FROM npc JOIN epc USING (cluster_id) LEFT JOIN tpc USING (cluster_id)
+          |ORDER BY cluster_id""".stripMargin)),
 
-    // The weighted wedge replay: each center contributes its snapped
-    // 1/ln(outdeg) weight, accumulated on the same DECIMAL(18,4)
-    // lattice as the engine.
-    "graph_adamic_adar" -> (GraphCtes + ",\n" +
-      """ c AS (SELECT u, outdeg FROM deg WHERE outdeg <= 50),
-        | w AS (SELECT e1.v AS a, e2.v AS b, count(*) AS common_neighbors,
-        |   CAST(sum(CAST(round(1.0 / ln(c.outdeg), 4) AS DECIMAL(18,4)))
-        |     AS DOUBLE) AS aa_score
-        |   FROM e e1 JOIN e e2 ON e1.u = e2.u JOIN c ON c.u = e1.u
-        |   WHERE e1.v < e2.v GROUP BY 1, 2)
-        |SELECT a, b, common_neighbors, aa_score FROM w
-        |WHERE common_neighbors >= 2
-        | AND NOT EXISTS (SELECT 1 FROM pj WHERE pj.d1 = w.a AND pj.d2 = w.b)
-        |ORDER BY a, b""".stripMargin),
+    // 2-core of the near-dup graph — documents with corroborated
+    // duplication evidence (see kCore). 4 peel rounds: GraphSpec pins
+    // that the testdata fixpoint lands within 3, so the oracle's
+    // identical unrolled peels see the same final edge set.
+    Op("graph_kcore", (s, dir) =>
+      kCore(nearDupPairs(s, dir), k = 2, rounds = 4)
+        .orderBy("doc_id"),
+      // Four unrolled peel rounds, identical to kCore(k=2, rounds=4):
+      // k<i> = surviving nodes after peel i, e<i> = edges among them,
+      // d<i> = residual degrees. Output = degrees of the final edge set.
+      Some(GraphCtes + ",\n" +
+        (1 to 4).map { i =>
+          val (prevE, prevD) = (if (i == 1) "e" else s"e${i - 1}",
+            if (i == 1) "deg" else s"d${i - 1}")
+          val degCol = if (i == 1) "outdeg" else "deg"
+          s""" k$i AS (SELECT u FROM $prevD WHERE $degCol >= 2),
+             | e$i AS (SELECT $prevE.u, $prevE.v FROM $prevE
+             |   JOIN k$i a ON $prevE.u = a.u JOIN k$i b ON $prevE.v = b.u),
+             | d$i AS (SELECT u, count(*) AS deg FROM e$i GROUP BY 1)""".stripMargin
+        }.mkString(",\n") + "\n" +
+        """SELECT u AS doc_id, deg AS core_deg FROM d4 ORDER BY doc_id""".stripMargin)),
 
-    // The wedge replay with full degrees attached; the released score is
-    // the engine's exact integer lattice ((1e6·c) // (da+db−c)).
-    "graph_node_jaccard" -> (GraphCtes + ",\n" +
-      """ c AS (SELECT u FROM deg WHERE outdeg <= 50),
-        | w AS (SELECT e1.v AS a, e2.v AS b, count(*) AS common_neighbors
-        |   FROM e e1 JOIN e e2 ON e1.u = e2.u JOIN c ON c.u = e1.u
-        |   WHERE e1.v < e2.v GROUP BY 1, 2)
-        |SELECT w.a, w.b, w.common_neighbors,
-        | da.outdeg AS deg_a, db.outdeg AS deg_b,
-        | CAST((1000000 * w.common_neighbors)
-        |   // (da.outdeg + db.outdeg - w.common_neighbors) AS BIGINT)
-        |   AS jaccard_micro
-        |FROM w JOIN deg da ON da.u = w.a JOIN deg db ON db.u = w.b
-        |WHERE w.common_neighbors >= 2
-        | AND NOT EXISTS (SELECT 1 FROM pj WHERE pj.d1 = w.a AND pj.d2 = w.b)
-        |ORDER BY a, b""".stripMargin),
+    // Common-neighbors link prediction over the near-dup graph — the
+    // "pairs the τ-threshold miner missed" candidate list: non-adjacent
+    // doc pairs sharing ≥ 2 near-dup neighbors.
+    Op("graph_common_neighbors", (s, dir) =>
+      commonNeighbors(nearDupPairs(s, dir), minShared = 2L)
+        .orderBy("a", "b"),
+      // Wedges at centers of degree ≤ 50 (the engine's WedgeCenterCap),
+      // counted per (a < b) endpoint pair, minus known edges (pj is the
+      // d1<d2-normalized pair list).
+      Some(GraphCtes + ",\n" +
+        """ c AS (SELECT u FROM deg WHERE outdeg <= 50),
+          | w AS (SELECT e1.v AS a, e2.v AS b, count(*) AS common_neighbors
+          |   FROM e e1 JOIN e e2 ON e1.u = e2.u JOIN c ON c.u = e1.u
+          |   WHERE e1.v < e2.v GROUP BY 1, 2)
+          |SELECT a, b, common_neighbors FROM w
+          |WHERE common_neighbors >= 2
+          | AND NOT EXISTS (SELECT 1 FROM pj WHERE pj.d1 = w.a AND pj.d2 = w.b)
+          |ORDER BY a, b""".stripMargin)),
 
-    // The same recursive min-label walk the dedup_cluster oracle uses,
-    // over GraphCtes' symmetric edge list e(u, v).
-    "graph_cluster_cohesion" -> (GraphCtes + ",\n" +
-      """ labels AS (SELECT doc_id, min(lbl) AS cluster_id FROM (
-        |   WITH RECURSIVE walk(doc_id, lbl) AS (
-        |     SELECT u, u FROM e
-        |     UNION
-        |     SELECT e.u, w.lbl FROM e JOIN walk w ON e.v = w.doc_id)
-        |   SELECT doc_id, lbl FROM walk)
-        |  GROUP BY doc_id),
-        | npc AS (SELECT cluster_id, count(*) AS n_nodes FROM labels GROUP BY 1),
-        | epc AS (SELECT l.cluster_id, count(*) AS n_edges
-        |   FROM pj JOIN labels l ON pj.d1 = l.doc_id GROUP BY 1),
-        | tri AS (SELECT x.d1 AS a FROM pj x JOIN pj y ON x.d2 = y.d1
-        |   JOIN pj z ON z.d1 = x.d1 AND z.d2 = y.d2),
-        | tpc AS (SELECT l.cluster_id, count(*) AS n_triangles
-        |   FROM tri JOIN labels l ON tri.a = l.doc_id GROUP BY 1)
-        |SELECT npc.cluster_id, CAST(n_nodes AS BIGINT) AS n_nodes,
-        | CAST(n_edges AS BIGINT) AS n_edges,
-        | CAST(COALESCE(n_triangles, 0) AS BIGINT) AS n_triangles
-        |FROM npc JOIN epc USING (cluster_id) LEFT JOIN tpc USING (cluster_id)
-        |ORDER BY cluster_id""".stripMargin),
+    // Adamic–Adar link prediction (round 10) — the common-neighbors
+    // list re-ranked by neighbor RARITY (Σ 1/ln deg over shared
+    // neighbors): the standard upgrade when a shared boilerplate
+    // quasi-hub shouldn't weigh as much as a shared rare document. Same
+    // wedge plan, hub ceiling, and anti join; see adamicAdar for the
+    // ln-snap determinism rule.
+    Op("graph_adamic_adar", (s, dir) =>
+      adamicAdar(nearDupPairs(s, dir), minShared = 2L)
+        .orderBy("a", "b"),
+      // The weighted wedge replay: each center contributes its snapped
+      // 1/ln(outdeg) weight, accumulated on the same DECIMAL(18,4)
+      // lattice as the engine.
+      Some(GraphCtes + ",\n" +
+        """ c AS (SELECT u, outdeg FROM deg WHERE outdeg <= 50),
+          | w AS (SELECT e1.v AS a, e2.v AS b, count(*) AS common_neighbors,
+          |   CAST(sum(CAST(round(1.0 / ln(c.outdeg), 4) AS DECIMAL(18,4)))
+          |     AS DOUBLE) AS aa_score
+          |   FROM e e1 JOIN e e2 ON e1.u = e2.u JOIN c ON c.u = e1.u
+          |   WHERE e1.v < e2.v GROUP BY 1, 2)
+          |SELECT a, b, common_neighbors, aa_score FROM w
+          |WHERE common_neighbors >= 2
+          | AND NOT EXISTS (SELECT 1 FROM pj WHERE pj.d1 = w.a AND pj.d2 = w.b)
+          |ORDER BY a, b""".stripMargin)),
 
-    // Endpoint-degree Pearson over the symmetric edge list; the same
-    // hi/lo release tree as the engine.
-    "graph_assortativity" -> (GraphCtes + ",\n" +
-      s""" j AS (SELECT a.outdeg AS du, b.outdeg AS dv
-         |  FROM e JOIN deg a ON e.u = a.u JOIN deg b ON e.v = b.u),
-         | mo AS (SELECT CAST(count(*) AS HUGEINT) AS m,
-         |   sum(CAST(du AS HUGEINT)) AS sx,
-         |   sum(CAST(dv AS HUGEINT)) AS sy,
-         |   sum(CAST(du AS HUGEINT) * dv) AS sxy,
-         |   sum(CAST(du AS HUGEINT) * du) AS sxx,
-         |   sum(CAST(dv AS HUGEINT) * dv) AS syy FROM j),
-         | ta AS (SELECT m, m * sxy - sx * sy AS rnum,
-         |   m * sxx - sx * sx AS vx, m * syy - sy * sy AS vy FROM mo)
-         |SELECT CAST(m AS BIGINT) AS n_edges_directed,
-         | CASE WHEN vx = 0 OR vy = 0 THEN NULL ELSE
-         |  round((CASE WHEN rnum < 0 THEN -1.0 ELSE 1.0 END)
-         |   * ${StatsExt.exactDblSql("abs(rnum)")}
-         |   / sqrt(${StatsExt.exactDblSql("vx")}
-         |     * ${StatsExt.exactDblSql("vy")}), 6)
-         | END AS r_assort
-         |FROM ta""".stripMargin),
+    // Node-neighborhood Jaccard (round 11) — the NORMALIZED member of
+    // the link-prediction trio (counts → common_neighbors, rarity →
+    // adamic_adar, overlap fraction → this): |N(a)∩N(b)| / |N(a)∪N(b)|
+    // distinguishes "shares 3 of its 4 neighbors" from "shares 3 of
+    // 400" — the score cluster-refinement reads before merging two
+    // near-dup groups. Rides the identical wedge machine (hub ceiling,
+    // known-edge anti join, same memoized pair frame); degrees attach
+    // from the symmetric edge list, and since (a,b) is never itself an
+    // edge, |N(a)∪N(b)| = deg_a + deg_b − common exactly. Released on
+    // the integer 1e-6 lattice ((1e6·common) div union — both engines'
+    // truncating integer division), so no float crosses engines.
+    Op("graph_node_jaccard", (s, dir) =>
+      nodeJaccard(nearDupPairs(s, dir), minShared = 2L)
+        .orderBy("a", "b"),
+      // The wedge replay with full degrees attached; the released score is
+      // the engine's exact integer lattice ((1e6·c) // (da+db−c)).
+      Some(GraphCtes + ",\n" +
+        """ c AS (SELECT u FROM deg WHERE outdeg <= 50),
+          | w AS (SELECT e1.v AS a, e2.v AS b, count(*) AS common_neighbors
+          |   FROM e e1 JOIN e e2 ON e1.u = e2.u JOIN c ON c.u = e1.u
+          |   WHERE e1.v < e2.v GROUP BY 1, 2)
+          |SELECT w.a, w.b, w.common_neighbors,
+          | da.outdeg AS deg_a, db.outdeg AS deg_b,
+          | CAST((1000000 * w.common_neighbors)
+          |   // (da.outdeg + db.outdeg - w.common_neighbors) AS BIGINT)
+          |   AS jaccard_micro
+          |FROM w JOIN deg da ON da.u = w.a JOIN deg db ON db.u = w.b
+          |WHERE w.common_neighbors >= 2
+          | AND NOT EXISTS (SELECT 1 FROM pj WHERE pj.d1 = w.a AND pj.d2 = w.b)
+          |ORDER BY a, b""".stripMargin)),
 
-    // Unrolled integer HITS replay on the directed pj list (d1→d2);
-    // sums come back as HUGEINT, cast to BIGINT like the pagerank
-    // rounds.
-    "graph_hits" -> (GraphCtes + ",\n" +
-      """ hn AS (SELECT d1 AS node FROM pj UNION SELECT d2 FROM pj),
-        | h0 AS (SELECT node, CAST(1 AS BIGINT) AS hv FROM hn),""".stripMargin +
-      (1 to 2).map(hitsRound).mkString(",") + "\n" +
-      """SELECT h2.node AS doc_id, h2.hv AS hub, a2.av AS auth
-        |FROM h2 JOIN a2 USING (node)
-        |ORDER BY hub DESC, auth DESC, doc_id""".stripMargin),
+    // DEGREE ASSORTATIVITY (Newman 2002) — one number summarizing the
+    // near-dup graph's mixing pattern: r > 0 = hubs pair with hubs
+    // (dense boilerplate families that survive clustering), r < 0 =
+    // hubs pair with leaves (star-shaped template graphs where the
+    // canonical-pick rule matters most). Pearson correlation of the
+    // endpoint degrees over the SYMMETRIC edge list (each undirected
+    // edge counted in both orientations — Newman's convention, and it
+    // makes the x/y margins identical). Exact: degrees are integers,
+    // all five moment sums ride DECIMAL(38,0) and release through the
+    // 2^32 hi/lo split; NULL on a degree-regular graph (zero
+    // variance), like agg_spearman_corr's guard.
+    Op("graph_assortativity", (s, dir) =>
+      assortativity(nearDupPairs(s, dir)),
+      // Endpoint-degree Pearson over the symmetric edge list; the same
+      // hi/lo release tree as the engine.
+      Some(GraphCtes + ",\n" +
+        s""" j AS (SELECT a.outdeg AS du, b.outdeg AS dv
+           |  FROM e JOIN deg a ON e.u = a.u JOIN deg b ON e.v = b.u),
+           | mo AS (SELECT CAST(count(*) AS HUGEINT) AS m,
+           |   sum(CAST(du AS HUGEINT)) AS sx,
+           |   sum(CAST(dv AS HUGEINT)) AS sy,
+           |   sum(CAST(du AS HUGEINT) * dv) AS sxy,
+           |   sum(CAST(du AS HUGEINT) * du) AS sxx,
+           |   sum(CAST(dv AS HUGEINT) * dv) AS syy FROM j),
+           | ta AS (SELECT m, m * sxy - sx * sy AS rnum,
+           |   m * sxx - sx * sx AS vx, m * syy - sy * sy AS vy FROM mo)
+           |SELECT CAST(m AS BIGINT) AS n_edges_directed,
+           | CASE WHEN vx = 0 OR vy = 0 THEN NULL ELSE
+           |  round((CASE WHEN rnum < 0 THEN -1.0 ELSE 1.0 END)
+           |   * ${StatsExt.exactDblSql("abs(rnum)")}
+           |   / sqrt(${StatsExt.exactDblSql("vx")}
+           |     * ${StatsExt.exactDblSql("vy")}), 6)
+           | END AS r_assort
+           |FROM ta""".stripMargin)),
+
+    // HITS hubs & authorities (Kleinberg 1999) — the second classic
+    // link-analysis scorer beside PageRank, on the near-dup pair list
+    // read as a DIRECTED endorsement d1→d2 (the dedup-canonical
+    // convention: the lower id is the retained representative, so an
+    // edge reads "d1 vouches for its higher-id duplicate d2"). A good
+    // AUTHORITY is a document many retained representatives point at
+    // (a magnet for duplication); a good HUB is one that points at
+    // many strong authorities (a template/boilerplate source). Two
+    // UNNORMALIZED integer rounds: magnitudes are bounded by deg², so
+    // the whole recurrence is exact long arithmetic (the pageRank
+    // determinism contract — no L2 normalization float ever enters),
+    // and the oracle replays it as unrolled CTEs. Per round: one
+    // equi-join + one map-side-combined sum per direction, ids only.
+    Op("graph_hits", (s, dir) =>
+      hits(nearDupPairs(s, dir), iters = 2)
+        .orderBy(desc("hub"), desc("auth"), col("doc_id")),
+      // Unrolled integer HITS replay on the directed pj list (d1→d2);
+      // sums come back as HUGEINT, cast to BIGINT like the pagerank
+      // rounds.
+      Some(GraphCtes + ",\n" +
+        """ hn AS (SELECT d1 AS node FROM pj UNION SELECT d2 FROM pj),
+          | h0 AS (SELECT node, CAST(1 AS BIGINT) AS hv FROM hn),""".stripMargin +
+        (1 to 2).map(hitsRound).mkString(",") + "\n" +
+        """SELECT h2.node AS doc_id, h2.hv AS hub, a2.av AS auth
+          |FROM h2 JOIN a2 USING (node)
+          |ORDER BY hub DESC, auth DESC, doc_id""".stripMargin)),
   )
 
   /** One unrolled HITS oracle round k: aᵏ from hᵏ⁻¹ over d1→d2, then

@@ -14,37 +14,51 @@ import org.apache.spark.sql.functions._
   *    by key, no candidate explosion, the classic scalable as-of pattern.
   */
 object Joins {
-  val queries: Map[String, Q] = Map(
-    "join_broadcast" -> ((s, dir) =>
+
+  val ops: Seq[Op] = Seq(
+    Op("join_broadcast", (s, dir) =>
       t(s, dir, "orders")
         .join(broadcast(t(s, dir, "customer")), col("o_custkey") === col("c_custkey"))
         .join(broadcast(t(s, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
         .groupBy("n_name")
         .agg(count(lit(1)).as("order_cnt"), dsum(col("o_totalprice")).as("total_price"))
-        .orderBy("n_name")),
+        .orderBy("n_name"),
+      Some(s"""SELECT n_name, count(*) AS order_cnt, ${dsumSql("o_totalprice")} AS total_price
+              |FROM orders JOIN customer ON o_custkey = c_custkey
+              |JOIN nation ON c_nationkey = n_nationkey
+              |GROUP BY n_name ORDER BY n_name""".stripMargin)),
 
-    "join_sortmerge" -> ((s, dir) =>
+    Op("join_sortmerge", (s, dir) =>
       t(s, dir, "lineitem").hint("merge")
         .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("li_cnt"), dsum(col("l_quantity")).as("sum_qty"))
-        .orderBy("o_orderstatus")),
+        .orderBy("o_orderstatus"),
+      Some(s"""SELECT o_orderstatus, count(*) AS li_cnt, ${dsumSql("l_quantity")} AS sum_qty
+              |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+              |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)),
 
-    "join_shuffle_hash" -> ((s, dir) =>
+    Op("join_shuffle_hash", (s, dir) =>
       t(s, dir, "lineitem").hint("shuffle_hash")
         .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("li_cnt"), dsum(col("l_extendedprice")).as("sum_price"))
-        .orderBy("o_orderstatus")),
+        .orderBy("o_orderstatus"),
+      Some(s"""SELECT o_orderstatus, count(*) AS li_cnt, ${dsumSql("l_extendedprice")} AS sum_price
+              |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+              |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)),
 
-    "join_left_outer" -> ((s, dir) =>
+    Op("join_left_outer", (s, dir) =>
       t(s, dir, "customer")
         .join(t(s, dir, "orders"), col("c_custkey") === col("o_custkey"), "left")
         .groupBy("c_custkey")
         .agg(count(col("o_orderkey")).as("order_cnt"))
-        .orderBy("c_custkey")),
+        .orderBy("c_custkey"),
+      Some("""SELECT c_custkey, count(o_orderkey) AS order_cnt
+             |FROM customer LEFT JOIN orders ON c_custkey = o_custkey
+             |GROUP BY c_custkey ORDER BY c_custkey""".stripMargin)),
 
-    "join_full_outer" -> ((s, dir) => {
+    Op("join_full_outer", (s, dir) => {
       val sup = t(s, dir, "supplier")
         .groupBy(col("s_nationkey").as("nk_s")).agg(count(lit(1)).as("s_cnt"))
       val cus = t(s, dir, "customer")
@@ -53,25 +67,38 @@ object Joins {
         .select(coalesce(col("nk_s"), col("nk_c")).as("nationkey"),
           col("s_cnt"), col("c_cnt"))
         .orderBy("nationkey")
-    }),
+    },
+      Some("""SELECT coalesce(s.nk, c.nk) AS nationkey, s.s_cnt, c.c_cnt
+             |FROM (SELECT s_nationkey AS nk, count(*) AS s_cnt FROM supplier GROUP BY 1) s
+             |FULL JOIN (SELECT c_nationkey AS nk, count(*) AS c_cnt FROM customer GROUP BY 1) c
+             |ON s.nk = c.nk ORDER BY nationkey""".stripMargin)),
 
-    "join_semi" -> ((s, dir) =>
+    Op("join_semi", (s, dir) =>
       t(s, dir, "customer")
         .join(t(s, dir, "orders"), col("c_custkey") === col("o_custkey"), "left_semi")
         .select("c_custkey", "c_name")
-        .orderBy("c_custkey")),
+        .orderBy("c_custkey"),
+      Some("""SELECT c_custkey, c_name FROM customer
+             |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
+             |ORDER BY c_custkey""".stripMargin)),
 
-    "join_anti" -> ((s, dir) =>
+    Op("join_anti", (s, dir) =>
       t(s, dir, "customer")
         .join(t(s, dir, "orders"), col("c_custkey") === col("o_custkey"), "left_anti")
         .select("c_custkey", "c_name")
-        .orderBy("c_custkey")),
+        .orderBy("c_custkey"),
+      Some("""SELECT c_custkey, c_name FROM customer
+             |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
+             |ORDER BY c_custkey""".stripMargin)),
 
-    "join_cross_theta" -> ((s, dir) =>
+    Op("join_cross_theta", (s, dir) =>
       t(s, dir, "region")
         .join(t(s, dir, "nation"), col("n_regionkey") =!= col("r_regionkey"))
         .select("r_regionkey", "r_name", "n_nationkey", "n_name")
-        .orderBy("r_regionkey", "n_nationkey")),
+        .orderBy("r_regionkey", "n_nationkey"),
+      Some("""SELECT r_regionkey, r_name, n_nationkey, n_name
+             |FROM region JOIN nation ON n_regionkey <> r_regionkey
+             |ORDER BY r_regionkey, n_nationkey""".stripMargin)),
 
     // For each purchase event: clicks by the same user in the preceding hour.
     // KEYLESS range join at scale: events ⋈ derived "hot windows" with no
@@ -81,7 +108,7 @@ object Joins {
     // ∝ events-in-covered-hours, never |events|×|windows| (the BNLJ a
     // naive theta join would plan; the no-cartesian sweep enforces this
     // stays equi-join shaped).
-    "join_range_bucketed" -> ((s, dir) => {
+    Op("join_range_bucketed", (s, dir) => {
       val e = events(s, dir)
       val hot = e.filter(col("event_type") === "purchase")
         .groupBy(date_trunc("hour", col("ts")).as("w_start"))
@@ -96,9 +123,18 @@ object Joins {
         .filter(col("ts") >= col("w_start") && col("ts") < col("w_end"))
         .groupBy("w_start").agg(count(lit(1)).as("n_events"))
         .orderBy("w_start")
-    }),
+    },
+      Some("""WITH hot AS (
+             |  SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS w_start
+             |  FROM events WHERE event_type = 'purchase'
+             |  GROUP BY 1 HAVING count(*) >= 8)
+             |SELECT h.w_start, count(*) AS n_events
+             |FROM events e JOIN hot h
+             |  ON CAST(e.ts AS TIMESTAMP) >= h.w_start
+             | AND CAST(e.ts AS TIMESTAMP) < h.w_start + INTERVAL 2 HOUR
+             |GROUP BY 1 ORDER BY 1""".stripMargin)),
 
-    "join_range_interval" -> ((s, dir) => {
+    Op("join_range_interval", (s, dir) => {
       val e = events(s, dir)
       val p = e.filter(col("event_type") === "purchase")
         .select(col("event_id"), col("user_id").as("p_user"), col("ts").as("p_ts"))
@@ -109,7 +145,14 @@ object Joins {
           && col("c_ts") < col("p_ts"), "left")
         .groupBy("event_id").agg(count(col("c_ts")).as("clicks_1h"))
         .orderBy("event_id")
-    }),
+    },
+      Some("""SELECT p.event_id, count(c.cts) AS clicks_1h
+             |FROM (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS pts FROM events
+             |      WHERE event_type = 'purchase') p
+             |LEFT JOIN (SELECT user_id, CAST(ts AS TIMESTAMP) AS cts FROM events
+             |      WHERE event_type = 'click') c
+             |ON p.user_id = c.user_id AND c.cts >= p.pts - INTERVAL 1 HOUR AND c.cts < p.pts
+             |GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // Interval-OVERLAP self-join (both sides are intervals — distinct
     // from join_range_interval's point-in-window): per order, pairs of
@@ -121,7 +164,7 @@ object Joins {
     // 100 TB it inherits whatever bucketing the fact table carries. An
     // unblocked interval join would bucketize the time axis instead
     // (join_range_bucketed shows that shape).
-    "join_interval_overlap" -> ((s, dir) => {
+    Op("join_interval_overlap", (s, dir) => {
       // The transit window end is derived (this feed carries no receipt
       // date): shipdate + (⌊quantity⌋ mod 30) days — floor() because a
       // double→int CAST truncates in Spark but rounds in DuckDB.
@@ -141,13 +184,23 @@ object Joins {
           sum(datediff(least(col("r1"), col("r2")),
             greatest(col("s1"), col("s2")))).as("overlap_days"))
         .orderBy("l_orderkey")
-    }),
+    },
+      Some("""WITH l AS (SELECT l_orderkey, l_linenumber, l_shipdate,
+             |   l_shipdate + to_days(CAST(floor(l_quantity) AS INT) % 30) AS l_enddate
+             | FROM lineitem)
+             |SELECT a.l_orderkey, count(*) AS n_pairs,
+             | CAST(sum(datediff('day', greatest(a.l_shipdate, b.l_shipdate),
+             |   least(a.l_enddate, b.l_enddate))) AS BIGINT) AS overlap_days
+             |FROM l a JOIN l b
+             | ON a.l_orderkey = b.l_orderkey AND a.l_linenumber < b.l_linenumber
+             | AND a.l_shipdate <= b.l_enddate AND b.l_shipdate <= a.l_enddate
+             |GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // Latest order at-or-before each event's timestamp per user. Implemented
     // shuffle-free of pair blowup: union orders+events on (key, ts), then a
     // running `last(order, ignoreNulls)` window per key. Ties on
     // (o_orderdate): max o_orderkey wins (order by o_key asc, last picked).
-    "join_asof" -> ((s, dir) => {
+    Op("join_asof", (s, dir) => {
       val o = t(s, dir, "orders").select(
         col("o_custkey").as("k"), col("o_orderdate").as("ats"),
         col("o_orderkey").as("o_key"), lit(null).cast("long").as("event_id"),
@@ -163,7 +216,14 @@ object Joins {
         .filter(col("typ") === 1 && col("asof_orderkey").isNotNull)
         .select("event_id", "asof_orderkey")
         .orderBy("event_id")
-    }),
+    },
+      Some("""SELECT event_id, o_orderkey AS asof_orderkey FROM (
+             |  SELECT e.event_id, o.o_orderkey,
+             |    row_number() OVER (PARTITION BY e.event_id
+             |      ORDER BY o.o_orderdate DESC, o.o_orderkey DESC) AS rn
+             |  FROM events e JOIN orders o
+             |    ON e.user_id = o.o_custkey AND o.o_orderdate <= CAST(e.ts AS TIMESTAMP))
+             |WHERE rn = 1 ORDER BY event_id""".stripMargin)),
 
     // As-of join with a STALENESS BOUND (pandas merge_asof `tolerance`):
     // per purchase, the latest click by the same user at-or-before it,
@@ -176,7 +236,7 @@ object Joins {
     // second last(ignoreNulls) over the identical frame (both pick from
     // the same last typ=0 row), so the tolerance test is a post-window
     // filter, free of joins.
-    "join_asof_tolerance" -> ((s, dir) => {
+    Op("join_asof_tolerance", (s, dir) => {
       val ev = events(s, dir)
       val c = ev.filter(col("event_type") === "click").select(
         col("user_id").as("k"), col("ts").as("ats"),
@@ -197,7 +257,18 @@ object Joins {
           col("asof_ts") >= col("ats") - expr("INTERVAL 30 MINUTES"))
         .select(col("p_key").as("event_id"), col("asof_click"))
         .orderBy("event_id")
-    }),
+    },
+      Some("""SELECT event_id, c_id AS asof_click FROM (
+             |  SELECT p.event_id, c.event_id AS c_id,
+             |    row_number() OVER (PARTITION BY p.event_id
+             |      ORDER BY c.ts2 DESC, c.event_id DESC) AS rn
+             |  FROM (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts2
+             |     FROM events WHERE event_type = 'purchase') p
+             |  JOIN (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts2
+             |     FROM events WHERE event_type = 'click') c
+             |    ON p.user_id = c.user_id AND c.ts2 <= p.ts2
+             |    AND c.ts2 >= p.ts2 - INTERVAL 30 MINUTE)
+             |WHERE rn = 1 ORDER BY event_id""".stripMargin)),
 
     // NEAREST as-of (merge_asof direction='nearest'): per purchase, the
     // click with the smallest |time gap| in EITHER direction, ties to the
@@ -208,7 +279,7 @@ object Joins {
     // frame exactly once) — then the winner is a per-row comparison of
     // the two µs gaps. Still one exchange on the user key (all four
     // window columns share the same sort), no pair blowup.
-    "join_asof_nearest" -> ((s, dir) => {
+    Op("join_asof_nearest", (s, dir) => {
       val ev = events(s, dir)
       val c = ev.filter(col("event_type") === "click").select(
         col("user_id").as("k"), col("ts").as("ats"),
@@ -242,7 +313,28 @@ object Joins {
             .when(col("f_key").isNull, col("b_gap"))
             .otherwise(least(col("b_gap"), col("f_gap"))).as("gap_us"))
         .orderBy("event_id")
-    }),
+    },
+      // Backward candidates are c.ts <= p.ts (same-instant counts backward,
+      // matching the window sort); forward strictly after. Tie order:
+      // smaller gap first, then backward before forward, then max click id
+      // backward / min click id forward — the same picks the two window
+      // frames make.
+      Some("""SELECT event_id, nearest_click, gap_us FROM (
+             |  SELECT p.event_id, c.event_id AS nearest_click,
+             |    CASE WHEN c.ts2 <= p.ts2 THEN epoch_us(p.ts2) - epoch_us(c.ts2)
+             |      ELSE epoch_us(c.ts2) - epoch_us(p.ts2) END AS gap_us,
+             |    row_number() OVER (PARTITION BY p.event_id ORDER BY
+             |      CASE WHEN c.ts2 <= p.ts2 THEN epoch_us(p.ts2) - epoch_us(c.ts2)
+             |        ELSE epoch_us(c.ts2) - epoch_us(p.ts2) END,
+             |      CASE WHEN c.ts2 <= p.ts2 THEN 0 ELSE 1 END,
+             |      CASE WHEN c.ts2 <= p.ts2 THEN -c.event_id ELSE c.event_id END
+             |    ) AS rn
+             |  FROM (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts2
+             |     FROM events WHERE event_type = 'purchase') p
+             |  JOIN (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts2
+             |     FROM events WHERE event_type = 'click') c
+             |    ON p.user_id = c.user_id)
+             |WHERE rn = 1 ORDER BY event_id""".stripMargin)),
 
     // NULL-AWARE anti join — the `NOT IN (subquery)` three-valued-logic
     // shape, a genuinely different operator from NOT EXISTS (`join_anti`):
@@ -255,14 +347,18 @@ object Joins {
     // blocklist/tombstone shape this operator exists for) virtually
     // always does. The subquery keys are non-null here, so the result is
     // the set difference — but through the null-aware plan.
-    "join_anti_null_aware" -> ((s, dir) => {
+    Op("join_anti_null_aware", (s, dir) => {
       t(s, dir, "customer").createOrReplaceTempView("graft_naa_customer")
       t(s, dir, "orders").createOrReplaceTempView("graft_naa_orders")
       s.sql("""SELECT c_custkey, c_name FROM graft_naa_customer
               |WHERE c_custkey NOT IN
               |  (SELECT o_custkey FROM graft_naa_orders WHERE o_totalprice > 400000)
               |ORDER BY c_custkey""".stripMargin)
-    }),
+    },
+      Some("""SELECT c_custkey, c_name FROM customer
+             |WHERE c_custkey NOT IN
+             |  (SELECT o_custkey FROM orders WHERE o_totalprice > 400000)
+             |ORDER BY c_custkey""".stripMargin)),
 
     // LATERAL correlated subquery — top-2 customers by account balance per
     // nation, declared as a per-row dependent subquery with ORDER BY +
@@ -274,7 +370,7 @@ object Joins {
     // the decorrelated form is one shuffle. Double-typed balances are
     // totally ordered by the (c_acctbal DESC, c_custkey) tiebreak, so the
     // LIMIT cut is engine-portable.
-    "join_lateral" -> ((s, dir) => {
+    Op("join_lateral", (s, dir) => {
       t(s, dir, "nation").createOrReplaceTempView("graft_lat_nation")
       t(s, dir, "customer").createOrReplaceTempView("graft_lat_customer")
       s.sql("""SELECT n_name, c_custkey, c_acctbal
@@ -283,7 +379,13 @@ object Joins {
               |         WHERE c_nationkey = n_nationkey
               |         ORDER BY c_acctbal DESC, c_custkey LIMIT 2)
               |ORDER BY n_name, c_acctbal DESC, c_custkey""".stripMargin)
-    }),
+    },
+      Some("""SELECT n_name, c_custkey, c_acctbal
+             |FROM nation,
+             |LATERAL (SELECT c_custkey, c_acctbal FROM customer
+             |         WHERE c_nationkey = n_nationkey
+             |         ORDER BY c_acctbal DESC, c_custkey LIMIT 2)
+             |ORDER BY n_name, c_acctbal DESC, c_custkey""".stripMargin)),
 
     // FORWARD as-of: the FIRST event at-or-after each order (the
     // "what did this order lead to" direction — join_asof reversed).
@@ -292,7 +394,7 @@ object Joins {
     // visible to the order, and the window runs current→following with
     // `first(ignoreNulls)`. One exchange on the customer key, no pair
     // blowup, ties broken by event_id ascending — all deterministic.
-    "join_asof_forward" -> ((s, dir) => {
+    Op("join_asof_forward", (s, dir) => {
       val o = t(s, dir, "orders").select(
         col("o_custkey").as("k"), col("o_orderdate").as("ats"),
         col("o_orderkey"), lit(null).cast("long").as("e_key"),
@@ -309,136 +411,15 @@ object Joins {
         .filter(col("typ") === 0 && col("next_event_id").isNotNull)
         .select("o_orderkey", "next_event_id")
         .orderBy("o_orderkey")
-    }),
-  )
-
-  val oracle: Map[String, String] = Map(
-    "join_anti_null_aware" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE c_custkey NOT IN
-        |  (SELECT o_custkey FROM orders WHERE o_totalprice > 400000)
-        |ORDER BY c_custkey""".stripMargin,
-    "join_lateral" ->
-      """SELECT n_name, c_custkey, c_acctbal
-        |FROM nation,
-        |LATERAL (SELECT c_custkey, c_acctbal FROM customer
-        |         WHERE c_nationkey = n_nationkey
-        |         ORDER BY c_acctbal DESC, c_custkey LIMIT 2)
-        |ORDER BY n_name, c_acctbal DESC, c_custkey""".stripMargin,
-    "join_interval_overlap" ->
-      """WITH l AS (SELECT l_orderkey, l_linenumber, l_shipdate,
-        |   l_shipdate + to_days(CAST(floor(l_quantity) AS INT) % 30) AS l_enddate
-        | FROM lineitem)
-        |SELECT a.l_orderkey, count(*) AS n_pairs,
-        | CAST(sum(datediff('day', greatest(a.l_shipdate, b.l_shipdate),
-        |   least(a.l_enddate, b.l_enddate))) AS BIGINT) AS overlap_days
-        |FROM l a JOIN l b
-        | ON a.l_orderkey = b.l_orderkey AND a.l_linenumber < b.l_linenumber
-        | AND a.l_shipdate <= b.l_enddate AND b.l_shipdate <= a.l_enddate
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "join_broadcast" ->
-      s"""SELECT n_name, count(*) AS order_cnt, ${dsumSql("o_totalprice")} AS total_price
-         |FROM orders JOIN customer ON o_custkey = c_custkey
-         |JOIN nation ON c_nationkey = n_nationkey
-         |GROUP BY n_name ORDER BY n_name""".stripMargin,
-    "join_sortmerge" ->
-      s"""SELECT o_orderstatus, count(*) AS li_cnt, ${dsumSql("l_quantity")} AS sum_qty
-         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "join_shuffle_hash" ->
-      s"""SELECT o_orderstatus, count(*) AS li_cnt, ${dsumSql("l_extendedprice")} AS sum_price
-         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "join_left_outer" ->
-      """SELECT c_custkey, count(o_orderkey) AS order_cnt
-        |FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-        |GROUP BY c_custkey ORDER BY c_custkey""".stripMargin,
-    "join_full_outer" ->
-      """SELECT coalesce(s.nk, c.nk) AS nationkey, s.s_cnt, c.c_cnt
-        |FROM (SELECT s_nationkey AS nk, count(*) AS s_cnt FROM supplier GROUP BY 1) s
-        |FULL JOIN (SELECT c_nationkey AS nk, count(*) AS c_cnt FROM customer GROUP BY 1) c
-        |ON s.nk = c.nk ORDER BY nationkey""".stripMargin,
-    "join_semi" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |ORDER BY c_custkey""".stripMargin,
-    "join_anti" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |ORDER BY c_custkey""".stripMargin,
-    "join_cross_theta" ->
-      """SELECT r_regionkey, r_name, n_nationkey, n_name
-        |FROM region JOIN nation ON n_regionkey <> r_regionkey
-        |ORDER BY r_regionkey, n_nationkey""".stripMargin,
-    "join_range_bucketed" ->
-      """WITH hot AS (
-        |  SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS w_start
-        |  FROM events WHERE event_type = 'purchase'
-        |  GROUP BY 1 HAVING count(*) >= 8)
-        |SELECT h.w_start, count(*) AS n_events
-        |FROM events e JOIN hot h
-        |  ON CAST(e.ts AS TIMESTAMP) >= h.w_start
-        | AND CAST(e.ts AS TIMESTAMP) < h.w_start + INTERVAL 2 HOUR
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "join_range_interval" ->
-      """SELECT p.event_id, count(c.cts) AS clicks_1h
-        |FROM (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS pts FROM events
-        |      WHERE event_type = 'purchase') p
-        |LEFT JOIN (SELECT user_id, CAST(ts AS TIMESTAMP) AS cts FROM events
-        |      WHERE event_type = 'click') c
-        |ON p.user_id = c.user_id AND c.cts >= p.pts - INTERVAL 1 HOUR AND c.cts < p.pts
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "join_asof" ->
-      """SELECT event_id, o_orderkey AS asof_orderkey FROM (
-        |  SELECT e.event_id, o.o_orderkey,
-        |    row_number() OVER (PARTITION BY e.event_id
-        |      ORDER BY o.o_orderdate DESC, o.o_orderkey DESC) AS rn
-        |  FROM events e JOIN orders o
-        |    ON e.user_id = o.o_custkey AND o.o_orderdate <= CAST(e.ts AS TIMESTAMP))
-        |WHERE rn = 1 ORDER BY event_id""".stripMargin,
-    "join_asof_tolerance" ->
-      """SELECT event_id, c_id AS asof_click FROM (
-        |  SELECT p.event_id, c.event_id AS c_id,
-        |    row_number() OVER (PARTITION BY p.event_id
-        |      ORDER BY c.ts2 DESC, c.event_id DESC) AS rn
-        |  FROM (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts2
-        |     FROM events WHERE event_type = 'purchase') p
-        |  JOIN (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts2
-        |     FROM events WHERE event_type = 'click') c
-        |    ON p.user_id = c.user_id AND c.ts2 <= p.ts2
-        |    AND c.ts2 >= p.ts2 - INTERVAL 30 MINUTE)
-        |WHERE rn = 1 ORDER BY event_id""".stripMargin,
-    // Backward candidates are c.ts <= p.ts (same-instant counts backward,
-    // matching the window sort); forward strictly after. Tie order:
-    // smaller gap first, then backward before forward, then max click id
-    // backward / min click id forward — the same picks the two window
-    // frames make.
-    "join_asof_nearest" ->
-      """SELECT event_id, nearest_click, gap_us FROM (
-        |  SELECT p.event_id, c.event_id AS nearest_click,
-        |    CASE WHEN c.ts2 <= p.ts2 THEN epoch_us(p.ts2) - epoch_us(c.ts2)
-        |      ELSE epoch_us(c.ts2) - epoch_us(p.ts2) END AS gap_us,
-        |    row_number() OVER (PARTITION BY p.event_id ORDER BY
-        |      CASE WHEN c.ts2 <= p.ts2 THEN epoch_us(p.ts2) - epoch_us(c.ts2)
-        |        ELSE epoch_us(c.ts2) - epoch_us(p.ts2) END,
-        |      CASE WHEN c.ts2 <= p.ts2 THEN 0 ELSE 1 END,
-        |      CASE WHEN c.ts2 <= p.ts2 THEN -c.event_id ELSE c.event_id END
-        |    ) AS rn
-        |  FROM (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts2
-        |     FROM events WHERE event_type = 'purchase') p
-        |  JOIN (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts2
-        |     FROM events WHERE event_type = 'click') c
-        |    ON p.user_id = c.user_id)
-        |WHERE rn = 1 ORDER BY event_id""".stripMargin,
-    "join_asof_forward" ->
-      """SELECT o_orderkey, event_id AS next_event_id FROM (
-        |  SELECT o.o_orderkey, e.event_id,
-        |    row_number() OVER (PARTITION BY o.o_orderkey
-        |      ORDER BY e.ts2 ASC, e.event_id ASC) AS rn
-        |  FROM orders o JOIN (SELECT user_id, event_id,
-        |      CAST(ts AS TIMESTAMP) AS ts2 FROM events) e
-        |    ON o.o_custkey = e.user_id
-        |    AND e.ts2 >= CAST(o.o_orderdate AS TIMESTAMP))
-        |WHERE rn = 1 ORDER BY o_orderkey""".stripMargin,
+    },
+      Some("""SELECT o_orderkey, event_id AS next_event_id FROM (
+             |  SELECT o.o_orderkey, e.event_id,
+             |    row_number() OVER (PARTITION BY o.o_orderkey
+             |      ORDER BY e.ts2 ASC, e.event_id ASC) AS rn
+             |  FROM orders o JOIN (SELECT user_id, event_id,
+             |      CAST(ts AS TIMESTAMP) AS ts2 FROM events) e
+             |    ON o.o_custkey = e.user_id
+             |    AND e.ts2 >= CAST(o.o_orderdate AS TIMESTAMP))
+             |WHERE rn = 1 ORDER BY o_orderkey""".stripMargin)),
   )
 }

@@ -80,26 +80,59 @@ object MultimodalOps {
     }
   }
 
-  val queries: Map[String, Q] = Map(
+  /** The phash oracle replays the decode-stub byte histogram as ASCII
+    * char counts (byte ≡ char on this corpus — the multimodal_features
+    * identity): cnt(v) = len − len(replace(text, chr(v), '')), 64 dHash
+    * comparisons packed into two 32-bit halves, then the same
+    * exact-signature group agg the engine runs. */
+  private val phashOracle: String = {
+    def cnt(v: Int) =
+      s"(length(text) - length(replace(text, chr($v), '')))"
+    def half(off: Int) = (0 until 32).map { i =>
+      s"CASE WHEN ${cnt(58 + off + i)} > ${cnt(59 + off + i)}" +
+        s" THEN ${1L << i} ELSE 0 END"
+    }.mkString("\n    + ")
+    s"""WITH h AS MATERIALIZED (SELECT doc_id,
+       |  CAST(${half(0)} AS BIGINT) AS sh_lo,
+       |  CAST(${half(32)} AS BIGINT) AS sh_hi
+       | FROM documents)
+       |SELECT min(doc_id) AS keep_id, count(*) AS dup_cnt, sh_lo, sh_hi
+       |FROM h GROUP BY sh_lo, sh_hi ORDER BY keep_id""".stripMargin
+  }
+
+  val ops: Seq[Op] = Seq(
     // documents ⋈ embeddings + per-(lang, position) element statistics —
     // the "join text metadata to media-derived vectors" shape.
-    "multimodal_join" -> ((s, dir) =>
+    Op("multimodal_join", (s, dir) =>
       t(s, dir, "documents")
         .join(t(s, dir, "embeddings"), col("doc_id") === col("vec_id"))
         .select(col("lang"), posexplode(col("embedding")).as(Seq("pos", "val")))
         .groupBy("lang", "pos")
         .agg(round(avg(col("val")), 6).as("avg_val"), count(lit(1)).as("n"))
-        .orderBy("lang", "pos")),
+        .orderBy("lang", "pos"),
+      Some("""SELECT d.lang, CAST(i AS INT) AS pos,
+             | round(avg(e.embedding[i + 1]), 6) AS avg_val, count(*) AS n
+             |FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id,
+             | (SELECT unnest(generate_series(0, 63)) AS i) g
+             |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
 
     // Binary decode pipeline end-to-end: text → UTF-8 payload (media
     // stand-in) → executor-side decode stub → feature columns. The oracle
     // recomputes the same counts with pure SQL — exact integers.
-    "multimodal_features" -> ((s, dir) => {
+    Op("multimodal_features", (s, dir) => {
       val media = t(s, dir, "documents")
         .select(col("doc_id"), lit("text/plain").as("modality"),
           encode(col("text"), "UTF-8").as("content"))
       MediaPipeline.extractFeatures(s, media).orderBy("doc_id")
-    }),
+    },
+      Some {
+        def cnt(ch: String, as: String) =
+          s"CAST(length(text) - length(replace(text, '$ch', '')) AS INT) AS $as"
+        s"""SELECT doc_id, CAST(length(text) AS INT) AS n_bytes,
+           | ${cnt(" ", "n_spaces")}, ${cnt("a", "cnt_a")}, ${cnt("e", "cnt_e")},
+           | ${cnt("i", "cnt_i")}, ${cnt("o", "cnt_o")}, ${cnt("u", "cnt_u")}
+           |FROM documents ORDER BY doc_id""".stripMargin
+      }),
 
     // BLUR / LOW-TEXTURE SCREEN — the 1-D analog of the Laplacian-
     // variance blur detector every image-curation pipeline runs before
@@ -112,7 +145,7 @@ object MultimodalOps {
     // asset afterwards; the verdict column reads the ROUNDED variance
     // so the threshold can't flake. Embarrassingly parallel, zero
     // shuffles before the presentation sort.
-    "multimodal_blur_screen" -> ((s, dir) => {
+    Op("multimodal_blur_screen", (s, dir) => {
       import s.implicits._
       val media = t(s, dir, "documents")
         .select(col("doc_id"), encode(col("text"), "UTF-8").as("content"))
@@ -134,14 +167,42 @@ object MultimodalOps {
           when(col("n_deltas") > 0, v6).as("delta_variance"),
           when(col("n_deltas") > 0, v6 < lit(200.0)).as("is_low_texture"))
         .orderBy("doc_id")
-    }),
+    },
+      Some("""WITH d AS (SELECT doc_id, text, len(text) AS L FROM documents),
+             | dd AS (SELECT doc_id, CAST(L - 1 AS BIGINT) AS n_deltas,
+             |   CAST(coalesce(list_sum(list_transform(range(1, L), i ->
+             |     ascii(substr(text, i + 1, 1)) - ascii(substr(text, i, 1)))),
+             |     0) AS BIGINT) AS sum_d,
+             |   CAST(coalesce(list_sum(list_transform(range(1, L), i ->
+             |     (ascii(substr(text, i + 1, 1)) - ascii(substr(text, i, 1)))
+             |     * (ascii(substr(text, i + 1, 1)) - ascii(substr(text, i, 1))))),
+             |     0) AS BIGINT) AS sum_d2
+             |  FROM d),
+             | v AS (SELECT doc_id, n_deltas,
+             |   round((CAST(sum_d2 AS DOUBLE)
+             |     - CAST(sum_d AS DOUBLE) * sum_d / n_deltas) / n_deltas, 6) AS v6
+             |  FROM dd)
+             |SELECT doc_id, n_deltas,
+             | CASE WHEN n_deltas > 0 THEN v6 END AS delta_variance,
+             | CASE WHEN n_deltas > 0 THEN v6 < 200.0 END AS is_low_texture
+             |FROM v ORDER BY doc_id""".stripMargin)),
 
     // Batched model scoring over the embedding column (GPU-inference
     // plumbing with a deterministic stub model — see batchScore).
-    "multimodal_batch_score" -> ((s, dir) =>
+    Op("multimodal_batch_score", (s, dir) =>
       MediaPipeline.batchScore(s, t(s, dir, "embeddings"))
         .select(col("vec_id"), round(col("score"), 6).as("score"))
-        .orderBy("vec_id")),
+        .orderBy("vec_id"),
+      Some {
+        // Literal weight list (same doubles the stub model computes);
+        // list_dot_product accumulates sequentially — bit-identical to the
+        // scorer's loop, unlike a GROUP BY sum whose order is unspecified.
+        val weights = (0 until 64).map(j => (j % 7 - 3) / 10.0).mkString("[", ", ", "]")
+        s"""SELECT vec_id,
+           | round(list_dot_product(
+           |   list_transform(embedding, x -> CAST(x AS DOUBLE)), $weights), 6) AS score
+           |FROM embeddings ORDER BY vec_id""".stripMargin
+      }),
 
     // FRAME SAMPLING — the video-keyframe extraction shape: 4 evenly-
     // spaced fixed-size byte slices per payload via the executor-side
@@ -150,7 +211,7 @@ object MultimodalOps {
     // codec boundary, one row per (doc, frame) out — embarrassingly
     // parallel, no shuffle at all (the orderBy is the test harness's).
     // The oracle replays the slice arithmetic on the ASCII text twin.
-    "multimodal_frame_sample" -> ((s, dir) => {
+    Op("multimodal_frame_sample", (s, dir) => {
       import s.implicits._
       val media = t(s, dir, "documents")
         .select(col("doc_id"), encode(col("text"), "UTF-8").as("content"))
@@ -166,7 +227,17 @@ object MultimodalOps {
           md5(col("frame")).as("frame_md5"),
           length(col("frame")).cast("int").as("n_bytes"))
         .orderBy("doc_id", "frame_no")
-    }),
+    },
+      // The slice arithmetic mirrors frameSample: start = ⌊len·i/4⌋
+      // (0-based) → substring(…, start+1, 16) on the ASCII text (byte ≡
+      // char for this corpus, the same identity multimodal_features pins).
+      Some("""WITH f AS (SELECT doc_id, i,
+             |   substring(text, CAST(floor(length(text) * i / 4) AS INT) + 1, 16) AS frame
+             | FROM documents, (SELECT unnest(generate_series(0, 3)) AS i) g
+             | WHERE length(text) > 0)
+             |SELECT doc_id, CAST(i AS INT) AS frame_no, md5(frame) AS frame_md5,
+             | CAST(length(frame) AS INT) AS n_bytes
+             |FROM f ORDER BY doc_id, frame_no""".stripMargin)),
 
     // FRAME-FINGERPRINT OVERLAP — media near-dup without decode: two
     // payloads sharing any sampled keyframe fingerprint are re-encode /
@@ -176,7 +247,7 @@ object MultimodalOps {
     // count — candidates ∝ Σ_digest c², bounded by the same df-ceiling
     // logic as the text miners (a hot digest would be a boilerplate
     // frame; at this feed max df = 3). Exact and oracle-checked.
-    "multimodal_frame_overlap" -> ((s, dir) => {
+    Op("multimodal_frame_overlap", (s, dir) => {
       import s.implicits._
       val media = t(s, dir, "documents")
         .select(col("doc_id"), encode(col("text"), "UTF-8").as("content"))
@@ -192,7 +263,15 @@ object MultimodalOps {
         .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
         .agg(count(lit(1)).as("shared_frames"))
         .orderBy("d1", "d2")
-    }),
+    },
+      Some("""WITH f AS (SELECT doc_id, i,
+             |   substring(text, CAST(floor(length(text) * i / 4) AS INT) + 1, 16) AS frame
+             | FROM documents, (SELECT unnest(generate_series(0, 3)) AS i) g
+             | WHERE length(text) > 0),
+             | d AS (SELECT DISTINCT doc_id, md5(frame) AS h FROM f)
+             |SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS shared_frames
+             |FROM d a JOIN d b ON a.h = b.h AND a.doc_id < b.doc_id
+             |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
 
     // Exact media dedup — the FIRST screen of any image/audio pipeline:
     // hash the opaque binary payload, keep one doc per digest. The hash
@@ -202,7 +281,7 @@ object MultimodalOps {
     // dedup_exact's one two-phase agg keyed on the digest: at 100 TB the
     // exchange carries one (digest, partial) row per distinct payload
     // per task, never the payloads themselves.
-    "multimodal_dedup" -> ((s, dir) =>
+    Op("multimodal_dedup", (s, dir) =>
       t(s, dir, "documents")
         .select(col("doc_id"), encode(col("text"), "UTF-8").as("content"))
         .groupBy(md5(col("content")).as("content_md5"))
@@ -210,7 +289,14 @@ object MultimodalOps {
           count(lit(1)).as("dup_cnt"),
           max(length(col("content")).cast("long")).as("n_bytes"))
         .select(col("keep_id"), col("dup_cnt"), col("n_bytes"), col("content_md5"))
-        .orderBy("keep_id")),
+        .orderBy("keep_id"),
+      // DuckDB md5 over VARCHAR hashes its UTF-8 bytes — the same bytes
+      // Spark's encode(text, 'UTF-8') produces.
+      Some("""SELECT min(doc_id) AS keep_id, count(*) AS dup_cnt,
+             | max(CAST(length(text) AS BIGINT)) AS n_bytes,
+             | md5(text) AS content_md5
+             |FROM documents GROUP BY 4
+             |ORDER BY keep_id""".stripMargin)),
 
     // PERCEPTUAL-HASH DEDUP over media payloads (round 10) — the
     // perceptual complement of multimodal_dedup's exact digest: a
@@ -228,7 +314,7 @@ object MultimodalOps {
     // signature frame unchanged; the exact-bucket form is what a 100 TB
     // media pipeline actually materializes. mapPartitions only at the
     // codec boundary; 3 longs/doc are all that ever shuffles.
-    "multimodal_phash_dedup" -> ((s, dir) => {
+    Op("multimodal_phash_dedup", (s, dir) => {
       import s.implicits._
       val media = t(s, dir, "documents")
         .select(col("doc_id"), encode(col("text"), "UTF-8").as("content"))
@@ -251,7 +337,8 @@ object MultimodalOps {
         .agg(min("doc_id").as("keep_id"), count(lit(1)).as("dup_cnt"))
         .select(col("keep_id"), col("dup_cnt"), col("sh_lo"), col("sh_hi"))
         .orderBy("keep_id")
-    }),
+    },
+      Some(phashOracle)),
 
     // Container-format sniffing by magic bytes — the first gate of any
     // media ingest (the claimed extension/MIME lies; the leading bytes
@@ -275,7 +362,7 @@ object MultimodalOps {
     // no float ratio ever enters and ties break by fixed bucket order
     // via one array_min over a 5-struct literal — pure scan-stage
     // projection, one 5-row hash agg, zero joins at any corpus size.
-    "multimodal_aspect_bucket" -> ((s, dir) => {
+    Op("multimodal_aspect_bucket", (s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"),
           col("n_chars"))
         .withColumn("w", (lit(256) + col("n_chars") % 512).cast("long"))
@@ -292,9 +379,23 @@ object MultimodalOps {
         .agg(count(lit(1)).as("n_assets"),
           sum(col("w") * col("h")).as("sum_pixels"))
         .orderBy("bucket")
-    }),
+    },
+      // Same integer cross-multiplied nearest-aspect pick; the argmin is
+      // a rank-1 window over the 5 unnested candidates per doc.
+      Some("""WITH d AS (SELECT doc_id, 256 + n_chars % 512 AS w,
+             |   256 + (n_chars * 7) % 512 AS h FROM documents),
+             | c AS (SELECT doc_id, w, h, b.i, b.name,
+             |   abs(w * b.bh - h * b.bw) * (144 // b.bh) AS s
+             |  FROM d CROSS JOIN (VALUES (1, 1, 0, '1:1'), (4, 3, 1, '4:3'),
+             |   (3, 4, 2, '3:4'), (16, 9, 3, '16:9'), (9, 16, 4, '9:16'))
+             |   AS b(bw, bh, i, name)),
+             | r AS (SELECT *, row_number() OVER (PARTITION BY doc_id
+             |   ORDER BY s, i) AS rn FROM c)
+             |SELECT name AS bucket, CAST(count(*) AS BIGINT) AS n_assets,
+             | CAST(sum(w * h) AS BIGINT) AS sum_pixels
+             |FROM r WHERE rn = 1 GROUP BY 1 ORDER BY bucket""".stripMargin)),
 
-    "multimodal_codec_detect" -> ((s, dir) => {
+    Op("multimodal_codec_detect", (s, dir) => {
       val magic = when(col("doc_id") % 3 === 0, lit(Array[Byte](0xFF.toByte, 0xD8.toByte, 0xFF.toByte, 0xE0.toByte)))
         .when(col("doc_id") % 3 === 1, lit(Array[Byte](0x89.toByte, 0x50, 0x4E, 0x47)))
         .otherwise(lit("RIFF".getBytes("UTF-8")))
@@ -311,126 +412,15 @@ object MultimodalOps {
             .otherwise("unknown"))
         .select("doc_id", "codec", "magic_hex", "n_bytes")
         .orderBy("doc_id")
-    }),
-  )
-
-  /** The phash oracle replays the decode-stub byte histogram as ASCII
-    * char counts (byte ≡ char on this corpus — the multimodal_features
-    * identity): cnt(v) = len − len(replace(text, chr(v), '')), 64 dHash
-    * comparisons packed into two 32-bit halves, then the same
-    * exact-signature group agg the engine runs. */
-  private val phashOracle: String = {
-    def cnt(v: Int) =
-      s"(length(text) - length(replace(text, chr($v), '')))"
-    def half(off: Int) = (0 until 32).map { i =>
-      s"CASE WHEN ${cnt(58 + off + i)} > ${cnt(59 + off + i)}" +
-        s" THEN ${1L << i} ELSE 0 END"
-    }.mkString("\n    + ")
-    s"""WITH h AS MATERIALIZED (SELECT doc_id,
-       |  CAST(${half(0)} AS BIGINT) AS sh_lo,
-       |  CAST(${half(32)} AS BIGINT) AS sh_hi
-       | FROM documents)
-       |SELECT min(doc_id) AS keep_id, count(*) AS dup_cnt, sh_lo, sh_hi
-       |FROM h GROUP BY sh_lo, sh_hi ORDER BY keep_id""".stripMargin
-  }
-
-  val oracle: Map[String, String] = Map(
-    "multimodal_phash_dedup" -> phashOracle,
-    // Same integer cross-multiplied nearest-aspect pick; the argmin is
-    // a rank-1 window over the 5 unnested candidates per doc.
-    "multimodal_aspect_bucket" ->
-      """WITH d AS (SELECT doc_id, 256 + n_chars % 512 AS w,
-        |   256 + (n_chars * 7) % 512 AS h FROM documents),
-        | c AS (SELECT doc_id, w, h, b.i, b.name,
-        |   abs(w * b.bh - h * b.bw) * (144 // b.bh) AS s
-        |  FROM d CROSS JOIN (VALUES (1, 1, 0, '1:1'), (4, 3, 1, '4:3'),
-        |   (3, 4, 2, '3:4'), (16, 9, 3, '16:9'), (9, 16, 4, '9:16'))
-        |   AS b(bw, bh, i, name)),
-        | r AS (SELECT *, row_number() OVER (PARTITION BY doc_id
-        |   ORDER BY s, i) AS rn FROM c)
-        |SELECT name AS bucket, CAST(count(*) AS BIGINT) AS n_assets,
-        | CAST(sum(w * h) AS BIGINT) AS sum_pixels
-        |FROM r WHERE rn = 1 GROUP BY 1 ORDER BY bucket""".stripMargin,
-    // The slice arithmetic mirrors frameSample: start = ⌊len·i/4⌋
-    // (0-based) → substring(…, start+1, 16) on the ASCII text (byte ≡
-    // char for this corpus, the same identity multimodal_features pins).
-    "multimodal_frame_sample" ->
-      """WITH f AS (SELECT doc_id, i,
-        |   substring(text, CAST(floor(length(text) * i / 4) AS INT) + 1, 16) AS frame
-        | FROM documents, (SELECT unnest(generate_series(0, 3)) AS i) g
-        | WHERE length(text) > 0)
-        |SELECT doc_id, CAST(i AS INT) AS frame_no, md5(frame) AS frame_md5,
-        | CAST(length(frame) AS INT) AS n_bytes
-        |FROM f ORDER BY doc_id, frame_no""".stripMargin,
-    "multimodal_frame_overlap" ->
-      """WITH f AS (SELECT doc_id, i,
-        |   substring(text, CAST(floor(length(text) * i / 4) AS INT) + 1, 16) AS frame
-        | FROM documents, (SELECT unnest(generate_series(0, 3)) AS i) g
-        | WHERE length(text) > 0),
-        | d AS (SELECT DISTINCT doc_id, md5(frame) AS h FROM f)
-        |SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS shared_frames
-        |FROM d a JOIN d b ON a.h = b.h AND a.doc_id < b.doc_id
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // DuckDB md5 over VARCHAR hashes its UTF-8 bytes — the same bytes
-    // Spark's encode(text, 'UTF-8') produces.
-    "multimodal_dedup" ->
-      """SELECT min(doc_id) AS keep_id, count(*) AS dup_cnt,
-        | max(CAST(length(text) AS BIGINT)) AS n_bytes,
-        | md5(text) AS content_md5
-        |FROM documents GROUP BY 4
-        |ORDER BY keep_id""".stripMargin,
-    // Closed form from the minting rule: doc_id mod 3 chose the magic,
-    // payload length = 4 magic bytes + the ASCII body.
-    "multimodal_codec_detect" ->
-      """SELECT doc_id,
-        | CASE doc_id % 3 WHEN 0 THEN 'jpeg' WHEN 1 THEN 'png'
-        |   ELSE 'riff' END AS codec,
-        | CASE doc_id % 3 WHEN 0 THEN 'FFD8FFE0' WHEN 1 THEN '89504E47'
-        |   ELSE '52494646' END AS magic_hex,
-        | CAST(strlen(text) + 4 AS BIGINT) AS n_bytes
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "multimodal_join" ->
-      """SELECT d.lang, CAST(i AS INT) AS pos,
-        | round(avg(e.embedding[i + 1]), 6) AS avg_val, count(*) AS n
-        |FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id,
-        | (SELECT unnest(generate_series(0, 63)) AS i) g
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "multimodal_features" -> {
-      def cnt(ch: String, as: String) =
-        s"CAST(length(text) - length(replace(text, '$ch', '')) AS INT) AS $as"
-      s"""SELECT doc_id, CAST(length(text) AS INT) AS n_bytes,
-         | ${cnt(" ", "n_spaces")}, ${cnt("a", "cnt_a")}, ${cnt("e", "cnt_e")},
-         | ${cnt("i", "cnt_i")}, ${cnt("o", "cnt_o")}, ${cnt("u", "cnt_u")}
-         |FROM documents ORDER BY doc_id""".stripMargin
     },
-    "multimodal_blur_screen" ->
-      """WITH d AS (SELECT doc_id, text, len(text) AS L FROM documents),
-        | dd AS (SELECT doc_id, CAST(L - 1 AS BIGINT) AS n_deltas,
-        |   CAST(coalesce(list_sum(list_transform(range(1, L), i ->
-        |     ascii(substr(text, i + 1, 1)) - ascii(substr(text, i, 1)))),
-        |     0) AS BIGINT) AS sum_d,
-        |   CAST(coalesce(list_sum(list_transform(range(1, L), i ->
-        |     (ascii(substr(text, i + 1, 1)) - ascii(substr(text, i, 1)))
-        |     * (ascii(substr(text, i + 1, 1)) - ascii(substr(text, i, 1))))),
-        |     0) AS BIGINT) AS sum_d2
-        |  FROM d),
-        | v AS (SELECT doc_id, n_deltas,
-        |   round((CAST(sum_d2 AS DOUBLE)
-        |     - CAST(sum_d AS DOUBLE) * sum_d / n_deltas) / n_deltas, 6) AS v6
-        |  FROM dd)
-        |SELECT doc_id, n_deltas,
-        | CASE WHEN n_deltas > 0 THEN v6 END AS delta_variance,
-        | CASE WHEN n_deltas > 0 THEN v6 < 200.0 END AS is_low_texture
-        |FROM v ORDER BY doc_id""".stripMargin,
-    "multimodal_batch_score" -> {
-      // Literal weight list (same doubles the stub model computes);
-      // list_dot_product accumulates sequentially — bit-identical to the
-      // scorer's loop, unlike a GROUP BY sum whose order is unspecified.
-      val weights = (0 until 64).map(j => (j % 7 - 3) / 10.0).mkString("[", ", ", "]")
-      s"""SELECT vec_id,
-         | round(list_dot_product(
-         |   list_transform(embedding, x -> CAST(x AS DOUBLE)), $weights), 6) AS score
-         |FROM embeddings ORDER BY vec_id""".stripMargin
-    },
+      // Closed form from the minting rule: doc_id mod 3 chose the magic,
+      // payload length = 4 magic bytes + the ASCII body.
+      Some("""SELECT doc_id,
+             | CASE doc_id % 3 WHEN 0 THEN 'jpeg' WHEN 1 THEN 'png'
+             |   ELSE 'riff' END AS codec,
+             | CASE doc_id % 3 WHEN 0 THEN 'FFD8FFE0' WHEN 1 THEN '89504E47'
+             |   ELSE '52494646' END AS magic_hex,
+             | CAST(strlen(text) + 4 AS BIGINT) AS n_bytes
+             |FROM documents ORDER BY doc_id""".stripMargin)),
   )
 }

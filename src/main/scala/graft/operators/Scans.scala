@@ -28,25 +28,39 @@ object Scans {
       .orderBy("o_orderkey")
   }
 
-  val queries: Map[String, Q] = Map(
-    "scan_parquet" -> ((s, dir) =>
-      t(s, dir, "lineitem").orderBy("l_orderkey", "l_linenumber")),
+  val ops: Seq[Op] = Seq(
+    Op("scan_parquet", (s, dir) =>
+      t(s, dir, "lineitem").orderBy("l_orderkey", "l_linenumber"),
+      Some("SELECT * FROM lineitem ORDER BY l_orderkey, l_linenumber")),
 
-    "scan_events_ns" -> ((s, dir) =>
-      events(s, dir).orderBy("event_id")),
+    Op("scan_events_ns", (s, dir) =>
+      events(s, dir).orderBy("event_id"),
+      Some("""SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type, value, props
+             |FROM events ORDER BY event_id""".stripMargin)),
 
-    "scan_schema_projection" -> ((s, dir) =>
+    Op("scan_schema_projection", (s, dir) =>
       t(s, dir, "lineitem")
         .select("l_orderkey", "l_linenumber", "l_quantity")
-        .orderBy("l_orderkey", "l_linenumber")),
+        .orderBy("l_orderkey", "l_linenumber"),
+      Some("""SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
+             |ORDER BY l_orderkey, l_linenumber""".stripMargin)),
 
-    "scan_csv_roundtrip" -> ((s, dir) => roundTrip(s, dir, "csv")),
+    Op("scan_csv_roundtrip", (s, dir) => roundTrip(s, dir, "csv"),
+      Some("""SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
+             | o_orderpriority
+             |FROM orders ORDER BY o_orderkey""".stripMargin)),
 
-    "scan_json_roundtrip" -> ((s, dir) => roundTrip(s, dir, "json")),
+    Op("scan_json_roundtrip", (s, dir) => roundTrip(s, dir, "json"),
+      Some("""SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
+             | o_orderpriority
+             |FROM orders ORDER BY o_orderkey""".stripMargin)),
 
     // ORC round-trip — the second columnar format (same pushdown/pruning
     // machinery as parquet via the vectorized ORC reader).
-    "scan_orc_roundtrip" -> ((s, dir) => roundTrip(s, dir, "orc")),
+    Op("scan_orc_roundtrip", (s, dir) => roundTrip(s, dir, "orc"),
+      Some("""SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
+             | o_orderpriority
+             |FROM orders ORDER BY o_orderkey""".stripMargin)),
 
     // Hive-style partitioned layout: write documents partitioned by lang
     // (lang=en/part-*.parquet directories), read back through partition
@@ -66,11 +80,14 @@ object Scans {
     // states the closed form (the testdata table is a single file whose
     // row order is doc_id order — the row_index ≡ doc_id identity is
     // itself the check that the reader preserves file order).
-    "scan_metadata_cols" -> ((s, dir) =>
+    Op("scan_metadata_cols", (s, dir) =>
       t(s, dir, "documents")
         .select(col("doc_id"), col("_metadata.file_name").as("file_name"),
           col("_metadata.row_index").as("row_index"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      Some("""SELECT doc_id, 'documents.parquet' AS file_name,
+             | doc_id AS row_index
+             |FROM documents ORDER BY doc_id""".stripMargin)),
 
     // SCHEMA EVOLUTION at the scan (mergeSchema): a corpus written over
     // months gains columns — v1 files lack the later `quality` score, v2
@@ -81,7 +98,7 @@ object Scans {
     // source, where a 100 TB corpus actually needs it (rewriting
     // petabytes to add a column is not an option). count(quality) vs
     // count(*) is the per-version coverage readout.
-    "scan_merge_schema" -> ((s, dir) => {
+    Op("scan_merge_schema", (s, dir) => {
       val docs = t(s, dir, "documents")
       val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_schema_evo"
       docs.filter(col("doc_id") % 2 === 0)
@@ -97,7 +114,12 @@ object Scans {
           count(col("quality")).as("n_scored"),
           dsum6(col("quality")).as("sum_quality"))
         .orderBy("lang")
-    }),
+    },
+      Some(s"""SELECT lang, count(*) AS n_docs,
+              | count(*) FILTER (WHERE doc_id % 2 <> 0) AS n_scored,
+              | ${dsum6Sql("CASE WHEN doc_id % 2 <> 0 THEN n_chars / 1000.0 END")}
+              |   AS sum_quality
+              |FROM documents GROUP BY lang ORDER BY lang""".stripMargin)),
 
     // Bucketed-table co-located join: both fact tables are written
     // pre-hashed into the SAME bucket layout (8 buckets on the order
@@ -110,17 +132,10 @@ object Scans {
     // cluster regime where neither fact side fits memory). The only
     // exchange left in this plan is the final group-by's
     // (BucketingSpec + PlanSpec pin exactly that).
-    "scan_bucketed_join" -> ((s, dir) => {
+    Op("scan_bucketed_join", (s, dir) => {
       def save(name: String, df: org.apache.spark.sql.DataFrame,
           key: String): Unit = {
-        // A fresh JVM starts with an empty in-memory catalog but the
-        // warehouse DIRECTORY outlives it — clear both or saveAsTable
-        // fails with LOCATION_ALREADY_EXISTS on the second run.
-        s.sql(s"DROP TABLE IF EXISTS $name")
-        val wh = new org.apache.hadoop.fs.Path(
-          s.conf.get("spark.sql.warehouse.dir"), name)
-        wh.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .delete(wh, true)
+        dropManagedTable(s, name)
         df.write.bucketBy(8, key).sortBy(key).mode("overwrite")
           .saveAsTable(name)
       }
@@ -135,9 +150,13 @@ object Scans {
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("li_cnt"), dsum(col("l_quantity")).as("sum_qty"))
         .orderBy("o_orderpriority")
-    }),
+    },
+      Some(s"""SELECT o_orderpriority, count(*) AS li_cnt,
+              | ${dsumSql("l_quantity")} AS sum_qty
+              |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+              |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)),
 
-    "scan_hive_partitioned" -> ((s, dir) => {
+    Op("scan_hive_partitioned", (s, dir) => {
       val src = t(s, dir, "documents")
       val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_hive_docs"
       src.write.mode("overwrite").partitionBy("lang").parquet(tmp)
@@ -145,7 +164,9 @@ object Scans {
         .filter(col("lang") === "en")
         .select("doc_id", "text", "lang", "source", "n_chars")
         .orderBy("doc_id")
-    }),
+    },
+      Some("""SELECT doc_id, text, lang, source, n_chars
+             |FROM documents WHERE lang = 'en' ORDER BY doc_id""".stripMargin)),
 
     // Line-oriented text interchange — the raw-crawl ingest format (WET
     // dumps, jsonl-adjacent logs arrive as one record per line). Write
@@ -157,7 +178,7 @@ object Scans {
     // line-by-line — a text scan is the one source whose input split
     // boundary is a row boundary, so 100 TB of lines parallelizes to
     // byte-range splits with no footer metadata at all.
-    "scan_text_lines" -> ((s, dir) => {
+    Op("scan_text_lines", (s, dir) => {
       val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_rt_text"
       t(s, dir, "documents")
         .select(concat_ws("\u0001", col("doc_id"), col("text")).as("value"))
@@ -167,7 +188,8 @@ object Scans {
           substring_index(col("value"), "\u0001", 1).cast("long").as("doc_id"),
           substring_index(col("value"), "\u0001", -1).as("text"))
         .orderBy("doc_id")
-    }),
+    },
+      Some("SELECT doc_id, text FROM documents ORDER BY doc_id")),
 
     // PERMISSIVE corrupt-record accounting — the ingest reality check: a
     // crawl's jsonl shards always contain some malformed lines, and the
@@ -179,7 +201,7 @@ object Scans {
     // (corrupt rows land in the NULL-lang group) is the shard-health
     // report an ingest job emits; the oracle re-derives it from the
     // minting rule. Schema is explicit — no inference pass over 100 TB.
-    "scan_json_corrupt" -> ((s, dir) => {
+    Op("scan_json_corrupt", (s, dir) => {
       val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_json_corrupt"
       t(s, dir, "documents")
         .select(when(col("doc_id") % 50 === 0,
@@ -197,7 +219,17 @@ object Scans {
           count(col("_corrupt_record")).as("n_corrupt"),
           sum(col("n_chars")).as("sum_chars"))
         .orderBy("lang")
-    }),
+    },
+      // Closed form from the minting rule: doc_id % 50 = 0 lines are
+      // malformed → NULL-lang group with n_corrupt = n_rows; the rest
+      // aggregate normally per lang.
+      Some("""SELECT lang, count(*) AS n_rows, CAST(0 AS BIGINT) AS n_corrupt,
+             | CAST(sum(n_chars) AS BIGINT) AS sum_chars
+             |FROM documents WHERE doc_id % 50 <> 0 GROUP BY lang
+             |UNION ALL
+             |SELECT NULL, count(*), count(*), CAST(NULL AS BIGINT)
+             |FROM documents WHERE doc_id % 50 = 0
+             |ORDER BY lang""".stripMargin)),
 
     // Whole-file binary ingest (`binaryFile`) — the opaque-payload path a
     // multimodal corpus starts from (images/audio arrive as files, not
@@ -212,7 +244,7 @@ object Scans {
     // exactly the rows and the binary reader saw every byte once (file
     // COUNT is deliberately not surfaced: it is a parallelism artifact,
     // not data).
-    "scan_binary_files" -> ((s, dir) => {
+    Op("scan_binary_files", (s, dir) => {
       val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_binary_docs"
       t(s, dir, "documents").select(col("lang"), col("text").as("value"))
         .write.mode("overwrite").partitionBy("lang").format("text").save(tmp)
@@ -224,7 +256,9 @@ object Scans {
         .groupBy("lang")
         .agg(sum(col("nbytes")).as("total_bytes"))
         .orderBy("lang")
-    }),
+    },
+      Some("""SELECT lang, CAST(sum(strlen(text) + 1) AS BIGINT) AS total_bytes
+             |FROM documents GROUP BY lang ORDER BY lang""".stripMargin)),
 
     // PARQUET FOOTER INTROSPECTION (round 11) — per-row-group rows /
     // column count / compressed bytes straight from the file footer,
@@ -242,7 +276,7 @@ object Scans {
     // file list sorted by name for determinism. The oracle mirrors via
     // parquet_metadata + parse_filename; Verify substitutes the right
     // glob per layout (__PQ_LINEITEM__).
-    "scan_parquet_footer" -> ((s, dir) => {
+    Op("scan_parquet_footer", (s, dir) => {
       import scala.jdk.CollectionConverters._
       val conf = s.sessionState.newHadoopConf()
       val root = new org.apache.hadoop.fs.Path(s"$dir/lineitem.parquet")
@@ -265,78 +299,20 @@ object Scans {
       import s.implicits._
       rgs.toDF("file_name", "rg_id", "num_rows", "n_columns", "compressed_bytes")
         .orderBy("file_name", "rg_id")
-    }),
-  )
-
-  val oracle: Map[String, String] = Map(
-    "scan_parquet" ->
-      "SELECT * FROM lineitem ORDER BY l_orderkey, l_linenumber",
-    "scan_events_ns" ->
-      """SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type, value, props
-        |FROM events ORDER BY event_id""".stripMargin,
-    "scan_schema_projection" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "scan_csv_roundtrip" ->
-      """SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
-        | o_orderpriority
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "scan_json_roundtrip" ->
-      """SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
-        | o_orderpriority
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "scan_orc_roundtrip" ->
-      """SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
-        | o_orderpriority
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "scan_merge_schema" ->
-      s"""SELECT lang, count(*) AS n_docs,
-         | count(*) FILTER (WHERE doc_id % 2 <> 0) AS n_scored,
-         | ${dsum6Sql("CASE WHEN doc_id % 2 <> 0 THEN n_chars / 1000.0 END")}
-         |   AS sum_quality
-         |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-    "scan_bucketed_join" ->
-      s"""SELECT o_orderpriority, count(*) AS li_cnt,
-         | ${dsumSql("l_quantity")} AS sum_qty
-         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "scan_hive_partitioned" ->
-      """SELECT doc_id, text, lang, source, n_chars
-        |FROM documents WHERE lang = 'en' ORDER BY doc_id""".stripMargin,
-    "scan_metadata_cols" ->
-      """SELECT doc_id, 'documents.parquet' AS file_name,
-        | doc_id AS row_index
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "scan_text_lines" ->
-      "SELECT doc_id, text FROM documents ORDER BY doc_id",
-    // Closed form from the minting rule: doc_id % 50 = 0 lines are
-    // malformed → NULL-lang group with n_corrupt = n_rows; the rest
-    // aggregate normally per lang.
-    "scan_json_corrupt" ->
-      """SELECT lang, count(*) AS n_rows, CAST(0 AS BIGINT) AS n_corrupt,
-        | CAST(sum(n_chars) AS BIGINT) AS sum_chars
-        |FROM documents WHERE doc_id % 50 <> 0 GROUP BY lang
-        |UNION ALL
-        |SELECT NULL, count(*), count(*), CAST(NULL AS BIGINT)
-        |FROM documents WHERE doc_id % 50 = 0
-        |ORDER BY lang""".stripMargin,
-    "scan_binary_files" ->
-      """SELECT lang, CAST(sum(strlen(text) + 1) AS BIGINT) AS total_bytes
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-    // The one oracle that names a PATH instead of a view: footer
-    // introspection has no table-level SQL form. The __PQ_LINEITEM__
-    // placeholder is substituted by Verify at dump time with the run's
-    // actual lineitem path — the bare file for single-file corpora, a
-    // part-file glob when the table is a Spark output DIRECTORY
-    // (ScaleGen corpora) — so the oracle always inspects the SAME
-    // file set the Spark side read, at any scale and either layout.
-    "scan_parquet_footer" ->
-      """SELECT parse_filename(file_name) AS file_name,
-        | CAST(row_group_id AS INT) AS rg_id,
-        | CAST(max(row_group_num_rows) AS BIGINT) AS num_rows,
-        | count(*) AS n_columns,
-        | CAST(sum(total_compressed_size) AS BIGINT) AS compressed_bytes
-        |FROM parquet_metadata('__PQ_LINEITEM__')
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+    },
+      // The one oracle that names a PATH instead of a view: footer
+      // introspection has no table-level SQL form. The __PQ_LINEITEM__
+      // placeholder is substituted by Verify at dump time with the run's
+      // actual lineitem path — the bare file for single-file corpora, a
+      // part-file glob when the table is a Spark output DIRECTORY
+      // (ScaleGen corpora) — so the oracle always inspects the SAME
+      // file set the Spark side read, at any scale and either layout.
+      Some("""SELECT parse_filename(file_name) AS file_name,
+             | CAST(row_group_id AS INT) AS rg_id,
+             | CAST(max(row_group_num_rows) AS BIGINT) AS num_rows,
+             | count(*) AS n_columns,
+             | CAST(sum(total_compressed_size) AS BIGINT) AS compressed_bytes
+             |FROM parquet_metadata('__PQ_LINEITEM__')
+             |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
   )
 }

@@ -39,8 +39,42 @@ object SegmentOps {
         countDistinct(to_date(col("ts"))).as("days"),
         sum(micro(col("value"))).as("y"))
 
-  val queries: Map[String, Q] = Map(
+  private def kmeansAssignSql(cSrc: String): String = {
+    val ds = (1 to 4).map(i =>
+      s"(f1 - c1_$i) * (f1 - c1_$i) + (f2 - c2_$i) * (f2 - c2_$i) AS d$i")
+      .mkString(",\n|   ")
+    s"""SELECT user_id, f1, f2,
+       |  CASE WHEN d1 <= d2 AND d1 <= d3 AND d1 <= d4 THEN 1
+       |   WHEN d2 <= d3 AND d2 <= d4 THEN 2
+       |   WHEN d3 <= d4 THEN 3 ELSE 4 END AS cluster
+       |FROM (SELECT user_id, f1, f2,
+       |   $ds
+       |  FROM feats CROSS JOIN $cSrc)""".stripMargin
+  }
 
+  /** The unrolled-CTE oracle twin of the seg_kmeans_behavior Lloyd
+    * rounds: wide 1-row centroid frames c0..c3, assignment CTEs a1..a4.
+    * Every CTE is `AS MATERIALIZED` and each update is ONE conditional
+    * aggregation over the previous assignment (an inlined
+    * scalar-subquery form re-evaluates the whole upstream chain per
+    * subquery — 8³ corpus scans — and never finishes); empty clusters
+    * inherit the previous centroid via COALESCE over the NULLIF'd
+    * count. */
+  private def kmeansUpdateSql(aPrev: String, cPrev: String): String = {
+    val cols = (1 to 4).map(i =>
+      s"""COALESCE(CAST(sum(CASE WHEN cluster = $i THEN f1 END)
+         |     AS BIGINT)
+         |    // NULLIF(count(CASE WHEN cluster = $i THEN 1 END), 0),
+         |   (SELECT c1_$i FROM $cPrev)) AS c1_$i,
+         |  COALESCE(CAST(sum(CASE WHEN cluster = $i THEN f2 END)
+         |     AS BIGINT)
+         |    // NULLIF(count(CASE WHEN cluster = $i THEN 1 END), 0),
+         |   (SELECT c2_$i FROM $cPrev)) AS c2_$i""".stripMargin)
+      .mkString(",\n|  ")
+    s"SELECT\n|  $cols\n| FROM $aPrev".stripMargin
+  }
+
+  val ops: Seq[Op] = Seq(
     // RFM SEGMENTATION — the canonical customer segmentation: quintile-
     // score every customer on Recency (days since last order), Frequency
     // (order count), and Monetary (lifetime spend), then map the
@@ -57,7 +91,7 @@ object SegmentOps {
     // same oracle hash, ~half the fixed stage overhead). Money rides
     // the DECIMAL(18,4) micro-lattice; shares release via the 2^32
     // hi/lo split.
-    "seg_rfm" -> ((s, dir) => {
+    Op("seg_rfm", (s, dir) => {
       val o = t(s, dir, "orders")
       val mx = o.agg(max(to_date(col("o_orderdate"))).as("mxd"))
       val per = o.groupBy(col("o_custkey").as("ck"))
@@ -111,7 +145,41 @@ object SegmentOps {
           round(exactDbl("monm") / exactDbl("tmon"), 6)
             .as("monetary_share"))
         .orderBy("segment")
-    }),
+    },
+      Some(s"""WITH o AS (SELECT o_custkey AS ck, CAST(o_orderdate AS DATE) AS d,
+              |   CAST(CAST(o_totalprice AS DECIMAL(18,4)) * 10000 AS BIGINT)
+              |     AS mi FROM orders),
+              | mx AS (SELECT max(d) AS mxd FROM o),
+              | per AS (SELECT ck,
+              |   CAST((SELECT mxd FROM mx) - max(d) AS BIGINT) AS rec,
+              |   count(*) AS freq, sum(mi) AS mon FROM o GROUP BY ck),
+              | n AS (SELECT count(*) AS nn FROM per),
+              | sc AS (SELECT ck, rec, freq, mon,
+              |   CAST((row_number() OVER (ORDER BY rec DESC, ck) - 1) * 5
+              |     // (SELECT nn FROM n) + 1 AS INT) AS r_score,
+              |   CAST((row_number() OVER (ORDER BY freq, ck) - 1) * 5
+              |     // (SELECT nn FROM n) + 1 AS INT) AS f_score,
+              |   CAST((row_number() OVER (ORDER BY mon, ck) - 1) * 5
+              |     // (SELECT nn FROM n) + 1 AS INT) AS m_score
+              |  FROM per),
+              | seg AS (SELECT *,
+              |   CASE WHEN r_score >= 4 AND f_score >= 4 AND m_score >= 4
+              |     THEN 'champions'
+              |    WHEN r_score >= 4 AND f_score <= 2 THEN 'new_customers'
+              |    WHEN r_score <= 2 AND f_score >= 4 THEN 'at_risk'
+              |    WHEN r_score <= 2 AND f_score <= 2 THEN 'hibernating'
+              |    WHEN m_score >= 4 THEN 'big_spenders'
+              |    WHEN f_score >= 4 THEN 'loyal'
+              |    ELSE 'regular' END AS segment FROM sc),
+              | tot AS (SELECT sum(CAST(mon AS HUGEINT)) AS tmon FROM per)
+              |SELECT segment, count(*) AS n_customers,
+              | round(CAST(sum(rec) AS DOUBLE) / count(*), 6)
+              |   AS avg_recency_days,
+              | round(CAST(sum(freq) AS DOUBLE) / count(*), 6) AS avg_frequency,
+              | round(${exactDblSql("sum(CAST(mon AS HUGEINT))")}
+              |   / ${exactDblSql("(SELECT tmon FROM tot)")}, 6)
+              |   AS monetary_share
+              |FROM seg GROUP BY segment ORDER BY segment""".stripMargin)),
 
     // ENGAGEMENT TIERS — split users into power / core / casual by
     // where their event count falls against the p90/p50 thresholds of
@@ -124,7 +192,7 @@ object SegmentOps {
     // shares are otherwise a broadcast compare + one tier agg. Value
     // shares release via the hi/lo split (value ≥ 0 by corpus
     // contract).
-    "seg_power_users" -> ((s, dir) => {
+    Op("seg_power_users", (s, dir) => {
       val per = userEngagement(s, dir)
       val th = per.agg(percentile(col("ne"), lit(0.5)).as("p50"),
         percentile(col("ne"), lit(0.9)).as("p90"))
@@ -148,7 +216,29 @@ object SegmentOps {
           round(exactDbl("ty_t") / exactDbl("ty"), 6).as("value_share"),
           col("avg_active_days"))
         .orderBy("tier")
-    }),
+    },
+      Some(s"""WITH per AS (SELECT user_id, count(*) AS ne,
+              |   count(DISTINCT CAST(ts AS DATE)) AS days,
+              |   sum(CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT))
+              |     AS y
+              |  FROM events GROUP BY 1),
+              | th AS (SELECT quantile_cont(ne, 0.5) AS p50,
+              |   quantile_cont(ne, 0.9) AS p90 FROM per),
+              | tiered AS (SELECT *,
+              |   CASE WHEN ne >= (SELECT p90 FROM th) THEN 'power'
+              |    WHEN ne >= (SELECT p50 FROM th) THEN 'core'
+              |    ELSE 'casual' END AS tier FROM per),
+              | tot AS (SELECT sum(ne) AS tne,
+              |   sum(CAST(y AS HUGEINT)) AS ty FROM per)
+              |SELECT tier, count(*) AS n_users,
+              | CAST(sum(ne) AS BIGINT) AS n_events,
+              | round(CAST(sum(ne) AS DOUBLE)
+              |   / (SELECT CAST(tne AS DOUBLE) FROM tot), 6) AS events_share,
+              | round(${exactDblSql("sum(CAST(y AS HUGEINT))")}
+              |   / ${exactDblSql("(SELECT ty FROM tot)")}, 6) AS value_share,
+              | round(CAST(sum(days) AS DOUBLE) / count(*), 6)
+              |   AS avg_active_days
+              |FROM tiered GROUP BY tier ORDER BY tier""".stripMargin)),
 
     // CHURN-MODEL FEATURE FRAME — the per-user design matrix a churn
     // classifier trains on: recency, tenure, volume, breadth, intensity
@@ -158,7 +248,7 @@ object SegmentOps {
     // ONE corpus aggregation joined with the broadcast corpus-max date.
     // Ratios are single IEEE divisions over exact longs; value_sum is
     // the dsum6 exact-decimal release.
-    "seg_churn_features" -> ((s, dir) => {
+    Op("seg_churn_features", (s, dir) => {
       val mx = events(s, dir).agg(max(to_date(col("ts"))).as("mxd"))
       events(s, dir).groupBy("user_id")
         .agg(max(to_date(col("ts"))).as("last_d"),
@@ -183,7 +273,25 @@ object SegmentOps {
           col("value_sum"),
           (col("last_d") <= date_sub(col("mxd"), 14)).as("churned"))
         .orderBy("user_id")
-    }),
+    },
+      Some(s"""WITH mx AS (SELECT max(CAST(ts AS DATE)) AS mxd FROM events)
+              |SELECT user_id,
+              | CAST((SELECT mxd FROM mx) - max(CAST(ts AS DATE)) AS BIGINT)
+              |   AS recency_days,
+              | CAST(max(CAST(ts AS DATE)) - min(CAST(ts AS DATE)) + 1
+              |   AS BIGINT) AS tenure_days,
+              | count(*) AS n_events,
+              | count(DISTINCT CAST(ts AS DATE)) AS active_days,
+              | count(DISTINCT event_type) AS n_types,
+              | round(CAST(sum(CASE WHEN event_type = 'purchase' THEN 1
+              |   ELSE 0 END) AS DOUBLE) / count(*), 6) AS purchase_ratio,
+              | round(CAST(count(*) AS DOUBLE)
+              |   / count(DISTINCT CAST(ts AS DATE)), 6)
+              |   AS events_per_active_day,
+              | ${dsum6Sql("value")} AS value_sum,
+              | (max(CAST(ts AS DATE)) <= (SELECT mxd FROM mx) - 14)
+              |   AS churned
+              |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin)),
 
     // SEGMENT-MIGRATION MATRIX — how users MOVE between engagement
     // bands across the two corpus halves (the CUPED absolute-day split,
@@ -193,7 +301,7 @@ object SegmentOps {
     // The matrix is the retention diagnostic behind every "where did
     // the power users go" review; the plan is one exchange + a ≤16-row
     // grid.
-    "seg_migration_matrix" -> ((s, dir) => {
+    Op("seg_migration_matrix", (s, dir) => {
       val dayN = datediff(to_date(col("ts")), lit("2024-01-01")) + 1
       def band(c: Column): Column =
         when(c === 0L, "absent").when(c < 10L, "light")
@@ -212,7 +320,24 @@ object SegmentOps {
           round(col("n_users").cast("double") / col("nu").cast("double"),
             6).as("share"))
         .orderBy("tier_pre", "tier_post")
-    }),
+    },
+      Some("""WITH per AS (SELECT user_id,
+             |   sum(CASE WHEN (CAST(ts AS DATE) - DATE '2024-01-01' + 1)
+             |     <= 15 THEN 1 ELSE 0 END) AS npre,
+             |   sum(CASE WHEN (CAST(ts AS DATE) - DATE '2024-01-01' + 1)
+             |     > 15 THEN 1 ELSE 0 END) AS npost
+             |  FROM events GROUP BY 1),
+             | tot AS (SELECT count(*) AS nu FROM per),
+             | bands AS (SELECT
+             |   CASE WHEN npre = 0 THEN 'absent' WHEN npre < 10 THEN 'light'
+             |    WHEN npre < 50 THEN 'medium' ELSE 'heavy' END AS tier_pre,
+             |   CASE WHEN npost = 0 THEN 'absent' WHEN npost < 10 THEN 'light'
+             |    WHEN npost < 50 THEN 'medium' ELSE 'heavy' END AS tier_post
+             |  FROM per)
+             |SELECT tier_pre, tier_post, count(*) AS n_users,
+             | round(CAST(count(*) AS DOUBLE)
+             |   / (SELECT CAST(nu AS DOUBLE) FROM tot), 6) AS share
+             |FROM bands GROUP BY 1, 2 ORDER BY tier_pre, tier_post""".stripMargin)),
 
     // INTER-PURCHASE CADENCE (round 12) — the time-between-orders
     // segmentation every replenishment/lifecycle program reads: gaps
@@ -226,7 +351,7 @@ object SegmentOps {
     // All gap arithmetic is exact-long datediffs; each mean is one
     // IEEE division (identical cross-engine), banding compares that
     // one division against integer literals.
-    "seg_interpurchase_time" -> ((s, dir) => {
+    Op("seg_interpurchase_time", (s, dir) => {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("ck").orderBy(col("d"), col("ok"))
       val per = t(s, dir, "orders")
@@ -253,7 +378,26 @@ object SegmentOps {
               6)).as("mean_gap_days"),
           max("max_gap").as("max_gap_days"))
         .orderBy("cadence")
-    }),
+    },
+      Some("""WITH o AS (SELECT o_custkey AS ck, CAST(o_orderdate AS DATE) AS d,
+             |   o_orderkey AS ok FROM orders),
+             | g AS (SELECT ck, CAST(d - lag(d) OVER (PARTITION BY ck
+             |     ORDER BY d, ok) AS BIGINT) AS gap FROM o),
+             | per AS (SELECT ck, count(*) AS n_orders,
+             |   count(gap) AS n_gaps, CAST(sum(gap) AS BIGINT) AS gap_sum,
+             |   max(gap) AS max_gap FROM g GROUP BY ck),
+             | b AS (SELECT *, CASE WHEN n_gaps = 0 THEN 'e_single'
+             |    WHEN CAST(gap_sum AS DOUBLE) / n_gaps < 60.0 THEN 'a_monthly'
+             |    WHEN CAST(gap_sum AS DOUBLE) / n_gaps < 180.0 THEN 'b_quarterly'
+             |    WHEN CAST(gap_sum AS DOUBLE) / n_gaps < 365.0 THEN 'c_yearly'
+             |    ELSE 'd_rare' END AS cadence FROM per)
+             |SELECT cadence, count(*) AS n_customers,
+             | round(CAST(sum(n_orders) AS DOUBLE) / count(*), 6) AS avg_orders,
+             | CASE WHEN sum(n_gaps) = 0 THEN NULL
+             |   ELSE round(CAST(sum(gap_sum) AS DOUBLE) / sum(n_gaps), 6)
+             |   END AS mean_gap_days,
+             | max(max_gap) AS max_gap_days
+             |FROM b GROUP BY cadence ORDER BY cadence""".stripMargin)),
 
     // BEHAVIORAL K-MEANS (round 11) — the segmenter TRAINING its own
     // segments: cluster users in the (event volume, purchase volume)
@@ -269,7 +413,7 @@ object SegmentOps {
     // centroid. Scale: each round is one broadcast-centroid projection
     // + one 4-row agg (the sim_kmeans_train shape); only the ≤k-row
     // centroid frame is ever collected (tripwired).
-    "seg_kmeans_behavior" -> ((s, dir) => {
+    Op("seg_kmeans_behavior", (s, dir) => {
       val k = 4
       val feats = events(s, dir).groupBy("user_id")
         .agg(count(lit(1)).as("f1"),
@@ -324,194 +468,36 @@ object SegmentOps {
           col("mean_purchases"), col("c1").as("centroid_f1"),
           col("c2").as("centroid_f2"))
         .orderBy("cluster")
-    }),
-  )
-
-  private def kmeansAssignSql(cSrc: String): String = {
-    val ds = (1 to 4).map(i =>
-      s"(f1 - c1_$i) * (f1 - c1_$i) + (f2 - c2_$i) * (f2 - c2_$i) AS d$i")
-      .mkString(",\n|   ")
-    s"""SELECT user_id, f1, f2,
-       |  CASE WHEN d1 <= d2 AND d1 <= d3 AND d1 <= d4 THEN 1
-       |   WHEN d2 <= d3 AND d2 <= d4 THEN 2
-       |   WHEN d3 <= d4 THEN 3 ELSE 4 END AS cluster
-       |FROM (SELECT user_id, f1, f2,
-       |   $ds
-       |  FROM feats CROSS JOIN $cSrc)""".stripMargin
-  }
-
-  /** The unrolled-CTE oracle twin of the seg_kmeans_behavior Lloyd
-    * rounds: wide 1-row centroid frames c0..c3, assignment CTEs a1..a4.
-    * Every CTE is `AS MATERIALIZED` and each update is ONE conditional
-    * aggregation over the previous assignment (an inlined
-    * scalar-subquery form re-evaluates the whole upstream chain per
-    * subquery — 8³ corpus scans — and never finishes); empty clusters
-    * inherit the previous centroid via COALESCE over the NULLIF'd
-    * count. */
-  private def kmeansUpdateSql(aPrev: String, cPrev: String): String = {
-    val cols = (1 to 4).map(i =>
-      s"""COALESCE(CAST(sum(CASE WHEN cluster = $i THEN f1 END)
-         |     AS BIGINT)
-         |    // NULLIF(count(CASE WHEN cluster = $i THEN 1 END), 0),
-         |   (SELECT c1_$i FROM $cPrev)) AS c1_$i,
-         |  COALESCE(CAST(sum(CASE WHEN cluster = $i THEN f2 END)
-         |     AS BIGINT)
-         |    // NULLIF(count(CASE WHEN cluster = $i THEN 1 END), 0),
-         |   (SELECT c2_$i FROM $cPrev)) AS c2_$i""".stripMargin)
-      .mkString(",\n|  ")
-    s"SELECT\n|  $cols\n| FROM $aPrev".stripMargin
-  }
-
-  val oracle: Map[String, String] = Map(
-
-    "seg_kmeans_behavior" -> {
-      val c0cols = (1 to 4).map(i =>
-        s"lo1 + (hi1 - lo1) * ${2 * i - 1} // 8 AS c1_$i, " +
-          s"lo2 + (hi2 - lo2) * ${2 * i - 1} // 8 AS c2_$i").mkString(", ")
-      s"""WITH feats AS MATERIALIZED (SELECT user_id, count(*) AS f1,
-         |   CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0
-         |     END) * 10 AS BIGINT) AS f2
-         |  FROM events GROUP BY 1),
-         | rng AS MATERIALIZED (SELECT CAST(min(f1) AS BIGINT) AS lo1,
-         |   CAST(max(f1) AS BIGINT) AS hi1,
-         |   CAST(min(f2) AS BIGINT) AS lo2,
-         |   CAST(max(f2) AS BIGINT) AS hi2 FROM feats),
-         | c0 AS MATERIALIZED (SELECT $c0cols FROM rng),
-         | a1 AS MATERIALIZED (${kmeansAssignSql("c0")}),
-         | c1 AS MATERIALIZED (${kmeansUpdateSql("a1", "c0")}),
-         | a2 AS MATERIALIZED (${kmeansAssignSql("c1")}),
-         | c2 AS MATERIALIZED (${kmeansUpdateSql("a2", "c1")}),
-         | a3 AS MATERIALIZED (${kmeansAssignSql("c2")}),
-         | c3 AS MATERIALIZED (${kmeansUpdateSql("a3", "c2")}),
-         | a4 AS MATERIALIZED (${kmeansAssignSql("c3")})
-         |SELECT cluster, count(*) AS n_users,
-         | round(CAST(sum(f1) AS DOUBLE) / count(*), 6) AS mean_events,
-         | round(CAST(sum(f2) AS DOUBLE) / 10.0 / count(*), 6)
-         |   AS mean_purchases,
-         | (SELECT CASE cluster WHEN 1 THEN c1_1 WHEN 2 THEN c1_2
-         |   WHEN 3 THEN c1_3 ELSE c1_4 END FROM c3) AS centroid_f1,
-         | (SELECT CASE cluster WHEN 1 THEN c2_1 WHEN 2 THEN c2_2
-         |   WHEN 3 THEN c2_3 ELSE c2_4 END FROM c3) AS centroid_f2
-         |FROM a4 GROUP BY cluster ORDER BY cluster""".stripMargin
     },
-
-    "seg_interpurchase_time" ->
-      """WITH o AS (SELECT o_custkey AS ck, CAST(o_orderdate AS DATE) AS d,
-        |   o_orderkey AS ok FROM orders),
-        | g AS (SELECT ck, CAST(d - lag(d) OVER (PARTITION BY ck
-        |     ORDER BY d, ok) AS BIGINT) AS gap FROM o),
-        | per AS (SELECT ck, count(*) AS n_orders,
-        |   count(gap) AS n_gaps, CAST(sum(gap) AS BIGINT) AS gap_sum,
-        |   max(gap) AS max_gap FROM g GROUP BY ck),
-        | b AS (SELECT *, CASE WHEN n_gaps = 0 THEN 'e_single'
-        |    WHEN CAST(gap_sum AS DOUBLE) / n_gaps < 60.0 THEN 'a_monthly'
-        |    WHEN CAST(gap_sum AS DOUBLE) / n_gaps < 180.0 THEN 'b_quarterly'
-        |    WHEN CAST(gap_sum AS DOUBLE) / n_gaps < 365.0 THEN 'c_yearly'
-        |    ELSE 'd_rare' END AS cadence FROM per)
-        |SELECT cadence, count(*) AS n_customers,
-        | round(CAST(sum(n_orders) AS DOUBLE) / count(*), 6) AS avg_orders,
-        | CASE WHEN sum(n_gaps) = 0 THEN NULL
-        |   ELSE round(CAST(sum(gap_sum) AS DOUBLE) / sum(n_gaps), 6)
-        |   END AS mean_gap_days,
-        | max(max_gap) AS max_gap_days
-        |FROM b GROUP BY cadence ORDER BY cadence""".stripMargin,
-
-    "seg_rfm" ->
-      s"""WITH o AS (SELECT o_custkey AS ck, CAST(o_orderdate AS DATE) AS d,
-         |   CAST(CAST(o_totalprice AS DECIMAL(18,4)) * 10000 AS BIGINT)
-         |     AS mi FROM orders),
-         | mx AS (SELECT max(d) AS mxd FROM o),
-         | per AS (SELECT ck,
-         |   CAST((SELECT mxd FROM mx) - max(d) AS BIGINT) AS rec,
-         |   count(*) AS freq, sum(mi) AS mon FROM o GROUP BY ck),
-         | n AS (SELECT count(*) AS nn FROM per),
-         | sc AS (SELECT ck, rec, freq, mon,
-         |   CAST((row_number() OVER (ORDER BY rec DESC, ck) - 1) * 5
-         |     // (SELECT nn FROM n) + 1 AS INT) AS r_score,
-         |   CAST((row_number() OVER (ORDER BY freq, ck) - 1) * 5
-         |     // (SELECT nn FROM n) + 1 AS INT) AS f_score,
-         |   CAST((row_number() OVER (ORDER BY mon, ck) - 1) * 5
-         |     // (SELECT nn FROM n) + 1 AS INT) AS m_score
-         |  FROM per),
-         | seg AS (SELECT *,
-         |   CASE WHEN r_score >= 4 AND f_score >= 4 AND m_score >= 4
-         |     THEN 'champions'
-         |    WHEN r_score >= 4 AND f_score <= 2 THEN 'new_customers'
-         |    WHEN r_score <= 2 AND f_score >= 4 THEN 'at_risk'
-         |    WHEN r_score <= 2 AND f_score <= 2 THEN 'hibernating'
-         |    WHEN m_score >= 4 THEN 'big_spenders'
-         |    WHEN f_score >= 4 THEN 'loyal'
-         |    ELSE 'regular' END AS segment FROM sc),
-         | tot AS (SELECT sum(CAST(mon AS HUGEINT)) AS tmon FROM per)
-         |SELECT segment, count(*) AS n_customers,
-         | round(CAST(sum(rec) AS DOUBLE) / count(*), 6)
-         |   AS avg_recency_days,
-         | round(CAST(sum(freq) AS DOUBLE) / count(*), 6) AS avg_frequency,
-         | round(${exactDblSql("sum(CAST(mon AS HUGEINT))")}
-         |   / ${exactDblSql("(SELECT tmon FROM tot)")}, 6)
-         |   AS monetary_share
-         |FROM seg GROUP BY segment ORDER BY segment""".stripMargin,
-
-    "seg_power_users" ->
-      s"""WITH per AS (SELECT user_id, count(*) AS ne,
-         |   count(DISTINCT CAST(ts AS DATE)) AS days,
-         |   sum(CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT))
-         |     AS y
-         |  FROM events GROUP BY 1),
-         | th AS (SELECT quantile_cont(ne, 0.5) AS p50,
-         |   quantile_cont(ne, 0.9) AS p90 FROM per),
-         | tiered AS (SELECT *,
-         |   CASE WHEN ne >= (SELECT p90 FROM th) THEN 'power'
-         |    WHEN ne >= (SELECT p50 FROM th) THEN 'core'
-         |    ELSE 'casual' END AS tier FROM per),
-         | tot AS (SELECT sum(ne) AS tne,
-         |   sum(CAST(y AS HUGEINT)) AS ty FROM per)
-         |SELECT tier, count(*) AS n_users,
-         | CAST(sum(ne) AS BIGINT) AS n_events,
-         | round(CAST(sum(ne) AS DOUBLE)
-         |   / (SELECT CAST(tne AS DOUBLE) FROM tot), 6) AS events_share,
-         | round(${exactDblSql("sum(CAST(y AS HUGEINT))")}
-         |   / ${exactDblSql("(SELECT ty FROM tot)")}, 6) AS value_share,
-         | round(CAST(sum(days) AS DOUBLE) / count(*), 6)
-         |   AS avg_active_days
-         |FROM tiered GROUP BY tier ORDER BY tier""".stripMargin,
-
-    "seg_churn_features" ->
-      s"""WITH mx AS (SELECT max(CAST(ts AS DATE)) AS mxd FROM events)
-         |SELECT user_id,
-         | CAST((SELECT mxd FROM mx) - max(CAST(ts AS DATE)) AS BIGINT)
-         |   AS recency_days,
-         | CAST(max(CAST(ts AS DATE)) - min(CAST(ts AS DATE)) + 1
-         |   AS BIGINT) AS tenure_days,
-         | count(*) AS n_events,
-         | count(DISTINCT CAST(ts AS DATE)) AS active_days,
-         | count(DISTINCT event_type) AS n_types,
-         | round(CAST(sum(CASE WHEN event_type = 'purchase' THEN 1
-         |   ELSE 0 END) AS DOUBLE) / count(*), 6) AS purchase_ratio,
-         | round(CAST(count(*) AS DOUBLE)
-         |   / count(DISTINCT CAST(ts AS DATE)), 6)
-         |   AS events_per_active_day,
-         | ${dsum6Sql("value")} AS value_sum,
-         | (max(CAST(ts AS DATE)) <= (SELECT mxd FROM mx) - 14)
-         |   AS churned
-         |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "seg_migration_matrix" ->
-      """WITH per AS (SELECT user_id,
-        |   sum(CASE WHEN (CAST(ts AS DATE) - DATE '2024-01-01' + 1)
-        |     <= 15 THEN 1 ELSE 0 END) AS npre,
-        |   sum(CASE WHEN (CAST(ts AS DATE) - DATE '2024-01-01' + 1)
-        |     > 15 THEN 1 ELSE 0 END) AS npost
-        |  FROM events GROUP BY 1),
-        | tot AS (SELECT count(*) AS nu FROM per),
-        | bands AS (SELECT
-        |   CASE WHEN npre = 0 THEN 'absent' WHEN npre < 10 THEN 'light'
-        |    WHEN npre < 50 THEN 'medium' ELSE 'heavy' END AS tier_pre,
-        |   CASE WHEN npost = 0 THEN 'absent' WHEN npost < 10 THEN 'light'
-        |    WHEN npost < 50 THEN 'medium' ELSE 'heavy' END AS tier_post
-        |  FROM per)
-        |SELECT tier_pre, tier_post, count(*) AS n_users,
-        | round(CAST(count(*) AS DOUBLE)
-        |   / (SELECT CAST(nu AS DOUBLE) FROM tot), 6) AS share
-        |FROM bands GROUP BY 1, 2 ORDER BY tier_pre, tier_post""".stripMargin)
+      Some {
+        val c0cols = (1 to 4).map(i =>
+          s"lo1 + (hi1 - lo1) * ${2 * i - 1} // 8 AS c1_$i, " +
+            s"lo2 + (hi2 - lo2) * ${2 * i - 1} // 8 AS c2_$i").mkString(", ")
+        s"""WITH feats AS MATERIALIZED (SELECT user_id, count(*) AS f1,
+           |   CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0
+           |     END) * 10 AS BIGINT) AS f2
+           |  FROM events GROUP BY 1),
+           | rng AS MATERIALIZED (SELECT CAST(min(f1) AS BIGINT) AS lo1,
+           |   CAST(max(f1) AS BIGINT) AS hi1,
+           |   CAST(min(f2) AS BIGINT) AS lo2,
+           |   CAST(max(f2) AS BIGINT) AS hi2 FROM feats),
+           | c0 AS MATERIALIZED (SELECT $c0cols FROM rng),
+           | a1 AS MATERIALIZED (${kmeansAssignSql("c0")}),
+           | c1 AS MATERIALIZED (${kmeansUpdateSql("a1", "c0")}),
+           | a2 AS MATERIALIZED (${kmeansAssignSql("c1")}),
+           | c2 AS MATERIALIZED (${kmeansUpdateSql("a2", "c1")}),
+           | a3 AS MATERIALIZED (${kmeansAssignSql("c2")}),
+           | c3 AS MATERIALIZED (${kmeansUpdateSql("a3", "c2")}),
+           | a4 AS MATERIALIZED (${kmeansAssignSql("c3")})
+           |SELECT cluster, count(*) AS n_users,
+           | round(CAST(sum(f1) AS DOUBLE) / count(*), 6) AS mean_events,
+           | round(CAST(sum(f2) AS DOUBLE) / 10.0 / count(*), 6)
+           |   AS mean_purchases,
+           | (SELECT CASE cluster WHEN 1 THEN c1_1 WHEN 2 THEN c1_2
+           |   WHEN 3 THEN c1_3 ELSE c1_4 END FROM c3) AS centroid_f1,
+           | (SELECT CASE cluster WHEN 1 THEN c2_1 WHEN 2 THEN c2_2
+           |   WHEN 3 THEN c2_3 ELSE c2_4 END FROM c3) AS centroid_f2
+           |FROM a4 GROUP BY cluster ORDER BY cluster""".stripMargin
+      }),
+  )
 }

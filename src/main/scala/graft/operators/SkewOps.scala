@@ -49,10 +49,10 @@ object SkewOps {
         sum(col("__pcnt")).as("cnt"))
   }
 
-  val queries: Map[String, Q] = Map(
+  val ops: Seq[Op] = Seq(
     // Salted fact⋈fact join + aggregate: result provably salt-invariant,
     // so it hash-matches the plain-join oracle.
-    "join_skew_salted" -> ((s, dir) => {
+    Op("join_skew_salted", (s, dir) => {
       val li = t(s, dir, "lineitem")
         .select(col("l_orderkey").as("okey"), col("l_extendedprice"))
       val ord = t(s, dir, "orders")
@@ -61,14 +61,10 @@ object SkewOps {
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"), dsum(col("l_extendedprice")).as("sum_price"))
         .orderBy("o_orderstatus")
-    }),
-  )
-
-  val oracle: Map[String, String] = Map(
-    "join_skew_salted" ->
-      s"""SELECT o.o_orderstatus, count(*) AS n,
-         | ${dsumSql("l.l_extendedprice")} AS sum_price
-         |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
+    },
+      Some(s"""SELECT o.o_orderstatus, count(*) AS n,
+              | ${dsumSql("l.l_extendedprice")} AS sum_price
+              |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+              |GROUP BY 1 ORDER BY 1""".stripMargin)),
   )
 }

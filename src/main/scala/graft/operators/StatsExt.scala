@@ -169,7 +169,7 @@ object StatsExt {
   private val SprtA = math.log((1.0 - 0.05) / 0.05) // accept-H1 boundary
   private val SprtB = math.log(0.05 / (1.0 - 0.05)) // accept-H0 boundary
 
-  val queries: Map[String, Q] = Map(
+  val ops: Seq[Op] = Seq(
     // SPEARMAN RANK CORRELATION between a user's activity volume
     // (events of a type) and their value total for that type — the
     // monotone-association readout Pearson (agg_corr_matrix) cannot
@@ -180,7 +180,7 @@ object StatsExt {
     // bucketed cumsum, so no task ever carries a user-sized sequence;
     // the moment sums are exact DECIMALs released through the 2^32
     // hi/lo split.
-    "agg_spearman_corr" -> ((s, dir) => {
+    Op("agg_spearman_corr", (s, dir) => {
       // checkpointed leaf: the per-user frame feeds BOTH rank layers
       // and the final join — uncached, the corpus agg would run 3×
       val u = userTotals(s, dir, byType = true)
@@ -218,7 +218,39 @@ object StatsExt {
                 sqrt(exactDbl("vx") * exactDbl("vy")), 6))
             .as("rho"))
         .orderBy("event_type")
-    }),
+    },
+      Some(s"""WITH u AS (SELECT event_type, user_id, count(*) AS x,
+              |   sum(CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT))
+              |     AS y
+              |  FROM events GROUP BY 1, 2),
+              | xc AS (SELECT event_type, x, count(*) AS cnt FROM u
+              |  GROUP BY 1, 2),
+              | rx AS (SELECT event_type, x, 2 * sum(cnt) OVER
+              |   (PARTITION BY event_type ORDER BY x) - cnt + 1 AS r2x
+              |  FROM xc),
+              | yc AS (SELECT event_type, y, count(*) AS cnt FROM u
+              |  GROUP BY 1, 2),
+              | ry AS (SELECT event_type, y, 2 * sum(cnt) OVER
+              |   (PARTITION BY event_type ORDER BY y) - cnt + 1 AS r2y
+              |  FROM yc),
+              | j AS (SELECT u.event_type, r2x, r2y FROM u
+              |  JOIN rx USING (event_type, x) JOIN ry USING (event_type, y)),
+              | m AS (SELECT event_type, CAST(count(*) AS HUGEINT) AS n,
+              |   sum(CAST(r2x AS HUGEINT)) AS sx,
+              |   sum(CAST(r2y AS HUGEINT)) AS sy,
+              |   sum(CAST(r2x AS HUGEINT) * r2x) AS sxx,
+              |   sum(CAST(r2y AS HUGEINT) * r2y) AS syy,
+              |   sum(CAST(r2x AS HUGEINT) * r2y) AS sxy
+              |  FROM j GROUP BY 1),
+              | t AS (SELECT event_type, n, n * sxy - sx * sy AS rnum,
+              |   n * sxx - sx * sx AS vx, n * syy - sy * sy AS vy FROM m)
+              |SELECT event_type, CAST(n AS BIGINT) AS n_users,
+              | CASE WHEN vx = 0 OR vy = 0 THEN NULL ELSE
+              |  round((CASE WHEN rnum < 0 THEN -1.0 ELSE 1.0 END) *
+              |   ${exactDblSql("abs(rnum)")} /
+              |   sqrt(${exactDblSql("vx")} * ${exactDblSql("vy")}), 6)
+              | END AS rho
+              |FROM t ORDER BY event_type""".stripMargin)),
 
     // PERMUTATION TEST (Fisher randomization; Phipson–Smyth +1
     // correction) on the arm difference of per-user value totals — the
@@ -232,7 +264,7 @@ object StatsExt {
     // ever happens, so ties count identically in both engines. The
     // 200× user expansion is projection-only and map-side-combines to
     // 400 cells; the corpus is touched once.
-    "agg_permutation_test" -> ((s, dir) => {
+    Op("agg_permutation_test", (s, dir) => {
       val u = userTotals(s, dir, byType = false)
       val nd = permCells(u, byType = false)
       val obs = nd.filter(col("r") === 0).select(
@@ -253,7 +285,25 @@ object StatsExt {
         col("n_extreme"),
         ((col("n_extreme") + 1).cast("double") / lit(PermReps + 1.0))
           .as("p_value"))
-    }),
+    },
+      Some(s"""WITH ux AS (SELECT user_id,
+              |   sum(CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT))
+              |     AS y
+              |  FROM events GROUP BY 1),
+              | ${permCellsSql(byType = false)},
+              | o AS (SELECT num AS onum, den AS oden,
+              |   CAST(na + nb AS BIGINT) AS n_users FROM nd WHERE r = 0),
+              | e AS (SELECT n_users, onum, oden,
+              |   CAST(sum(CASE WHEN abs(num) * oden >= abs(onum) * den
+              |     THEN 1 ELSE 0 END) AS BIGINT) AS n_extreme
+              |  FROM nd CROSS JOIN o WHERE r > 0 GROUP BY 1, 2, 3)
+              |SELECT n_users, $PermReps AS n_reps,
+              | round((CASE WHEN onum < 0 THEN -1.0 ELSE 1.0 END) *
+              |   ${exactDblSql("abs(onum)")} /
+              |   (CAST(oden AS DOUBLE) * 1000000.0), 6) AS obs_diff,
+              | n_extreme,
+              | CAST(n_extreme + 1 AS DOUBLE) / ${PermReps + 1}.0 AS p_value
+              |FROM e""".stripMargin)),
 
     // BENJAMINI–HOCHBERG FDR CONTROL over the per-metric permutation
     // p-values — the multiple-testing layer every experiment scan
@@ -266,7 +316,7 @@ object StatsExt {
     // runs over tiny exactly-representable doubles — all on a ≤|types|-
     // row frame (the bounded-window allowlist class). Corpus cost: one
     // (user, type) agg + the 200× projection explode.
-    "agg_bh_fdr" -> ((s, dir) => {
+    Op("agg_bh_fdr", (s, dir) => {
       val u = userTotals(s, dir, byType = true)
       val nd = permCells(u, byType = true)
       val obs = nd.filter(col("r") === 0)
@@ -302,7 +352,36 @@ object StatsExt {
           (col("imax").isNotNull && col("i") <= col("imax"))
             .as("rejected"))
         .orderBy("event_type")
-    }),
+    },
+      Some(s"""WITH ux AS (SELECT user_id, event_type,
+              |   sum(CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT))
+              |     AS y
+              |  FROM events GROUP BY 1, 2),
+              | ${permCellsSql(byType = true)},
+              | o AS (SELECT event_type, num AS onum, den AS oden FROM nd
+              |  WHERE r = 0),
+              | kk AS (SELECT nd.event_type,
+              |   CAST(sum(CASE WHEN abs(num) * oden >= abs(onum) * den
+              |     THEN 1 ELSE 0 END) AS BIGINT) AS k
+              |  FROM nd JOIN o USING (event_type) WHERE r > 0 GROUP BY 1),
+              | ranked AS (SELECT event_type, k,
+              |   CAST(row_number() OVER (ORDER BY k, event_type) AS BIGINT)
+              |     AS i,
+              |   CAST(count(*) OVER () AS BIGINT) AS m
+              |  FROM kk),
+              | step AS (SELECT *,
+              |   max(CASE WHEN m * (k + 1) <= 20 * i THEN i END) OVER ()
+              |     AS imax,
+              |   min(CAST(m * (k + 1) AS DOUBLE)
+              |     / (${PermReps + 1}.0 * CAST(i AS DOUBLE))) OVER
+              |     (ORDER BY i ROWS BETWEEN CURRENT ROW AND UNBOUNDED
+              |      FOLLOWING) AS padj_raw
+              |  FROM ranked)
+              |SELECT event_type, k AS n_extreme,
+              | CAST(k + 1 AS DOUBLE) / ${PermReps + 1}.0 AS p_raw,
+              | least(1.0, padj_raw) AS p_adj,
+              | (imax IS NOT NULL AND i <= imax) AS rejected
+              |FROM step ORDER BY event_type""".stripMargin)),
 
     // DIFFERENCE-IN-DIFFERENCES (round 11) — the quasi-experimental
     // readout for when randomization was imperfect or the treatment
@@ -313,7 +392,7 @@ object StatsExt {
     // 12 conditional exact-DECIMAL moments → a single 1-row IEEE tree
     // for the DiD estimate, its pooled SE (Σ s²_cell/n_cell), and t.
     // No windows, no joins — the minimal possible plan shape.
-    "agg_diff_in_diff" -> ((s, dir) => {
+    Op("agg_diff_in_diff", (s, dir) => {
       val ev = events(s, dir).select(col("value"),
         ((datediff(to_date(col("ts")), lit("2024-01-01")) + 1) <= 15)
           .as("pre"),
@@ -344,7 +423,53 @@ object StatsExt {
         round(did, 6).as("did_estimate"),
         round(se, 6).as("se"),
         round(did / se, 6).as("t_stat"))
-    }),
+    },
+      Some("""WITH ev AS (SELECT value,
+             |   (CAST(ts AS DATE) - DATE '2024-01-01' + 1) <= 15 AS pre,
+             |   substr(md5('srm42:' || CAST(user_id AS VARCHAR)), 1, 1) < '8'
+             |     AS treat
+             |  FROM events),
+             | g AS (SELECT
+             |   CAST(sum(CASE WHEN treat AND pre THEN 1 ELSE 0 END)
+             |     AS DOUBLE) AS ntr,
+             |   CAST(sum(CAST(CASE WHEN treat AND pre THEN value ELSE 0 END
+             |     AS DECIMAL(18,6))) AS DOUBLE) AS sxtr,
+             |   CAST(sum(CAST(CASE WHEN treat AND pre THEN value * value
+             |     ELSE 0 END AS DECIMAL(18,6))) AS DOUBLE) AS sxxtr,
+             |   CAST(sum(CASE WHEN treat AND NOT pre THEN 1 ELSE 0 END)
+             |     AS DOUBLE) AS ntp,
+             |   CAST(sum(CAST(CASE WHEN treat AND NOT pre THEN value
+             |     ELSE 0 END AS DECIMAL(18,6))) AS DOUBLE) AS sxtp,
+             |   CAST(sum(CAST(CASE WHEN treat AND NOT pre THEN value * value
+             |     ELSE 0 END AS DECIMAL(18,6))) AS DOUBLE) AS sxxtp,
+             |   CAST(sum(CASE WHEN NOT treat AND pre THEN 1 ELSE 0 END)
+             |     AS DOUBLE) AS ncr,
+             |   CAST(sum(CAST(CASE WHEN NOT treat AND pre THEN value
+             |     ELSE 0 END AS DECIMAL(18,6))) AS DOUBLE) AS sxcr,
+             |   CAST(sum(CAST(CASE WHEN NOT treat AND pre THEN value * value
+             |     ELSE 0 END AS DECIMAL(18,6))) AS DOUBLE) AS sxxcr,
+             |   CAST(sum(CASE WHEN NOT treat AND NOT pre THEN 1 ELSE 0 END)
+             |     AS DOUBLE) AS ncp,
+             |   CAST(sum(CAST(CASE WHEN NOT treat AND NOT pre THEN value
+             |     ELSE 0 END AS DECIMAL(18,6))) AS DOUBLE) AS sxcp,
+             |   CAST(sum(CAST(CASE WHEN NOT treat AND NOT pre THEN
+             |     value * value ELSE 0 END AS DECIMAL(18,6))) AS DOUBLE)
+             |     AS sxxcp
+             |  FROM ev),
+             | f AS (SELECT *,
+             |   (sxtp / ntp - sxtr / ntr) - (sxcp / ncp - sxcr / ncr) AS did,
+             |   sqrt((sxxtp - sxtp * sxtp / ntp) / (ntp - 1.0) / ntp
+             |     + (sxxtr - sxtr * sxtr / ntr) / (ntr - 1.0) / ntr
+             |     + (sxxcp - sxcp * sxcp / ncp) / (ncp - 1.0) / ncp
+             |     + (sxxcr - sxcr * sxcr / ncr) / (ncr - 1.0) / ncr) AS se
+             |  FROM g)
+             |SELECT CAST(ntr AS BIGINT) AS n_t_pre,
+             | CAST(ntp AS BIGINT) AS n_t_post,
+             | CAST(ncr AS BIGINT) AS n_c_pre,
+             | CAST(ncp AS BIGINT) AS n_c_post,
+             | round(did, 6) AS did_estimate, round(se, 6) AS se,
+             | round(did / se, 6) AS t_stat
+             |FROM f""".stripMargin)),
 
     // COCHRAN–MANTEL–HAENSZEL TEST (round 11) — the stratified 2×2
     // association test: "does arm A convert better than arm B AFTER
@@ -359,7 +484,7 @@ object StatsExt {
     // Kruskal–Wallis rule — the only place engine-ordered float
     // addition could sneak in); continuity-corrected χ² released at
     // 6 dp.
-    "agg_cmh_test" -> ((s, dir) => {
+    Op("agg_cmh_test", (s, dir) => {
       val dec = "decimal(28,12)"
       val ev = events(s, dir).select(
         dayofweek(col("ts")).as("dow"),
@@ -393,7 +518,36 @@ object StatsExt {
         round(col("orn") / col("ord"), 6).as("or_mh"),
         round((abs(col("sae")) - lit(0.5)) * (abs(col("sae")) - lit(0.5))
           / col("sv"), 6).as("chi2_cmh"))
-    }),
+    },
+      Some("""WITH ev AS (SELECT
+             |   CAST(dayofweek(CAST(ts AS TIMESTAMP)) + 1 AS INT) AS dow,
+             |   event_type = 'purchase' AS succ,
+             |   substr(md5('srm42:' || CAST(user_id AS VARCHAR)), 1, 1) < '8'
+             |     AS arma
+             |  FROM events),
+             | cells AS (SELECT dow, CAST(count(*) AS BIGINT) AS n,
+             |   CAST(sum(CASE WHEN arma THEN 1 ELSE 0 END) AS BIGINT) AS n1,
+             |   CAST(sum(CASE WHEN succ THEN 1 ELSE 0 END) AS BIGINT) AS m1,
+             |   CAST(sum(CASE WHEN arma AND succ THEN 1 ELSE 0 END)
+             |     AS BIGINT) AS a
+             |  FROM ev GROUP BY 1),
+             | g AS (SELECT CAST(count(*) AS BIGINT) AS k_strata,
+             |   CAST(sum(a) AS BIGINT) AS a_total,
+             |   CAST(sum(CAST(CAST(a AS DOUBLE)
+             |     - CAST(n1 AS DOUBLE) * m1 / CAST(n AS DOUBLE)
+             |     AS DECIMAL(28,12))) AS DOUBLE) AS sae,
+             |   CAST(sum(CAST(CAST(n1 AS DOUBLE) * (n - n1) * m1 * (n - m1)
+             |     / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
+             |       * (CAST(n AS DOUBLE) - 1.0))
+             |     AS DECIMAL(28,12))) AS DOUBLE) AS sv,
+             |   CAST(sum(CAST(CAST(a * (n - n1 - m1 + a) AS DOUBLE)
+             |     / CAST(n AS DOUBLE) AS DECIMAL(28,12))) AS DOUBLE) AS orn,
+             |   CAST(sum(CAST(CAST((n1 - a) * (m1 - a) AS DOUBLE)
+             |     / CAST(n AS DOUBLE) AS DECIMAL(28,12))) AS DOUBLE) AS ord
+             |  FROM cells)
+             |SELECT k_strata, a_total, round(orn / ord, 6) AS or_mh,
+             | round((abs(sae) - 0.5) * (abs(sae) - 0.5) / sv, 6) AS chi2_cmh
+             |FROM g""".stripMargin)),
 
     // DAU/MAU STICKINESS (round 11) — the engagement ratio every
     // product review tracks: daily actives over trailing-30-day
@@ -405,7 +559,7 @@ object StatsExt {
     // expansion bites is the ts_active_users_hll pattern (mergeable
     // daily sketches, union over the trailing frame) — this key is
     // the exact anchor.
-    "ts_dau_mau_stickiness" -> ((s, dir) => {
+    Op("ts_dau_mau_stickiness", (s, dir) => {
       val ud = events(s, dir)
         .select(col("user_id"), date_trunc("day", col("ts")).as("day"))
         .distinct()
@@ -421,7 +575,21 @@ object StatsExt {
           round(col("dau").cast("double") / col("mau").cast("double"),
             6).as("stickiness"))
         .orderBy("day")
-    }),
+    },
+      Some("""WITH ud AS (SELECT DISTINCT user_id,
+             |   date_trunc('day', CAST(ts AS TIMESTAMP)) AS day FROM events),
+             | days AS (SELECT DISTINCT day FROM ud),
+             | dau AS (SELECT day, CAST(count(*) AS BIGINT) AS dau FROM ud
+             |  GROUP BY 1),
+             | mau AS (SELECT d.day,
+             |   CAST(count(DISTINCT u.user_id) AS BIGINT) AS mau
+             |  FROM days d JOIN ud u ON u.day <= d.day
+             |   AND u.day > d.day - INTERVAL 30 DAY
+             |  GROUP BY 1)
+             |SELECT day, dau, mau,
+             | round(CAST(dau AS DOUBLE) / CAST(mau AS DOUBLE), 6)
+             |   AS stickiness
+             |FROM dau JOIN mau USING (day) ORDER BY day""".stripMargin)),
 
     // GINI / WHALE-CONCENTRATION READOUT (round 11) — how concentrated
     // is value across users? (The same machine reads source
@@ -434,7 +602,7 @@ object StatsExt {
     // ScalableWindows.bucketedRowNumber (the §8.9 two-level machine) —
     // no corpus-sized single-task sort; all moments exact
     // DECIMAL(38,0), hi/lo releases.
-    "agg_gini_concentration" -> ((s, dir) => {
+    Op("agg_gini_concentration", (s, dir) => {
       val u = userTotals(s, dir, byType = false)
         .select(col("user_id"), col("y"))
         .localCheckpoint() // feeds the bucket bounds, the rank frame, and nn
@@ -462,7 +630,33 @@ object StatsExt {
         round(exactDbl("gnum") / exactDbl("gden"), 6).as("gini"),
         round(exactDbl("y1") / exactDbl("syd"), 6).as("top1pct_share"),
         round(exactDbl("y10") / exactDbl("syd"), 6).as("top10pct_share"))
-    }),
+    },
+      Some(s"""WITH u AS (SELECT user_id,
+              |   sum(CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT))
+              |     AS y
+              |  FROM events GROUP BY 1),
+              | rn AS (SELECT y,
+              |   CAST(row_number() OVER (ORDER BY y, user_id) AS BIGINT)
+              |     AS rn, CAST(count(*) OVER () AS BIGINT) AS nn
+              |  FROM u),
+              | g AS (SELECT CAST(count(*) AS BIGINT) AS n,
+              |   sum(CAST(y AS HUGEINT)) AS sy,
+              |   sum(CAST(rn AS HUGEINT) * y) AS sry,
+              |   sum(CASE WHEN rn > nn - nn // 100 THEN CAST(y AS HUGEINT)
+              |     ELSE 0 END) AS y1,
+              |   sum(CASE WHEN rn > nn - nn // 10 THEN CAST(y AS HUGEINT)
+              |     ELSE 0 END) AS y10
+              |  FROM rn),
+              | j AS (SELECT n, 2 * sry - (n + 1) * sy AS gnum,
+              |   CAST(n AS HUGEINT) * sy AS gden, sy, y1, y10 FROM g)
+              |SELECT n AS n_users,
+              | round(${exactDblSql("gnum")} / ${exactDblSql("gden")}, 6)
+              |   AS gini,
+              | round(${exactDblSql("y1")} / ${exactDblSql("sy")}, 6)
+              |   AS top1pct_share,
+              | round(${exactDblSql("y10")} / ${exactDblSql("sy")}, 6)
+              |   AS top10pct_share
+              |FROM j""".stripMargin)),
 
     // PAIRED t-TEST (round 11) — the within-subject member of the
     // t-family (two-sample: agg_ab_ttest; trimmed: Yuen; this: each
@@ -473,7 +667,7 @@ object StatsExt {
     // d_u is an exact micro-lattice long (difference of two exact
     // DECIMAL sums), Σd/Σd² ride DECIMAL(38,0) and release through
     // the 2^32 hi/lo split; one corpus agg + one 1-row IEEE tree.
-    "agg_paired_ttest" -> ((s, dir) => {
+    Op("agg_paired_ttest", (s, dir) => {
       val micro = (col("value").cast("decimal(18,6)") * 1000000)
         .cast("long")
       val per = events(s, dir)
@@ -497,7 +691,29 @@ object StatsExt {
         round(meanD, 6).as("mean_diff"),
         round(sqrt(varD), 6).as("sd_diff"),
         round(meanD / sqrt(varD / col("n")), 6).as("t_stat"))
-    }),
+    },
+      Some(s"""WITH per AS (SELECT user_id,
+              |   sum(CASE WHEN (CAST(ts AS DATE) - DATE '2024-01-01' + 1)
+              |     > 15 THEN CAST(CAST(value AS DECIMAL(18,6)) * 1000000
+              |     AS BIGINT) ELSE 0 END)
+              |   - sum(CASE WHEN (CAST(ts AS DATE) - DATE '2024-01-01' + 1)
+              |     <= 15 THEN CAST(CAST(value AS DECIMAL(18,6)) * 1000000
+              |     AS BIGINT) ELSE 0 END) AS d
+              |  FROM events GROUP BY 1),
+              | g AS (SELECT CAST(count(*) AS DOUBLE) AS n,
+              |   sum(CAST(d AS HUGEINT)) AS sd,
+              |   sum(CAST(d AS HUGEINT) * d) AS sdd FROM per),
+              | r AS (SELECT n,
+              |   (CASE WHEN sd < 0 THEN -1.0 ELSE 1.0 END)
+              |     * ${exactDblSql("abs(sd)")} / 1000000.0 AS sdd6,
+              |   ${exactDblSql("sdd")} / 1000000000000.0 AS sdd12 FROM g)
+              |SELECT CAST(n AS BIGINT) AS n_users,
+              | round(sdd6 / n, 6) AS mean_diff,
+              | round(sqrt((sdd12 - sdd6 * sdd6 / n) / (n - 1.0)), 6)
+              |   AS sd_diff,
+              | round((sdd6 / n) / sqrt(((sdd12 - sdd6 * sdd6 / n)
+              |   / (n - 1.0)) / n), 6) AS t_stat
+              |FROM r""".stripMargin)),
 
     // GRANGER-CAUSALITY SCREEN (round 11) — "does click activity at
     // hour t−1 help predict purchases at hour t beyond purchases' own
@@ -511,7 +727,7 @@ object StatsExt {
     // allowlist class). Moments: quadratic sums of exact integer
     // hourly counts ride DECIMAL(28,0) and release through the 2^32
     // hi/lo split; the OLS solve is one shared Cramer IEEE tree.
-    "ts_granger_causality" -> ((s, dir) => {
+    Op("ts_granger_causality", (s, dir) => {
       val hourly = events(s, dir)
         .groupBy(date_trunc("hour", col("ts")).as("h"))
         .agg(sum(when(col("event_type") === "purchase", 1L)
@@ -569,7 +785,58 @@ object StatsExt {
           round(rssU, 6).as("rss_unrestricted"),
           round(f, 6).as("f_stat"))
         .orderBy("direction")
-    }),
+    },
+      Some(s"""WITH hourly AS (SELECT
+              |   date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
+              |   CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0
+              |     END) AS BIGINT) AS p,
+              |   CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0
+              |     END) AS BIGINT) AS c
+              |  FROM events GROUP BY 1),
+              | grid AS (SELECT unnest(generate_series(
+              |   (SELECT min(h) FROM hourly), (SELECT max(h) FROM hourly),
+              |   INTERVAL 1 HOUR)) AS h),
+              | dense AS (SELECT g.h, COALESCE(p, 0) AS p, COALESCE(c, 0) AS c
+              |  FROM grid g LEFT JOIN hourly USING (h)),
+              | lagged AS (SELECT h, p, c, lag(p) OVER (ORDER BY h) AS pl,
+              |   lag(c) OVER (ORDER BY h) AS cl FROM dense),
+              | base AS (SELECT 'click_to_purchase' AS direction, p AS y,
+              |   pl AS x1, cl AS x2 FROM lagged WHERE pl IS NOT NULL
+              |  UNION ALL SELECT 'purchase_to_click', c, cl, pl FROM lagged
+              |   WHERE pl IS NOT NULL),
+              | mm AS (SELECT direction, CAST(count(*) AS DOUBLE) AS n,
+              |   CAST(sum(y) AS DOUBLE) AS sy,
+              |   CAST(sum(x1) AS DOUBLE) AS s1,
+              |   CAST(sum(x2) AS DOUBLE) AS s2,
+              |   sum(CAST(x1 * x1 AS HUGEINT)) AS q11,
+              |   sum(CAST(x2 * x2 AS HUGEINT)) AS q22,
+              |   sum(CAST(x1 * x2 AS HUGEINT)) AS q12,
+              |   sum(CAST(x1 * y AS HUGEINT)) AS q1y,
+              |   sum(CAST(x2 * y AS HUGEINT)) AS q2y,
+              |   sum(CAST(y * y AS HUGEINT)) AS qyy
+              |  FROM base GROUP BY 1),
+              | r AS (SELECT direction, n, sy, s1, s2,
+              |   ${exactDblSql("q11")} AS r11, ${exactDblSql("q22")} AS r22,
+              |   ${exactDblSql("q12")} AS r12, ${exactDblSql("q1y")} AS r1y,
+              |   ${exactDblSql("q2y")} AS r2y, ${exactDblSql("qyy")} AS ryy
+              |  FROM mm),
+              | cent AS (SELECT direction, n,
+              |   r11 - s1 * s1 / n AS s11, r22 - s2 * s2 / n AS s22,
+              |   r12 - s1 * s2 / n AS s12, r1y - s1 * sy / n AS s1y,
+              |   r2y - s2 * sy / n AS s2y, ryy - sy * sy / n AS syy
+              |  FROM r),
+              | sol AS (SELECT direction, n, syy - s1y * s1y / s11 AS rss_r,
+              |   (s1y * s22 - s2y * s12) / (s11 * s22 - s12 * s12) AS b1,
+              |   (s2y * s11 - s1y * s12) / (s11 * s22 - s12 * s12) AS b2,
+              |   s1y, s2y, syy FROM cent),
+              | fin AS (SELECT direction, n, b2, rss_r,
+              |   syy - b1 * s1y - b2 * s2y AS rss_u FROM sol)
+              |SELECT direction, CAST(n AS BIGINT) AS n_hours,
+              | round(b2, 6) AS b_cross_lag,
+              | round(rss_r, 6) AS rss_restricted,
+              | round(rss_u, 6) AS rss_unrestricted,
+              | round((rss_r - rss_u) * (n - 3.0) / rss_u, 6) AS f_stat
+              |FROM fin ORDER BY direction""".stripMargin)),
 
     // WALD'S SPRT (1945) on the daily purchase share — the sequential
     // stopping rule that, unlike the OBF looks (fixed K analyses),
@@ -579,7 +846,7 @@ object StatsExt {
     // bounded-calendar allowlist class; the only nonintegers are four
     // JVM-computed literals shared verbatim with the oracle, so the
     // verdict comparison sees identical bits on both sides.
-    "agg_sprt_sequential" -> ((s, dir) => {
+    Op("agg_sprt_sequential", (s, dir) => {
       val daily = events(s, dir)
         .groupBy(date_trunc("day", col("ts")).as("day"))
         .agg(count(lit(1)).as("n"),
@@ -598,7 +865,27 @@ object StatsExt {
             .when(llr <= lit(SprtB), "accept_h0")
             .otherwise("continue").as("decision"))
         .orderBy("day")
-    }),
+    },
+      Some(s"""WITH daily AS (SELECT date_trunc('day', CAST(ts AS TIMESTAMP))
+              |   AS day, CAST(count(*) AS BIGINT) AS n,
+              |   CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0
+              |     END) AS BIGINT) AS k
+              |  FROM events GROUP BY 1),
+              | c AS (SELECT day,
+              |   sum(n) OVER (ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING
+              |     AND CURRENT ROW) AS nc,
+              |   sum(k) OVER (ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING
+              |     AND CURRENT ROW) AS kc
+              |  FROM daily),
+              | l AS (SELECT day, nc, kc,
+              |   CAST(kc AS DOUBLE) * $SprtC1
+              |     + CAST(nc - kc AS DOUBLE) * $SprtC2 AS llr FROM c)
+              |SELECT day, CAST(nc AS BIGINT) AS n_cum,
+              | CAST(kc AS BIGINT) AS k_cum, round(llr, 6) AS llr,
+              | CASE WHEN llr >= $SprtA THEN 'accept_h1'
+              |      WHEN llr <= $SprtB THEN 'accept_h0'
+              |      ELSE 'continue' END AS decision
+              |FROM l ORDER BY day""".stripMargin)),
 
     // TUKEY HSD POST-HOC (round 11) — the pairwise follow-up
     // agg_anova_oneway's significant F demands: which groups actually
@@ -608,7 +895,7 @@ object StatsExt {
     // rides the DECIMAL(28,12) lattice; the ≤k² pair grid is a
     // broadcast self theta-join of the finished |types|-row aggregate —
     // the corpus is touched once.
-    "agg_tukey_hsd" -> ((s, dir) => {
+    Op("agg_tukey_hsd", (s, dir) => {
       val dec = "decimal(28,12)"
       val st = events(s, dir).groupBy("event_type").agg(
         count(lit(1)).cast("double").as("n"),
@@ -634,7 +921,27 @@ object StatsExt {
           round(md, 6).as("mean_diff"), round(se, 6).as("se"),
           round(abs(md) / se, 6).as("q_stat"))
         .orderBy("type_a", "type_b")
-    }),
+    },
+      Some(s"""WITH st AS (SELECT event_type, CAST(count(*) AS DOUBLE) AS n,
+              |   ${dsum6Sql("value")} AS sx, ${dsum6Sql("value * value")} AS sxx
+              | FROM events GROUP BY 1),
+              | tot AS (SELECT
+              |   CAST(sum(CAST(n AS DECIMAL(28,12))) AS DOUBLE) AS nt,
+              |   count(*) AS k,
+              |   CAST(sum(CAST(sxx - sx * sx / n AS DECIMAL(28,12)))
+              |     AS DOUBLE) AS ssw FROM st),
+              | pr AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
+              |   a.n AS na, b.n AS nb, a.sx AS sxa, b.sx AS sxb
+              |  FROM st a JOIN st b ON a.event_type < b.event_type),
+              | x AS (SELECT type_a, type_b, na, nb,
+              |   sxa / na - sxb / nb AS md,
+              |   sqrt(ssw / (nt - k) / 2.0 * (1.0 / na + 1.0 / nb)) AS se
+              |  FROM pr CROSS JOIN tot)
+              |SELECT type_a, type_b, CAST(na AS BIGINT) AS n_a,
+              | CAST(nb AS BIGINT) AS n_b,
+              | round(md, 6) AS mean_diff, round(se, 6) AS se,
+              | round(abs(md) / se, 6) AS q_stat
+              |FROM x ORDER BY type_a, type_b""".stripMargin)),
 
     // McNEMAR'S TEST (round 11) — paired binary outcomes on the SAME
     // subjects, at (user, day) grain: on days a user views, do they
@@ -646,7 +953,7 @@ object StatsExt {
     // runs on the finer panel.) One corpus agg to per-(user, day)
     // presence bits, one 4-cell reduce, one IEEE tree over exact longs;
     // χ² is NULL when no discordant pairs exist.
-    "agg_mcnemar" -> ((s, dir) => {
+    Op("agg_mcnemar", (s, dir) => {
       val per = events(s, dir)
         .groupBy(col("user_id"), to_date(col("ts")).as("d")).agg(
           max(when(col("event_type") === "view", 1L).otherwise(0L)).as("x"),
@@ -662,7 +969,20 @@ object StatsExt {
         when(col("b") + col("c") === 0L, lit(null).cast("double"))
           .otherwise(round((dd * dd).cast("double") / (col("b") + col("c")),
             6)).as("chi2_cc"))
-    }),
+    },
+      Some("""WITH per AS (SELECT user_id, CAST(ts AS DATE) AS d,
+             |   max(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS x,
+             |   max(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS y
+             |  FROM events GROUP BY 1, 2),
+             | cells AS (SELECT count(*) AS n_pairs,
+             |   CAST(sum(x * y) AS BIGINT) AS n_both,
+             |   CAST(sum(x * (1 - y)) AS BIGINT) AS b,
+             |   CAST(sum((1 - x) * y) AS BIGINT) AS c FROM per)
+             |SELECT n_pairs, n_both, b AS n_view_only, c AS n_click_only,
+             | CASE WHEN b + c = 0 THEN NULL
+             |  ELSE round(CAST((abs(b - c) - 1) * (abs(b - c) - 1) AS DOUBLE)
+             |   / (b + c), 6) END AS chi2_cc
+             |FROM cells""".stripMargin)),
 
     // CAPTURE–RECAPTURE POPULATION ESTIMATE (round 11) — the Chapman
     // estimator applied to the two corpus halves as the two "capture"
@@ -672,7 +992,7 @@ object StatsExt {
     // estimation. All counts exact longs from one corpus agg; the
     // variance's 4-way product rides DECIMAL(38,0) and releases via the
     // hi/lo split (it passes 2^53 long before the counts do).
-    "agg_capture_recapture" -> ((s, dir) => {
+    Op("agg_capture_recapture", (s, dir) => {
       val dayN = datediff(to_date(col("ts")), lit("2024-01-01")) + 1
       val per = events(s, dir).groupBy("user_id").agg(
         max(when(dayN <= 15, 1L).otherwise(0L)).as("p1"),
@@ -694,7 +1014,25 @@ object StatsExt {
         .select(col("n_first"), col("n_second"), col("n_both"),
           col("chapman_nhat"),
           round(sqrt(exactDbl("vn") / col("vd")), 6).as("se_nhat"))
-    }),
+    },
+      Some(s"""WITH per AS (SELECT user_id,
+              |   max(CASE WHEN (CAST(ts AS DATE) - DATE '2024-01-01' + 1)
+              |     <= 15 THEN 1 ELSE 0 END) AS p1,
+              |   max(CASE WHEN (CAST(ts AS DATE) - DATE '2024-01-01' + 1)
+              |     > 15 THEN 1 ELSE 0 END) AS p2
+              |  FROM events GROUP BY 1),
+              | cells AS (SELECT CAST(sum(p1) AS BIGINT) AS n1,
+              |   CAST(sum(p2) AS BIGINT) AS n2,
+              |   CAST(sum(p1 * p2) AS BIGINT) AS m FROM per),
+              | x AS (SELECT n1, n2, m,
+              |   (n1 + 1.0) * (n2 + 1.0) / (m + 1.0) - 1.0 AS nhat,
+              |   CAST(n1 + 1 AS HUGEINT) * (n2 + 1) * (n1 - m) * (n2 - m)
+              |     AS vn,
+              |   (m + 1.0) * (m + 1.0) * (m + 2.0) AS vd FROM cells)
+              |SELECT n1 AS n_first, n2 AS n_second, m AS n_both,
+              | round(nhat, 6) AS chapman_nhat,
+              | round(sqrt(${exactDblSql("vn")} / vd), 6) AS se_nhat
+              |FROM x""".stripMargin)),
 
     // MARKET-BASKET ASSOCIATION RULES (round 11) — support /
     // confidence / lift over event-type pairs co-occurring in the same
@@ -706,7 +1044,7 @@ object StatsExt {
     // equi-join on the basket key, never a corpus pair join. All
     // counts exact longs; support/confidence/lift are single IEEE
     // trees.
-    "agg_market_basket" -> ((s, dir) => {
+    Op("agg_market_basket", (s, dir) => {
       val b = events(s, dir)
         .select(col("user_id"), to_date(col("ts")).as("d"),
           col("event_type")).distinct()
@@ -733,7 +1071,26 @@ object StatsExt {
           round(col("n_ab").cast("double") * col("nb") /
             (col("n_a").cast("double") * col("n_b")), 6).as("lift"))
         .orderBy("type_a", "type_b")
-    }),
+    },
+      Some("""WITH b AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS d,
+             |   event_type FROM events),
+             | tot AS (SELECT count(*) AS nb
+             |  FROM (SELECT DISTINCT user_id, d FROM b)),
+             | pt AS (SELECT event_type, count(*) AS n_t FROM b GROUP BY 1),
+             | pc AS (SELECT x.event_type AS type_a, y.event_type AS type_b,
+             |   count(*) AS n_ab
+             |  FROM b x JOIN b y ON x.user_id = y.user_id AND x.d = y.d
+             |    AND x.event_type < y.event_type
+             |  GROUP BY 1, 2)
+             |SELECT type_a, type_b, n_ab,
+             | round(CAST(n_ab AS DOUBLE) / (SELECT nb FROM tot), 6)
+             |   AS support,
+             | round(CAST(n_ab AS DOUBLE) / a.n_t, 6) AS confidence,
+             | round(CAST(n_ab AS DOUBLE) * (SELECT nb FROM tot)
+             |   / (CAST(a.n_t AS DOUBLE) * bb.n_t), 6) AS lift
+             |FROM pc JOIN pt a ON pc.type_a = a.event_type
+             | JOIN pt bb ON pc.type_b = bb.event_type
+             |ORDER BY type_a, type_b""".stripMargin)),
 
     // BENFORD FIRST-DIGIT AUDIT (round 11) — the fraud/data-quality
     // screen: does the leading digit of order amounts follow
@@ -744,7 +1101,7 @@ object StatsExt {
     // interpolated into both engines (the SPRT literal rule); each
     // (O−E)²/E cell is one IEEE tree over an exact count and that
     // constant. One corpus agg → 9-row grid.
-    "agg_benford_digits" -> ((s, dir) => {
+    Op("agg_benford_digits", (s, dir) => {
       val benford = (1 to 9).map(d => math.log10(1 + 1.0 / d))
       val mi = (col("o_totalprice").cast("decimal(18,4)") * 10000)
         .cast("long")
@@ -764,7 +1121,26 @@ object StatsExt {
           round((col("n_obs") - e) * (col("n_obs") - e) / e, 6)
             .as("chi2_contrib"))
         .orderBy("digit")
-    }),
+    },
+      Some {
+        val benford = (1 to 9).map(d => math.log10(1 + 1.0 / d))
+        val caseExpr = (1 to 9).map(d =>
+          s"WHEN digit = '$d' THEN ${benford(d - 1)}").mkString(" ")
+        s"""WITH o AS (SELECT substring(CAST(CAST(CAST(o_totalprice
+           |     AS DECIMAL(18,4)) * 10000 AS BIGINT) AS VARCHAR), 1, 1)
+           |     AS digit, count(*) AS n_obs
+           |  FROM orders GROUP BY 1),
+           | tot AS (SELECT CAST(sum(n_obs) AS BIGINT) AS nt FROM o),
+           | x AS (SELECT digit, n_obs, (SELECT nt FROM tot) AS nt,
+           |   CASE $caseExpr END AS es FROM o)
+           |SELECT digit, n_obs,
+           | round(CAST(n_obs AS DOUBLE) / nt, 6) AS obs_share,
+           | round(es, 6) AS exp_share,
+           | round((n_obs - CAST(nt AS DOUBLE) * es)
+           |   * (n_obs - CAST(nt AS DOUBLE) * es)
+           |   / (CAST(nt AS DOUBLE) * es), 6) AS chi2_contrib
+           |FROM x ORDER BY digit""".stripMargin
+      }),
 
     // TWO-PROPORTION z-TEST (round 11) — the conversion-rate member of
     // the A/B test family (agg_ab_ttest tests means; this tests the
@@ -776,7 +1152,7 @@ object StatsExt {
     // user-grain conversion saturates to 1 on any long corpus and the
     // test degenerates (p̂=1 ⇒ zero variance). One corpus agg to the
     // panel bits, a 2-row arm agg, one IEEE tree over exact longs.
-    "agg_two_proportion_z" -> ((s, dir) => {
+    Op("agg_two_proportion_z", (s, dir) => {
       val per = events(s, dir)
         .groupBy(col("user_id"), to_date(col("ts")).as("d")).agg(
           max(when(col("event_type") === "purchase", 1L).otherwise(0L))
@@ -799,7 +1175,27 @@ object StatsExt {
       a.crossJoin(b).select(col("n_a"), col("k_a"), col("n_b"), col("k_b"),
         round(pa, 6).as("p_a"), round(pb, 6).as("p_b"),
         round(z, 6).as("z_stat"))
-    }),
+    },
+      Some("""WITH per AS (SELECT
+             |   CASE WHEN substring(md5('srm42:' || CAST(user_id AS VARCHAR)),
+             |     1, 1) < '8' THEN 'a' ELSE 'b' END AS arm,
+             |   max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
+             |     AS conv
+             |  FROM events GROUP BY user_id, CAST(ts AS DATE)),
+             | g AS (SELECT arm, count(*) AS n, CAST(sum(conv) AS BIGINT) AS k
+             |  FROM per GROUP BY 1),
+             | aa AS (SELECT n AS n_a, k AS k_a FROM g WHERE arm = 'a'),
+             | bb AS (SELECT n AS n_b, k AS k_b FROM g WHERE arm = 'b'),
+             | x AS (SELECT n_a, k_a, n_b, k_b,
+             |   CAST(k_a AS DOUBLE) / n_a AS pa,
+             |   CAST(k_b AS DOUBLE) / n_b AS pb,
+             |   CAST(k_a + k_b AS DOUBLE) / (n_a + n_b) AS pp
+             |  FROM aa CROSS JOIN bb)
+             |SELECT n_a, k_a, n_b, k_b,
+             | round(pa, 6) AS p_a, round(pb, 6) AS p_b,
+             | round((pa - pb) / sqrt(pp * (1.0 - pp)
+             |   * (1.0 / n_a + 1.0 / n_b)), 6) AS z_stat
+             |FROM x""".stripMargin)),
 
     // COHEN'S KAPPA (round 11) — chance-corrected agreement between two
     // document "raters" (here: the composite quality heuristic vs the
@@ -809,7 +1205,7 @@ object StatsExt {
     // cell counts from one corpus agg; marginal products release as
     // correctly-rounded double products (exact-int inputs), κ is one
     // shared IEEE tree.
-    "agg_cohens_kappa" -> ((s, dir) => {
+    Op("agg_cohens_kappa", (s, dir) => {
       val d = t(s, dir, "documents").select(
         (TextOps.qualityScore(col("text")) >= 0.5).cast("long").as("r1"),
         (col("n_chars") >= 200L).cast("long").as("r2"))
@@ -827,7 +1223,28 @@ object StatsExt {
         col("dd").as("agree_neg"), (col("b") + col("c")).as("disagree"),
         round(po, 6).as("po"), round(pe, 6).as("pe"),
         round((po - pe) / (lit(1.0) - pe), 6).as("kappa"))
-    }),
+    },
+      Some(s"""WITH d AS (SELECT
+              |   CASE WHEN ${TextOps.qualitySql("text")} >= 0.5 THEN 1
+              |     ELSE 0 END AS r1,
+              |   CASE WHEN n_chars >= 200 THEN 1 ELSE 0 END AS r2
+              |  FROM documents),
+              | cells AS (SELECT count(*) AS n,
+              |   CAST(sum(r1 * r2) AS BIGINT) AS a,
+              |   CAST(sum(r1 * (1 - r2)) AS BIGINT) AS b,
+              |   CAST(sum((1 - r1) * r2) AS BIGINT) AS c FROM d),
+              | x AS (SELECT n, a, b, c, n - a - b - c AS dd FROM cells),
+              | y AS (SELECT n, a, b, c, dd,
+              |   CAST(a + dd AS DOUBLE) / n AS po,
+              |   (CAST(a + b AS DOUBLE) * (a + c)
+              |     + CAST(c + dd AS DOUBLE) * (b + dd))
+              |    / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) AS pe
+              |  FROM x)
+              |SELECT n AS n_docs, a AS agree_pos, dd AS agree_neg,
+              | CAST(b + c AS BIGINT) AS disagree,
+              | round(po, 6) AS po, round(pe, 6) AS pe,
+              | round((po - pe) / (1.0 - pe), 6) AS kappa
+              |FROM y""".stripMargin)),
 
     // LORENZ DECILE TABLE (round 11) — the plot data behind
     // agg_gini_concentration's scalar: users ranked ascending by total
@@ -837,7 +1254,7 @@ object StatsExt {
     // corpus-sized single-task sort); value sums ride DECIMAL(38,0) and
     // release via the 2^32 hi/lo split; the cumulative window runs on
     // the 10-row decile grid only.
-    "agg_lorenz_deciles" -> ((s, dir) => {
+    Op("agg_lorenz_deciles", (s, dir) => {
       val u = userTotals(s, dir, byType = false)
         .select(col("user_id"), col("y"))
         .localCheckpoint() // feeds bucket bounds, the rank frame, and nn
@@ -859,7 +1276,30 @@ object StatsExt {
           round(exactDbl("sy") / exactDbl("ty"), 6).as("value_share"),
           round(exactDbl("cy") / exactDbl("ty"), 6).as("cum_value_share"))
         .orderBy("decile")
-    }),
+    },
+      Some(s"""WITH u AS (SELECT user_id,
+              |   sum(CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT))
+              |     AS y
+              |  FROM events GROUP BY 1),
+              | n AS (SELECT count(*) AS nn FROM u),
+              | rn AS (SELECT y, user_id,
+              |   row_number() OVER (ORDER BY y, user_id) AS rn FROM u),
+              | dec AS (SELECT
+              |   CAST((rn - 1) * 10 // (SELECT nn FROM n) + 1 AS INT)
+              |     AS decile,
+              |   count(*) AS n_users, sum(CAST(y AS HUGEINT)) AS sy
+              |  FROM rn GROUP BY 1),
+              | tot AS (SELECT sum(CAST(y AS HUGEINT)) AS ty FROM u),
+              | c AS (SELECT decile, n_users, sy,
+              |   sum(sy) OVER (ORDER BY decile ROWS BETWEEN UNBOUNDED
+              |     PRECEDING AND CURRENT ROW) AS cy FROM dec)
+              |SELECT decile, n_users,
+              | round(${exactDblSql("sy")}
+              |   / ${exactDblSql("(SELECT ty FROM tot)")}, 6) AS value_share,
+              | round(${exactDblSql("cy")}
+              |   / ${exactDblSql("(SELECT ty FROM tot)")}, 6)
+              |   AS cum_value_share
+              |FROM c ORDER BY decile""".stripMargin)),
 
     // A/A CALIBRATION (round 11) — the experimentation platform's
     // self-audit: run the two-proportion z machine over 200 SALTED
@@ -872,7 +1312,7 @@ object StatsExt {
     // ≤200·2 cells — the shuffle carries CELLS, never the expansion;
     // each replicate's z is one IEEE tree over exact longs (pooled p̂
     // is the constant panel rate, so no degenerate denominator).
-    "agg_aa_calibration" -> ((s, dir) => {
+    Op("agg_aa_calibration", (s, dir) => {
       val reps = 200
       val per = events(s, dir)
         .groupBy(col("user_id"), to_date(col("ts")).as("d")).agg(
@@ -904,7 +1344,41 @@ object StatsExt {
         .select(col("n_reps"), col("n_false_positive"),
           round(col("n_false_positive").cast("double") / col("n_reps"), 6)
             .as("fp_rate"))
-    }),
+    },
+      Some("""WITH per AS (SELECT user_id,
+             |   max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
+             |     AS conv
+             |  FROM events GROUP BY user_id, CAST(ts AS DATE)),
+             | armed AS (SELECT user_id, conv, r,
+             |   CASE WHEN substring(md5('aa42:' || CAST(r AS VARCHAR) || ':'
+             |     || CAST(user_id AS VARCHAR)), 1, 1) < '8'
+             |    THEN 'a' ELSE 'b' END AS arm
+             |  FROM per CROSS JOIN
+             |   (SELECT unnest(generate_series(0, 199)) AS r)),
+             | cells AS (SELECT r, arm, count(*) AS n,
+             |   CAST(sum(conv) AS BIGINT) AS k FROM armed GROUP BY 1, 2),
+             | g AS (SELECT r,
+             |   CAST(sum(CASE WHEN arm = 'a' THEN n ELSE 0 END) AS BIGINT)
+             |     AS na,
+             |   CAST(sum(CASE WHEN arm = 'a' THEN k ELSE 0 END) AS BIGINT)
+             |     AS ka,
+             |   CAST(sum(CASE WHEN arm = 'b' THEN n ELSE 0 END) AS BIGINT)
+             |     AS nb,
+             |   CAST(sum(CASE WHEN arm = 'b' THEN k ELSE 0 END) AS BIGINT)
+             |     AS kb
+             |  FROM cells GROUP BY 1),
+             | zz AS (SELECT r,
+             |   (CAST(ka AS DOUBLE) / na - CAST(kb AS DOUBLE) / nb)
+             |    / sqrt((CAST(ka + kb AS DOUBLE) / (na + nb))
+             |      * (1.0 - CAST(ka + kb AS DOUBLE) / (na + nb))
+             |      * (1.0 / na + 1.0 / nb)) AS z
+             |  FROM g),
+             | f AS (SELECT count(*) AS n_reps,
+             |   CAST(sum(CASE WHEN abs(z) > 1.96 THEN 1 ELSE 0 END)
+             |     AS BIGINT) AS n_false_positive FROM zz)
+             |SELECT n_reps, n_false_positive,
+             | round(CAST(n_false_positive AS DOUBLE) / n_reps, 6) AS fp_rate
+             |FROM f""".stripMargin)),
 
     // FRIEDMAN TEST (round 11) — the REPEATED-MEASURES omnibus that
     // completes the nonparametric ladder (pairwise Mann–Whitney →
@@ -921,7 +1395,7 @@ object StatsExt {
     // densified with zero counts (the ts_peak_detect gap-fill idiom)
     // before ranking, so a type missing from one day still ranks in
     // that block instead of silently shrinking its block count.
-    "agg_friedman_test" -> ((s, dir) => {
+    Op("agg_friedman_test", (s, dir) => {
       val daily0 = events(s, dir)
         .groupBy(to_date(col("ts")).as("day"), col("event_type"))
         .agg(count(lit(1)).as("cnt"))
@@ -949,7 +1423,29 @@ object StatsExt {
         .select(col("k").cast("long").as("n_treatments"),
           col("n").cast("long").as("n_blocks"), col("chi2_f"),
           (col("k") - 1).cast("long").as("df"))
-    }),
+    },
+      Some("""WITH daily0 AS (SELECT CAST(ts AS DATE) AS day, event_type,
+             |   count(*) AS cnt FROM events GROUP BY 1, 2),
+             | days AS (SELECT DISTINCT day FROM daily0),
+             | types AS (SELECT DISTINCT event_type FROM daily0),
+             | daily AS (SELECT d.day, t.event_type, COALESCE(cnt, 0) AS cnt
+             |  FROM days d CROSS JOIN types t LEFT JOIN daily0
+             |    ON daily0.day = d.day AND daily0.event_type = t.event_type),
+             | ranked AS (SELECT day, event_type,
+             |   CAST(rank() OVER (PARTITION BY day ORDER BY cnt) AS BIGINT)
+             |     * 2 + (count(*) OVER (PARTITION BY day, cnt) - 1) AS r2
+             |  FROM daily),
+             | sums AS (SELECT event_type, CAST(sum(r2) AS BIGINT) AS rs2,
+             |   count(*) AS nb FROM ranked GROUP BY 1),
+             | tot AS (SELECT count(*) AS k, max(nb) AS n FROM sums),
+             | x AS (SELECT (SELECT k FROM tot) AS k, (SELECT n FROM tot) AS n,
+             |   sum((rs2 / 2.0) * (rs2 / 2.0)) AS s2 FROM sums)
+             |SELECT CAST(k AS BIGINT) AS n_treatments,
+             | CAST(n AS BIGINT) AS n_blocks,
+             | round(12.0 / (CAST(n AS DOUBLE) * k * (k + 1.0)) * s2
+             |   - 3.0 * CAST(n AS DOUBLE) * (k + 1.0), 6) AS chi2_f,
+             | CAST(k - 1 AS BIGINT) AS df
+             |FROM x""".stripMargin)),
 
     // WALD–WOLFOWITZ RUNS TEST (round 11) — is the daily traffic
     // sequence RANDOM around its median, or does it trend/oscillate?
@@ -960,7 +1456,7 @@ object StatsExt {
     // grid (ties-on-median days drop, the classic rule); z uses the
     // exact-integer moments μ = 2n₁n₂/(n₁+n₂)+1. One corpus agg →
     // calendar-bounded everything.
-    "agg_runs_test" -> ((s, dir) => {
+    Op("agg_runs_test", (s, dir) => {
       val daily = events(s, dir)
         .groupBy(to_date(col("ts")).as("day"))
         .agg(count(lit(1)).as("cnt"))
@@ -984,7 +1480,28 @@ object StatsExt {
       runs.select(col("r").as("n_runs"), col("n1").as("n_above"),
         col("n2").as("n_below"), round(mu, 6).as("expected_runs"),
         round((col("r") - mu) / sg, 6).as("z_stat"))
-    }),
+    },
+      Some("""WITH daily AS (SELECT CAST(ts AS DATE) AS day, count(*) AS cnt
+             |  FROM events GROUP BY 1),
+             | med AS (SELECT quantile_cont(cnt, 0.5) AS md FROM daily),
+             | signed AS (SELECT day,
+             |   CAST(cnt > (SELECT md FROM med) AS BIGINT) AS s
+             |  FROM daily WHERE cnt <> (SELECT md FROM med)),
+             | runs AS (SELECT
+             |   CAST(sum(CASE WHEN pl IS NULL THEN 1
+             |     WHEN s <> pl THEN 1 ELSE 0 END) AS BIGINT) AS r,
+             |   CAST(sum(s) AS BIGINT) AS n1,
+             |   CAST(sum(1 - s) AS BIGINT) AS n2
+             |  FROM (SELECT s, lag(s) OVER (ORDER BY day) AS pl FROM signed)),
+             | x AS (SELECT r, n1, n2,
+             |   CAST(n1 AS DOUBLE) AS n1d, CAST(n2 AS DOUBLE) AS n2d,
+             |   CAST(n1 AS DOUBLE) + CAST(n2 AS DOUBLE) AS nd FROM runs)
+             |SELECT r AS n_runs, n1 AS n_above, n2 AS n_below,
+             | round(2.0 * n1d * n2d / nd + 1.0, 6) AS expected_runs,
+             | round((r - (2.0 * n1d * n2d / nd + 1.0))
+             |   / sqrt(2.0 * n1d * n2d * (2.0 * n1d * n2d - n1d - n2d)
+             |     / (nd * nd * (nd - 1.0))), 6) AS z_stat
+             |FROM x""".stripMargin)),
 
     // POISSON RATE TEST (round 11) — did the purchase RATE change
     // between the two corpus halves? The conditional test: given
@@ -993,7 +1510,7 @@ object StatsExt {
     // the rate ratio beside it. The count-data sibling of
     // agg_two_proportion_z: one corpus agg to two exact longs, one
     // IEEE tree.
-    "agg_poisson_rate_test" -> ((s, dir) => {
+    Op("agg_poisson_rate_test", (s, dir) => {
       val dayN = datediff(to_date(col("ts")), lit("2024-01-01")) + 1
       val g = events(s, dir).filter(col("event_type") === "purchase")
         .agg(sum(when(dayN <= 15, 1L).otherwise(0L)).as("c1"),
@@ -1004,581 +1521,19 @@ object StatsExt {
         round(col("c1").cast("double") / col("c2"), 6).as("rate_ratio"),
         round((col("c1") - col("c2")).cast("double") /
           sqrt((col("c1") + col("c2")).cast("double")), 6).as("z_stat"))
-    }),
-  )
-
-  val oracle: Map[String, String] = Map(
-    "agg_spearman_corr" ->
-      s"""WITH u AS (SELECT event_type, user_id, count(*) AS x,
-         |   sum(CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT))
-         |     AS y
-         |  FROM events GROUP BY 1, 2),
-         | xc AS (SELECT event_type, x, count(*) AS cnt FROM u
-         |  GROUP BY 1, 2),
-         | rx AS (SELECT event_type, x, 2 * sum(cnt) OVER
-         |   (PARTITION BY event_type ORDER BY x) - cnt + 1 AS r2x
-         |  FROM xc),
-         | yc AS (SELECT event_type, y, count(*) AS cnt FROM u
-         |  GROUP BY 1, 2),
-         | ry AS (SELECT event_type, y, 2 * sum(cnt) OVER
-         |   (PARTITION BY event_type ORDER BY y) - cnt + 1 AS r2y
-         |  FROM yc),
-         | j AS (SELECT u.event_type, r2x, r2y FROM u
-         |  JOIN rx USING (event_type, x) JOIN ry USING (event_type, y)),
-         | m AS (SELECT event_type, CAST(count(*) AS HUGEINT) AS n,
-         |   sum(CAST(r2x AS HUGEINT)) AS sx,
-         |   sum(CAST(r2y AS HUGEINT)) AS sy,
-         |   sum(CAST(r2x AS HUGEINT) * r2x) AS sxx,
-         |   sum(CAST(r2y AS HUGEINT) * r2y) AS syy,
-         |   sum(CAST(r2x AS HUGEINT) * r2y) AS sxy
-         |  FROM j GROUP BY 1),
-         | t AS (SELECT event_type, n, n * sxy - sx * sy AS rnum,
-         |   n * sxx - sx * sx AS vx, n * syy - sy * sy AS vy FROM m)
-         |SELECT event_type, CAST(n AS BIGINT) AS n_users,
-         | CASE WHEN vx = 0 OR vy = 0 THEN NULL ELSE
-         |  round((CASE WHEN rnum < 0 THEN -1.0 ELSE 1.0 END) *
-         |   ${exactDblSql("abs(rnum)")} /
-         |   sqrt(${exactDblSql("vx")} * ${exactDblSql("vy")}), 6)
-         | END AS rho
-         |FROM t ORDER BY event_type""".stripMargin,
-
-    "agg_permutation_test" ->
-      s"""WITH ux AS (SELECT user_id,
-         |   sum(CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT))
-         |     AS y
-         |  FROM events GROUP BY 1),
-         | ${permCellsSql(byType = false)},
-         | o AS (SELECT num AS onum, den AS oden,
-         |   CAST(na + nb AS BIGINT) AS n_users FROM nd WHERE r = 0),
-         | e AS (SELECT n_users, onum, oden,
-         |   CAST(sum(CASE WHEN abs(num) * oden >= abs(onum) * den
-         |     THEN 1 ELSE 0 END) AS BIGINT) AS n_extreme
-         |  FROM nd CROSS JOIN o WHERE r > 0 GROUP BY 1, 2, 3)
-         |SELECT n_users, $PermReps AS n_reps,
-         | round((CASE WHEN onum < 0 THEN -1.0 ELSE 1.0 END) *
-         |   ${exactDblSql("abs(onum)")} /
-         |   (CAST(oden AS DOUBLE) * 1000000.0), 6) AS obs_diff,
-         | n_extreme,
-         | CAST(n_extreme + 1 AS DOUBLE) / ${PermReps + 1}.0 AS p_value
-         |FROM e""".stripMargin,
-
-    "agg_bh_fdr" ->
-      s"""WITH ux AS (SELECT user_id, event_type,
-         |   sum(CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT))
-         |     AS y
-         |  FROM events GROUP BY 1, 2),
-         | ${permCellsSql(byType = true)},
-         | o AS (SELECT event_type, num AS onum, den AS oden FROM nd
-         |  WHERE r = 0),
-         | kk AS (SELECT nd.event_type,
-         |   CAST(sum(CASE WHEN abs(num) * oden >= abs(onum) * den
-         |     THEN 1 ELSE 0 END) AS BIGINT) AS k
-         |  FROM nd JOIN o USING (event_type) WHERE r > 0 GROUP BY 1),
-         | ranked AS (SELECT event_type, k,
-         |   CAST(row_number() OVER (ORDER BY k, event_type) AS BIGINT)
-         |     AS i,
-         |   CAST(count(*) OVER () AS BIGINT) AS m
-         |  FROM kk),
-         | step AS (SELECT *,
-         |   max(CASE WHEN m * (k + 1) <= 20 * i THEN i END) OVER ()
-         |     AS imax,
-         |   min(CAST(m * (k + 1) AS DOUBLE)
-         |     / (${PermReps + 1}.0 * CAST(i AS DOUBLE))) OVER
-         |     (ORDER BY i ROWS BETWEEN CURRENT ROW AND UNBOUNDED
-         |      FOLLOWING) AS padj_raw
-         |  FROM ranked)
-         |SELECT event_type, k AS n_extreme,
-         | CAST(k + 1 AS DOUBLE) / ${PermReps + 1}.0 AS p_raw,
-         | least(1.0, padj_raw) AS p_adj,
-         | (imax IS NOT NULL AND i <= imax) AS rejected
-         |FROM step ORDER BY event_type""".stripMargin,
-
-    "agg_diff_in_diff" ->
-      """WITH ev AS (SELECT value,
-        |   (CAST(ts AS DATE) - DATE '2024-01-01' + 1) <= 15 AS pre,
-        |   substr(md5('srm42:' || CAST(user_id AS VARCHAR)), 1, 1) < '8'
-        |     AS treat
-        |  FROM events),
-        | g AS (SELECT
-        |   CAST(sum(CASE WHEN treat AND pre THEN 1 ELSE 0 END)
-        |     AS DOUBLE) AS ntr,
-        |   CAST(sum(CAST(CASE WHEN treat AND pre THEN value ELSE 0 END
-        |     AS DECIMAL(18,6))) AS DOUBLE) AS sxtr,
-        |   CAST(sum(CAST(CASE WHEN treat AND pre THEN value * value
-        |     ELSE 0 END AS DECIMAL(18,6))) AS DOUBLE) AS sxxtr,
-        |   CAST(sum(CASE WHEN treat AND NOT pre THEN 1 ELSE 0 END)
-        |     AS DOUBLE) AS ntp,
-        |   CAST(sum(CAST(CASE WHEN treat AND NOT pre THEN value
-        |     ELSE 0 END AS DECIMAL(18,6))) AS DOUBLE) AS sxtp,
-        |   CAST(sum(CAST(CASE WHEN treat AND NOT pre THEN value * value
-        |     ELSE 0 END AS DECIMAL(18,6))) AS DOUBLE) AS sxxtp,
-        |   CAST(sum(CASE WHEN NOT treat AND pre THEN 1 ELSE 0 END)
-        |     AS DOUBLE) AS ncr,
-        |   CAST(sum(CAST(CASE WHEN NOT treat AND pre THEN value
-        |     ELSE 0 END AS DECIMAL(18,6))) AS DOUBLE) AS sxcr,
-        |   CAST(sum(CAST(CASE WHEN NOT treat AND pre THEN value * value
-        |     ELSE 0 END AS DECIMAL(18,6))) AS DOUBLE) AS sxxcr,
-        |   CAST(sum(CASE WHEN NOT treat AND NOT pre THEN 1 ELSE 0 END)
-        |     AS DOUBLE) AS ncp,
-        |   CAST(sum(CAST(CASE WHEN NOT treat AND NOT pre THEN value
-        |     ELSE 0 END AS DECIMAL(18,6))) AS DOUBLE) AS sxcp,
-        |   CAST(sum(CAST(CASE WHEN NOT treat AND NOT pre THEN
-        |     value * value ELSE 0 END AS DECIMAL(18,6))) AS DOUBLE)
-        |     AS sxxcp
-        |  FROM ev),
-        | f AS (SELECT *,
-        |   (sxtp / ntp - sxtr / ntr) - (sxcp / ncp - sxcr / ncr) AS did,
-        |   sqrt((sxxtp - sxtp * sxtp / ntp) / (ntp - 1.0) / ntp
-        |     + (sxxtr - sxtr * sxtr / ntr) / (ntr - 1.0) / ntr
-        |     + (sxxcp - sxcp * sxcp / ncp) / (ncp - 1.0) / ncp
-        |     + (sxxcr - sxcr * sxcr / ncr) / (ncr - 1.0) / ncr) AS se
-        |  FROM g)
-        |SELECT CAST(ntr AS BIGINT) AS n_t_pre,
-        | CAST(ntp AS BIGINT) AS n_t_post,
-        | CAST(ncr AS BIGINT) AS n_c_pre,
-        | CAST(ncp AS BIGINT) AS n_c_post,
-        | round(did, 6) AS did_estimate, round(se, 6) AS se,
-        | round(did / se, 6) AS t_stat
-        |FROM f""".stripMargin,
-
-    "agg_cmh_test" ->
-      """WITH ev AS (SELECT
-        |   CAST(dayofweek(CAST(ts AS TIMESTAMP)) + 1 AS INT) AS dow,
-        |   event_type = 'purchase' AS succ,
-        |   substr(md5('srm42:' || CAST(user_id AS VARCHAR)), 1, 1) < '8'
-        |     AS arma
-        |  FROM events),
-        | cells AS (SELECT dow, CAST(count(*) AS BIGINT) AS n,
-        |   CAST(sum(CASE WHEN arma THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-        |   CAST(sum(CASE WHEN succ THEN 1 ELSE 0 END) AS BIGINT) AS m1,
-        |   CAST(sum(CASE WHEN arma AND succ THEN 1 ELSE 0 END)
-        |     AS BIGINT) AS a
-        |  FROM ev GROUP BY 1),
-        | g AS (SELECT CAST(count(*) AS BIGINT) AS k_strata,
-        |   CAST(sum(a) AS BIGINT) AS a_total,
-        |   CAST(sum(CAST(CAST(a AS DOUBLE)
-        |     - CAST(n1 AS DOUBLE) * m1 / CAST(n AS DOUBLE)
-        |     AS DECIMAL(28,12))) AS DOUBLE) AS sae,
-        |   CAST(sum(CAST(CAST(n1 AS DOUBLE) * (n - n1) * m1 * (n - m1)
-        |     / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
-        |       * (CAST(n AS DOUBLE) - 1.0))
-        |     AS DECIMAL(28,12))) AS DOUBLE) AS sv,
-        |   CAST(sum(CAST(CAST(a * (n - n1 - m1 + a) AS DOUBLE)
-        |     / CAST(n AS DOUBLE) AS DECIMAL(28,12))) AS DOUBLE) AS orn,
-        |   CAST(sum(CAST(CAST((n1 - a) * (m1 - a) AS DOUBLE)
-        |     / CAST(n AS DOUBLE) AS DECIMAL(28,12))) AS DOUBLE) AS ord
-        |  FROM cells)
-        |SELECT k_strata, a_total, round(orn / ord, 6) AS or_mh,
-        | round((abs(sae) - 0.5) * (abs(sae) - 0.5) / sv, 6) AS chi2_cmh
-        |FROM g""".stripMargin,
-
-    "ts_dau_mau_stickiness" ->
-      """WITH ud AS (SELECT DISTINCT user_id,
-        |   date_trunc('day', CAST(ts AS TIMESTAMP)) AS day FROM events),
-        | days AS (SELECT DISTINCT day FROM ud),
-        | dau AS (SELECT day, CAST(count(*) AS BIGINT) AS dau FROM ud
-        |  GROUP BY 1),
-        | mau AS (SELECT d.day,
-        |   CAST(count(DISTINCT u.user_id) AS BIGINT) AS mau
-        |  FROM days d JOIN ud u ON u.day <= d.day
-        |   AND u.day > d.day - INTERVAL 30 DAY
-        |  GROUP BY 1)
-        |SELECT day, dau, mau,
-        | round(CAST(dau AS DOUBLE) / CAST(mau AS DOUBLE), 6)
-        |   AS stickiness
-        |FROM dau JOIN mau USING (day) ORDER BY day""".stripMargin,
-
-    "agg_gini_concentration" ->
-      s"""WITH u AS (SELECT user_id,
-         |   sum(CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT))
-         |     AS y
-         |  FROM events GROUP BY 1),
-         | rn AS (SELECT y,
-         |   CAST(row_number() OVER (ORDER BY y, user_id) AS BIGINT)
-         |     AS rn, CAST(count(*) OVER () AS BIGINT) AS nn
-         |  FROM u),
-         | g AS (SELECT CAST(count(*) AS BIGINT) AS n,
-         |   sum(CAST(y AS HUGEINT)) AS sy,
-         |   sum(CAST(rn AS HUGEINT) * y) AS sry,
-         |   sum(CASE WHEN rn > nn - nn // 100 THEN CAST(y AS HUGEINT)
-         |     ELSE 0 END) AS y1,
-         |   sum(CASE WHEN rn > nn - nn // 10 THEN CAST(y AS HUGEINT)
-         |     ELSE 0 END) AS y10
-         |  FROM rn),
-         | j AS (SELECT n, 2 * sry - (n + 1) * sy AS gnum,
-         |   CAST(n AS HUGEINT) * sy AS gden, sy, y1, y10 FROM g)
-         |SELECT n AS n_users,
-         | round(${exactDblSql("gnum")} / ${exactDblSql("gden")}, 6)
-         |   AS gini,
-         | round(${exactDblSql("y1")} / ${exactDblSql("sy")}, 6)
-         |   AS top1pct_share,
-         | round(${exactDblSql("y10")} / ${exactDblSql("sy")}, 6)
-         |   AS top10pct_share
-         |FROM j""".stripMargin,
-
-    "agg_paired_ttest" ->
-      s"""WITH per AS (SELECT user_id,
-         |   sum(CASE WHEN (CAST(ts AS DATE) - DATE '2024-01-01' + 1)
-         |     > 15 THEN CAST(CAST(value AS DECIMAL(18,6)) * 1000000
-         |     AS BIGINT) ELSE 0 END)
-         |   - sum(CASE WHEN (CAST(ts AS DATE) - DATE '2024-01-01' + 1)
-         |     <= 15 THEN CAST(CAST(value AS DECIMAL(18,6)) * 1000000
-         |     AS BIGINT) ELSE 0 END) AS d
-         |  FROM events GROUP BY 1),
-         | g AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-         |   sum(CAST(d AS HUGEINT)) AS sd,
-         |   sum(CAST(d AS HUGEINT) * d) AS sdd FROM per),
-         | r AS (SELECT n,
-         |   (CASE WHEN sd < 0 THEN -1.0 ELSE 1.0 END)
-         |     * ${exactDblSql("abs(sd)")} / 1000000.0 AS sdd6,
-         |   ${exactDblSql("sdd")} / 1000000000000.0 AS sdd12 FROM g)
-         |SELECT CAST(n AS BIGINT) AS n_users,
-         | round(sdd6 / n, 6) AS mean_diff,
-         | round(sqrt((sdd12 - sdd6 * sdd6 / n) / (n - 1.0)), 6)
-         |   AS sd_diff,
-         | round((sdd6 / n) / sqrt(((sdd12 - sdd6 * sdd6 / n)
-         |   / (n - 1.0)) / n), 6) AS t_stat
-         |FROM r""".stripMargin,
-
-    "ts_granger_causality" ->
-      s"""WITH hourly AS (SELECT
-         |   date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
-         |   CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0
-         |     END) AS BIGINT) AS p,
-         |   CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0
-         |     END) AS BIGINT) AS c
-         |  FROM events GROUP BY 1),
-         | grid AS (SELECT unnest(generate_series(
-         |   (SELECT min(h) FROM hourly), (SELECT max(h) FROM hourly),
-         |   INTERVAL 1 HOUR)) AS h),
-         | dense AS (SELECT g.h, COALESCE(p, 0) AS p, COALESCE(c, 0) AS c
-         |  FROM grid g LEFT JOIN hourly USING (h)),
-         | lagged AS (SELECT h, p, c, lag(p) OVER (ORDER BY h) AS pl,
-         |   lag(c) OVER (ORDER BY h) AS cl FROM dense),
-         | base AS (SELECT 'click_to_purchase' AS direction, p AS y,
-         |   pl AS x1, cl AS x2 FROM lagged WHERE pl IS NOT NULL
-         |  UNION ALL SELECT 'purchase_to_click', c, cl, pl FROM lagged
-         |   WHERE pl IS NOT NULL),
-         | mm AS (SELECT direction, CAST(count(*) AS DOUBLE) AS n,
-         |   CAST(sum(y) AS DOUBLE) AS sy,
-         |   CAST(sum(x1) AS DOUBLE) AS s1,
-         |   CAST(sum(x2) AS DOUBLE) AS s2,
-         |   sum(CAST(x1 * x1 AS HUGEINT)) AS q11,
-         |   sum(CAST(x2 * x2 AS HUGEINT)) AS q22,
-         |   sum(CAST(x1 * x2 AS HUGEINT)) AS q12,
-         |   sum(CAST(x1 * y AS HUGEINT)) AS q1y,
-         |   sum(CAST(x2 * y AS HUGEINT)) AS q2y,
-         |   sum(CAST(y * y AS HUGEINT)) AS qyy
-         |  FROM base GROUP BY 1),
-         | r AS (SELECT direction, n, sy, s1, s2,
-         |   ${exactDblSql("q11")} AS r11, ${exactDblSql("q22")} AS r22,
-         |   ${exactDblSql("q12")} AS r12, ${exactDblSql("q1y")} AS r1y,
-         |   ${exactDblSql("q2y")} AS r2y, ${exactDblSql("qyy")} AS ryy
-         |  FROM mm),
-         | cent AS (SELECT direction, n,
-         |   r11 - s1 * s1 / n AS s11, r22 - s2 * s2 / n AS s22,
-         |   r12 - s1 * s2 / n AS s12, r1y - s1 * sy / n AS s1y,
-         |   r2y - s2 * sy / n AS s2y, ryy - sy * sy / n AS syy
-         |  FROM r),
-         | sol AS (SELECT direction, n, syy - s1y * s1y / s11 AS rss_r,
-         |   (s1y * s22 - s2y * s12) / (s11 * s22 - s12 * s12) AS b1,
-         |   (s2y * s11 - s1y * s12) / (s11 * s22 - s12 * s12) AS b2,
-         |   s1y, s2y, syy FROM cent),
-         | fin AS (SELECT direction, n, b2, rss_r,
-         |   syy - b1 * s1y - b2 * s2y AS rss_u FROM sol)
-         |SELECT direction, CAST(n AS BIGINT) AS n_hours,
-         | round(b2, 6) AS b_cross_lag,
-         | round(rss_r, 6) AS rss_restricted,
-         | round(rss_u, 6) AS rss_unrestricted,
-         | round((rss_r - rss_u) * (n - 3.0) / rss_u, 6) AS f_stat
-         |FROM fin ORDER BY direction""".stripMargin,
-
-    "agg_sprt_sequential" ->
-      s"""WITH daily AS (SELECT date_trunc('day', CAST(ts AS TIMESTAMP))
-         |   AS day, CAST(count(*) AS BIGINT) AS n,
-         |   CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0
-         |     END) AS BIGINT) AS k
-         |  FROM events GROUP BY 1),
-         | c AS (SELECT day,
-         |   sum(n) OVER (ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING
-         |     AND CURRENT ROW) AS nc,
-         |   sum(k) OVER (ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING
-         |     AND CURRENT ROW) AS kc
-         |  FROM daily),
-         | l AS (SELECT day, nc, kc,
-         |   CAST(kc AS DOUBLE) * $SprtC1
-         |     + CAST(nc - kc AS DOUBLE) * $SprtC2 AS llr FROM c)
-         |SELECT day, CAST(nc AS BIGINT) AS n_cum,
-         | CAST(kc AS BIGINT) AS k_cum, round(llr, 6) AS llr,
-         | CASE WHEN llr >= $SprtA THEN 'accept_h1'
-         |      WHEN llr <= $SprtB THEN 'accept_h0'
-         |      ELSE 'continue' END AS decision
-         |FROM l ORDER BY day""".stripMargin,
-
-    "agg_tukey_hsd" ->
-      s"""WITH st AS (SELECT event_type, CAST(count(*) AS DOUBLE) AS n,
-         |   ${dsum6Sql("value")} AS sx, ${dsum6Sql("value * value")} AS sxx
-         | FROM events GROUP BY 1),
-         | tot AS (SELECT
-         |   CAST(sum(CAST(n AS DECIMAL(28,12))) AS DOUBLE) AS nt,
-         |   count(*) AS k,
-         |   CAST(sum(CAST(sxx - sx * sx / n AS DECIMAL(28,12)))
-         |     AS DOUBLE) AS ssw FROM st),
-         | pr AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
-         |   a.n AS na, b.n AS nb, a.sx AS sxa, b.sx AS sxb
-         |  FROM st a JOIN st b ON a.event_type < b.event_type),
-         | x AS (SELECT type_a, type_b, na, nb,
-         |   sxa / na - sxb / nb AS md,
-         |   sqrt(ssw / (nt - k) / 2.0 * (1.0 / na + 1.0 / nb)) AS se
-         |  FROM pr CROSS JOIN tot)
-         |SELECT type_a, type_b, CAST(na AS BIGINT) AS n_a,
-         | CAST(nb AS BIGINT) AS n_b,
-         | round(md, 6) AS mean_diff, round(se, 6) AS se,
-         | round(abs(md) / se, 6) AS q_stat
-         |FROM x ORDER BY type_a, type_b""".stripMargin,
-
-    "agg_mcnemar" ->
-      """WITH per AS (SELECT user_id, CAST(ts AS DATE) AS d,
-        |   max(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS x,
-        |   max(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS y
-        |  FROM events GROUP BY 1, 2),
-        | cells AS (SELECT count(*) AS n_pairs,
-        |   CAST(sum(x * y) AS BIGINT) AS n_both,
-        |   CAST(sum(x * (1 - y)) AS BIGINT) AS b,
-        |   CAST(sum((1 - x) * y) AS BIGINT) AS c FROM per)
-        |SELECT n_pairs, n_both, b AS n_view_only, c AS n_click_only,
-        | CASE WHEN b + c = 0 THEN NULL
-        |  ELSE round(CAST((abs(b - c) - 1) * (abs(b - c) - 1) AS DOUBLE)
-        |   / (b + c), 6) END AS chi2_cc
-        |FROM cells""".stripMargin,
-
-    "agg_capture_recapture" ->
-      s"""WITH per AS (SELECT user_id,
-         |   max(CASE WHEN (CAST(ts AS DATE) - DATE '2024-01-01' + 1)
-         |     <= 15 THEN 1 ELSE 0 END) AS p1,
-         |   max(CASE WHEN (CAST(ts AS DATE) - DATE '2024-01-01' + 1)
-         |     > 15 THEN 1 ELSE 0 END) AS p2
-         |  FROM events GROUP BY 1),
-         | cells AS (SELECT CAST(sum(p1) AS BIGINT) AS n1,
-         |   CAST(sum(p2) AS BIGINT) AS n2,
-         |   CAST(sum(p1 * p2) AS BIGINT) AS m FROM per),
-         | x AS (SELECT n1, n2, m,
-         |   (n1 + 1.0) * (n2 + 1.0) / (m + 1.0) - 1.0 AS nhat,
-         |   CAST(n1 + 1 AS HUGEINT) * (n2 + 1) * (n1 - m) * (n2 - m)
-         |     AS vn,
-         |   (m + 1.0) * (m + 1.0) * (m + 2.0) AS vd FROM cells)
-         |SELECT n1 AS n_first, n2 AS n_second, m AS n_both,
-         | round(nhat, 6) AS chapman_nhat,
-         | round(sqrt(${exactDblSql("vn")} / vd), 6) AS se_nhat
-         |FROM x""".stripMargin,
-
-    "agg_market_basket" ->
-      """WITH b AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS d,
-        |   event_type FROM events),
-        | tot AS (SELECT count(*) AS nb
-        |  FROM (SELECT DISTINCT user_id, d FROM b)),
-        | pt AS (SELECT event_type, count(*) AS n_t FROM b GROUP BY 1),
-        | pc AS (SELECT x.event_type AS type_a, y.event_type AS type_b,
-        |   count(*) AS n_ab
-        |  FROM b x JOIN b y ON x.user_id = y.user_id AND x.d = y.d
-        |    AND x.event_type < y.event_type
-        |  GROUP BY 1, 2)
-        |SELECT type_a, type_b, n_ab,
-        | round(CAST(n_ab AS DOUBLE) / (SELECT nb FROM tot), 6)
-        |   AS support,
-        | round(CAST(n_ab AS DOUBLE) / a.n_t, 6) AS confidence,
-        | round(CAST(n_ab AS DOUBLE) * (SELECT nb FROM tot)
-        |   / (CAST(a.n_t AS DOUBLE) * bb.n_t), 6) AS lift
-        |FROM pc JOIN pt a ON pc.type_a = a.event_type
-        | JOIN pt bb ON pc.type_b = bb.event_type
-        |ORDER BY type_a, type_b""".stripMargin,
-
-    "agg_benford_digits" -> {
-      val benford = (1 to 9).map(d => math.log10(1 + 1.0 / d))
-      val caseExpr = (1 to 9).map(d =>
-        s"WHEN digit = '$d' THEN ${benford(d - 1)}").mkString(" ")
-      s"""WITH o AS (SELECT substring(CAST(CAST(CAST(o_totalprice
-         |     AS DECIMAL(18,4)) * 10000 AS BIGINT) AS VARCHAR), 1, 1)
-         |     AS digit, count(*) AS n_obs
-         |  FROM orders GROUP BY 1),
-         | tot AS (SELECT CAST(sum(n_obs) AS BIGINT) AS nt FROM o),
-         | x AS (SELECT digit, n_obs, (SELECT nt FROM tot) AS nt,
-         |   CASE $caseExpr END AS es FROM o)
-         |SELECT digit, n_obs,
-         | round(CAST(n_obs AS DOUBLE) / nt, 6) AS obs_share,
-         | round(es, 6) AS exp_share,
-         | round((n_obs - CAST(nt AS DOUBLE) * es)
-         |   * (n_obs - CAST(nt AS DOUBLE) * es)
-         |   / (CAST(nt AS DOUBLE) * es), 6) AS chi2_contrib
-         |FROM x ORDER BY digit""".stripMargin
     },
-
-    "agg_two_proportion_z" ->
-      """WITH per AS (SELECT
-        |   CASE WHEN substring(md5('srm42:' || CAST(user_id AS VARCHAR)),
-        |     1, 1) < '8' THEN 'a' ELSE 'b' END AS arm,
-        |   max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-        |     AS conv
-        |  FROM events GROUP BY user_id, CAST(ts AS DATE)),
-        | g AS (SELECT arm, count(*) AS n, CAST(sum(conv) AS BIGINT) AS k
-        |  FROM per GROUP BY 1),
-        | aa AS (SELECT n AS n_a, k AS k_a FROM g WHERE arm = 'a'),
-        | bb AS (SELECT n AS n_b, k AS k_b FROM g WHERE arm = 'b'),
-        | x AS (SELECT n_a, k_a, n_b, k_b,
-        |   CAST(k_a AS DOUBLE) / n_a AS pa,
-        |   CAST(k_b AS DOUBLE) / n_b AS pb,
-        |   CAST(k_a + k_b AS DOUBLE) / (n_a + n_b) AS pp
-        |  FROM aa CROSS JOIN bb)
-        |SELECT n_a, k_a, n_b, k_b,
-        | round(pa, 6) AS p_a, round(pb, 6) AS p_b,
-        | round((pa - pb) / sqrt(pp * (1.0 - pp)
-        |   * (1.0 / n_a + 1.0 / n_b)), 6) AS z_stat
-        |FROM x""".stripMargin,
-
-    "agg_cohens_kappa" ->
-      s"""WITH d AS (SELECT
-         |   CASE WHEN ${TextOps.qualitySql("text")} >= 0.5 THEN 1
-         |     ELSE 0 END AS r1,
-         |   CASE WHEN n_chars >= 200 THEN 1 ELSE 0 END AS r2
-         |  FROM documents),
-         | cells AS (SELECT count(*) AS n,
-         |   CAST(sum(r1 * r2) AS BIGINT) AS a,
-         |   CAST(sum(r1 * (1 - r2)) AS BIGINT) AS b,
-         |   CAST(sum((1 - r1) * r2) AS BIGINT) AS c FROM d),
-         | x AS (SELECT n, a, b, c, n - a - b - c AS dd FROM cells),
-         | y AS (SELECT n, a, b, c, dd,
-         |   CAST(a + dd AS DOUBLE) / n AS po,
-         |   (CAST(a + b AS DOUBLE) * (a + c)
-         |     + CAST(c + dd AS DOUBLE) * (b + dd))
-         |    / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) AS pe
-         |  FROM x)
-         |SELECT n AS n_docs, a AS agree_pos, dd AS agree_neg,
-         | CAST(b + c AS BIGINT) AS disagree,
-         | round(po, 6) AS po, round(pe, 6) AS pe,
-         | round((po - pe) / (1.0 - pe), 6) AS kappa
-         |FROM y""".stripMargin,
-
-    "agg_lorenz_deciles" ->
-      s"""WITH u AS (SELECT user_id,
-         |   sum(CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT))
-         |     AS y
-         |  FROM events GROUP BY 1),
-         | n AS (SELECT count(*) AS nn FROM u),
-         | rn AS (SELECT y, user_id,
-         |   row_number() OVER (ORDER BY y, user_id) AS rn FROM u),
-         | dec AS (SELECT
-         |   CAST((rn - 1) * 10 // (SELECT nn FROM n) + 1 AS INT)
-         |     AS decile,
-         |   count(*) AS n_users, sum(CAST(y AS HUGEINT)) AS sy
-         |  FROM rn GROUP BY 1),
-         | tot AS (SELECT sum(CAST(y AS HUGEINT)) AS ty FROM u),
-         | c AS (SELECT decile, n_users, sy,
-         |   sum(sy) OVER (ORDER BY decile ROWS BETWEEN UNBOUNDED
-         |     PRECEDING AND CURRENT ROW) AS cy FROM dec)
-         |SELECT decile, n_users,
-         | round(${exactDblSql("sy")}
-         |   / ${exactDblSql("(SELECT ty FROM tot)")}, 6) AS value_share,
-         | round(${exactDblSql("cy")}
-         |   / ${exactDblSql("(SELECT ty FROM tot)")}, 6)
-         |   AS cum_value_share
-         |FROM c ORDER BY decile""".stripMargin,
-
-    "agg_aa_calibration" ->
-      """WITH per AS (SELECT user_id,
-        |   max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-        |     AS conv
-        |  FROM events GROUP BY user_id, CAST(ts AS DATE)),
-        | armed AS (SELECT user_id, conv, r,
-        |   CASE WHEN substring(md5('aa42:' || CAST(r AS VARCHAR) || ':'
-        |     || CAST(user_id AS VARCHAR)), 1, 1) < '8'
-        |    THEN 'a' ELSE 'b' END AS arm
-        |  FROM per CROSS JOIN
-        |   (SELECT unnest(generate_series(0, 199)) AS r)),
-        | cells AS (SELECT r, arm, count(*) AS n,
-        |   CAST(sum(conv) AS BIGINT) AS k FROM armed GROUP BY 1, 2),
-        | g AS (SELECT r,
-        |   CAST(sum(CASE WHEN arm = 'a' THEN n ELSE 0 END) AS BIGINT)
-        |     AS na,
-        |   CAST(sum(CASE WHEN arm = 'a' THEN k ELSE 0 END) AS BIGINT)
-        |     AS ka,
-        |   CAST(sum(CASE WHEN arm = 'b' THEN n ELSE 0 END) AS BIGINT)
-        |     AS nb,
-        |   CAST(sum(CASE WHEN arm = 'b' THEN k ELSE 0 END) AS BIGINT)
-        |     AS kb
-        |  FROM cells GROUP BY 1),
-        | zz AS (SELECT r,
-        |   (CAST(ka AS DOUBLE) / na - CAST(kb AS DOUBLE) / nb)
-        |    / sqrt((CAST(ka + kb AS DOUBLE) / (na + nb))
-        |      * (1.0 - CAST(ka + kb AS DOUBLE) / (na + nb))
-        |      * (1.0 / na + 1.0 / nb)) AS z
-        |  FROM g),
-        | f AS (SELECT count(*) AS n_reps,
-        |   CAST(sum(CASE WHEN abs(z) > 1.96 THEN 1 ELSE 0 END)
-        |     AS BIGINT) AS n_false_positive FROM zz)
-        |SELECT n_reps, n_false_positive,
-        | round(CAST(n_false_positive AS DOUBLE) / n_reps, 6) AS fp_rate
-        |FROM f""".stripMargin,
-
-    "agg_friedman_test" ->
-      """WITH daily0 AS (SELECT CAST(ts AS DATE) AS day, event_type,
-        |   count(*) AS cnt FROM events GROUP BY 1, 2),
-        | days AS (SELECT DISTINCT day FROM daily0),
-        | types AS (SELECT DISTINCT event_type FROM daily0),
-        | daily AS (SELECT d.day, t.event_type, COALESCE(cnt, 0) AS cnt
-        |  FROM days d CROSS JOIN types t LEFT JOIN daily0
-        |    ON daily0.day = d.day AND daily0.event_type = t.event_type),
-        | ranked AS (SELECT day, event_type,
-        |   CAST(rank() OVER (PARTITION BY day ORDER BY cnt) AS BIGINT)
-        |     * 2 + (count(*) OVER (PARTITION BY day, cnt) - 1) AS r2
-        |  FROM daily),
-        | sums AS (SELECT event_type, CAST(sum(r2) AS BIGINT) AS rs2,
-        |   count(*) AS nb FROM ranked GROUP BY 1),
-        | tot AS (SELECT count(*) AS k, max(nb) AS n FROM sums),
-        | x AS (SELECT (SELECT k FROM tot) AS k, (SELECT n FROM tot) AS n,
-        |   sum((rs2 / 2.0) * (rs2 / 2.0)) AS s2 FROM sums)
-        |SELECT CAST(k AS BIGINT) AS n_treatments,
-        | CAST(n AS BIGINT) AS n_blocks,
-        | round(12.0 / (CAST(n AS DOUBLE) * k * (k + 1.0)) * s2
-        |   - 3.0 * CAST(n AS DOUBLE) * (k + 1.0), 6) AS chi2_f,
-        | CAST(k - 1 AS BIGINT) AS df
-        |FROM x""".stripMargin,
-
-    "agg_runs_test" ->
-      """WITH daily AS (SELECT CAST(ts AS DATE) AS day, count(*) AS cnt
-        |  FROM events GROUP BY 1),
-        | med AS (SELECT quantile_cont(cnt, 0.5) AS md FROM daily),
-        | signed AS (SELECT day,
-        |   CAST(cnt > (SELECT md FROM med) AS BIGINT) AS s
-        |  FROM daily WHERE cnt <> (SELECT md FROM med)),
-        | runs AS (SELECT
-        |   CAST(sum(CASE WHEN pl IS NULL THEN 1
-        |     WHEN s <> pl THEN 1 ELSE 0 END) AS BIGINT) AS r,
-        |   CAST(sum(s) AS BIGINT) AS n1,
-        |   CAST(sum(1 - s) AS BIGINT) AS n2
-        |  FROM (SELECT s, lag(s) OVER (ORDER BY day) AS pl FROM signed)),
-        | x AS (SELECT r, n1, n2,
-        |   CAST(n1 AS DOUBLE) AS n1d, CAST(n2 AS DOUBLE) AS n2d,
-        |   CAST(n1 AS DOUBLE) + CAST(n2 AS DOUBLE) AS nd FROM runs)
-        |SELECT r AS n_runs, n1 AS n_above, n2 AS n_below,
-        | round(2.0 * n1d * n2d / nd + 1.0, 6) AS expected_runs,
-        | round((r - (2.0 * n1d * n2d / nd + 1.0))
-        |   / sqrt(2.0 * n1d * n2d * (2.0 * n1d * n2d - n1d - n2d)
-        |     / (nd * nd * (nd - 1.0))), 6) AS z_stat
-        |FROM x""".stripMargin,
-
-    "agg_poisson_rate_test" ->
-      """WITH g AS (SELECT
-        |   CAST(sum(CASE WHEN (CAST(ts AS DATE) - DATE '2024-01-01' + 1)
-        |     <= 15 THEN 1 ELSE 0 END) AS BIGINT) AS c1,
-        |   CAST(sum(CASE WHEN (CAST(ts AS DATE) - DATE '2024-01-01' + 1)
-        |     > 15 THEN 1 ELSE 0 END) AS BIGINT) AS c2
-        |  FROM events WHERE event_type = 'purchase')
-        |SELECT c1 AS n_first, c2 AS n_second,
-        | round(CAST(c1 AS DOUBLE) / 15.0, 6) AS rate_first,
-        | round(CAST(c2 AS DOUBLE) / 15.0, 6) AS rate_second,
-        | round(CAST(c1 AS DOUBLE) / c2, 6) AS rate_ratio,
-        | round(CAST(c1 - c2 AS DOUBLE) / sqrt(CAST(c1 + c2 AS DOUBLE)),
-        |   6) AS z_stat
-        |FROM g""".stripMargin,
+      Some("""WITH g AS (SELECT
+             |   CAST(sum(CASE WHEN (CAST(ts AS DATE) - DATE '2024-01-01' + 1)
+             |     <= 15 THEN 1 ELSE 0 END) AS BIGINT) AS c1,
+             |   CAST(sum(CASE WHEN (CAST(ts AS DATE) - DATE '2024-01-01' + 1)
+             |     > 15 THEN 1 ELSE 0 END) AS BIGINT) AS c2
+             |  FROM events WHERE event_type = 'purchase')
+             |SELECT c1 AS n_first, c2 AS n_second,
+             | round(CAST(c1 AS DOUBLE) / 15.0, 6) AS rate_first,
+             | round(CAST(c2 AS DOUBLE) / 15.0, 6) AS rate_second,
+             | round(CAST(c1 AS DOUBLE) / c2, 6) AS rate_ratio,
+             | round(CAST(c1 - c2 AS DOUBLE) / sqrt(CAST(c1 + c2 AS DOUBLE)),
+             |   6) AS z_stat
+             |FROM g""".stripMargin)),
   )
 }

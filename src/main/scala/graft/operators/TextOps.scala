@@ -251,7 +251,7 @@ object TextOps {
         round(graft.Tables.dsum6(col("ll")) / count(lit(1)), 6).as("avg_ll"))
   }
 
-  /** Stopword-boundary regex for [[queries]]' RAKE key — candidate
+  /** Stopword-boundary regex for the RAKE key in [[ops]] — candidate
     * phrases are the maximal text runs BETWEEN these function words.
     * Same pattern string works in Java regex (Spark `split`) and RE2
     * (DuckDB `regexp_split_to_array`): plain alternation inside `\b`
@@ -266,1106 +266,6 @@ object TextOps {
     "to", "in", "on", "for", "with", "is", "are", "was", "be", "by",
     "at", "as", "it", "this", "that")
 
-  val queries: Map[String, Q] = Map(
-    "text_wordcount" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(explode(split(col("text"), " ")).as("word"))
-        .groupBy("word").agg(count(lit(1)).as("cnt"))
-        .orderBy(col("cnt").desc, col("word"))
-        .limit(20)),
-
-    // LEXICON SENTIMENT SCREEN (round 11) — the cheap moderation /
-    // tone-audit pass a curation pipeline runs per source before any
-    // model-based scorer: polarity = (|pos ∩ tokens| − |neg ∩ tokens|)
-    // / |tokens| against a fixed word lexicon, aggregated per source.
-    // The lexicon is deliberately tiny and swappable — the OPERATOR is
-    // the artifact (per-doc HOF counting, zero shuffles before the
-    // per-source agg; at 100 TB: one projection + one 20-row hash
-    // agg). Determinism: the per-doc score rides the 1e-6 integer
-    // lattice with an OFFSET division ((1e6·(pos−neg+n)) div n − 1e6)
-    // so the truncating `div` never sees a negative numerator (Spark
-    // truncates toward zero, DuckDB `//` floors — they differ exactly
-    // there); the per-source mean is two correctly-rounded divisions
-    // over exact longs.
-    "text_sentiment_lexicon" -> ((s, dir) => {
-      val pos = "('fast', 'big', 'value')"
-      val neg = "('slow', 'error', 'filter')"
-      val scored = t(s, dir, "documents")
-        .select(col("source"), split(col("text"), " ").as("toks"))
-        .select(col("source"),
-          expr("size(toks)").as("ntok"),
-          expr(s"size(filter(toks, w -> w IN $pos))").as("npos"),
-          expr(s"size(filter(toks, w -> w IN $neg))").as("nneg"))
-        .select(col("source"), col("npos"), col("nneg"),
-          (expr("(1000000 * CAST(npos - nneg + ntok AS BIGINT)) div ntok")
-            - lit(1000000L)).as("score_micro"))
-      scored.groupBy("source").agg(
-          count(lit(1)).as("n_docs"),
-          sum(when(col("score_micro") > 0, 1L).otherwise(0L))
-            .as("n_positive"),
-          sum(when(col("score_micro") < 0, 1L).otherwise(0L))
-            .as("n_negative"),
-          round(sum(col("score_micro")).cast("double")
-            / count(lit(1)).cast("double") / lit(1000000.0), 6)
-            .as("mean_polarity"))
-        .orderBy("source")
-    }),
-
-    // TEXTRANK KEYWORDS (Mihalcea & Tarau 2004) — the graph-centrality
-    // keyword ranker beside RAKE's degree/frequency heuristic: build
-    // the window-2 word co-occurrence graph (adjacent non-stopword
-    // token pairs, undirected, deduped) and rank words by PageRank on
-    // it — a word matters because it keeps company with words that
-    // matter, which catches connective corpus vocabulary RAKE's
-    // phrase-local scores miss. Runs the EXACT integer PageRank
-    // machine (GraphOps.pageRank — micro-unit mass, integer div, bit-
-    // identical cross-engine; the oracle replays the same 3 unrolled
-    // rounds over the word graph). Shape: one per-doc HOF projection
-    // builds adjacent pairs (no self-join on position), one distinct,
-    // then |vocab|-bounded rank rounds; top-30 via TakeOrdered.
-    "text_textrank" -> ((s, dir) => {
-      // Round 14: round-robin fan-out before the per-doc pair HOF (the
-      // 1c250bb pattern) — the compact test parquet is ONE scan split,
-      // so the interpreted filter/transform lambda ran single-task.
-      // Round 15: gated on actual scan parallelism (fanOutIfCompact) so
-      // a multi-split production corpus skips the shuffle entirely.
-      val pairs = fanOutIfCompact(t(s, dir, "documents"))
-        .select(split(col("text"), " ").as("toks"))
-        .select(explode(expr(
-          "filter(transform(sequence(0, size(toks) - 2), " +
-            "i -> struct(toks[i] AS w1, toks[i + 1] AS w2)), " +
-            "p -> p.w1 <> p.w2)")).as("p"))
-        .select(least(col("p.w1"), col("p.w2")).as("d1"),
-          greatest(col("p.w1"), col("p.w2")).as("d2"))
-        .filter(!col("d1").isin(StopwordSet: _*) &&
-          !col("d2").isin(StopwordSet: _*))
-        // checkpointed leaf: pageRank's symmetric-edge union reads the
-        // pair frame twice — uncached, the corpus bigram explode +
-        // distinct would run twice (measured 4.1 s → ~1.5 s)
-        .distinct().localCheckpoint()
-      GraphOps.pageRank(pairs, iters = 3)
-        .select(col("doc_id").as("word"), col("pr"))
-        .orderBy(col("pr").desc, col("word"))
-        .limit(30)
-    }),
-
-    // RAKE KEYWORD EXTRACTION (Rose et al. 2010) — the unsupervised
-    // corpus-keyword report a curation run reads to see what a source
-    // is actually about: candidate phrases = maximal runs between
-    // stopwords, word score = degree/frequency over phrase
-    // co-occurrence (degree counts each occurrence's full phrase
-    // length, so words that keep company with long phrases outrank
-    // loners at equal frequency), phrase score = Σ member word scores.
-    // Determinism: the per-word ratio is snapped to the integer 1e-6
-    // lattice FIRST ((1e6·degree) div freq — both engines' integer
-    // division), so phrase scores are exact long sums and the top-50
-    // pick under (score desc, phrase asc) is total. Shape: two
-    // map-side explodes + three two-phase hash aggs + one broadcast
-    // word-score join + TakeOrdered — linear, no windows, no pair
-    // joins; the word-score table is |vocab|-bounded.
-    "text_rake_keywords" -> ((s, dir) => {
-      val frags = t(s, dir, "documents")
-        .select(explode(split(col("text"), RakeStopwords)).as("frag"))
-        .select(trim(col("frag")).as("phrase"))
-        .filter(col("phrase") =!= "")
-      val words = frags
-        .select(col("phrase"), size(split(col("phrase"), " ")).as("plen"))
-        .select(explode(split(col("phrase"), " ")).as("w"), col("plen"))
-      val wscore = words.groupBy("w")
-        .agg(expr("(1000000 * sum(plen)) div count(1)").as("wscore"))
-      val pocc = frags.groupBy("phrase").agg(count(lit(1)).as("n_occ"))
-      pocc.select(col("phrase"), col("n_occ"),
-          explode(split(col("phrase"), " ")).as("w"))
-        // no broadcast hint: AQE broadcasts the |vocab|-row score table
-        // at test scale and falls back to a shuffle join when a real
-        // corpus vocabulary outgrows the threshold
-        .join(wscore, "w")
-        .groupBy("phrase", "n_occ")
-        .agg(count(lit(1)).cast("int").as("n_words"),
-          sum("wscore").as("score_micro"))
-        .select("phrase", "n_words", "n_occ", "score_micro")
-        .orderBy(col("score_micro").desc, col("phrase"))
-        .limit(50)
-    }),
-
-    // T5/UL2-STYLE SPAN-CORRUPTION PLAN (Raffel et al. 2020): decide,
-    // deterministically, WHICH tokens a denoising objective masks —
-    // per-position salted-md5 coin at ~15% (first hex byte < 0x26 =
-    // 38/256), spans = maximal masked runs. The plan (not the masking
-    // itself) is the data-pipeline artifact: it must be reproducible
-    // across epochs/engines, which the hash coin gives for free. Shape:
-    // pure per-doc projection — zero shuffles before the presentation
-    // sort; per-doc arrays bound the HOF work to the document length.
-    // Run starts are counted with p=0 guarded BEFORE flags[p-1] is
-    // touched (ANSI mode errors on negative array indices).
-    "pipeline_span_corruption" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(col("doc_id"), size(split(col("text"), " ")).as("n_tokens"))
-        .withColumn("flags", expr(
-          "transform(sequence(0, n_tokens - 1), p -> " +
-            "substring(md5(concat('span42:', CAST(doc_id AS STRING), " +
-            "':', CAST(p AS STRING))), 1, 2) < '26')"))
-        .select(col("doc_id"), col("n_tokens"),
-          expr("size(filter(flags, x -> x))").as("n_masked"),
-          expr("aggregate(sequence(0, n_tokens - 1), 0, (acc, p) -> " +
-            "acc + IF(CASE WHEN p = 0 THEN flags[0] " +
-            "ELSE flags[p] AND NOT flags[p - 1] END, 1, 0))").as("n_spans"))
-        .withColumn("mask_rate",
-          round(col("n_masked").cast("double") / col("n_tokens"), 6))
-        .orderBy("doc_id")),
-
-    // Bigram frequency: same explode→two-phase-agg shape as wordcount;
-    // bigrams come from the tight shingle UDF pattern (n=2).
-    "text_ngram_freq" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(explode(bigramUdf(col("text"))).as("bigram"))
-        .groupBy("bigram").agg(count(lit(1)).as("cnt"))
-        .orderBy(col("cnt").desc, col("bigram"))
-        .limit(50)),
-
-    // Per-doc n-gram NOVELTY against everything earlier in the corpus
-    // (ordered by doc_id — the ingest-order analog): the fraction of a
-    // doc's distinct 3-gram shingles whose FIRST corpus occurrence is an
-    // earlier doc. This is the dedup-adjacent curation signal ("how much
-    // of this doc is already in the training set") that drives
-    // keep/down-weight decisions. Shape: per-doc-distinct hashed
-    // (doc, shingle) rows → min-over-shingle window → doc-level agg.
-    // Everything is shingle-hash-keyed — no broadcast of corpus-sized
-    // state, same inverted-index shape as the Jaccard miner but with a
-    // count instead of a pair fan-out, so it stays linear in the
-    // posting lists at any corpus size.
-    "text_ngram_novelty" -> ((s, dir) => {
-      // Round 15 (guide §2.3/§2.4): shuffle NARROW KEYS, never shingle
-      // strings. At the 10× point the duplicated-text fixture blew the
-      // old distinct + min-agg + join-back exchanges up to 57 s — every
-      // one of them carried the 3-word shingle STRING, which the query
-      // only ever uses as an opaque identity. Three changes, same rows:
-      //   1. the shingle collapses to xxhash64 right after the explode
-      //      (first-occurrence/doc counts are hash-stable);
-      //   2. doc_id is unique, so array_distinct per doc already makes
-      //      (doc_id, sh) globally distinct — the corpus-wide distinct
-      //      exchange is GONE;
-      //   3. first_doc rides ONE min-window over the sh partitioning
-      //      instead of groupBy(sh) + join-back (agg + probe exchanges).
-      // Plan: 4 wide string exchanges → 1 narrow window exchange + the
-      // final per-doc agg.
-      val sh = t(s, dir, "documents")
-        .select(col("doc_id"),
-          explode(array_distinct(shingles(col("text")))).as("shw"))
-        .select(col("doc_id"), xxhash64(col("shw")).as("sh"))
-      sh.withColumn("first_doc",
-          min("doc_id").over(Window.partitionBy("sh")))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_shingles"),
-          sum(when(col("first_doc") < col("doc_id"), 1L).otherwise(0L))
-            .as("n_seen_before"))
-        .withColumn("novelty",
-          round(lit(1.0) - col("n_seen_before").cast("double")
-            / col("n_shingles").cast("double"), 6))
-        .orderBy("doc_id")
-    }),
-
-    // Gopher-style repetition signals: fraction of duplicated word
-    // bigrams and the heaviest single bigram per doc — the standard
-    // "is this page boilerplate/spam" quality gate before training.
-    // Shape: map-side bigram explode → one (doc,bigram) hash agg →
-    // one doc-level re-agg; both aggs are two-phase, keyed on doc_id
-    // so the second agg is a near-free partial.
-    "text_repetition" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(col("doc_id"), explode(bigramUdf(col("text"))).as("bigram"))
-        .groupBy("doc_id", "bigram").agg(count(lit(1)).as("c"))
-        .groupBy("doc_id")
-        .agg(sum("c").as("n_bigrams"),
-          count(lit(1)).as("n_distinct"),
-          max("c").as("top_count"))
-        .select(col("doc_id"), col("n_bigrams"), col("n_distinct"), col("top_count"),
-          floor((col("n_bigrams") - col("n_distinct")) * lit(10000) / col("n_bigrams"))
-            .cast("long").as("dup_bp"))
-        .orderBy("doc_id")),
-
-    // PII scrubbing: redact email-shaped and long-digit-run tokens before
-    // a corpus ships to training — pure codegen'd regexp_replace, one
-    // projection pass, no shuffle.
-    "text_pii_redact" -> ((s, dir) => {
-      val noEmail = regexp_replace(col("text"),
-        "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}", "<EMAIL>")
-      val noDigits = regexp_replace(noEmail, "\\d{6,}", "<NUM>")
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        noDigits.as("clean_text"),
-        (length(col("text")) - length(noDigits)).as("chars_removed"),
-      ).orderBy("doc_id")
-    }),
-
-    // Train/test contamination check: test-fold docs sharing >= 3 distinct
-    // 3-gram shingles with ANY train-fold doc. Same inverted-index
-    // group-count plan as dedup_ngram_jaccard — candidates come from the
-    // shingle equi-join, never a doc x doc cross product; fold assignment
-    // is the engine's own md5 split, so the check composes with
-    // train_test_split exactly.
-    //
-    // Single shingling pass: instead of filtering the index into a train
-    // side and a test side and equi-joining them (two corpus scans + two
-    // shingle-UDF passes — Catalyst pushes the fold filter below any
-    // shared exchange, so reuse never materializes), group the index by
-    // shingle ONCE, collecting the shingle's test ids and train ids side
-    // by side, and explode the cross pairs. One documents scan, one
-    // shingle pass, one shuffle on `shingle` (pinned in PlanSpec); the
-    // pair expansion Σ_sh c_te·c_tr is identical to the join's.
-    //
-    // Hot-shingle policy (inherited from dedup_ngram_jaccard's measured
-    // crossover, DedupOps): the expansion stays linear while per-shingle
-    // doc-frequency is bounded — enforced by [[contamination]]'s
-    // document-frequency ceiling, which drops ultra-hot boilerplate
-    // shingles before the group-collect (they carry no contamination
-    // signal: every fold shares them) so no aggregation buffer ever
-    // holds more than the ceiling's worth of ids.
-    "text_contamination" -> ((s, dir) => {
-      val h = md5(concat(lit("split42:"), col("doc_id")))
-      val docs = t(s, dir, "documents")
-        .withColumn("fold", when(substring(h, 1, 2) < "cc", "train").otherwise("test"))
-      contamination(docs)
-    }),
-
-    // The 100 TB form of text_contamination: the exact key's df CEILING
-    // (drop shingles hotter than 10000) bounds the collect buffers but
-    // still lets a df-9999 shingle emit ~25M te×tr pairs through one
-    // skewed shuffle key; the capped twin THINS every shingle hotter
-    // than the adaptive [[DedupOps.minerDfCap]] to ~cap deterministic
-    // salted-md5 survivors (the same residue rule — and the SAME
-    // survivor set, read from the shared [[DedupOps.thinnedPostings]]
-    // checkpoint leaf — as the capped Jaccard miner), bounding
-    // per-shingle pair fan-out at ~cap²/4 at any corpus size. `shared`
-    // counts can only drift DOWN (postings only vanish), so at any scale
-    // where the exact ceiling never binds the flagged pair set is a
-    // SUBSET of the exact key's (pinned with measured recall at sf0.1).
-    "text_contamination_capped" -> ((s, dir) => {
-      val h = md5(concat(lit("split42:"), col("doc_id")))
-      contaminationCapped(DedupOps.thinnedPostings(s, dir),
-        when(substring(h, 1, 2) < "cc", "train").otherwise("test"))
-    }),
-
-    "text_tfidf" -> ((s, dir) => {
-      val tok = t(s, dir, "documents")
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-      val tf = tok.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      val dfc = tf.groupBy("term").agg(count(lit(1)).as("df"))
-      val n = t(s, dir, "documents").agg(count(lit(1)).as("n_docs"))
-      val w = Window.partitionBy("doc_id").orderBy(col("score").desc, col("term"))
-      tf.join(broadcast(dfc), "term").crossJoin(broadcast(n))
-        .withColumn("score",
-          col("tf") * (log((col("n_docs") + lit(1.0)) / (col("df") + lit(1.0))) + lit(1.0)))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 5)
-        .select(col("doc_id"), col("term"), col("tf"),
-          round(col("score"), 6).as("score"), col("rk"))
-        .orderBy("doc_id", "rk")
-    }),
-
-    // BPE merge-candidate mining (Sennrich 2016) — the pair-count step
-    // every byte-pair-encoding tokenizer trainer iterates: which adjacent
-    // symbol pair is most frequent across the corpus. The load-bearing
-    // scale trick is the one real trainers use: collapse the corpus to
-    // its VOCABULARY first (word, freq — a map-side-combined agg), then
-    // mine character pairs over the vocab weighted by freq — pair
-    // expansion touches |vocab| rows, not |corpus tokens|, a ~1000×
-    // working-set cut on natural text. One merge step is stated (the
-    // top-30 candidates); iterating merge→re-pair is a driver loop over
-    // the same two-agg shape with the chosen pair fused.
-    "pipeline_bpe_pairs" -> ((s, dir) => {
-      val vocab = t(s, dir, "documents")
-        .select(explode(split(col("text"), " ")).as("word"))
-        .groupBy("word").agg(count(lit(1)).as("freq"))
-      vocab.select(explode(charPairUdf(col("word"))).as("pair"), col("freq"))
-        .groupBy("pair").agg(sum(col("freq")).as("cnt"))
-        .orderBy(col("cnt").desc, col("pair"))
-        .limit(30)
-    }),
-
-    // OOV RATE of a held-out split against the training vocabulary —
-    // the tokenizer/corpus-coverage diagnostic that decides whether a
-    // word-level vocab is viable or the pipeline needs subword units
-    // (BPE's raison d'être, measured): using the same 80/20 doc split
-    // convention as dedup_cluster_incremental, count what fraction of
-    // the held-out split's token INSTANCES and distinct TYPES never
-    // occur in the training split, per language. Shape: train vocab =
-    // one distinct agg; test tokens left-anti-ish via a word-keyed left
-    // join (the vocab is word-keyed, never broadcast as a whole) — two
-    // exchanges at any corpus size.
-    "text_oov_rate" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val trainVocab = docs.filter(col("doc_id") % 5 =!= 0)
-        .select(explode(split(col("text"), " ")).as("word")).distinct()
-        .withColumn("in_train", lit(1))
-      val testTok = docs.filter(col("doc_id") % 5 === 0)
-        .select(col("lang"), explode(split(col("text"), " ")).as("word"))
-      testTok.join(trainVocab, Seq("word"), "left")
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_tokens"),
-          sum(when(col("in_train").isNull, 1L).otherwise(0L)).as("n_oov"),
-          countDistinct(col("word")).as("n_types"),
-          countDistinct(when(col("in_train").isNull, col("word")))
-            .as("n_oov_types"))
-        .withColumn("oov_rate",
-          round(col("n_oov").cast("double") / col("n_tokens"), 6))
-        .orderBy("lang")
-    }),
-
-    // The ITERATED form of pipeline_bpe_pairs: 5 actual BPE merge
-    // rounds over the corpus vocabulary (see bpeMerges — driver holds
-    // one chosen merge per round, the vocab never leaves the cluster).
-    // Hash-verified against a DuckDB replay: the fixed 5-round loop
-    // unrolls to chained CTEs (bpeCtes) where each merge is one greedy
-    // string replace over a chr(31)-delimited symbol encoding — the
-    // trainer is deterministic, so the two engines must agree exactly.
-    // The algorithm is additionally pinned in the unit suite against the
-    // classic hug/pug/pun/bun/hugs fixture plus mass-accounting and
-    // monotonicity properties.
-    "pipeline_bpe_merges" -> ((s, dir) => {
-      import s.implicits._
-      bpeMergesFor(s, dir).toDF("step", "left", "right", "pair_count")
-        .orderBy("step")
-    }),
-
-    // INFERENCE with the learned tokenizer: apply the 5 trained merges
-    // ([[bpeMerges]]) to the corpus and report per-language token
-    // accounting — whitespace words vs BPE symbols and the compression
-    // the merges bought. The merge list is a 5-pair closure constant
-    // (broadcast with the task), application is a map-side UDF; the only
-    // aggregation is the per-lang rollup. The token-count-per-corpus
-    // number this produces is THE quantity a training-data pipeline
-    // budgets by. Hash-verified: the oracle re-trains the 5 merges via
-    // the bpeCtes replay and applies them as a chain of greedy string
-    // replaces (training order = replace order, exactly tokenizeWord's
-    // convention); the tokenizer is additionally pinned by the fixture
-    // spec (hugs → [hug, s], pun → [p, un]).
-    "pipeline_bpe_apply" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val merges = bpeMergesFor(s, dir).map(m => (m._2, m._3))
-      val nBpeUdf = udf((text: String) =>
-        text.split(' ').iterator.map(w => tokenizeWord(w, merges).length.toLong).sum)
-      docs.select(col("lang"), size(split(col("text"), " ")).cast("long").as("n_words"),
-          nBpeUdf(col("text")).as("n_bpe"))
-        .groupBy("lang")
-        .agg(sum(col("n_words")).as("n_words"), sum(col("n_bpe")).as("n_bpe_tokens"))
-        .withColumn("tokens_per_word",
-          round(col("n_bpe_tokens").cast("double") / col("n_words"), 6))
-        .orderBy("lang")
-    }),
-
-    // BM25 ranked retrieval (Robertson–Spärck Jones, k1=1.2 b=0.75) for
-    // a fixed 3-term query — the lexical half of every corpus search /
-    // contamination-lookup stack, and the standard candidate generator
-    // the hybrid RRF key fuses with the embedding ranker. Shape is
-    // scale-first: the token stream is FILTERED TO THE QUERY TERMS
-    // before any aggregation (posting-list discipline — the tf table is
-    // |docs containing a query term|, not the corpus), df and the
-    // (N, avgdl) scalars are 1-row/3-row broadcasts, and the only
-    // corpus-sized pass is the doc-length agg the scorer joins against.
-    // Determinism: integer tf/df/dl throughout; each term's contribution
-    // is rounded to 6 dp and summed on the DECIMAL lattice (term order
-    // cannot matter), the text_lm_score pin.
-    "text_bm25" -> ((s, dir) => {
-      val qTerms = Seq("spark", "hash", "merge")
-      val tok = t(s, dir, "documents")
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-      val dl = tok.groupBy("doc_id").agg(count(lit(1)).as("dl"))
-      val stats = dl.agg(count(lit(1)).as("n_docs"),
-        (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))
-      val tf = tok.filter(col("term").isin(qTerms: _*))
-        .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      val dfc = tf.groupBy("term").agg(count(lit(1)).as("df"))
-      tf.join(broadcast(dfc), "term").join(dl, "doc_id")
-        .crossJoin(broadcast(stats))
-        .withColumn("idf", log(
-          (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1.0)))
-        .withColumn("contrib", round(
-          col("idf") * (col("tf") * lit(2.2)) /
-            (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))),
-          6))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_terms"),
-          round(graft.Tables.dsum6(col("contrib")), 6).as("score"))
-        .orderBy(col("score").desc, col("doc_id"))
-        .limit(20)
-    }),
-
-    // Statistical bigram-LM quality score — the CCNet/KenLM-style
-    // perplexity signal: train an add-one-smoothed bigram model on the
-    // corpus itself (P(w2|w1) = (c(w1w2)+1)/(c(w1·)+V)), score each doc
-    // by its mean log-probability per bigram instance. Low scorers are
-    // the statistically-unusual docs a cleaning pipeline reviews or
-    // drops. Model tables are vocab-bounded (≤V² rows) and broadcast;
-    // the per-doc mean rides one hash agg with DECIMAL accumulation
-    // (order-independent, engine-exact under the 6-dp per-term cast).
-    // CHARACTER-n-gram language ID (Cavnar–Trenkle lite — the n-gram
-    // heuristic proper, next to text_lang_id's marker-token shortcut):
-    // per-language char-BIGRAM profiles are trained from the corpus's
-    // own labels (add-one-smoothed multinomial over the full
-    // langs×bigram-vocab grid, so unseen bigrams score ln(1/(N+V))
-    // instead of silently dropping), every doc is scored against all 5
-    // profiles, and the key returns the CONFUSION MATRIX (actual ×
-    // predicted counts) — the evaluation artifact a lang-ID gate ships
-    // with. Scale: the profile grid is |langs|·|bigram vocab| ≈ 3.6k
-    // rows (chars are a bounded alphabet — the whole point of char
-    // n-grams) and broadcasts; the corpus-side cost is one bigram
-    // explode + two hash aggs; the per-doc argmax folds map-side via
-    // min_by on a (−score, lang) struct (sim_nearest_exemplar's
-    // pattern), so nothing doc-keyed crosses twice. Determinism: the
-    // per-(doc,lang) score accumulates cnt·ln(p) on the decimal lattice
-    // (text_lm_score's pin); ties break to the smallest language code.
-    "text_lang_id_ngram" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      // Round 15: ONE corpus bigram explode instead of two. dbc (per-doc
-      // counts) and prof (per-language profile counts) were independent
-      // aggregations over the same explode — different grouping keys, so
-      // ReuseExchange can never merge them and the charPair UDF pass ran
-      // twice (the round-14 profile-from-dbc rewrite re-planned MORE
-      // exchanges and was reverted). GROUPING SETS computes both
-      // granularities in one aggregate: Expand duplicates each exploded
-      // row 2× in-stage before the partial agg — far cheaper than a
-      // second scan + explode — and every downstream branch (dbc, and
-      // prof's five consumers) forks off the SAME exchange, which
-      // ReuseExchange deduplicates.
-      val db = docs.select(col("doc_id"), col("lang"),
-        explode(charPairUdf(col("text"))).as("bg"))
-      val g = db.groupingSets(
-          Seq(Seq(col("doc_id"), col("lang"), col("bg")),
-            Seq(col("lang"), col("bg"))),
-          col("doc_id"), col("lang"), col("bg"))
-        .agg(count(lit(1)).as("cnt"), grouping_id().as("gid"))
-      val dbc = g.filter(col("gid") === 0)
-        .select(col("doc_id"), col("lang"), col("bg"), col("cnt"))
-      val prof = g.filter(col("gid") =!= 0)
-        .select(col("lang").as("p_lang"), col("bg"), col("cnt").as("c"))
-      val tot = prof.groupBy("p_lang").agg(sum("c").as("n_l"))
-      val vv = prof.agg(countDistinct(col("bg")).as("v"))
-      val grid = prof.select("bg").distinct()
-        .crossJoin(prof.select("p_lang").distinct())
-        .join(prof, Seq("p_lang", "bg"), "left")
-        .join(tot, "p_lang")
-        .crossJoin(vv)
-        .select(col("p_lang"), col("bg"),
-          // ln snapped to a 1e-4 lattice: neither engine guarantees
-          // correctly-rounded ln, and the downstream cnt*lp products are
-          // cast to DECIMAL(18,6) — quantizing the log first keeps a
-          // 1-ulp ln divergence three orders of magnitude away from any
-          // 6-dp cast boundary (pipeline_dp_count_noise's pattern).
-          round(log((coalesce(col("c"), lit(0L)) + lit(1.0)) / (col("n_l") + col("v"))), 4)
-            .as("lp"))
-      val scored = dbc.join(broadcast(grid), "bg")
-        .groupBy("doc_id", "lang", "p_lang")
-        .agg(dsum6(col("cnt") * col("lp")).as("score"))
-      scored.groupBy("doc_id", "lang")
-        .agg(min_by(col("p_lang"), struct((-col("score")).as("ns"),
-          col("p_lang"))).as("predicted"))
-        .groupBy(col("lang").as("actual"), col("predicted"))
-        .agg(count(lit(1)).as("n_docs"))
-        .orderBy("actual", "predicted")
-    }),
-
-    "text_lm_score" -> ((s, dir) =>
-      lmDocScores(t(s, dir, "documents")).orderBy("doc_id")),
-
-    // VOCABULARY COVERAGE CURVE — what fraction of the corpus token MASS
-    // do the top-k vocabulary words cover (k = 1, 2, 4, ..., 1024)? The
-    // tokenizer-budget diagnostic: the curve's knee says how small a
-    // vocab gets you 95% coverage, and a too-flat curve flags boilerplate
-    // (Zipf's complement — text_zipf_slope fits the law, this key reads
-    // the budget off it). Shape: one word-count hash agg, then the curve
-    // reads off the TOP-1024 words only — TakeOrderedAndProject (a
-    // per-partition top-k fold + a 1024-row driver merge, never a global
-    // sort: a 100 TB web corpus has a 10⁸–10⁹-entry vocabulary of typos
-    // and URLs, and the previous unpartitioned rank+cumsum window would
-    // single-partition ALL of it). The rank/cumsum window then runs on
-    // ≤1024 rows (bounded by construction — the sweep allowlist's
-    // contract), and the one row the top-k slice cannot produce — the
-    // full-vocabulary point, coverage ≡ 1 — comes from the 1-row total
-    // agg instead. Share = exact integer cumsum / exact integer total,
-    // one correctly-rounded division — bit-identical cross-engine.
-    "text_vocab_coverage" -> ((s, dir) => {
-      // wc feeds three branches (top-k slice, totals, full-vocab row):
-      // localCheckpoint the vocabulary aggregate so the corpus explode+agg
-      // runs ONCE per call instead of once per branch.
-      val wc = t(s, dir, "documents")
-        .select(explode(split(col("text"), " ")).as("word"))
-        .groupBy("word").agg(count(lit(1)).as("cnt"))
-        .localCheckpoint()
-      val kMax = 1024
-      val top = wc.orderBy(col("cnt").desc, col("word")).limit(kMax)
-      val ranked = top
-        .withColumn("rk", row_number().over(
-          Window.orderBy(col("cnt").desc, col("word"))).cast("long"))
-        .withColumn("cum", sum("cnt").over(
-          Window.orderBy(col("cnt").desc, col("word"))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      val tot = wc.agg(sum("cnt").as("total"), count(lit(1)).as("vocab"))
-      val ks = Seq(1L, 2L, 4L, 8L, 16L, 32L, 64L, 128L, 256L, 512L, 1024L)
-      val curve = ranked.crossJoin(broadcast(tot))
-        .filter(col("rk").isin(ks: _*) || col("rk") === col("vocab"))
-        .select(col("rk").as("top_k"), col("cum").as("tokens_covered"),
-          col("total").as("tokens_total"),
-          round(col("cum").cast("double") / col("total"), 6).as("coverage"))
-      // The full-vocab row (rk == vocab) lives outside the top-k slice
-      // whenever vocab > kMax; emit it from the total agg (coverage is
-      // exactly 1 there — cum over the whole vocabulary IS the total).
-      val fullRow = tot.filter(col("vocab") > kMax)
-        .select(col("vocab").as("top_k"), col("total").as("tokens_covered"),
-          col("total").as("tokens_total"), lit(1.0).as("coverage"))
-      curve.unionAll(fullRow).orderBy("top_k")
-    }),
-
-    // GOPHER QUALITY RULES (Rae et al. 2021, "Scaling Language Models:
-    // Methods, Analysis & Insights from Training Gopher", App. A1.1) —
-    // the published rule-based document filter, restricted to the rules
-    // computable on whitespace-tokenized text: word count in [25, 1e5],
-    // mean word length in [3, 10], >= 2 stop words, top-word fraction
-    // <= 1/8 (the unigram form of Gopher's repetition caps). The key
-    // returns the AUDIT REPORT a filtering run ships: per-rule violation
-    // counts + the pass-all count, reconciling against docs_total.
-    // Determinism: every rule is an INTEGER comparison (sum_len >= 3n,
-    // 8*top_c <= n — never a float ratio), so the gate is bit-exact in
-    // any engine. Scale: two doc-keyed hash aggs + a 1-row final agg;
-    // the report is 6 rows regardless of corpus size.
-    "pipeline_gopher_rules" -> ((s, dir) => {
-      val tok = t(s, dir, "documents")
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-      val per = tok.groupBy("doc_id", "w").agg(count(lit(1)).as("c"))
-        .groupBy("doc_id").agg(
-          sum("c").as("n"),
-          sum(col("c") * length(col("w"))).as("sum_len"),
-          sum(when(col("w").isin(stopwords: _*), col("c")).otherwise(0L))
-            .as("n_stop"),
-          max("c").as("top_c"))
-      val flags = per.select(
-        when(col("n") < 25 || col("n") > 100000, 1L).otherwise(0L).as("f_wc"),
-        when(col("sum_len") < col("n") * 3 || col("sum_len") > col("n") * 10, 1L)
-          .otherwise(0L).as("f_mwl"),
-        when(col("n_stop") < 2, 1L).otherwise(0L).as("f_stop"),
-        when(col("top_c") * 8 > col("n"), 1L).otherwise(0L).as("f_rep"))
-      flags.agg(
-          count(lit(1)).as("docs_total"),
-          sum("f_wc").as("fail_word_count"),
-          sum("f_mwl").as("fail_mean_word_len"),
-          sum("f_stop").as("fail_stopwords"),
-          sum("f_rep").as("fail_repetition"),
-          sum(when(col("f_wc") + col("f_mwl") + col("f_stop") + col("f_rep")
-            === 0, 1L).otherwise(0L)).as("pass_all"))
-        .select(explode(array(
-          struct(lit("docs_total").as("rule"), col("docs_total").as("n_docs")),
-          struct(lit("fail_mean_word_len").as("rule"),
-            col("fail_mean_word_len").as("n_docs")),
-          struct(lit("fail_repetition").as("rule"),
-            col("fail_repetition").as("n_docs")),
-          struct(lit("fail_stopwords").as("rule"),
-            col("fail_stopwords").as("n_docs")),
-          struct(lit("fail_word_count").as("rule"),
-            col("fail_word_count").as("n_docs")),
-          struct(lit("pass_all").as("rule"), col("pass_all").as("n_docs"))))
-          .as("r"))
-        .select(col("r.rule").as("rule"), col("r.n_docs").as("n_docs"))
-        .orderBy("rule")
-    }),
-
-    // CCNET PERPLEXITY BUCKETS (Wenzek et al. 2020, "CCNet: Extracting
-    // High Quality Monolingual Datasets from Web Crawl Data"): rank each
-    // document by its per-LANGUAGE LM score and cut the corpus into
-    // head / middle / tail terciles — the curation step that keeps the
-    // best third and discards (or down-samples) the tail. Scores come
-    // from [[lmDocScores]] (the exact frame `text_lm_score` releases, so
-    // the two keys reconcile); tercile boundaries are exact per-language
-    // percentiles (5 langs x a tiny two-phase agg; the documented 100 TB
-    // swap is approx_percentile, mergeable partials — the
-    // agg_histogram_equidepth/_approx pair's pattern), broadcast back
-    // onto the scored frame for a zero-shuffle bucket assign. Higher
-    // avg_ll = lower perplexity = head.
-    "pipeline_perplexity_buckets" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val scored = lmDocScores(docs)
-        .join(docs.select("doc_id", "lang"), "doc_id")
-      val bounds = scored.groupBy("lang").agg(
-        percentile(col("avg_ll"), lit(1.0 / 3)).as("b33"),
-        percentile(col("avg_ll"), lit(2.0 / 3)).as("b66"))
-      scored.join(broadcast(bounds), "lang")
-        .withColumn("bucket",
-          when(col("avg_ll") >= col("b66"), lit("head"))
-            .when(col("avg_ll") >= col("b33"), lit("middle"))
-            .otherwise(lit("tail")))
-        .groupBy("lang", "bucket")
-        .agg(count(lit(1)).as("n_docs"),
-          round(graft.Tables.dsum6(col("avg_ll")) / count(lit(1)), 6)
-            .as("mean_ll"))
-        .orderBy("lang", "bucket")
-    }),
-
-    // ZIPF SLOPE — the corpus-health diagnostic (natural text follows
-    // rank·freq^(1/s) ≈ const with s ≈ 1; template/boilerplate-heavy or
-    // synthetic corpora bend it): least-squares slope of ln(freq) on
-    // ln(rank) over the top-100 vocabulary. Determinism recipe: ranks
-    // come from an integer total order (count DESC, word); each ln is
-    // terminally rounded to 6 dp and cast DECIMAL before the sufficient
-    // statistics accumulate (text_lm_score's pin), so the regression
-    // runs on exact sums and the final arithmetic is one IEEE expression
-    // tree in both engines. Scale: the word count is a map-side-combined
-    // corpus agg; the top-100 slice is TakeOrderedAndProject (per-
-    // partition top-k fold, never a global vocab sort — the same move as
-    // text_vocab_coverage), so the rank window runs on exactly 100 rows.
-    "text_zipf_slope" -> ((s, dir) => {
-      val wc = t(s, dir, "documents")
-        .select(explode(split(col("text"), " ")).as("w"))
-        .groupBy("w").agg(count(lit(1)).as("cnt"))
-      val ranked = wc
-        .orderBy(col("cnt").desc, col("w")).limit(100)
-        .withColumn("rk", row_number().over(
-          Window.orderBy(col("cnt").desc, col("w"))))
-        .select(
-          round(log(col("rk")), 6).cast(org.apache.spark.sql.types.DecimalType(18, 6)).as("x"),
-          round(log(col("cnt")), 6).cast(org.apache.spark.sql.types.DecimalType(18, 6)).as("y"))
-      val g = ranked.agg(
-        count(lit(1)).cast("double").as("n"),
-        sum(col("x")).cast("double").as("sx"),
-        sum(col("y")).cast("double").as("sy"),
-        sum(col("x") * col("y")).cast("double").as("sxy"),
-        sum(col("x") * col("x")).cast("double").as("sxx"))
-      g.select(
-          round((col("n") * col("sxy") - col("sx") * col("sy")) /
-            (col("n") * col("sxx") - col("sx") * col("sx")), 6).as("zipf_slope"),
-          col("n").cast("long").as("n_words"))
-    }),
-
-    // Collocation mining: top-50 bigrams by pointwise mutual information
-    // PMI = ln( P(w1,w2) / (P(w1)·P(w2)) ), the standard corpus-
-    // linguistics signal for "these tokens form a unit" (phrase
-    // extraction, tokenizer-merge candidates). A min-support floor
-    // (c12 ≥ 5) kills the rare-pair PMI explosion. Determinism: both
-    // engines evaluate the identical IEEE expression tree of bigint→
-    // double divisions — (c12/nb) / ((c1/n)·(c2/n)) — then ln, then one
-    // terminal round(6) (same recipe text_lm_score pins). Scale: two
-    // corpus scans (token + bigram explode) into map-side-combined
-    // counts; the c12 frame joins the unigram counts on WORD KEYS — a
-    // hash shuffle of (word, long) rows, never a vocab broadcast (vocab
-    // grows with the corpus; the totals are the only broadcast, 1 row
-    // each). Top-50 rides TakeOrderedAndProject.
-    "text_pmi_bigrams" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val toks = docs.select(explode(split(col("text"), " ")).as("w"))
-      val cw = toks.groupBy("w").agg(count(lit(1)).as("c"))
-      val n = toks.agg(count(lit(1)).as("n"))
-      val bg = docs.select(explode(bigramUdf(col("text"))).as("bigram"))
-      val nb = bg.agg(count(lit(1)).as("nb"))
-      bg.groupBy("bigram").agg(count(lit(1)).as("c12"))
-        .filter(col("c12") >= 5)
-        .withColumn("w1", split(col("bigram"), " ")(0))
-        .withColumn("w2", split(col("bigram"), " ")(1))
-        .join(cw.select(col("w").as("w1"), col("c").as("c1")), "w1")
-        .join(cw.select(col("w").as("w2"), col("c").as("c2")), "w2")
-        .crossJoin(broadcast(n)).crossJoin(broadcast(nb))
-        .withColumn("pmi", round(log(
-          (col("c12") / col("nb")) / (col("c1") / col("n") * (col("c2") / col("n")))), 6))
-        .select("bigram", "c12", "c1", "c2", "pmi")
-        .orderBy(desc("pmi"), col("bigram")).limit(50)
-    }),
-
-    "text_lang_stats" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .groupBy("lang", "source")
-        .agg(count(lit(1)).as("n_docs"),
-          round(percentile(col("n_chars"), lit(0.5)), 4).as("p50_chars"),
-          round(percentile(col("n_chars"), lit(0.9)), 4).as("p90_chars"),
-          round(avg(col("n_chars")), 6).as("avg_chars"))
-        .orderBy("lang", "source")),
-
-    // Intra-document repetition spans (the self-dedup half of
-    // "Deduplicating Training Data Makes Language Models Better", Lee et
-    // al. 2022): token positions covered by a 3-gram whose identical
-    // 3-gram already occurred EARLIER in the same document. Overlapping
-    // covered intervals [i, i+2] merge via gaps-and-islands (cumulative
-    // max of interval ends), so n_repeated is the exact union length —
-    // the token count a span-trimming pass would remove. Scale: every
-    // window partitions by doc_id (+shingle) — work is bounded per
-    // document, nothing corpus-wide; the (doc_id, sh) first-occurrence
-    // window and the doc-ordered island windows are the only exchanges.
-    "text_intradoc_dedup" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val docs = t(s, dir, "documents")
-      val sh = docs.select(col("doc_id"),
-        posexplode(shingles(col("text"))).as(Seq("i", "sh")))
-      val rep = sh
-        .withColumn("first_i", min("i").over(Window.partitionBy("doc_id", "sh")))
-        .filter(col("i") > col("first_i"))
-      val prevEnds = Window.partitionBy("doc_id").orderBy("i")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val runW = Window.partitionBy("doc_id").orderBy("i")
-        .rowsBetween(Window.unboundedPreceding, 0)
-      val merged = rep
-        .withColumn("prev_max_end", max(col("i") + lit(2)).over(prevEnds))
-        .withColumn("new_isl",
-          when(col("prev_max_end").isNull || col("i") > col("prev_max_end"), 1L)
-            .otherwise(0L))
-        .withColumn("isl_id", sum("new_isl").over(runW))
-        .groupBy("doc_id", "isl_id")
-        .agg((max(col("i")) + lit(2) - min(col("i")) + lit(1)).as("len"))
-        .groupBy("doc_id").agg(sum("len").as("n_repeated"))
-      docs.select(col("doc_id"), size(split(col("text"), " ")).as("n_tokens"))
-        .join(merged, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("n_tokens").cast("long").as("n_tokens"),
-          coalesce(col("n_repeated"), lit(0L)).as("n_repeated"),
-          round(coalesce(col("n_repeated"), lit(0L)) / col("n_tokens"), 6)
-            .as("repeat_ratio"))
-        .orderBy("doc_id")
-    }),
-
-    // Data-mix diagnostics: per-source token-distribution entropy and
-    // KL(source ‖ corpus) — the two numbers a pretraining-mix curator
-    // reads before re-weighting sources (low entropy = repetitive/
-    // boilerplate source; high KL = source is unlike the rest of the
-    // corpus). Natural-log units. No smoothing needed: the corpus
-    // distribution marginalizes the SAME per-(source, word) counts, so
-    // q(w) > 0 wherever p(w) > 0 by construction. One token explode +
-    // three reuses of the same (source, word) count frame; per-term
-    // doubles ride the decimal accumulator (dsum6) so the Σ is
-    // partition-order-independent and engine-portable (the lm-score
-    // pattern). Scale: everything keys on (source, word) or word — two
-    // hash aggs and two broadcastable dimension joins; the corpus total
-    // is a 1-row broadcast. No all-corpus shuffle of anything wider than
-    // (word, count).
-    "text_entropy_kl" -> ((s, dir) => {
-      val sc = t(s, dir, "documents")
-        .select(col("source"), explode(split(col("text"), " ")).as("w"))
-        .groupBy("source", "w").agg(count(lit(1)).as("c"))
-      val st = sc.groupBy("source").agg(sum("c").as("tot"))
-      val cw = sc.groupBy("w").agg(sum("c").as("cw"))
-      val ct = sc.agg(sum("c").as("ctot"))
-      val p = col("c") / col("tot")
-      val q = col("cw") / col("ctot")
-      sc.join(st, "source").join(cw, "w").crossJoin(broadcast(ct))
-        .select(col("source"),
-          (p * log(p)).cast(org.apache.spark.sql.types.DecimalType(18, 6)).as("ph"),
-          (p * log(p / q)).cast(org.apache.spark.sql.types.DecimalType(18, 6)).as("pk"),
-          col("c"))
-        .groupBy("source")
-        .agg(sum(col("c")).as("n_tokens"),
-          round(-sum(col("ph")).cast("double"), 6).as("entropy"),
-          round(sum(col("pk")).cast("double"), 6).as("kl"))
-        .orderBy("source")
-    }),
-
-    // Fuzzy pair-matching with blocking: same brand + same head noun, then
-    // levenshtein <= 3. Blocking keeps the candidate set linear-ish at scale.
-    "text_edit_distance" -> ((s, dir) => {
-      // Round 14: round-robin fan-out so the banded-DP probe side runs
-      // on every core — the compact part parquet is ONE scan split, so
-      // the levenshtein stage ran single-task (keyless shuffle: the
-      // broadcast-join / 0-hash-exchange plan shape is unchanged).
-      // Round 15: gated on actual scan parallelism (fanOutIfCompact).
-      val p = fanOutIfCompact(t(s, dir, "part"))
-        .select(col("p_partkey"), col("p_brand"),
-        col("p_name"), split(col("p_name"), " ").getItem(1).as("noun"))
-      val a = p.select(col("p_partkey").as("k1"), col("p_brand").as("brand1"),
-        col("noun").as("noun1"), col("p_name").as("n1"))
-      val b = p.select(col("p_partkey").as("k2"), col("p_brand").as("brand2"),
-        col("noun").as("noun2"), col("p_name").as("n2"))
-      // Length pre-filter: levenshtein ≥ |len(a)−len(b)|, so pairs differing
-      // by >3 chars are cut before any DP work — same result set. The DP
-      // itself runs through the THRESHOLD overload of levenshtein, which
-      // computes only the |threshold|-wide diagonal band (O(len·3), not
-      // O(len²)) and returns −1 as soon as the distance provably exceeds
-      // it — so `dist ≥ 0` is exactly the old `dist ≤ 3` result set
-      // (measured JIT-steady warm at sf0.1: 2.0 s full DP → 1.8 s banded).
-      // (A width-4 length-bucket equi key was also tried and REVERTED: the
-      // blocked pairs ride a zero-exchange broadcast join, and exploding
-      // side b to 3 buckets grows the broadcast build 3× for no win — the
-      // residual length filter was already cutting those pairs pre-DP.)
-      a.join(b, col("brand1") === col("brand2") && col("noun1") === col("noun2")
-          && col("k1") < col("k2")
-          && abs(length(col("n1")) - length(col("n2"))) <= 3)
-        .withColumn("dist", levenshtein(col("n1"), col("n2"), 3))
-        .filter(col("dist") >= 0)
-        .select("k1", "k2", "n1", "n2", "dist")
-        .orderBy("k1", "k2")
-    }),
-
-    // Quality scoring: token/char ratios + dedup-ish uniqueness, combined
-    // into a bounded score. Pure arithmetic on exact ratios — bit-stable.
-    "text_quality_score" -> ((s, dir) => {
-      val toks = split(col("text"), " ")
-      val nTok = size(toks)
-      val stopRatio = size(filter(toks, w => w.isin(stopwords: _*))) / nTok
-      val uniqRatio = size(array_distinct(toks)) / nTok
-      val longRatio = size(filter(toks, w => length(w) > 4)) / nTok
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        nTok.as("n_tokens"),
-        (length(col("text")) - (nTok - lit(1))).as("n_word_chars"),
-        round(stopRatio, 6).as("stop_ratio"),
-        round(uniqRatio, 6).as("uniq_ratio"),
-        round(longRatio, 6).as("long_word_ratio"),
-        qualityScore(col("text")).as("quality"),
-      ).orderBy("doc_id")
-    }),
-
-    // Per-language quality gate: keep each language's top quality
-    // quartile — the standard corpus-cleaning step between scoring and
-    // dedup (filtering on a GLOBAL threshold would simply drop
-    // low-resource languages whose score distribution sits lower).
-    // ntile(4) makes the cut integer-exact in both engines (no float
-    // threshold boundary), with doc_id as the deterministic tiebreak.
-    // One shuffle on lang. Scale note: the within-language window sorts
-    // each language on few tasks; at 100 TB swap the exact rank for
-    // approx_percentile per-language thresholds (tiny agg, broadcast
-    // back) — same gate, bounded memory, approximate only at the
-    // quartile boundary. The exact-rank form is the oracle-checkable
-    // contract the approx variant is tested against.
-    "pipeline_quality_gate" -> ((s, dir) => {
-      val w = Window.partitionBy("lang")
-        .orderBy(col("quality").desc, col("doc_id"))
-      t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), qualityScore(col("text")).as("quality"))
-        .withColumn("tile", ntile(4).over(w))
-        .filter(col("tile") === 1).drop("tile")
-        .orderBy("doc_id")
-    }),
-
-    // Deterministic marker-token language-ID heuristic (vote per language
-    // marker set, argmax with fixed tiebreak order). A stand-in for a real
-    // n-gram profile model — the plan shape (explode → conditional agg) is
-    // what matters at scale.
-    "text_lang_id" -> ((s, dir) => {
-      val tok = t(s, dir, "documents")
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-      val sc = tok.groupBy("doc_id").agg(
-        sum(when(col("w").isin("the", "a"), 1).otherwise(0)).as("s_en"),
-        sum(when(col("w").isin("table", "scan"), 1).otherwise(0)).as("s_de"),
-        sum(when(col("w").isin("query", "row"), 1).otherwise(0)).as("s_fr"),
-        sum(when(col("w").isin("value", "key"), 1).otherwise(0)).as("s_es"),
-        sum(when(col("w").isin("data", "hash"), 1).otherwise(0)).as("s_zh"))
-      sc.withColumn("pred_lang",
-        when(col("s_en") >= col("s_de") && col("s_en") >= col("s_fr")
-          && col("s_en") >= col("s_es") && col("s_en") >= col("s_zh"), "en")
-          .when(col("s_de") >= col("s_fr") && col("s_de") >= col("s_es")
-            && col("s_de") >= col("s_zh"), "de")
-          .when(col("s_fr") >= col("s_es") && col("s_fr") >= col("s_zh"), "fr")
-          .when(col("s_es") >= col("s_zh"), "es")
-          .otherwise("zh"))
-        .orderBy("doc_id")
-    }),
-
-    // Template/boilerplate-header detection: group documents by their
-    // leading 30 characters — form letters, templated pages, and
-    // generator boilerplate share exact prefixes long before they share
-    // enough shingles to trip the Jaccard miner, so this is the cheap
-    // first-pass screen a curation pipeline runs before any pair
-    // mining. Exactly dedup_exact's shape keyed on the prefix: ONE
-    // two-phase hash agg (the prefix projection is scan-stage), no
-    // window, no join — at 100 TB the exchange carries map-side
-    // partials per distinct prefix, never documents.
-    "text_prefix_dup" -> ((s, dir) =>
-      t(s, dir, "documents").filter(length(col("text")) >= 30)
-        .groupBy(substring(col("text"), 1, 30).as("prefix"))
-        .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_docs"))
-        .filter(col("n_docs") >= 2)
-        .select(col("keep_id"), col("n_docs"), col("prefix"))
-        .orderBy("keep_id")),
-
-    // Normalized exact dedup — the canonicalization screen production
-    // exact-dedup actually runs: case-fold, trim, collapse whitespace
-    // runs, THEN hash. Catches re-encodes/reflows that byte-exact
-    // hashing (multimodal_dedup) misses while staying one two-phase agg
-    // on the digest; the normalization is scan-stage codegen (lower +
-    // regexp_replace), so at 100 TB this costs exactly what dedup_exact
-    // costs. Spark regexp_replace is global by default; the oracle
-    // passes DuckDB's explicit 'g' flag for the identical semantics.
-    "text_dedup_normalized" -> ((s, dir) => {
-      val norm = regexp_replace(lower(trim(col("text"))), " +", " ")
-      t(s, dir, "documents")
-        .groupBy(md5(norm).as("norm_md5"))
-        .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("dup_cnt"))
-        .select(col("keep_id"), col("dup_cnt"), col("norm_md5"))
-        .orderBy("keep_id")
-    }),
-
-    // Document fingerprint: min-MD5 over 3-word shingles (winnowing-style
-    // representative hash) + distinct-shingle cardinality.
-    "text_fingerprint" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(col("doc_id"), explode(shingles(col("text"))).as("shingle"))
-        .groupBy("doc_id")
-        .agg(min(md5(col("shingle"))).as("fingerprint"),
-          countDistinct(col("shingle")).as("n_shingles"))
-        .orderBy("doc_id")),
-
-    // Token counting: whitespace tokens + BPE-ish subword piece estimate
-    // (ceil(len/4) pieces per word).
-    "text_token_count" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_words"),
-          sum(ceil(length(col("w")) / lit(4.0)).cast("long")).as("n_bpe_pieces"))
-        .orderBy("doc_id")),
-
-    // READABILITY INDICES (round 11) — Coleman–Liau and ARI per doc,
-    // the two classics that need only CHARACTER/WORD/SENTENCE counts
-    // (no syllable dictionary): CLI = 0.0588·L − 0.296·S − 15.8 with
-    // L = letters per 100 words, S = sentences per 100 words; ARI =
-    // 4.71·(chars/word) + 0.58·(words/sentence) − 21.43. A corpus
-    // quality signal (too-hard and too-easy tails both correlate with
-    // boilerplate/garbage). Counts are exact ints from codegen'd
-    // regexp_replace lengths; sentence count floors at 1 (this corpus
-    // has no terminal punctuation — the floor keeps the index defined
-    // on fragments, the behavior a cleaning pipeline wants). Each
-    // index is ONE shared IEEE tree over exact ints in both engines.
-    // Scale: pure scan-stage projection — no shuffle at all.
-    "text_readability" -> ((s, dir) => {
-      val w = size(split(col("text"), " ")).cast("long")
-      val l = length(regexp_replace(col("text"), "[^A-Za-z]", ""))
-        .cast("long")
-      val sn = greatest(lit(1L),
-        (length(col("text")) -
-          length(regexp_replace(col("text"), "[.!?]", ""))).cast("long"))
-      t(s, dir, "documents")
-        .select(col("doc_id"), w.as("n_words"), l.as("n_letters"),
-          sn.as("n_sentences"))
-        .select(col("doc_id"), col("n_words"), col("n_letters"),
-          col("n_sentences"),
-          round(lit(0.0588) * (col("n_letters") * lit(100.0) / col("n_words"))
-            - lit(0.296) * (col("n_sentences") * lit(100.0) / col("n_words"))
-            - lit(15.8), 6).as("coleman_liau"),
-          round(lit(4.71) * (col("n_letters").cast("double") / col("n_words"))
-            + lit(0.58) * (col("n_words").cast("double") / col("n_sentences"))
-            - lit(21.43), 6).as("ari"))
-        .orderBy("doc_id")
-    }),
-
-    // LEXICAL DIVERSITY (round 11) — per-doc type/token ratio and
-    // hapax-legomena ratio, the vocabulary-richness signals beside
-    // text_repetition's dup-run view: TTR low → template/spam text;
-    // hapax high → OCR noise or genuinely rich prose. Exact integer
-    // counts from one explode + two-phase agg (map-side combinable on
-    // (doc, token)); the two ratios are single IEEE divisions.
-    "text_lexical_diversity" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-        .groupBy("doc_id", "w").agg(count(lit(1)).as("cnt"))
-        .groupBy("doc_id")
-        .agg(sum("cnt").as("n_tokens"),
-          count(lit(1)).as("n_types"),
-          sum(when(col("cnt") === 1L, 1L).otherwise(0L)).as("n_hapax"))
-        .select(col("doc_id"), col("n_tokens"), col("n_types"),
-          col("n_hapax"),
-          round(col("n_types").cast("double")
-            / col("n_tokens").cast("double"), 6).as("ttr"),
-          round(col("n_hapax").cast("double")
-            / col("n_tokens").cast("double"), 6).as("hapax_ratio"))
-        .orderBy("doc_id")),
-
-    // TERM-FREQUENCY DRIFT (round 11) — which vocabulary is RISING or
-    // FALLING across the corpus's ingestion order? (doc_id is the
-    // corpus position axis — the drift readout a crawl pipeline watches
-    // between snapshots.) For the top-100 df terms: per-position-decile
-    // counts, then the OLS slope over the 10-bucket series — with
-    // x = 0..9 fixed, Σx=45 and Σx²=285 are constants, so
-    // slope = (10·Σxy − 45·Σy)/825 is ONE exact-integer division per
-    // term. Top-10 risers by rounded slope (term tiebreak). Scale: one
-    // explode + two bounded aggs; the term list is a TakeOrdered slice
-    // and the grid is 100×10.
-    "text_term_drift" -> ((s, dir) => {
-      val tk = t(s, dir, "documents")
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-      val top = tk.groupBy("w").agg(count(lit(1)).as("cw"))
-        .orderBy(col("cw").desc, col("w")).limit(100)
-        .localCheckpoint() // feeds the bucket join and the final join
-      val nmax = t(s, dir, "documents").agg(max("doc_id").as("mx"))
-      val bt = tk.join(broadcast(top.select("w")), Seq("w"))
-        .crossJoin(broadcast(nmax))
-        .select(col("w"), expr("(doc_id * 10) div (mx + 1)").as("b"))
-        .groupBy("w", "b").agg(count(lit(1)).as("y"))
-      val grid = top.select(col("w"))
-        .crossJoin(broadcast(s.range(0, 10).select(col("id").as("b"))))
-      val dense = grid.join(bt, Seq("w", "b"), "left").na.fill(0L, Seq("y"))
-      val mom = dense.groupBy("w")
-        .agg(sum("y").as("sy"), sum(col("b") * col("y")).as("sxy"))
-      mom.join(broadcast(top), Seq("w"))
-        .select(col("w").as("term"), col("cw").as("n_occurrences"),
-          round((lit(10L) * col("sxy") - lit(45L) * col("sy"))
-            .cast("double") / lit(825.0), 6).as("slope"))
-        .orderBy(col("slope").desc, col("term")).limit(10)
-    }),
-
-    // PAIRWISE JENSEN–SHANNON DIVERGENCE (round 11) — the symmetric,
-    // bounded domain-similarity matrix between sources' word
-    // distributions (text_entropy_kl gives each source vs the corpus;
-    // this gives source vs source — the input a pretraining-mix planner
-    // clusters on). Decomposition that never needs the absent-word
-    // rows: common-vocabulary terms ½(p·ln(2p/(p+q)) + q·ln(2q/(p+q)))
-    // join on the word key (per-word fan-out ≤ |sources|² — sources
-    // bounded, vocab-sized frames shuffle linearly), and each side's
-    // missing mass enters as ½·ln2·(1−Σp_common). Determinism: the
-    // entropy_kl rule — per-row log terms snap to DECIMAL(18,6) before
-    // the order-free sum; ln2 is a JVM constant interpolated into both
-    // engines.
-    "text_js_divergence" -> ((s, dir) => {
-      val dec = org.apache.spark.sql.types.DecimalType(18, 6)
-      val sc = t(s, dir, "documents")
-        .select(col("source"), explode(split(col("text"), " ")).as("w"))
-        .groupBy("source", "w").agg(count(lit(1)).as("c"))
-      val st = sc.groupBy("source").agg(sum("c").as("tot"))
-      val d = sc.join(st, "source")
-        .select(col("source"), col("w"), (col("c") / col("tot")).as("p"))
-        .localCheckpoint() // both pair sides read this frame
-      val a = d.select(col("source").as("src_a"), col("w"),
-        col("p").as("pa"))
-      val b = d.select(col("source").as("src_b"), col("w"),
-        col("p").as("pb"))
-      val term = (lit(0.5) *
-        (col("pa") * log(lit(2.0) * col("pa") / (col("pa") + col("pb"))) +
-          col("pb") * log(lit(2.0) * col("pb") / (col("pa") + col("pb")))))
-        .cast(dec)
-      val ln2 = math.log(2.0)
-      a.join(b, Seq("w")).filter(col("src_a") < col("src_b"))
-        .select(col("src_a"), col("src_b"), term.as("term"),
-          col("pa").cast(dec).as("pa6"), col("pb").cast(dec).as("pb6"))
-        .groupBy("src_a", "src_b")
-        .agg(count(lit(1)).as("n_common_words"),
-          sum(col("term")).as("cs"),
-          sum(col("pa6")).as("ma"), sum(col("pb6")).as("mb"))
-        .select(col("src_a"), col("src_b"), col("n_common_words"),
-          round(col("cs").cast("double") + lit(0.5) * lit(ln2) *
-            ((lit(1.0) - col("ma").cast("double")) +
-              (lit(1.0) - col("mb").cast("double"))), 6).as("js_div"))
-        .orderBy("src_a", "src_b")
-    }),
-
-    // TOKENIZER FERTILITY per language — the first table a tokenizer
-    // review shows: pieces/word (fertility) and chars/piece by lang,
-    // the numbers that reveal a vocabulary under-serving a script
-    // (fertility 2× on one language = that language pays 2× the
-    // sequence length per word). Uses the same length/4 BPE-ish piece
-    // rule as text_token_count so the two keys reconcile. Shape:
-    // explode → per-(lang, doc) partial agg → per-lang agg, both
-    // map-side combinable; exact integer sums, two terminal divisions.
-    "pipeline_tokenizer_fertility" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(col("lang"), col("doc_id"),
-          explode(split(col("text"), " ")).as("w"))
-        .groupBy("lang", "doc_id")
-        .agg(count(lit(1)).as("n_words"),
-          sum(ceil(length(col("w")) / lit(4.0)).cast("long")).as("n_pieces"),
-          sum(length(col("w")).cast("long")).as("n_word_chars"))
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"),
-          sum("n_words").as("n_words"),
-          sum("n_pieces").as("n_pieces"),
-          sum("n_word_chars").as("n_word_chars"))
-        .select(col("lang"), col("n_docs"), col("n_words"), col("n_pieces"),
-          round(col("n_pieces").cast("double") / col("n_words"), 6)
-            .as("fertility"),
-          round(col("n_word_chars").cast("double") / col("n_pieces"), 6)
-            .as("chars_per_piece"))
-        .orderBy("lang")),
-  )
-
   /** Document-frequency ceiling for contamination shingles. A shingle in
     * more documents than this is fold-agnostic boilerplate — it carries
     * no contamination signal and would otherwise collect an unbounded
@@ -1373,6 +273,12 @@ object TextOps {
     * side). Mirrored literally in the DuckDB oracle so the semantics are
     * pinned, not an implementation detail. */
   val ContaminationDfCeiling = 10000
+
+  /** The side a fold's postings join in the contamination keys: true
+    * for "test", false for "train", null for any other fold (a "dev"
+    * document is neither side, as in the oracle's `fold = 'train'`). */
+  private def isTest(fold: Column): Column =
+    when(fold === "test", true).when(fold === "train", false)
 
   /** Train/test contamination pairs over `docs(doc_id, fold, text)` —
     * the body of the `text_contamination` query, parameterized on the
@@ -1393,7 +299,7 @@ object TextOps {
     // instead of a ~30-byte string. Same plan shape, same rows; the sf1
     // sweep line was 15.0 s with string keys.
     val sh = docs.select(col("doc_id"),
-        (col("fold") === "test").as("is_test"),
+        isTest(col("fold")).as("is_test"),
         explode(array_distinct(shingles(col("text")))).as("shw"))
       .select(col("doc_id"), col("is_test"), xxhash64(col("shw")).as("shingle"))
     val bySh = sh
@@ -1434,9 +340,9 @@ object TextOps {
     * commutes with fold assignment — the survivor set is bit-identical
     * to the round-13 inline form's). */
   def contaminationCapped(posts: DataFrame, fold: Column): DataFrame = {
-    // fold's domain is binary (train/test), so the per-posting string is
-    // collapsed to one boolean before the group-collect (guide §2.3).
-    posts.withColumn("is_test", fold === "test")
+    // The per-posting fold string is collapsed to one boolean before the
+    // group-collect (guide §2.3).
+    posts.withColumn("is_test", isTest(fold))
       .groupBy("shingle").agg(
         collect_set(when(col("is_test"), col("doc_id"))).as("te"),
         collect_set(when(!col("is_test"), col("doc_id"))).as("tr"))
@@ -1503,608 +409,1667 @@ object TextOps {
     (v0 +: rounds).mkString(",\n")
   }
 
-  val oracle: Map[String, String] = Map(
-    // Word-graph CTEs bind the e/deg/nn/p<k> names GraphOps.oracleRound
-    // expects, so the pagerank rounds are shared verbatim with the
-    // doc-graph oracle.
-    "text_textrank" -> {
-      val stopList = StopwordSet.map(w => s"'$w'").mkString(", ")
-      s"""WITH tk AS (SELECT string_split(text, ' ') AS toks
-         |  FROM documents),
-         | bp AS (SELECT toks[i] AS w1, toks[i + 1] AS w2
-         |  FROM (SELECT toks,
-         |    unnest(generate_series(1, len(toks) - 1)) AS i FROM tk)),
-         | pj AS (SELECT DISTINCT least(w1, w2) AS d1,
-         |   greatest(w1, w2) AS d2
-         |  FROM bp WHERE w1 <> w2
-         |   AND least(w1, w2) NOT IN ($stopList)
-         |   AND greatest(w1, w2) NOT IN ($stopList)),
-         | e AS (SELECT d1 AS u, d2 AS v FROM pj
-         |  UNION ALL SELECT d2, d1 FROM pj),
-         | deg AS (SELECT u, count(*) AS outdeg FROM e GROUP BY 1),
-         | nn AS (SELECT count(*) AS cnt FROM deg),
-         | p0 AS (SELECT deg.u AS node, deg.outdeg,
-         |   1000000000000 // cnt AS pr FROM deg CROSS JOIN nn),""".stripMargin +
-        (1 to 3).map(GraphOps.oracleRound).mkString(",\n") + "\n" +
-        "SELECT node AS word, pr FROM p3 ORDER BY pr DESC, node LIMIT 30"
-    },
-    "text_sentiment_lexicon" ->
-      """WITH sc AS (SELECT source,
-        |   len(string_split(text, ' ')) AS ntok,
-        |   len(list_filter(string_split(text, ' '),
-        |     w -> w IN ('fast', 'big', 'value'))) AS npos,
-        |   len(list_filter(string_split(text, ' '),
-        |     w -> w IN ('slow', 'error', 'filter'))) AS nneg
-        |  FROM documents),
-        | scored AS (SELECT source,
-        |   (1000000 * CAST(npos - nneg + ntok AS BIGINT)) // ntok
-        |     - 1000000 AS score_micro
-        |  FROM sc)
-        |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        | CAST(sum(CASE WHEN score_micro > 0 THEN 1 ELSE 0 END)
-        |   AS BIGINT) AS n_positive,
-        | CAST(sum(CASE WHEN score_micro < 0 THEN 1 ELSE 0 END)
-        |   AS BIGINT) AS n_negative,
-        | round(CAST(sum(score_micro) AS DOUBLE)
-        |   / CAST(count(*) AS DOUBLE) / 1000000.0, 6) AS mean_polarity
-        |FROM scored GROUP BY 1 ORDER BY source""".stripMargin,
-    "text_rake_keywords" ->
-      """WITH fr AS (SELECT trim(f) AS phrase
-        |  FROM (SELECT unnest(regexp_split_to_array(text,
-        |    '\b(?:a|an|the|and|or|of|to|in|on|for|with|is|are|was|be|by|at|as|it|this|that)\b')) AS f
-        |   FROM documents)
-        |  WHERE trim(f) <> ''),
-        | wd AS (SELECT len(string_split(phrase, ' ')) AS plen,
-        |   unnest(string_split(phrase, ' ')) AS w FROM fr),
-        | ws AS (SELECT w,
-        |   CAST((1000000 * sum(plen)) // count(*) AS BIGINT) AS wscore
-        |  FROM wd GROUP BY 1),
-        | po AS (SELECT phrase, count(*) AS n_occ FROM fr GROUP BY 1),
-        | pw AS (SELECT phrase, n_occ,
-        |   unnest(string_split(phrase, ' ')) AS w FROM po)
-        |SELECT pw.phrase, CAST(count(*) AS INT) AS n_words, pw.n_occ,
-        | CAST(sum(ws.wscore) AS BIGINT) AS score_micro
-        |FROM pw JOIN ws ON pw.w = ws.w
-        |GROUP BY pw.phrase, pw.n_occ
-        |ORDER BY score_micro DESC, phrase LIMIT 50""".stripMargin,
-    "pipeline_tokenizer_fertility" ->
-      """WITH w AS (SELECT lang, doc_id,
-        |   unnest(string_split(text, ' ')) AS w FROM documents),
-        | pd AS (SELECT lang, doc_id, count(*) AS n_words,
-        |   sum(CAST(ceil(len(w) / 4.0) AS BIGINT)) AS n_pieces,
-        |   sum(CAST(len(w) AS BIGINT)) AS n_word_chars
-        |  FROM w GROUP BY 1, 2)
-        |SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-        | CAST(sum(n_words) AS BIGINT) AS n_words,
-        | CAST(sum(n_pieces) AS BIGINT) AS n_pieces,
-        | round(CAST(sum(n_pieces) AS DOUBLE) / sum(n_words), 6) AS fertility,
-        | round(CAST(sum(n_word_chars) AS DOUBLE) / sum(n_pieces), 6)
-        |   AS chars_per_piece
-        |FROM pd GROUP BY 1 ORDER BY lang""".stripMargin,
-    "pipeline_span_corruption" ->
-      """WITH t AS (SELECT doc_id,
-        |   len(string_split(text, ' ')) AS n_tokens FROM documents),
-        | f AS (SELECT doc_id, n_tokens,
-        |   list_transform(range(n_tokens), p ->
-        |     substr(md5('span42:' || CAST(doc_id AS VARCHAR) || ':'
-        |       || CAST(p AS VARCHAR)), 1, 2) < '26') AS flags
-        |  FROM t)
-        |SELECT doc_id, CAST(n_tokens AS INT) AS n_tokens,
-        | CAST(len(list_filter(flags, x -> x)) AS INT) AS n_masked,
-        | CAST(coalesce(list_sum(list_transform(range(n_tokens), p ->
-        |   CASE WHEN CASE WHEN p = 0 THEN flags[1]
-        |     ELSE flags[p + 1] AND NOT flags[p] END
-        |   THEN 1 ELSE 0 END)), 0) AS INT) AS n_spans,
-        | round(CAST(len(list_filter(flags, x -> x)) AS DOUBLE)
-        |   / n_tokens, 6) AS mask_rate
-        |FROM f ORDER BY doc_id""".stripMargin,
-    "pipeline_bpe_merges" ->
-      ("WITH " + bpeCtes(5) + "\n" +
-        (1 to 5).map(k =>
-          s"""SELECT CAST($k AS INT) AS step, a AS "left", b AS "right", cnt AS pair_count FROM t$k""")
-          .mkString("\nUNION ALL\n") + "\nORDER BY step"),
-    "pipeline_bpe_apply" -> {
-      val rep = (1 to 5).foldLeft("enc.s") { (acc, k) =>
-        s"replace($acc, chr(31) || t$k.a || chr(31) || chr(31) || t$k.b || chr(31), chr(31) || t$k.a || t$k.b || chr(31))"
-      }
-      "WITH " + bpeCtes(5) +
-        s""",
-           |wrds AS (SELECT lang, unnest(string_split(text, ' ')) AS w FROM documents),
-           |enc AS (SELECT lang, w,
-           |  list_aggregate(list_transform(string_split(w, ''),
-           |      c -> chr(31) || c || chr(31)), 'string_agg', '') AS s FROM wrds),
-           |ap AS (SELECT enc.lang, enc.w, $rep AS s2
-           |  FROM enc CROSS JOIN t1 CROSS JOIN t2 CROSS JOIN t3 CROSS JOIN t4 CROSS JOIN t5)
-           |SELECT lang, CAST(count(*) AS BIGINT) AS n_words,
-           |  CAST(sum(CASE WHEN w = '' THEN 0 ELSE
-           |    len(string_split(s2, chr(31) || chr(31))) END) AS BIGINT) AS n_bpe_tokens,
-           |  round(CAST(sum(CASE WHEN w = '' THEN 0 ELSE
-           |    len(string_split(s2, chr(31) || chr(31))) END) AS DOUBLE) / count(*), 6)
-           |    AS tokens_per_word
-           |FROM ap GROUP BY lang ORDER BY lang""".stripMargin
-    },
-    "text_wordcount" ->
-      """SELECT word, count(*) AS cnt
-        |FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-        |GROUP BY word ORDER BY cnt DESC, word LIMIT 20""".stripMargin,
-    "text_ngram_freq" ->
-      """WITH t AS (SELECT string_split(text, ' ') AS toks FROM documents),
-        | b AS (SELECT array_to_string(toks[i:i+1], ' ') AS bigram
-        |   FROM (SELECT toks, unnest(generate_series(1, len(toks) - 1)) AS i FROM t))
-        |SELECT bigram, count(*) AS cnt FROM b
-        |GROUP BY bigram ORDER BY cnt DESC, bigram LIMIT 50""".stripMargin,
-    "text_repetition" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-        | b AS (SELECT doc_id, array_to_string(toks[i:i+1], ' ') AS bigram
-        |   FROM (SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 1)) AS i FROM t)),
-        | per AS (SELECT doc_id, bigram, count(*) AS c FROM b GROUP BY 1, 2)
-        |SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_bigrams, count(*) AS n_distinct,
-        | max(c) AS top_count,
-        | CAST(floor((sum(c) - count(*)) * 10000 / sum(c)) AS BIGINT) AS dup_bp
-        |FROM per GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "text_pii_redact" ->
-      """SELECT doc_id,
-        | regexp_replace(regexp_replace(text,
-        |   '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |   '\d{6,}', '<NUM>', 'g') AS clean_text,
-        | CAST(length(text) - length(regexp_replace(regexp_replace(text,
-        |   '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |   '\d{6,}', '<NUM>', 'g')) AS INT) AS chars_removed
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "text_contamination" ->
-      """WITH f AS (SELECT doc_id, text,
-        |   CASE WHEN substring(md5('split42:' || CAST(doc_id AS VARCHAR)), 1, 2) < 'cc'
-        |     THEN 'train' ELSE 'test' END AS fold
-        |  FROM documents),
-        | t AS (SELECT doc_id, fold, string_split(text, ' ') AS toks FROM f),
-        | s AS (SELECT DISTINCT doc_id, fold, array_to_string(toks[i:i+2], ' ') AS shingle
-        |   FROM (SELECT doc_id, fold, toks,
-        |     unnest(generate_series(1, len(toks) - 2)) AS i FROM t)),
-        | ok AS (SELECT shingle FROM s GROUP BY shingle HAVING count(*) <= 10000),
-        | pairs AS (SELECT te.doc_id AS test_id, tr.doc_id AS train_id,
-        |     count(*) AS shared
-        |   FROM s te JOIN s tr ON te.shingle = tr.shingle
-        |   JOIN ok ON te.shingle = ok.shingle
-        |   WHERE te.fold = 'test' AND tr.fold = 'train'
-        |   GROUP BY 1, 2 HAVING count(*) >= 3)
-        |SELECT test_id, count(*) AS n_train_matches, max(shared) AS max_shared
-        |FROM pairs GROUP BY test_id ORDER BY test_id""".stripMargin,
-    // Same fold CTE; postings thinned by the salted-md5 residue rule
-    // (DedupOps.md5ResidueSql), cap mirrored literally.
-    "text_contamination_capped" ->
-      s"""WITH f AS (SELECT doc_id, text,
-         |   CASE WHEN substring(md5('split42:' || CAST(doc_id AS VARCHAR)), 1, 2) < 'cc'
-         |     THEN 'train' ELSE 'test' END AS fold
-         |  FROM documents),
-         | t AS (SELECT doc_id, fold, string_split(text, ' ') AS toks FROM f),
-         | s AS (SELECT DISTINCT doc_id, fold, array_to_string(toks[i:i+2], ' ') AS sh
-         |   FROM (SELECT doc_id, fold, toks,
-         |     unnest(generate_series(1, len(toks) - 2)) AS i FROM t)),
-         | d AS (SELECT sh, count(*) AS df FROM s GROUP BY 1),
-         | ${DedupOps.minerDfCapSql},
-         | hh AS (SELECT doc_id, fold, sh, df,
-         |   md5('tswp42:' || sh || ':' || CAST(doc_id AS VARCHAR)) AS h
-         |  FROM s JOIN d USING (sh)),
-         | sc AS (SELECT doc_id, fold, sh FROM hh, cap
-         |  WHERE df <= df_cap OR
-         |   ${DedupOps.md5ResidueSql("h")} % df < df_cap),
-         | pairs AS (SELECT te.doc_id AS test_id, tr.doc_id AS train_id,
-         |     count(*) AS shared
-         |   FROM sc te JOIN sc tr ON te.sh = tr.sh
-         |   WHERE te.fold = 'test' AND tr.fold = 'train'
-         |   GROUP BY 1, 2 HAVING count(*) >= 3)
-         |SELECT test_id, count(*) AS n_train_matches, max(shared) AS max_shared
-         |FROM pairs GROUP BY test_id ORDER BY test_id""".stripMargin,
-    "text_oov_rate" ->
-      """WITH tv AS (SELECT DISTINCT word FROM (
-        |    SELECT unnest(string_split(text, ' ')) AS word FROM documents
-        |    WHERE doc_id % 5 <> 0)),
-        | tt AS (SELECT lang, unnest(string_split(text, ' ')) AS word
-        |   FROM documents WHERE doc_id % 5 = 0),
-        | j AS (SELECT tt.lang, tt.word,
-        |    CASE WHEN tv.word IS NULL THEN 1 ELSE 0 END AS oov
-        |   FROM tt LEFT JOIN tv ON tt.word = tv.word)
-        |SELECT lang, count(*) AS n_tokens,
-        | CAST(sum(oov) AS BIGINT) AS n_oov,
-        | count(DISTINCT word) AS n_types,
-        | count(DISTINCT CASE WHEN oov = 1 THEN word END) AS n_oov_types,
-        | round(CAST(sum(oov) AS DOUBLE) / count(*), 6) AS oov_rate
-        |FROM j GROUP BY lang ORDER BY lang""".stripMargin,
-    "pipeline_bpe_pairs" ->
-      """WITH vocab AS (SELECT word, count(*) AS freq FROM (
-        |    SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-        |   GROUP BY word),
-        | c AS (SELECT string_split(word, '') AS chs, freq FROM vocab),
-        | p AS (SELECT chs[i] || chs[i+1] AS pair, freq
-        |   FROM (SELECT chs, freq,
-        |     unnest(generate_series(1, len(chs) - 1)) AS i FROM c))
-        |SELECT pair, CAST(sum(freq) AS BIGINT) AS cnt FROM p
-        |GROUP BY pair ORDER BY cnt DESC, pair LIMIT 30""".stripMargin,
-    "text_lang_id_ngram" ->
-      """WITH db AS (SELECT doc_id, lang,
-        |    unnest(list_transform(generate_series(1, len(text) - 1),
-        |      i -> substr(text, i, 2))) AS bg FROM documents),
-        | dbc AS (SELECT doc_id, lang, bg, count(*) AS cnt FROM db GROUP BY 1, 2, 3),
-        | prof AS (SELECT lang AS p_lang, bg, count(*) AS c FROM db GROUP BY 1, 2),
-        | tot AS (SELECT p_lang, CAST(sum(c) AS BIGINT) AS n_l FROM prof GROUP BY 1),
-        | vv AS (SELECT count(DISTINCT bg) AS v FROM prof),
-        | grid AS (SELECT l.p_lang, b.bg,
-        |     round(ln((COALESCE(p.c, 0) + 1.0) / (t.n_l + vv.v)), 4) AS lp
-        |   FROM (SELECT DISTINCT bg FROM prof) b
-        |   CROSS JOIN (SELECT DISTINCT p_lang FROM prof) l
-        |   LEFT JOIN prof p ON p.p_lang = l.p_lang AND p.bg = b.bg
-        |   JOIN tot t ON t.p_lang = l.p_lang
-        |   CROSS JOIN vv),
-        | scored AS (SELECT dbc.doc_id, dbc.lang, g.p_lang,
-        |     CAST(sum(CAST(dbc.cnt * g.lp AS DECIMAL(18,6))) AS DOUBLE) AS score
-        |   FROM dbc JOIN grid g ON dbc.bg = g.bg GROUP BY 1, 2, 3),
-        | pred AS (SELECT doc_id, lang, p_lang AS predicted FROM (
-        |   SELECT doc_id, lang, p_lang,
-        |     row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, p_lang) AS rk
-        |   FROM scored) WHERE rk = 1)
-        |SELECT lang AS actual, predicted, count(*) AS n_docs
-        |FROM pred GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "text_bm25" ->
-      """WITH tok AS (SELECT doc_id, unnest(string_split(text,' ')) AS term FROM documents),
-        | dl AS (SELECT doc_id, count(*) AS dl FROM tok GROUP BY 1),
-        | stats AS (SELECT count(*) AS n_docs,
-        |     CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl FROM dl),
-        | tf AS (SELECT doc_id, term, count(*) AS tf FROM tok
-        |   WHERE term IN ('spark', 'hash', 'merge') GROUP BY 1, 2),
-        | dfc AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-        | sc AS (SELECT tf.doc_id,
-        |     round(ln((stats.n_docs - dfc.df + 0.5) / (dfc.df + 0.5) + 1.0)
-        |       * (tf.tf * 2.2)
-        |       / (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / stats.avgdl)), 6) AS contrib
-        |   FROM tf, dfc, dl, stats
-        |   WHERE tf.term = dfc.term AND tf.doc_id = dl.doc_id)
-        |SELECT doc_id, count(*) AS n_terms,
-        | round(CAST(sum(CAST(contrib AS DECIMAL(18,6))) AS DOUBLE), 6) AS score
-        |FROM sc GROUP BY doc_id ORDER BY score DESC, doc_id LIMIT 20""".stripMargin,
-    "text_tfidf" ->
-      """WITH tok AS (SELECT doc_id, unnest(string_split(text,' ')) AS term FROM documents),
-        | tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
-        | dfc AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-        | n AS (SELECT count(*) AS n_docs FROM documents),
-        | sc AS (SELECT tf.doc_id, tf.term, tf.tf,
-        |     tf.tf * (ln((n.n_docs + 1.0) / (dfc.df + 1.0)) + 1.0) AS score
-        |   FROM tf, dfc, n WHERE tf.term = dfc.term),
-        | r AS (SELECT *, CAST(row_number() OVER (PARTITION BY doc_id
-        |     ORDER BY score DESC, term) AS INT) AS rk FROM sc)
-        |SELECT doc_id, term, tf, round(score, 6) AS score, rk
-        |FROM r WHERE rk <= 5 ORDER BY doc_id, rk""".stripMargin,
-    "text_zipf_slope" ->
-      """WITH wc AS (SELECT unnest(string_split(text, ' ')) AS w FROM documents),
-        | c AS (SELECT w, count(*) AS cnt FROM wc GROUP BY w),
-        | r AS (SELECT cnt, row_number() OVER (ORDER BY cnt DESC, w) AS rk FROM c),
-        | xy AS (SELECT CAST(round(ln(rk), 6) AS DECIMAL(18,6)) AS x,
-        |   CAST(round(ln(cnt), 6) AS DECIMAL(18,6)) AS y
-        |  FROM r WHERE rk <= 100),
-        | g AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-        |   CAST(sum(x) AS DOUBLE) AS sx, CAST(sum(y) AS DOUBLE) AS sy,
-        |   CAST(sum(x * y) AS DOUBLE) AS sxy,
-        |   CAST(sum(x * x) AS DOUBLE) AS sxx FROM xy)
-        |SELECT round((n * sxy - sx * sy) / (n * sxx - sx * sx), 6) AS zipf_slope,
-        | CAST(n AS BIGINT) AS n_words FROM g""".stripMargin,
-    "text_lang_stats" ->
-      """SELECT lang, source, count(*) AS n_docs,
-        | round(percentile_cont(0.5) WITHIN GROUP (ORDER BY n_chars), 4) AS p50_chars,
-        | round(percentile_cont(0.9) WITHIN GROUP (ORDER BY n_chars), 4) AS p90_chars,
-        | round(avg(n_chars), 6) AS avg_chars
-        |FROM documents GROUP BY lang, source ORDER BY lang, source""".stripMargin,
-    "text_edit_distance" ->
-      """SELECT a.p_partkey AS k1, b.p_partkey AS k2, a.p_name AS n1, b.p_name AS n2,
-        | CAST(levenshtein(a.p_name, b.p_name) AS INT) AS dist
-        |FROM part a JOIN part b
-        | ON a.p_brand = b.p_brand
-        | AND string_split(a.p_name, ' ')[2] = string_split(b.p_name, ' ')[2]
-        | AND a.p_partkey < b.p_partkey
-        |WHERE levenshtein(a.p_name, b.p_name) <= 3
-        |ORDER BY k1, k2""".stripMargin,
-    "text_quality_score" ->
-      """SELECT doc_id,
-        | CAST(len(string_split(text,' ')) AS INT) AS n_tokens,
-        | CAST(length(text) - (len(string_split(text,' ')) - 1) AS INT) AS n_word_chars,
-        | round(len(list_filter(string_split(text,' '), w -> w IN ('the','a')))
-        |   / len(string_split(text,' ')), 6) AS stop_ratio,
-        | round(len(list_distinct(string_split(text,' ')))
-        |   / len(string_split(text,' ')), 6) AS uniq_ratio,
-        | round(len(list_filter(string_split(text,' '), w -> length(w) > 4))
-        |   / len(string_split(text,' ')), 6) AS long_word_ratio,
-        | round(0.3 * (len(list_distinct(string_split(text,' '))) / len(string_split(text,' ')))
-        |   + 0.4 * (1.0 - len(list_filter(string_split(text,' '), w -> w IN ('the','a')))
-        |       / len(string_split(text,' ')))
-        |   + 0.3 * least(1.0, len(string_split(text,' ')) / 100.0), 6) AS quality
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "text_lm_score" ->
-      """WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-        | b AS (SELECT doc_id, array_to_string(toks[i:i+1], ' ') AS bigram
-        |   FROM (SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 1)) AS i FROM t)),
-        | c2 AS (SELECT bigram, count(*) AS c2 FROM b GROUP BY 1),
-        | c1 AS (SELECT string_split(bigram,' ')[1] AS w1, sum(c2) AS c1
-        |   FROM c2 GROUP BY 1),
-        | v AS (SELECT count(DISTINCT w) AS v
-        |   FROM (SELECT unnest(string_split(text,' ')) AS w FROM documents)),
-        | s AS (SELECT doc_id,
-        |     CAST(round(ln((c2.c2 + 1.0) / (c1.c1 + v.v)), 4) AS DECIMAL(18,6)) AS ll
-        |   FROM b
-        |   JOIN c2 USING (bigram)
-        |   JOIN c1 ON string_split(b.bigram,' ')[1] = c1.w1
-        |   CROSS JOIN v)
-        |SELECT doc_id, count(*) AS n_bigrams,
-        | round(CAST(sum(ll) AS DOUBLE) / count(*), 6) AS avg_ll
-        |FROM s GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "text_vocab_coverage" ->
-      """WITH wc AS (SELECT w AS word, count(*) AS cnt FROM
-        |   (SELECT unnest(string_split(text,' ')) AS w FROM documents)
-        |   GROUP BY 1),
-        | r AS (SELECT word, cnt,
-        |     CAST(row_number() OVER (ORDER BY cnt DESC, word) AS BIGINT) AS rk,
-        |     CAST(sum(cnt) OVER (ORDER BY cnt DESC, word
-        |       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
-        |   FROM wc),
-        | t AS (SELECT CAST(sum(cnt) AS BIGINT) AS total,
-        |     CAST(count(*) AS BIGINT) AS vocab FROM wc)
-        |SELECT rk AS top_k, cum AS tokens_covered, total AS tokens_total,
-        | round(CAST(cum AS DOUBLE) / total, 6) AS coverage
-        |FROM r CROSS JOIN t
-        |WHERE rk IN (1, 2, 4, 8, 16, 32, 64, 128, 256, 512, 1024) OR rk = vocab
-        |ORDER BY top_k""".stripMargin,
-    "pipeline_gopher_rules" ->
-      """WITH tok AS (SELECT doc_id, unnest(string_split(text,' ')) AS w FROM documents),
-        | per AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n,
-        |     CAST(sum(c * len(w)) AS BIGINT) AS sum_len,
-        |     CAST(sum(CASE WHEN w IN ('the','a') THEN c ELSE 0 END) AS BIGINT) AS n_stop,
-        |     CAST(max(c) AS BIGINT) AS top_c
-        |   FROM (SELECT doc_id, w, count(*) AS c FROM tok GROUP BY 1, 2)
-        |   GROUP BY 1),
-        | f AS (SELECT
-        |     CASE WHEN n < 25 OR n > 100000 THEN 1 ELSE 0 END AS f_wc,
-        |     CASE WHEN sum_len < n * 3 OR sum_len > n * 10 THEN 1 ELSE 0 END AS f_mwl,
-        |     CASE WHEN n_stop < 2 THEN 1 ELSE 0 END AS f_stop,
-        |     CASE WHEN top_c * 8 > n THEN 1 ELSE 0 END AS f_rep
-        |   FROM per),
-        | a AS (SELECT count(*) AS docs_total,
-        |     CAST(sum(f_wc) AS BIGINT) AS fail_word_count,
-        |     CAST(sum(f_mwl) AS BIGINT) AS fail_mean_word_len,
-        |     CAST(sum(f_stop) AS BIGINT) AS fail_stopwords,
-        |     CAST(sum(f_rep) AS BIGINT) AS fail_repetition,
-        |     CAST(sum(CASE WHEN f_wc + f_mwl + f_stop + f_rep = 0 THEN 1 ELSE 0 END)
-        |       AS BIGINT) AS pass_all
-        |   FROM f)
-        |SELECT rule, n_docs FROM (
-        | SELECT 'docs_total' AS rule, docs_total AS n_docs FROM a
-        | UNION ALL SELECT 'fail_mean_word_len', fail_mean_word_len FROM a
-        | UNION ALL SELECT 'fail_repetition', fail_repetition FROM a
-        | UNION ALL SELECT 'fail_stopwords', fail_stopwords FROM a
-        | UNION ALL SELECT 'fail_word_count', fail_word_count FROM a
-        | UNION ALL SELECT 'pass_all', pass_all FROM a)
-        |ORDER BY rule""".stripMargin,
-    "pipeline_perplexity_buckets" ->
-      """WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-        | b AS (SELECT doc_id, array_to_string(toks[i:i+1], ' ') AS bigram
-        |   FROM (SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 1)) AS i FROM t)),
-        | c2 AS (SELECT bigram, count(*) AS c2 FROM b GROUP BY 1),
-        | c1 AS (SELECT string_split(bigram,' ')[1] AS w1, sum(c2) AS c1
-        |   FROM c2 GROUP BY 1),
-        | v AS (SELECT count(DISTINCT w) AS v
-        |   FROM (SELECT unnest(string_split(text,' ')) AS w FROM documents)),
-        | s AS (SELECT doc_id,
-        |     CAST(round(ln((c2.c2 + 1.0) / (c1.c1 + v.v)), 4) AS DECIMAL(18,6)) AS ll
-        |   FROM b
-        |   JOIN c2 USING (bigram)
-        |   JOIN c1 ON string_split(b.bigram,' ')[1] = c1.w1
-        |   CROSS JOIN v),
-        | sc0 AS (SELECT doc_id, count(*) AS n_bigrams,
-        |     round(CAST(sum(ll) AS DOUBLE) / count(*), 6) AS avg_ll
-        |   FROM s GROUP BY doc_id),
-        | sc AS (SELECT sc0.doc_id, d.lang, sc0.avg_ll
-        |   FROM sc0 JOIN documents d USING (doc_id)),
-        | bo AS (SELECT lang, quantile_cont(avg_ll, 1.0/3) AS b33,
-        |     quantile_cont(avg_ll, 2.0/3) AS b66 FROM sc GROUP BY 1),
-        | bk AS (SELECT sc.lang,
-        |     CASE WHEN avg_ll >= b66 THEN 'head'
-        |          WHEN avg_ll >= b33 THEN 'middle' ELSE 'tail' END AS bucket,
-        |     avg_ll
-        |   FROM sc JOIN bo USING (lang))
-        |SELECT lang, bucket, count(*) AS n_docs,
-        | round(CAST(sum(CAST(avg_ll AS DECIMAL(18,6))) AS DOUBLE) / count(*), 6)
-        |   AS mean_ll
-        |FROM bk GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "text_pmi_bigrams" ->
-      """WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-        | tok AS (SELECT unnest(toks) AS w FROM t),
-        | cw AS (SELECT w, count(*) AS c FROM tok GROUP BY 1),
-        | n AS (SELECT count(*) AS n FROM tok),
-        | b AS (SELECT array_to_string(toks[i:i+1], ' ') AS bigram
-        |   FROM (SELECT toks, unnest(generate_series(1, len(toks) - 1)) AS i FROM t)),
-        | nb AS (SELECT count(*) AS nb FROM b),
-        | c12 AS (SELECT bigram, count(*) AS c12 FROM b GROUP BY 1 HAVING count(*) >= 5)
-        |SELECT bigram, c12, x.c AS c1, y.c AS c2,
-        | round(ln((c12 / nb.nb) / (x.c / n.n * (y.c / n.n))), 6) AS pmi
-        |FROM c12
-        | JOIN cw x ON string_split(bigram,' ')[1] = x.w
-        | JOIN cw y ON string_split(bigram,' ')[2] = y.w
-        | CROSS JOIN n CROSS JOIN nb
-        |ORDER BY pmi DESC, bigram LIMIT 50""".stripMargin,
-    // i-1 aligns DuckDB's 1-based slice start with posexplode's 0-based
-    // array index; same interval math otherwise.
-    "text_intradoc_dedup" ->
-      """WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-        | sh AS (SELECT doc_id, i - 1 AS i, array_to_string(toks[i:i+2], ' ') AS sh
-        |   FROM (SELECT doc_id, toks,
-        |     unnest(generate_series(1, len(toks) - 2)) AS i FROM t)),
-        | rep AS (SELECT doc_id, i FROM (
-        |     SELECT doc_id, i, min(i) OVER (PARTITION BY doc_id, sh) AS first_i
-        |     FROM sh)
-        |   WHERE i > first_i),
-        | isl AS (SELECT doc_id, i,
-        |     CASE WHEN max(i + 2) OVER (PARTITION BY doc_id ORDER BY i
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) IS NULL
-        |       OR i > max(i + 2) OVER (PARTITION BY doc_id ORDER BY i
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        |     THEN 1 ELSE 0 END AS new_isl
-        |   FROM rep),
-        | grp AS (SELECT doc_id, i, sum(new_isl) OVER (PARTITION BY doc_id
-        |     ORDER BY i ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS isl_id
-        |   FROM isl),
-        | m AS (SELECT doc_id, isl_id, max(i) + 2 - min(i) + 1 AS len
-        |   FROM grp GROUP BY 1, 2),
-        | r AS (SELECT doc_id, CAST(sum(len) AS BIGINT) AS n_repeated
-        |   FROM m GROUP BY 1)
-        |SELECT d.doc_id, CAST(len(string_split(d.text,' ')) AS BIGINT) AS n_tokens,
-        | coalesce(r.n_repeated, 0) AS n_repeated,
-        | round(coalesce(r.n_repeated, 0) / len(string_split(d.text,' ')), 6)
-        |   AS repeat_ratio
-        |FROM documents d LEFT JOIN r USING (doc_id) ORDER BY d.doc_id""".stripMargin,
-    "text_entropy_kl" ->
-      """WITH sc AS (SELECT source, w, count(*) AS c
-        |   FROM (SELECT source, unnest(string_split(text,' ')) AS w FROM documents)
-        |   GROUP BY 1, 2),
-        | st AS (SELECT source, CAST(sum(c) AS BIGINT) AS tot FROM sc GROUP BY 1),
-        | cw AS (SELECT w, CAST(sum(c) AS BIGINT) AS cw FROM sc GROUP BY 1),
-        | ct AS (SELECT CAST(sum(c) AS BIGINT) AS ctot FROM sc)
-        |SELECT sc.source, CAST(sum(sc.c) AS BIGINT) AS n_tokens,
-        | round(-CAST(sum(CAST((sc.c / st.tot) * ln(sc.c / st.tot)
-        |   AS DECIMAL(18,6))) AS DOUBLE), 6) AS entropy,
-        | round(CAST(sum(CAST((sc.c / st.tot) * ln((sc.c / st.tot) / (cw.cw / ct.ctot))
-        |   AS DECIMAL(18,6))) AS DOUBLE), 6) AS kl
-        |FROM sc JOIN st USING (source) JOIN cw USING (w) CROSS JOIN ct
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "pipeline_quality_gate" ->
-      """WITH q AS (SELECT doc_id, lang,
-        |  round(0.3 * (len(list_distinct(string_split(text,' '))) / len(string_split(text,' ')))
-        |   + 0.4 * (1.0 - len(list_filter(string_split(text,' '), w -> w IN ('the','a')))
-        |       / len(string_split(text,' ')))
-        |   + 0.3 * least(1.0, len(string_split(text,' ')) / 100.0), 6) AS quality
-        |  FROM documents),
-        | r AS (SELECT doc_id, lang, quality,
-        |   ntile(4) OVER (PARTITION BY lang ORDER BY quality DESC, doc_id) AS tile
-        |  FROM q)
-        |SELECT doc_id, lang, quality FROM r WHERE tile = 1 ORDER BY doc_id""".stripMargin,
-    "text_lang_id" ->
-      """WITH tok AS (SELECT doc_id, unnest(string_split(text,' ')) AS w FROM documents),
-        | sc AS (SELECT doc_id,
-        |   CAST(sum(CASE WHEN w IN ('the','a') THEN 1 ELSE 0 END) AS BIGINT) AS s_en,
-        |   CAST(sum(CASE WHEN w IN ('table','scan') THEN 1 ELSE 0 END) AS BIGINT) AS s_de,
-        |   CAST(sum(CASE WHEN w IN ('query','row') THEN 1 ELSE 0 END) AS BIGINT) AS s_fr,
-        |   CAST(sum(CASE WHEN w IN ('value','key') THEN 1 ELSE 0 END) AS BIGINT) AS s_es,
-        |   CAST(sum(CASE WHEN w IN ('data','hash') THEN 1 ELSE 0 END) AS BIGINT) AS s_zh
-        |  FROM tok GROUP BY 1)
-        |SELECT doc_id, s_en, s_de, s_fr, s_es, s_zh,
-        | CASE WHEN s_en >= s_de AND s_en >= s_fr AND s_en >= s_es AND s_en >= s_zh THEN 'en'
-        |      WHEN s_de >= s_fr AND s_de >= s_es AND s_de >= s_zh THEN 'de'
-        |      WHEN s_fr >= s_es AND s_fr >= s_zh THEN 'fr'
-        |      WHEN s_es >= s_zh THEN 'es'
-        |      ELSE 'zh' END AS pred_lang
-        |FROM sc ORDER BY doc_id""".stripMargin,
-    "text_ngram_novelty" ->
-      """WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-        | s AS (SELECT DISTINCT doc_id, array_to_string(toks[i:i+2], ' ') AS sh
-        |   FROM (SELECT doc_id, toks,
-        |     unnest(generate_series(1, len(toks) - 2)) AS i FROM t)),
-        | f AS (SELECT sh, min(doc_id) AS first_doc FROM s GROUP BY 1),
-        | d AS (SELECT s.doc_id, CAST(count(*) AS BIGINT) AS n_shingles,
-        |   CAST(sum(CASE WHEN f.first_doc < s.doc_id THEN 1 ELSE 0 END)
-        |     AS BIGINT) AS n_seen_before
-        |  FROM s JOIN f USING (sh) GROUP BY s.doc_id)
-        |SELECT doc_id, n_shingles, n_seen_before,
-        | round(CAST(1.0 AS DOUBLE) - CAST(n_seen_before AS DOUBLE)
-        |   / CAST(n_shingles AS DOUBLE), 6) AS novelty
-        |FROM d ORDER BY doc_id""".stripMargin,
-    "text_dedup_normalized" ->
-      """SELECT min(doc_id) AS keep_id, count(*) AS dup_cnt,
-        | md5(regexp_replace(lower(trim(text)), ' +', ' ', 'g')) AS norm_md5
-        |FROM documents GROUP BY 3 ORDER BY keep_id""".stripMargin,
-    "text_prefix_dup" ->
-      """SELECT min(doc_id) AS keep_id, count(*) AS n_docs,
-        | substr(text, 1, 30) AS prefix
-        |FROM documents WHERE len(text) >= 30
-        |GROUP BY 3 HAVING count(*) >= 2 ORDER BY keep_id""".stripMargin,
-    "text_fingerprint" ->
-      """WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-        | s AS (SELECT doc_id, array_to_string(toks[i:i+2], ' ') AS shingle
-        |   FROM (SELECT doc_id, toks,
-        |     unnest(generate_series(1, len(toks) - 2)) AS i FROM t))
-        |SELECT doc_id, min(md5(shingle)) AS fingerprint,
-        | count(DISTINCT shingle) AS n_shingles
-        |FROM s GROUP BY 1 ORDER BY 1""".stripMargin,
-    "text_token_count" ->
-      """SELECT doc_id, count(*) AS n_words,
-        | CAST(sum(CAST(ceil(length(w) / 4.0) AS BIGINT)) AS BIGINT) AS n_bpe_pieces
-        |FROM (SELECT doc_id, unnest(string_split(text,' ')) AS w FROM documents)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "text_readability" ->
-      """WITH c AS (SELECT doc_id,
-        |   CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
-        |   CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g'))
-        |     AS BIGINT) AS n_letters,
-        |   greatest(CAST(1 AS BIGINT),
-        |     CAST(length(text) - length(regexp_replace(text, '[.!?]',
-        |       '', 'g')) AS BIGINT)) AS n_sentences
-        |  FROM documents)
-        |SELECT doc_id, n_words, n_letters, n_sentences,
-        | round(0.0588 * (n_letters * 100.0 / n_words)
-        |   - 0.296 * (n_sentences * 100.0 / n_words) - 15.8, 6)
-        |   AS coleman_liau,
-        | round(4.71 * (CAST(n_letters AS DOUBLE) / n_words)
-        |   + 0.58 * (CAST(n_words AS DOUBLE) / n_sentences) - 21.43, 6)
-        |   AS ari
-        |FROM c ORDER BY doc_id""".stripMargin,
-    "text_lexical_diversity" ->
-      """WITH tk AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w
-        |  FROM documents),
-        | c AS (SELECT doc_id, w, count(*) AS cnt FROM tk GROUP BY 1, 2)
-        |SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_tokens,
-        | count(*) AS n_types,
-        | CAST(sum(CASE WHEN cnt = 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |   AS n_hapax,
-        | round(CAST(count(*) AS DOUBLE) / CAST(sum(cnt) AS DOUBLE), 6)
-        |   AS ttr,
-        | round(CAST(sum(CASE WHEN cnt = 1 THEN 1 ELSE 0 END) AS DOUBLE)
-        |   / CAST(sum(cnt) AS DOUBLE), 6) AS hapax_ratio
-        |FROM c GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "text_term_drift" ->
-      """WITH tk AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w
-        |  FROM documents),
-        | top AS (SELECT w, count(*) AS cw FROM tk GROUP BY 1
-        |  ORDER BY cw DESC, w LIMIT 100),
-        | mx AS (SELECT max(doc_id) AS mx FROM documents),
-        | bt AS (SELECT w, (doc_id * 10) // ((SELECT mx FROM mx) + 1)
-        |     AS b, count(*) AS y
-        |  FROM tk WHERE w IN (SELECT w FROM top) GROUP BY 1, 2),
-        | grid AS (SELECT w, b FROM top CROSS JOIN
-        |  (SELECT unnest(generate_series(0, 9)) AS b)),
-        | dense AS (SELECT grid.w, grid.b, COALESCE(y, 0) AS y
-        |  FROM grid LEFT JOIN bt ON grid.w = bt.w AND grid.b = bt.b),
-        | mom AS (SELECT w, CAST(sum(y) AS BIGINT) AS sy,
-        |   CAST(sum(b * y) AS BIGINT) AS sxy FROM dense GROUP BY 1)
-        |SELECT mom.w AS term, cw AS n_occurrences,
-        | round(CAST(10 * sxy - 45 * sy AS DOUBLE) / 825.0, 6) AS slope
-        |FROM mom JOIN top ON mom.w = top.w
-        |ORDER BY slope DESC, term LIMIT 10""".stripMargin,
+  val ops: Seq[Op] = Seq(
+    Op("text_wordcount", (s, dir) =>
+      t(s, dir, "documents")
+        .select(explode(split(col("text"), " ")).as("word"))
+        .groupBy("word").agg(count(lit(1)).as("cnt"))
+        .orderBy(col("cnt").desc, col("word"))
+        .limit(20),
+      Some("""SELECT word, count(*) AS cnt
+             |FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
+             |GROUP BY word ORDER BY cnt DESC, word LIMIT 20""".stripMargin)),
 
-    "text_js_divergence" -> {
-      val ln2 = math.log(2.0)
-      s"""WITH sc AS (SELECT source, w, count(*) AS c
-         |  FROM (SELECT source, unnest(string_split(text, ' ')) AS w
-         |    FROM documents) GROUP BY 1, 2),
-         | st AS (SELECT source, CAST(sum(c) AS BIGINT) AS tot FROM sc
-         |  GROUP BY 1),
-         | d AS (SELECT sc.source, w, CAST(c AS DOUBLE) / tot AS p
-         |  FROM sc JOIN st USING (source)),
-         | pr AS (SELECT a.source AS src_a, b.source AS src_b,
-         |   CAST(0.5 * (a.p * ln(2.0 * a.p / (a.p + b.p))
-         |     + b.p * ln(2.0 * b.p / (a.p + b.p))) AS DECIMAL(18,6))
-         |     AS term,
-         |   CAST(a.p AS DECIMAL(18,6)) AS pa6,
-         |   CAST(b.p AS DECIMAL(18,6)) AS pb6
-         |  FROM d a JOIN d b ON a.w = b.w AND a.source < b.source)
-         |SELECT src_a, src_b, count(*) AS n_common_words,
-         | round(CAST(sum(term) AS DOUBLE) + 0.5 * $ln2
-         |   * ((1.0 - CAST(sum(pa6) AS DOUBLE))
-         |     + (1.0 - CAST(sum(pb6) AS DOUBLE))), 6) AS js_div
-         |FROM pr GROUP BY 1, 2 ORDER BY src_a, src_b""".stripMargin
+    // LEXICON SENTIMENT SCREEN (round 11) — the cheap moderation /
+    // tone-audit pass a curation pipeline runs per source before any
+    // model-based scorer: polarity = (|pos ∩ tokens| − |neg ∩ tokens|)
+    // / |tokens| against a fixed word lexicon, aggregated per source.
+    // The lexicon is deliberately tiny and swappable — the OPERATOR is
+    // the artifact (per-doc HOF counting, zero shuffles before the
+    // per-source agg; at 100 TB: one projection + one 20-row hash
+    // agg). Determinism: the per-doc score rides the 1e-6 integer
+    // lattice with an OFFSET division ((1e6·(pos−neg+n)) div n − 1e6)
+    // so the truncating `div` never sees a negative numerator (Spark
+    // truncates toward zero, DuckDB `//` floors — they differ exactly
+    // there); the per-source mean is two correctly-rounded divisions
+    // over exact longs.
+    Op("text_sentiment_lexicon", (s, dir) => {
+      val pos = "('fast', 'big', 'value')"
+      val neg = "('slow', 'error', 'filter')"
+      val scored = t(s, dir, "documents")
+        .select(col("source"), split(col("text"), " ").as("toks"))
+        .select(col("source"),
+          expr("size(toks)").as("ntok"),
+          expr(s"size(filter(toks, w -> w IN $pos))").as("npos"),
+          expr(s"size(filter(toks, w -> w IN $neg))").as("nneg"))
+        .select(col("source"), col("npos"), col("nneg"),
+          (expr("(1000000 * CAST(npos - nneg + ntok AS BIGINT)) div ntok")
+            - lit(1000000L)).as("score_micro"))
+      scored.groupBy("source").agg(
+          count(lit(1)).as("n_docs"),
+          sum(when(col("score_micro") > 0, 1L).otherwise(0L))
+            .as("n_positive"),
+          sum(when(col("score_micro") < 0, 1L).otherwise(0L))
+            .as("n_negative"),
+          round(sum(col("score_micro")).cast("double")
+            / count(lit(1)).cast("double") / lit(1000000.0), 6)
+            .as("mean_polarity"))
+        .orderBy("source")
     },
+      Some("""WITH sc AS (SELECT source,
+             |   len(string_split(text, ' ')) AS ntok,
+             |   len(list_filter(string_split(text, ' '),
+             |     w -> w IN ('fast', 'big', 'value'))) AS npos,
+             |   len(list_filter(string_split(text, ' '),
+             |     w -> w IN ('slow', 'error', 'filter'))) AS nneg
+             |  FROM documents),
+             | scored AS (SELECT source,
+             |   (1000000 * CAST(npos - nneg + ntok AS BIGINT)) // ntok
+             |     - 1000000 AS score_micro
+             |  FROM sc)
+             |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+             | CAST(sum(CASE WHEN score_micro > 0 THEN 1 ELSE 0 END)
+             |   AS BIGINT) AS n_positive,
+             | CAST(sum(CASE WHEN score_micro < 0 THEN 1 ELSE 0 END)
+             |   AS BIGINT) AS n_negative,
+             | round(CAST(sum(score_micro) AS DOUBLE)
+             |   / CAST(count(*) AS DOUBLE) / 1000000.0, 6) AS mean_polarity
+             |FROM scored GROUP BY 1 ORDER BY source""".stripMargin)),
+
+    // TEXTRANK KEYWORDS (Mihalcea & Tarau 2004) — the graph-centrality
+    // keyword ranker beside RAKE's degree/frequency heuristic: build
+    // the window-2 word co-occurrence graph (adjacent non-stopword
+    // token pairs, undirected, deduped) and rank words by PageRank on
+    // it — a word matters because it keeps company with words that
+    // matter, which catches connective corpus vocabulary RAKE's
+    // phrase-local scores miss. Runs the EXACT integer PageRank
+    // machine (GraphOps.pageRank — micro-unit mass, integer div, bit-
+    // identical cross-engine; the oracle replays the same 3 unrolled
+    // rounds over the word graph). Shape: one per-doc HOF projection
+    // builds adjacent pairs (no self-join on position), one distinct,
+    // then |vocab|-bounded rank rounds; top-30 via TakeOrdered.
+    Op("text_textrank", (s, dir) => {
+      // Round 14: round-robin fan-out before the per-doc pair HOF (the
+      // 1c250bb pattern) — the compact test parquet is ONE scan split,
+      // so the interpreted filter/transform lambda ran single-task.
+      // Round 15: gated on actual scan parallelism (fanOutIfCompact) so
+      // a multi-split production corpus skips the shuffle entirely.
+      val pairs = fanOutIfCompact(t(s, dir, "documents"))
+        .select(split(col("text"), " ").as("toks"))
+        .select(explode(expr(
+          "filter(transform(sequence(0, size(toks) - 2), " +
+            "i -> struct(toks[i] AS w1, toks[i + 1] AS w2)), " +
+            "p -> p.w1 <> p.w2)")).as("p"))
+        .select(least(col("p.w1"), col("p.w2")).as("d1"),
+          greatest(col("p.w1"), col("p.w2")).as("d2"))
+        .filter(!col("d1").isin(StopwordSet: _*) &&
+          !col("d2").isin(StopwordSet: _*))
+        // checkpointed leaf: pageRank's symmetric-edge union reads the
+        // pair frame twice — uncached, the corpus bigram explode +
+        // distinct would run twice (measured 4.1 s → ~1.5 s)
+        .distinct().localCheckpoint()
+      GraphOps.pageRank(pairs, iters = 3)
+        .select(col("doc_id").as("word"), col("pr"))
+        .orderBy(col("pr").desc, col("word"))
+        .limit(30)
+    },
+      // Word-graph CTEs bind the e/deg/nn/p<k> names GraphOps.oracleRound
+      // expects, so the pagerank rounds are shared verbatim with the
+      // doc-graph oracle.
+      Some {
+        val stopList = StopwordSet.map(w => s"'$w'").mkString(", ")
+        s"""WITH tk AS (SELECT string_split(text, ' ') AS toks
+           |  FROM documents),
+           | bp AS (SELECT toks[i] AS w1, toks[i + 1] AS w2
+           |  FROM (SELECT toks,
+           |    unnest(generate_series(1, len(toks) - 1)) AS i FROM tk)),
+           | pj AS (SELECT DISTINCT least(w1, w2) AS d1,
+           |   greatest(w1, w2) AS d2
+           |  FROM bp WHERE w1 <> w2
+           |   AND least(w1, w2) NOT IN ($stopList)
+           |   AND greatest(w1, w2) NOT IN ($stopList)),
+           | e AS (SELECT d1 AS u, d2 AS v FROM pj
+           |  UNION ALL SELECT d2, d1 FROM pj),
+           | deg AS (SELECT u, count(*) AS outdeg FROM e GROUP BY 1),
+           | nn AS (SELECT count(*) AS cnt FROM deg),
+           | p0 AS (SELECT deg.u AS node, deg.outdeg,
+           |   1000000000000 // cnt AS pr FROM deg CROSS JOIN nn),""".stripMargin +
+          (1 to 3).map(GraphOps.oracleRound).mkString(",\n") + "\n" +
+          "SELECT node AS word, pr FROM p3 ORDER BY pr DESC, node LIMIT 30"
+      }),
+
+    // RAKE KEYWORD EXTRACTION (Rose et al. 2010) — the unsupervised
+    // corpus-keyword report a curation run reads to see what a source
+    // is actually about: candidate phrases = maximal runs between
+    // stopwords, word score = degree/frequency over phrase
+    // co-occurrence (degree counts each occurrence's full phrase
+    // length, so words that keep company with long phrases outrank
+    // loners at equal frequency), phrase score = Σ member word scores.
+    // Determinism: the per-word ratio is snapped to the integer 1e-6
+    // lattice FIRST ((1e6·degree) div freq — both engines' integer
+    // division), so phrase scores are exact long sums and the top-50
+    // pick under (score desc, phrase asc) is total. Shape: two
+    // map-side explodes + three two-phase hash aggs + one broadcast
+    // word-score join + TakeOrdered — linear, no windows, no pair
+    // joins; the word-score table is |vocab|-bounded.
+    Op("text_rake_keywords", (s, dir) => {
+      val frags = t(s, dir, "documents")
+        .select(explode(split(col("text"), RakeStopwords)).as("frag"))
+        .select(trim(col("frag")).as("phrase"))
+        .filter(col("phrase") =!= "")
+      val words = frags
+        .select(col("phrase"), size(split(col("phrase"), " ")).as("plen"))
+        .select(explode(split(col("phrase"), " ")).as("w"), col("plen"))
+      val wscore = words.groupBy("w")
+        .agg(expr("(1000000 * sum(plen)) div count(1)").as("wscore"))
+      val pocc = frags.groupBy("phrase").agg(count(lit(1)).as("n_occ"))
+      pocc.select(col("phrase"), col("n_occ"),
+          explode(split(col("phrase"), " ")).as("w"))
+        // no broadcast hint: AQE broadcasts the |vocab|-row score table
+        // at test scale and falls back to a shuffle join when a real
+        // corpus vocabulary outgrows the threshold
+        .join(wscore, "w")
+        .groupBy("phrase", "n_occ")
+        .agg(count(lit(1)).cast("int").as("n_words"),
+          sum("wscore").as("score_micro"))
+        .select("phrase", "n_words", "n_occ", "score_micro")
+        .orderBy(col("score_micro").desc, col("phrase"))
+        .limit(50)
+    },
+      Some("""WITH fr AS (SELECT trim(f) AS phrase
+             |  FROM (SELECT unnest(regexp_split_to_array(text,
+             |    '\b(?:a|an|the|and|or|of|to|in|on|for|with|is|are|was|be|by|at|as|it|this|that)\b')) AS f
+             |   FROM documents)
+             |  WHERE trim(f) <> ''),
+             | wd AS (SELECT len(string_split(phrase, ' ')) AS plen,
+             |   unnest(string_split(phrase, ' ')) AS w FROM fr),
+             | ws AS (SELECT w,
+             |   CAST((1000000 * sum(plen)) // count(*) AS BIGINT) AS wscore
+             |  FROM wd GROUP BY 1),
+             | po AS (SELECT phrase, count(*) AS n_occ FROM fr GROUP BY 1),
+             | pw AS (SELECT phrase, n_occ,
+             |   unnest(string_split(phrase, ' ')) AS w FROM po)
+             |SELECT pw.phrase, CAST(count(*) AS INT) AS n_words, pw.n_occ,
+             | CAST(sum(ws.wscore) AS BIGINT) AS score_micro
+             |FROM pw JOIN ws ON pw.w = ws.w
+             |GROUP BY pw.phrase, pw.n_occ
+             |ORDER BY score_micro DESC, phrase LIMIT 50""".stripMargin)),
+
+    // T5/UL2-STYLE SPAN-CORRUPTION PLAN (Raffel et al. 2020): decide,
+    // deterministically, WHICH tokens a denoising objective masks —
+    // per-position salted-md5 coin at ~15% (first hex byte < 0x26 =
+    // 38/256), spans = maximal masked runs. The plan (not the masking
+    // itself) is the data-pipeline artifact: it must be reproducible
+    // across epochs/engines, which the hash coin gives for free. Shape:
+    // pure per-doc projection — zero shuffles before the presentation
+    // sort; per-doc arrays bound the HOF work to the document length.
+    // Run starts are counted with p=0 guarded BEFORE flags[p-1] is
+    // touched (ANSI mode errors on negative array indices).
+    Op("pipeline_span_corruption", (s, dir) =>
+      t(s, dir, "documents")
+        .select(col("doc_id"), size(split(col("text"), " ")).as("n_tokens"))
+        .withColumn("flags", expr(
+          "transform(sequence(0, n_tokens - 1), p -> " +
+            "substring(md5(concat('span42:', CAST(doc_id AS STRING), " +
+            "':', CAST(p AS STRING))), 1, 2) < '26')"))
+        .select(col("doc_id"), col("n_tokens"),
+          expr("size(filter(flags, x -> x))").as("n_masked"),
+          expr("aggregate(sequence(0, n_tokens - 1), 0, (acc, p) -> " +
+            "acc + IF(CASE WHEN p = 0 THEN flags[0] " +
+            "ELSE flags[p] AND NOT flags[p - 1] END, 1, 0))").as("n_spans"))
+        .withColumn("mask_rate",
+          round(col("n_masked").cast("double") / col("n_tokens"), 6))
+        .orderBy("doc_id"),
+      Some("""WITH t AS (SELECT doc_id,
+             |   len(string_split(text, ' ')) AS n_tokens FROM documents),
+             | f AS (SELECT doc_id, n_tokens,
+             |   list_transform(range(n_tokens), p ->
+             |     substr(md5('span42:' || CAST(doc_id AS VARCHAR) || ':'
+             |       || CAST(p AS VARCHAR)), 1, 2) < '26') AS flags
+             |  FROM t)
+             |SELECT doc_id, CAST(n_tokens AS INT) AS n_tokens,
+             | CAST(len(list_filter(flags, x -> x)) AS INT) AS n_masked,
+             | CAST(coalesce(list_sum(list_transform(range(n_tokens), p ->
+             |   CASE WHEN CASE WHEN p = 0 THEN flags[1]
+             |     ELSE flags[p + 1] AND NOT flags[p] END
+             |   THEN 1 ELSE 0 END)), 0) AS INT) AS n_spans,
+             | round(CAST(len(list_filter(flags, x -> x)) AS DOUBLE)
+             |   / n_tokens, 6) AS mask_rate
+             |FROM f ORDER BY doc_id""".stripMargin)),
+
+    // Bigram frequency: same explode→two-phase-agg shape as wordcount;
+    // bigrams come from the tight shingle UDF pattern (n=2).
+    Op("text_ngram_freq", (s, dir) =>
+      t(s, dir, "documents")
+        .select(explode(bigramUdf(col("text"))).as("bigram"))
+        .groupBy("bigram").agg(count(lit(1)).as("cnt"))
+        .orderBy(col("cnt").desc, col("bigram"))
+        .limit(50),
+      Some("""WITH t AS (SELECT string_split(text, ' ') AS toks FROM documents),
+             | b AS (SELECT array_to_string(toks[i:i+1], ' ') AS bigram
+             |   FROM (SELECT toks, unnest(generate_series(1, len(toks) - 1)) AS i FROM t))
+             |SELECT bigram, count(*) AS cnt FROM b
+             |GROUP BY bigram ORDER BY cnt DESC, bigram LIMIT 50""".stripMargin)),
+
+    // Per-doc n-gram NOVELTY against everything earlier in the corpus
+    // (ordered by doc_id — the ingest-order analog): the fraction of a
+    // doc's distinct 3-gram shingles whose FIRST corpus occurrence is an
+    // earlier doc. This is the dedup-adjacent curation signal ("how much
+    // of this doc is already in the training set") that drives
+    // keep/down-weight decisions. Shape: per-doc-distinct hashed
+    // (doc, shingle) rows → min-over-shingle window → doc-level agg.
+    // Everything is shingle-hash-keyed — no broadcast of corpus-sized
+    // state, same inverted-index shape as the Jaccard miner but with a
+    // count instead of a pair fan-out, so it stays linear in the
+    // posting lists at any corpus size.
+    Op("text_ngram_novelty", (s, dir) => {
+      // Round 15 (guide §2.3/§2.4): shuffle NARROW KEYS, never shingle
+      // strings. At the 10× point the duplicated-text fixture blew the
+      // old distinct + min-agg + join-back exchanges up to 57 s — every
+      // one of them carried the 3-word shingle STRING, which the query
+      // only ever uses as an opaque identity. Three changes, same rows:
+      //   1. the shingle collapses to xxhash64 right after the explode
+      //      (first-occurrence/doc counts are hash-stable);
+      //   2. doc_id is unique, so array_distinct per doc already makes
+      //      (doc_id, sh) globally distinct — the corpus-wide distinct
+      //      exchange is GONE;
+      //   3. first_doc rides ONE min-window over the sh partitioning
+      //      instead of groupBy(sh) + join-back (agg + probe exchanges).
+      // Plan: 4 wide string exchanges → 1 narrow window exchange + the
+      // final per-doc agg.
+      val sh = t(s, dir, "documents")
+        .select(col("doc_id"),
+          explode(array_distinct(shingles(col("text")))).as("shw"))
+        .select(col("doc_id"), xxhash64(col("shw")).as("sh"))
+      sh.withColumn("first_doc",
+          min("doc_id").over(Window.partitionBy("sh")))
+        .groupBy("doc_id")
+        .agg(count(lit(1)).as("n_shingles"),
+          sum(when(col("first_doc") < col("doc_id"), 1L).otherwise(0L))
+            .as("n_seen_before"))
+        .withColumn("novelty",
+          round(lit(1.0) - col("n_seen_before").cast("double")
+            / col("n_shingles").cast("double"), 6))
+        .orderBy("doc_id")
+    },
+      Some("""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
+             | s AS (SELECT DISTINCT doc_id, array_to_string(toks[i:i+2], ' ') AS sh
+             |   FROM (SELECT doc_id, toks,
+             |     unnest(generate_series(1, len(toks) - 2)) AS i FROM t)),
+             | f AS (SELECT sh, min(doc_id) AS first_doc FROM s GROUP BY 1),
+             | d AS (SELECT s.doc_id, CAST(count(*) AS BIGINT) AS n_shingles,
+             |   CAST(sum(CASE WHEN f.first_doc < s.doc_id THEN 1 ELSE 0 END)
+             |     AS BIGINT) AS n_seen_before
+             |  FROM s JOIN f USING (sh) GROUP BY s.doc_id)
+             |SELECT doc_id, n_shingles, n_seen_before,
+             | round(CAST(1.0 AS DOUBLE) - CAST(n_seen_before AS DOUBLE)
+             |   / CAST(n_shingles AS DOUBLE), 6) AS novelty
+             |FROM d ORDER BY doc_id""".stripMargin)),
+
+    // Gopher-style repetition signals: fraction of duplicated word
+    // bigrams and the heaviest single bigram per doc — the standard
+    // "is this page boilerplate/spam" quality gate before training.
+    // Shape: map-side bigram explode → one (doc,bigram) hash agg →
+    // one doc-level re-agg; both aggs are two-phase, keyed on doc_id
+    // so the second agg is a near-free partial.
+    Op("text_repetition", (s, dir) =>
+      t(s, dir, "documents")
+        .select(col("doc_id"), explode(bigramUdf(col("text"))).as("bigram"))
+        .groupBy("doc_id", "bigram").agg(count(lit(1)).as("c"))
+        .groupBy("doc_id")
+        .agg(sum("c").as("n_bigrams"),
+          count(lit(1)).as("n_distinct"),
+          max("c").as("top_count"))
+        .select(col("doc_id"), col("n_bigrams"), col("n_distinct"), col("top_count"),
+          floor((col("n_bigrams") - col("n_distinct")) * lit(10000) / col("n_bigrams"))
+            .cast("long").as("dup_bp"))
+        .orderBy("doc_id"),
+      Some("""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+             | b AS (SELECT doc_id, array_to_string(toks[i:i+1], ' ') AS bigram
+             |   FROM (SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 1)) AS i FROM t)),
+             | per AS (SELECT doc_id, bigram, count(*) AS c FROM b GROUP BY 1, 2)
+             |SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_bigrams, count(*) AS n_distinct,
+             | max(c) AS top_count,
+             | CAST(floor((sum(c) - count(*)) * 10000 / sum(c)) AS BIGINT) AS dup_bp
+             |FROM per GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+
+    // PII scrubbing: redact email-shaped and long-digit-run tokens before
+    // a corpus ships to training — pure codegen'd regexp_replace, one
+    // projection pass, no shuffle.
+    Op("text_pii_redact", (s, dir) => {
+      val noEmail = regexp_replace(col("text"),
+        "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}", "<EMAIL>")
+      val noDigits = regexp_replace(noEmail, "\\d{6,}", "<NUM>")
+      t(s, dir, "documents").select(
+        col("doc_id"),
+        noDigits.as("clean_text"),
+        (length(col("text")) - length(noDigits)).as("chars_removed"),
+      ).orderBy("doc_id")
+    },
+      Some("""SELECT doc_id,
+             | regexp_replace(regexp_replace(text,
+             |   '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
+             |   '\d{6,}', '<NUM>', 'g') AS clean_text,
+             | CAST(length(text) - length(regexp_replace(regexp_replace(text,
+             |   '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
+             |   '\d{6,}', '<NUM>', 'g')) AS INT) AS chars_removed
+             |FROM documents ORDER BY doc_id""".stripMargin)),
+
+    // Train/test contamination check: test-fold docs sharing >= 3 distinct
+    // 3-gram shingles with ANY train-fold doc. Same inverted-index
+    // group-count plan as dedup_ngram_jaccard — candidates come from the
+    // shingle equi-join, never a doc x doc cross product; fold assignment
+    // is the engine's own md5 split, so the check composes with
+    // train_test_split exactly.
+    //
+    // Single shingling pass: instead of filtering the index into a train
+    // side and a test side and equi-joining them (two corpus scans + two
+    // shingle-UDF passes — Catalyst pushes the fold filter below any
+    // shared exchange, so reuse never materializes), group the index by
+    // shingle ONCE, collecting the shingle's test ids and train ids side
+    // by side, and explode the cross pairs. One documents scan, one
+    // shingle pass, one shuffle on `shingle` (pinned in PlanSpec); the
+    // pair expansion Σ_sh c_te·c_tr is identical to the join's.
+    //
+    // Hot-shingle policy (inherited from dedup_ngram_jaccard's measured
+    // crossover, DedupOps): the expansion stays linear while per-shingle
+    // doc-frequency is bounded — enforced by [[contamination]]'s
+    // document-frequency ceiling, which drops ultra-hot boilerplate
+    // shingles before the group-collect (they carry no contamination
+    // signal: every fold shares them) so no aggregation buffer ever
+    // holds more than the ceiling's worth of ids.
+    Op("text_contamination", (s, dir) => {
+      val h = md5(concat(lit("split42:"), col("doc_id")))
+      val docs = t(s, dir, "documents")
+        .withColumn("fold", when(substring(h, 1, 2) < "cc", "train").otherwise("test"))
+      contamination(docs)
+    },
+      Some("""WITH f AS (SELECT doc_id, text,
+             |   CASE WHEN substring(md5('split42:' || CAST(doc_id AS VARCHAR)), 1, 2) < 'cc'
+             |     THEN 'train' ELSE 'test' END AS fold
+             |  FROM documents),
+             | t AS (SELECT doc_id, fold, string_split(text, ' ') AS toks FROM f),
+             | s AS (SELECT DISTINCT doc_id, fold, array_to_string(toks[i:i+2], ' ') AS shingle
+             |   FROM (SELECT doc_id, fold, toks,
+             |     unnest(generate_series(1, len(toks) - 2)) AS i FROM t)),
+             | ok AS (SELECT shingle FROM s GROUP BY shingle HAVING count(*) <= 10000),
+             | pairs AS (SELECT te.doc_id AS test_id, tr.doc_id AS train_id,
+             |     count(*) AS shared
+             |   FROM s te JOIN s tr ON te.shingle = tr.shingle
+             |   JOIN ok ON te.shingle = ok.shingle
+             |   WHERE te.fold = 'test' AND tr.fold = 'train'
+             |   GROUP BY 1, 2 HAVING count(*) >= 3)
+             |SELECT test_id, count(*) AS n_train_matches, max(shared) AS max_shared
+             |FROM pairs GROUP BY test_id ORDER BY test_id""".stripMargin)),
+
+    // The 100 TB form of text_contamination: the exact key's df CEILING
+    // (drop shingles hotter than 10000) bounds the collect buffers but
+    // still lets a df-9999 shingle emit ~25M te×tr pairs through one
+    // skewed shuffle key; the capped twin THINS every shingle hotter
+    // than the adaptive [[DedupOps.minerDfCap]] to ~cap deterministic
+    // salted-md5 survivors (the same residue rule — and the SAME
+    // survivor set, read from the shared [[DedupOps.thinnedPostings]]
+    // checkpoint leaf — as the capped Jaccard miner), bounding
+    // per-shingle pair fan-out at ~cap²/4 at any corpus size. `shared`
+    // counts can only drift DOWN (postings only vanish), so at any scale
+    // where the exact ceiling never binds the flagged pair set is a
+    // SUBSET of the exact key's (pinned with measured recall at sf0.1).
+    Op("text_contamination_capped", (s, dir) => {
+      val h = md5(concat(lit("split42:"), col("doc_id")))
+      contaminationCapped(DedupOps.thinnedPostings(s, dir),
+        when(substring(h, 1, 2) < "cc", "train").otherwise("test"))
+    },
+      // Same fold CTE; postings thinned by the salted-md5 residue rule
+      // (DedupOps.md5ResidueSql), cap mirrored literally.
+      Some(s"""WITH f AS (SELECT doc_id, text,
+              |   CASE WHEN substring(md5('split42:' || CAST(doc_id AS VARCHAR)), 1, 2) < 'cc'
+              |     THEN 'train' ELSE 'test' END AS fold
+              |  FROM documents),
+              | t AS (SELECT doc_id, fold, string_split(text, ' ') AS toks FROM f),
+              | s AS (SELECT DISTINCT doc_id, fold, array_to_string(toks[i:i+2], ' ') AS sh
+              |   FROM (SELECT doc_id, fold, toks,
+              |     unnest(generate_series(1, len(toks) - 2)) AS i FROM t)),
+              | d AS (SELECT sh, count(*) AS df FROM s GROUP BY 1),
+              | ${DedupOps.minerDfCapSql},
+              | hh AS (SELECT doc_id, fold, sh, df,
+              |   md5('tswp42:' || sh || ':' || CAST(doc_id AS VARCHAR)) AS h
+              |  FROM s JOIN d USING (sh)),
+              | sc AS (SELECT doc_id, fold, sh FROM hh, cap
+              |  WHERE df <= df_cap OR
+              |   ${DedupOps.md5ResidueSql("h")} % df < df_cap),
+              | pairs AS (SELECT te.doc_id AS test_id, tr.doc_id AS train_id,
+              |     count(*) AS shared
+              |   FROM sc te JOIN sc tr ON te.sh = tr.sh
+              |   WHERE te.fold = 'test' AND tr.fold = 'train'
+              |   GROUP BY 1, 2 HAVING count(*) >= 3)
+              |SELECT test_id, count(*) AS n_train_matches, max(shared) AS max_shared
+              |FROM pairs GROUP BY test_id ORDER BY test_id""".stripMargin)),
+
+    Op("text_tfidf", (s, dir) => {
+      val tok = t(s, dir, "documents")
+        .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
+      val tf = tok.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
+      val dfc = tf.groupBy("term").agg(count(lit(1)).as("df"))
+      val n = t(s, dir, "documents").agg(count(lit(1)).as("n_docs"))
+      val w = Window.partitionBy("doc_id").orderBy(col("score").desc, col("term"))
+      tf.join(broadcast(dfc), "term").crossJoin(broadcast(n))
+        .withColumn("score",
+          col("tf") * (log((col("n_docs") + lit(1.0)) / (col("df") + lit(1.0))) + lit(1.0)))
+        .withColumn("rk", row_number().over(w))
+        .filter(col("rk") <= 5)
+        .select(col("doc_id"), col("term"), col("tf"),
+          round(col("score"), 6).as("score"), col("rk"))
+        .orderBy("doc_id", "rk")
+    },
+      Some("""WITH tok AS (SELECT doc_id, unnest(string_split(text,' ')) AS term FROM documents),
+             | tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
+             | dfc AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
+             | n AS (SELECT count(*) AS n_docs FROM documents),
+             | sc AS (SELECT tf.doc_id, tf.term, tf.tf,
+             |     tf.tf * (ln((n.n_docs + 1.0) / (dfc.df + 1.0)) + 1.0) AS score
+             |   FROM tf, dfc, n WHERE tf.term = dfc.term),
+             | r AS (SELECT *, CAST(row_number() OVER (PARTITION BY doc_id
+             |     ORDER BY score DESC, term) AS INT) AS rk FROM sc)
+             |SELECT doc_id, term, tf, round(score, 6) AS score, rk
+             |FROM r WHERE rk <= 5 ORDER BY doc_id, rk""".stripMargin)),
+
+    // BPE merge-candidate mining (Sennrich 2016) — the pair-count step
+    // every byte-pair-encoding tokenizer trainer iterates: which adjacent
+    // symbol pair is most frequent across the corpus. The load-bearing
+    // scale trick is the one real trainers use: collapse the corpus to
+    // its VOCABULARY first (word, freq — a map-side-combined agg), then
+    // mine character pairs over the vocab weighted by freq — pair
+    // expansion touches |vocab| rows, not |corpus tokens|, a ~1000×
+    // working-set cut on natural text. One merge step is stated (the
+    // top-30 candidates); iterating merge→re-pair is a driver loop over
+    // the same two-agg shape with the chosen pair fused.
+    Op("pipeline_bpe_pairs", (s, dir) => {
+      val vocab = t(s, dir, "documents")
+        .select(explode(split(col("text"), " ")).as("word"))
+        .groupBy("word").agg(count(lit(1)).as("freq"))
+      vocab.select(explode(charPairUdf(col("word"))).as("pair"), col("freq"))
+        .groupBy("pair").agg(sum(col("freq")).as("cnt"))
+        .orderBy(col("cnt").desc, col("pair"))
+        .limit(30)
+    },
+      Some("""WITH vocab AS (SELECT word, count(*) AS freq FROM (
+             |    SELECT unnest(string_split(text, ' ')) AS word FROM documents)
+             |   GROUP BY word),
+             | c AS (SELECT string_split(word, '') AS chs, freq FROM vocab),
+             | p AS (SELECT chs[i] || chs[i+1] AS pair, freq
+             |   FROM (SELECT chs, freq,
+             |     unnest(generate_series(1, len(chs) - 1)) AS i FROM c))
+             |SELECT pair, CAST(sum(freq) AS BIGINT) AS cnt FROM p
+             |GROUP BY pair ORDER BY cnt DESC, pair LIMIT 30""".stripMargin)),
+
+    // OOV RATE of a held-out split against the training vocabulary —
+    // the tokenizer/corpus-coverage diagnostic that decides whether a
+    // word-level vocab is viable or the pipeline needs subword units
+    // (BPE's raison d'être, measured): using the same 80/20 doc split
+    // convention as dedup_cluster_incremental, count what fraction of
+    // the held-out split's token INSTANCES and distinct TYPES never
+    // occur in the training split, per language. Shape: train vocab =
+    // one distinct agg; test tokens left-anti-ish via a word-keyed left
+    // join (the vocab is word-keyed, never broadcast as a whole) — two
+    // exchanges at any corpus size.
+    Op("text_oov_rate", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      val trainVocab = docs.filter(col("doc_id") % 5 =!= 0)
+        .select(explode(split(col("text"), " ")).as("word")).distinct()
+        .withColumn("in_train", lit(1))
+      val testTok = docs.filter(col("doc_id") % 5 === 0)
+        .select(col("lang"), explode(split(col("text"), " ")).as("word"))
+      testTok.join(trainVocab, Seq("word"), "left")
+        .groupBy("lang")
+        .agg(count(lit(1)).as("n_tokens"),
+          sum(when(col("in_train").isNull, 1L).otherwise(0L)).as("n_oov"),
+          countDistinct(col("word")).as("n_types"),
+          countDistinct(when(col("in_train").isNull, col("word")))
+            .as("n_oov_types"))
+        .withColumn("oov_rate",
+          round(col("n_oov").cast("double") / col("n_tokens"), 6))
+        .orderBy("lang")
+    },
+      Some("""WITH tv AS (SELECT DISTINCT word FROM (
+             |    SELECT unnest(string_split(text, ' ')) AS word FROM documents
+             |    WHERE doc_id % 5 <> 0)),
+             | tt AS (SELECT lang, unnest(string_split(text, ' ')) AS word
+             |   FROM documents WHERE doc_id % 5 = 0),
+             | j AS (SELECT tt.lang, tt.word,
+             |    CASE WHEN tv.word IS NULL THEN 1 ELSE 0 END AS oov
+             |   FROM tt LEFT JOIN tv ON tt.word = tv.word)
+             |SELECT lang, count(*) AS n_tokens,
+             | CAST(sum(oov) AS BIGINT) AS n_oov,
+             | count(DISTINCT word) AS n_types,
+             | count(DISTINCT CASE WHEN oov = 1 THEN word END) AS n_oov_types,
+             | round(CAST(sum(oov) AS DOUBLE) / count(*), 6) AS oov_rate
+             |FROM j GROUP BY lang ORDER BY lang""".stripMargin)),
+
+    // The ITERATED form of pipeline_bpe_pairs: 5 actual BPE merge
+    // rounds over the corpus vocabulary (see bpeMerges — driver holds
+    // one chosen merge per round, the vocab never leaves the cluster).
+    // Hash-verified against a DuckDB replay: the fixed 5-round loop
+    // unrolls to chained CTEs (bpeCtes) where each merge is one greedy
+    // string replace over a chr(31)-delimited symbol encoding — the
+    // trainer is deterministic, so the two engines must agree exactly.
+    // The algorithm is additionally pinned in the unit suite against the
+    // classic hug/pug/pun/bun/hugs fixture plus mass-accounting and
+    // monotonicity properties.
+    Op("pipeline_bpe_merges", (s, dir) => {
+      import s.implicits._
+      bpeMergesFor(s, dir).toDF("step", "left", "right", "pair_count")
+        .orderBy("step")
+    },
+      Some("WITH " + bpeCtes(5) + "\n" +
+          (1 to 5).map(k =>
+            s"""SELECT CAST($k AS INT) AS step, a AS "left", b AS "right", cnt AS pair_count FROM t$k""")
+            .mkString("\nUNION ALL\n") + "\nORDER BY step")),
+
+    // INFERENCE with the learned tokenizer: apply the 5 trained merges
+    // ([[bpeMerges]]) to the corpus and report per-language token
+    // accounting — whitespace words vs BPE symbols and the compression
+    // the merges bought. The merge list is a 5-pair closure constant
+    // (broadcast with the task), application is a map-side UDF; the only
+    // aggregation is the per-lang rollup. The token-count-per-corpus
+    // number this produces is THE quantity a training-data pipeline
+    // budgets by. Hash-verified: the oracle re-trains the 5 merges via
+    // the bpeCtes replay and applies them as a chain of greedy string
+    // replaces (training order = replace order, exactly tokenizeWord's
+    // convention); the tokenizer is additionally pinned by the fixture
+    // spec (hugs → [hug, s], pun → [p, un]).
+    Op("pipeline_bpe_apply", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      val merges = bpeMergesFor(s, dir).map(m => (m._2, m._3))
+      val nBpeUdf = udf((text: String) =>
+        text.split(' ').iterator.map(w => tokenizeWord(w, merges).length.toLong).sum)
+      docs.select(col("lang"), size(split(col("text"), " ")).cast("long").as("n_words"),
+          nBpeUdf(col("text")).as("n_bpe"))
+        .groupBy("lang")
+        .agg(sum(col("n_words")).as("n_words"), sum(col("n_bpe")).as("n_bpe_tokens"))
+        .withColumn("tokens_per_word",
+          round(col("n_bpe_tokens").cast("double") / col("n_words"), 6))
+        .orderBy("lang")
+    },
+      Some {
+        val rep = (1 to 5).foldLeft("enc.s") { (acc, k) =>
+          s"replace($acc, chr(31) || t$k.a || chr(31) || chr(31) || t$k.b || chr(31), chr(31) || t$k.a || t$k.b || chr(31))"
+        }
+        "WITH " + bpeCtes(5) +
+          s""",
+             |wrds AS (SELECT lang, unnest(string_split(text, ' ')) AS w FROM documents),
+             |enc AS (SELECT lang, w,
+             |  list_aggregate(list_transform(string_split(w, ''),
+             |      c -> chr(31) || c || chr(31)), 'string_agg', '') AS s FROM wrds),
+             |ap AS (SELECT enc.lang, enc.w, $rep AS s2
+             |  FROM enc CROSS JOIN t1 CROSS JOIN t2 CROSS JOIN t3 CROSS JOIN t4 CROSS JOIN t5)
+             |SELECT lang, CAST(count(*) AS BIGINT) AS n_words,
+             |  CAST(sum(CASE WHEN w = '' THEN 0 ELSE
+             |    len(string_split(s2, chr(31) || chr(31))) END) AS BIGINT) AS n_bpe_tokens,
+             |  round(CAST(sum(CASE WHEN w = '' THEN 0 ELSE
+             |    len(string_split(s2, chr(31) || chr(31))) END) AS DOUBLE) / count(*), 6)
+             |    AS tokens_per_word
+             |FROM ap GROUP BY lang ORDER BY lang""".stripMargin
+      }),
+
+    // BM25 ranked retrieval (Robertson–Spärck Jones, k1=1.2 b=0.75) for
+    // a fixed 3-term query — the lexical half of every corpus search /
+    // contamination-lookup stack, and the standard candidate generator
+    // the hybrid RRF key fuses with the embedding ranker. Shape is
+    // scale-first: the token stream is FILTERED TO THE QUERY TERMS
+    // before any aggregation (posting-list discipline — the tf table is
+    // |docs containing a query term|, not the corpus), df and the
+    // (N, avgdl) scalars are 1-row/3-row broadcasts, and the only
+    // corpus-sized pass is the doc-length agg the scorer joins against.
+    // Determinism: integer tf/df/dl throughout; each term's contribution
+    // is rounded to 6 dp and summed on the DECIMAL lattice (term order
+    // cannot matter), the text_lm_score pin.
+    Op("text_bm25", (s, dir) => {
+      val qTerms = Seq("spark", "hash", "merge")
+      val tok = t(s, dir, "documents")
+        .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
+      val dl = tok.groupBy("doc_id").agg(count(lit(1)).as("dl"))
+      val stats = dl.agg(count(lit(1)).as("n_docs"),
+        (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))
+      val tf = tok.filter(col("term").isin(qTerms: _*))
+        .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
+      val dfc = tf.groupBy("term").agg(count(lit(1)).as("df"))
+      tf.join(broadcast(dfc), "term").join(dl, "doc_id")
+        .crossJoin(broadcast(stats))
+        .withColumn("idf", log(
+          (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1.0)))
+        .withColumn("contrib", round(
+          col("idf") * (col("tf") * lit(2.2)) /
+            (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))),
+          6))
+        .groupBy("doc_id")
+        .agg(count(lit(1)).as("n_terms"),
+          round(graft.Tables.dsum6(col("contrib")), 6).as("score"))
+        .orderBy(col("score").desc, col("doc_id"))
+        .limit(20)
+    },
+      Some("""WITH tok AS (SELECT doc_id, unnest(string_split(text,' ')) AS term FROM documents),
+             | dl AS (SELECT doc_id, count(*) AS dl FROM tok GROUP BY 1),
+             | stats AS (SELECT count(*) AS n_docs,
+             |     CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl FROM dl),
+             | tf AS (SELECT doc_id, term, count(*) AS tf FROM tok
+             |   WHERE term IN ('spark', 'hash', 'merge') GROUP BY 1, 2),
+             | dfc AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
+             | sc AS (SELECT tf.doc_id,
+             |     round(ln((stats.n_docs - dfc.df + 0.5) / (dfc.df + 0.5) + 1.0)
+             |       * (tf.tf * 2.2)
+             |       / (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / stats.avgdl)), 6) AS contrib
+             |   FROM tf, dfc, dl, stats
+             |   WHERE tf.term = dfc.term AND tf.doc_id = dl.doc_id)
+             |SELECT doc_id, count(*) AS n_terms,
+             | round(CAST(sum(CAST(contrib AS DECIMAL(18,6))) AS DOUBLE), 6) AS score
+             |FROM sc GROUP BY doc_id ORDER BY score DESC, doc_id LIMIT 20""".stripMargin)),
+
+    // Statistical bigram-LM quality score — the CCNet/KenLM-style
+    // perplexity signal: train an add-one-smoothed bigram model on the
+    // corpus itself (P(w2|w1) = (c(w1w2)+1)/(c(w1·)+V)), score each doc
+    // by its mean log-probability per bigram instance. Low scorers are
+    // the statistically-unusual docs a cleaning pipeline reviews or
+    // drops. Model tables are vocab-bounded (≤V² rows) and broadcast;
+    // the per-doc mean rides one hash agg with DECIMAL accumulation
+    // (order-independent, engine-exact under the 6-dp per-term cast).
+    // CHARACTER-n-gram language ID (Cavnar–Trenkle lite — the n-gram
+    // heuristic proper, next to text_lang_id's marker-token shortcut):
+    // per-language char-BIGRAM profiles are trained from the corpus's
+    // own labels (add-one-smoothed multinomial over the full
+    // langs×bigram-vocab grid, so unseen bigrams score ln(1/(N+V))
+    // instead of silently dropping), every doc is scored against all 5
+    // profiles, and the key returns the CONFUSION MATRIX (actual ×
+    // predicted counts) — the evaluation artifact a lang-ID gate ships
+    // with. Scale: the profile grid is |langs|·|bigram vocab| ≈ 3.6k
+    // rows (chars are a bounded alphabet — the whole point of char
+    // n-grams) and broadcasts; the corpus-side cost is one bigram
+    // explode + two hash aggs; the per-doc argmax folds map-side via
+    // min_by on a (−score, lang) struct (sim_nearest_exemplar's
+    // pattern), so nothing doc-keyed crosses twice. Determinism: the
+    // per-(doc,lang) score accumulates cnt·ln(p) on the decimal lattice
+    // (text_lm_score's pin); ties break to the smallest language code.
+    Op("text_lang_id_ngram", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      // Round 15: ONE corpus bigram explode instead of two. dbc (per-doc
+      // counts) and prof (per-language profile counts) were independent
+      // aggregations over the same explode — different grouping keys, so
+      // ReuseExchange can never merge them and the charPair UDF pass ran
+      // twice (the round-14 profile-from-dbc rewrite re-planned MORE
+      // exchanges and was reverted). GROUPING SETS computes both
+      // granularities in one aggregate: Expand duplicates each exploded
+      // row 2× in-stage before the partial agg — far cheaper than a
+      // second scan + explode — and every downstream branch (dbc, and
+      // prof's five consumers) forks off the SAME exchange, which
+      // ReuseExchange deduplicates.
+      val db = docs.select(col("doc_id"), col("lang"),
+        explode(charPairUdf(col("text"))).as("bg"))
+      val g = db.groupingSets(
+          Seq(Seq(col("doc_id"), col("lang"), col("bg")),
+            Seq(col("lang"), col("bg"))),
+          col("doc_id"), col("lang"), col("bg"))
+        .agg(count(lit(1)).as("cnt"), grouping_id().as("gid"))
+      val dbc = g.filter(col("gid") === 0)
+        .select(col("doc_id"), col("lang"), col("bg"), col("cnt"))
+      val prof = g.filter(col("gid") =!= 0)
+        .select(col("lang").as("p_lang"), col("bg"), col("cnt").as("c"))
+      val tot = prof.groupBy("p_lang").agg(sum("c").as("n_l"))
+      val vv = prof.agg(countDistinct(col("bg")).as("v"))
+      val grid = prof.select("bg").distinct()
+        .crossJoin(prof.select("p_lang").distinct())
+        .join(prof, Seq("p_lang", "bg"), "left")
+        .join(tot, "p_lang")
+        .crossJoin(vv)
+        .select(col("p_lang"), col("bg"),
+          // ln snapped to a 1e-4 lattice: neither engine guarantees
+          // correctly-rounded ln, and the downstream cnt*lp products are
+          // cast to DECIMAL(18,6) — quantizing the log first keeps a
+          // 1-ulp ln divergence three orders of magnitude away from any
+          // 6-dp cast boundary (pipeline_dp_count_noise's pattern).
+          round(log((coalesce(col("c"), lit(0L)) + lit(1.0)) / (col("n_l") + col("v"))), 4)
+            .as("lp"))
+      val scored = dbc.join(broadcast(grid), "bg")
+        .groupBy("doc_id", "lang", "p_lang")
+        .agg(dsum6(col("cnt") * col("lp")).as("score"))
+      scored.groupBy("doc_id", "lang")
+        .agg(min_by(col("p_lang"), struct((-col("score")).as("ns"),
+          col("p_lang"))).as("predicted"))
+        .groupBy(col("lang").as("actual"), col("predicted"))
+        .agg(count(lit(1)).as("n_docs"))
+        .orderBy("actual", "predicted")
+    },
+      Some("""WITH db AS (SELECT doc_id, lang,
+             |    unnest(list_transform(generate_series(1, len(text) - 1),
+             |      i -> substr(text, i, 2))) AS bg FROM documents),
+             | dbc AS (SELECT doc_id, lang, bg, count(*) AS cnt FROM db GROUP BY 1, 2, 3),
+             | prof AS (SELECT lang AS p_lang, bg, count(*) AS c FROM db GROUP BY 1, 2),
+             | tot AS (SELECT p_lang, CAST(sum(c) AS BIGINT) AS n_l FROM prof GROUP BY 1),
+             | vv AS (SELECT count(DISTINCT bg) AS v FROM prof),
+             | grid AS (SELECT l.p_lang, b.bg,
+             |     round(ln((COALESCE(p.c, 0) + 1.0) / (t.n_l + vv.v)), 4) AS lp
+             |   FROM (SELECT DISTINCT bg FROM prof) b
+             |   CROSS JOIN (SELECT DISTINCT p_lang FROM prof) l
+             |   LEFT JOIN prof p ON p.p_lang = l.p_lang AND p.bg = b.bg
+             |   JOIN tot t ON t.p_lang = l.p_lang
+             |   CROSS JOIN vv),
+             | scored AS (SELECT dbc.doc_id, dbc.lang, g.p_lang,
+             |     CAST(sum(CAST(dbc.cnt * g.lp AS DECIMAL(18,6))) AS DOUBLE) AS score
+             |   FROM dbc JOIN grid g ON dbc.bg = g.bg GROUP BY 1, 2, 3),
+             | pred AS (SELECT doc_id, lang, p_lang AS predicted FROM (
+             |   SELECT doc_id, lang, p_lang,
+             |     row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, p_lang) AS rk
+             |   FROM scored) WHERE rk = 1)
+             |SELECT lang AS actual, predicted, count(*) AS n_docs
+             |FROM pred GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+
+    Op("text_lm_score", (s, dir) =>
+      lmDocScores(t(s, dir, "documents")).orderBy("doc_id"),
+      Some("""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
+             | b AS (SELECT doc_id, array_to_string(toks[i:i+1], ' ') AS bigram
+             |   FROM (SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 1)) AS i FROM t)),
+             | c2 AS (SELECT bigram, count(*) AS c2 FROM b GROUP BY 1),
+             | c1 AS (SELECT string_split(bigram,' ')[1] AS w1, sum(c2) AS c1
+             |   FROM c2 GROUP BY 1),
+             | v AS (SELECT count(DISTINCT w) AS v
+             |   FROM (SELECT unnest(string_split(text,' ')) AS w FROM documents)),
+             | s AS (SELECT doc_id,
+             |     CAST(round(ln((c2.c2 + 1.0) / (c1.c1 + v.v)), 4) AS DECIMAL(18,6)) AS ll
+             |   FROM b
+             |   JOIN c2 USING (bigram)
+             |   JOIN c1 ON string_split(b.bigram,' ')[1] = c1.w1
+             |   CROSS JOIN v)
+             |SELECT doc_id, count(*) AS n_bigrams,
+             | round(CAST(sum(ll) AS DOUBLE) / count(*), 6) AS avg_ll
+             |FROM s GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+
+    // VOCABULARY COVERAGE CURVE — what fraction of the corpus token MASS
+    // do the top-k vocabulary words cover (k = 1, 2, 4, ..., 1024)? The
+    // tokenizer-budget diagnostic: the curve's knee says how small a
+    // vocab gets you 95% coverage, and a too-flat curve flags boilerplate
+    // (Zipf's complement — text_zipf_slope fits the law, this key reads
+    // the budget off it). Shape: one word-count hash agg, then the curve
+    // reads off the TOP-1024 words only — TakeOrderedAndProject (a
+    // per-partition top-k fold + a 1024-row driver merge, never a global
+    // sort: a 100 TB web corpus has a 10⁸–10⁹-entry vocabulary of typos
+    // and URLs, and the previous unpartitioned rank+cumsum window would
+    // single-partition ALL of it). The rank/cumsum window then runs on
+    // ≤1024 rows (bounded by construction — the sweep allowlist's
+    // contract), and the one row the top-k slice cannot produce — the
+    // full-vocabulary point, coverage ≡ 1 — comes from the 1-row total
+    // agg instead. Share = exact integer cumsum / exact integer total,
+    // one correctly-rounded division — bit-identical cross-engine.
+    Op("text_vocab_coverage", (s, dir) => {
+      // wc feeds three branches (top-k slice, totals, full-vocab row):
+      // localCheckpoint the vocabulary aggregate so the corpus explode+agg
+      // runs ONCE per call instead of once per branch.
+      val wc = t(s, dir, "documents")
+        .select(explode(split(col("text"), " ")).as("word"))
+        .groupBy("word").agg(count(lit(1)).as("cnt"))
+        .localCheckpoint()
+      val kMax = 1024
+      val top = wc.orderBy(col("cnt").desc, col("word")).limit(kMax)
+      val ranked = top
+        .withColumn("rk", row_number().over(
+          Window.orderBy(col("cnt").desc, col("word"))).cast("long"))
+        .withColumn("cum", sum("cnt").over(
+          Window.orderBy(col("cnt").desc, col("word"))
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      val tot = wc.agg(sum("cnt").as("total"), count(lit(1)).as("vocab"))
+      val ks = Seq(1L, 2L, 4L, 8L, 16L, 32L, 64L, 128L, 256L, 512L, 1024L)
+      val curve = ranked.crossJoin(broadcast(tot))
+        .filter(col("rk").isin(ks: _*) || col("rk") === col("vocab"))
+        .select(col("rk").as("top_k"), col("cum").as("tokens_covered"),
+          col("total").as("tokens_total"),
+          round(col("cum").cast("double") / col("total"), 6).as("coverage"))
+      // The full-vocab row (rk == vocab) lives outside the top-k slice
+      // whenever vocab > kMax; emit it from the total agg (coverage is
+      // exactly 1 there — cum over the whole vocabulary IS the total).
+      val fullRow = tot.filter(col("vocab") > kMax)
+        .select(col("vocab").as("top_k"), col("total").as("tokens_covered"),
+          col("total").as("tokens_total"), lit(1.0).as("coverage"))
+      curve.unionAll(fullRow).orderBy("top_k")
+    },
+      Some("""WITH wc AS (SELECT w AS word, count(*) AS cnt FROM
+             |   (SELECT unnest(string_split(text,' ')) AS w FROM documents)
+             |   GROUP BY 1),
+             | r AS (SELECT word, cnt,
+             |     CAST(row_number() OVER (ORDER BY cnt DESC, word) AS BIGINT) AS rk,
+             |     CAST(sum(cnt) OVER (ORDER BY cnt DESC, word
+             |       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
+             |   FROM wc),
+             | t AS (SELECT CAST(sum(cnt) AS BIGINT) AS total,
+             |     CAST(count(*) AS BIGINT) AS vocab FROM wc)
+             |SELECT rk AS top_k, cum AS tokens_covered, total AS tokens_total,
+             | round(CAST(cum AS DOUBLE) / total, 6) AS coverage
+             |FROM r CROSS JOIN t
+             |WHERE rk IN (1, 2, 4, 8, 16, 32, 64, 128, 256, 512, 1024) OR rk = vocab
+             |ORDER BY top_k""".stripMargin)),
+
+    // GOPHER QUALITY RULES (Rae et al. 2021, "Scaling Language Models:
+    // Methods, Analysis & Insights from Training Gopher", App. A1.1) —
+    // the published rule-based document filter, restricted to the rules
+    // computable on whitespace-tokenized text: word count in [25, 1e5],
+    // mean word length in [3, 10], >= 2 stop words, top-word fraction
+    // <= 1/8 (the unigram form of Gopher's repetition caps). The key
+    // returns the AUDIT REPORT a filtering run ships: per-rule violation
+    // counts + the pass-all count, reconciling against docs_total.
+    // Determinism: every rule is an INTEGER comparison (sum_len >= 3n,
+    // 8*top_c <= n — never a float ratio), so the gate is bit-exact in
+    // any engine. Scale: two doc-keyed hash aggs + a 1-row final agg;
+    // the report is 6 rows regardless of corpus size.
+    Op("pipeline_gopher_rules", (s, dir) => {
+      val tok = t(s, dir, "documents")
+        .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
+      val per = tok.groupBy("doc_id", "w").agg(count(lit(1)).as("c"))
+        .groupBy("doc_id").agg(
+          sum("c").as("n"),
+          sum(col("c") * length(col("w"))).as("sum_len"),
+          sum(when(col("w").isin(stopwords: _*), col("c")).otherwise(0L))
+            .as("n_stop"),
+          max("c").as("top_c"))
+      val flags = per.select(
+        when(col("n") < 25 || col("n") > 100000, 1L).otherwise(0L).as("f_wc"),
+        when(col("sum_len") < col("n") * 3 || col("sum_len") > col("n") * 10, 1L)
+          .otherwise(0L).as("f_mwl"),
+        when(col("n_stop") < 2, 1L).otherwise(0L).as("f_stop"),
+        when(col("top_c") * 8 > col("n"), 1L).otherwise(0L).as("f_rep"))
+      flags.agg(
+          count(lit(1)).as("docs_total"),
+          sum("f_wc").as("fail_word_count"),
+          sum("f_mwl").as("fail_mean_word_len"),
+          sum("f_stop").as("fail_stopwords"),
+          sum("f_rep").as("fail_repetition"),
+          sum(when(col("f_wc") + col("f_mwl") + col("f_stop") + col("f_rep")
+            === 0, 1L).otherwise(0L)).as("pass_all"))
+        .select(explode(array(
+          struct(lit("docs_total").as("rule"), col("docs_total").as("n_docs")),
+          struct(lit("fail_mean_word_len").as("rule"),
+            col("fail_mean_word_len").as("n_docs")),
+          struct(lit("fail_repetition").as("rule"),
+            col("fail_repetition").as("n_docs")),
+          struct(lit("fail_stopwords").as("rule"),
+            col("fail_stopwords").as("n_docs")),
+          struct(lit("fail_word_count").as("rule"),
+            col("fail_word_count").as("n_docs")),
+          struct(lit("pass_all").as("rule"), col("pass_all").as("n_docs"))))
+          .as("r"))
+        .select(col("r.rule").as("rule"), col("r.n_docs").as("n_docs"))
+        .orderBy("rule")
+    },
+      Some("""WITH tok AS (SELECT doc_id, unnest(string_split(text,' ')) AS w FROM documents),
+             | per AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n,
+             |     CAST(sum(c * len(w)) AS BIGINT) AS sum_len,
+             |     CAST(sum(CASE WHEN w IN ('the','a') THEN c ELSE 0 END) AS BIGINT) AS n_stop,
+             |     CAST(max(c) AS BIGINT) AS top_c
+             |   FROM (SELECT doc_id, w, count(*) AS c FROM tok GROUP BY 1, 2)
+             |   GROUP BY 1),
+             | f AS (SELECT
+             |     CASE WHEN n < 25 OR n > 100000 THEN 1 ELSE 0 END AS f_wc,
+             |     CASE WHEN sum_len < n * 3 OR sum_len > n * 10 THEN 1 ELSE 0 END AS f_mwl,
+             |     CASE WHEN n_stop < 2 THEN 1 ELSE 0 END AS f_stop,
+             |     CASE WHEN top_c * 8 > n THEN 1 ELSE 0 END AS f_rep
+             |   FROM per),
+             | a AS (SELECT count(*) AS docs_total,
+             |     CAST(sum(f_wc) AS BIGINT) AS fail_word_count,
+             |     CAST(sum(f_mwl) AS BIGINT) AS fail_mean_word_len,
+             |     CAST(sum(f_stop) AS BIGINT) AS fail_stopwords,
+             |     CAST(sum(f_rep) AS BIGINT) AS fail_repetition,
+             |     CAST(sum(CASE WHEN f_wc + f_mwl + f_stop + f_rep = 0 THEN 1 ELSE 0 END)
+             |       AS BIGINT) AS pass_all
+             |   FROM f)
+             |SELECT rule, n_docs FROM (
+             | SELECT 'docs_total' AS rule, docs_total AS n_docs FROM a
+             | UNION ALL SELECT 'fail_mean_word_len', fail_mean_word_len FROM a
+             | UNION ALL SELECT 'fail_repetition', fail_repetition FROM a
+             | UNION ALL SELECT 'fail_stopwords', fail_stopwords FROM a
+             | UNION ALL SELECT 'fail_word_count', fail_word_count FROM a
+             | UNION ALL SELECT 'pass_all', pass_all FROM a)
+             |ORDER BY rule""".stripMargin)),
+
+    // CCNET PERPLEXITY BUCKETS (Wenzek et al. 2020, "CCNet: Extracting
+    // High Quality Monolingual Datasets from Web Crawl Data"): rank each
+    // document by its per-LANGUAGE LM score and cut the corpus into
+    // head / middle / tail terciles — the curation step that keeps the
+    // best third and discards (or down-samples) the tail. Scores come
+    // from [[lmDocScores]] (the exact frame `text_lm_score` releases, so
+    // the two keys reconcile); tercile boundaries are exact per-language
+    // percentiles (5 langs x a tiny two-phase agg; the documented 100 TB
+    // swap is approx_percentile, mergeable partials — the
+    // agg_histogram_equidepth/_approx pair's pattern), broadcast back
+    // onto the scored frame for a zero-shuffle bucket assign. Higher
+    // avg_ll = lower perplexity = head.
+    Op("pipeline_perplexity_buckets", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      val scored = lmDocScores(docs)
+        .join(docs.select("doc_id", "lang"), "doc_id")
+      val bounds = scored.groupBy("lang").agg(
+        percentile(col("avg_ll"), lit(1.0 / 3)).as("b33"),
+        percentile(col("avg_ll"), lit(2.0 / 3)).as("b66"))
+      scored.join(broadcast(bounds), "lang")
+        .withColumn("bucket",
+          when(col("avg_ll") >= col("b66"), lit("head"))
+            .when(col("avg_ll") >= col("b33"), lit("middle"))
+            .otherwise(lit("tail")))
+        .groupBy("lang", "bucket")
+        .agg(count(lit(1)).as("n_docs"),
+          round(graft.Tables.dsum6(col("avg_ll")) / count(lit(1)), 6)
+            .as("mean_ll"))
+        .orderBy("lang", "bucket")
+    },
+      Some("""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
+             | b AS (SELECT doc_id, array_to_string(toks[i:i+1], ' ') AS bigram
+             |   FROM (SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 1)) AS i FROM t)),
+             | c2 AS (SELECT bigram, count(*) AS c2 FROM b GROUP BY 1),
+             | c1 AS (SELECT string_split(bigram,' ')[1] AS w1, sum(c2) AS c1
+             |   FROM c2 GROUP BY 1),
+             | v AS (SELECT count(DISTINCT w) AS v
+             |   FROM (SELECT unnest(string_split(text,' ')) AS w FROM documents)),
+             | s AS (SELECT doc_id,
+             |     CAST(round(ln((c2.c2 + 1.0) / (c1.c1 + v.v)), 4) AS DECIMAL(18,6)) AS ll
+             |   FROM b
+             |   JOIN c2 USING (bigram)
+             |   JOIN c1 ON string_split(b.bigram,' ')[1] = c1.w1
+             |   CROSS JOIN v),
+             | sc0 AS (SELECT doc_id, count(*) AS n_bigrams,
+             |     round(CAST(sum(ll) AS DOUBLE) / count(*), 6) AS avg_ll
+             |   FROM s GROUP BY doc_id),
+             | sc AS (SELECT sc0.doc_id, d.lang, sc0.avg_ll
+             |   FROM sc0 JOIN documents d USING (doc_id)),
+             | bo AS (SELECT lang, quantile_cont(avg_ll, 1.0/3) AS b33,
+             |     quantile_cont(avg_ll, 2.0/3) AS b66 FROM sc GROUP BY 1),
+             | bk AS (SELECT sc.lang,
+             |     CASE WHEN avg_ll >= b66 THEN 'head'
+             |          WHEN avg_ll >= b33 THEN 'middle' ELSE 'tail' END AS bucket,
+             |     avg_ll
+             |   FROM sc JOIN bo USING (lang))
+             |SELECT lang, bucket, count(*) AS n_docs,
+             | round(CAST(sum(CAST(avg_ll AS DECIMAL(18,6))) AS DOUBLE) / count(*), 6)
+             |   AS mean_ll
+             |FROM bk GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+
+    // ZIPF SLOPE — the corpus-health diagnostic (natural text follows
+    // rank·freq^(1/s) ≈ const with s ≈ 1; template/boilerplate-heavy or
+    // synthetic corpora bend it): least-squares slope of ln(freq) on
+    // ln(rank) over the top-100 vocabulary. Determinism recipe: ranks
+    // come from an integer total order (count DESC, word); each ln is
+    // terminally rounded to 6 dp and cast DECIMAL before the sufficient
+    // statistics accumulate (text_lm_score's pin), so the regression
+    // runs on exact sums and the final arithmetic is one IEEE expression
+    // tree in both engines. Scale: the word count is a map-side-combined
+    // corpus agg; the top-100 slice is TakeOrderedAndProject (per-
+    // partition top-k fold, never a global vocab sort — the same move as
+    // text_vocab_coverage), so the rank window runs on exactly 100 rows.
+    Op("text_zipf_slope", (s, dir) => {
+      val wc = t(s, dir, "documents")
+        .select(explode(split(col("text"), " ")).as("w"))
+        .groupBy("w").agg(count(lit(1)).as("cnt"))
+      val ranked = wc
+        .orderBy(col("cnt").desc, col("w")).limit(100)
+        .withColumn("rk", row_number().over(
+          Window.orderBy(col("cnt").desc, col("w"))))
+        .select(
+          round(log(col("rk")), 6).cast(org.apache.spark.sql.types.DecimalType(18, 6)).as("x"),
+          round(log(col("cnt")), 6).cast(org.apache.spark.sql.types.DecimalType(18, 6)).as("y"))
+      val g = ranked.agg(
+        count(lit(1)).cast("double").as("n"),
+        sum(col("x")).cast("double").as("sx"),
+        sum(col("y")).cast("double").as("sy"),
+        sum(col("x") * col("y")).cast("double").as("sxy"),
+        sum(col("x") * col("x")).cast("double").as("sxx"))
+      g.select(
+          round((col("n") * col("sxy") - col("sx") * col("sy")) /
+            (col("n") * col("sxx") - col("sx") * col("sx")), 6).as("zipf_slope"),
+          col("n").cast("long").as("n_words"))
+    },
+      Some("""WITH wc AS (SELECT unnest(string_split(text, ' ')) AS w FROM documents),
+             | c AS (SELECT w, count(*) AS cnt FROM wc GROUP BY w),
+             | r AS (SELECT cnt, row_number() OVER (ORDER BY cnt DESC, w) AS rk FROM c),
+             | xy AS (SELECT CAST(round(ln(rk), 6) AS DECIMAL(18,6)) AS x,
+             |   CAST(round(ln(cnt), 6) AS DECIMAL(18,6)) AS y
+             |  FROM r WHERE rk <= 100),
+             | g AS (SELECT CAST(count(*) AS DOUBLE) AS n,
+             |   CAST(sum(x) AS DOUBLE) AS sx, CAST(sum(y) AS DOUBLE) AS sy,
+             |   CAST(sum(x * y) AS DOUBLE) AS sxy,
+             |   CAST(sum(x * x) AS DOUBLE) AS sxx FROM xy)
+             |SELECT round((n * sxy - sx * sy) / (n * sxx - sx * sx), 6) AS zipf_slope,
+             | CAST(n AS BIGINT) AS n_words FROM g""".stripMargin)),
+
+    // Collocation mining: top-50 bigrams by pointwise mutual information
+    // PMI = ln( P(w1,w2) / (P(w1)·P(w2)) ), the standard corpus-
+    // linguistics signal for "these tokens form a unit" (phrase
+    // extraction, tokenizer-merge candidates). A min-support floor
+    // (c12 ≥ 5) kills the rare-pair PMI explosion. Determinism: both
+    // engines evaluate the identical IEEE expression tree of bigint→
+    // double divisions — (c12/nb) / ((c1/n)·(c2/n)) — then ln, then one
+    // terminal round(6) (same recipe text_lm_score pins). Scale: two
+    // corpus scans (token + bigram explode) into map-side-combined
+    // counts; the c12 frame joins the unigram counts on WORD KEYS — a
+    // hash shuffle of (word, long) rows, never a vocab broadcast (vocab
+    // grows with the corpus; the totals are the only broadcast, 1 row
+    // each). Top-50 rides TakeOrderedAndProject.
+    Op("text_pmi_bigrams", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      val toks = docs.select(explode(split(col("text"), " ")).as("w"))
+      val cw = toks.groupBy("w").agg(count(lit(1)).as("c"))
+      val n = toks.agg(count(lit(1)).as("n"))
+      val bg = docs.select(explode(bigramUdf(col("text"))).as("bigram"))
+      val nb = bg.agg(count(lit(1)).as("nb"))
+      bg.groupBy("bigram").agg(count(lit(1)).as("c12"))
+        .filter(col("c12") >= 5)
+        .withColumn("w1", split(col("bigram"), " ")(0))
+        .withColumn("w2", split(col("bigram"), " ")(1))
+        .join(cw.select(col("w").as("w1"), col("c").as("c1")), "w1")
+        .join(cw.select(col("w").as("w2"), col("c").as("c2")), "w2")
+        .crossJoin(broadcast(n)).crossJoin(broadcast(nb))
+        .withColumn("pmi", round(log(
+          (col("c12") / col("nb")) / (col("c1") / col("n") * (col("c2") / col("n")))), 6))
+        .select("bigram", "c12", "c1", "c2", "pmi")
+        .orderBy(desc("pmi"), col("bigram")).limit(50)
+    },
+      Some("""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
+             | tok AS (SELECT unnest(toks) AS w FROM t),
+             | cw AS (SELECT w, count(*) AS c FROM tok GROUP BY 1),
+             | n AS (SELECT count(*) AS n FROM tok),
+             | b AS (SELECT array_to_string(toks[i:i+1], ' ') AS bigram
+             |   FROM (SELECT toks, unnest(generate_series(1, len(toks) - 1)) AS i FROM t)),
+             | nb AS (SELECT count(*) AS nb FROM b),
+             | c12 AS (SELECT bigram, count(*) AS c12 FROM b GROUP BY 1 HAVING count(*) >= 5)
+             |SELECT bigram, c12, x.c AS c1, y.c AS c2,
+             | round(ln((c12 / nb.nb) / (x.c / n.n * (y.c / n.n))), 6) AS pmi
+             |FROM c12
+             | JOIN cw x ON string_split(bigram,' ')[1] = x.w
+             | JOIN cw y ON string_split(bigram,' ')[2] = y.w
+             | CROSS JOIN n CROSS JOIN nb
+             |ORDER BY pmi DESC, bigram LIMIT 50""".stripMargin)),
+
+    Op("text_lang_stats", (s, dir) =>
+      t(s, dir, "documents")
+        .groupBy("lang", "source")
+        .agg(count(lit(1)).as("n_docs"),
+          round(percentile(col("n_chars"), lit(0.5)), 4).as("p50_chars"),
+          round(percentile(col("n_chars"), lit(0.9)), 4).as("p90_chars"),
+          round(avg(col("n_chars")), 6).as("avg_chars"))
+        .orderBy("lang", "source"),
+      Some("""SELECT lang, source, count(*) AS n_docs,
+             | round(percentile_cont(0.5) WITHIN GROUP (ORDER BY n_chars), 4) AS p50_chars,
+             | round(percentile_cont(0.9) WITHIN GROUP (ORDER BY n_chars), 4) AS p90_chars,
+             | round(avg(n_chars), 6) AS avg_chars
+             |FROM documents GROUP BY lang, source ORDER BY lang, source""".stripMargin)),
+
+    // Intra-document repetition spans (the self-dedup half of
+    // "Deduplicating Training Data Makes Language Models Better", Lee et
+    // al. 2022): token positions covered by a 3-gram whose identical
+    // 3-gram already occurred EARLIER in the same document. Overlapping
+    // covered intervals [i, i+2] merge via gaps-and-islands (cumulative
+    // max of interval ends), so n_repeated is the exact union length —
+    // the token count a span-trimming pass would remove. Scale: every
+    // window partitions by doc_id (+shingle) — work is bounded per
+    // document, nothing corpus-wide; the (doc_id, sh) first-occurrence
+    // window and the doc-ordered island windows are the only exchanges.
+    Op("text_intradoc_dedup", (s, dir) => {
+      import org.apache.spark.sql.expressions.Window
+      val docs = t(s, dir, "documents")
+      val sh = docs.select(col("doc_id"),
+        posexplode(shingles(col("text"))).as(Seq("i", "sh")))
+      val rep = sh
+        .withColumn("first_i", min("i").over(Window.partitionBy("doc_id", "sh")))
+        .filter(col("i") > col("first_i"))
+      val prevEnds = Window.partitionBy("doc_id").orderBy("i")
+        .rowsBetween(Window.unboundedPreceding, -1)
+      val runW = Window.partitionBy("doc_id").orderBy("i")
+        .rowsBetween(Window.unboundedPreceding, 0)
+      val merged = rep
+        .withColumn("prev_max_end", max(col("i") + lit(2)).over(prevEnds))
+        .withColumn("new_isl",
+          when(col("prev_max_end").isNull || col("i") > col("prev_max_end"), 1L)
+            .otherwise(0L))
+        .withColumn("isl_id", sum("new_isl").over(runW))
+        .groupBy("doc_id", "isl_id")
+        .agg((max(col("i")) + lit(2) - min(col("i")) + lit(1)).as("len"))
+        .groupBy("doc_id").agg(sum("len").as("n_repeated"))
+      docs.select(col("doc_id"), size(split(col("text"), " ")).as("n_tokens"))
+        .join(merged, Seq("doc_id"), "left")
+        .select(col("doc_id"), col("n_tokens").cast("long").as("n_tokens"),
+          coalesce(col("n_repeated"), lit(0L)).as("n_repeated"),
+          round(coalesce(col("n_repeated"), lit(0L)) / col("n_tokens"), 6)
+            .as("repeat_ratio"))
+        .orderBy("doc_id")
+    },
+      // i-1 aligns DuckDB's 1-based slice start with posexplode's 0-based
+      // array index; same interval math otherwise.
+      Some("""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
+             | sh AS (SELECT doc_id, i - 1 AS i, array_to_string(toks[i:i+2], ' ') AS sh
+             |   FROM (SELECT doc_id, toks,
+             |     unnest(generate_series(1, len(toks) - 2)) AS i FROM t)),
+             | rep AS (SELECT doc_id, i FROM (
+             |     SELECT doc_id, i, min(i) OVER (PARTITION BY doc_id, sh) AS first_i
+             |     FROM sh)
+             |   WHERE i > first_i),
+             | isl AS (SELECT doc_id, i,
+             |     CASE WHEN max(i + 2) OVER (PARTITION BY doc_id ORDER BY i
+             |         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) IS NULL
+             |       OR i > max(i + 2) OVER (PARTITION BY doc_id ORDER BY i
+             |         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+             |     THEN 1 ELSE 0 END AS new_isl
+             |   FROM rep),
+             | grp AS (SELECT doc_id, i, sum(new_isl) OVER (PARTITION BY doc_id
+             |     ORDER BY i ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS isl_id
+             |   FROM isl),
+             | m AS (SELECT doc_id, isl_id, max(i) + 2 - min(i) + 1 AS len
+             |   FROM grp GROUP BY 1, 2),
+             | r AS (SELECT doc_id, CAST(sum(len) AS BIGINT) AS n_repeated
+             |   FROM m GROUP BY 1)
+             |SELECT d.doc_id, CAST(len(string_split(d.text,' ')) AS BIGINT) AS n_tokens,
+             | coalesce(r.n_repeated, 0) AS n_repeated,
+             | round(coalesce(r.n_repeated, 0) / len(string_split(d.text,' ')), 6)
+             |   AS repeat_ratio
+             |FROM documents d LEFT JOIN r USING (doc_id) ORDER BY d.doc_id""".stripMargin)),
+
+    // Data-mix diagnostics: per-source token-distribution entropy and
+    // KL(source ‖ corpus) — the two numbers a pretraining-mix curator
+    // reads before re-weighting sources (low entropy = repetitive/
+    // boilerplate source; high KL = source is unlike the rest of the
+    // corpus). Natural-log units. No smoothing needed: the corpus
+    // distribution marginalizes the SAME per-(source, word) counts, so
+    // q(w) > 0 wherever p(w) > 0 by construction. One token explode +
+    // three reuses of the same (source, word) count frame; per-term
+    // doubles ride the decimal accumulator (dsum6) so the Σ is
+    // partition-order-independent and engine-portable (the lm-score
+    // pattern). Scale: everything keys on (source, word) or word — two
+    // hash aggs and two broadcastable dimension joins; the corpus total
+    // is a 1-row broadcast. No all-corpus shuffle of anything wider than
+    // (word, count).
+    Op("text_entropy_kl", (s, dir) => {
+      val sc = t(s, dir, "documents")
+        .select(col("source"), explode(split(col("text"), " ")).as("w"))
+        .groupBy("source", "w").agg(count(lit(1)).as("c"))
+      val st = sc.groupBy("source").agg(sum("c").as("tot"))
+      val cw = sc.groupBy("w").agg(sum("c").as("cw"))
+      val ct = sc.agg(sum("c").as("ctot"))
+      val p = col("c") / col("tot")
+      val q = col("cw") / col("ctot")
+      sc.join(st, "source").join(cw, "w").crossJoin(broadcast(ct))
+        .select(col("source"),
+          (p * log(p)).cast(org.apache.spark.sql.types.DecimalType(18, 6)).as("ph"),
+          (p * log(p / q)).cast(org.apache.spark.sql.types.DecimalType(18, 6)).as("pk"),
+          col("c"))
+        .groupBy("source")
+        .agg(sum(col("c")).as("n_tokens"),
+          round(-sum(col("ph")).cast("double"), 6).as("entropy"),
+          round(sum(col("pk")).cast("double"), 6).as("kl"))
+        .orderBy("source")
+    },
+      Some("""WITH sc AS (SELECT source, w, count(*) AS c
+             |   FROM (SELECT source, unnest(string_split(text,' ')) AS w FROM documents)
+             |   GROUP BY 1, 2),
+             | st AS (SELECT source, CAST(sum(c) AS BIGINT) AS tot FROM sc GROUP BY 1),
+             | cw AS (SELECT w, CAST(sum(c) AS BIGINT) AS cw FROM sc GROUP BY 1),
+             | ct AS (SELECT CAST(sum(c) AS BIGINT) AS ctot FROM sc)
+             |SELECT sc.source, CAST(sum(sc.c) AS BIGINT) AS n_tokens,
+             | round(-CAST(sum(CAST((sc.c / st.tot) * ln(sc.c / st.tot)
+             |   AS DECIMAL(18,6))) AS DOUBLE), 6) AS entropy,
+             | round(CAST(sum(CAST((sc.c / st.tot) * ln((sc.c / st.tot) / (cw.cw / ct.ctot))
+             |   AS DECIMAL(18,6))) AS DOUBLE), 6) AS kl
+             |FROM sc JOIN st USING (source) JOIN cw USING (w) CROSS JOIN ct
+             |GROUP BY 1 ORDER BY 1""".stripMargin)),
+
+    // Fuzzy pair-matching with blocking: same brand + same head noun, then
+    // levenshtein <= 3. Blocking keeps the candidate set linear-ish at scale.
+    Op("text_edit_distance", (s, dir) => {
+      // Round 14: round-robin fan-out so the banded-DP probe side runs
+      // on every core — the compact part parquet is ONE scan split, so
+      // the levenshtein stage ran single-task (keyless shuffle: the
+      // broadcast-join / 0-hash-exchange plan shape is unchanged).
+      // Round 15: gated on actual scan parallelism (fanOutIfCompact).
+      val p = fanOutIfCompact(t(s, dir, "part"))
+        .select(col("p_partkey"), col("p_brand"),
+        col("p_name"), split(col("p_name"), " ").getItem(1).as("noun"))
+      val a = p.select(col("p_partkey").as("k1"), col("p_brand").as("brand1"),
+        col("noun").as("noun1"), col("p_name").as("n1"))
+      val b = p.select(col("p_partkey").as("k2"), col("p_brand").as("brand2"),
+        col("noun").as("noun2"), col("p_name").as("n2"))
+      // Length pre-filter: levenshtein ≥ |len(a)−len(b)|, so pairs differing
+      // by >3 chars are cut before any DP work — same result set. The DP
+      // itself runs through the THRESHOLD overload of levenshtein, which
+      // computes only the |threshold|-wide diagonal band (O(len·3), not
+      // O(len²)) and returns −1 as soon as the distance provably exceeds
+      // it — so `dist ≥ 0` is exactly the old `dist ≤ 3` result set
+      // (measured JIT-steady warm at sf0.1: 2.0 s full DP → 1.8 s banded).
+      // (A width-4 length-bucket equi key was also tried and REVERTED: the
+      // blocked pairs ride a zero-exchange broadcast join, and exploding
+      // side b to 3 buckets grows the broadcast build 3× for no win — the
+      // residual length filter was already cutting those pairs pre-DP.)
+      a.join(b, col("brand1") === col("brand2") && col("noun1") === col("noun2")
+          && col("k1") < col("k2")
+          && abs(length(col("n1")) - length(col("n2"))) <= 3)
+        .withColumn("dist", levenshtein(col("n1"), col("n2"), 3))
+        .filter(col("dist") >= 0)
+        .select("k1", "k2", "n1", "n2", "dist")
+        .orderBy("k1", "k2")
+    },
+      Some("""SELECT a.p_partkey AS k1, b.p_partkey AS k2, a.p_name AS n1, b.p_name AS n2,
+             | CAST(levenshtein(a.p_name, b.p_name) AS INT) AS dist
+             |FROM part a JOIN part b
+             | ON a.p_brand = b.p_brand
+             | AND string_split(a.p_name, ' ')[2] = string_split(b.p_name, ' ')[2]
+             | AND a.p_partkey < b.p_partkey
+             |WHERE levenshtein(a.p_name, b.p_name) <= 3
+             |ORDER BY k1, k2""".stripMargin)),
+
+    // Quality scoring: token/char ratios + dedup-ish uniqueness, combined
+    // into a bounded score. Pure arithmetic on exact ratios — bit-stable.
+    Op("text_quality_score", (s, dir) => {
+      val toks = split(col("text"), " ")
+      val nTok = size(toks)
+      val stopRatio = size(filter(toks, w => w.isin(stopwords: _*))) / nTok
+      val uniqRatio = size(array_distinct(toks)) / nTok
+      val longRatio = size(filter(toks, w => length(w) > 4)) / nTok
+      t(s, dir, "documents").select(
+        col("doc_id"),
+        nTok.as("n_tokens"),
+        (length(col("text")) - (nTok - lit(1))).as("n_word_chars"),
+        round(stopRatio, 6).as("stop_ratio"),
+        round(uniqRatio, 6).as("uniq_ratio"),
+        round(longRatio, 6).as("long_word_ratio"),
+        qualityScore(col("text")).as("quality"),
+      ).orderBy("doc_id")
+    },
+      Some("""SELECT doc_id,
+             | CAST(len(string_split(text,' ')) AS INT) AS n_tokens,
+             | CAST(length(text) - (len(string_split(text,' ')) - 1) AS INT) AS n_word_chars,
+             | round(len(list_filter(string_split(text,' '), w -> w IN ('the','a')))
+             |   / len(string_split(text,' ')), 6) AS stop_ratio,
+             | round(len(list_distinct(string_split(text,' ')))
+             |   / len(string_split(text,' ')), 6) AS uniq_ratio,
+             | round(len(list_filter(string_split(text,' '), w -> length(w) > 4))
+             |   / len(string_split(text,' ')), 6) AS long_word_ratio,
+             | round(0.3 * (len(list_distinct(string_split(text,' '))) / len(string_split(text,' ')))
+             |   + 0.4 * (1.0 - len(list_filter(string_split(text,' '), w -> w IN ('the','a')))
+             |       / len(string_split(text,' ')))
+             |   + 0.3 * least(1.0, len(string_split(text,' ')) / 100.0), 6) AS quality
+             |FROM documents ORDER BY doc_id""".stripMargin)),
+
+    // Per-language quality gate: keep each language's top quality
+    // quartile — the standard corpus-cleaning step between scoring and
+    // dedup (filtering on a GLOBAL threshold would simply drop
+    // low-resource languages whose score distribution sits lower).
+    // ntile(4) makes the cut integer-exact in both engines (no float
+    // threshold boundary), with doc_id as the deterministic tiebreak.
+    // One shuffle on lang. Scale note: the within-language window sorts
+    // each language on few tasks; at 100 TB swap the exact rank for
+    // approx_percentile per-language thresholds (tiny agg, broadcast
+    // back) — same gate, bounded memory, approximate only at the
+    // quartile boundary. The exact-rank form is the oracle-checkable
+    // contract the approx variant is tested against.
+    Op("pipeline_quality_gate", (s, dir) => {
+      val w = Window.partitionBy("lang")
+        .orderBy(col("quality").desc, col("doc_id"))
+      t(s, dir, "documents")
+        .select(col("doc_id"), col("lang"), qualityScore(col("text")).as("quality"))
+        .withColumn("tile", ntile(4).over(w))
+        .filter(col("tile") === 1).drop("tile")
+        .orderBy("doc_id")
+    },
+      Some("""WITH q AS (SELECT doc_id, lang,
+             |  round(0.3 * (len(list_distinct(string_split(text,' '))) / len(string_split(text,' ')))
+             |   + 0.4 * (1.0 - len(list_filter(string_split(text,' '), w -> w IN ('the','a')))
+             |       / len(string_split(text,' ')))
+             |   + 0.3 * least(1.0, len(string_split(text,' ')) / 100.0), 6) AS quality
+             |  FROM documents),
+             | r AS (SELECT doc_id, lang, quality,
+             |   ntile(4) OVER (PARTITION BY lang ORDER BY quality DESC, doc_id) AS tile
+             |  FROM q)
+             |SELECT doc_id, lang, quality FROM r WHERE tile = 1 ORDER BY doc_id""".stripMargin)),
+
+    // Deterministic marker-token language-ID heuristic (vote per language
+    // marker set, argmax with fixed tiebreak order). A stand-in for a real
+    // n-gram profile model — the plan shape (explode → conditional agg) is
+    // what matters at scale.
+    Op("text_lang_id", (s, dir) => {
+      val tok = t(s, dir, "documents")
+        .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
+      val sc = tok.groupBy("doc_id").agg(
+        sum(when(col("w").isin("the", "a"), 1).otherwise(0)).as("s_en"),
+        sum(when(col("w").isin("table", "scan"), 1).otherwise(0)).as("s_de"),
+        sum(when(col("w").isin("query", "row"), 1).otherwise(0)).as("s_fr"),
+        sum(when(col("w").isin("value", "key"), 1).otherwise(0)).as("s_es"),
+        sum(when(col("w").isin("data", "hash"), 1).otherwise(0)).as("s_zh"))
+      sc.withColumn("pred_lang",
+        when(col("s_en") >= col("s_de") && col("s_en") >= col("s_fr")
+          && col("s_en") >= col("s_es") && col("s_en") >= col("s_zh"), "en")
+          .when(col("s_de") >= col("s_fr") && col("s_de") >= col("s_es")
+            && col("s_de") >= col("s_zh"), "de")
+          .when(col("s_fr") >= col("s_es") && col("s_fr") >= col("s_zh"), "fr")
+          .when(col("s_es") >= col("s_zh"), "es")
+          .otherwise("zh"))
+        .orderBy("doc_id")
+    },
+      Some("""WITH tok AS (SELECT doc_id, unnest(string_split(text,' ')) AS w FROM documents),
+             | sc AS (SELECT doc_id,
+             |   CAST(sum(CASE WHEN w IN ('the','a') THEN 1 ELSE 0 END) AS BIGINT) AS s_en,
+             |   CAST(sum(CASE WHEN w IN ('table','scan') THEN 1 ELSE 0 END) AS BIGINT) AS s_de,
+             |   CAST(sum(CASE WHEN w IN ('query','row') THEN 1 ELSE 0 END) AS BIGINT) AS s_fr,
+             |   CAST(sum(CASE WHEN w IN ('value','key') THEN 1 ELSE 0 END) AS BIGINT) AS s_es,
+             |   CAST(sum(CASE WHEN w IN ('data','hash') THEN 1 ELSE 0 END) AS BIGINT) AS s_zh
+             |  FROM tok GROUP BY 1)
+             |SELECT doc_id, s_en, s_de, s_fr, s_es, s_zh,
+             | CASE WHEN s_en >= s_de AND s_en >= s_fr AND s_en >= s_es AND s_en >= s_zh THEN 'en'
+             |      WHEN s_de >= s_fr AND s_de >= s_es AND s_de >= s_zh THEN 'de'
+             |      WHEN s_fr >= s_es AND s_fr >= s_zh THEN 'fr'
+             |      WHEN s_es >= s_zh THEN 'es'
+             |      ELSE 'zh' END AS pred_lang
+             |FROM sc ORDER BY doc_id""".stripMargin)),
+
+    // Template/boilerplate-header detection: group documents by their
+    // leading 30 characters — form letters, templated pages, and
+    // generator boilerplate share exact prefixes long before they share
+    // enough shingles to trip the Jaccard miner, so this is the cheap
+    // first-pass screen a curation pipeline runs before any pair
+    // mining. Exactly dedup_exact's shape keyed on the prefix: ONE
+    // two-phase hash agg (the prefix projection is scan-stage), no
+    // window, no join — at 100 TB the exchange carries map-side
+    // partials per distinct prefix, never documents.
+    Op("text_prefix_dup", (s, dir) =>
+      t(s, dir, "documents").filter(length(col("text")) >= 30)
+        .groupBy(substring(col("text"), 1, 30).as("prefix"))
+        .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_docs"))
+        .filter(col("n_docs") >= 2)
+        .select(col("keep_id"), col("n_docs"), col("prefix"))
+        .orderBy("keep_id"),
+      Some("""SELECT min(doc_id) AS keep_id, count(*) AS n_docs,
+             | substr(text, 1, 30) AS prefix
+             |FROM documents WHERE len(text) >= 30
+             |GROUP BY 3 HAVING count(*) >= 2 ORDER BY keep_id""".stripMargin)),
+
+    // Normalized exact dedup — the canonicalization screen production
+    // exact-dedup actually runs: case-fold, trim, collapse whitespace
+    // runs, THEN hash. Catches re-encodes/reflows that byte-exact
+    // hashing (multimodal_dedup) misses while staying one two-phase agg
+    // on the digest; the normalization is scan-stage codegen (lower +
+    // regexp_replace), so at 100 TB this costs exactly what dedup_exact
+    // costs. Spark regexp_replace is global by default; the oracle
+    // passes DuckDB's explicit 'g' flag for the identical semantics.
+    Op("text_dedup_normalized", (s, dir) => {
+      val norm = regexp_replace(lower(trim(col("text"))), " +", " ")
+      t(s, dir, "documents")
+        .groupBy(md5(norm).as("norm_md5"))
+        .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("dup_cnt"))
+        .select(col("keep_id"), col("dup_cnt"), col("norm_md5"))
+        .orderBy("keep_id")
+    },
+      Some("""SELECT min(doc_id) AS keep_id, count(*) AS dup_cnt,
+             | md5(regexp_replace(lower(trim(text)), ' +', ' ', 'g')) AS norm_md5
+             |FROM documents GROUP BY 3 ORDER BY keep_id""".stripMargin)),
+
+    // Document fingerprint: min-MD5 over 3-word shingles (winnowing-style
+    // representative hash) + distinct-shingle cardinality.
+    Op("text_fingerprint", (s, dir) =>
+      t(s, dir, "documents")
+        .select(col("doc_id"), explode(shingles(col("text"))).as("shingle"))
+        .groupBy("doc_id")
+        .agg(min(md5(col("shingle"))).as("fingerprint"),
+          countDistinct(col("shingle")).as("n_shingles"))
+        .orderBy("doc_id"),
+      Some("""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
+             | s AS (SELECT doc_id, array_to_string(toks[i:i+2], ' ') AS shingle
+             |   FROM (SELECT doc_id, toks,
+             |     unnest(generate_series(1, len(toks) - 2)) AS i FROM t))
+             |SELECT doc_id, min(md5(shingle)) AS fingerprint,
+             | count(DISTINCT shingle) AS n_shingles
+             |FROM s GROUP BY 1 ORDER BY 1""".stripMargin)),
+
+    // Token counting: whitespace tokens + BPE-ish subword piece estimate
+    // (ceil(len/4) pieces per word).
+    Op("text_token_count", (s, dir) =>
+      t(s, dir, "documents")
+        .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
+        .groupBy("doc_id")
+        .agg(count(lit(1)).as("n_words"),
+          sum(ceil(length(col("w")) / lit(4.0)).cast("long")).as("n_bpe_pieces"))
+        .orderBy("doc_id"),
+      Some("""SELECT doc_id, count(*) AS n_words,
+             | CAST(sum(CAST(ceil(length(w) / 4.0) AS BIGINT)) AS BIGINT) AS n_bpe_pieces
+             |FROM (SELECT doc_id, unnest(string_split(text,' ')) AS w FROM documents)
+             |GROUP BY 1 ORDER BY 1""".stripMargin)),
+
+    // READABILITY INDICES (round 11) — Coleman–Liau and ARI per doc,
+    // the two classics that need only CHARACTER/WORD/SENTENCE counts
+    // (no syllable dictionary): CLI = 0.0588·L − 0.296·S − 15.8 with
+    // L = letters per 100 words, S = sentences per 100 words; ARI =
+    // 4.71·(chars/word) + 0.58·(words/sentence) − 21.43. A corpus
+    // quality signal (too-hard and too-easy tails both correlate with
+    // boilerplate/garbage). Counts are exact ints from codegen'd
+    // regexp_replace lengths; sentence count floors at 1 (this corpus
+    // has no terminal punctuation — the floor keeps the index defined
+    // on fragments, the behavior a cleaning pipeline wants). Each
+    // index is ONE shared IEEE tree over exact ints in both engines.
+    // Scale: pure scan-stage projection — no shuffle at all.
+    Op("text_readability", (s, dir) => {
+      val w = size(split(col("text"), " ")).cast("long")
+      val l = length(regexp_replace(col("text"), "[^A-Za-z]", ""))
+        .cast("long")
+      val sn = greatest(lit(1L),
+        (length(col("text")) -
+          length(regexp_replace(col("text"), "[.!?]", ""))).cast("long"))
+      t(s, dir, "documents")
+        .select(col("doc_id"), w.as("n_words"), l.as("n_letters"),
+          sn.as("n_sentences"))
+        .select(col("doc_id"), col("n_words"), col("n_letters"),
+          col("n_sentences"),
+          round(lit(0.0588) * (col("n_letters") * lit(100.0) / col("n_words"))
+            - lit(0.296) * (col("n_sentences") * lit(100.0) / col("n_words"))
+            - lit(15.8), 6).as("coleman_liau"),
+          round(lit(4.71) * (col("n_letters").cast("double") / col("n_words"))
+            + lit(0.58) * (col("n_words").cast("double") / col("n_sentences"))
+            - lit(21.43), 6).as("ari"))
+        .orderBy("doc_id")
+    },
+      Some("""WITH c AS (SELECT doc_id,
+             |   CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
+             |   CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g'))
+             |     AS BIGINT) AS n_letters,
+             |   greatest(CAST(1 AS BIGINT),
+             |     CAST(length(text) - length(regexp_replace(text, '[.!?]',
+             |       '', 'g')) AS BIGINT)) AS n_sentences
+             |  FROM documents)
+             |SELECT doc_id, n_words, n_letters, n_sentences,
+             | round(0.0588 * (n_letters * 100.0 / n_words)
+             |   - 0.296 * (n_sentences * 100.0 / n_words) - 15.8, 6)
+             |   AS coleman_liau,
+             | round(4.71 * (CAST(n_letters AS DOUBLE) / n_words)
+             |   + 0.58 * (CAST(n_words AS DOUBLE) / n_sentences) - 21.43, 6)
+             |   AS ari
+             |FROM c ORDER BY doc_id""".stripMargin)),
+
+    // LEXICAL DIVERSITY (round 11) — per-doc type/token ratio and
+    // hapax-legomena ratio, the vocabulary-richness signals beside
+    // text_repetition's dup-run view: TTR low → template/spam text;
+    // hapax high → OCR noise or genuinely rich prose. Exact integer
+    // counts from one explode + two-phase agg (map-side combinable on
+    // (doc, token)); the two ratios are single IEEE divisions.
+    Op("text_lexical_diversity", (s, dir) =>
+      t(s, dir, "documents")
+        .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
+        .groupBy("doc_id", "w").agg(count(lit(1)).as("cnt"))
+        .groupBy("doc_id")
+        .agg(sum("cnt").as("n_tokens"),
+          count(lit(1)).as("n_types"),
+          sum(when(col("cnt") === 1L, 1L).otherwise(0L)).as("n_hapax"))
+        .select(col("doc_id"), col("n_tokens"), col("n_types"),
+          col("n_hapax"),
+          round(col("n_types").cast("double")
+            / col("n_tokens").cast("double"), 6).as("ttr"),
+          round(col("n_hapax").cast("double")
+            / col("n_tokens").cast("double"), 6).as("hapax_ratio"))
+        .orderBy("doc_id"),
+      Some("""WITH tk AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w
+             |  FROM documents),
+             | c AS (SELECT doc_id, w, count(*) AS cnt FROM tk GROUP BY 1, 2)
+             |SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_tokens,
+             | count(*) AS n_types,
+             | CAST(sum(CASE WHEN cnt = 1 THEN 1 ELSE 0 END) AS BIGINT)
+             |   AS n_hapax,
+             | round(CAST(count(*) AS DOUBLE) / CAST(sum(cnt) AS DOUBLE), 6)
+             |   AS ttr,
+             | round(CAST(sum(CASE WHEN cnt = 1 THEN 1 ELSE 0 END) AS DOUBLE)
+             |   / CAST(sum(cnt) AS DOUBLE), 6) AS hapax_ratio
+             |FROM c GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+
+    // TERM-FREQUENCY DRIFT (round 11) — which vocabulary is RISING or
+    // FALLING across the corpus's ingestion order? (doc_id is the
+    // corpus position axis — the drift readout a crawl pipeline watches
+    // between snapshots.) For the top-100 df terms: per-position-decile
+    // counts, then the OLS slope over the 10-bucket series — with
+    // x = 0..9 fixed, Σx=45 and Σx²=285 are constants, so
+    // slope = (10·Σxy − 45·Σy)/825 is ONE exact-integer division per
+    // term. Top-10 risers by rounded slope (term tiebreak). Scale: one
+    // explode + two bounded aggs; the term list is a TakeOrdered slice
+    // and the grid is 100×10.
+    Op("text_term_drift", (s, dir) => {
+      val tk = t(s, dir, "documents")
+        .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
+      val top = tk.groupBy("w").agg(count(lit(1)).as("cw"))
+        .orderBy(col("cw").desc, col("w")).limit(100)
+        .localCheckpoint() // feeds the bucket join and the final join
+      val nmax = t(s, dir, "documents").agg(max("doc_id").as("mx"))
+      val bt = tk.join(broadcast(top.select("w")), Seq("w"))
+        .crossJoin(broadcast(nmax))
+        .select(col("w"), expr("(doc_id * 10) div (mx + 1)").as("b"))
+        .groupBy("w", "b").agg(count(lit(1)).as("y"))
+      val grid = top.select(col("w"))
+        .crossJoin(broadcast(s.range(0, 10).select(col("id").as("b"))))
+      val dense = grid.join(bt, Seq("w", "b"), "left").na.fill(0L, Seq("y"))
+      val mom = dense.groupBy("w")
+        .agg(sum("y").as("sy"), sum(col("b") * col("y")).as("sxy"))
+      mom.join(broadcast(top), Seq("w"))
+        .select(col("w").as("term"), col("cw").as("n_occurrences"),
+          round((lit(10L) * col("sxy") - lit(45L) * col("sy"))
+            .cast("double") / lit(825.0), 6).as("slope"))
+        .orderBy(col("slope").desc, col("term")).limit(10)
+    },
+      Some("""WITH tk AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w
+             |  FROM documents),
+             | top AS (SELECT w, count(*) AS cw FROM tk GROUP BY 1
+             |  ORDER BY cw DESC, w LIMIT 100),
+             | mx AS (SELECT max(doc_id) AS mx FROM documents),
+             | bt AS (SELECT w, (doc_id * 10) // ((SELECT mx FROM mx) + 1)
+             |     AS b, count(*) AS y
+             |  FROM tk WHERE w IN (SELECT w FROM top) GROUP BY 1, 2),
+             | grid AS (SELECT w, b FROM top CROSS JOIN
+             |  (SELECT unnest(generate_series(0, 9)) AS b)),
+             | dense AS (SELECT grid.w, grid.b, COALESCE(y, 0) AS y
+             |  FROM grid LEFT JOIN bt ON grid.w = bt.w AND grid.b = bt.b),
+             | mom AS (SELECT w, CAST(sum(y) AS BIGINT) AS sy,
+             |   CAST(sum(b * y) AS BIGINT) AS sxy FROM dense GROUP BY 1)
+             |SELECT mom.w AS term, cw AS n_occurrences,
+             | round(CAST(10 * sxy - 45 * sy AS DOUBLE) / 825.0, 6) AS slope
+             |FROM mom JOIN top ON mom.w = top.w
+             |ORDER BY slope DESC, term LIMIT 10""".stripMargin)),
+
+    // PAIRWISE JENSEN–SHANNON DIVERGENCE (round 11) — the symmetric,
+    // bounded domain-similarity matrix between sources' word
+    // distributions (text_entropy_kl gives each source vs the corpus;
+    // this gives source vs source — the input a pretraining-mix planner
+    // clusters on). Decomposition that never needs the absent-word
+    // rows: common-vocabulary terms ½(p·ln(2p/(p+q)) + q·ln(2q/(p+q)))
+    // join on the word key (per-word fan-out ≤ |sources|² — sources
+    // bounded, vocab-sized frames shuffle linearly), and each side's
+    // missing mass enters as ½·ln2·(1−Σp_common). Determinism: the
+    // entropy_kl rule — per-row log terms snap to DECIMAL(18,6) before
+    // the order-free sum; ln2 is a JVM constant interpolated into both
+    // engines.
+    Op("text_js_divergence", (s, dir) => {
+      val dec = org.apache.spark.sql.types.DecimalType(18, 6)
+      val sc = t(s, dir, "documents")
+        .select(col("source"), explode(split(col("text"), " ")).as("w"))
+        .groupBy("source", "w").agg(count(lit(1)).as("c"))
+      val st = sc.groupBy("source").agg(sum("c").as("tot"))
+      val d = sc.join(st, "source")
+        .select(col("source"), col("w"), (col("c") / col("tot")).as("p"))
+        .localCheckpoint() // both pair sides read this frame
+      val a = d.select(col("source").as("src_a"), col("w"),
+        col("p").as("pa"))
+      val b = d.select(col("source").as("src_b"), col("w"),
+        col("p").as("pb"))
+      val term = (lit(0.5) *
+        (col("pa") * log(lit(2.0) * col("pa") / (col("pa") + col("pb"))) +
+          col("pb") * log(lit(2.0) * col("pb") / (col("pa") + col("pb")))))
+        .cast(dec)
+      val ln2 = math.log(2.0)
+      a.join(b, Seq("w")).filter(col("src_a") < col("src_b"))
+        .select(col("src_a"), col("src_b"), term.as("term"),
+          col("pa").cast(dec).as("pa6"), col("pb").cast(dec).as("pb6"))
+        .groupBy("src_a", "src_b")
+        .agg(count(lit(1)).as("n_common_words"),
+          sum(col("term")).as("cs"),
+          sum(col("pa6")).as("ma"), sum(col("pb6")).as("mb"))
+        .select(col("src_a"), col("src_b"), col("n_common_words"),
+          round(col("cs").cast("double") + lit(0.5) * lit(ln2) *
+            ((lit(1.0) - col("ma").cast("double")) +
+              (lit(1.0) - col("mb").cast("double"))), 6).as("js_div"))
+        .orderBy("src_a", "src_b")
+    },
+      Some {
+        val ln2 = math.log(2.0)
+        s"""WITH sc AS (SELECT source, w, count(*) AS c
+           |  FROM (SELECT source, unnest(string_split(text, ' ')) AS w
+           |    FROM documents) GROUP BY 1, 2),
+           | st AS (SELECT source, CAST(sum(c) AS BIGINT) AS tot FROM sc
+           |  GROUP BY 1),
+           | d AS (SELECT sc.source, w, CAST(c AS DOUBLE) / tot AS p
+           |  FROM sc JOIN st USING (source)),
+           | pr AS (SELECT a.source AS src_a, b.source AS src_b,
+           |   CAST(0.5 * (a.p * ln(2.0 * a.p / (a.p + b.p))
+           |     + b.p * ln(2.0 * b.p / (a.p + b.p))) AS DECIMAL(18,6))
+           |     AS term,
+           |   CAST(a.p AS DECIMAL(18,6)) AS pa6,
+           |   CAST(b.p AS DECIMAL(18,6)) AS pb6
+           |  FROM d a JOIN d b ON a.w = b.w AND a.source < b.source)
+           |SELECT src_a, src_b, count(*) AS n_common_words,
+           | round(CAST(sum(term) AS DOUBLE) + 0.5 * $ln2
+           |   * ((1.0 - CAST(sum(pa6) AS DOUBLE))
+           |     + (1.0 - CAST(sum(pb6) AS DOUBLE))), 6) AS js_div
+           |FROM pr GROUP BY 1, 2 ORDER BY src_a, src_b""".stripMargin
+      }),
+
+    // TOKENIZER FERTILITY per language — the first table a tokenizer
+    // review shows: pieces/word (fertility) and chars/piece by lang,
+    // the numbers that reveal a vocabulary under-serving a script
+    // (fertility 2× on one language = that language pays 2× the
+    // sequence length per word). Uses the same length/4 BPE-ish piece
+    // rule as text_token_count so the two keys reconcile. Shape:
+    // explode → per-(lang, doc) partial agg → per-lang agg, both
+    // map-side combinable; exact integer sums, two terminal divisions.
+    Op("pipeline_tokenizer_fertility", (s, dir) =>
+      t(s, dir, "documents")
+        .select(col("lang"), col("doc_id"),
+          explode(split(col("text"), " ")).as("w"))
+        .groupBy("lang", "doc_id")
+        .agg(count(lit(1)).as("n_words"),
+          sum(ceil(length(col("w")) / lit(4.0)).cast("long")).as("n_pieces"),
+          sum(length(col("w")).cast("long")).as("n_word_chars"))
+        .groupBy("lang")
+        .agg(count(lit(1)).as("n_docs"),
+          sum("n_words").as("n_words"),
+          sum("n_pieces").as("n_pieces"),
+          sum("n_word_chars").as("n_word_chars"))
+        .select(col("lang"), col("n_docs"), col("n_words"), col("n_pieces"),
+          round(col("n_pieces").cast("double") / col("n_words"), 6)
+            .as("fertility"),
+          round(col("n_word_chars").cast("double") / col("n_pieces"), 6)
+            .as("chars_per_piece"))
+        .orderBy("lang"),
+      Some("""WITH w AS (SELECT lang, doc_id,
+             |   unnest(string_split(text, ' ')) AS w FROM documents),
+             | pd AS (SELECT lang, doc_id, count(*) AS n_words,
+             |   sum(CAST(ceil(len(w) / 4.0) AS BIGINT)) AS n_pieces,
+             |   sum(CAST(len(w) AS BIGINT)) AS n_word_chars
+             |  FROM w GROUP BY 1, 2)
+             |SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
+             | CAST(sum(n_words) AS BIGINT) AS n_words,
+             | CAST(sum(n_pieces) AS BIGINT) AS n_pieces,
+             | round(CAST(sum(n_pieces) AS DOUBLE) / sum(n_words), 6) AS fertility,
+             | round(CAST(sum(n_word_chars) AS DOUBLE) / sum(n_pieces), 6)
+             |   AS chars_per_piece
+             |FROM pd GROUP BY 1 ORDER BY lang""".stripMargin)),
   )
 }

@@ -30,11 +30,11 @@ object TpchOps {
 
   private val day = (n: Int) => expr(s"INTERVAL $n DAYS")
 
-  val queries: Map[String, Q] = Map(
+  val ops: Seq[Op] = Seq(
     // Q4: order-priority checking — EXISTS becomes one left-semi join on
     // the order key; the correlated non-equi part (shipped >60 days after
     // order placement) rides the join condition.
-    "tpch_q4" -> ((s, dir) => {
+    Op("tpch_q4", (s, dir) => {
       val o = t(s, dir, "orders")
         .filter(col("o_orderdate") >= lit("1996-07-01").cast("timestamp") &&
           col("o_orderdate") < lit("1996-10-01").cast("timestamp"))
@@ -43,22 +43,35 @@ object TpchOps {
           col("l_shipdate") > col("o_orderdate") + day(60), "left_semi")
         .groupBy("o_orderpriority").agg(count(lit(1)).as("order_count"))
         .orderBy("o_orderpriority")
-    }),
+    },
+      Some("""SELECT o_orderpriority, count(*) AS order_count
+             |FROM orders
+             |WHERE o_orderdate >= TIMESTAMP '1996-07-01'
+             | AND o_orderdate < TIMESTAMP '1996-10-01'
+             | AND EXISTS (SELECT 1 FROM lineitem
+             |   WHERE l_orderkey = o_orderkey
+             |    AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
+             |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)),
 
     // Q6: forecast revenue change — pure scan-side conjunctive filter,
     // zero joins, one global agg. The whole WHERE must reach the parquet
     // scan as PushedFilters.
-    "tpch_q6" -> ((s, dir) =>
+    Op("tpch_q6", (s, dir) =>
       t(s, dir, "lineitem")
         .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
           col("l_shipdate") < lit("1997-01-01").cast("timestamp") &&
           col("l_discount").between(0.05, 0.07) && col("l_quantity") < 24)
-        .agg(dsum(col("l_extendedprice") * col("l_discount")).as("revenue"))),
+        .agg(dsum(col("l_extendedprice") * col("l_discount")).as("revenue")),
+      Some(s"""SELECT ${dsumSql("l_extendedprice * l_discount")} AS revenue
+              |FROM lineitem
+              |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+              | AND l_shipdate < TIMESTAMP '1997-01-01'
+              | AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin)),
 
     // Q7: volume shipping between two nations — the nation dim joins in
     // TWO roles (supplier's and customer's); both roles broadcast, so the
     // fact side shuffles only for lineitem⋈orders.
-    "tpch_q7" -> ((s, dir) => {
+    Op("tpch_q7", (s, dir) => {
       val n1 = t(s, dir, "nation").select(
         col("n_nationkey").as("sn_key"), col("n_name").as("supp_nation"))
       val n2 = t(s, dir, "nation").select(
@@ -86,12 +99,27 @@ object TpchOps {
           year(col("l_shipdate")).as("l_year"))
         .agg(dsum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue"))
         .orderBy("supp_nation", "cust_nation", "l_year")
-    }),
+    },
+      Some(s"""SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+              | CAST(year(l_shipdate) AS INT) AS l_year,
+              | ${dsumSql("l_extendedprice * (1 - l_discount)")} AS revenue
+              |FROM lineitem
+              | JOIN orders ON l_orderkey = o_orderkey
+              | JOIN supplier ON l_suppkey = s_suppkey
+              | JOIN customer ON o_custkey = c_custkey
+              | JOIN nation n1 ON s_nationkey = n1.n_nationkey
+              | JOIN nation n2 ON c_nationkey = n2.n_nationkey
+              |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+              | AND l_shipdate < TIMESTAMP '1998-01-01'
+              | AND n1.n_name IN ('NATION_10', 'NATION_11', 'NATION_12', 'NATION_20')
+              | AND n2.n_name IN ('NATION_10', 'NATION_11', 'NATION_12', 'NATION_20')
+              | AND n1.n_name <> n2.n_name
+              |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin)),
 
     // Q8: national market share — nation again in two roles (customer's
     // region gate + supplier's share flag); share = conditional sum over
     // total, computed per year from the same single aggregation.
-    "tpch_q8" -> ((s, dir) => {
+    Op("tpch_q8", (s, dir) => {
       val r = t(s, dir, "region").filter(col("r_name") === "ASIA")
       val custN = t(s, dir, "nation")
         .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
@@ -120,11 +148,31 @@ object TpchOps {
         .select(col("o_year"),
           round(col("nation_vol") / col("total_vol"), 6).as("mkt_share"))
         .orderBy("o_year")
-    }),
+    },
+      Some("""WITH j AS (
+             | SELECT year(o_orderdate) AS o_year,
+             |  l_extendedprice * (1 - l_discount) AS vol,
+             |  n1.n_name AS supp_nation
+             | FROM lineitem
+             |  JOIN part ON l_partkey = p_partkey
+             |  JOIN orders ON l_orderkey = o_orderkey
+             |  JOIN customer ON o_custkey = c_custkey
+             |  JOIN nation n2 ON c_nationkey = n2.n_nationkey
+             |  JOIN region ON n2.n_regionkey = r_regionkey
+             |  JOIN supplier ON l_suppkey = s_suppkey
+             |  JOIN nation n1 ON s_nationkey = n1.n_nationkey
+             | WHERE p_type = 'ECONOMY' AND r_name = 'ASIA'
+             |  AND o_orderdate >= TIMESTAMP '1996-01-01'
+             |  AND o_orderdate < TIMESTAMP '1998-01-01')
+             |SELECT CAST(o_year AS INT) AS o_year,
+             | round(CAST(sum(CAST(CASE WHEN supp_nation = 'NATION_2' THEN vol
+             |     ELSE 0 END AS DECIMAL(18,4))) AS DOUBLE)
+             |  / CAST(sum(CAST(vol AS DECIMAL(18,4))) AS DOUBLE), 6) AS mkt_share
+             |FROM j GROUP BY o_year ORDER BY o_year""".stripMargin)),
 
     // Q12 shape: priority counts per group over a fact-fact join —
     // l_returnflag stands in for the missing l_shipmode.
-    "tpch_q12" -> ((s, dir) => {
+    Op("tpch_q12", (s, dir) => {
       val hi = col("o_orderpriority").isin("1-URGENT", "2-HIGH")
       t(s, dir, "orders").select("o_orderkey", "o_orderpriority")
         .join(t(s, dir, "lineitem")
@@ -136,12 +184,21 @@ object TpchOps {
         .agg(count_if(hi).as("high_line_count"),
           count_if(!hi).as("low_line_count"))
         .orderBy("l_returnflag")
-    }),
+    },
+      Some("""SELECT l_returnflag,
+             | count(*) FILTER (WHERE o_orderpriority IN ('1-URGENT', '2-HIGH'))
+             |   AS high_line_count,
+             | count(*) FILTER (WHERE o_orderpriority NOT IN ('1-URGENT', '2-HIGH'))
+             |   AS low_line_count
+             |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+             |WHERE l_shipdate >= TIMESTAMP '1997-01-01'
+             | AND l_shipdate < TIMESTAMP '1998-01-01'
+             |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
 
     // Q13: customer order-count distribution — LEFT OUTER join keeps
     // zero-order customers (the filter lives in the join condition, not a
     // WHERE), then the per-customer counts re-aggregate into a histogram.
-    "tpch_q13" -> ((s, dir) => {
+    Op("tpch_q13", (s, dir) => {
       val o = t(s, dir, "orders")
         .filter(col("o_orderpriority") =!= "5-LOW")
         .select("o_orderkey", "o_custkey")
@@ -150,11 +207,17 @@ object TpchOps {
         .groupBy("c_custkey").agg(count(col("o_orderkey")).as("c_count"))
         .groupBy("c_count").agg(count(lit(1)).as("custdist"))
         .orderBy(col("custdist").desc, col("c_count").desc)
-    }),
+    },
+      Some("""SELECT c_count, count(*) AS custdist FROM (
+             | SELECT c_custkey, count(o_orderkey) AS c_count
+             | FROM customer LEFT OUTER JOIN orders
+             |   ON c_custkey = o_custkey AND o_orderpriority <> '5-LOW'
+             | GROUP BY c_custkey)
+             |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin)),
 
     // Q14: promo revenue share — conditional numerator and total from ONE
     // aggregation over the lineitem⋈part join (part broadcasts).
-    "tpch_q14" -> ((s, dir) => {
+    Op("tpch_q14", (s, dir) => {
       val vol = col("l_extendedprice") * (lit(1) - col("l_discount"))
       t(s, dir, "lineitem")
         .filter(col("l_shipdate") >= lit("1996-09-01").cast("timestamp") &&
@@ -166,14 +229,23 @@ object TpchOps {
           dsum(vol).as("total_vol"))
         .select(round(lit(100.0) * col("promo_vol") / col("total_vol"), 6)
           .as("promo_revenue"))
-    }),
+    },
+      Some("""SELECT round(
+             | 100.0 * CAST(sum(CAST(CASE WHEN p_type = 'PROMO'
+             |     THEN l_extendedprice * (1 - l_discount) ELSE 0 END
+             |    AS DECIMAL(18,4))) AS DOUBLE)
+             |  / CAST(sum(CAST(l_extendedprice * (1 - l_discount)
+             |    AS DECIMAL(18,4))) AS DOUBLE), 6) AS promo_revenue
+             |FROM lineitem JOIN part ON l_partkey = p_partkey
+             |WHERE l_shipdate >= TIMESTAMP '1996-09-01'
+             | AND l_shipdate < TIMESTAMP '1996-11-01'""".stripMargin)),
 
     // Q15: top supplier — global max over the per-supplier revenue agg as
     // a 1-row max aggregate broadcast back (the repo's standard scalar
     // frame), NOT an empty-frame window: |suppliers| grows with the
     // corpus, and an unpartitioned WindowExec would single-partition it.
     // Either way lineitem is scanned once.
-    "tpch_q15" -> ((s, dir) => {
+    Op("tpch_q15", (s, dir) => {
       // rev feeds both the max scalar and the filter: localCheckpoint it
       // (a |suppliers|-row aggregate — bounded) so lineitem scans ONCE,
       // instead of trusting runtime exchange reuse across the branches.
@@ -191,13 +263,24 @@ object TpchOps {
           col("l_suppkey") === col("s_suppkey"))
         .select(col("s_suppkey"), col("s_name"), col("total_rev"))
         .orderBy("s_suppkey")
-    }),
+    },
+      Some(s"""WITH rev AS (
+              | SELECT l_suppkey,
+              |  ${dsumSql("l_extendedprice * (1 - l_discount)")} AS total_rev
+              | FROM lineitem
+              | WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+              |  AND l_shipdate < TIMESTAMP '1996-04-01'
+              | GROUP BY l_suppkey)
+              |SELECT s_suppkey, s_name, total_rev
+              |FROM supplier JOIN rev ON s_suppkey = l_suppkey
+              |WHERE total_rev = (SELECT max(total_rev) FROM rev)
+              |ORDER BY s_suppkey""".stripMargin)),
 
     // Q17: small-quantity-order revenue — correlated scalar AVG subquery,
     // declared in SQL so Catalyst's decorrelation (agg + join on
     // l_partkey) is the path under test. p_size<15 stands in for the
     // missing p_container gate.
-    "tpch_q17" -> ((s, dir) => {
+    Op("tpch_q17", (s, dir) => {
       t(s, dir, "lineitem").createOrReplaceTempView("li_q17")
       t(s, dir, "part").createOrReplaceTempView("part_q17")
       s.sql(
@@ -207,13 +290,19 @@ object TpchOps {
           |WHERE p_brand = 'Brand#4' AND p_size < 15
           | AND l_quantity < (SELECT 0.5 * avg(l2.l_quantity)
           |     FROM li_q17 l2 WHERE l2.l_partkey = p_partkey)""".stripMargin)
-    }),
+    },
+      Some("""SELECT round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) / 7.0, 6)
+             |   AS avg_yearly
+             |FROM lineitem JOIN part ON p_partkey = l_partkey
+             |WHERE p_brand = 'Brand#4' AND p_size < 15
+             | AND l_quantity < (SELECT 0.5 * avg(l2.l_quantity)
+             |     FROM lineitem l2 WHERE l2.l_partkey = p_partkey)""".stripMargin)),
 
     // Q19: disjunctive join predicate — three (brand, size, quantity)
     // conjunct groups OR'd together across BOTH join inputs; Catalyst must
     // still broadcast part and evaluate the residual OR post-join without
     // a cartesian.
-    "tpch_q19" -> ((s, dir) => {
+    Op("tpch_q19", (s, dir) => {
       val l = t(s, dir, "lineitem")
         .select("l_partkey", "l_quantity", "l_extendedprice", "l_discount")
       val p = t(s, dir, "part").select("p_partkey", "p_brand", "p_size")
@@ -228,7 +317,15 @@ object TpchOps {
         .filter(disj)
         .agg(dsum(col("l_extendedprice") * (lit(1) - col("l_discount")))
           .as("revenue"))
-    }),
+    },
+      Some(s"""SELECT ${dsumSql("l_extendedprice * (1 - l_discount)")} AS revenue
+              |FROM lineitem JOIN part ON l_partkey = p_partkey
+              |WHERE (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 15
+              |    AND l_quantity BETWEEN 1 AND 11)
+              | OR (p_brand = 'Brand#4' AND p_size BETWEEN 1 AND 25
+              |    AND l_quantity BETWEEN 10 AND 20)
+              | OR (p_brand = 'Brand#17' AND p_size BETWEEN 1 AND 35
+              |    AND l_quantity BETWEEN 20 AND 30)""".stripMargin)),
 
     // Q21: suppliers who kept orders waiting. The textbook EXISTS +
     // NOT EXISTS decorrelates into a semi and an anti join — but Spark
@@ -244,7 +341,7 @@ object TpchOps {
     // line counts. The DuckDB oracle keeps the EXISTS formulation, so
     // the hash match proves the rewrite's equivalence.
     // "Late" = shipped >90 days after order placement.
-    "tpch_q21" -> ((s, dir) => {
+    Op("tpch_q21", (s, dir) => {
       t(s, dir, "lineitem").createOrReplaceTempView("li_q21")
       t(s, dir, "orders").createOrReplaceTempView("ord_q21")
       t(s, dir, "supplier").createOrReplaceTempView("supp_q21")
@@ -269,14 +366,30 @@ object TpchOps {
           |GROUP BY s_name
           |ORDER BY numwait DESC, s_name
           |LIMIT 100""".stripMargin)
-    }),
+    },
+      Some("""WITH lat AS (
+             | SELECT l_orderkey, l_suppkey,
+             |  (l_shipdate > o_orderdate + INTERVAL 90 DAY) AS late
+             | FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+             | WHERE o_orderstatus = 'F')
+             |SELECT s_name, count(*) AS numwait
+             |FROM supplier JOIN lat l1 ON s_suppkey = l1.l_suppkey
+             |WHERE l1.late
+             | AND EXISTS (SELECT 1 FROM lat l2
+             |   WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey)
+             | AND NOT EXISTS (SELECT 1 FROM lat l3
+             |   WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey
+             |    AND l3.late)
+             |GROUP BY s_name
+             |ORDER BY numwait DESC, s_name
+             |LIMIT 100""".stripMargin)),
 
     // Q22: global sales opportunity — uncorrelated scalar AVG subquery
     // (one-row broadcast) + NOT EXISTS anti join against orders.
     // c_custkey % 7 stands in for the missing phone country code, and
     // "no orders at all" (empty at this data's density) becomes "no
     // orders since 2000" so the anti join actually passes rows.
-    "tpch_q22" -> ((s, dir) => {
+    Op("tpch_q22", (s, dir) => {
       t(s, dir, "customer").createOrReplaceTempView("cust_q22")
       t(s, dir, "orders").createOrReplaceTempView("ord_q22")
       s.sql(
@@ -291,145 +404,17 @@ object TpchOps {
           |     WHERE o.o_custkey = c.c_custkey
           |      AND o.o_orderdate >= TIMESTAMP '2000-01-01')
           |GROUP BY 1 ORDER BY 1""".stripMargin)
-    }),
-  )
-
-  val oracle: Map[String, String] = Map(
-    "tpch_q4" ->
-      """SELECT o_orderpriority, count(*) AS order_count
-        |FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1996-07-01'
-        | AND o_orderdate < TIMESTAMP '1996-10-01'
-        | AND EXISTS (SELECT 1 FROM lineitem
-        |   WHERE l_orderkey = o_orderkey
-        |    AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "tpch_q6" ->
-      s"""SELECT ${dsumSql("l_extendedprice * l_discount")} AS revenue
-         |FROM lineitem
-         |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-         | AND l_shipdate < TIMESTAMP '1997-01-01'
-         | AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin,
-    "tpch_q7" ->
-      s"""SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-         | CAST(year(l_shipdate) AS INT) AS l_year,
-         | ${dsumSql("l_extendedprice * (1 - l_discount)")} AS revenue
-         |FROM lineitem
-         | JOIN orders ON l_orderkey = o_orderkey
-         | JOIN supplier ON l_suppkey = s_suppkey
-         | JOIN customer ON o_custkey = c_custkey
-         | JOIN nation n1 ON s_nationkey = n1.n_nationkey
-         | JOIN nation n2 ON c_nationkey = n2.n_nationkey
-         |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-         | AND l_shipdate < TIMESTAMP '1998-01-01'
-         | AND n1.n_name IN ('NATION_10', 'NATION_11', 'NATION_12', 'NATION_20')
-         | AND n2.n_name IN ('NATION_10', 'NATION_11', 'NATION_12', 'NATION_20')
-         | AND n1.n_name <> n2.n_name
-         |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-    "tpch_q8" ->
-      """WITH j AS (
-        | SELECT year(o_orderdate) AS o_year,
-        |  l_extendedprice * (1 - l_discount) AS vol,
-        |  n1.n_name AS supp_nation
-        | FROM lineitem
-        |  JOIN part ON l_partkey = p_partkey
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN nation n2 ON c_nationkey = n2.n_nationkey
-        |  JOIN region ON n2.n_regionkey = r_regionkey
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation n1 ON s_nationkey = n1.n_nationkey
-        | WHERE p_type = 'ECONOMY' AND r_name = 'ASIA'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01')
-        |SELECT CAST(o_year AS INT) AS o_year,
-        | round(CAST(sum(CAST(CASE WHEN supp_nation = 'NATION_2' THEN vol
-        |     ELSE 0 END AS DECIMAL(18,4))) AS DOUBLE)
-        |  / CAST(sum(CAST(vol AS DECIMAL(18,4))) AS DOUBLE), 6) AS mkt_share
-        |FROM j GROUP BY o_year ORDER BY o_year""".stripMargin,
-    "tpch_q12" ->
-      """SELECT l_returnflag,
-        | count(*) FILTER (WHERE o_orderpriority IN ('1-URGENT', '2-HIGH'))
-        |   AS high_line_count,
-        | count(*) FILTER (WHERE o_orderpriority NOT IN ('1-URGENT', '2-HIGH'))
-        |   AS low_line_count
-        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-        | AND l_shipdate < TIMESTAMP '1998-01-01'
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "tpch_q13" ->
-      """SELECT c_count, count(*) AS custdist FROM (
-        | SELECT c_custkey, count(o_orderkey) AS c_count
-        | FROM customer LEFT OUTER JOIN orders
-        |   ON c_custkey = o_custkey AND o_orderpriority <> '5-LOW'
-        | GROUP BY c_custkey)
-        |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin,
-    "tpch_q14" ->
-      """SELECT round(
-        | 100.0 * CAST(sum(CAST(CASE WHEN p_type = 'PROMO'
-        |     THEN l_extendedprice * (1 - l_discount) ELSE 0 END
-        |    AS DECIMAL(18,4))) AS DOUBLE)
-        |  / CAST(sum(CAST(l_extendedprice * (1 - l_discount)
-        |    AS DECIMAL(18,4))) AS DOUBLE), 6) AS promo_revenue
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE l_shipdate >= TIMESTAMP '1996-09-01'
-        | AND l_shipdate < TIMESTAMP '1996-11-01'""".stripMargin,
-    "tpch_q15" ->
-      s"""WITH rev AS (
-         | SELECT l_suppkey,
-         |  ${dsumSql("l_extendedprice * (1 - l_discount)")} AS total_rev
-         | FROM lineitem
-         | WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-         |  AND l_shipdate < TIMESTAMP '1996-04-01'
-         | GROUP BY l_suppkey)
-         |SELECT s_suppkey, s_name, total_rev
-         |FROM supplier JOIN rev ON s_suppkey = l_suppkey
-         |WHERE total_rev = (SELECT max(total_rev) FROM rev)
-         |ORDER BY s_suppkey""".stripMargin,
-    "tpch_q17" ->
-      """SELECT round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) / 7.0, 6)
-        |   AS avg_yearly
-        |FROM lineitem JOIN part ON p_partkey = l_partkey
-        |WHERE p_brand = 'Brand#4' AND p_size < 15
-        | AND l_quantity < (SELECT 0.5 * avg(l2.l_quantity)
-        |     FROM lineitem l2 WHERE l2.l_partkey = p_partkey)""".stripMargin,
-    "tpch_q19" ->
-      s"""SELECT ${dsumSql("l_extendedprice * (1 - l_discount)")} AS revenue
-         |FROM lineitem JOIN part ON l_partkey = p_partkey
-         |WHERE (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 15
-         |    AND l_quantity BETWEEN 1 AND 11)
-         | OR (p_brand = 'Brand#4' AND p_size BETWEEN 1 AND 25
-         |    AND l_quantity BETWEEN 10 AND 20)
-         | OR (p_brand = 'Brand#17' AND p_size BETWEEN 1 AND 35
-         |    AND l_quantity BETWEEN 20 AND 30)""".stripMargin,
-    "tpch_q21" ->
-      """WITH lat AS (
-        | SELECT l_orderkey, l_suppkey,
-        |  (l_shipdate > o_orderdate + INTERVAL 90 DAY) AS late
-        | FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        | WHERE o_orderstatus = 'F')
-        |SELECT s_name, count(*) AS numwait
-        |FROM supplier JOIN lat l1 ON s_suppkey = l1.l_suppkey
-        |WHERE l1.late
-        | AND EXISTS (SELECT 1 FROM lat l2
-        |   WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey)
-        | AND NOT EXISTS (SELECT 1 FROM lat l3
-        |   WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey
-        |    AND l3.late)
-        |GROUP BY s_name
-        |ORDER BY numwait DESC, s_name
-        |LIMIT 100""".stripMargin,
-    "tpch_q22" ->
-      """SELECT CAST(c_custkey % 7 AS INT) AS cntrycode,
-        | count(*) AS numcust,
-        | CAST(sum(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE) AS totacctbal
-        |FROM customer c
-        |WHERE c_custkey % 7 IN (1, 3, 5)
-        | AND c_acctbal > (SELECT avg(c_acctbal) FROM customer
-        |     WHERE c_acctbal > 0.0 AND c_custkey % 7 IN (1, 3, 5))
-        | AND NOT EXISTS (SELECT 1 FROM orders o
-        |     WHERE o.o_custkey = c.c_custkey
-        |      AND o.o_orderdate >= TIMESTAMP '2000-01-01')
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+    },
+      Some("""SELECT CAST(c_custkey % 7 AS INT) AS cntrycode,
+             | count(*) AS numcust,
+             | CAST(sum(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE) AS totacctbal
+             |FROM customer c
+             |WHERE c_custkey % 7 IN (1, 3, 5)
+             | AND c_acctbal > (SELECT avg(c_acctbal) FROM customer
+             |     WHERE c_acctbal > 0.0 AND c_custkey % 7 IN (1, 3, 5))
+             | AND NOT EXISTS (SELECT 1 FROM orders o
+             |     WHERE o.o_custkey = c.c_custkey
+             |      AND o.o_orderdate >= TIMESTAMP '2000-01-01')
+             |GROUP BY 1 ORDER BY 1""".stripMargin)),
   )
 }

@@ -11,8 +11,9 @@ import org.apache.spark.sql.types.DecimalType
   * surface as DOUBLE.
   */
 object WindowFuncs {
-  val queries: Map[String, Q] = Map(
-    "win_rank_topk" -> ((s, dir) => {
+
+  val ops: Seq[Op] = Seq(
+    Op("win_rank_topk", (s, dir) => {
       val w = Window.partitionBy("o_custkey")
         .orderBy(col("o_totalprice").desc, col("o_orderkey").desc)
       t(s, dir, "orders")
@@ -20,9 +21,15 @@ object WindowFuncs {
         .filter(col("rnk") <= 3)
         .select("o_custkey", "o_orderkey", "o_totalprice", "rnk")
         .orderBy("o_custkey", "rnk")
-    }),
+    },
+      Some("""SELECT o_custkey, o_orderkey, o_totalprice, rnk FROM (
+             |  SELECT o_custkey, o_orderkey, o_totalprice,
+             |    rank() OVER (PARTITION BY o_custkey
+             |      ORDER BY o_totalprice DESC, o_orderkey DESC) AS rnk
+             |  FROM orders)
+             |WHERE rnk <= 3 ORDER BY o_custkey, rnk""".stripMargin)),
 
-    "win_rownum_dense" -> ((s, dir) => {
+    Op("win_rownum_dense", (s, dir) => {
       val w = Window.partitionBy("o_custkey")
         .orderBy(col("o_totalprice").desc, col("o_orderkey").desc)
       t(s, dir, "orders")
@@ -31,9 +38,16 @@ object WindowFuncs {
           dense_rank().over(w).as("drnk"),
           ntile(4).over(w).as("quartile"))
         .orderBy("o_custkey", "rn")
-    }),
+    },
+      Some("""SELECT o_custkey, o_orderkey,
+             | CAST(row_number() OVER w AS INT) AS rn,
+             | CAST(dense_rank() OVER w AS INT) AS drnk,
+             | CAST(ntile(4) OVER w AS INT) AS quartile
+             |FROM orders
+             |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey DESC)
+             |ORDER BY o_custkey, rn""".stripMargin)),
 
-    "win_lag_lead" -> ((s, dir) => {
+    Op("win_lag_lead", (s, dir) => {
       val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
       events(s, dir)
         .select(col("event_id"), col("user_id"), col("ts"))
@@ -41,9 +55,15 @@ object WindowFuncs {
         .withColumn("next_gap_us", unix_micros(lead("ts", 1).over(w)) - unix_micros(col("ts")))
         .select("event_id", "gap_us", "next_gap_us")
         .orderBy("event_id")
-    }),
+    },
+      Some("""SELECT event_id,
+             | epoch_us(ts2) - epoch_us(lag(ts2, 1) OVER w) AS gap_us,
+             | epoch_us(lead(ts2, 1) OVER w) - epoch_us(ts2) AS next_gap_us
+             |FROM (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts2 FROM events)
+             |WINDOW w AS (PARTITION BY user_id ORDER BY ts2, event_id)
+             |ORDER BY event_id""".stripMargin)),
 
-    "win_running_sum" -> ((s, dir) => {
+    Op("win_running_sum", (s, dir) => {
       val w = Window.partitionBy("o_custkey")
         .orderBy(col("o_orderdate"), col("o_orderkey"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -52,11 +72,16 @@ object WindowFuncs {
           sum(col("o_totalprice").cast(DecimalType(18, 4))).over(w)
             .cast("double").as("cum_spend"))
         .orderBy("o_custkey", "o_orderkey")
-    }),
+    },
+      Some("""SELECT o_custkey, o_orderkey,
+             | CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) OVER (
+             |   PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+             |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS cum_spend
+             |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin)),
 
     // Trailing-1h sum per user: Spark range frames are numeric, so the
     // ordering key is epoch µs and the frame is [-3600e6, 0].
-    "win_range_frame" -> ((s, dir) => {
+    Op("win_range_frame", (s, dir) => {
       val w = Window.partitionBy("user_id")
         .orderBy(unix_micros(col("ts")))
         .rangeBetween(-3600L * 1000000L, 0L)
@@ -65,7 +90,12 @@ object WindowFuncs {
           sum(col("value").cast(DecimalType(18, 6))).over(w)
             .cast("double").as("sum_1h"))
         .orderBy("event_id")
-    }),
+    },
+      Some("""SELECT event_id,
+             | CAST(sum(CAST(value AS DECIMAL(18,6))) OVER (
+             |   PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP)
+             |   RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW) AS DOUBLE) AS sum_1h
+             |FROM events ORDER BY event_id""".stripMargin)),
 
     // Running COUNT(DISTINCT) per user — the classic "distinct event types
     // seen so far" cumulative metric. A distinct-aggregate window is
@@ -76,7 +106,7 @@ object WindowFuncs {
     // passes over the SAME (user)-keyed exchange — Spark reuses the hash
     // partitioning, so one shuffle total, constant per-row state, no
     // collect_set blowup at any cardinality.
-    "win_running_distinct" -> ((s, dir) => {
+    Op("win_running_distinct", (s, dir) => {
       val firstW = Window.partitionBy("user_id", "event_type")
         .orderBy(col("ts"), col("event_id"))
       val runW = Window.partitionBy("user_id")
@@ -89,7 +119,17 @@ object WindowFuncs {
         .select(col("event_id"), col("user_id"),
           sum(col("fs")).over(runW).as("n_distinct_types"))
         .orderBy("event_id")
-    }),
+    },
+      Some("""SELECT event_id, user_id,
+             | CAST(sum(fs) OVER (PARTITION BY user_id ORDER BY ts2, event_id
+             |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+             |   AS n_distinct_types
+             |FROM (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts2,
+             |   CASE WHEN row_number() OVER (PARTITION BY user_id, event_type
+             |     ORDER BY CAST(ts AS TIMESTAMP), event_id) = 1
+             |     THEN 1 ELSE 0 END AS fs
+             |  FROM events)
+             |ORDER BY event_id""".stripMargin)),
 
     // Rolling 20-row Pearson correlation (the feature-engineering form:
     // a trailing co-movement signal per row). Never the built-in corr()
@@ -103,7 +143,7 @@ object WindowFuncs {
     // zero-variance guard that yields NULL instead of a ±Inf/NaN
     // division). One partition-keyed exchange; the five window
     // aggregates share one frame pass.
-    "win_rolling_corr" -> ((s, dir) => {
+    Op("win_rolling_corr", (s, dir) => {
       // (l_orderkey, l_linenumber) is NOT unique in this synthetic feed
       // (the driver's generator does not enforce the TPC-H PK), so the
       // frame order tiebreaks through part/supp keys and finally the two
@@ -149,7 +189,24 @@ object WindowFuncs {
                    (col("n") * col("syy") - col("sy") * col("sy"))), 6))
             .as("rolling_corr"))
         .orderBy("l_returnflag", "l_orderkey", "l_linenumber")
-    }),
+    },
+      Some("""WITH s AS (SELECT l_returnflag, l_orderkey, l_linenumber,
+             |   CAST(count(*) OVER w AS DOUBLE) AS n,
+             |   CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) OVER w AS DOUBLE) AS sx,
+             |   CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) OVER w AS DOUBLE) AS sy,
+             |   CAST(sum(CAST(l_quantity * l_extendedprice AS DECIMAL(18,4))) OVER w AS DOUBLE) AS sxy,
+             |   CAST(sum(CAST(l_quantity * l_quantity AS DECIMAL(18,4))) OVER w AS DOUBLE) AS sxx,
+             |   CAST(sum(CAST(l_extendedprice * l_extendedprice AS DECIMAL(18,4))) OVER w AS DOUBLE) AS syy
+             |  FROM lineitem
+             |  WINDOW w AS (PARTITION BY l_returnflag ORDER BY l_orderkey,
+             |    l_linenumber, l_partkey, l_suppkey, l_quantity, l_extendedprice
+             |    ROWS BETWEEN 19 PRECEDING AND CURRENT ROW))
+             |SELECT l_returnflag, l_orderkey, l_linenumber,
+             | CASE WHEN (n * sxx - sx * sx) > 0.0 AND (n * syy - sy * sy) > 0.0
+             |   THEN round((n * sxy - sx * sy) /
+             |     sqrt((n * sxx - sx * sx) * (n * syy - sy * sy)), 6)
+             |   ELSE NULL END AS rolling_corr
+             |FROM s ORDER BY l_returnflag, l_orderkey, l_linenumber""".stripMargin)),
 
     // Per-row z-score standardization within the group (the feature-
     // normalization projection of a training pipeline) — population
@@ -170,7 +227,7 @@ object WindowFuncs {
     // this is the streaming-friendly smoother shape: bounded frame,
     // single key exchange, no global sort (the presentation orderBy is
     // the report's, dropped in pipeline use).
-    "win_rolling_median" -> ((s, dir) => {
+    Op("win_rolling_median", (s, dir) => {
       val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
         .rowsBetween(-6, Window.currentRow)
       events(s, dir)
@@ -178,9 +235,16 @@ object WindowFuncs {
           round(percentile(col("value"), lit(0.5)).over(w), 6)
             .as("rolling_median"))
         .orderBy("user_id", "ts", "event_id")
-    }),
+    },
+      Some("""WITH e AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, value
+             |  FROM events)
+             |SELECT event_id, user_id, ts, value,
+             | round(quantile_cont(value, 0.5) OVER (PARTITION BY user_id
+             |   ORDER BY ts, event_id ROWS BETWEEN 6 PRECEDING AND CURRENT ROW), 6)
+             |   AS rolling_median
+             |FROM e ORDER BY user_id, ts, event_id""".stripMargin)),
 
-    "win_zscore" -> ((s, dir) => {
+    Op("win_zscore", (s, dir) => {
       // Round 11: the unbounded every-row frame IS a group aggregate —
       // computed as one two-phase hash agg + broadcast join-back instead
       // of a WindowExec that would carry a whole returnflag's rows in one
@@ -206,9 +270,22 @@ object WindowFuncs {
                 - (col("sx") / col("n")) * (col("sx") / col("n"))), 6))
             .as("zscore"))
         .orderBy("l_returnflag", "l_orderkey", "l_linenumber", "qty")
-    }),
+    },
+      Some("""WITH s AS (SELECT l_returnflag, l_orderkey, l_linenumber,
+             |   l_quantity AS qty,
+             |   CAST(count(*) OVER w AS DOUBLE) AS n,
+             |   CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) OVER w AS DOUBLE) AS sx,
+             |   CAST(sum(CAST(l_quantity * l_quantity AS DECIMAL(18,4))) OVER w AS DOUBLE) AS sxx
+             |  FROM lineitem
+             |  WINDOW w AS (PARTITION BY l_returnflag))
+             |SELECT l_returnflag, l_orderkey, l_linenumber, qty,
+             | CASE WHEN (sxx / n - (sx / n) * (sx / n)) > 0.0
+             |   THEN round((qty - sx / n) /
+             |     sqrt(sxx / n - (sx / n) * (sx / n)), 6)
+             |   ELSE NULL END AS zscore
+             |FROM s ORDER BY l_returnflag, l_orderkey, l_linenumber, qty""".stripMargin)),
 
-    "win_first_last" -> ((s, dir) => {
+    Op("win_first_last", (s, dir) => {
       val day = date_trunc("DAY", col("ts"))
       val w = Window.partitionBy(col("user_id"), day)
         .orderBy(col("ts"), col("event_id"))
@@ -219,103 +296,14 @@ object WindowFuncs {
           last("event_type").over(w).as("last_ev"))
         .distinct()
         .orderBy("user_id", "day")
-    }),
-  )
-
-  val oracle: Map[String, String] = Map(
-    "win_rank_topk" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice, rnk FROM (
-        |  SELECT o_custkey, o_orderkey, o_totalprice,
-        |    rank() OVER (PARTITION BY o_custkey
-        |      ORDER BY o_totalprice DESC, o_orderkey DESC) AS rnk
-        |  FROM orders)
-        |WHERE rnk <= 3 ORDER BY o_custkey, rnk""".stripMargin,
-    "win_rownum_dense" ->
-      """SELECT o_custkey, o_orderkey,
-        | CAST(row_number() OVER w AS INT) AS rn,
-        | CAST(dense_rank() OVER w AS INT) AS drnk,
-        | CAST(ntile(4) OVER w AS INT) AS quartile
-        |FROM orders
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey DESC)
-        |ORDER BY o_custkey, rn""".stripMargin,
-    "win_lag_lead" ->
-      """SELECT event_id,
-        | epoch_us(ts2) - epoch_us(lag(ts2, 1) OVER w) AS gap_us,
-        | epoch_us(lead(ts2, 1) OVER w) - epoch_us(ts2) AS next_gap_us
-        |FROM (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts2 FROM events)
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts2, event_id)
-        |ORDER BY event_id""".stripMargin,
-    "win_running_sum" ->
-      """SELECT o_custkey, o_orderkey,
-        | CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) OVER (
-        |   PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS cum_spend
-        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "win_range_frame" ->
-      """SELECT event_id,
-        | CAST(sum(CAST(value AS DECIMAL(18,6))) OVER (
-        |   PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP)
-        |   RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW) AS DOUBLE) AS sum_1h
-        |FROM events ORDER BY event_id""".stripMargin,
-    "win_rolling_corr" ->
-      """WITH s AS (SELECT l_returnflag, l_orderkey, l_linenumber,
-        |   CAST(count(*) OVER w AS DOUBLE) AS n,
-        |   CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) OVER w AS DOUBLE) AS sx,
-        |   CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) OVER w AS DOUBLE) AS sy,
-        |   CAST(sum(CAST(l_quantity * l_extendedprice AS DECIMAL(18,4))) OVER w AS DOUBLE) AS sxy,
-        |   CAST(sum(CAST(l_quantity * l_quantity AS DECIMAL(18,4))) OVER w AS DOUBLE) AS sxx,
-        |   CAST(sum(CAST(l_extendedprice * l_extendedprice AS DECIMAL(18,4))) OVER w AS DOUBLE) AS syy
-        |  FROM lineitem
-        |  WINDOW w AS (PARTITION BY l_returnflag ORDER BY l_orderkey,
-        |    l_linenumber, l_partkey, l_suppkey, l_quantity, l_extendedprice
-        |    ROWS BETWEEN 19 PRECEDING AND CURRENT ROW))
-        |SELECT l_returnflag, l_orderkey, l_linenumber,
-        | CASE WHEN (n * sxx - sx * sx) > 0.0 AND (n * syy - sy * sy) > 0.0
-        |   THEN round((n * sxy - sx * sy) /
-        |     sqrt((n * sxx - sx * sx) * (n * syy - sy * sy)), 6)
-        |   ELSE NULL END AS rolling_corr
-        |FROM s ORDER BY l_returnflag, l_orderkey, l_linenumber""".stripMargin,
-    "win_running_distinct" ->
-      """SELECT event_id, user_id,
-        | CAST(sum(fs) OVER (PARTITION BY user_id ORDER BY ts2, event_id
-        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |   AS n_distinct_types
-        |FROM (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts2,
-        |   CASE WHEN row_number() OVER (PARTITION BY user_id, event_type
-        |     ORDER BY CAST(ts AS TIMESTAMP), event_id) = 1
-        |     THEN 1 ELSE 0 END AS fs
-        |  FROM events)
-        |ORDER BY event_id""".stripMargin,
-    "win_rolling_median" ->
-      """WITH e AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, value
-        |  FROM events)
-        |SELECT event_id, user_id, ts, value,
-        | round(quantile_cont(value, 0.5) OVER (PARTITION BY user_id
-        |   ORDER BY ts, event_id ROWS BETWEEN 6 PRECEDING AND CURRENT ROW), 6)
-        |   AS rolling_median
-        |FROM e ORDER BY user_id, ts, event_id""".stripMargin,
-    "win_zscore" ->
-      """WITH s AS (SELECT l_returnflag, l_orderkey, l_linenumber,
-        |   l_quantity AS qty,
-        |   CAST(count(*) OVER w AS DOUBLE) AS n,
-        |   CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) OVER w AS DOUBLE) AS sx,
-        |   CAST(sum(CAST(l_quantity * l_quantity AS DECIMAL(18,4))) OVER w AS DOUBLE) AS sxx
-        |  FROM lineitem
-        |  WINDOW w AS (PARTITION BY l_returnflag))
-        |SELECT l_returnflag, l_orderkey, l_linenumber, qty,
-        | CASE WHEN (sxx / n - (sx / n) * (sx / n)) > 0.0
-        |   THEN round((qty - sx / n) /
-        |     sqrt(sxx / n - (sx / n) * (sx / n)), 6)
-        |   ELSE NULL END AS zscore
-        |FROM s ORDER BY l_returnflag, l_orderkey, l_linenumber, qty""".stripMargin,
-    "win_first_last" ->
-      """SELECT DISTINCT user_id, date_trunc('day', CAST(ts AS TIMESTAMP)) AS day,
-        | first_value(event_type) OVER w AS first_ev,
-        | last_value(event_type) OVER w AS last_ev
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id, date_trunc('day', CAST(ts AS TIMESTAMP))
-        |  ORDER BY CAST(ts AS TIMESTAMP), event_id
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-        |ORDER BY user_id, day""".stripMargin,
+    },
+      Some("""SELECT DISTINCT user_id, date_trunc('day', CAST(ts AS TIMESTAMP)) AS day,
+             | first_value(event_type) OVER w AS first_ev,
+             | last_value(event_type) OVER w AS last_ev
+             |FROM events
+             |WINDOW w AS (PARTITION BY user_id, date_trunc('day', CAST(ts AS TIMESTAMP))
+             |  ORDER BY CAST(ts AS TIMESTAMP), event_id
+             |  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
+             |ORDER BY user_id, day""".stripMargin)),
   )
 }

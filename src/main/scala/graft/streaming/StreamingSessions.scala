@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.Tables
+import graft.operators.Sessionization
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -22,12 +23,7 @@ object StreamingSessions {
     * (sessions emit once the watermark passes session end). */
   def sessionize(events: DataFrame, gap: String = "30 minutes",
       watermark: String = "10 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(col("user_id"), session_window(col("ts"), gap).as("sw"))
-      .agg(count(lit(1)).as("n_events"), Tables.dsum6(col("value")).as("sum_value"))
-      .select(col("user_id"), col("sw.start").as("session_start"),
-        col("sw.end").as("session_end"), col("n_events"), col("sum_value"))
+    Sessionization.sessions(events.withWatermark("ts", watermark), lit(gap))
 
   /** Dynamic-gap sessionization: session_window's gap EXPRESSION form
     * (per-event gap — purchases hold the session open longer) in
@@ -41,13 +37,7 @@ object StreamingSessions {
     * contract — it cannot drift with partitioning or arrival order. */
   def sessionizeDynamicGap(events: DataFrame,
       watermark: String = "10 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(col("user_id"),
-        session_window(col("ts"), graft.operators.Sessionization.dynamicGap).as("sw"))
-      .agg(count(lit(1)).as("n_events"), Tables.dsum6(col("value")).as("sum_value"))
-      .select(col("user_id"), col("sw.start").as("session_start"),
-        col("sw.end").as("session_end"), col("n_events"), col("sum_value"))
+    Sessionization.dynamicSessions(events.withWatermark("ts", watermark))
 
   /** Tumbling-window aggregation with watermark (Append-compatible). */
   def tumbling(events: DataFrame, width: String = "1 hour",

@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
 class BucketingSpec extends SparkSpec {
 
   test("bucketed fact-to-fact join runs without a shuffle exchange") {
-    spark.sql("DROP TABLE IF EXISTS li_b")
-    spark.sql("DROP TABLE IF EXISTS ord_b")
+    Tables.dropManagedTable(spark, "li_b")
+    Tables.dropManagedTable(spark, "ord_b")
 
     Tables.t(spark, sfDir, "lineitem")
       .select("l_orderkey", "l_extendedprice")

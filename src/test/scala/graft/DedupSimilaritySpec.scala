@@ -23,6 +23,37 @@ class DedupSimilaritySpec extends SparkSpec {
     all.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
   }
 
+  /** Planted-truth recall of the adaptive LSH banding on `dir`'s
+    * embeddings (factor = the ScaleGen replication factor; ScaleGen
+    * re-emits every vector per rep with ±0.005 jitter, so same-base
+    * cross-rep pairs at cosine >= 0.8 are known-true by construction):
+    * returns (n, bits, bands, truthPairs, recalled). Distributed end to
+    * end — truth and candidates never collect. */
+  private def lshPlantedRecall(dir: String,
+      factor: Int): (Long, Int, Int, Long, Long) = {
+    import graft.operators.SimilarityOps
+    import graft.functions.VecFunctions.vecDot
+    val v = Tables.t(spark, dir, "embeddings")
+    val n = v.count()
+    val (bits, bands) = SimilarityOps.lshParams(n)
+    val baseMod = (v.agg(max("vec_id")).head.getLong(0) + 1) / factor
+    val vb = v.withColumn("base", col("vec_id") % baseMod)
+    val truth = vb.select(col("base"), col("vec_id").as("d1"),
+        col("embedding").as("e1"))
+      .join(vb.select(col("base"), col("vec_id").as("d2"),
+        col("embedding").as("e2")), "base")
+      .filter(col("d1") < col("d2"))
+      .withColumn("sim", vecDot(col("e1"), col("e2")))
+      .filter(col("sim") >= 0.8)
+      .select("d1", "d2").localCheckpoint()
+    val cand = DedupOps.cappedBandPairs(
+      SimilarityOps.lshBands(v), "vec_id", Seq("band_id", "bucket"))
+      .select(col("d1"), col("d2"))
+    val nTruth = truth.count()
+    val recalled = truth.join(cand, Seq("d1", "d2"), "left_semi").count()
+    (n, bits, bands, nTruth, recalled)
+  }
+
   /** Exact shingle-Jaccard pairs at threshold. */
   private def exactPairs(docs: org.apache.spark.sql.DataFrame, tau: Double) = {
     val sh = docs.select(col("doc_id"), explode(TextOps.shingles(col("text"))).as("shingle")).distinct()
@@ -325,7 +356,7 @@ class DedupSimilaritySpec extends SparkSpec {
     assume(new java.io.File("/tmp/graft_sf1/embeddings.parquet").exists,
       "10x corpus not generated on this box")
     val (n, bits, bands, nTruth, recalled) =
-      AnnScaleProbe.lshPlantedRecall(spark, "/tmp/graft_sf1", factor = 10)
+      lshPlantedRecall("/tmp/graft_sf1", factor = 10)
     assert(nTruth > 1000, s"planted truth unexpectedly small: $nTruth")
     val recall = recalled.toDouble / nTruth
     assert(recall >= 0.85,
@@ -415,20 +446,27 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(l == r, s"regimes disagree: broadcast=${l.size} blocked=${r.size}")
   }
 
-  test("incremental dedup probes the on-disk minhash index without shuffling the corpus") {
-    for (t <- Seq("mh_test_idx", "mh_test_idx_sigs")) {
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      // a crashed JVM leaves the managed location without a catalog
-      // entry; clear it or saveAsTable fails with LOCATION_ALREADY_EXISTS
-      val loc = new java.io.File(
-        spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t)
-      if (loc.exists()) {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(loc)
-      }
+  test("index writers replace a stale warehouse location left by a killed run") {
+    import java.nio.file.{Files, Paths}
+    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
+    val names = Seq("stale_mh_idx", "stale_mh_idx_sigs",
+      "stale_ivf_idx", "stale_ivf_idx_centroids")
+    for (n <- names) {
+      spark.sql(s"DROP TABLE IF EXISTS $n")
+      Files.createDirectories(Paths.get(wh, n))
+      Files.writeString(Paths.get(wh, n, "part-orphan"), "no catalog entry")
     }
+    DedupOps.minhashIndexSave(mkDocs(), "stale_mh_idx")
+    graft.operators.SimilarityOps.ivfIndexSave(
+      Tables.t(spark, sfDir, "embeddings"), k = 4, "stale_ivf_idx", nBuckets = 4)
+    for (n <- names) {
+      assert(spark.table(n).count() > 0, n)
+      assert(!Files.exists(Paths.get(wh, n, "part-orphan")), n)
+      spark.sql(s"DROP TABLE IF EXISTS $n")
+    }
+  }
+
+  test("incremental dedup probes the on-disk minhash index without shuffling the corpus") {
     val corpus = mkDocs()
     DedupOps.minhashIndexSave(corpus, "mh_test_idx")
     val texts = corpus.collect().map(r => r.getLong(0) -> r.getString(1)).toMap

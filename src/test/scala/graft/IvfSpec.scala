@@ -129,8 +129,6 @@ class IvfSpec extends SparkSpec {
   }
 
   test("bucketed IVF index probes from disk: no corpus scan, pruned buckets, fresh session") {
-    spark.sql("DROP TABLE IF EXISTS ivf_idx")
-    spark.sql("DROP TABLE IF EXISTS ivf_idx_centroids")
     val v = Tables.t(spark, sfDir, "embeddings")
     SimilarityOps.ivfIndexSave(v, k = 16, "ivf_idx", nBuckets = 16)
 
@@ -169,8 +167,6 @@ class IvfSpec extends SparkSpec {
   }
 
   test("ivfSearchTable enforces its driver probe-row bound") {
-    spark.sql("DROP TABLE IF EXISTS ivf_guard_idx")
-    spark.sql("DROP TABLE IF EXISTS ivf_guard_idx_centroids")
     val v = clusteredVecs()
     SimilarityOps.ivfIndexSave(v, k = 4, "ivf_guard_idx", nBuckets = 4)
     val q = v.filter(col("vec_id") % 25 === 0) // 4 queries × nprobe 2 = 8 probe rows

@@ -19,8 +19,10 @@ class OperatorSmokeSpec extends SparkSpec {
 
   SparkEntry.queries.foreach { case (name, fn) =>
     test(s"query $name runs on sf0.001") {
+      // collect(), not count(): count lets Catalyst prune every output
+      // column, so the expressions that compute them would never run.
       val df = fn(spark, sfDir)
-      val n = df.count()
+      val n = df.collect().length
       assert(df.schema.nonEmpty)
       if (!mayBeEmpty(name)) assert(n > 0, s"$name returned no rows")
     }
@@ -142,9 +144,27 @@ class OperatorSmokeSpec extends SparkSpec {
     assert(unguarded.length == 6, unguarded.mkString(","))
   }
 
-  test("every oracleSql key has a queries entry") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracle without query: $missing")
+  test("the operator registry refuses a key declared twice") {
+    val op = SparkEntry.ops.head
+    val ex = intercept[IllegalArgumentException](
+      SparkEntry.distinctKeys(Seq(op, op.copy(oracle = None))))
+    assert(ex.getMessage.contains(op.key))
+  }
+
+  test("contamination counts only train documents on the train side") {
+    import spark.implicits._
+    // Doc 2 is in a "dev" fold and copies test doc 1; doc 3 (train)
+    // shares nothing with it. No test document matches a train document.
+    val text = "quick brown fox jumps high over the lazy dog"
+    val docs = Seq((1L, "test", text), (2L, "dev", text),
+      (3L, "train", "an unrelated training sentence with other words"))
+      .toDF("doc_id", "fold", "text")
+    assert(operators.TextOps.contamination(docs).isEmpty)
+    val posts = docs.select(col("doc_id"),
+      explode(array_distinct(operators.TextOps.shingles(col("text")))).as("shingle"))
+    val folds = docs.select(col("doc_id"), col("fold"))
+    assert(operators.TextOps.contaminationCapped(posts.join(folds, "doc_id"),
+      col("fold")).isEmpty)
   }
 
   test("flagship entry returns sessions") {
@@ -358,8 +378,8 @@ class OperatorSmokeSpec extends SparkSpec {
     // real (df >> cap) yet survivors stay ~cap-bounded, and the capped
     // miner's recall of the exact tau=0.6 pair set survives the
     // thinning. The runtime-curve claim (exact superlinear vs capped
-    // flat) is measured at 50k/100k/200k docs by ZipfFloorProbe and
-    // recorded in SCALE.md §8.14.
+    // flat) was measured at 50k/100k/200k docs and is recorded in
+    // SCALE.md §8.14.
     val baseDir = java.nio.file.Files.createTempDirectory("graft_zipf")
     try {
       val base = baseDir.toString

@@ -92,12 +92,12 @@ object ScaleGen {
     // (plain replication freezes the domain and understates that cost).
     val continuousEventsOnly = args.length > 3 && args(3) == "continuous-events"
     // Optional 4th arg "embeddings": write ONLY the embeddings table —
-    // the cheap path to the 30x ANN recall point (AnnScaleProbe), where
+    // the cheap path to the 30x ANN recall point, where
     // generating 30x documents/events just to read one table is waste.
     val embeddingsOnly = args.length > 3 && args(3) == "embeddings"
     // Optional 4th arg "documents": write ONLY the documents table —
-    // the cheap path to the 30x capped-miner drift point
-    // (CappedDriftProbe), where only the shingle index is read.
+    // the cheap path to the 30x capped-miner drift point, where only
+    // the shingle index is read.
     val documentsOnly = args.length > 3 && args(3) == "documents"
     val spark = SparkSession.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")

@@ -55,6 +55,23 @@ class SessionizePropertySpec extends SparkSpec {
     }
   }
 
+  test("a filter on session_end sees merged sessions, not per-event windows") {
+    // Events at 00:00, 00:20 and 00:40 with a 30-minute gap form ONE
+    // session, 00:00 to 01:10; no session ends by 00:55.
+    val base = 1704067200000000L // 2024-01-01 00:00 UTC, µs
+    val df = toDf(List(0L, 20L, 40L).zipWithIndex.map { case (m, i) =>
+      (i.toLong, 1L, base + m * 60 * 1000000L, 1.0) })
+      .withColumn("event_type", lit("view"))
+    val cutoff = timestamp_micros(lit(base + 55 * 60 * 1000000L))
+    for ((name, sessions) <- Seq("static" -> Sessionization.nativeSessions _,
+        "dynamic" -> Sessionization.dynamicSessions _)) {
+      assert(canon(sessions(df)) ==
+        Set((1L, base, base + 70 * 60 * 1000000L, 3L)), name)
+      val early = sessions(df).filter(col("session_end") <= cutoff).collect()
+      assert(early.isEmpty, s"$name: ${early.mkString(",")}")
+    }
+  }
+
   test("session partition invariants") {
     (100L to 107L).foreach { seed =>
       val evs = sample(seed)

@@ -103,9 +103,9 @@ class SourcesSpec extends SparkSpec {
     val schema = Tables.t(spark, sfDir, "documents").schema
     spark.read.schema(schema).option("header", "true").csv(csvDir)
       .write.mode("overwrite").parquet(s"$pqDir/documents.parquet")
-    val viaCsv = graft.operators.TextOps.queries("text_wordcount")(spark, pqDir)
+    val viaCsv = SparkEntry.queries("text_wordcount")(spark, pqDir)
       .collect().map(_.toString)
-    val direct = graft.operators.TextOps.queries("text_wordcount")(spark, sfDir)
+    val direct = SparkEntry.queries("text_wordcount")(spark, sfDir)
       .collect().map(_.toString)
     assert(viaCsv.sameElements(direct))
   }

@@ -5,16 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (sbt forks one test JVM). */
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = Sessions.harden(SparkSession.builder())
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = Sessions.local("4")
 }
 
 trait SparkSpec extends AnyFunSuite {

@@ -19,7 +19,8 @@ else
   cp -r target/scala-2.13/classes/* "$snap"/
   trap 'rm -rf "$snap"' EXIT
 fi
-exec java \
+# java runs as a child (not exec'd) so the EXIT trap removes the snapshot.
+java \
   --add-opens java.base/java.lang=ALL-UNNAMED \
   --add-opens java.base/java.lang.invoke=ALL-UNNAMED \
   --add-opens java.base/java.lang.reflect=ALL-UNNAMED \
