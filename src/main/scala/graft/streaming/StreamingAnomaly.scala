@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming._
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming 3σ anomaly detection (§2.8 extension): the incremental twin
   * of the batch `ts_anomaly_sigma` key. The batch op's state per row is
@@ -45,36 +45,21 @@ object StreamingAnomaly {
     }
   }
 
-  class AnomalyProcessor
-      extends StatefulProcessor[(Long, String), EventIn, AnomalyOut] {
-
-    @transient private var ring: ValueState[Ring] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      ring = getHandle.getValueState[Ring]("ring",
-        Encoders.product[Ring], TTLConfig.NONE)
-
-    override def handleInputRows(key: (Long, String), rows: Iterator[EventIn],
-        timerValues: TimerValues): Iterator[AnomalyOut] = {
-      var vals = if (ring.exists()) ring.get().vals else Vector.empty[Long]
-      val out = Vector.newBuilder[AnomalyOut]
-      rows.toVector.sortBy(e => (e.ts_micros, e.event_id)).foreach { e =>
-        if (flagged(vals, e.vi))
-          out += AnomalyOut(e.event_id, e.user_id, e.event_type, e.value)
-        vals = (vals :+ e.vi).takeRight(WindowLen)
-      }
-      ring.update(Ring(vals))
-      out.result().iterator
-    }
-  }
-
   /** Streaming entry point over an event stream carrying the micro-unit
     * `vi` column (same upstream expression as the batch key). */
   def detect(events: Dataset[EventIn]): Dataset[AnomalyOut] = {
-    implicit val outEnc = Encoders.product[AnomalyOut]
-    events.groupByKey(e => (e.user_id, e.event_type))(
-        Encoders.tuple(Encoders.scalaLong, Encoders.STRING))
-      .transformWithState(new AnomalyProcessor,
-        TimeMode.None(), OutputMode.Append())
+    import events.sparkSession.implicits._
+    KeyedFold[(Long, String), EventIn, Ring, AnomalyOut](events,
+        e => (e.user_id, e.event_type), OutputMode.Append(), "ring") {
+      (_, prev, rows) =>
+        var vals = prev.map(_.vals).getOrElse(Vector.empty[Long])
+        val out = Vector.newBuilder[AnomalyOut]
+        rows.toVector.sortBy(e => (e.ts_micros, e.event_id)).foreach { e =>
+          if (flagged(vals, e.vi))
+            out += AnomalyOut(e.event_id, e.user_id, e.event_type, e.value)
+          vals = (vals :+ e.vi).takeRight(WindowLen)
+        }
+        (Ring(vals), out.result().iterator)
+    }
   }
 }

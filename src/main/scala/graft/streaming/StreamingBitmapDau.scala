@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming._
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming bitmap DAU (§2.8 extension): the incremental twin of the
   * batch `agg_bitmap_distinct` key — EXACT distinct users per event type,
@@ -32,41 +32,26 @@ object StreamingBitmapDau {
 
   case class DauOut(event_type: String, bucket: Long, n_users: Long)
 
-  class BitmapProcessor
-      extends StatefulProcessor[(String, Long), EventIn, DauOut] {
-
-    @transient private var st: ValueState[Bitmap] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[Bitmap]("bm",
-        Encoders.product[Bitmap], TTLConfig.NONE)
-
-    override def handleInputRows(key: (String, Long), rows: Iterator[EventIn],
-        timerValues: TimerValues): Iterator[DauOut] = {
-      val bits = if (st.exists()) st.get().bits else new Array[Byte](512)
+  /** events → per-(type, bucket) exact distinct-user counts, Update mode. */
+  def bitmapDau(events: Dataset[EventIn]): Dataset[DauOut] = {
+    import events.sparkSession.implicits._
+    KeyedFold[(String, Long), EventIn, Bitmap, DauOut](events,
+        e => (e.event_type, Math.floorDiv(e.user_id, BucketSpan)),
+        OutputMode.Update(), "bm") { (key, prev, rows) =>
+      val bits = prev.map(_.bits).getOrElse(new Array[Byte](512))
       rows.foreach { e =>
-        // floorMod keeps the processor total over the whole long domain:
+        // floorMod keeps the fold total over the whole long domain:
         // truncating % would give negative ids a negative bit position
         // (AIOOBE) and collide ids in (-4096, 4096) into bucket 0.
         val pos = Math.floorMod(e.user_id, BucketSpan).toInt
         bits(pos >> 3) = (bits(pos >> 3) | (1 << (pos & 7))).toByte
       }
-      st.update(Bitmap(bits))
       var cnt = 0L
       var i = 0
       while (i < bits.length) {
         cnt += java.lang.Integer.bitCount(bits(i) & 0xff); i += 1
       }
-      Iterator.single(DauOut(key._1, key._2, cnt))
+      (Bitmap(bits), Iterator.single(DauOut(key._1, key._2, cnt)))
     }
-  }
-
-  /** events → per-(type, bucket) exact distinct-user counts, Update mode. */
-  def bitmapDau(events: Dataset[EventIn]): Dataset[DauOut] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(e => (e.event_type, Math.floorDiv(e.user_id, BucketSpan)))
-      .transformWithState(new BitmapProcessor,
-        TimeMode.None(), OutputMode.Update())
   }
 }

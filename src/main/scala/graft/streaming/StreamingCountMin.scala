@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming._
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.util.sketch.CountMinSketch
 
 /** Streaming Count–Min sketch (§2.8 extension): the incremental twin of
@@ -40,36 +40,20 @@ object StreamingCountMin {
   case class SketchOut(event_type: String, n_added: Long,
       bytes: Array[Byte])
 
-  class CmsProcessor
-      extends StatefulProcessor[String, EventIn, SketchOut] {
-
-    @transient private var st: ValueState[SketchState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[SketchState]("cms",
-        Encoders.product[SketchState], TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[EventIn],
-        timerValues: TimerValues): Iterator[SketchOut] = {
-      val cms = if (st.exists())
-        CountMinSketch.readFrom(
-          new java.io.ByteArrayInputStream(st.get().bytes))
-      else CountMinSketch.create(Eps, Confidence, Seed)
-      rows.foreach(e => cms.addLong(e.user_id))
-      val bos = new java.io.ByteArrayOutputStream()
-      cms.writeTo(bos)
-      val bytes = bos.toByteArray
-      st.update(SketchState(bytes))
-      Iterator.single(SketchOut(key, cms.totalCount(), bytes))
-    }
-  }
-
   /** events → per-type CMS state, Update mode (each batch re-emits the
     * type's current sketch; latest per type = the running sketch). */
   def countMin(events: Dataset[EventIn]): Dataset[SketchOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.event_type)
-      .transformWithState(new CmsProcessor,
-        TimeMode.None(), OutputMode.Update())
+    KeyedFold[String, EventIn, SketchState, SketchOut](events,
+        _.event_type, OutputMode.Update(), "cms") { (key, prev, rows) =>
+      val cms = prev.map(p => CountMinSketch.readFrom(
+          new java.io.ByteArrayInputStream(p.bytes)))
+        .getOrElse(CountMinSketch.create(Eps, Confidence, Seed))
+      rows.foreach(e => cms.addLong(e.user_id))
+      val bos = new java.io.ByteArrayOutputStream()
+      cms.writeTo(bos)
+      val bytes = bos.toByteArray
+      (SketchState(bytes), Iterator.single(SketchOut(key, cms.totalCount(), bytes)))
+    }
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming._
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming debounce / rate-limit thinning (§2.8 extension): the twin of
   * the batch `ts_debounce` key — keep an event only if ≥ 10 minutes have
@@ -29,19 +29,13 @@ object StreamingDebounce {
 
   case class DebounceOut(user_id: Long, n_events: Long, n_kept: Long)
 
-  class DebounceProcessor
-      extends StatefulProcessor[Long, EventIn, DebounceOut] {
-
-    @transient private var st: ValueState[DebounceState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[DebounceState]("deb",
-        Encoders.product[DebounceState], TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[EventIn],
-        timerValues: TimerValues): Iterator[DebounceOut] = {
+  /** Streaming entry point: per-user debounced kept counts. */
+  def debounce(events: Dataset[EventIn]): Dataset[DebounceOut] = {
+    import events.sparkSession.implicits._
+    KeyedFold[Long, EventIn, DebounceState, DebounceOut](events,
+        _.user_id, OutputMode.Update(), "deb") { (key, prev, rows) =>
       val sorted = rows.toVector.sortBy(e => (e.ts_micros, e.event_id))
-      var cur = if (st.exists()) st.get() else null
+      var cur = prev.orNull
       sorted.foreach { e =>
         cur =
           if (cur == null) DebounceState(e.ts_micros, 1L, 1L)
@@ -49,19 +43,7 @@ object StreamingDebounce {
             DebounceState(e.ts_micros, cur.nKept + 1L, cur.nEvents + 1L)
           else cur.copy(nEvents = cur.nEvents + 1L)
       }
-      if (cur == null) Iterator.empty
-      else {
-        st.update(cur)
-        Iterator.single(DebounceOut(key, cur.nEvents, cur.nKept))
-      }
+      (cur, Iterator.single(DebounceOut(key, cur.nEvents, cur.nKept)))
     }
-  }
-
-  /** Streaming entry point: per-user debounced kept counts. */
-  def debounce(events: Dataset[EventIn]): Dataset[DebounceOut] = {
-    implicit val outEnc = Encoders.product[DebounceOut]
-    events.groupByKey(_.user_id)(Encoders.scalaLong)
-      .transformWithState(new DebounceProcessor,
-        TimeMode.None(), OutputMode.Update())
   }
 }

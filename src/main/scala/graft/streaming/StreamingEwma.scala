@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming._
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming EWMA (§2.8 extension): the incremental twin of the batch
   * `ts_ewma` key, running the IDENTICAL integer-lattice recurrence
@@ -34,42 +34,24 @@ object StreamingEwma {
   case class EwmaOut(user_id: Long, event_type: String, n_events: Long,
       ewma_micro: Long)
 
-  class EwmaProcessor
-      extends StatefulProcessor[(Long, String), EventIn, EwmaOut] {
-
-    @transient private var st: ValueState[EwmaState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[EwmaState]("ewma",
-        Encoders.product[EwmaState], TTLConfig.NONE)
-
-    override def handleInputRows(key: (Long, String), rows: Iterator[EventIn],
-        timerValues: TimerValues): Iterator[EwmaOut] = {
-      val sorted = rows.toVector.sortBy(e => (e.ts_micros, e.event_id))
-      var cur = if (st.exists()) st.get() else null
-      sorted.foreach { e =>
-        cur =
-          if (cur == null) EwmaState(1L, e.vi)
-          // Long `/` truncates toward zero — the same semantics as Spark
-          // SQL's `div` and DuckDB's `//`; operands stay non-negative on
-          // this feed either way.
-          else EwmaState(cur.n + 1L, (cur.s + e.vi) / 2L)
-      }
-      if (cur == null) Iterator.empty
-      else {
-        st.update(cur)
-        Iterator.single(EwmaOut(key._1, key._2, cur.n, cur.s))
-      }
-    }
-  }
-
   /** Streaming entry point: per-(user, type) EWMA over an event stream
     * that already carries the micro-unit `vi` column. */
   def ewma(events: Dataset[EventIn]): Dataset[EwmaOut] = {
-    implicit val outEnc = Encoders.product[EwmaOut]
-    events.groupByKey(e => (e.user_id, e.event_type))(
-        Encoders.tuple(Encoders.scalaLong, Encoders.STRING))
-      .transformWithState(new EwmaProcessor,
-        TimeMode.None(), OutputMode.Update())
+    import events.sparkSession.implicits._
+    KeyedFold[(Long, String), EventIn, EwmaState, EwmaOut](events,
+        e => (e.user_id, e.event_type), OutputMode.Update(), "ewma") {
+      (key, prev, rows) =>
+        val sorted = rows.toVector.sortBy(e => (e.ts_micros, e.event_id))
+        var cur = prev.orNull
+        sorted.foreach { e =>
+          cur =
+            if (cur == null) EwmaState(1L, e.vi)
+            // Long `/` truncates toward zero — the same semantics as Spark
+            // SQL's `div` and DuckDB's `//`; operands stay non-negative on
+            // this feed either way.
+            else EwmaState(cur.n + 1L, (cur.s + e.vi) / 2L)
+        }
+        (cur, Iterator.single(EwmaOut(key._1, key._2, cur.n, cur.s)))
+    }
   }
 }

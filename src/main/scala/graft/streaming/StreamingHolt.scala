@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming._
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming Holt smoother (§2.8 extension): the incremental twin of the
   * batch `ts_holt` key, running the IDENTICAL integer-lattice recurrence
@@ -33,43 +33,25 @@ object StreamingHolt {
   case class HoltOut(user_id: Long, event_type: String, n_events: Long,
       level_micro: Long, trend_micro: Long, forecast_micro: Long)
 
-  class HoltProcessor
-      extends StatefulProcessor[(Long, String), EventIn, HoltOut] {
-
-    @transient private var st: ValueState[HoltState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[HoltState]("holt",
-        Encoders.product[HoltState], TTLConfig.NONE)
-
-    override def handleInputRows(key: (Long, String), rows: Iterator[EventIn],
-        timerValues: TimerValues): Iterator[HoltOut] = {
-      val sorted = rows.toVector.sortBy(e => (e.ts_micros, e.event_id))
-      var cur = if (st.exists()) st.get() else null
-      sorted.foreach { e =>
-        cur =
-          if (cur == null) HoltState(1L, e.vi, 0L)
-          else {
-            val l2 = (e.vi + cur.l + cur.b) / 2L
-            HoltState(cur.n + 1L, l2, (l2 - cur.l + cur.b) / 2L)
-          }
-      }
-      if (cur == null) Iterator.empty
-      else {
-        st.update(cur)
-        Iterator.single(HoltOut(key._1, key._2, cur.n, cur.l, cur.b,
-          cur.l + cur.b))
-      }
-    }
-  }
-
   /** Streaming entry point: per-(user, type) Holt level+trend over an
     * event stream that already carries the micro-unit `vi` column. */
   def holt(events: Dataset[EventIn]): Dataset[HoltOut] = {
-    implicit val outEnc = Encoders.product[HoltOut]
-    events.groupByKey(e => (e.user_id, e.event_type))(
-        Encoders.tuple(Encoders.scalaLong, Encoders.STRING))
-      .transformWithState(new HoltProcessor,
-        TimeMode.None(), OutputMode.Update())
+    import events.sparkSession.implicits._
+    KeyedFold[(Long, String), EventIn, HoltState, HoltOut](events,
+        e => (e.user_id, e.event_type), OutputMode.Update(), "holt") {
+      (key, prev, rows) =>
+        val sorted = rows.toVector.sortBy(e => (e.ts_micros, e.event_id))
+        var cur = prev.orNull
+        sorted.foreach { e =>
+          cur =
+            if (cur == null) HoltState(1L, e.vi, 0L)
+            else {
+              val l2 = (e.vi + cur.l + cur.b) / 2L
+              HoltState(cur.n + 1L, l2, (l2 - cur.l + cur.b) / 2L)
+            }
+        }
+        (cur, Iterator.single(HoltOut(key._1, key._2, cur.n, cur.l, cur.b,
+          cur.l + cur.b)))
+    }
   }
 }

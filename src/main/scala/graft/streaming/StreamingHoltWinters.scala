@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming._
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming Holt–Winters (§2.8 extension): the incremental twin of the
   * batch `ts_holt_winters` key, running the IDENTICAL integer-lattice
@@ -34,18 +34,14 @@ object StreamingHoltWinters {
   case class HwOut(series: String, n_hours: Long, level_micro: Long,
       trend_micro: Long, seasonal: Seq[Long])
 
-  class HwProcessor extends StatefulProcessor[String, HourIn, HwOut] {
-
-    @transient private var st: ValueState[HwState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[HwState]("hw",
-        Encoders.product[HwState], TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[HourIn],
-        timerValues: TimerValues): Iterator[HwOut] = {
+  /** Streaming entry point over an hourly feed carrying the upstream-
+    * computed (series, hour index, hour-of-day, micro-unit total). */
+  def holtWinters(hours: Dataset[HourIn]): Dataset[HwOut] = {
+    import hours.sparkSession.implicits._
+    KeyedFold[String, HourIn, HwState, HwOut](hours,
+        _.series, OutputMode.Update(), "hw") { (key, prev, rows) =>
       val sorted = rows.toVector.sortBy(_.hi)
-      var cur = if (st.exists()) st.get() else null
+      var cur = prev.orNull
       sorted.foreach { e =>
         cur =
           if (cur == null)
@@ -58,20 +54,7 @@ object StreamingHoltWinters {
             HwState(cur.n + 1L, l2, b2, s2)
           }
       }
-      if (cur == null) Iterator.empty
-      else {
-        st.update(cur)
-        Iterator.single(HwOut(key, cur.n, cur.l, cur.b, cur.s))
-      }
+      (cur, Iterator.single(HwOut(key, cur.n, cur.l, cur.b, cur.s)))
     }
-  }
-
-  /** Streaming entry point over an hourly feed carrying the upstream-
-    * computed (series, hour index, hour-of-day, micro-unit total). */
-  def holtWinters(hours: Dataset[HourIn]): Dataset[HwOut] = {
-    implicit val outEnc = Encoders.product[HwOut]
-    hours.groupByKey(_.series)(Encoders.STRING)
-      .transformWithState(new HwProcessor,
-        TimeMode.None(), OutputMode.Update())
   }
 }

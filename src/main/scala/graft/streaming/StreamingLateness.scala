@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming._
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming event-time disorder monitor (§2.8 extension): the twin of
   * the batch `ts_out_of_order_stats` key — classify each event's lag
@@ -33,32 +33,18 @@ object StreamingLateness {
     else if (lateUs <= 3600L * 1000000) "d_within_1h"
     else "e_over_1h"
 
-  class LatenessProcessor
-      extends StatefulProcessor[Long, EventIn, LatenessOut] {
-
-    @transient private var hwm: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      hwm = getHandle.getValueState[Long]("hwm", Encoders.scalaLong, TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[EventIn],
-        timerValues: TimerValues): Iterator[LatenessOut] = {
+  /** Streaming entry point: one classified emission per event. */
+  def lateness(events: Dataset[EventIn]): Dataset[LatenessOut] = {
+    import events.sparkSession.implicits._
+    KeyedFold[Long, EventIn, Long, LatenessOut](events,
+        _.user_id, OutputMode.Append(), "hwm") { (_, prev, rows) =>
       val sorted = rows.toVector.sortBy(_.event_id)
-      var h = if (hwm.exists()) hwm.get() else Long.MinValue
+      var h = prev.getOrElse(Long.MinValue)
       val out = sorted.map { e =>
         h = math.max(h, e.us)
         LatenessOut(e.event_id, e.user_id, bucketOf(h - e.us), h - e.us)
       }
-      hwm.update(h)
-      out.iterator
+      (h, out.iterator)
     }
-  }
-
-  /** Streaming entry point: one classified emission per event. */
-  def lateness(events: Dataset[EventIn]): Dataset[LatenessOut] = {
-    implicit val outEnc = Encoders.product[LatenessOut]
-    events.groupByKey(_.user_id)(Encoders.scalaLong)
-      .transformWithState(new LatenessProcessor,
-        TimeMode.None(), OutputMode.Append())
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming._
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming new-vs-returning classifier (§2.8 extension): the
   * incremental twin of the batch `ts_new_vs_returning` key — every
@@ -29,19 +29,15 @@ object StreamingNewVsReturning {
 
   case class DayCell(user_id: Long, day: Long, is_new: Boolean)
 
-  class NewReturningProcessor
-      extends StatefulProcessor[Long, EventIn, DayCell] {
-
-    @transient private var st: ValueState[FirstSeen] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[FirstSeen]("first_seen",
-        Encoders.product[FirstSeen], TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[EventIn],
-        timerValues: TimerValues): Iterator[DayCell] = {
+  /** Streaming entry point: one row per (user, active day), flagged
+    * new/returning — `ts_new_vs_returning`'s per-day counts are
+    * `sink.groupBy(day).agg(...)`. */
+  def newVsReturning(events: Dataset[EventIn]): Dataset[DayCell] = {
+    import events.sparkSession.implicits._
+    KeyedFold[Long, EventIn, FirstSeen, DayCell](events,
+        _.user_id, OutputMode.Append(), "first_seen") { (key, prev, rows) =>
       val sorted = rows.toVector.sortBy(e => (e.ts_micros, e.event_id))
-      var state = if (st.exists()) st.get() else null
+      var state = prev.orNull
       val out = Vector.newBuilder[DayCell]
       sorted.foreach { e =>
         if (state == null) {
@@ -52,18 +48,7 @@ object StreamingNewVsReturning {
           out += DayCell(key, e.day, is_new = false)
         }
       }
-      if (state != null) st.update(state)
-      out.result().iterator
+      (state, out.result().iterator)
     }
-  }
-
-  /** Streaming entry point: one row per (user, active day), flagged
-    * new/returning — `ts_new_vs_returning`'s per-day counts are
-    * `sink.groupBy(day).agg(...)`. */
-  def newVsReturning(events: Dataset[EventIn]): Dataset[DayCell] = {
-    implicit val outEnc = Encoders.product[DayCell]
-    events.groupByKey(_.user_id)(Encoders.scalaLong)
-      .transformWithState(new NewReturningProcessor,
-        TimeMode.None(), OutputMode.Append())
   }
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
 import graft.operators.{Cep, CepTemplate}
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming._
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming sequence-pattern detector (§2.8 extension): the CEP twin of
   * the batch `ts_pattern_detect` / `ts_pattern_template` keys — count,
@@ -38,23 +38,17 @@ object StreamingPattern {
 
   case class PatOut(user_id: Long, n_events: Long, n_patterns: Long)
 
-  class PatternProcessor(tpl: CepTemplate)
-      extends StatefulProcessor[Long, EventIn, PatOut] {
-
-    private val k = tpl.steps.length - 1
-
-    @transient private var st: ValueState[PatState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[PatState]("pat",
-        Encoders.product[PatState], TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[EventIn],
-        timerValues: TimerValues): Iterator[PatOut] = {
+  /** Streaming entry point: per-user consecutive-pattern counts for the
+    * given template (default: the classic purchase-funnel triple). */
+  def patterns(events: Dataset[EventIn],
+      tpl: CepTemplate = Cep.ViewClickPurchase): Dataset[PatOut] = {
+    import events.sparkSession.implicits._
+    val k = tpl.steps.length - 1
+    KeyedFold[Long, EventIn, PatState, PatOut](events,
+        _.user_id, OutputMode.Update(), "pat") { (key, prev, rows) =>
       val sorted = rows.toVector.sortBy(e => (e.ts_micros, e.event_id))
-      var cur =
-        if (st.exists()) st.get()
-        else PatState(Vector.fill(k)(""), Vector.fill(k)(0L), 0L, 0L)
+      var cur = prev.getOrElse(
+        PatState(Vector.fill(k)(""), Vector.fill(k)(0L), 0L, 0L))
       sorted.foreach { e =>
         // slots hold the k previous events oldest→newest; a hit needs
         // them to spell steps.init, the arrival to be steps.last, and
@@ -69,21 +63,7 @@ object StreamingPattern {
           cur.nEvents + 1L,
           cur.nPatterns + (if (hit) 1L else 0L))
       }
-      if (sorted.isEmpty) Iterator.empty
-      else {
-        st.update(cur)
-        Iterator.single(PatOut(key, cur.nEvents, cur.nPatterns))
-      }
+      (cur, Iterator.single(PatOut(key, cur.nEvents, cur.nPatterns)))
     }
-  }
-
-  /** Streaming entry point: per-user consecutive-pattern counts for the
-    * given template (default: the classic purchase-funnel triple). */
-  def patterns(events: Dataset[EventIn],
-      tpl: CepTemplate = Cep.ViewClickPurchase): Dataset[PatOut] = {
-    implicit val outEnc = Encoders.product[PatOut]
-    events.groupByKey(_.user_id)(Encoders.scalaLong)
-      .transformWithState(new PatternProcessor(tpl),
-        TimeMode.None(), OutputMode.Update())
   }
 }

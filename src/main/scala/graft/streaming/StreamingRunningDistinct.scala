@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming._
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming running-distinct (§2.8 extension): the incremental twin of
   * the batch `win_running_distinct` key — per-user count of distinct
@@ -34,36 +34,20 @@ object StreamingRunningDistinct {
   case class DistinctOut(event_id: Long, user_id: Long,
       n_distinct_types: Long)
 
-  class DistinctProcessor
-      extends StatefulProcessor[Long, EventIn, DistinctOut] {
-
-    @transient private var st: ValueState[SeenTypes] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[SeenTypes]("seen",
-        Encoders.product[SeenTypes], TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[EventIn],
-        timerValues: TimerValues): Iterator[DistinctOut] = {
+  /** Streaming entry point: per-user running distinct-type count over an
+    * event stream, one output row per input event. */
+  def runningDistinct(events: Dataset[EventIn]): Dataset[DistinctOut] = {
+    import events.sparkSession.implicits._
+    KeyedFold[Long, EventIn, SeenTypes, DistinctOut](events,
+        _.user_id, OutputMode.Append(), "seen") { (key, prev, rows) =>
       val sorted = rows.toVector.sortBy(e => (e.ts_micros, e.event_id))
       // first-seen order preserved; membership scans a ≤|vocabulary| seq
-      var seen = if (st.exists()) st.get().types.toVector
-                 else Vector.empty[String]
+      var seen = prev.map(_.types.toVector).getOrElse(Vector.empty[String])
       val out = sorted.map { e =>
         if (!seen.contains(e.event_type)) seen = seen :+ e.event_type
         DistinctOut(e.event_id, key, seen.size.toLong)
       }
-      if (out.nonEmpty) st.update(SeenTypes(seen))
-      out.iterator
+      (SeenTypes(seen), out.iterator)
     }
-  }
-
-  /** Streaming entry point: per-user running distinct-type count over an
-    * event stream, one output row per input event. */
-  def runningDistinct(events: Dataset[EventIn]): Dataset[DistinctOut] = {
-    implicit val outEnc = Encoders.product[DistinctOut]
-    events.groupByKey(_.user_id)(Encoders.scalaLong)
-      .transformWithState(new DistinctProcessor,
-        TimeMode.None(), OutputMode.Append())
   }
 }

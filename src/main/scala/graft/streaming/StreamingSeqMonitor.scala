@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming._
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming group-sequential monitor (§2.8 extension): the
   * continuous-monitoring twin of the batch `agg_group_sequential_obf`
@@ -60,18 +60,13 @@ object StreamingSeqMonitor {
 
   private val Zero = MomState(0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0)
 
-  class SeqMonitorProcessor
-      extends StatefulProcessor[String, EventIn, MomOut] {
-
-    @transient private var st: ValueState[MomState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[MomState]("obf_moments",
-        Encoders.product[MomState], TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[EventIn],
-        timerValues: TimerValues): Iterator[MomOut] = {
-      var s = if (st.exists()) st.get() else Zero
+  /** Streaming entry point over an event stream carrying the upstream-
+    * computed (variant, look, v6, vv6) columns. */
+  def monitor(events: Dataset[EventIn]): Dataset[MomOut] = {
+    import events.sparkSession.implicits._
+    KeyedFold[String, EventIn, MomState, MomOut](events,
+        _.variant, OutputMode.Update(), "obf_moments") { (key, prev, rows) =>
+      var s = prev.getOrElse(Zero)
       rows.foreach { e =>
         s = e.look match {
           case 1 => s.copy(n1 = s.n1 + 1, sx1 = s.sx1 + e.v6,
@@ -85,7 +80,6 @@ object StreamingSeqMonitor {
           case _ => s // beyond the fixed look horizon: not monitored
         }
       }
-      st.update(s)
       val looks = Seq(
         (1, s.n1, s.sx1, s.sxx1), (2, s.n2, s.sx2, s.sxx2),
         (3, s.n3, s.sx3, s.sxx3), (4, s.n4, s.sx4, s.sxx4))
@@ -103,16 +97,7 @@ object StreamingSeqMonitor {
             "widen state or reset the experiment window")
         MomOut(key, k, cn, cx, cxx)
       }.filter(_.n > 0)
-      out.iterator
+      (s, out.iterator)
     }
-  }
-
-  /** Streaming entry point over an event stream carrying the upstream-
-    * computed (variant, look, v6, vv6) columns. */
-  def monitor(events: Dataset[EventIn]): Dataset[MomOut] = {
-    implicit val outEnc = Encoders.product[MomOut]
-    events.groupByKey(_.variant)(Encoders.STRING)
-      .transformWithState(new SeqMonitorProcessor,
-        TimeMode.None(), OutputMode.Update())
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming._
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming EVENT-ALIGNED trailing window (§2.8 extension) — the analog
   * of Kafka Streams' `SlidingWindows` (KIP-450, Kafka 2.7/3.0): each
@@ -41,23 +41,18 @@ object StreamingSlidingWindow {
 
   case class SlideOut(event_id: Long, user_id: Long, sum_win: Double)
 
-  class SlidingProcessor(windowUs: Long)
-      extends StatefulProcessor[Long, EventIn, SlideOut] {
-
-    @transient private var buf: ValueState[SlideBuf] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      buf = getHandle.getValueState[SlideBuf]("buf",
-        Encoders.product[SlideBuf], TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[EventIn],
-        timerValues: TimerValues): Iterator[SlideOut] = {
+  /** Streaming entry point: one trailing-window emission per event.
+    * `windowUs` is the Δ of [ts − Δ, ts] in event-time microseconds. */
+  def slidingSum(events: Dataset[EventIn], windowUs: Long): Dataset[SlideOut] = {
+    import events.sparkSession.implicits._
+    KeyedFold[Long, EventIn, SlideBuf, SlideOut](events,
+        _.user_id, OutputMode.Append(), "buf") { (key, prev, rows) =>
       val batch = rows.toVector.sortBy(e => (e.us, e.event_id))
-      val prev = if (buf.exists()) buf.get() else SlideBuf(Vector.empty, Long.MinValue)
+      val buf = prev.getOrElse(SlideBuf(Vector.empty, Long.MinValue))
       // insert ALL batch rows first: a RANGE frame includes its event-time
       // peers, so two same-window events in one micro-batch must see each
       // other whichever arrived "first"
-      val entries = (prev.entries ++ batch.map(e => SlideEntry(e.us, e.vi)))
+      val entries = (buf.entries ++ batch.map(e => SlideEntry(e.us, e.vi)))
         .sortBy(_.us)
       val out = batch.map { e =>
         var sum = 0L
@@ -68,18 +63,8 @@ object StreamingSlidingWindow {
       }
       // evict: entries at us < hwm − Δ can never re-enter a trailing
       // window under the ordered-arrival contract
-      val hwm = math.max(prev.hwm, batch.map(_.us).max)
-      buf.update(SlideBuf(entries.filter(_.us >= hwm - windowUs), hwm))
-      out.iterator
+      val hwm = math.max(buf.hwm, batch.map(_.us).max)
+      (SlideBuf(entries.filter(_.us >= hwm - windowUs), hwm), out.iterator)
     }
-  }
-
-  /** Streaming entry point: one trailing-window emission per event.
-    * `windowUs` is the Δ of [ts − Δ, ts] in event-time microseconds. */
-  def slidingSum(events: Dataset[EventIn], windowUs: Long): Dataset[SlideOut] = {
-    implicit val outEnc = Encoders.product[SlideOut]
-    events.groupByKey(_.user_id)(Encoders.scalaLong)
-      .transformWithState(new SlidingProcessor(windowUs),
-        TimeMode.None(), OutputMode.Append())
   }
 }

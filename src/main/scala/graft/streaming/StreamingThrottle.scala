@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming._
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming rate limiter (§2.8 extension): the twin of the batch
   * `ts_throttle` key — admit at most [[Limit]] events per (user,
@@ -33,38 +33,23 @@ object StreamingThrottle {
 
   case class ThrottleOut(event_id: Long, user_id: Long, w_start: Long, rk: Long)
 
-  class ThrottleProcessor
-      extends StatefulProcessor[(Long, Long), EventIn, ThrottleOut] {
-
-    @transient private var st: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[Long]("admitted",
-        Encoders.scalaLong, TTLConfig.NONE)
-
-    override def handleInputRows(key: (Long, Long), rows: Iterator[EventIn],
-        timerValues: TimerValues): Iterator[ThrottleOut] = {
-      val sorted = rows.toVector.sortBy(e => (e.ts_micros, e.event_id))
-      var n = if (st.exists()) st.get() else 0L
-      val out = Vector.newBuilder[ThrottleOut]
-      sorted.foreach { e =>
-        if (n < Limit) {
-          n += 1L
-          out += ThrottleOut(e.event_id, e.user_id, e.w_start, n)
-        }
-      }
-      st.update(n)
-      out.result().iterator
-    }
-  }
-
   /** Streaming entry point: admitted events with their admission rank,
     * at most [[Limit]] per (user, hour window). */
   def throttle(events: Dataset[EventIn]): Dataset[ThrottleOut] = {
-    implicit val outEnc = Encoders.product[ThrottleOut]
-    events.groupByKey(e => (e.user_id, e.w_start))(
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
-      .transformWithState(new ThrottleProcessor,
-        TimeMode.None(), OutputMode.Append())
+    import events.sparkSession.implicits._
+    KeyedFold[(Long, Long), EventIn, Long, ThrottleOut](events,
+        e => (e.user_id, e.w_start), OutputMode.Append(), "admitted") {
+      (_, prev, rows) =>
+        val sorted = rows.toVector.sortBy(e => (e.ts_micros, e.event_id))
+        var n = prev.getOrElse(0L)
+        val out = Vector.newBuilder[ThrottleOut]
+        sorted.foreach { e =>
+          if (n < Limit) {
+            n += 1L
+            out += ThrottleOut(e.event_id, e.user_id, e.w_start, n)
+          }
+        }
+        (n, out.result().iterator)
+    }
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming._
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming weighted reservoir (§2.8 extension): the incremental twin
   * of the batch `sample_weighted` key. Efraimidis–Spirakis sampling is
@@ -39,34 +39,18 @@ object StreamingWeightedSample {
   private[streaming] def topK(k: Int, entries: Vector[DocIn]): Vector[DocIn] =
     entries.sortBy(e => (-e.es_key, e.doc_id)).take(k)
 
-  class ReservoirProcessor(k: Int)
-      extends StatefulProcessor[String, DocIn, SampleOut] {
-
-    @transient private var res: ValueState[Reservoir] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      res = getHandle.getValueState[Reservoir]("reservoir",
-        Encoders.product[Reservoir], TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[DocIn],
-        timerValues: TimerValues): Iterator[SampleOut] = {
-      val prev = if (res.exists()) res.get() else Reservoir(0L, Vector.empty)
-      val merged = topK(k, prev.entries ++ rows)
-      val next = Reservoir(prev.ver + 1, merged)
-      res.update(next)
-      merged.iterator.zipWithIndex.map { case (e, i) =>
-        SampleOut(key, next.ver, i + 1, e.doc_id, e.n_chars, e.es_key)
-      }
-    }
-  }
-
   /** Streaming entry point: per-lang weighted reservoir of size `k`.
     * Input must already carry the es_key column (use
     * [[graft.operators.RelationalExt.esKey]]). */
   def sample(docs: Dataset[DocIn], k: Int = 10): Dataset[SampleOut] = {
-    implicit val outEnc = Encoders.product[SampleOut]
-    docs.groupByKey(_.lang)(Encoders.STRING)
-      .transformWithState(new ReservoirProcessor(k),
-        TimeMode.None(), OutputMode.Update())
+    import docs.sparkSession.implicits._
+    KeyedFold[String, DocIn, Reservoir, SampleOut](docs,
+        _.lang, OutputMode.Update(), "reservoir") { (key, prev, rows) =>
+      val res = prev.getOrElse(Reservoir(0L, Vector.empty))
+      val next = Reservoir(res.ver + 1, topK(k, res.entries ++ rows))
+      (next, next.entries.iterator.zipWithIndex.map { case (e, i) =>
+        SampleOut(key, next.ver, i + 1, e.doc_id, e.n_chars, e.es_key)
+      })
+    }
   }
 }

@@ -10,6 +10,16 @@ import org.apache.spark.sql.functions._
   */
 class BucketingSpec extends SparkSpec {
 
+  test("the shared session's warehouse is private to its test JVM") {
+    // managed tables written by one forked test group must not land in
+    // the working directory, where another group rewrites them at once
+    val wh = java.nio.file.Paths.get(
+      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
+      .toAbsolutePath.normalize
+    val cwd = java.nio.file.Paths.get("").toAbsolutePath.normalize
+    assert(!wh.startsWith(cwd), s"warehouse $wh is under $cwd")
+  }
+
   test("bucketed fact-to-fact join runs without a shuffle exchange") {
     Tables.dropManagedTable(spark, "li_b")
     Tables.dropManagedTable(spark, "ord_b")

@@ -26,16 +26,17 @@ class StreamingSpec extends SparkSpec {
 
   private def ts(offMin: Long): Timestamp = new Timestamp(T0 + offMin * 60000)
 
-  /** Run a streaming query over a memory sink until drained; returns the
-    * sink table. An extra empty round lets event-time timeouts fire after
+  /** Run a streaming query over a memory sink in `mode`, adding each wave
+    * to `ms` and draining it; returns the sink table. An empty wave adds
+    * nothing but still runs a round, so event-time timeouts fire after
     * the final watermark update (classic off-by-one-batch semantics). */
-  private def runToMemory(df: DataFrame, name: String,
-      ms: MemoryStream[Event], flushRounds: Seq[Seq[Event]]): DataFrame = {
+  private def runToMemory[T](df: DataFrame, name: String, ms: MemoryStream[T],
+      waves: Seq[Seq[T]], mode: String = "append"): DataFrame = {
     val q = df.writeStream.format("memory").queryName(name)
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
+      .outputMode(mode).trigger(Trigger.ProcessingTime(0)).start()
     try {
-      flushRounds.foreach { batch =>
-        if (batch.nonEmpty) ms.addData(batch)
+      waves.foreach { w =>
+        if (w.nonEmpty) ms.addData(w)
         q.processAllAvailable()
       }
     } finally q.stop()
@@ -74,16 +75,10 @@ class StreamingSpec extends SparkSpec {
       tev(4, 2, 0, "view"), tev(5, 2, 45, "view"))
     val flush = Seq(tev(98, 9, 10000, "view"), tev(99, 9, 20000, "view"))
     val ms = MemoryStream[TEv]
-    val q = StreamingSessions.sessionizeDynamicGap(ms.toDF(), "10 minutes")
-      .writeStream.format("memory").queryName("stream_dyn_sessions")
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      Seq(data, flush, Seq.empty).foreach { b =>
-        if (b.nonEmpty) ms.addData(b)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    val out = spark.table("stream_dyn_sessions").filter(col("user_id") < 9)
+    val out = runToMemory(
+      StreamingSessions.sessionizeDynamicGap(ms.toDF(), "10 minutes"),
+      "stream_dyn_sessions", ms, Seq(data, flush, Seq.empty))
+      .filter(col("user_id") < 9)
     val batch = Sessionization.dynamicSessions(data.toDF())
     // sum_value is IN the canon: both modes accumulate it on the dsum6
     // decimal lattice, so the float column is part of the parity contract
@@ -100,21 +95,14 @@ class StreamingSpec extends SparkSpec {
   test("late event beyond watermark is dropped; in-grace event merges") {
     val ms = MemoryStream[Event]
     val df = StreamingSessions.sessionize(ms.toDF(), "30 minutes", "10 minutes")
-    val q = df.writeStream.format("memory").queryName("late_sessions")
-      .outputMode("append").start()
-    try {
-      ms.addData(Seq(ev(1, 1, 0), ev(2, 1, 600)))  // watermark → 590min
-      q.processAllAvailable()
+    val out = runToMemory(df, "late_sessions", ms, Seq(
+      Seq(ev(1, 1, 0), ev(2, 1, 600)),  // watermark → 590min
       // 300min is way before the 590min watermark → dropped entirely;
       // 595min is within grace → merges into the open 600min session.
-      ms.addData(Seq(ev(3, 1, 300), ev(4, 1, 595)))
-      q.processAllAvailable()
-      ms.addData(Seq(ev(9, 9, 10000)))             // flush
-      q.processAllAvailable()
-      ms.addData(Seq(ev(10, 9, 20000)))
-      q.processAllAvailable()
-    } finally q.stop()
-    val rows = spark.table("late_sessions").filter(col("user_id") === 1)
+      Seq(ev(3, 1, 300), ev(4, 1, 595)),
+      Seq(ev(9, 9, 10000)),             // flush
+      Seq(ev(10, 9, 20000))))
+    val rows = out.filter(col("user_id") === 1)
       .select(col("n_events")).collect().map(_.getLong(0)).sorted.toSeq
     assert(rows == Seq(1L, 2L)) // session{t0}=1 event; session{595,600}=2; late 300 dropped
   }
@@ -276,14 +264,8 @@ class StreamingSpec extends SparkSpec {
       if (e.event_id <= 2) "click" else "purchase"))
     val ms = MemoryStream[(Long, Long, Timestamp, String)]
     val df = ms.toDF().toDF("event_id", "user_id", "ts", "event_type")
-    val q = StreamingSessions.purchaseClickJoin(df)
-      .writeStream.format("memory").queryName("stream_stream")
-      .outputMode("append").start()
-    try {
-      ms.addData(typed)
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("stream_stream")
+    val got = runToMemory(StreamingSessions.purchaseClickJoin(df),
+      "stream_stream", ms, Seq(typed))
       .select("p_id", "c_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     assert(got == Seq((3L, 1L), (3L, 2L)))
@@ -372,16 +354,9 @@ class StreamingSpec extends SparkSpec {
     // tumbling-window aggregation: the same window re-emits as it grows,
     // where Append would emit nothing until the watermark passes.
     val ms = MemoryStream[Event]
-    val q = StreamingSessions.tumbling(ms.toDF(), "1 hour", "10 minutes")
-      .writeStream.format("memory").queryName("upd_windows")
-      .outputMode("update").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      ms.addData(Seq(ev(1, 1, 0)))
-      q.processAllAvailable()
-      ms.addData(Seq(ev(2, 1, 10)))
-      q.processAllAvailable()
-    } finally q.stop()
-    val emitted = spark.table("upd_windows")
+    val emitted = runToMemory(
+      StreamingSessions.tumbling(ms.toDF(), "1 hour", "10 minutes"),
+      "upd_windows", ms, Seq(Seq(ev(1, 1, 0)), Seq(ev(2, 1, 10))), "update")
       .select("n_events").collect().map(_.getLong(0)).sorted.toSeq
     assert(emitted == Seq(1L, 2L), s"got $emitted")
   }
@@ -469,6 +444,13 @@ class StreamingSpec extends SparkSpec {
       val got = spark.read.parquet(out)
         .collect().map(r => (r.getLong(0), r.getLong(3))).toSet
       assert(got == Set((1L, 1L), (2L, 2L), (3L, 3L), (6L, 1L)))
+      // the counter lives under the state name "admitted": a rename would
+      // leave existing checkpoints unrestorable
+      val admitted = spark.read.format("statestore")
+        .option("stateVarName", "admitted").load(ckpt)
+        .select("key.*", "value.*").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      assert(admitted == Set((1L, 0L, 3L), (2L, 0L, 1L)), admitted.toString)
     }
   }
 
@@ -506,6 +488,12 @@ class StreamingSpec extends SparkSpec {
       val got = spark.read.parquet(out)
         .collect().map(r => (r.getLong(0), r.getString(2))).toSet
       assert(got == Set((1L, "a_on_time"), (2L, "d_within_1h")))
+      // the HWM lives under the state name "hwm"
+      val hwm = spark.read.format("statestore")
+        .option("stateVarName", "hwm").load(ckpt)
+        .select("key.*", "value.*").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(hwm == Set((1L, 7200L * 1000000)), hwm.toString)
     }
   }
 
@@ -615,18 +603,13 @@ class StreamingSpec extends SparkSpec {
       (id, user, new Timestamp(T0 + offMin * 60000), "click", value)
     val ms = MemoryStream[(Long, Long, Timestamp, String, Double)]
     val df = ms.toDF().toDF("event_id", "user_id", "ts", "event_type", "value")
-    val q = StreamingSessions.latestByKey(df)
-      .writeStream.format("memory").queryName("ktable_latest")
-      .outputMode("update").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      ms.addData(Seq(tev(1, 1, 0, 10.0), tev(2, 2, 5, 20.0)))
-      q.processAllAvailable()
-      ms.addData(Seq(tev(3, 1, 50, 30.0), tev(4, 3, 1, 40.0))) // user1 updated
-      q.processAllAvailable()
-    } finally q.stop()
+    val sink = runToMemory(StreamingSessions.latestByKey(df), "ktable_latest",
+      ms, Seq(Seq(tev(1, 1, 0, 10.0), tev(2, 2, 5, 20.0)),
+        Seq(tev(3, 1, 50, 30.0), tev(4, 3, 1, 40.0))), // user1 updated
+      "update")
     // memory sink in update mode appends each re-emission: the LAST row
     // per user is the compacted KTable value — same as the batch max_by.
-    val table = spark.table("ktable_latest").collect()
+    val table = sink.collect()
       .map(r => (r.getLong(0), r.getLong(2))) // (user_id, event_id)
     val compacted = table.zipWithIndex.groupBy(_._1._1)
       .map { case (u, rows) => u -> rows.maxBy(_._2)._1._2 }
@@ -647,18 +630,11 @@ class StreamingSpec extends SparkSpec {
       if (e.event_id == 1 || e.event_id >= 9) "click" else "purchase"))
     val ms = MemoryStream[(Long, Long, Timestamp, String)]
     val df = ms.toDF().toDF("event_id", "user_id", "ts", "event_type")
-    val q = StreamingSessions.purchaseClickLeftJoin(df)
-      .writeStream.format("memory").queryName("stream_left")
-      .outputMode("append").start()
-    try {
-      ms.addData(typed.take(3))
-      q.processAllAvailable()
-      ms.addData(typed.drop(3)) // watermark jump lets the outer row emit
-      q.processAllAvailable()
-      ms.addData(Seq((11L, 9L, new Timestamp(T0 + 30000 * 60000), "purchase")))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("stream_left").filter(col("p_user") < 9)
+    val sink = runToMemory(StreamingSessions.purchaseClickLeftJoin(df),
+      "stream_left", ms, Seq(typed.take(3),
+        typed.drop(3), // watermark jump lets the outer row emit
+        Seq((11L, 9L, new Timestamp(T0 + 30000 * 60000), "purchase"))))
+    val got = sink.filter(col("p_user") < 9)
       .select("p_id", "c_id").collect()
       .map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))).sorted.toSeq
     assert(got == Seq((2L, 1L), (3L, -1L))) // purchase 3 survives with null click
@@ -678,18 +654,10 @@ class StreamingSpec extends SparkSpec {
       (9L, 9L, ts(10000), "click"), (10L, 9L, ts(20000), "click"))
     val ms = MemoryStream[(Long, Long, Timestamp, String)]
     val df = ms.toDF().toDF("event_id", "user_id", "ts", "event_type")
-    val q = StreamingSessions.purchaseClickOuterJoin(df)
-      .writeStream.format("memory").queryName("stream_full")
-      .outputMode("append").start()
-    try {
-      ms.addData(events.take(4))
-      q.processAllAvailable()
-      ms.addData(events.drop(4)) // click-side watermark jump
-      q.processAllAvailable()
-      ms.addData(Seq((11L, 9L, ts(30000), "purchase"))) // purchase-side jump
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("stream_full")
+    val got = runToMemory(StreamingSessions.purchaseClickOuterJoin(df),
+      "stream_full", ms, Seq(events.take(4),
+        events.drop(4), // click-side watermark jump
+        Seq((11L, 9L, ts(30000), "purchase")))) // purchase-side jump
       .filter(coalesce(col("p_user"), col("c_user")) < 9)
       .select("p_id", "c_id").collect()
       .map(r => (if (r.isNullAt(0)) -1L else r.getLong(0),
@@ -756,13 +724,9 @@ class StreamingSpec extends SparkSpec {
         .as[EventIn].collect().toSeq.sortBy(e => (e.ts_micros, e.event_id))
       val waves = keyed.grouped((keyed.size / 3).max(1)).toSeq
       val ms = MemoryStream[EventIn]
-      val q = StreamingAnomaly.detect(ms.toDS()).toDF()
-        .writeStream.format("memory").queryName("stream_anomaly")
-        .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-      try {
-        waves.foreach { w => ms.addData(w); q.processAllAvailable() }
-      } finally q.stop()
-      val streamed = spark.table("stream_anomaly").collect()
+      val sink = runToMemory(StreamingAnomaly.detect(ms.toDS()).toDF(),
+        "stream_anomaly", ms, waves)
+      val streamed = sink.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getDouble(3)))
         .toSet
       val batch = SparkEntry.queries("ts_anomaly_sigma")(spark, sfDir).collect()
@@ -797,14 +761,10 @@ class StreamingSpec extends SparkSpec {
         .as[EventIn].collect().toSeq.reverse
       val waves = keyed.grouped((keyed.size / 3).max(1)).toSeq
       val ms = MemoryStream[EventIn]
-      val q = StreamingSeqMonitor.monitor(ms.toDS()).toDF()
-        .writeStream.format("memory").queryName("stream_obf")
-        .outputMode("update").trigger(Trigger.ProcessingTime(0)).start()
-      try {
-        waves.foreach { w => ms.addData(w); q.processAllAvailable() }
-      } finally q.stop()
+      val sink = runToMemory(StreamingSeqMonitor.monitor(ms.toDS()).toDF(),
+        "stream_obf", ms, waves, "update")
       // latest emission per (variant, look) = max cumulative n
-      val latest = spark.table("stream_obf").collect()
+      val latest = sink.collect()
         .map(r => (r.getString(0), r.getInt(1), r.getLong(2),
           r.getLong(3), r.getLong(4)))
         .groupBy(t => (t._1, t._2)).map { case (_, ts) => ts.maxBy(_._3) }
@@ -835,15 +795,11 @@ class StreamingSpec extends SparkSpec {
       // double-exact range: the fold must raise instead of emitting a
       // double-rounded readout
       val ms = MemoryStream[EventIn]
-      val q = StreamingSeqMonitor.monitor(ms.toDS()).toDF()
-        .writeStream.format("memory").queryName("stream_obf_guard")
-        .outputMode("update").trigger(Trigger.ProcessingTime(0)).start()
       val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        ms.addData(Seq(EventIn("A", 1, 1L,
-          StreamingSeqMonitor.MomentExactCeiling + 1L)))
-        q.processAllAvailable()
+        runToMemory(StreamingSeqMonitor.monitor(ms.toDS()).toDF(),
+          "stream_obf_guard", ms, Seq(Seq(EventIn("A", 1, 1L,
+            StreamingSeqMonitor.MomentExactCeiling + 1L))), "update")
       }
-      q.stop()
       def msgs(t: Throwable): Seq[String] =
         Option(t).toSeq.flatMap(e =>
           Option(e.getMessage).toSeq ++ msgs(e.getCause))
@@ -864,14 +820,10 @@ class StreamingSpec extends SparkSpec {
         .as[EventIn].collect().toSeq.sortBy(e => (e.ts_micros, e.event_id))
       val waves = keyed.grouped((keyed.size / 3).max(1)).toSeq
       val ms = MemoryStream[EventIn]
-      val q = StreamingEwma.ewma(ms.toDS()).toDF()
-        .writeStream.format("memory").queryName("stream_ewma")
-        .outputMode("update").trigger(Trigger.ProcessingTime(0)).start()
-      try {
-        waves.foreach { w => ms.addData(w); q.processAllAvailable() }
-      } finally q.stop()
+      val sink = runToMemory(StreamingEwma.ewma(ms.toDS()).toDF(),
+        "stream_ewma", ms, waves, "update")
       // latest emission per key = max n_events (strictly monotone count)
-      val all = spark.table("stream_ewma").collect()
+      val all = sink.collect()
         .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
       val latest = all.groupBy(t => (t._1, t._2))
         .map { case (_, ts) => ts.maxBy(_._3) }.toSet
@@ -893,14 +845,10 @@ class StreamingSpec extends SparkSpec {
         .as[EventIn].collect().toSeq.sortBy(e => (e.ts_micros, e.event_id))
       val waves = keyed.grouped((keyed.size / 3).max(1)).toSeq
       val ms = MemoryStream[EventIn]
-      val q = StreamingHolt.holt(ms.toDS()).toDF()
-        .writeStream.format("memory").queryName("stream_holt")
-        .outputMode("update").trigger(Trigger.ProcessingTime(0)).start()
-      try {
-        waves.foreach { w => ms.addData(w); q.processAllAvailable() }
-      } finally q.stop()
+      val sink = runToMemory(StreamingHolt.holt(ms.toDS()).toDF(),
+        "stream_holt", ms, waves, "update")
       // latest emission per key = max n_events (strictly monotone count)
-      val all = spark.table("stream_holt").collect()
+      val all = sink.collect()
         .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3),
           r.getLong(4), r.getLong(5)))
       val latest = all.groupBy(t => (t._1, t._2))
@@ -928,14 +876,10 @@ class StreamingSpec extends SparkSpec {
         .as[HourIn].collect().toSeq.sortBy(_.hi)
       val waves = hourly.grouped((hourly.size / 3).max(1)).toSeq
       val ms = MemoryStream[HourIn]
-      val q = StreamingHoltWinters.holtWinters(ms.toDS()).toDF()
-        .writeStream.format("memory").queryName("stream_hw")
-        .outputMode("update").trigger(Trigger.ProcessingTime(0)).start()
-      try {
-        waves.foreach { w => ms.addData(w); q.processAllAvailable() }
-      } finally q.stop()
+      val sink = runToMemory(StreamingHoltWinters.holtWinters(ms.toDS()).toDF(),
+        "stream_hw", ms, waves, "update")
       // latest emission = max n_hours (strictly monotone)
-      val fin = spark.table("stream_hw").collect()
+      val fin = sink.collect()
         .map(r => (r.getLong(1), r.getLong(2), r.getLong(3),
           r.getSeq[Long](4)))
         .maxBy(_._1)
@@ -962,13 +906,9 @@ class StreamingSpec extends SparkSpec {
         .as[EventIn].collect().toSeq.sortBy(e => (e.ts_micros, e.event_id))
       val waves = keyed.grouped((keyed.size / 3).max(1)).toSeq
       val ms = MemoryStream[EventIn]
-      val q = StreamingDebounce.debounce(ms.toDS()).toDF()
-        .writeStream.format("memory").queryName("stream_debounce")
-        .outputMode("update").trigger(Trigger.ProcessingTime(0)).start()
-      try {
-        waves.foreach { w => ms.addData(w); q.processAllAvailable() }
-      } finally q.stop()
-      val latest = spark.table("stream_debounce").collect()
+      val sink = runToMemory(StreamingDebounce.debounce(ms.toDS()).toDF(),
+        "stream_debounce", ms, waves, "update")
+      val latest = sink.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         .groupBy(_._1).map { case (_, ts) => ts.maxBy(_._2) }.toSet
       val batch = SparkEntry.queries("ts_debounce")(spark, sfDir).collect()
@@ -988,14 +928,10 @@ class StreamingSpec extends SparkSpec {
         .as[EventIn].collect().toSeq.sortBy(e => (e.ts_micros, e.event_id))
       val waves = keyed.grouped((keyed.size / 3).max(1)).toSeq
       val ms = MemoryStream[EventIn]
-      val q = StreamingThrottle.throttle(ms.toDS()).toDF()
-        .writeStream.format("memory").queryName("stream_throttle")
-        .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-      try {
-        waves.foreach { w => ms.addData(w); q.processAllAvailable() }
-      } finally q.stop()
+      val sink = runToMemory(StreamingThrottle.throttle(ms.toDS()).toDF(),
+        "stream_throttle", ms, waves)
       // Append mode: each admitted event is emitted exactly once.
-      val admitted = spark.table("stream_throttle").collect()
+      val admitted = sink.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       assert(admitted.length == admitted.toSet.size) // no duplicate emission
       val batch = SparkEntry.queries("ts_throttle")(spark, sfDir)
@@ -1009,11 +945,8 @@ class StreamingSpec extends SparkSpec {
       val burst = (1L to 5L).map(i =>
         EventIn(999L, 0L, i * 1000000L, 100L + i))
       val ms2 = MemoryStream[EventIn]
-      val q2 = StreamingThrottle.throttle(ms2.toDS()).toDF()
-        .writeStream.format("memory").queryName("stream_throttle_burst")
-        .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-      try { ms2.addData(burst); q2.processAllAvailable() } finally q2.stop()
-      val kept = spark.table("stream_throttle_burst").collect()
+      val kept = runToMemory(StreamingThrottle.throttle(ms2.toDS()).toDF(),
+        "stream_throttle_burst", ms2, Seq(burst)).collect()
         .map(r => (r.getLong(0), r.getLong(3))).sorted.toSeq
       assert(kept == Seq((101L, 1L), (102L, 2L), (103L, 3L)))
     }
@@ -1028,14 +961,10 @@ class StreamingSpec extends SparkSpec {
         .as[EventIn].collect().toSeq.sortBy(_.event_id)
       val waves = keyed.grouped((keyed.size / 3).max(1)).toSeq
       val ms = MemoryStream[EventIn]
-      val q = StreamingLateness.lateness(ms.toDS()).toDF()
-        .writeStream.format("memory").queryName("stream_lateness")
-        .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-      try {
-        waves.foreach { w => ms.addData(w); q.processAllAvailable() }
-      } finally q.stop()
+      val sink = runToMemory(StreamingLateness.lateness(ms.toDS()).toDF(),
+        "stream_lateness", ms, waves)
       // aggregate the per-event emissions exactly as the batch key does
-      val streamed = spark.table("stream_lateness")
+      val streamed = sink
         .groupBy("bucket")
         .agg(count(lit(1)).as("n_events"), max("late_us").as("max_late_us"))
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
@@ -1047,11 +976,8 @@ class StreamingSpec extends SparkSpec {
         EventIn(999L, 2L, 7200L * 1000000 - 90L * 1000000),
         EventIn(999L, 3L, 3600L * 1000000))
       val ms2 = MemoryStream[EventIn]
-      val q2 = StreamingLateness.lateness(ms2.toDS()).toDF()
-        .writeStream.format("memory").queryName("stream_lateness_burst")
-        .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-      try { ms2.addData(burst); q2.processAllAvailable() } finally q2.stop()
-      val got = spark.table("stream_lateness_burst").collect()
+      val got = runToMemory(StreamingLateness.lateness(ms2.toDS()).toDF(),
+        "stream_lateness_burst", ms2, Seq(burst)).collect()
         .map(r => (r.getLong(0), r.getString(2))).toSet
       // 2 is 90 s behind the HWM (c bucket); 3 is exactly 1 h behind
       // (boundary inclusive -> d bucket)
@@ -1070,14 +996,10 @@ class StreamingSpec extends SparkSpec {
         .as[EventIn].collect().toSeq.sortBy(e => (e.ts_micros, e.event_id))
       val waves = keyed.grouped((keyed.size / 3).max(1)).toSeq
       val ms = MemoryStream[EventIn]
-      val q = StreamingPattern.patterns(ms.toDS()).toDF()
-        .writeStream.format("memory").queryName("stream_pattern")
-        .outputMode("update").trigger(Trigger.ProcessingTime(0)).start()
-      try {
-        waves.foreach { w => ms.addData(w); q.processAllAvailable() }
-      } finally q.stop()
+      val sink = runToMemory(StreamingPattern.patterns(ms.toDS()).toDF(),
+        "stream_pattern", ms, waves, "update")
       // latest emission per user = max n_events (strictly monotone)
-      val latest = spark.table("stream_pattern").collect()
+      val latest = sink.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         .groupBy(_._1).map { case (_, ts) => ts.maxBy(_._2) }
         .collect { case (u, _, n) if n > 0 => (u, n) }.toSet
@@ -1100,13 +1022,9 @@ class StreamingSpec extends SparkSpec {
         .as[EventIn].collect().toSeq.sortBy(e => (e.ts_micros, e.event_id))
       val waves = keyed.grouped((keyed.size / 3).max(1)).toSeq
       val ms = MemoryStream[EventIn]
-      val q = StreamingPattern.patterns(ms.toDS(), Cep.SignupPurchase).toDF()
-        .writeStream.format("memory").queryName("stream_pattern2")
-        .outputMode("update").trigger(Trigger.ProcessingTime(0)).start()
-      try {
-        waves.foreach { w => ms.addData(w); q.processAllAvailable() }
-      } finally q.stop()
-      val latest = spark.table("stream_pattern2").collect()
+      val sink = runToMemory(StreamingPattern.patterns(ms.toDS(), Cep.SignupPurchase).toDF(),
+        "stream_pattern2", ms, waves, "update")
+      val latest = sink.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         .groupBy(_._1).map { case (_, ts) => ts.maxBy(_._2) }
         .collect { case (u, _, n) if n > 0 => (u, n) }.toSet
@@ -1162,6 +1080,16 @@ class StreamingSpec extends SparkSpec {
       val batch = Cep.detectBatch(all, Cep.ViewClickPurchase).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toMap
       assert(got == batch)
+      // the DFA slots live under the state name "pat": each user's last
+      // two events, three events seen, one completed pattern
+      val pat = spark.read.format("statestore")
+        .option("stateVarName", "pat").load(ckpt)
+        .select(col("key.*"), col("value.types"), col("value.nEvents"),
+          col("value.nPatterns")).collect()
+        .map(r => (r.getLong(0), r.getSeq[String](1), r.getLong(2),
+          r.getLong(3))).toSet
+      assert(pat == Set((1L, Seq("click", "purchase"), 3L, 1L),
+        (2L, Seq("click", "purchase"), 3L, 1L)), pat.toString)
     }
   }
 
@@ -1177,15 +1105,11 @@ class StreamingSpec extends SparkSpec {
         .as[EventIn].collect().toSeq.sortBy(e => (e.ts_micros, e.event_id))
       val waves = keyed.grouped((keyed.size / 3).max(1)).toSeq
       val ms = MemoryStream[EventIn]
-      val q = StreamingRunningDistinct.runningDistinct(ms.toDS()).toDF()
-        .writeStream.format("memory").queryName("stream_rdistinct")
-        .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-      try {
-        waves.foreach { w => ms.addData(w); q.processAllAvailable() }
-      } finally q.stop()
+      val sink = runToMemory(StreamingRunningDistinct.runningDistinct(ms.toDS()).toDF(),
+        "stream_rdistinct", ms, waves)
       // Append mode: every event's row is emitted exactly once and is
       // final — the full sink IS the batch answer, row for row.
-      val streamed = spark.table("stream_rdistinct").collect()
+      val streamed = sink.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       val batch = SparkEntry.queries("win_running_distinct")(spark, sfDir)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
@@ -1205,15 +1129,11 @@ class StreamingSpec extends SparkSpec {
         .as[EventIn].collect().toSeq.sortBy(e => (e.ts_micros, e.event_id))
       val waves = keyed.grouped((keyed.size / 3).max(1)).toSeq
       val ms = MemoryStream[EventIn]
-      val q = StreamingNewVsReturning.newVsReturning(ms.toDS()).toDF()
-        .writeStream.format("memory").queryName("stream_nvr")
-        .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-      try {
-        waves.foreach { w => ms.addData(w); q.processAllAvailable() }
-      } finally q.stop()
+      val sink = runToMemory(StreamingNewVsReturning.newVsReturning(ms.toDS()).toDF(),
+        "stream_nvr", ms, waves)
       // Append sink holds one row per (user, active day); the daily
       // rollup of those cells IS the batch readout.
-      val streamed = spark.table("stream_nvr")
+      val streamed = sink
         .groupBy("day")
         .agg(sum(when(col("is_new"), 1L).otherwise(0L)).as("n_new"),
           sum(when(!col("is_new"), 1L).otherwise(0L)).as("n_returning"),
@@ -1244,17 +1164,13 @@ class StreamingSpec extends SparkSpec {
         .sortBy(e => (e.user_id * 2654435761L + e.event_type.hashCode) % 997)
       val waves = rows.grouped((rows.size / 3).max(1)).toSeq
       val ms = MemoryStream[EventIn]
-      val q = StreamingBitmapDau.bitmapDau(ms.toDS()).toDF()
-        .writeStream.format("memory").queryName("stream_bitmap_dau")
-        .outputMode("update").trigger(Trigger.ProcessingTime(0)).start()
-      try {
-        waves.foreach { w => ms.addData(w); q.processAllAvailable() }
-        ms.addData(waves(waves.size / 2)) // duplicate delivery
-        q.processAllAvailable()
-      } finally q.stop()
+      val sink = runToMemory(StreamingBitmapDau.bitmapDau(ms.toDS()).toDF(),
+        "stream_bitmap_dau", ms,
+        waves :+ waves(waves.size / 2), // duplicate delivery
+        "update")
       // latest emission per (type, bucket) = max count (monotone), DAU
       // per type = sum over its disjoint buckets
-      val streamed = spark.table("stream_bitmap_dau")
+      val streamed = sink
         .groupBy("event_type", "bucket").agg(max("n_users").as("n"))
         .groupBy("event_type").agg(sum("n").as("n_users"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -1279,13 +1195,10 @@ class StreamingSpec extends SparkSpec {
         .sortBy(e => (e.user_id * 2654435761L + e.event_type.hashCode) % 991)
       val waves = rows.grouped((rows.size / 3).max(1)).toSeq
       val ms = MemoryStream[EventIn]
-      val q = StreamingCountMin.countMin(ms.toDS()).toDF()
-        .writeStream.format("memory").queryName("stream_count_min")
-        .outputMode("update").trigger(Trigger.ProcessingTime(0)).start()
-      try waves.foreach { w => ms.addData(w); q.processAllAvailable() }
-      finally q.stop()
+      val sink = runToMemory(StreamingCountMin.countMin(ms.toDS()).toDF(),
+        "stream_count_min", ms, waves, "update")
       // latest emission per type = the one with the full count
-      val streamed = spark.table("stream_count_min")
+      val streamed = sink
         .collect()
         .groupBy(_.getString(0))
         .map { case (t, rs) => t -> rs.maxBy(_.getLong(1)) }
@@ -1320,14 +1233,9 @@ class StreamingSpec extends SparkSpec {
         .as[DocIn].collect().toSeq.sortBy(_.doc_id)
       val waves = keyed.grouped((keyed.size / 3).max(1)).toSeq
       val ms = MemoryStream[DocIn]
-      val q = StreamingWeightedSample.sample(ms.toDS()).toDF()
-        .writeStream.format("memory").queryName("stream_wsample")
-        .outputMode("update").trigger(Trigger.ProcessingTime(0)).start()
-      try {
-        waves.foreach { w => ms.addData(w); q.processAllAvailable() }
-      } finally q.stop()
+      val sink = runToMemory(StreamingWeightedSample.sample(ms.toDS()).toDF(),
+        "stream_wsample", ms, waves, "update")
       // current sample = max-ver emission per lang
-      val sink = spark.table("stream_wsample")
       val all = sink.select(col("lang"), col("ver"), col("rk"), col("doc_id"),
         col("n_chars"), round(col("es_key"), 6).as("es_key")).collect()
       val maxVer = all.groupBy(_.getString(0))
@@ -1366,13 +1274,9 @@ class StreamingSpec extends SparkSpec {
         // fact upsert (o1 amount) joins current dim; dim 2 update re-emits o2
         Seq(fact(10, 1, 150, 7), dim(2, "platinum", 8)))
       val ms = MemoryStream[FkChange]
-      val q = StreamingFkJoin.fkJoin(ms.toDS()).toDF()
-        .writeStream.format("memory").queryName("stream_fk_join")
-        .outputMode("update").trigger(Trigger.ProcessingTime(0)).start()
-      try {
-        waves.foreach { w => ms.addData(w); q.processAllAvailable() }
-      } finally q.stop()
-      val all = spark.table("stream_fk_join").collect()
+      val sink = runToMemory(StreamingFkJoin.fkJoin(ms.toDS()).toDF(),
+        "stream_fk_join", ms, waves, "update")
+      val all = sink.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3),
           r.getLong(4)))
       // the KS FK-join contract: the dim-1 update at seq 6 re-emitted both
@@ -1454,13 +1358,9 @@ class StreamingSpec extends SparkSpec {
         Seq(dim(1, "bronze", 3), fact(30, 3, 300, 4)),
         Seq(dim(1, "gold", 5)))
       val ms = MemoryStream[FkChange]
-      val q = StreamingFkJoin.fkJoin(ms.toDS(), leftJoin = true).toDF()
-        .writeStream.format("memory").queryName("stream_fk_left")
-        .outputMode("update").trigger(Trigger.ProcessingTime(0)).start()
-      try {
-        waves.foreach { w => ms.addData(w); q.processAllAvailable() }
-      } finally q.stop()
-      val all = spark.table("stream_fk_left").collect()
+      val sink = runToMemory(StreamingFkJoin.fkJoin(ms.toDS(), leftJoin = true).toDF(),
+        "stream_fk_left", ms, waves, "update")
+      val all = sink.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           Option(r.getString(3)), r.getLong(4)))
       assert(all.contains((10L, 1L, 100L, None, 1L)), all.mkString(", "))
@@ -1558,14 +1458,9 @@ class StreamingSpec extends SparkSpec {
         .as[EventIn].collect().toSeq.sortBy(e => (e.us, e.event_id))
       val waves = keyed.grouped((keyed.size / 3).max(1)).toSeq
       val ms = MemoryStream[EventIn]
-      val q = StreamingSlidingWindow.slidingSum(ms.toDS(), 3600L * 1000000L)
-        .toDF()
-        .writeStream.format("memory").queryName("stream_sliding")
-        .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-      try {
-        waves.foreach { w => ms.addData(w); q.processAllAvailable() }
-      } finally q.stop()
-      val streamed = spark.table("stream_sliding").collect()
+      val sink = runToMemory(StreamingSlidingWindow.slidingSum(ms.toDS(), 3600L * 1000000L).toDF(),
+        "stream_sliding", ms, waves)
+      val streamed = sink.collect()
         .map(r => (r.getLong(0), r.getDouble(2))).toSet
       val batch = SparkEntry.queries("win_range_frame")(spark, sfDir).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSet
@@ -1596,13 +1491,9 @@ class StreamingSpec extends SparkSpec {
         Seq(sev(99, 9, 10000, 1L), sev(100, 9, 20000, 1L)),
         Seq.empty)
       val ms = MemoryStream[EventIn]
-      val q = StreamingSuppress.suppress(ms.toDS(), limitUs).toDF()
-        .writeStream.format("memory").queryName("stream_suppress")
-        .outputMode("update").trigger(Trigger.ProcessingTime(0)).start()
-      try {
-        waves.foreach { w => if (w.nonEmpty) ms.addData(w); q.processAllAvailable() }
-      } finally q.stop()
-      val got = spark.table("stream_suppress")
+      val sink = runToMemory(StreamingSuppress.suppress(ms.toDS(), limitUs).toDF(),
+        "stream_suppress", ms, waves, "update")
+      val got = sink
         .filter(col("user_id") < 9).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
         .toSet
@@ -1670,13 +1561,9 @@ class StreamingSpec extends SparkSpec {
         Seq(sev(99, 9, 10000, 1L)),
         Seq.empty)
       val ms = MemoryStream[EventIn]
-      val q = StreamingSuppress.suppress(ms.toDS(), limitUs).toDF()
-        .writeStream.format("memory").queryName("stream_suppress_ooo")
-        .outputMode("update").trigger(Trigger.ProcessingTime(0)).start()
-      try {
-        waves.foreach { w => if (w.nonEmpty) ms.addData(w); q.processAllAvailable() }
-      } finally q.stop()
-      val got = spark.table("stream_suppress_ooo")
+      val sink = runToMemory(StreamingSuppress.suppress(ms.toDS(), limitUs).toDF(),
+        "stream_suppress_ooo", ms, waves, "update")
+      val got = sink
         .filter(col("user_id") < 9).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
         .toSet
