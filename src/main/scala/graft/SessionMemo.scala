@@ -53,15 +53,29 @@ final class SessionMemo[V <: AnyRef](discard: V => Unit = (_: AnyRef) => ()) {
 }
 
 object SessionMemo {
-  /** Discard hook for localCheckpoint-ed DataFrame values: unpersist the
-    * RDD blocks the checkpoint pinned (read off the plan's LogicalRDD
-    * leaves — `Dataset.unpersist` would be a no-op here because
-    * localCheckpoint persists the RDD directly, outside the
-    * CacheManager). */
-  def freeCheckpoint(df: DataFrame): Unit = {
-    val sc = df.sparkSession.sparkContext
-    if (!sc.isStopped) df.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false))
+  /** Eager localCheckpoint whose blocks [[freeCheckpoint]] can free
+    * without waiting for GC. The blocks are found from the checkpointed
+    * plan itself — its `LogicalRDD` leaf holds exactly the block-pinned
+    * RDD — not from a session-global `getPersistentRDDs` diff, so a frame
+    * persisted concurrently by another thread in the same session can
+    * never be captured and force-freed by mistake (round-5 ADVICE). */
+  def checkpointTracked(df: DataFrame): DataFrame = {
+    val out = df.localCheckpoint()
+    require(checkpointRdds(out).nonEmpty,
+      "localCheckpoint left no LogicalRDD leaf to track — cannot free blocks deterministically")
+    out
+  }
+
+  /** Free a checkpointed frame's blocks (also the discard hook of memos
+    * holding localCheckpoint-ed values): unpersist the RDDs of the
+    * frame's own LogicalRDD leaves — `Dataset.unpersist` would be a no-op
+    * here because localCheckpoint persists the RDD directly, outside the
+    * CacheManager. */
+  def freeCheckpoint(df: DataFrame): Unit =
+    if (!df.sparkSession.sparkContext.isStopped)
+      checkpointRdds(df).foreach(_.unpersist(blocking = false))
+
+  private def checkpointRdds(df: DataFrame) = df.queryExecution.analyzed.collect {
+    case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
   }
 }

@@ -86,4 +86,20 @@ object Tables {
   /** Oracle-side SQL fragment matching [[dsum]]. */
   def dsumSql(x: String): String = s"CAST(sum(CAST($x AS DECIMAL(18,4))) AS DOUBLE)"
   def dsum6Sql(x: String): String = s"CAST(sum(CAST($x AS DECIMAL(18,6))) AS DOUBLE)"
+
+  /** Hex digits `from`..`from + len - 1` (1-based) of string column `h`
+    * as an unsigned integer string; each caller casts it to int or long.
+    * Oracle twin: [[hexIntSql]]. */
+  def hexInt(h: Column, from: Int, len: Int): Column =
+    conv(substring(h, from, len), 16, 10)
+
+  /** DuckDB twin of [[hexInt]], already a BIGINT: DuckDB has no base-conv
+    * builtin, so each hex digit decodes positionally (strpos is 1-based)
+    * and weighs in by its power of 16. */
+  def hexIntSql(h: String, from: Int, len: Int): String =
+    (0 until len).map { i =>
+      val w = 1L << (4 * (len - 1 - i))
+      s"(CAST(strpos('0123456789abcdef', substr($h, ${from + i}, 1)) AS BIGINT) - 1)" +
+        (if (w > 1) s" * $w" else "")
+    }.mkString("( ", "\n   + ", "\n   )")
 }

@@ -434,8 +434,7 @@ object Aggregates {
     Op("agg_hll_overlap", (s, dir) => {
       val sk = events(s, dir).groupBy("event_type")
         .agg(hll_sketch_agg(col("user_id"), lit(14)).as("sk"))
-      val a = sk.select(col("event_type").as("type_a"), col("sk").as("sk_a"))
-      val b = sk.select(col("event_type").as("type_b"), col("sk").as("sk_b"))
+      val (a, b) = AnalyticsExt.typeSides(sk, Nil, "sk" -> "sk_")
       a.crossJoin(b).filter(col("type_a") < col("type_b"))
         .select(col("type_a"), col("type_b"),
           (hll_sketch_estimate(col("sk_a")) + hll_sketch_estimate(col("sk_b"))

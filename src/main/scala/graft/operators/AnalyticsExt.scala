@@ -28,9 +28,45 @@ object AnalyticsExt {
     events(s, dir).groupBy("user_id")
       .agg(count(lit(1)).cast("double").as("x"),
         dsum6(col("value")).as("y"))
-      .withColumn("variant",
-        when(substring(md5(concat(lit("srm42:"), col("user_id"))), 1, 1)
-          < "8", lit("A")).otherwise(lit("B")))
+      .withColumn("variant", when(srmArmA, lit("A")).otherwise(lit("B")))
+
+  /** The suite's one salted-md5 A/B assignment: a user is in arm A iff
+    * the first hex digit of md5("srm42:" || user_id) is below 8. Oracle
+    * twin: [[srmArmASql]]. */
+  private[operators] def srmArmA: org.apache.spark.sql.Column =
+    substring(md5(concat(lit("srm42:"), col("user_id"))), 1, 1) < "8"
+  private[operators] def srmArmASql: String =
+    "substr(md5('srm42:' || CAST(user_id AS VARCHAR)), 1, 1) < '8'"
+
+  /** Exact per-type moments on the dsum6 lattice — (event_type, n, sx,
+    * sxx), n as a double — from one two-phase corpus agg; the pairwise
+    * and omnibus mean tests all start here. Oracle twin: the `st` CTE
+    * [[typeMomentsCte]]. */
+  private[operators] def typeMoments(s: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame =
+    events(s, dir).groupBy("event_type").agg(
+      count(lit(1)).cast("double").as("n"),
+      dsum6(col("value")).as("sx"),
+      dsum6(col("value") * col("value")).as("sxx"))
+  private[operators] def typeMomentsCte: String =
+    s"""st AS (SELECT event_type, CAST(count(*) AS DOUBLE) AS n,
+       |   ${dsum6Sql("value")} AS sx, ${dsum6Sql("value * value")} AS sxx
+       | FROM events GROUP BY 1)""".stripMargin
+
+  /** The a- and b-sides of an ordered event-type pair: `event_type`
+    * becomes type_a / type_b, `keep` columns (join keys) pass through and
+    * each (column, prefix) in `renamed` becomes prefix + "a" / "b".
+    * `event_type` leads unless `keep` names its place. Each key joins the
+    * sides its own way. */
+  private[operators] def typeSides(df: org.apache.spark.sql.DataFrame,
+      keep: Seq[String], renamed: (String, String)*)
+      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    val lead = if (keep.contains("event_type")) keep else "event_type" +: keep
+    def side(x: String) = df.select(lead.map(c =>
+        if (c == "event_type") col(c).as(s"type_$x") else col(c)) ++
+      renamed.map { case (c, p) => col(c).as(p + x) }: _*)
+    (side("a"), side("b"))
+  }
 
   /** DuckDB twin of [[markovFixedPoint]]'s grid + iteration chain: the
     * shared WITH-clause prefix (transition pairs → micro-lattice pm →
@@ -118,6 +154,21 @@ object AnalyticsExt {
         round(col("actual") - col("expected"), 6).as("residual"))
   }
 
+  /** Per-user OHLC over tumbling windows of `width`: open/close pick by
+    * event time via min_by/max_by. The body of `window_ohlc` and of its
+    * streaming twin [[graft.streaming.StreamingSessions.ohlc]]. */
+  def ohlcWindows(df: org.apache.spark.sql.DataFrame,
+      width: String): org.apache.spark.sql.DataFrame =
+    df.groupBy(col("user_id"), window(col("ts"), width).as("w"))
+      .agg(min_by(col("value"), col("ts")).as("open_value"),
+        max(col("value")).as("high_value"),
+        min(col("value")).as("low_value"),
+        max_by(col("value"), col("ts")).as("close_value"),
+        count(lit(1)).as("n_events"))
+      .select(col("user_id"), col("w.start").as("w_start"),
+        col("open_value"), col("high_value"), col("low_value"),
+        col("close_value"), col("n_events"))
+
   /** Bucket count for the rank-test value-domain machine — the
     * parallelism knob of [[denseTypeValueCum]]: the widest window runs
     * on ~|distinct values|/B rows per (type, bucket) partition. */
@@ -172,6 +223,21 @@ object AnalyticsExt {
       .withColumn("cum", sum("cnt").over(wIn) + col("boff"))
       .select("event_type", "value", "cnt", "cum")
   }
+
+  /** DuckDB twin of [[denseTypeValueCum]] (one window per type; the
+    * buckets are a Spark parallelism device with the same result). */
+  private def denseCumCtes: String =
+    """WITH vc AS (SELECT event_type, value, count(*) AS cnt
+      |  FROM events GROUP BY 1, 2),
+      | vals AS (SELECT DISTINCT value FROM vc),
+      | types AS (SELECT DISTINCT event_type FROM vc),
+      | dense AS (SELECT t.event_type, v.value, COALESCE(cnt, 0) AS cnt
+      |  FROM vals v CROSS JOIN types t
+      |  LEFT JOIN vc ON vc.event_type = t.event_type AND vc.value = v.value),
+      | cum AS (SELECT event_type, value, cnt,
+      |   sum(cnt) OVER (PARTITION BY event_type ORDER BY value
+      |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+      |  FROM dense)""".stripMargin
 
   /** The group-sequential release tail shared by the batch
     * agg_group_sequential_obf key and the StreamingSeqMonitor parity
@@ -377,17 +443,7 @@ object AnalyticsExt {
     // regardless of window population, so the single exchange moves one
     // partial row per (user, window, map task), never raw events.
     Op("window_ohlc", (s, dir) =>
-      events(s, dir)
-        .groupBy(col("user_id"), window(col("ts"), "1 hour").as("w"))
-        .agg(min_by(col("value"), col("ts")).as("open_value"),
-          max(col("value")).as("high_value"),
-          min(col("value")).as("low_value"),
-          max_by(col("value"), col("ts")).as("close_value"),
-          count(lit(1)).as("n_events"))
-        .select(col("user_id"), col("w.start").as("w_start"),
-          col("open_value"), col("high_value"), col("low_value"),
-          col("close_value"), col("n_events"))
-        .orderBy("user_id", "w_start"),
+      ohlcWindows(events(s, dir), "1 hour").orderBy("user_id", "w_start"),
       Some("""SELECT user_id, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS w_start,
              | arg_min(value, ts) AS open_value, max(value) AS high_value,
              | min(value) AS low_value, arg_max(value, ts) AS close_value,
@@ -1461,18 +1517,13 @@ object AnalyticsExt {
     // user_id window exchange (the shared withSessionSeq), pure
     // projection after.
     Op("sessionize_assign", (s, dir) =>
-      graft.operators.Sessionization.withSessionSeq(events(s, dir))
+      Sessionization.withSessionSeq(events(s, dir))
         .select(col("event_id"), col("user_id"), col("ts"),
           col("session_seq"))
         .orderBy("event_id"),
-      Some("""WITH e AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
-             | g AS (SELECT *, CASE WHEN lag(ts) OVER w IS NULL
-             |     OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000 THEN 1 ELSE 0 END AS new_s
-             |   FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-             |SELECT event_id, user_id, ts,
-             | CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-             |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_seq
-             |FROM g ORDER BY event_id""".stripMargin)),
+      Some(s"""${Sessionization.oracleSessionCte()}
+             |SELECT event_id, user_id, ts, session_seq
+             |FROM s ORDER BY event_id""".stripMargin)),
 
     // Welch's two-sample t-statistic between every pair of event types —
     // the A/B-experiment significance readout, computed the exact-stats
@@ -1482,14 +1533,8 @@ object AnalyticsExt {
     // of finished aggregates, never facts) and the t arithmetic runs as
     // the same correctly-rounded IEEE expression in both engines.
     Op("agg_ab_ttest", (s, dir) => {
-      val st = events(s, dir).groupBy("event_type").agg(
-        count(lit(1)).cast("double").as("n"),
-        dsum6(col("value")).as("sx"),
-        dsum6(col("value") * col("value")).as("sxx"))
-      val a = st.select(col("event_type").as("type_a"), col("n").as("na"),
-        col("sx").as("sxa"), col("sxx").as("sxxa"))
-      val b = st.select(col("event_type").as("type_b"), col("n").as("nb"),
-        col("sx").as("sxb"), col("sxx").as("sxxb"))
+      val st = typeMoments(s, dir)
+      val (a, b) = typeSides(st, Nil, "n" -> "n", "sx" -> "sx", "sxx" -> "sxx")
       val sea = (col("sxxa") - col("sxa") * col("sxa") / col("na")) /
         (col("na") - 1.0) / col("na")
       val seb = (col("sxxb") - col("sxb") * col("sxb") / col("nb")) /
@@ -1501,9 +1546,7 @@ object AnalyticsExt {
             sqrt(sea + seb), 6).as("t_stat"))
         .orderBy("type_a", "type_b")
     },
-      Some(s"""WITH st AS (SELECT event_type, CAST(count(*) AS DOUBLE) AS n,
-              |   ${dsum6Sql("value")} AS sx, ${dsum6Sql("value * value")} AS sxx
-              | FROM events GROUP BY 1)
+      Some(s"""WITH $typeMomentsCte
               |SELECT a.event_type AS type_a, b.event_type AS type_b,
               | CAST(a.n AS BIGINT) AS n_a, CAST(b.n AS BIGINT) AS n_b,
               | round((a.sx / a.n - b.sx / b.n) / sqrt(
@@ -1525,10 +1568,7 @@ object AnalyticsExt {
     // float addition could sneak in).
     Op("agg_anova_oneway", (s, dir) => {
       val dec = "decimal(28,12)"
-      val st = events(s, dir).groupBy("event_type").agg(
-        count(lit(1)).cast("double").as("n"),
-        dsum6(col("value")).as("sx"),
-        dsum6(col("value") * col("value")).as("sxx"))
+      val st = typeMoments(s, dir)
       val tot = st.agg(
         sum(col("n").cast(dec)).cast("double").as("nt"),
         sum(col("sx").cast(dec)).cast("double").as("sxt"),
@@ -1548,9 +1588,7 @@ object AnalyticsExt {
         round(col("ssw"), 6).as("ss_within"),
         round(f, 6).as("f_stat"))
     },
-      Some(s"""WITH st AS (SELECT event_type, CAST(count(*) AS DOUBLE) AS n,
-              |   ${dsum6Sql("value")} AS sx, ${dsum6Sql("value * value")} AS sxx
-              | FROM events GROUP BY 1),
+      Some(s"""WITH $typeMomentsCte,
               | tot AS (SELECT
               |   CAST(sum(CAST(n AS DECIMAL(28,12))) AS DOUBLE) AS nt,
               |   CAST(sum(CAST(sx AS DECIMAL(28,12))) AS DOUBLE) AS sxt,
@@ -1796,8 +1834,7 @@ object AnalyticsExt {
       val dec = "decimal(18,6)"
       val base = events(s, dir)
         .withColumn("variant",
-          when(substring(md5(concat(lit("srm42:"), col("user_id"))), 1, 1)
-            < "8", lit("A")).otherwise(lit("B")))
+          when(srmArmA, lit("A")).otherwise(lit("B")))
         .withColumn("look",
           (expr("datediff(to_date(ts), date'2024-01-01') div 7") + 1)
             .cast("int"))
@@ -1814,8 +1851,8 @@ object AnalyticsExt {
         sum("sxx").over(w).cast("double").as("csxx"))
       obfRelease(cum)
     },
-      Some("""WITH base AS (SELECT value,
-             |   CASE WHEN substr(md5('srm42:' || CAST(user_id AS VARCHAR)), 1, 1) < '8'
+      Some(s"""WITH base AS (SELECT value,
+             |   CASE WHEN $srmArmASql
              |     THEN 'A' ELSE 'B' END AS variant,
              |   ((CAST(ts AS DATE) - DATE '2024-01-01') // 7) + 1 AS look
              |  FROM events),
@@ -1852,14 +1889,8 @@ object AnalyticsExt {
     // approximation (a rational expression — no gamma function, so it
     // is engine-exact). One corpus agg, |types|²/2 arithmetic rows.
     Op("agg_effect_size", (s, dir) => {
-      val st = events(s, dir).groupBy("event_type").agg(
-        count(lit(1)).cast("double").as("n"),
-        dsum6(col("value")).as("sx"),
-        dsum6(col("value") * col("value")).as("sxx"))
-      val a = st.select(col("event_type").as("type_a"), col("n").as("na"),
-        col("sx").as("sxa"), col("sxx").as("sxxa"))
-      val b = st.select(col("event_type").as("type_b"), col("n").as("nb"),
-        col("sx").as("sxb"), col("sxx").as("sxxb"))
+      val st = typeMoments(s, dir)
+      val (a, b) = typeSides(st, Nil, "n" -> "n", "sx" -> "sx", "sxx" -> "sxx")
       val ssa = col("sxxa") - col("sxa") * col("sxa") / col("na")
       val ssb = col("sxxb") - col("sxb") * col("sxb") / col("nb")
       val sPool = sqrt((ssa + ssb) / (col("na") + col("nb") - lit(2.0)))
@@ -1873,9 +1904,7 @@ object AnalyticsExt {
           round(abs(d), 6).as("abs_d"))
         .orderBy("type_a", "type_b")
     },
-      Some(s"""WITH st AS (SELECT event_type, CAST(count(*) AS DOUBLE) AS n,
-              |   ${dsum6Sql("value")} AS sx, ${dsum6Sql("value * value")} AS sxx
-              | FROM events GROUP BY 1),
+      Some(s"""WITH $typeMomentsCte,
               | p AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
               |   (a.sx / a.n - b.sx / b.n)
               |     / sqrt(((a.sxx - a.sx * a.sx / a.n)
@@ -1898,14 +1927,8 @@ object AnalyticsExt {
     // compares 6-dp-rounded t's so both engines decide on identical
     // released values.
     Op("agg_tost_equivalence", (s, dir) => {
-      val st = events(s, dir).groupBy("event_type").agg(
-        count(lit(1)).cast("double").as("n"),
-        dsum6(col("value")).as("sx"),
-        dsum6(col("value") * col("value")).as("sxx"))
-      val a = st.select(col("event_type").as("type_a"), col("n").as("na"),
-        col("sx").as("sxa"), col("sxx").as("sxxa"))
-      val b = st.select(col("event_type").as("type_b"), col("n").as("nb"),
-        col("sx").as("sxb"), col("sxx").as("sxxb"))
+      val st = typeMoments(s, dir)
+      val (a, b) = typeSides(st, Nil, "n" -> "n", "sx" -> "sx", "sxx" -> "sxx")
       val sea = (col("sxxa") - col("sxa") * col("sxa") / col("na")) /
         (col("na") - lit(1.0)) / col("na")
       val seb = (col("sxxb") - col("sxb") * col("sxb") / col("nb")) /
@@ -1923,9 +1946,7 @@ object AnalyticsExt {
           (tLo > lit(1.645) && tUp < lit(-1.645)).as("is_equivalent"))
         .orderBy("type_a", "type_b")
     },
-      Some(s"""WITH st AS (SELECT event_type, CAST(count(*) AS DOUBLE) AS n,
-              |   ${dsum6Sql("value")} AS sx, ${dsum6Sql("value * value")} AS sxx
-              | FROM events GROUP BY 1),
+      Some(s"""WITH $typeMomentsCte,
               | p AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
               |   a.sx / a.n - b.sx / b.n AS diff,
               |   0.05 * ((a.sx / a.n + b.sx / b.n) / 2.0) AS margin,
@@ -1965,10 +1986,7 @@ object AnalyticsExt {
     // so the verdict column can't flake at a near-zero boundary.
     Op("agg_rank_biserial", (s, dir) => {
       val cum = denseTypeValueCum(s, dir)
-      val a = cum.select(col("event_type").as("type_a"), col("value"),
-        col("cnt").as("ca"))
-      val b = cum.select(col("event_type").as("type_b"), col("value"),
-        col("cnt").as("cb"), col("cum").as("cumb"))
+      val (a, b) = typeSides(cum, Seq("value"), "cnt" -> "c", "cum" -> "cum")
       val pair = a.join(b, "value").filter(col("type_a") < col("type_b"))
         .groupBy("type_a", "type_b")
         .agg(sum(col("ca")).as("n_a"), sum(col("cb")).as("n_b"),
@@ -1982,17 +2000,7 @@ object AnalyticsExt {
             .otherwise(lit("tie")).as("favored"))
         .orderBy("type_a", "type_b")
     },
-      Some("""WITH vc AS (SELECT event_type, value, count(*) AS cnt
-             |  FROM events GROUP BY 1, 2),
-             | vals AS (SELECT DISTINCT value FROM vc),
-             | types AS (SELECT DISTINCT event_type FROM vc),
-             | dense AS (SELECT t.event_type, v.value, COALESCE(cnt, 0) AS cnt
-             |  FROM vals v CROSS JOIN types t
-             |  LEFT JOIN vc ON vc.event_type = t.event_type AND vc.value = v.value),
-             | cum AS (SELECT event_type, value, cnt,
-             |   sum(cnt) OVER (PARTITION BY event_type ORDER BY value
-             |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-             |  FROM dense),
+      Some(s"""$denseCumCtes,
              | pair AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
              |   sum(a.cnt) AS n_a, sum(b.cnt) AS n_b,
              |   sum(a.cnt * (b.cum - b.cnt) * 2 + a.cnt * b.cnt) AS u2
@@ -2048,11 +2056,8 @@ object AnalyticsExt {
             * (col("v_lo") * col("v_lo") + col("v_hi") * col("v_hi")))
             .cast("double").as("wss"),
           col("tsum").cast("double").as("tsum"))
-      def side(sfx: String) = st.select(
-        col("event_type").as(s"type_$sfx"), col("n").as(s"n$sfx"),
-        col("h").as(s"h$sfx"),
-        col("wsum").as(s"wsum$sfx"), col("wss").as(s"wss$sfx"),
-        col("tsum").as(s"tsum$sfx"))
+      val (sideA, sideB) = typeSides(st, Nil, "n" -> "n", "h" -> "h",
+        "wsum" -> "wsum", "wss" -> "wss", "tsum" -> "tsum")
       val nA = col("na").cast("double"); val nB = col("nb").cast("double")
       val hA = col("ha").cast("double"); val hB = col("hb").cast("double")
       val swA = (col("wssa") - col("wsuma") * col("wsuma") / nA) / (nA - 1.0)
@@ -2064,7 +2069,7 @@ object AnalyticsExt {
       val cc = dA / (dA + dB)
       val dfY = lit(1.0) / (cc * cc / (hA - 1.0)
         + (lit(1.0) - cc) * (lit(1.0) - cc) / (hB - 1.0))
-      side("a").join(broadcast(side("b")),
+      sideA.join(broadcast(sideB),
           col("type_a") < col("type_b"), "inner")
         .select(col("type_a"), col("type_b"),
           col("ha").as("h_a"), col("hb").as("h_b"),
@@ -2074,17 +2079,7 @@ object AnalyticsExt {
           round(dfY, 6).as("df"))
         .orderBy("type_a", "type_b")
     },
-      Some("""WITH vc AS (SELECT event_type, value, count(*) AS cnt
-             |  FROM events GROUP BY 1, 2),
-             | vals AS (SELECT DISTINCT value FROM vc),
-             | types AS (SELECT DISTINCT event_type FROM vc),
-             | dense AS (SELECT t.event_type, v.value, COALESCE(cnt, 0) AS cnt
-             |  FROM vals v CROSS JOIN types t
-             |  LEFT JOIN vc ON vc.event_type = t.event_type AND vc.value = v.value),
-             | cum AS (SELECT event_type, value, cnt,
-             |   sum(cnt) OVER (PARTITION BY event_type ORDER BY value
-             |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-             |  FROM dense),
+      Some(s"""$denseCumCtes,
              | tot AS (SELECT event_type, CAST(sum(cnt) AS BIGINT) AS n
              |  FROM vc GROUP BY 1),
              | k AS (SELECT c.event_type, c.value, c.cnt, c.cum, t.n,
@@ -2135,10 +2130,7 @@ object AnalyticsExt {
 
     Op("agg_mann_whitney", (s, dir) => {
       val cum = denseTypeValueCum(s, dir)
-      val a = cum.select(col("event_type").as("type_a"), col("value"),
-        col("cnt").as("ca"))
-      val b = cum.select(col("event_type").as("type_b"), col("value"),
-        col("cnt").as("cb"), col("cum").as("cumb"))
+      val (a, b) = typeSides(cum, Seq("value"), "cnt" -> "c", "cum" -> "cum")
       val pair = a.join(b, "value").filter(col("type_a") < col("type_b"))
         .groupBy("type_a", "type_b")
         .agg(
@@ -2162,17 +2154,7 @@ object AnalyticsExt {
                     * (col("n_a") + col("n_b") - 1.0)))), 6).as("z"))
         .orderBy("type_a", "type_b")
     },
-      Some("""WITH vc AS (SELECT event_type, value, count(*) AS cnt
-             |  FROM events GROUP BY 1, 2),
-             | vals AS (SELECT DISTINCT value FROM vc),
-             | types AS (SELECT DISTINCT event_type FROM vc),
-             | dense AS (SELECT t.event_type, v.value, COALESCE(cnt, 0) AS cnt
-             |  FROM vals v CROSS JOIN types t
-             |  LEFT JOIN vc ON vc.event_type = t.event_type AND vc.value = v.value),
-             | cum AS (SELECT event_type, value, cnt,
-             |   sum(cnt) OVER (PARTITION BY event_type ORDER BY value
-             |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-             |  FROM dense),
+      Some(s"""$denseCumCtes,
              | pair AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
              |   sum(a.cnt) AS n_a, sum(b.cnt) AS n_b,
              |   sum(a.cnt * (b.cum - b.cnt) * 2 + a.cnt * b.cnt) AS u2,
@@ -2205,10 +2187,7 @@ object AnalyticsExt {
       val cumBase = denseTypeValueCum(s, dir)
       val tot = cumBase.groupBy("event_type").agg(sum("cnt").as("n"))
       val cum = cumBase.join(broadcast(tot), "event_type")
-      val a = cum.select(col("event_type").as("type_a"), col("value"),
-        col("cum").as("cuma"), col("n").as("n_a"))
-      val b = cum.select(col("event_type").as("type_b"), col("value"),
-        col("cum").as("cumb"), col("n").as("n_b"))
+      val (a, b) = typeSides(cum, Seq("value"), "cum" -> "cum", "n" -> "n_")
       val na = col("n_a").cast("double")
       val nb = col("n_b").cast("double")
       a.join(b, "value").filter(col("type_a") < col("type_b"))
@@ -2225,24 +2204,15 @@ object AnalyticsExt {
           (col("d_stat") > col("d_crit")).as("is_significant"))
         .orderBy("type_a", "type_b")
     },
-      Some("""WITH vc AS (SELECT event_type, value, count(*) AS cnt
-             |  FROM events GROUP BY 1, 2),
-             | vals AS (SELECT DISTINCT value FROM vc),
-             | types AS (SELECT DISTINCT event_type FROM vc),
+      Some(s"""$denseCumCtes,
              | tot AS (SELECT event_type, CAST(sum(cnt) AS BIGINT) AS n
              |  FROM vc GROUP BY 1),
-             | dense AS (SELECT t.event_type, v.value, COALESCE(cnt, 0) AS cnt
-             |  FROM vals v CROSS JOIN types t
-             |  LEFT JOIN vc ON vc.event_type = t.event_type AND vc.value = v.value),
-             | cum AS (SELECT d.event_type, d.value,
-             |   CAST(sum(cnt) OVER (PARTITION BY d.event_type ORDER BY value
-             |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-             |     AS cum, n
-             |  FROM dense d JOIN tot USING (event_type)),
+             | cn AS (SELECT event_type, value, CAST(cum AS BIGINT) AS cum, n
+             |  FROM cum JOIN tot USING (event_type)),
              | pair AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
              |   a.n AS n_a, b.n AS n_b,
              |   max(abs(a.cum * b.n - b.cum * a.n)) AS maxdiff
-             |  FROM cum a JOIN cum b ON a.value = b.value
+             |  FROM cn a JOIN cn b ON a.value = b.value
              |   AND a.event_type < b.event_type
              |  GROUP BY 1, 2, 3, 4)
              |SELECT type_a, type_b, n_a, n_b,
@@ -2299,17 +2269,7 @@ object AnalyticsExt {
         round(hRaw, 6).as("h_stat"),
         round(hRaw / tieC, 6).as("h_tied"))
     },
-      Some("""WITH vc AS (SELECT event_type, value, count(*) AS cnt
-             |  FROM events GROUP BY 1, 2),
-             | vals AS (SELECT DISTINCT value FROM vc),
-             | types AS (SELECT DISTINCT event_type FROM vc),
-             | dense AS (SELECT t.event_type, v.value, COALESCE(cnt, 0) AS cnt
-             |  FROM vals v CROSS JOIN types t
-             |  LEFT JOIN vc ON vc.event_type = t.event_type AND vc.value = v.value),
-             | cum AS (SELECT event_type, value, cnt,
-             |   sum(cnt) OVER (PARTITION BY event_type ORDER BY value
-             |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-             |  FROM dense),
+      Some(s"""$denseCumCtes,
              | byval AS (SELECT value, sum(cnt) AS cntall, sum(cum) AS cumall
              |  FROM cum GROUP BY 1),
              | grp AS (SELECT d.event_type, sum(d.cnt) AS n_g,
@@ -2452,7 +2412,7 @@ object AnalyticsExt {
         .withColumn("y_adj",
           col("y") - col("theta") * (col("x") - col("sx") / col("n")))
         .withColumn("variant",
-          when(substring(md5(concat(lit("srm42:"), col("user_id"))), 1, 1) < "8",
+          when(srmArmA,
             lit("A")).otherwise(lit("B")))
       adj.groupBy("variant").agg(
           count(lit(1)).as("n_users"),
@@ -2472,7 +2432,7 @@ object AnalyticsExt {
                 / count(lit(1))), 6).as("var_reduction"))
         .orderBy("variant")
     },
-      Some("""WITH per AS (SELECT user_id,
+      Some(s"""WITH per AS (SELECT user_id,
              |   CAST(sum(CASE WHEN (CAST(ts AS DATE) - DATE '2024-01-01' + 1) <= 15
              |     THEN CAST(value AS DECIMAL(18,6)) ELSE CAST(0.0 AS DECIMAL(18,6)) END) AS DOUBLE) AS x,
              |   CAST(sum(CASE WHEN (CAST(ts AS DATE) - DATE '2024-01-01' + 1) > 15
@@ -2487,7 +2447,7 @@ object AnalyticsExt {
              | adj AS (SELECT per.*,
              |   (sxy - sx * sy / n) / (sxx - sx * sx / n) AS theta,
              |   y - (sxy - sx * sy / n) / (sxx - sx * sx / n) * (x - sx / n) AS y_adj,
-             |   CASE WHEN substr(md5('srm42:' || CAST(user_id AS VARCHAR)), 1, 1) < '8'
+             |   CASE WHEN $srmArmASql
              |     THEN 'A' ELSE 'B' END AS variant
              | FROM per CROSS JOIN st)
              |SELECT variant, count(*) AS n_users,
@@ -2541,9 +2501,9 @@ object AnalyticsExt {
           round(r + lit(1.96) * se, 6).as("ci_hi"))
         .orderBy("variant")
     },
-      Some("""WITH per AS (SELECT user_id, CAST(count(*) AS DOUBLE) AS x,
+      Some(s"""WITH per AS (SELECT user_id, CAST(count(*) AS DOUBLE) AS x,
              |   CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS y,
-             |   CASE WHEN substr(md5('srm42:' || CAST(user_id AS VARCHAR)), 1, 1) < '8'
+             |   CASE WHEN $srmArmASql
              |     THEN 'A' ELSE 'B' END AS variant
              |  FROM events GROUP BY 1),
              | st AS (SELECT variant, CAST(count(*) AS DOUBLE) AS n,
@@ -2598,9 +2558,9 @@ object AnalyticsExt {
           round(r + lit(1.96) * se, 6).as("ci_hi"))
         .orderBy("variant")
     },
-      Some("""WITH per AS (SELECT user_id, CAST(count(*) AS DOUBLE) AS x,
+      Some(s"""WITH per AS (SELECT user_id, CAST(count(*) AS DOUBLE) AS x,
              |   CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS y,
-             |   CASE WHEN substr(md5('srm42:' || CAST(user_id AS VARCHAR)), 1, 1) < '8'
+             |   CASE WHEN $srmArmASql
              |     THEN 'A' ELSE 'B' END AS variant
              |  FROM events GROUP BY 1),
              | tot AS (SELECT variant, CAST(count(*) AS DOUBLE) AS n,
@@ -2632,10 +2592,7 @@ object AnalyticsExt {
     // IEEE expression over exact moments. One two-phase corpus agg →
     // |types| rows; nothing else moves.
     Op("agg_power_mde", (s, dir) => {
-      val st = events(s, dir).groupBy("event_type").agg(
-        count(lit(1)).cast("double").as("n"),
-        dsum6(col("value")).as("sx"),
-        dsum6(col("value") * col("value")).as("sxx"))
+      val st = typeMoments(s, dir)
       val mean = col("sx") / col("n")
       val vr = (col("sxx") - col("sx") * col("sx") / col("n")) /
         (col("n") - lit(1.0))
@@ -2650,10 +2607,7 @@ object AnalyticsExt {
             .cast("long").as("n_per_arm_1pct"))
         .orderBy("event_type")
     },
-      Some("""WITH st AS (SELECT event_type, CAST(count(*) AS DOUBLE) AS n,
-             |   CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sx,
-             |   CAST(sum(CAST(value * value AS DECIMAL(18,6))) AS DOUBLE) AS sxx
-             |  FROM events GROUP BY 1),
+      Some(s"""WITH $typeMomentsCte,
              | d AS (SELECT event_type, n, sx / n AS mean,
              |   (sxx - sx * sx / n) / (n - 1.0) AS vr FROM st),
              | e AS (SELECT event_type, n, mean, vr,
@@ -3006,7 +2960,7 @@ object AnalyticsExt {
           col("ci_hi"))
         .orderBy("event_type")
     },
-      Some("""WITH ev AS (SELECT event_type, event_id, value FROM events),
+      Some(s"""WITH ev AS (SELECT event_type, event_id, value FROM events),
              | hx AS (SELECT ev.*, c,
              |     md5('boot:' || CAST(c AS VARCHAR) || ':' || CAST(event_id AS VARCHAR)) AS h
              |   FROM ev CROSS JOIN (SELECT CAST(unnest(generate_series(0, 4)) AS INT) AS c)),
@@ -3015,14 +2969,7 @@ object AnalyticsExt {
              |     substr(h, ((rep - 1) % 4) * 8 + 1, 8) AS u8
              |   FROM hx JOIN reps ON (rep - 1) // 4 = c),
              | uw AS (SELECT event_type, event_id, value, rep,
-             |     ((CAST(strpos('0123456789abcdef', substr(u8, 1, 1)) AS BIGINT) - 1) * 268435456
-             |   + (CAST(strpos('0123456789abcdef', substr(u8, 2, 1)) AS BIGINT) - 1) * 16777216
-             |   + (CAST(strpos('0123456789abcdef', substr(u8, 3, 1)) AS BIGINT) - 1) * 1048576
-             |   + (CAST(strpos('0123456789abcdef', substr(u8, 4, 1)) AS BIGINT) - 1) * 65536
-             |   + (CAST(strpos('0123456789abcdef', substr(u8, 5, 1)) AS BIGINT) - 1) * 4096
-             |   + (CAST(strpos('0123456789abcdef', substr(u8, 6, 1)) AS BIGINT) - 1) * 256
-             |   + (CAST(strpos('0123456789abcdef', substr(u8, 7, 1)) AS BIGINT) - 1) * 16
-             |   + (CAST(strpos('0123456789abcdef', substr(u8, 8, 1)) AS BIGINT) - 1)
+             |     (${hexIntSql("u8", 1, 8)}
              |     + 0.5) / 4294967296.0 AS u
              |   FROM x),
              | wd AS (SELECT event_type, event_id, value, rep,
@@ -3120,7 +3067,7 @@ object AnalyticsExt {
     // projection — no shuffle beyond the one agg exchange.
     Op("agg_srm_chisq", (s, dir) => {
       val ev = events(s, dir).withColumn("variant",
-        when(substring(md5(concat(lit("srm42:"), col("user_id"))), 1, 1) < "8",
+        when(srmArmA,
           lit("A")).otherwise(lit("B")))
       ev.groupBy("event_type").agg(
           sum(when(col("variant") === "A", 1L).otherwise(0L)).as("n_a"),
@@ -3133,8 +3080,8 @@ object AnalyticsExt {
         .withColumn("srm_flag", col("chisq") > 3.841459)
         .orderBy("event_type")
     },
-      Some("""WITH v AS (SELECT event_type,
-             |   CASE WHEN substr(md5('srm42:' || CAST(user_id AS VARCHAR)), 1, 1) < '8'
+      Some(s"""WITH v AS (SELECT event_type,
+             |   CASE WHEN $srmArmASql
              |     THEN 'A' ELSE 'B' END AS variant
              | FROM events),
              | c AS (SELECT event_type,
@@ -3298,8 +3245,7 @@ object AnalyticsExt {
     // final pair aggregate counts each user once by construction.
     Op("agg_audience_overlap", (s, dir) => {
       val d = events(s, dir).select("user_id", "event_type").distinct()
-      val a = d.select(col("user_id"), col("event_type").as("type_a"))
-      val b = d.select(col("user_id"), col("event_type").as("type_b"))
+      val (a, b) = typeSides(d, Seq("user_id", "event_type"))
       a.join(b, Seq("user_id")).filter(col("type_a") < col("type_b"))
         .groupBy("type_a", "type_b")
         .agg(count(lit(1)).as("n_users"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.SessionMemo.{checkpointTracked, freeCheckpoint}
 import graft.Tables._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -24,6 +25,22 @@ object DedupOps {
   private def docShingles(df: DataFrame): DataFrame =
     df.select(col("doc_id"),
       explode(array_distinct(TextOps.shingles(col("text")))).as("shingle"))
+
+  /** DuckDB twin of [[docShingles]] over `documents`: `t` tokenizes, `s`
+    * holds the distinct (doc_id, sh) 3-gram shingles. */
+  def shingleIndexCtes: String =
+    """WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
+      | s AS (SELECT DISTINCT doc_id, array_to_string(toks[i:i+2], ' ') AS sh
+      |   FROM (SELECT doc_id, toks,
+      |     unnest(generate_series(1, len(toks) - 2)) AS i FROM t))""".stripMargin
+
+  /** DuckDB twin of [[jaccardPairs]]' miner: the shingle index, `n` exact
+    * doc sizes and `p` the (d1 < d2, inter) shared-shingle counts. */
+  def exactPairCtes: String =
+    shingleIndexCtes + """,
+      | n AS (SELECT doc_id, count(*) AS n FROM s GROUP BY 1),
+      | p AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter
+      |   FROM s a JOIN s b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2)""".stripMargin
 
   /** 64 xorshift-mixed hash lanes of one base hash — multiplication-free
     * (no ANSI overflow), deterministic, order-independent min per lane
@@ -184,7 +201,7 @@ object DedupOps {
     * consumer's persist/unpersist cannot free them; keyed on the session
     * instance so a restarted session re-mines (stopped sessions are
     * evicted, race losers' checkpoints freed — see [[graft.SessionMemo]]). */
-  private val tau0Memo = new graft.SessionMemo[DataFrame](graft.SessionMemo.freeCheckpoint)
+  private val tau0Memo = new graft.SessionMemo[DataFrame](freeCheckpoint)
 
   /** The memoized τ=0 exact-Jaccard pair frame for `dir`'s documents
     * table: (d1, d2, inter, n1, n2, jaccard), every co-occurring pair. */
@@ -199,33 +216,17 @@ object DedupOps {
       jaccardPairs(t(s, dir, "documents"), tau = 0.0)
         .localCheckpoint(true, org.apache.spark.storage.StorageLevel.DISK_ONLY))
 
-  /** Deterministic salted-md5 posting residue in [0, df): the df-cap
+  /** Deterministic salted-md5 posting residue numerator: the df-cap
     * thinning rule keeps a (doc_id, shingle) posting iff
-    * `df <= cap OR postingResidue < cap` — a FIXED pseudo-random ~cap-sized
-    * subset of every hot shingle's postings (never a per-run sample), so
-    * capped results are bit-identical cross-engine and oracle-checkable.
-    * Expects `shingle`, `doc_id` and a `df` column in scope (df rides a
-    * count window over the shingle partition so the cap filter reuses the
-    * exchange the downstream group-collect needs anyway). Mirrored
-    * literally in DuckDB by [[md5ResidueSql]]. */
+    * `df <= cap OR postingResidue % df < cap` — a FIXED pseudo-random
+    * ~cap-sized subset of every hot shingle's postings (never a per-run
+    * sample), so capped results are bit-identical cross-engine and
+    * oracle-checkable. Expects the `shingle` string and `doc_id` in scope.
+    * Mirrored in DuckDB by `hexIntSql(h, 1, 8)` over
+    * `md5('tswp42:' || sh || ':' || doc_id)`. */
   def postingResidue: org.apache.spark.sql.Column =
-    conv(substring(md5(concat(lit("tswp42:"), col("shingle"),
-      lit(":"), col("doc_id").cast("string"))), 1, 8), 16, 10)
-      .cast("long") % col("df")
-
-  /** DuckDB expression decoding hex₁₋₈ of md5 column `h` positionally to
-    * a BIGINT (DuckDB has no base-conv builtin — the sample_weighted
-    * idiom), i.e. the oracle mirror of [[postingResidue]]'s numerator. */
-  def md5ResidueSql(h: String): String =
-    s"""( (CAST(strpos('0123456789abcdef', substr($h, 1, 1)) AS BIGINT) - 1) * 268435456
-       |   + (CAST(strpos('0123456789abcdef', substr($h, 2, 1)) AS BIGINT) - 1) * 16777216
-       |   + (CAST(strpos('0123456789abcdef', substr($h, 3, 1)) AS BIGINT) - 1) * 1048576
-       |   + (CAST(strpos('0123456789abcdef', substr($h, 4, 1)) AS BIGINT) - 1) * 65536
-       |   + (CAST(strpos('0123456789abcdef', substr($h, 5, 1)) AS BIGINT) - 1) * 4096
-       |   + (CAST(strpos('0123456789abcdef', substr($h, 6, 1)) AS BIGINT) - 1) * 256
-       |   + (CAST(strpos('0123456789abcdef', substr($h, 7, 1)) AS BIGINT) - 1) * 16
-       |   + (CAST(strpos('0123456789abcdef', substr($h, 8, 1)) AS BIGINT) - 1)
-       |   )""".stripMargin
+    hexInt(md5(concat(lit("tswp42:"), col("shingle"),
+      lit(":"), col("doc_id").cast("string"))), 1, 8).cast("long")
 
   /** Session-scoped memo of the DF-THINNED distinct posting leaf — the
     * artifact every `_capped` consumer shares. Factored out of
@@ -238,7 +239,7 @@ object DedupOps {
     * leaf, the md5 residue is computed once per corpus and both the pair
     * miner and the contamination collect read a plain leaf. */
   private val thinnedPostingsMemo =
-    new graft.SessionMemo[DataFrame](graft.SessionMemo.freeCheckpoint)
+    new graft.SessionMemo[DataFrame](freeCheckpoint)
 
   /** The memoized df-thinned posting leaf for `dir`'s documents table:
     * distinct (doc_id, shingle) with every shingle hotter than the
@@ -266,10 +267,7 @@ object DedupOps {
       // corpus vocabulary — verified against the string form's output).
       val sh = docShingles(t(s, dir, "documents"))
       val hashed = sh.select(col("doc_id"),
-        xxhash64(col("shingle")).as("shingle"),
-        conv(substring(md5(concat(lit("tswp42:"), col("shingle"),
-          lit(":"), col("doc_id").cast("string"))), 1, 8), 16, 10)
-          .cast("long").as("resnum"))
+        xxhash64(col("shingle")).as("shingle"), postingResidue.as("resnum"))
       hashed.withColumn("df", count(lit(1)).over(
           org.apache.spark.sql.expressions.Window.partitionBy("shingle")))
         .crossJoin(broadcast(minerDfCap(
@@ -293,7 +291,7 @@ object DedupOps {
     * key's result a SUBSET of its exact sibling's (pinned in
     * OperatorSmokeSpec). Checkpointed leaf, keyed on the session. */
   private val cappedTau0Memo =
-    new graft.SessionMemo[DataFrame](graft.SessionMemo.freeCheckpoint)
+    new graft.SessionMemo[DataFrame](freeCheckpoint)
 
   /** The memoized df-capped τ=0 pair frame for `dir`'s documents table:
     * (d1, d2, inter, n1, n2, jaccard) with thinned inter, exact sizes
@@ -336,7 +334,7 @@ object DedupOps {
     * pair-frame memo is the same pattern). Checkpointed leaf, keyed on
     * the session instance. */
   private val corpusLabelsMemo =
-    new graft.SessionMemo[DataFrame](graft.SessionMemo.freeCheckpoint)
+    new graft.SessionMemo[DataFrame](freeCheckpoint)
 
   /** Memoized [[clusterLabels]] of the `doc_id % 5 != 0` corpus subset. */
   def corpusLabels80(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
@@ -355,7 +353,7 @@ object DedupOps {
     * `banded64` is a pure per-row projection, so one checkpointed frame
     * serves all three (filters on doc_id commute with the banding). */
   private val bandedMemo =
-    new graft.SessionMemo[DataFrame](graft.SessionMemo.freeCheckpoint)
+    new graft.SessionMemo[DataFrame](freeCheckpoint)
 
   /** Memoized [[banded64]] of `dir`'s documents table. */
   def corpusBanded64(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
@@ -370,7 +368,7 @@ object DedupOps {
     * snapshot, not once per downstream report. Tiny value (one row per
     * near-dup edge), checkpointed leaf. */
   private val simhashPairsMemo =
-    new graft.SessionMemo[DataFrame](graft.SessionMemo.freeCheckpoint)
+    new graft.SessionMemo[DataFrame](freeCheckpoint)
 
   /** The memoized hamming ≤ 3 SimHash pair frame for `dir`'s documents. */
   def corpusSimhashPairs(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
@@ -384,7 +382,7 @@ object DedupOps {
     * histograms it); one CC run per (session, corpus), exactly like the
     * 80%-subset memo the incremental key maintains against. */
   private val fullLabelsMemo =
-    new graft.SessionMemo[DataFrame](graft.SessionMemo.freeCheckpoint)
+    new graft.SessionMemo[DataFrame](freeCheckpoint)
 
   /** Memoized [[connectedComponents]] labels over [[corpusSimhashPairs]]. */
   def corpusLabelsFull(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
@@ -831,10 +829,9 @@ object DedupOps {
     * mining chain per round). */
   private[graft] def ccIterative(p: DataFrame, parts: Int,
       maxRounds: Int = 64): DataFrame = {
-    val spark = p.sparkSession
     val edges = p.union(p.select(col("d2").as("d1"), col("d1").as("d2")))
       .repartition(parts, col("d2")).persist()
-    var (labels, labelsIds) = checkpointTracked(
+    var labels = checkpointTracked(
       edges.select(col("d1").as("doc_id")).distinct()
         .withColumn("lbl", col("doc_id")))
     // The eager checkpoint above scanned `edges` fully, so its cache is
@@ -847,14 +844,14 @@ object DedupOps {
     while (changed > 0 && round < maxRounds) {
       val nb = edges.join(labels, col("d2") === col("doc_id"))
         .groupBy(col("d1")).agg(min("lbl").as("nlbl"))
-      val (prop, propIds) = checkpointTracked(
+      val prop = checkpointTracked(
         labels.join(nb, labels("doc_id") === nb("d1"), "left")
           .select(labels("doc_id"),
             least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl")))
       // pointer jump: label := label-of-label (both references hit the
       // checkpointed `prop`, so the self-join costs one small stage)
       val ptr = prop.select(col("doc_id").as("p_id"), col("lbl").as("p_lbl"))
-      val (next, nextIds) = checkpointTracked(
+      val next = checkpointTracked(
         prop.join(ptr, prop("lbl") === ptr("p_id"), "left")
           .select(prop("doc_id"),
             least(prop("lbl"), coalesce(col("p_lbl"), prop("lbl"))).as("lbl")))
@@ -863,36 +860,13 @@ object DedupOps {
         .filter(col("lbl") =!= col("old_lbl")).count()
       // `next` is materialized and the convergence count has consumed the
       // old labels — free this round's scratch frames deterministically.
-      freeRddBlocks(spark, propIds ++ labelsIds)
+      freeCheckpoint(prop)
+      freeCheckpoint(labels)
       labels = next
-      labelsIds = nextIds
       round += 1
     }
     edges.unpersist()
     labels.select(col("doc_id"), col("lbl").as("cluster_id"))
-  }
-
-  /** Eagerly localCheckpoint `df` and report which RDD block ids the
-    * checkpoint pinned, so callers can free superseded frames without
-    * waiting for GC. The ids are read off the checkpointed plan itself —
-    * its `LogicalRDD` leaf holds exactly the block-pinned RDD — not from
-    * a session-global `getPersistentRDDs` diff, so a frame persisted
-    * concurrently by another thread in the same session can never be
-    * captured and force-freed by mistake (round-5 ADVICE). */
-  private[graft] def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) = {
-    val out = df.localCheckpoint()
-    val ids = out.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-    }.toSet
-    require(ids.nonEmpty,
-      "localCheckpoint left no LogicalRDD leaf to track — cannot free blocks deterministically")
-    (out, ids)
-  }
-
-  private[graft] def freeRddBlocks(spark: org.apache.spark.sql.SparkSession,
-      ids: Set[Int]): Unit = {
-    val live = spark.sparkContext.getPersistentRDDs
-    ids.foreach(id => live.get(id).foreach(_.unpersist(blocking = false)))
   }
 
   /** MinHash signatures (array of 64 lane-minima) + LSH band hashes
@@ -913,10 +887,7 @@ object DedupOps {
     * index, `n` exact doc sizes, `sc` the residue-thinned postings, `p`
     * the (d1, d2, inter) pair counts over thinned intersections. */
   private def cappedPairCtes: String =
-    s"""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-       | s AS (SELECT DISTINCT doc_id, array_to_string(toks[i:i+2], ' ') AS sh
-       |   FROM (SELECT doc_id, toks,
-       |     unnest(generate_series(1, len(toks) - 2)) AS i FROM t)),
+    s"""$shingleIndexCtes,
        | n AS (SELECT doc_id, count(*) AS n FROM s GROUP BY 1),
        | d AS (SELECT sh, count(*) AS df FROM s GROUP BY 1),
        | $minerDfCapSql,
@@ -924,7 +895,7 @@ object DedupOps {
        |   md5('tswp42:' || sh || ':' || CAST(doc_id AS VARCHAR)) AS h
        |  FROM s JOIN d USING (sh)),
        | sc AS (SELECT doc_id, sh FROM hh, cap WHERE df <= df_cap OR
-       |   ${md5ResidueSql("h")} % df < df_cap),
+       |   ${hexIntSql("h", 1, 8)} % df < df_cap),
        | p AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter
        |   FROM sc a JOIN sc b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2)""".stripMargin
 
@@ -1036,13 +1007,7 @@ object DedupOps {
         .select(col("d1"), col("d2"), col("inter"), col("n1"), col("n2"),
           round(col("jaccard"), 6).as("jaccard"))
         .orderBy("d1", "d2"),
-      Some("""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-             | s AS (SELECT DISTINCT doc_id, array_to_string(toks[i:i+2], ' ') AS sh
-             |   FROM (SELECT doc_id, toks,
-             |     unnest(generate_series(1, len(toks) - 2)) AS i FROM t)),
-             | n AS (SELECT doc_id, count(*) AS n FROM s GROUP BY 1),
-             | p AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter
-             |   FROM s a JOIN s b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2)
+      Some(s"""$exactPairCtes
              |SELECT d1, d2, inter, x.n AS n1, y.n AS n2,
              | round(inter / (x.n + y.n - inter), 6) AS jaccard
              |FROM p JOIN n x ON d1 = x.doc_id JOIN n y ON d2 = y.doc_id
@@ -1068,13 +1033,7 @@ object DedupOps {
     // is deterministic.
     Op("text_jaccard_knn", (s, dir) =>
       jaccardKnn(tau0Pairs(s, dir).filter(col("inter") >= 2)),
-      Some("""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-             | s AS (SELECT DISTINCT doc_id, array_to_string(toks[i:i+2], ' ') AS sh
-             |   FROM (SELECT doc_id, toks,
-             |     unnest(generate_series(1, len(toks) - 2)) AS i FROM t)),
-             | n AS (SELECT doc_id, count(*) AS n FROM s GROUP BY 1),
-             | p AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter
-             |   FROM s a JOIN s b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2),
+      Some(s"""$exactPairCtes,
              | pj AS (SELECT d1, d2, inter / (x.n + y.n - inter) AS jac
              |   FROM p JOIN n x ON d1 = x.doc_id JOIN n y ON d2 = y.doc_id
              |   WHERE inter >= 2),
@@ -1099,13 +1058,7 @@ object DedupOps {
           .as("jac_decile"))
         .agg(count(lit(1)).as("n_pairs"))
         .orderBy("jac_decile"),
-      Some("""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-             | s AS (SELECT DISTINCT doc_id, array_to_string(toks[i:i+2], ' ') AS sh
-             |   FROM (SELECT doc_id, toks,
-             |     unnest(generate_series(1, len(toks) - 2)) AS i FROM t)),
-             | n AS (SELECT doc_id, count(*) AS n FROM s GROUP BY 1),
-             | p AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter
-             |   FROM s a JOIN s b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2)
+      Some(s"""$exactPairCtes
              |SELECT CAST((10 * inter) // (x.n + y.n - inter) AS INT) AS jac_decile,
              | count(*) AS n_pairs
              |FROM p JOIN n x ON d1 = x.doc_id JOIN n y ON d2 = y.doc_id
@@ -1212,13 +1165,7 @@ object DedupOps {
         .select(col("d1"), col("d2"), col("inter"), col("n1"), col("n2"),
           round(col("containment"), 6).as("containment"))
         .orderBy("d1", "d2"),
-      Some("""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-             | s AS (SELECT DISTINCT doc_id, array_to_string(toks[i:i+2], ' ') AS sh
-             |   FROM (SELECT doc_id, toks,
-             |     unnest(generate_series(1, len(toks) - 2)) AS i FROM t)),
-             | n AS (SELECT doc_id, count(*) AS n FROM s GROUP BY 1),
-             | p AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter
-             |   FROM s a JOIN s b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2)
+      Some(s"""$exactPairCtes
              |SELECT d1, d2, inter, x.n AS n1, y.n AS n2,
              | round(inter / least(x.n, y.n), 6) AS containment
              |FROM p JOIN n x ON d1 = x.doc_id JOIN n y ON d2 = y.doc_id
@@ -1387,13 +1334,7 @@ object DedupOps {
       // oracle is the all-pairs exact Jaccard at the same τ=0.8 — the
       // banding may only MISS pairs (never invent them), and a hash match
       // here certifies 100% recall of the sketch path on this corpus.
-      Some("""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-             | s AS (SELECT DISTINCT doc_id, array_to_string(toks[i:i+2], ' ') AS sh
-             |   FROM (SELECT doc_id, toks,
-             |     unnest(generate_series(1, len(toks) - 2)) AS i FROM t)),
-             | n AS (SELECT doc_id, count(*) AS n FROM s GROUP BY 1),
-             | p AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter
-             |   FROM s a JOIN s b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2)
+      Some(s"""$exactPairCtes
              |SELECT d1, d2, inter, x.n AS n1, y.n AS n2,
              | round(inter / (x.n + y.n - inter), 6) AS jaccard
              |FROM p JOIN n x ON d1 = x.doc_id JOIN n y ON d2 = y.doc_id

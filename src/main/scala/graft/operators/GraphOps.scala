@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.SessionMemo.{checkpointTracked, freeCheckpoint}
 import graft.Tables._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -25,7 +26,7 @@ import org.apache.spark.sql.functions._
   * cached symmetric edge list against the rank frame + one map-side-
   * combined sum, i.e. the same shape as one [[DedupOps.ccIterative]]
   * round. Fixed-K lineage stays shallow (K joins); the convergence
-  * variant checkpoints each round through [[DedupOps.checkpointTracked]]
+  * variant checkpoints each round through [[graft.SessionMemo.checkpointTracked]]
   * and frees superseded label frames exactly like CC does.
   */
 object GraphOps {
@@ -141,29 +142,27 @@ object GraphOps {
     * (e.g. Scale/1e3) for graphs with real spectral gaps to cross.
     * Identical recurrence to [[pageRank]] — after k rounds both paths
     * hold bit-identical ranks (pinned in GraphSpec). Each round's rank
-    * frame is eagerly checkpointed via [[DedupOps.checkpointTracked]]
+    * frame is eagerly checkpointed via [[graft.SessionMemo.checkpointTracked]]
     * (it is referenced twice: by the next round's join and by the delta
     * count) and the superseded round's blocks are freed deterministically
     * — executor storage holds at most two rank frames regardless of how
     * many rounds convergence takes. */
   def pageRankConverged(pairs: DataFrame, tolMicro: Long = 1000L,
       maxRounds: Int = 128): DataFrame = {
-    val spark = pairs.sparkSession
     val (e, deg, n) = edgeFrames(pairs)
     require(n > 0, "PageRank needs a non-empty edge set")
     val teleport = Scale * (DampDen - DampNum) / DampDen / n
-    var (pr, prIds) = DedupOps.checkpointTracked(
+    var pr = checkpointTracked(
       deg.select(col("u").as("node"), col("outdeg"), lit(Scale / n).as("pr")))
     var delta = Long.MaxValue
     var round = 0
     while (delta > tolMicro && round < maxRounds) {
-      val (next, nextIds) = DedupOps.checkpointTracked(step(e, deg, pr, teleport))
+      val next = checkpointTracked(step(e, deg, pr, teleport))
       delta = next.select(col("node"), col("pr").as("new_pr"))
         .join(pr.select(col("node"), col("pr").as("old_pr")), "node")
         .agg(sum(abs(col("new_pr") - col("old_pr")))).head.getLong(0)
-      DedupOps.freeRddBlocks(spark, prIds)
+      freeCheckpoint(pr)
       pr = next
-      prIds = nextIds
       round += 1
     }
     lastPrRounds.set(round)
@@ -184,7 +183,7 @@ object GraphOps {
     * values are checkpointed leaves, so a consumer's persist/unpersist on
     * top cannot free them. */
   private val pairMemo =
-    new graft.SessionMemo[DataFrame](graft.SessionMemo.freeCheckpoint)
+    new graft.SessionMemo[DataFrame](freeCheckpoint)
 
   /** The near-dup pair graph every graph key ranks: exact 3-gram Jaccard
     * pairs at τ = 0.6 ([[DedupOps.jaccardPairs]]), memoized per (session,
@@ -333,23 +332,22 @@ object GraphOps {
     * node ids — the ccIterative shape; per-round frames localCheckpoint
     * (shallow lineage) and superseded blocks are freed eagerly. */
   def kCore(pairs: DataFrame, k: Int, rounds: Int): DataFrame = {
-    var (sym, symIds) = DedupOps.checkpointTracked(
+    var sym = checkpointTracked(
       pairs.select(col("d1").as("u"), col("d2").as("v"))
         .union(pairs.select(col("d2").as("u"), col("d1").as("v"))))
-    val spark = sym.sparkSession
     for (_ <- 1 to rounds) {
       val keep = sym.groupBy("u").agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select("u")
-      val (next, nextIds) = DedupOps.checkpointTracked(
+      val next = checkpointTracked(
         sym.join(keep, Seq("u"), "left_semi")
           .join(keep.withColumnRenamed("u", "v"), Seq("v"), "left_semi")
           .select("u", "v"))
-      DedupOps.freeRddBlocks(spark, symIds)
-      sym = next; symIds = nextIds
+      freeCheckpoint(sym)
+      sym = next
     }
     val out = sym.groupBy("u").agg(count(lit(1)).as("core_deg"))
       .select(col("u").as("doc_id"), col("core_deg")).localCheckpoint()
-    DedupOps.freeRddBlocks(spark, symIds)
+    freeCheckpoint(sym)
     out
   }
 
@@ -549,13 +547,7 @@ object GraphOps {
   /** Shared CTE prefix: near-dup edges + degrees + node count, identical
     * to the Spark-side graph construction. */
   private val GraphCtes =
-    """WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-      | s AS (SELECT DISTINCT doc_id, array_to_string(toks[i:i+2], ' ') AS sh
-      |   FROM (SELECT doc_id, toks,
-      |     unnest(generate_series(1, len(toks) - 2)) AS i FROM t)),
-      | n AS (SELECT doc_id, count(*) AS n FROM s GROUP BY 1),
-      | p AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter
-      |   FROM s a JOIN s b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2),
+    s"""${DedupOps.exactPairCtes},
       | pj AS (SELECT d1, d2 FROM p JOIN n x ON d1 = x.doc_id JOIN n y ON d2 = y.doc_id
       |   WHERE inter / (x.n + y.n - inter) >= 0.6),
       | e AS (SELECT d1 AS u, d2 AS v FROM pj UNION ALL SELECT d2, d1 FROM pj),

@@ -36,10 +36,32 @@ object RelationalExt {
   def esKey(idCol: org.apache.spark.sql.Column,
       wCol: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
     val h = md5(concat(lit("wsamp42:"), idCol))
-    val u = (conv(substring(h, 1, 8), 16, 10).cast("long") + lit(0.5)) /
+    val u = (hexInt(h, 1, 8).cast("long") + lit(0.5)) /
       lit(4294967296.0)
     log(u) / wCol
   }
+
+  /** Latest event per user on the (ts, event_id) total order, via one
+    * max_by aggregation: the body of `dedup_latest_by_key` and of its
+    * streaming twin [[graft.streaming.StreamingSessions.latestByKey]]. */
+  def latestByKey(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    df.groupBy("user_id")
+      .agg(max_by(
+        struct(col("ts"), col("event_id"), col("event_type"), col("value")),
+        struct(col("ts"), col("event_id"))).as("last"))
+      .select(col("user_id"), col("last.ts").as("ts"),
+        col("last.event_id").as("event_id"),
+        col("last.event_type").as("event_type"), col("last.value").as("value"))
+
+  /** The hash train/test split: "train" iff the first two hex digits of
+    * md5("split42:" || id) sort below "cc" (≈ 79.7% train) — stable
+    * across runs, partitions and engines. Oracle twin: [[splitFoldSql]]. */
+  def splitFold(id: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    when(substring(md5(concat(lit("split42:"), id)), 1, 2) < "cc", "train")
+      .otherwise("test")
+  def splitFoldSql(id: String): String =
+    s"CASE WHEN substring(md5('split42:' || CAST($id AS VARCHAR)), 1, 2) < 'cc'" +
+      "\n   THEN 'train' ELSE 'test' END"
 
   val ops: Seq[Op] = Seq(
     // MapType surface: construction, lookup (hit + miss), key listing.
@@ -292,14 +314,7 @@ object RelationalExt {
     // one max_by aggregation — map-side partials, no window sort. The
     // (ts, event_id) struct tiebreak makes the winner deterministic.
     Op("dedup_latest_by_key", (s, dir) =>
-      events(s, dir).groupBy("user_id")
-        .agg(max_by(
-          struct(col("ts"), col("event_id"), col("event_type"), col("value")),
-          struct(col("ts"), col("event_id"))).as("last"))
-        .select(col("user_id"), col("last.ts").as("ts"),
-          col("last.event_id").as("event_id"),
-          col("last.event_type").as("event_type"), col("last.value").as("value"))
-        .orderBy("user_id"),
+      latestByKey(events(s, dir)).orderBy("user_id"),
       Some("""SELECT user_id, ts, event_id, event_type, value FROM (
              | SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id, event_type, value,
              |   row_number() OVER (PARTITION BY user_id
@@ -326,15 +341,12 @@ object RelationalExt {
     // runs, partitions, AND engines (md5 is bit-identical everywhere,
     // unlike xxhash64/rand). 'cc'/'ff' hex prefix ≈ 79.7% train.
     Op("train_test_split", (s, dir) => {
-      val h = md5(concat(lit("split42:"), col("doc_id")))
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        when(substring(h, 1, 2) < "cc", "train").otherwise("test").as("fold"),
-      ).orderBy("doc_id")
+      t(s, dir, "documents")
+        .select(col("doc_id"), splitFold(col("doc_id")).as("fold"))
+        .orderBy("doc_id")
     },
-      Some("""SELECT doc_id,
-             | CASE WHEN substring(md5('split42:' || CAST(doc_id AS VARCHAR)), 1, 2) < 'cc'
-             |   THEN 'train' ELSE 'test' END AS fold
+      Some(s"""SELECT doc_id,
+             | ${splitFoldSql("doc_id")} AS fold
              |FROM documents ORDER BY doc_id""".stripMargin)),
 
     // TEMPORAL split — the leakage-safe fold for time-dependent data
@@ -384,18 +396,14 @@ object RelationalExt {
       val docs = t(s, dir, "documents")
       val labels = DedupOps.corpusLabelsFull(s, dir)
       val gid = coalesce(col("cluster_id"), col("doc_id"))
-      val h = md5(concat(lit("split42:"), gid))
       docs.join(labels, Seq("doc_id"), "left")
-        .select(col("doc_id"), gid.as("group_id"),
-          when(substring(h, 1, 2) < "cc", "train").otherwise("test").as("fold"))
+        .select(col("doc_id"), gid.as("group_id"), splitFold(gid).as("fold"))
         .orderBy("doc_id")
     },
-      Some(("WITH " + DedupOps.clusterLabelsSql("documents") + """
+      Some(("WITH " + DedupOps.clusterLabelsSql("documents") + s"""
         |SELECT d.doc_id,
         | COALESCE(l.cluster_id, d.doc_id) AS group_id,
-        | CASE WHEN substring(md5('split42:' ||
-        |     CAST(COALESCE(l.cluster_id, d.doc_id) AS VARCHAR)), 1, 2) < 'cc'
-        |   THEN 'train' ELSE 'test' END AS fold
+        | ${splitFoldSql("COALESCE(l.cluster_id, d.doc_id)")} AS fold
         |FROM documents d LEFT JOIN labels l ON d.doc_id = l.doc_id
         |ORDER BY d.doc_id""").stripMargin)),
 
@@ -413,23 +421,15 @@ object RelationalExt {
         col("source"), col("n_chars")))
       t(s, dir, "documents")
         .select(col("lang"),
-          conv(substring(h, 1, 8), 16, 10).cast("long").as("v"))
+          hexInt(h, 1, 8).cast("long").as("v"))
         .groupBy("lang")
         .agg(count(lit(1)).as("n_rows"), sum("v").as("checksum"))
         .orderBy("lang")
     },
-      Some("""WITH r AS (SELECT lang,
+      Some(s"""WITH r AS (SELECT lang,
              |   md5(concat_ws('|', doc_id, text, lang, source, n_chars)) AS h
              |  FROM documents),
-             | v AS (SELECT lang,
-             |    (CAST(strpos('0123456789abcdef', substr(h, 1, 1)) AS BIGINT) - 1) * 268435456
-             |  + (CAST(strpos('0123456789abcdef', substr(h, 2, 1)) AS BIGINT) - 1) * 16777216
-             |  + (CAST(strpos('0123456789abcdef', substr(h, 3, 1)) AS BIGINT) - 1) * 1048576
-             |  + (CAST(strpos('0123456789abcdef', substr(h, 4, 1)) AS BIGINT) - 1) * 65536
-             |  + (CAST(strpos('0123456789abcdef', substr(h, 5, 1)) AS BIGINT) - 1) * 4096
-             |  + (CAST(strpos('0123456789abcdef', substr(h, 6, 1)) AS BIGINT) - 1) * 256
-             |  + (CAST(strpos('0123456789abcdef', substr(h, 7, 1)) AS BIGINT) - 1) * 16
-             |  + (CAST(strpos('0123456789abcdef', substr(h, 8, 1)) AS BIGINT) - 1) AS v
+             | v AS (SELECT lang, ${hexIntSql("h", 1, 8)} AS v
              |  FROM r)
              |SELECT lang, count(*) AS n_rows, CAST(sum(v) AS BIGINT) AS checksum
              |FROM v GROUP BY lang ORDER BY lang""".stripMargin)),
@@ -450,19 +450,14 @@ object RelationalExt {
       val h = md5(concat(lit("kfold42:"), gid))
       docs.join(labels, Seq("doc_id"), "left")
         .select(col("doc_id"), gid.as("group_id"),
-          (conv(substring(h, 1, 2), 16, 10).cast("int") % 5).as("fold_id"))
+          (hexInt(h, 1, 2).cast("int") % 5).as("fold_id"))
         .orderBy("doc_id")
     },
-      Some(("WITH " + DedupOps.clusterLabelsSql("documents") + """
+      Some(("WITH " + DedupOps.clusterLabelsSql("documents") + s"""
         |SELECT d.doc_id,
         | COALESCE(l.cluster_id, d.doc_id) AS group_id,
-        | CAST((
-        |    (CAST(strpos('0123456789abcdef', substr(md5('kfold42:' ||
-        |       CAST(COALESCE(l.cluster_id, d.doc_id) AS VARCHAR)), 1, 1))
-        |      AS BIGINT) - 1) * 16
-        |  + (CAST(strpos('0123456789abcdef', substr(md5('kfold42:' ||
-        |       CAST(COALESCE(l.cluster_id, d.doc_id) AS VARCHAR)), 2, 1))
-        |      AS BIGINT) - 1)) % 5 AS INT) AS fold_id
+        | CAST(${hexIntSql("md5('kfold42:' || CAST(COALESCE(l.cluster_id, d.doc_id) AS VARCHAR))", 1, 2)}
+        |   % 5 AS INT) AS fold_id
         |FROM documents d LEFT JOIN labels l ON d.doc_id = l.doc_id
         |ORDER BY d.doc_id""").stripMargin)),
 
@@ -591,7 +586,7 @@ object RelationalExt {
       val h = md5(concat(lit("quota42:"), col("doc_id")))
       val base = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), h.as("sk"),
-          (conv(substring(h, 9, 2), 16, 10).cast("int") % 32).as("bkt"))
+          (hexInt(h, 9, 2).cast("int") % 32).as("bkt"))
       val w1 = Window.partitionBy("lang", "bkt").orderBy(col("sk"), col("doc_id"))
       val w2 = Window.partitionBy("lang").orderBy(col("sk"), col("doc_id"))
       base.withColumn("r1", row_number().over(w1)).filter(col("r1") <= k)
@@ -650,7 +645,7 @@ object RelationalExt {
       val h = md5(concat(lit("ney42:"), col("doc_id")))
       val base = docs
         .select(col("doc_id"), col("lang"), h.as("sk"),
-          (conv(substring(h, 9, 2), 16, 10).cast("int") % 32).as("bkt"))
+          (hexInt(h, 9, 2).cast("int") % 32).as("bkt"))
         .join(broadcast(alloc), "lang")
       val w1 = Window.partitionBy("lang", "bkt").orderBy(col("sk"), col("doc_id"))
       val w2 = Window.partitionBy("lang").orderBy(col("sk"), col("doc_id"))
@@ -1035,7 +1030,7 @@ object RelationalExt {
     Op("pipeline_dp_count_noise", (s, dir) => {
       val b = 2.0
       val h = md5(concat(lit("dp42:"), col("lang")))
-      val u = (conv(substring(h, 1, 8), 16, 10).cast("long") + lit(0.5)) /
+      val u = (hexInt(h, 1, 8).cast("long") + lit(0.5)) /
         lit(4294967296.0)
       // The ln output is snapped to a 1e-3 lattice BEFORE the 6-dp
       // release: neither engine guarantees correctly-rounded ln, and a
@@ -1058,17 +1053,10 @@ object RelationalExt {
       // is snapped to a 1e-3 lattice before the 6-dp release (ln is NOT
       // guaranteed correctly-rounded in either engine — the coarse snap is
       // what keeps a 1-ulp divergence away from the release boundary)
-      Some("""WITH c AS (SELECT lang, count(*) AS n FROM documents GROUP BY 1),
+      Some(s"""WITH c AS (SELECT lang, count(*) AS n FROM documents GROUP BY 1),
              | h AS (SELECT lang, n, md5('dp42:' || lang) AS h FROM c),
              | u AS (SELECT lang, n,
-             |    ((CAST(strpos('0123456789abcdef', substr(h, 1, 1)) AS BIGINT) - 1) * 268435456
-             |   + (CAST(strpos('0123456789abcdef', substr(h, 2, 1)) AS BIGINT) - 1) * 16777216
-             |   + (CAST(strpos('0123456789abcdef', substr(h, 3, 1)) AS BIGINT) - 1) * 1048576
-             |   + (CAST(strpos('0123456789abcdef', substr(h, 4, 1)) AS BIGINT) - 1) * 65536
-             |   + (CAST(strpos('0123456789abcdef', substr(h, 5, 1)) AS BIGINT) - 1) * 4096
-             |   + (CAST(strpos('0123456789abcdef', substr(h, 6, 1)) AS BIGINT) - 1) * 256
-             |   + (CAST(strpos('0123456789abcdef', substr(h, 7, 1)) AS BIGINT) - 1) * 16
-             |   + (CAST(strpos('0123456789abcdef', substr(h, 8, 1)) AS BIGINT) - 1)
+             |    (${hexIntSql("h", 1, 8)}
              |     + 0.5) / 4294967296.0 AS u
              |   FROM h)
              |SELECT lang, n,
@@ -1359,7 +1347,7 @@ object RelationalExt {
       val keyed = t(s, dir, "documents")
         .select(col("lang"), col("doc_id"), col("n_chars"),
           esKey(col("doc_id"), col("n_chars")).as("es_key"),
-          (conv(substring(h, 9, 2), 16, 10).cast("int") % 32).as("bkt"))
+          (hexInt(h, 9, 2).cast("int") % 32).as("bkt"))
       val wb = org.apache.spark.sql.expressions.Window
         .partitionBy("lang", "bkt").orderBy(desc("es_key"), col("doc_id"))
       val wl = org.apache.spark.sql.expressions.Window
@@ -1370,20 +1358,12 @@ object RelationalExt {
           round(col("es_key"), 6).as("es_key"))
         .orderBy("lang", "rk")
     },
-      // hex₁₋₈ of the salted md5 decoded positionally (DuckDB has no
-      // base-conv builtin); all digit terms go through BIGINT so no int32
-      // overflow. Same u and es_key formulas as the Spark side.
-      Some("""WITH h AS (SELECT lang, doc_id, n_chars,
+      // Same hex₁₋₈ decode (hexIntSql), u and es_key formulas as the
+      // Spark side.
+      Some(s"""WITH h AS (SELECT lang, doc_id, n_chars,
              |     md5('wsamp42:' || CAST(doc_id AS VARCHAR)) AS h FROM documents),
              | u AS (SELECT lang, doc_id, n_chars,
-             |     (CAST(strpos('0123456789abcdef', substr(h, 1, 1)) AS BIGINT) - 1) * 268435456
-             |   + (CAST(strpos('0123456789abcdef', substr(h, 2, 1)) AS BIGINT) - 1) * 16777216
-             |   + (CAST(strpos('0123456789abcdef', substr(h, 3, 1)) AS BIGINT) - 1) * 1048576
-             |   + (CAST(strpos('0123456789abcdef', substr(h, 4, 1)) AS BIGINT) - 1) * 65536
-             |   + (CAST(strpos('0123456789abcdef', substr(h, 5, 1)) AS BIGINT) - 1) * 4096
-             |   + (CAST(strpos('0123456789abcdef', substr(h, 6, 1)) AS BIGINT) - 1) * 256
-             |   + (CAST(strpos('0123456789abcdef', substr(h, 7, 1)) AS BIGINT) - 1) * 16
-             |   + (CAST(strpos('0123456789abcdef', substr(h, 8, 1)) AS BIGINT) - 1) AS v
+             |     ${hexIntSql("h", 1, 8)} AS v
              |   FROM h),
              | r AS (SELECT lang, doc_id, n_chars,
              |     ln((v + 0.5) / 4294967296.0) / n_chars AS es_key,
@@ -1565,7 +1545,7 @@ object RelationalExt {
     // same salt replays bit-identically on any cluster.
     Op("pipeline_epoch_shuffle", (s, dir) => {
       val h = md5(concat(lit("epoch3:"), col("doc_id")))
-      val shard = conv(substring(col("h"), 1, 1), 16, 10).cast("int") % 8
+      val shard = hexInt(col("h"), 1, 1).cast("int") % 8
       val w = Window.partitionBy("shard").orderBy(col("h"), col("doc_id"))
       t(s, dir, "documents").select(col("doc_id"), h.as("h"))
         .withColumn("shard", shard)
@@ -1573,12 +1553,10 @@ object RelationalExt {
         .select(col("doc_id"), col("shard"), col("pos"))
         .orderBy("shard", "pos")
     },
-      // DuckDB has no base-conv builtin: the shard nibble decodes
-      // positionally from the hex alphabet (strpos is 1-based).
-      Some("""WITH h AS (SELECT doc_id,
+      Some(s"""WITH h AS (SELECT doc_id,
              |   md5('epoch3:' || CAST(doc_id AS VARCHAR)) AS h FROM documents),
              | s AS (SELECT doc_id, h,
-             |   CAST((strpos('0123456789abcdef', substring(h, 1, 1)) - 1) % 8 AS INT) AS shard
+             |   CAST(${hexIntSql("h", 1, 1)} % 8 AS INT) AS shard
              | FROM h)
              |SELECT doc_id, shard,
              | CAST(row_number() OVER (PARTITION BY shard ORDER BY h, doc_id) AS INT) AS pos
@@ -1658,7 +1636,7 @@ object RelationalExt {
     Op("pipeline_shard_skew_audit", (s, dir) => {
       val h = md5(concat(lit("shard7:"), col("doc_id")))
       val per = t(s, dir, "documents")
-        .select((conv(substring(h, 1, 2), 16, 10).cast("int") % 64)
+        .select((hexInt(h, 1, 2).cast("int") % 64)
           .as("shard"), col("n_chars"))
         .groupBy("shard")
         .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("n_bytes"))
@@ -1678,13 +1656,9 @@ object RelationalExt {
           expr("(1000000 * sum((2*i - s_cnt - 1) * n_bytes)) div " +
             "(max(s_cnt) * max(tot_bytes))").as("gini_micro"))
     },
-      Some("""WITH sh AS (SELECT
-             |   CAST((
-             |     (CAST(strpos('0123456789abcdef', substr(md5('shard7:' ||
-             |        CAST(doc_id AS VARCHAR)), 1, 1)) AS BIGINT) - 1) * 16
-             |   + (CAST(strpos('0123456789abcdef', substr(md5('shard7:' ||
-             |        CAST(doc_id AS VARCHAR)), 2, 1)) AS BIGINT) - 1)
-             |   ) % 64 AS INT) AS shard, n_chars
+      Some(s"""WITH sh AS (SELECT
+             |   CAST(${hexIntSql("md5('shard7:' || CAST(doc_id AS VARCHAR))", 1, 2)}
+             |   % 64 AS INT) AS shard, n_chars
              |  FROM documents),
              | per AS (SELECT shard, count(*) AS n_docs,
              |   CAST(sum(n_chars) AS BIGINT) AS n_bytes
@@ -1852,8 +1826,7 @@ object RelationalExt {
         .select(col("doc_id"),
           coalesce(col("cluster_id"), col("doc_id")).as("group_id"))
       val sizes = grouped.groupBy("group_id").agg(count(lit(1)).as("sz"))
-      val h16 = conv(substring(md5(concat(lit("invsamp42:"), col("doc_id"))),
-        1, 4), 16, 10).cast("long")
+      val h16 = hexInt(md5(concat(lit("invsamp42:"), col("doc_id"))), 1, 4).cast("long")
       grouped.join(sizes, "group_id")
         .filter(h16 * col("sz") < 65536L)
         .select("doc_id", "group_id", "sz")
@@ -1867,10 +1840,7 @@ object RelationalExt {
               |   md5('invsamp42:' || CAST(doc_id AS VARCHAR)) AS h FROM grouped)
               |SELECT hh.doc_id, hh.group_id, sizes.sz
               |FROM hh JOIN sizes USING (group_id)
-              |WHERE ((CAST(strpos('0123456789abcdef', substr(h, 1, 1)) AS BIGINT) - 1) * 4096
-              |     + (CAST(strpos('0123456789abcdef', substr(h, 2, 1)) AS BIGINT) - 1) * 256
-              |     + (CAST(strpos('0123456789abcdef', substr(h, 3, 1)) AS BIGINT) - 1) * 16
-              |     + (CAST(strpos('0123456789abcdef', substr(h, 4, 1)) AS BIGINT) - 1)) * sz < 65536
+              |WHERE ${hexIntSql("h", 1, 4)} * sz < 65536
               |ORDER BY doc_id""".stripMargin)),
 
     // Quality-proportional importance resampling: keep each doc with
@@ -1885,8 +1855,7 @@ object RelationalExt {
     // projection + filter — ZERO shuffles; the score and the gate are
     // both per-row expressions.
     Op("pipeline_importance_resample", (s, dir) => {
-      val h16 = conv(substring(md5(concat(lit("impsamp42:"), col("doc_id"))),
-        1, 4), 16, 10).cast("long")
+      val h16 = hexInt(md5(concat(lit("impsamp42:"), col("doc_id"))), 1, 4).cast("long")
       t(s, dir, "documents")
         .select(col("doc_id"), col("source"),
           TextOps.qualityScore(col("text")).as("quality"))
@@ -1898,10 +1867,7 @@ object RelationalExt {
               |   md5('impsamp42:' || CAST(doc_id AS VARCHAR)) AS h
               | FROM documents)
               |SELECT doc_id, source, quality FROM q
-              |WHERE ((CAST(strpos('0123456789abcdef', substr(h, 1, 1)) AS BIGINT) - 1) * 4096
-              |     + (CAST(strpos('0123456789abcdef', substr(h, 2, 1)) AS BIGINT) - 1) * 256
-              |     + (CAST(strpos('0123456789abcdef', substr(h, 3, 1)) AS BIGINT) - 1) * 16
-              |     + (CAST(strpos('0123456789abcdef', substr(h, 4, 1)) AS BIGINT) - 1))
+              |WHERE ${hexIntSql("h", 1, 4)}
               |   < floor(quality * 65536.0)
               |ORDER BY doc_id""".stripMargin)),
 
@@ -2063,10 +2029,7 @@ object RelationalExt {
       val nonCanon = DedupOps.clusterLabels(docs)
         .filter(col("doc_id") =!= col("cluster_id")).select("doc_id")
       val kept = exact.join(nonCanon, Seq("doc_id"), "left_anti")
-      val h = md5(concat(lit("split42:"), col("doc_id")))
-      kept
-        .select(col("n_chars"),
-          when(substring(h, 1, 2) < "cc", "train").otherwise("test").as("fold"))
+      kept.select(col("n_chars"), splitFold(col("doc_id")).as("fold"))
         .groupBy("fold")
         .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("sum_chars"))
         .orderBy("fold")
@@ -2078,8 +2041,7 @@ object RelationalExt {
               |   FROM docs GROUP BY text),
               | kept AS (SELECT * FROM exact
               |   WHERE doc_id NOT IN (SELECT doc_id FROM noncanon))
-              |SELECT CASE WHEN substring(md5('split42:' || CAST(doc_id AS VARCHAR)), 1, 2) < 'cc'
-              |   THEN 'train' ELSE 'test' END AS fold,
+              |SELECT ${splitFoldSql("doc_id")} AS fold,
               | count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars
               |FROM kept GROUP BY 1 ORDER BY fold""".stripMargin)),
 

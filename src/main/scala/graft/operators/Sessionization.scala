@@ -33,8 +33,11 @@ object Sessionization {
       .withColumn("session_seq", sum("new_s").over(wCum))
   }
 
-  private val oracleSessionCte =
-    """WITH e AS (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events),
+  /** DuckDB twin of [[withSessionSeq]] over `events`: `e` carries `cols`
+    * beside (user_id, event_id, ts), `g` flags each session's first
+    * event, `s` adds the BIGINT session_seq. */
+  private[operators] def oracleSessionCte(cols: String = "value"): String =
+    s"""WITH e AS (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts, $cols FROM events),
       | g AS (SELECT *, CASE WHEN lag(ts) OVER w IS NULL
       |     OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000 THEN 1 ELSE 0 END AS new_s
       |   FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
@@ -68,6 +71,15 @@ object Sessionization {
         count(lit(1)).as("n_events"), dsum6(col("value")).as("sum_value"))
       .drop("sw")
 
+  /** Per-user tumbling windows of `width`: (user_id, w_start, n_events,
+    * sum_value). The body of `window_tumbling` and of its streaming twin
+    * [[graft.streaming.StreamingSessions.tumbling]]. */
+  def tumblingWindows(df: DataFrame, width: String): DataFrame =
+    df.groupBy(col("user_id"), window(col("ts"), width).as("w"))
+      .agg(count(lit(1)).as("n_events"), dsum6(col("value")).as("sum_value"))
+      .select(col("user_id"), col("w.start").as("w_start"),
+        col("n_events"), col("sum_value"))
+
   /** Test-facing: static-gap sessions, comparable 1:1 with [[batchSessions]]. */
   def nativeSessions(df: DataFrame): DataFrame = sessions(df, lit("30 minutes"))
 
@@ -94,7 +106,7 @@ object Sessionization {
           max("ts").as("session_end"),
           dsum6(col("value")).as("sum_value"))
         .orderBy("user_id", "session_seq"),
-      Some(s"""$oracleSessionCte
+      Some(s"""${oracleSessionCte()}
               |SELECT user_id, session_seq, count(*) AS n_events,
               | min(ts) AS session_start, max(ts) AS session_end,
               | ${dsum6Sql("value")} AS sum_value
@@ -104,19 +116,14 @@ object Sessionization {
     // batch and streaming). session end = last event + gap.
     Op("sessionize_native", (s, dir) =>
       nativeSessions(events(s, dir)).orderBy("user_id", "session_start"),
-      Some(s"""$oracleSessionCte
+      Some(s"""${oracleSessionCte()}
               |SELECT user_id, min(ts) AS session_start,
               | max(ts) + INTERVAL 30 MINUTE AS session_end,
               | count(*) AS n_events, ${dsum6Sql("value")} AS sum_value
               |FROM s GROUP BY user_id, session_seq ORDER BY user_id, session_start""".stripMargin)),
 
     Op("window_tumbling", (s, dir) =>
-      events(s, dir)
-        .groupBy(col("user_id"), window(col("ts"), "1 hour").as("w"))
-        .agg(count(lit(1)).as("n_events"), dsum6(col("value")).as("sum_value"))
-        .select(col("user_id"), col("w.start").as("w_start"),
-          col("n_events"), col("sum_value"))
-        .orderBy("user_id", "w_start"),
+      tumblingWindows(events(s, dir), "1 hour").orderBy("user_id", "w_start"),
       Some(s"""SELECT user_id, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS w_start,
               | count(*) AS n_events, ${dsum6Sql("value")} AS sum_value
               |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
@@ -156,15 +163,8 @@ object Sessionization {
             && col("fv") <= col("lp"), 1)).as("n_converted"))
         .withColumn("conversion", col("n_converted") / col("n_sessions"))
         .orderBy("user_id"),
-      Some("""WITH e AS (SELECT user_id, event_id, event_type,
-             |   CAST(ts AS TIMESTAMP) AS ts FROM events),
-             | g AS (SELECT *, CASE WHEN lag(ts) OVER w IS NULL
-             |     OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
-             |     THEN 1 ELSE 0 END AS new_s
-             |   FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-             | s AS (SELECT *, sum(new_s) OVER (PARTITION BY user_id
-             |     ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS sid FROM g),
-             | f AS (SELECT user_id, sid,
+      Some(s"""${oracleSessionCte("event_type")},
+             | f AS (SELECT user_id, session_seq,
              |    min(ts) FILTER (WHERE event_type = 'view') AS fv,
              |    max(ts) FILTER (WHERE event_type = 'purchase') AS lp
              |   FROM s GROUP BY 1, 2)
@@ -228,7 +228,7 @@ object Sessionization {
           round(max(col("dur_us")) / lit(1000000.0), 6).as("max_session_s"))
         .orderBy("user_id")
     },
-      Some(s"""$oracleSessionCte,
+      Some(s"""${oracleSessionCte()},
               | sess AS (SELECT user_id, session_seq, count(*) AS n_ev,
               |    epoch_us(max(ts)) - epoch_us(min(ts)) AS dur_us
               |  FROM s GROUP BY 1, 2)
@@ -259,7 +259,7 @@ object Sessionization {
             .as("avg_depth"))
         .orderBy("day")
     },
-      Some(s"""$oracleSessionCte,
+      Some(s"""${oracleSessionCte()},
               | sess AS (SELECT user_id, session_seq, count(*) AS n_ev,
               |    CAST(min(ts) AS DATE) AS day
               |  FROM s GROUP BY 1, 2),
@@ -296,16 +296,7 @@ object Sessionization {
             6).as("share"))
         .orderBy("entry_type", "exit_type")
     },
-      Some(s"""WITH e AS (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts,
-              |   event_type FROM events),
-              | g AS (SELECT *, CASE WHEN lag(ts) OVER w IS NULL
-              |     OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
-              |     THEN 1 ELSE 0 END AS new_s
-              |   FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-              | s AS (SELECT *, CAST(sum(new_s) OVER (PARTITION BY user_id
-              |     ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING
-              |     AND CURRENT ROW) AS BIGINT) AS session_seq
-              |   FROM g),
+      Some(s"""${oracleSessionCte("event_type")},
               | r AS (SELECT user_id, session_seq, event_type,
               |   row_number() OVER (PARTITION BY user_id, session_seq
               |     ORDER BY ts, event_id) AS rn_a,

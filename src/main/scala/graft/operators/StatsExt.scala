@@ -396,8 +396,7 @@ object StatsExt {
       val ev = events(s, dir).select(col("value"),
         ((datediff(to_date(col("ts")), lit("2024-01-01")) + 1) <= 15)
           .as("pre"),
-        (substring(md5(concat(lit("srm42:"), col("user_id"))), 1, 1)
-          < "8").as("treat"))
+        AnalyticsExt.srmArmA.as("treat"))
       def cells(p: Column, nm: String) = Seq(
         sum(when(p, 1L).otherwise(0L)).cast("double").as(s"n$nm"),
         dsum6(when(p, col("value")).otherwise(lit(0.0))).as(s"sx$nm"),
@@ -424,9 +423,9 @@ object StatsExt {
         round(se, 6).as("se"),
         round(did / se, 6).as("t_stat"))
     },
-      Some("""WITH ev AS (SELECT value,
+      Some(s"""WITH ev AS (SELECT value,
              |   (CAST(ts AS DATE) - DATE '2024-01-01' + 1) <= 15 AS pre,
-             |   substr(md5('srm42:' || CAST(user_id AS VARCHAR)), 1, 1) < '8'
+             |   ${AnalyticsExt.srmArmASql}
              |     AS treat
              |  FROM events),
              | g AS (SELECT
@@ -489,8 +488,7 @@ object StatsExt {
       val ev = events(s, dir).select(
         dayofweek(col("ts")).as("dow"),
         (col("event_type") === "purchase").as("succ"),
-        (substring(md5(concat(lit("srm42:"), col("user_id"))), 1, 1)
-          < "8").as("arma"))
+        AnalyticsExt.srmArmA.as("arma"))
       val cellsK = ev.groupBy("dow").agg(
         count(lit(1)).as("n"),
         sum(when(col("arma"), 1L).otherwise(0L)).as("n1"),
@@ -519,10 +517,10 @@ object StatsExt {
         round((abs(col("sae")) - lit(0.5)) * (abs(col("sae")) - lit(0.5))
           / col("sv"), 6).as("chi2_cmh"))
     },
-      Some("""WITH ev AS (SELECT
+      Some(s"""WITH ev AS (SELECT
              |   CAST(dayofweek(CAST(ts AS TIMESTAMP)) + 1 AS INT) AS dow,
              |   event_type = 'purchase' AS succ,
-             |   substr(md5('srm42:' || CAST(user_id AS VARCHAR)), 1, 1) < '8'
+             |   ${AnalyticsExt.srmArmASql}
              |     AS arma
              |  FROM events),
              | cells AS (SELECT dow, CAST(count(*) AS BIGINT) AS n,
@@ -897,19 +895,13 @@ object StatsExt {
     // the corpus is touched once.
     Op("agg_tukey_hsd", (s, dir) => {
       val dec = "decimal(28,12)"
-      val st = events(s, dir).groupBy("event_type").agg(
-        count(lit(1)).cast("double").as("n"),
-        dsum6(col("value")).as("sx"),
-        dsum6(col("value") * col("value")).as("sxx"))
+      val st = AnalyticsExt.typeMoments(s, dir)
       val tot = st.agg(
         sum(col("n").cast(dec)).cast("double").as("nt"),
         count(lit(1)).as("k"),
         sum((col("sxx") - col("sx") * col("sx") / col("n")).cast(dec))
           .cast("double").as("ssw"))
-      val a = st.select(col("event_type").as("type_a"), col("n").as("na"),
-        col("sx").as("sxa"))
-      val b = st.select(col("event_type").as("type_b"), col("n").as("nb"),
-        col("sx").as("sxb"))
+      val (a, b) = AnalyticsExt.typeSides(st, Nil, "n" -> "n", "sx" -> "sx")
       val md = col("sxa") / col("na") - col("sxb") / col("nb")
       val msw = col("ssw") / (col("nt") - col("k"))
       val se = sqrt(msw / lit(2.0) *
@@ -922,9 +914,7 @@ object StatsExt {
           round(abs(md) / se, 6).as("q_stat"))
         .orderBy("type_a", "type_b")
     },
-      Some(s"""WITH st AS (SELECT event_type, CAST(count(*) AS DOUBLE) AS n,
-              |   ${dsum6Sql("value")} AS sx, ${dsum6Sql("value * value")} AS sxx
-              | FROM events GROUP BY 1),
+      Some(s"""WITH ${AnalyticsExt.typeMomentsCte},
               | tot AS (SELECT
               |   CAST(sum(CAST(n AS DECIMAL(28,12))) AS DOUBLE) AS nt,
               |   count(*) AS k,
@@ -1158,8 +1148,7 @@ object StatsExt {
           max(when(col("event_type") === "purchase", 1L).otherwise(0L))
             .as("conv"))
         .select(col("conv"),
-          when(substring(md5(concat(lit("srm42:"), col("user_id"))), 1, 1)
-            < "8", "a").otherwise("b").as("arm"))
+          when(AnalyticsExt.srmArmA, "a").otherwise("b").as("arm"))
       val g = per.groupBy("arm")
         .agg(count(lit(1)).as("n"), sum("conv").as("k"))
       val a = g.filter(col("arm") === "a")
@@ -1176,9 +1165,8 @@ object StatsExt {
         round(pa, 6).as("p_a"), round(pb, 6).as("p_b"),
         round(z, 6).as("z_stat"))
     },
-      Some("""WITH per AS (SELECT
-             |   CASE WHEN substring(md5('srm42:' || CAST(user_id AS VARCHAR)),
-             |     1, 1) < '8' THEN 'a' ELSE 'b' END AS arm,
+      Some(s"""WITH per AS (SELECT
+             |   CASE WHEN ${AnalyticsExt.srmArmASql} THEN 'a' ELSE 'b' END AS arm,
              |   max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
              |     AS conv
              |  FROM events GROUP BY user_id, CAST(ts AS DATE)),

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.SessionMemo.{checkpointTracked, freeCheckpoint}
 import graft.Tables._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -87,9 +88,8 @@ object TextOps {
     * sequence, non-increasing merge counts, and exact symbol-mass
     * accounting (each merge removes precisely pair_count symbols). */
   def bpeMerges(vocab: DataFrame, nMerges: Int): Seq[(Int, String, String, Long)] = {
-    val spark = vocab.sparkSession
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var (v, vIds) = DedupOps.checkpointTracked(
+    var v = checkpointTracked(
       vocab.select(col("freq"), charSymsUdf(col("word")).as("syms")))
     var step = 1
     while (step <= nMerges) {
@@ -100,7 +100,7 @@ object TextOps {
       else {
         val Array(a, b) = top(0).getString(0).split('\u001f')
         merges += ((step, a, b, top(0).getLong(1)))
-        val (next, nextIds) = DedupOps.checkpointTracked(
+        val next = checkpointTracked(
           v.select(col("freq"), mergeUdf(a, b)(col("syms")).as("syms")))
         // The superseded round's checkpoint blocks are dead the moment
         // the next round materializes — free the pinned RDD blocks
@@ -108,13 +108,12 @@ object TextOps {
         // localCheckpoint persists the RDD directly, outside the
         // CacheManager), or each trainer run leaks nMerges block sets
         // until the RDDs happen to be GC'd.
-        DedupOps.freeRddBlocks(spark, vIds)
+        freeCheckpoint(v)
         v = next
-        vIds = nextIds
         step += 1
       }
     }
-    DedupOps.freeRddBlocks(spark, vIds)
+    freeCheckpoint(v)
     merges.toSeq
   }
 
@@ -692,10 +691,7 @@ object TextOps {
             / col("n_shingles").cast("double"), 6))
         .orderBy("doc_id")
     },
-      Some("""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-             | s AS (SELECT DISTINCT doc_id, array_to_string(toks[i:i+2], ' ') AS sh
-             |   FROM (SELECT doc_id, toks,
-             |     unnest(generate_series(1, len(toks) - 2)) AS i FROM t)),
+      Some(s"""${DedupOps.shingleIndexCtes},
              | f AS (SELECT sh, min(doc_id) AS first_doc FROM s GROUP BY 1),
              | d AS (SELECT s.doc_id, CAST(count(*) AS BIGINT) AS n_shingles,
              |   CAST(sum(CASE WHEN f.first_doc < s.doc_id THEN 1 ELSE 0 END)
@@ -779,14 +775,12 @@ object TextOps {
     // signal: every fold shares them) so no aggregation buffer ever
     // holds more than the ceiling's worth of ids.
     Op("text_contamination", (s, dir) => {
-      val h = md5(concat(lit("split42:"), col("doc_id")))
       val docs = t(s, dir, "documents")
-        .withColumn("fold", when(substring(h, 1, 2) < "cc", "train").otherwise("test"))
+        .withColumn("fold", RelationalExt.splitFold(col("doc_id")))
       contamination(docs)
     },
-      Some("""WITH f AS (SELECT doc_id, text,
-             |   CASE WHEN substring(md5('split42:' || CAST(doc_id AS VARCHAR)), 1, 2) < 'cc'
-             |     THEN 'train' ELSE 'test' END AS fold
+      Some(s"""WITH f AS (SELECT doc_id, text,
+             |   ${RelationalExt.splitFoldSql("doc_id")} AS fold
              |  FROM documents),
              | t AS (SELECT doc_id, fold, string_split(text, ' ') AS toks FROM f),
              | s AS (SELECT DISTINCT doc_id, fold, array_to_string(toks[i:i+2], ' ') AS shingle
@@ -815,15 +809,13 @@ object TextOps {
     // where the exact ceiling never binds the flagged pair set is a
     // SUBSET of the exact key's (pinned with measured recall at sf0.1).
     Op("text_contamination_capped", (s, dir) => {
-      val h = md5(concat(lit("split42:"), col("doc_id")))
       contaminationCapped(DedupOps.thinnedPostings(s, dir),
-        when(substring(h, 1, 2) < "cc", "train").otherwise("test"))
+        RelationalExt.splitFold(col("doc_id")))
     },
       // Same fold CTE; postings thinned by the salted-md5 residue rule
-      // (DedupOps.md5ResidueSql), cap mirrored literally.
+      // (hexIntSql of the tswp42 md5), cap mirrored literally.
       Some(s"""WITH f AS (SELECT doc_id, text,
-              |   CASE WHEN substring(md5('split42:' || CAST(doc_id AS VARCHAR)), 1, 2) < 'cc'
-              |     THEN 'train' ELSE 'test' END AS fold
+              |   ${RelationalExt.splitFoldSql("doc_id")} AS fold
               |  FROM documents),
               | t AS (SELECT doc_id, fold, string_split(text, ' ') AS toks FROM f),
               | s AS (SELECT DISTINCT doc_id, fold, array_to_string(toks[i:i+2], ' ') AS sh
@@ -836,7 +828,7 @@ object TextOps {
               |  FROM s JOIN d USING (sh)),
               | sc AS (SELECT doc_id, fold, sh FROM hh, cap
               |  WHERE df <= df_cap OR
-              |   ${DedupOps.md5ResidueSql("h")} % df < df_cap),
+              |   ${hexIntSql("h", 1, 8)} % df < df_cap),
               | pairs AS (SELECT te.doc_id AS test_id, tr.doc_id AS train_id,
               |     count(*) AS shared
               |   FROM sc te JOIN sc tr ON te.sh = tr.sh

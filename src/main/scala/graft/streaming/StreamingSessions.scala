@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.Tables
-import graft.operators.Sessionization
+import graft.operators.{AnalyticsExt, RelationalExt, Sessionization}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -42,12 +42,7 @@ object StreamingSessions {
   /** Tumbling-window aggregation with watermark (Append-compatible). */
   def tumbling(events: DataFrame, width: String = "1 hour",
       watermark: String = "10 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(col("user_id"), window(col("ts"), width).as("w"))
-      .agg(count(lit(1)).as("n_events"), Tables.dsum6(col("value")).as("sum_value"))
-      .select(col("user_id"), col("w.start").as("w_start"),
-        col("n_events"), col("sum_value"))
+    Sessionization.tumblingWindows(events.withWatermark("ts", watermark), width)
 
   /** Sliding-window aggregation with watermark (Append-compatible): each
     * event lands in ⌈width/slide⌉ overlapping windows. */
@@ -60,24 +55,15 @@ object StreamingSessions {
       .select(col("user_id"), col("w.start").as("w_start"),
         col("n_events"), col("sum_value"))
 
-  /** Streaming OHLC downsampling (the batch `window_ohlc` key as a
-    * watermarked tumbling agg): open/close pick by event time via
-    * min_by/max_by — declarative aggs, so state per (user, window) is the
-    * same constant handful of accumulators as in batch and the window
-    * finalizes once the watermark passes (Append-compatible). */
+  /** Streaming OHLC downsampling: the batch `window_ohlc` body
+    * ([[graft.operators.AnalyticsExt.ohlcWindows]]) as a watermarked
+    * tumbling agg. min_by/max_by are declarative aggs, so state per
+    * (user, window) is the same constant handful of accumulators as in
+    * batch and the window finalizes once the watermark passes
+    * (Append-compatible). */
   def ohlc(events: DataFrame, width: String = "1 hour",
       watermark: String = "10 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(col("user_id"), window(col("ts"), width).as("w"))
-      .agg(min_by(col("value"), col("ts")).as("open_value"),
-        max(col("value")).as("high_value"),
-        min(col("value")).as("low_value"),
-        max_by(col("value"), col("ts")).as("close_value"),
-        count(lit(1)).as("n_events"))
-      .select(col("user_id"), col("w.start").as("w_start"),
-        col("open_value"), col("high_value"), col("low_value"),
-        col("close_value"), col("n_events"))
+    AnalyticsExt.ohlcWindows(events.withWatermark("ts", watermark), width)
 
   /** Streaming exact dedup on event_id, state bounded by the watermark. */
   def dedup(events: DataFrame, watermark: String = "10 minutes"): DataFrame =
@@ -117,16 +103,11 @@ object StreamingSessions {
 
   /** KTable materialization (changelog compaction): latest record per
     * key, continuously updated — Update output mode re-emits a key's row
-    * whenever a newer event arrives. The same max_by aggregation as the
-    * batch `dedup_latest_by_key`, so stream and batch compactions agree. */
+    * whenever a newer event arrives. The batch `dedup_latest_by_key`
+    * body ([[graft.operators.RelationalExt.latestByKey]]), so stream and
+    * batch compactions agree. */
   def latestByKey(events: DataFrame): DataFrame =
-    events.groupBy("user_id")
-      .agg(max_by(
-        struct(col("ts"), col("event_id"), col("event_type"), col("value")),
-        struct(col("ts"), col("event_id"))).as("last"))
-      .select(col("user_id"), col("last.ts").as("ts"),
-        col("last.event_id").as("event_id"),
-        col("last.event_type").as("event_type"), col("last.value").as("value"))
+    RelationalExt.latestByKey(events)
 
   /** Windowed stream⋈stream LEFT OUTER join (KStream.leftJoin analog):
     * purchases keep a row even when no click preceded them — the null

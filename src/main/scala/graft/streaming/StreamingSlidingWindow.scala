@@ -53,13 +53,18 @@ object StreamingSlidingWindow {
       // peers, so two same-window events in one micro-batch must see each
       // other whichever arrived "first"
       val entries = (buf.entries ++ batch.map(e => SlideEntry(e.us, e.vi)))
-        .sortBy(_.us)
+        .sortBy(_.us).toVector
+      // each event's [us − Δ, us] sum is a difference of prefix sums over
+      // the time-sorted entries; the batch is time-sorted too, so both
+      // bounds only move forward — linear in entries + batch rows. Long
+      // wrap-around cancels in the difference, so window sums stay exact.
+      val prefix = entries.scanLeft(0L)(_ + _.vi)
+      var lo = 0
+      var hi = 0
       val out = batch.map { e =>
-        var sum = 0L
-        entries.foreach { en =>
-          if (en.us >= e.us - windowUs && en.us <= e.us) sum += en.vi
-        }
-        SlideOut(e.event_id, key, sum / 1e6)
+        while (lo < entries.size && entries(lo).us < e.us - windowUs) lo += 1
+        while (hi < entries.size && entries(hi).us <= e.us) hi += 1
+        SlideOut(e.event_id, key, (prefix(hi) - prefix(lo)) / 1e6)
       }
       // evict: entries at us < hwm − Δ can never re-enter a trailing
       // window under the ordered-arrival contract

@@ -350,13 +350,15 @@ class DedupSimilaritySpec extends SparkSpec {
     // shape the adaptive rule actually selects at the 10x point
     // (bits ~ log2(N/64) grows with N). Truth = ScaleGen's planted
     // cross-rep replica pairs at cosine >= 0.8 (known-true by
-    // construction). Canceled (not failed) when the 10x corpus is
-    // absent; regenerate with:
-    //   sbt "Test/runMain graft.ScaleGen /root/testdata/sf0.1 /tmp/graft_sf1 10"
-    assume(new java.io.File("/tmp/graft_sf1/embeddings.parquet").exists,
-      "10x corpus not generated on this box")
+    // construction). The 10x embeddings of sf0.1 are written to a temp
+    // directory first (ScaleGen's embeddings table alone).
+    val sf01 = new java.io.File(sfDir).getParent + "/sf0.1"
+    val dir = java.nio.file.Files.createTempDirectory("graft_lsh10x").toString
     val (n, bits, bands, nTruth, recalled) =
-      lshPlantedRecall("/tmp/graft_sf1", factor = 10)
+      try {
+        ScaleGen.writeEmbeddings(spark, sf01, dir, 10)
+        lshPlantedRecall(dir, factor = 10)
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     assert(nTruth > 1000, s"planted truth unexpectedly small: $nTruth")
     val recall = recalled.toDouble / nTruth
     assert(recall >= 0.85,
@@ -581,10 +583,13 @@ class DedupSimilaritySpec extends SparkSpec {
     import org.apache.spark.storage.StorageLevel
     val foreign = spark.range(100).toDF("n").persist()
     foreign.count() // materialize the foreign cache before the checkpoint
-    val (ck, ids) = DedupOps.checkpointTracked(spark.range(50).toDF("m"))
+    val ck = SessionMemo.checkpointTracked(spark.range(50).toDF("m"))
+    val ids = ck.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+    }.toSet
     assert(ck.count() == 50)
     val foreignIds = spark.sparkContext.getPersistentRDDs.keySet -- ids
-    DedupOps.freeRddBlocks(spark, ids)
+    SessionMemo.freeCheckpoint(ck)
     // tracked blocks gone, foreign cache untouched (same storage level)
     assert(ids.forall(!spark.sparkContext.getPersistentRDDs.contains(_)))
     assert(foreignIds.subsetOf(spark.sparkContext.getPersistentRDDs.keySet))

@@ -82,6 +82,25 @@ object ScaleGen {
       .withColumn("n_chars", length(col("text")).cast("long"))
   }
 
+  /** `factor`x the embeddings of `in`, written to `out`: rep r re-emits
+    * every vector under id r·offset + vec_id, reps ≥ 1 with a ±0.005
+    * per-component jitter that keeps the planted cluster structure, so
+    * LSH/IVF recall paths stay meaningful at scale. */
+  def writeEmbeddings(spark: SparkSession, in: String, out: String,
+      factor: Int): Unit = {
+    val emb = spark.read.parquet(s"$in/embeddings.parquet")
+    val vecOffset = emb.agg(max("vec_id")).head.getLong(0) + 1
+    emb.crossJoin(spark.range(0, factor).select(col("id").as("rep")))
+      .select((col("rep") * vecOffset + col("vec_id")).as("vec_id"),
+        when(col("rep") === 0, col("embedding")).otherwise(
+          transform(col("embedding"), (x, i) =>
+            (x + (pmod(xxhash64(col("vec_id"), col("rep"), i), lit(1000))
+              - 500).cast("float") / 100000.0f))
+            .cast("array<float>")).as("embedding"),
+        col("label"))
+      .repartition(32).write.mode("overwrite").parquet(s"$out/embeddings.parquet")
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(in, out, factorS) = args.take(3)
     val factor = factorS.toInt
@@ -106,18 +125,7 @@ object ScaleGen {
     spark.sparkContext.setLogLevel("WARN")
 
     if (embeddingsOnly) {
-      val emb = spark.read.parquet(s"$in/embeddings.parquet")
-      val vecOffset = emb.agg(max("vec_id")).head.getLong(0) + 1
-      emb.crossJoin(spark.range(0, factor).select(col("id").as("rep")))
-        .select((col("rep") * vecOffset + col("vec_id")).as("vec_id"),
-          when(col("rep") === 0, col("embedding")).otherwise(
-            transform(col("embedding"), (x, i) =>
-              (x + (pmod(xxhash64(col("vec_id"), col("rep"), i), lit(1000))
-                - 500).cast("float") / 100000.0f))
-              .cast("array<float>")).as("embedding"),
-          col("label"))
-        .repartition(32).write.mode("overwrite")
-        .parquet(s"$out/embeddings.parquet")
+      writeEmbeddings(spark, in, out, factor)
       println(s"[scalegen] wrote ${factor}x embeddings of $in to $out")
       spark.stop()
       return
@@ -185,19 +193,7 @@ object ScaleGen {
     }
     writeDocuments()
 
-    // ---- embeddings: per-rep jitter (±0.005) keeps the planted cluster
-    // structure so LSH/IVF recall paths stay meaningful at 10x.
-    val emb = spark.read.parquet(s"$in/embeddings.parquet")
-    val vecOffset = emb.agg(max("vec_id")).head.getLong(0) + 1
-    emb.crossJoin(spark.range(0, factor).select(col("id").as("rep")))
-      .select((col("rep") * vecOffset + col("vec_id")).as("vec_id"),
-        when(col("rep") === 0, col("embedding")).otherwise(
-          transform(col("embedding"), (x, i) =>
-            (x + (pmod(xxhash64(col("vec_id"), col("rep"), i), lit(1000))
-              - 500).cast("float") / 100000.0f))
-            .cast("array<float>")).as("embedding"),
-        col("label"))
-      .repartition(32).write.mode("overwrite").parquet(s"$out/embeddings.parquet")
+    writeEmbeddings(spark, in, out, factor)
 
     // ---- events: replicate users (the sessionization key), timestamps
     // unchanged — session count and shuffle volume scale linearly, the

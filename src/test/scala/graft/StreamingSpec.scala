@@ -1456,15 +1456,25 @@ class StreamingSpec extends SparkSpec {
           unix_micros(col("ts")).as("us"),
           (col("value").cast("decimal(18,6)") * 1000000).cast("long").as("vi"))
         .as[EventIn].collect().toSeq.sortBy(e => (e.us, e.event_id))
+      // a hot user: 400 events 12 s apart (300 inside each trailing
+      // hour), fed in event-time order over the same three waves; its
+      // expected sums replay the RANGE frame by brute force
+      val windowUs = 3600L * 1000000L
+      val hot = (0 until 400).map(i => EventIn(-1L, -1L - i,
+        keyed.head.us + i * 12000000L, (i * 7919L) % 100000L))
+      val hotWant = hot.map(e => (e.event_id, hot.filter(o =>
+        o.us >= e.us - windowUs && o.us <= e.us).map(_.vi).sum / 1e6)).toSet
       val waves = keyed.grouped((keyed.size / 3).max(1)).toSeq
+        .zipAll(hot.grouped(134).toSeq, Seq.empty, Seq.empty)
+        .map { case (w, h) => w ++ h }
       val ms = MemoryStream[EventIn]
-      val sink = runToMemory(StreamingSlidingWindow.slidingSum(ms.toDS(), 3600L * 1000000L).toDF(),
+      val sink = runToMemory(StreamingSlidingWindow.slidingSum(ms.toDS(), windowUs).toDF(),
         "stream_sliding", ms, waves)
       val streamed = sink.collect()
         .map(r => (r.getLong(0), r.getDouble(2))).toSet
       val batch = SparkEntry.queries("win_range_frame")(spark, sfDir).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSet
-      assert(streamed == batch)
+      assert(streamed == batch ++ hotWant)
       assert(batch.nonEmpty)
     }
   }

@@ -23,10 +23,8 @@ def normalize(df):
     return sorted(rows)
 
 
-def main():
-    out, sf = sys.argv[1], sys.argv[2]
-    key_filter = sys.argv[3] if len(sys.argv) > 3 else None
-    con = duckdb.connect()
+def create_views(con, sf):
+    """One DuckDB view per testdata table of sf dir `sf`."""
     for t in TABLES:
         # driver testdata ships single files; ScaleGen corpora are Spark
         # output DIRECTORIES named <table>.parquet — glob inside those
@@ -39,6 +37,13 @@ def main():
             print(f"skip view {t} (no {p})")
             continue
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+
+
+def main():
+    out, sf = sys.argv[1], sys.argv[2]
+    key_filter = sys.argv[3] if len(sys.argv) > 3 else None
+    con = duckdb.connect()
+    create_views(con, sf)
     oracle = json.load(open(f"{out}/oracle_sql.json"))
     n_pass = n_fail = 0
     for name in sorted(oracle):
