@@ -243,9 +243,11 @@ object Scans {
     // the parquet side, which simultaneously checks the writer emitted
     // exactly the rows and the binary reader saw every byte once (file
     // COUNT is deliberately not surfaced: it is a parallelism artifact,
-    // not data).
+    // not data). The files are staged in the SparkContext's own
+    // temporary directory (Spark deletes it when the context stops), so
+    // two JVMs on one box never share, and overwrite, each other's input.
     Op("scan_binary_files", (s, dir) => {
-      val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_binary_docs"
+      val tmp = s"${org.apache.spark.SparkFiles.getRootDirectory()}/graft_binary_docs"
       t(s, dir, "documents").select(col("lang"), col("text").as("value"))
         .write.mode("overwrite").partitionBy("lang").format("text").save(tmp)
       s.read.format("binaryFile")

@@ -3,17 +3,25 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming._
 
-/** The one custom stateful operator (§2.8 `stateful_custom`): a
-  * Processor-API analog of gap sessionization built directly on
-  * `flatMapGroupsWithState` with explicit event-time timeouts — per-user
-  * session state, sessions emitted either when a new event arrives beyond
-  * the gap or when the watermark passes `last_event + gap` (timeout).
+/** The custom-state gap sessionizer (§2.8 `stateful_custom`): the Kafka
+  * Streams Processor API with punctuators, on `transformWithState` —
+  * per-user open session in a typed `ValueState`, one timer per open
+  * session, sessions emitted either when a new event arrives beyond the
+  * gap or when the session's timer fires.
   *
   * Semantics are pinned to `session_window` / lag+cumsum by a three-way
   * property test: new session iff `ts - prev_ts > gap` (an event exactly
   * `gap` after the last still merges); session end is `last_ts + gap`.
+  *
+  * One processor serves three entry points: [[sessionize]] (event-time
+  * timers), [[sessionizeFromState]] (the same, seeded with open sessions
+  * through `handleInitialState`) and [[sessionizeProcTime]]
+  * (processing-time timers). Every entry point requires the RocksDB
+  * state-store provider (a `transformWithState` constraint, not ours).
+  * The state variable `"open"` and its `OpenSession` encoder are the
+  * checkpoint's schema: changing either makes checkpoints unrestorable.
   */
 object StatefulSessionizer {
 
@@ -24,7 +32,7 @@ object StatefulSessionizer {
   case class SessionOut(user_id: Long, session_start: Timestamp,
       session_end: Timestamp, n_events: Long, sum_value: Double)
 
-  private[streaming] def us(ts: Timestamp): Long =
+  private def us(ts: Timestamp): Long =
     ts.getTime * 1000L + (ts.getNanos % 1000000) / 1000
 
   private def toTs(usVal: Long): Timestamp = {
@@ -33,15 +41,13 @@ object StatefulSessionizer {
     t
   }
 
-  private[streaming] def emit(userId: Long, s: OpenSession, gapUs: Long): SessionOut =
+  private def emit(userId: Long, s: OpenSession, gapUs: Long): SessionOut =
     SessionOut(userId, toTs(s.startUs), toTs(s.lastUs + gapUs), s.n, s.sum)
 
-  /** The pure gap-merge fold — the single source of session semantics for
-    * BOTH custom-state operators (`flatMapGroupsWithState` here and
-    * [[TwsSessionizer]]'s `transformWithState` processor): fold the
-    * batch's events (event-time order, id tiebreak) into the open
-    * session, closing a session whenever the gap is exceeded. Returns
-    * (closed sessions, the still-open tail). */
+  /** The pure gap-merge fold — the single source of session semantics:
+    * fold the batch's events (event-time order, id tiebreak) into the
+    * open session, closing a session whenever the gap is exceeded.
+    * Returns (closed sessions, the still-open tail). */
   private[streaming] def foldEvents(gapUs: Long, userId: Long,
       init: Option[OpenSession],
       events: Iterator[Event]): (Vector[SessionOut], Option[OpenSession]) = {
@@ -63,65 +69,73 @@ object StatefulSessionizer {
     (closed.result(), cur)
   }
 
-  /** [[foldEvents]] applied to a `GroupState` (the fmgws flavors): close
-    * sessions broken by the gap, leave the tail open in `state`, and
-    * return the closed ones. The caller decides how the open tail
-    * eventually emits (event-time watermark vs wall-clock idle). */
-  private def mergeEvents(gapUs: Long, userId: Long, events: Iterator[Event],
-      state: GroupState[OpenSession]): Iterator[SessionOut] = {
-    val (closed, cur) = foldEvents(gapUs, userId, state.getOption, events)
-    cur.foreach(state.update)
-    closed.iterator
-  }
+  /** Per-user processor: the open session in `ValueState` "open" and one
+    * timer, re-armed (every listed timer deleted, then the new one
+    * registered) whenever the session is written. Event time
+    * (`idleMs` None): the timer is the session end, so it fires once the
+    * watermark passes `last_event + gap`. Processing time: it fires
+    * `idleMs` of wall clock after the key's last batch with rows. Either
+    * way the firing emits the session and clears the state. */
+  class GapSessionProcessor(gapUs: Long, idleMs: Option[Long])
+      extends StatefulProcessorWithInitialState[Long, Event, SessionOut, OpenSession] {
 
-  /** The per-group state transition (event-time timeouts). Public for
-    * direct unit testing. */
-  def updateGroup(gapUs: Long)(
-      userId: Long, events: Iterator[Event],
-      state: GroupState[OpenSession]): Iterator[SessionOut] = {
-    if (state.hasTimedOut) {
-      val out = state.getOption.map(emit(userId, _, gapUs)).iterator
-      state.remove()
-      out
-    } else {
-      val closed = mergeEvents(gapUs, userId, events, state)
-      // Emit via timeout once the watermark passes session end.
-      state.getOption.foreach(s => state.setTimeoutTimestamp((s.lastUs + gapUs) / 1000))
-      closed
+    @transient private var open: ValueState[OpenSession] = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      open = getHandle.getValueState[OpenSession]("open",
+        Encoders.product[OpenSession], TTLConfig.NONE)
+
+    /** The session end in ms, rounded UP: a watermark (whole ms) passes
+      * it exactly when it passes the end in µs, as `session_window`
+      * evicts. Rounding down would emit a session up to 1 ms early. */
+    private def endMs(s: OpenSession): Long = Math.floorDiv(s.lastUs + gapUs + 999, 1000L)
+
+    private def hold(s: OpenSession, timerValues: TimerValues): Unit = {
+      open.update(s)
+      getHandle.listTimers().toList.foreach(getHandle.deleteTimer)
+      getHandle.registerTimer(idleMs.fold(endMs(s))(
+        timerValues.getCurrentProcessingTimeInMs + _))
+    }
+
+    override def handleInitialState(key: Long, initialState: OpenSession,
+        timerValues: TimerValues): Unit = hold(initialState, timerValues)
+
+    override def handleInputRows(key: Long, rows: Iterator[Event],
+        timerValues: TimerValues): Iterator[SessionOut] = {
+      val (closed, cur) = foldEvents(gapUs, key,
+        if (open.exists()) Some(open.get()) else None, rows)
+      cur.foreach(hold(_, timerValues))
+      closed.iterator
+    }
+
+    override def handleExpiredTimer(key: Long, timerValues: TimerValues,
+        expiredTimerInfo: ExpiredTimerInfo): Iterator[SessionOut] = {
+      // An event-time timer emits only once the watermark has passed the
+      // open session's end: a stale timer (session extended after arming,
+      // or rounded down by a checkpoint of an older build; `hold` deletes
+      // them) must not emit early, and re-arms the end instead.
+      if (open.exists()) {
+        val s = open.get()
+        if (idleMs.isDefined || endMs(s) <= timerValues.getCurrentWatermarkInMs) {
+          open.clear()
+          Iterator.single(emit(key, s, gapUs))
+        } else {
+          getHandle.registerTimer(endMs(s))
+          Iterator.empty
+        }
+      } else Iterator.empty
     }
   }
 
-  /** Wall-clock variant (KS WALL_CLOCK_TIME punctuate analog): an open
-    * session also emits after `idleMs` of processing time with no new
-    * events for the key — a stalled partition/source cannot hold its
-    * last session open forever, which EventTimeTimeout (watermark-driven,
-    * hence data-driven) cannot guarantee. A session emitted by idle
-    * timeout still closes at `last_event + gap` in event time. */
-  def updateGroupProcTime(gapUs: Long, idleMs: Long)(
-      userId: Long, events: Iterator[Event],
-      state: GroupState[OpenSession]): Iterator[SessionOut] = {
-    if (state.hasTimedOut) {
-      val out = state.getOption.map(emit(userId, _, gapUs)).iterator
-      state.remove()
-      out
-    } else {
-      val closed = mergeEvents(gapUs, userId, events, state)
-      if (state.exists) state.setTimeoutDuration(idleMs)
-      closed
-    }
-  }
-
-  /** Streaming entry point (Append mode, event-time timeout). Also works
-    * on a batch Dataset (state is per-invocation then). */
+  /** Streaming entry point (Append mode, event-time timers). */
   def sessionize(events: Dataset[Event], gapUs: Long = 30L * 60 * 1000000,
       watermark: String = "10 minutes"): Dataset[SessionOut] = {
-    implicit val stateEnc = Encoders.product[OpenSession]
     implicit val outEnc = Encoders.product[SessionOut]
     events
       .withWatermark("ts", watermark)
       .groupByKey(_.user_id)(Encoders.scalaLong)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        updateGroup(gapUs))
+      .transformWithState(new GapSessionProcessor(gapUs, None),
+        TimeMode.EventTime, OutputMode.Append)
   }
 
   /** Entry point with bootstrap state (the KS "restore state from a
@@ -135,27 +149,27 @@ object StatefulSessionizer {
       watermark: String = "10 minutes"): Dataset[SessionOut] = {
     implicit val stateEnc = Encoders.product[OpenSession]
     implicit val outEnc = Encoders.product[SessionOut]
-    implicit val tupleEnc = Encoders.tuple(Encoders.scalaLong, stateEnc)
     val initKV = initial.groupByKey(_._1)(Encoders.scalaLong)
       .mapValues(_._2)(stateEnc)
     events
       .withWatermark("ts", watermark)
       .groupByKey(_.user_id)(Encoders.scalaLong)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout,
-        initKV)(updateGroup(gapUs))
+      .transformWithState(new GapSessionProcessor(gapUs, None),
+        TimeMode.EventTime, OutputMode.Append, initKV)
   }
 
-  /** Streaming entry point, processing-time timeout flavor: sessions close
-    * on the event-time gap as usual, and additionally after `idleMs` of
-    * wall-clock silence per key. No watermark required — emission does not
-    * depend on any future data arriving. */
+  /** Streaming entry point, processing-time flavor (KS WALL_CLOCK_TIME
+    * punctuate analog): sessions close on the event-time gap as usual,
+    * and an open session also emits after `idleMs` of wall-clock silence
+    * for its key. No watermark required — a stalled source cannot hold
+    * its last session open forever. A session emitted on idle still
+    * closes at `last_event + gap` in event time. */
   def sessionizeProcTime(events: Dataset[Event],
       gapUs: Long = 30L * 60 * 1000000, idleMs: Long = 1000L): Dataset[SessionOut] = {
-    implicit val stateEnc = Encoders.product[OpenSession]
     implicit val outEnc = Encoders.product[SessionOut]
     events
       .groupByKey(_.user_id)(Encoders.scalaLong)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout)(
-        updateGroupProcTime(gapUs, idleMs))
+      .transformWithState(new GapSessionProcessor(gapUs, Some(idleMs)),
+        TimeMode.ProcessingTime, OutputMode.Append)
   }
 }

@@ -43,7 +43,7 @@ import org.apache.spark.sql.streaming._
   * forever. KS routes that retraction through its subscription store —
   * a processor keyed by the fact's PRIMARY key that remembers the last
   * FK and emits an unsubscribe to the old one. [[routeFacts]] is that
-  * stage: keyed by order id, `ValueState[last FK]`, emitting a
+  * stage: keyed by order id, a [[KeyedFold]] on the last FK, emitting a
   * tombstone `FkChange` on the OLD key plus the upsert on the new one;
   * [[FkJoinProcessor]] honors the tombstone by deleting the order from
   * the key's fact map (no emission — the new key's upsert emits the
@@ -111,35 +111,6 @@ object StreamingFkJoin {
     }
   }
 
-  /** KS subscription-store analog for MUTABLE FKs: keyed by the fact's
-    * PRIMARY key, remembers the last FK per order and, on a re-key,
-    * emits the old-key tombstone ahead of the upsert. Feed this stage's
-    * output (instead of the raw fact changelog) into [[fkJoin]] when
-    * facts may change their FK; its state is one long per live order. */
-  class FkRouterProcessor
-      extends StatefulProcessor[Long, FkChange, FkChange] {
-
-    @transient private var lastFk: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      lastFk = getHandle.getValueState[Long]("last_fk",
-        Encoders.scalaLong, TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[FkChange],
-        timerValues: TimerValues): Iterator[FkChange] = {
-      val sorted = rows.toVector.filterNot(_.is_dim).sortBy(_.seq)
-      val out = Vector.newBuilder[FkChange]
-      sorted.foreach { c =>
-        if (lastFk.exists() && lastFk.get() != c.cust_key)
-          out += FkChange(lastFk.get(), is_dim = false, c.order_id,
-            0L, null, c.seq, is_tombstone = true)
-        lastFk.update(c.cust_key)
-        out += c
-      }
-      out.result().iterator
-    }
-  }
-
   /** Streaming entry point: the unioned (fact ∪ dim) changelog, keyed by
     * the foreign key. Update-mode emission. `leftJoin = true` switches
     * to `KTable.leftJoin` semantics (unmatched facts emit with a null
@@ -152,14 +123,27 @@ object StreamingFkJoin {
         TimeMode.None(), OutputMode.Update())
   }
 
-  /** The mutable-FK pre-stage (see [[FkRouterProcessor]]): fact
-    * changelog in, fact changelog + old-key tombstones out, keyed by
-    * order id. Runs as its own streaming stage — the exact analog of
-    * KS's subscription repartition hop. */
+  /** KS subscription-store analog for MUTABLE FKs — the mutable-FK
+    * pre-stage: fact changelog in, fact changelog + old-key tombstones
+    * out, keyed by the fact's PRIMARY key (order id). State "last_fk" is
+    * the last FK per order (one long per live order); on a re-key the
+    * old-key tombstone is emitted ahead of the upsert. Feed this stage's
+    * output (instead of the raw fact changelog) into [[fkJoin]] when
+    * facts may change their FK. Runs as its own streaming stage — the
+    * exact analog of KS's subscription repartition hop. */
   def routeFacts(facts: Dataset[FkChange]): Dataset[FkChange] = {
-    implicit val enc = Encoders.product[FkChange]
-    facts.groupByKey(_.order_id)(Encoders.scalaLong)
-      .transformWithState(new FkRouterProcessor,
-        TimeMode.None(), OutputMode.Update())
+    import facts.sparkSession.implicits._
+    KeyedFold[Long, FkChange, Long, FkChange](facts.filter(!_.is_dim),
+        _.order_id, OutputMode.Update(), "last_fk") { (_, last, rows) =>
+      var fk = last
+      val out = rows.toVector.sortBy(_.seq).flatMap { c =>
+        val tombstone = fk.filter(_ != c.cust_key).map(old =>
+          FkChange(old, is_dim = false, c.order_id, 0L, null, c.seq,
+            is_tombstone = true))
+        fk = Some(c.cust_key)
+        tombstone.toVector :+ c
+      }
+      (fk.get, out.iterator)
+    }
   }
 }

@@ -130,7 +130,7 @@ object StreamingSuppress {
         expiredTimerInfo: ExpiredTimerInfo): Iterator[SuppressOut] = {
       // authoritative only if the live buffer's deadline matches — a
       // buffer already released in-batch cleared its timer, but stay
-      // defensive (the TwsSessionizer stale-timer rule)
+      // defensive (the StatefulSessionizer stale-timer rule)
       if (pending.exists()) {
         val q = pending.get()
         if (timerMs(q.bufferedAtUs + limitUs) <= expiredTimerInfo.getExpiryTimeInMs) {

@@ -109,4 +109,17 @@ class SourcesSpec extends SparkSpec {
       .collect().map(_.toString)
     assert(viaCsv.sameElements(direct))
   }
+
+  test("scan_binary_files stages its input in the session's own directory") {
+    // java.io.tmpdir is shared by every JVM on the box; a key that stages
+    // there can have its input overwritten by another JVM building it
+    val shared = new java.io.File(System.getProperty("java.io.tmpdir"),
+      "graft_binary_docs").getCanonicalPath
+    val files = SparkEntry.queries("scan_binary_files")(spark, sfDir).inputFiles
+    assert(files.nonEmpty)
+    files.foreach { f =>
+      val path = new java.io.File(new java.net.URI(f)).getCanonicalPath
+      assert(!path.startsWith(shared), s"$path is under the shared $shared")
+    }
+  }
 }

@@ -107,25 +107,6 @@ class StreamingSpec extends SparkSpec {
     assert(rows == Seq(1L, 2L)) // session{t0}=1 event; session{595,600}=2; late 300 dropped
   }
 
-  test("flatMapGroupsWithState stateful sessionizer ≡ session_window") {
-    val data = Seq(
-      ev(1, 1, 0, 2.0), ev(2, 1, 10, 3.0), ev(3, 1, 90, 1.0),
-      ev(4, 2, 0, 5.0), ev(5, 2, 29, 1.0), ev(6, 2, 59, 1.0), // chained session
-      ev(7, 3, 0, 1.0))
-    val flush = Seq(ev(99, 9, 10000), ev(100, 9, 20000))
-    val ms = MemoryStream[Event]
-    val out = runToMemory(
-      StatefulSessionizer.sessionize(ms.toDS()).toDF(),
-      "stateful_sessions", ms, Seq(data, flush, Seq.empty))
-      .filter(col("user_id") < 9)
-    val batch = Sessionization.nativeSessions(data.toDF())
-    val canon = (df: DataFrame) => df
-      .select(col("user_id"), col("session_start"), col("session_end"),
-        col("n_events"), round(col("sum_value"), 6))
-      .collect().map(_.toSeq).toSet
-    assert(canon(out) == canon(batch))
-  }
-
   /** Run `body` with the RocksDB state-store provider (required by
     * transformWithState), restoring prior conf afterwards. */
   private def withRocksDb[A](body: => A): A = {
@@ -139,7 +120,7 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("transformWithState sessionizer ≡ session_window (4-way parity closes)") {
+  test("transformWithState sessionizer ≡ session_window (3-way parity closes)") {
     withRocksDb {
       val data = Seq(
         ev(1, 1, 0, 2.0), ev(2, 1, 10, 3.0), ev(3, 1, 90, 1.0),
@@ -148,7 +129,7 @@ class StreamingSpec extends SparkSpec {
       val flush = Seq(ev(99, 9, 10000), ev(100, 9, 20000))
       val ms = MemoryStream[Event]
       val out = runToMemory(
-        graft.streaming.TwsSessionizer.sessionize(ms.toDS()).toDF(),
+        StatefulSessionizer.sessionize(ms.toDS()).toDF(),
         "tws_sessions", ms, Seq(data, flush, Seq.empty))
         .filter(col("user_id") < 9)
       val batch = Sessionization.nativeSessions(data.toDF())
@@ -168,7 +149,7 @@ class StreamingSpec extends SparkSpec {
       // final watermark flush emits exactly ONE 3-event session.
       val ms = MemoryStream[Event]
       val out = runToMemory(
-        graft.streaming.TwsSessionizer.sessionize(ms.toDS()).toDF(),
+        StatefulSessionizer.sessionize(ms.toDS()).toDF(),
         "tws_rearm", ms,
         Seq(Seq(ev(1, 1, 0, 1.0)), Seq(ev(2, 1, 10, 2.0)),
           Seq(ev(3, 1, 20, 3.0)),
@@ -191,7 +172,7 @@ class StreamingSpec extends SparkSpec {
         events.toDF().coalesce(1).write.mode("append").parquet(src)
       def runOnce(): Unit = {
         val stream = spark.readStream.schema(schema).parquet(src).as[Event]
-        val q = graft.streaming.TwsSessionizer.sessionize(stream).toDF()
+        val q = StatefulSessionizer.sessionize(stream).toDF()
           .writeStream.format("parquet").option("path", out)
           .option("checkpointLocation", ckpt).outputMode("append").start()
         try q.processAllAvailable() finally q.stop()
@@ -210,24 +191,104 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("bootstrap state: streaming continues sessions opened by a batch backfill") {
-    import StatefulSessionizer.OpenSession
-    // history ended with user 1's session open: 2 events, last at t-10min
-    val t0us = T0 * 1000L
-    val initial = Seq((1L, OpenSession(t0us - 20L * 60 * 1000000,
-      t0us - 10L * 60 * 1000000, 2, 7.5))).toDS()
+  /** Stream ≡ batch on every micro-batch (InkStream's consistency
+    * tracking, which catches state bugs that cancel out by end of
+    * stream): after each wave, read the watermark the last batch ran
+    * with from `lastProgress`; the sink must hold exactly the batch
+    * sessions over every row added so far that Spark's eviction rule
+    * has closed by then, `session_end <= watermark`. Returns each wave's
+    * (watermark, sessions it emitted). The feed must hold no late rows:
+    * the batch side keeps every row. For `StatefulSessionizer` the rule
+    * holds only while each key's rows arrive in event-time order and no
+    * row closes a session by the gap before the watermark passes its
+    * end: that sessionizer emits a gap-closed session at once, and folds
+    * an out-of-order row into the open session without moving its
+    * start. */
+  private def checkEveryBatch(df: DataFrame, name: String,
+      ms: MemoryStream[Event], waves: Seq[Seq[Event]]): Seq[(Timestamp, Long)] = {
+    val canon = (d: DataFrame) => d
+      .select(col("user_id"), col("session_start"), col("session_end"),
+        col("n_events"), round(col("sum_value"), 6))
+      .collect().map(_.toSeq).toSet
+    val q = df.writeStream.format("memory").queryName(name)
+      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
+    try {
+      var seen = Seq.empty[Event]
+      var emitted = 0L
+      waves.map { w =>
+        if (w.nonEmpty) ms.addData(w)
+        q.processAllAvailable()
+        seen ++= w
+        val wm = Timestamp.from(java.time.Instant.parse(
+          q.lastProgress.eventTime.get("watermark")))
+        val sink = spark.table(name)
+        val closed = Sessionization.nativeSessions(seen.toDF())
+          .filter(col("session_end") <= lit(wm))
+        assert(canon(sink) == canon(closed), s"after ${seen.size} rows, watermark $wm")
+        val before = emitted
+        emitted = sink.count()
+        (wm, emitted - before)
+      }
+    } finally q.stop()
+  }
+
+  /** Four waves for [[checkEveryBatch]] (10-min watermark delay, 30-min
+    * gap): the first emits nothing; the second moves the watermark to
+    * t+40, exactly user 1's session end, and emits it with user 2's,
+    * but not user 6's, which ends 0.5 ms later; the third merges an
+    * in-grace row into user 3's open session and emits it with user 4's
+    * and 6's; the empty fourth emits nothing. */
+  private val everyBatchWaves = {
+    val halfMsAfter10 = ts(10)
+    halfMsAfter10.setNanos(500000)
+    Seq(
+      Seq(ev(1, 1, 0, 2.0), ev(2, 1, 10, 3.0), ev(3, 2, 5, 5.0), ev(4, 3, 20, 1.0),
+        Event(8, 6, halfMsAfter10, 1.0)),
+      Seq(ev(5, 4, 50, 4.0)),
+      Seq(ev(6, 3, 45, 2.0), ev(7, 5, 100, 1.0)),
+      Seq.empty)
+  }
+
+  private val everyBatchEmits = Seq((ts(10), 0L), (ts(40), 2L), (ts(90), 3L), (ts(90), 0L))
+
+  test("session_window ≡ batch on every micro-batch") {
     val ms = MemoryStream[Event]
-    val out = runToMemory(
-      StatefulSessionizer.sessionizeFromState(ms.toDS(), initial).toDF(),
-      "bootstrap_sessions", ms,
-      Seq(Seq(ev(1, 1, 5, 1.0), ev(2, 2, 0, 2.0)),          // in-gap: merges
-        Seq(ev(99, 9, 10000), ev(100, 9, 20000)), Seq.empty))
-      .filter(col("user_id") < 9)
-    val rows = out.select("user_id", "n_events", "sum_value").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(_._1).toSeq
-    // user 1: bootstrap(2 events, 7.5) + event at t+5min = one 3-event session
-    // spanning the cutover; user 2: fresh 1-event session
-    assert(rows == Seq((1L, 3L, 8.5), (2L, 1L, 2.0)), rows.toString)
+    val perWave = checkEveryBatch(
+      StreamingSessions.sessionize(ms.toDF(), "30 minutes", "10 minutes"),
+      "every_batch_window", ms, everyBatchWaves)
+    assert(perWave == everyBatchEmits, perWave.toString)
+  }
+
+  test("transformWithState sessionizer ≡ batch on every micro-batch") {
+    withRocksDb {
+      val ms = MemoryStream[Event]
+      val perWave = checkEveryBatch(
+        StatefulSessionizer.sessionize(ms.toDS()).toDF(),
+        "every_batch_tws", ms, everyBatchWaves)
+      assert(perWave == everyBatchEmits, perWave.toString)
+    }
+  }
+
+  test("bootstrap state: streaming continues sessions opened by a batch backfill") {
+    withRocksDb {
+      import StatefulSessionizer.OpenSession
+      // history ended with user 1's session open: 2 events, last at t-10min
+      val t0us = T0 * 1000L
+      val initial = Seq((1L, OpenSession(t0us - 20L * 60 * 1000000,
+        t0us - 10L * 60 * 1000000, 2, 7.5))).toDS()
+      val ms = MemoryStream[Event]
+      val out = runToMemory(
+        StatefulSessionizer.sessionizeFromState(ms.toDS(), initial).toDF(),
+        "bootstrap_sessions", ms,
+        Seq(Seq(ev(1, 1, 5, 1.0), ev(2, 2, 0, 2.0)),          // in-gap: merges
+          Seq(ev(99, 9, 10000), ev(100, 9, 20000)), Seq.empty))
+        .filter(col("user_id") < 9)
+      val rows = out.select("user_id", "n_events", "sum_value").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(_._1).toSeq
+      // user 1: bootstrap(2 events, 7.5) + event at t+5min = one 3-event session
+      // spanning the cutover; user 2: fresh 1-event session
+      assert(rows == Seq((1L, 3L, 8.5), (2L, 1L, 2.0)), rows.toString)
+    }
   }
 
   test("streaming dedup drops duplicate event_ids within watermark") {
@@ -497,34 +558,6 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("checkpoint restart recovers flatMapGroupsWithState custom state") {
-    val base = java.nio.file.Files.createTempDirectory("graft_ckpt_fmgws").toString
-    val src = s"$base/src"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
-    val batch1 = Seq(ev(1, 1, 0, 2.0), ev(2, 1, 10, 3.0), ev(3, 2, 5, 5.0))
-    val batch2 = Seq(ev(4, 1, 60, 1.0), ev(99, 9, 10000), ev(100, 9, 20000))
-    val schema = batch1.toDF().schema
-    def write(events: Seq[Event]): Unit =
-      events.toDF().coalesce(1).write.mode("append").parquet(src)
-    def runOnce(): Unit = {
-      val stream = spark.readStream.schema(schema).parquet(src).as[Event]
-      val q = StatefulSessionizer.sessionize(stream).toDF()
-        .writeStream.format("parquet").option("path", out)
-        .option("checkpointLocation", ckpt).outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    write(batch1); runOnce() // user-1/2 sessions live only in GroupState now
-    write(batch2); runOnce() // restart must restore them
-    val canon = (df: DataFrame) => df
-      .select(col("user_id"), col("session_start"), col("session_end"),
-        col("n_events"), round(col("sum_value"), 6))
-      .collect().map(_.toSeq).toSet
-    val got = spark.read.parquet(out).filter(col("user_id") < 9)
-    val batch = Sessionization.nativeSessions((batch1 ++ batch2).toDF())
-      .filter(col("user_id") < 9)
-    assert(canon(got) == canon(batch))
-    assert(got.count() == 3)
-  }
-
   test("checkpoint restart recovers sessionizer state (default state store)") {
     restartRecoveryRun("ckpt_hdfs", None)
   }
@@ -535,35 +568,37 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("processing-time timeout emits open sessions on idle (wall-clock punctuate)") {
-    val data = Seq(ev(1, 1, 0, 2.0), ev(2, 1, 10, 3.0), ev(3, 1, 90, 1.0),
-      ev(4, 2, 0, 5.0))
-    val ms = MemoryStream[Event]
-    val q = StatefulSessionizer.sessionizeProcTime(ms.toDS(), idleMs = 500).toDF()
-      .writeStream.format("memory").queryName("proctime_sessions")
-      .outputMode("append").trigger(Trigger.ProcessingTime(100)).start()
-    try {
-      ms.addData(data)
-      // The gap-closed session (user1 {0,10}) emits with the batch; the
-      // still-open ones (user1 {90}, user2 {0}) must emit via the idle
-      // timeout with NO further data and NO watermark movement — the
-      // guarantee EventTimeTimeout cannot give on a stalled source.
-      // Poll the sink only: with ProcessingTimeTimeout the trigger keeps
-      // scheduling timeout micro-batches itself, and processAllAvailable
-      // never sees a quiescent stream (it blocks indefinitely here).
-      val deadline = System.currentTimeMillis() + 30000
-      while (spark.table("proctime_sessions").count() < 3
-          && System.currentTimeMillis() < deadline) {
-        Thread.sleep(100)
-      }
-    } finally q.stop()
-    val canon = (df: DataFrame) => df
-      .select(col("user_id"), col("session_start"), col("session_end"),
-        col("n_events"), round(col("sum_value"), 6))
-      .collect().map(_.toSeq).toSet
-    // Session boundaries match the batch/event-time semantics exactly —
-    // the wall clock decides only WHEN the open tail emits, never its shape.
-    assert(canon(spark.table("proctime_sessions"))
-      == canon(Sessionization.nativeSessions(data.toDF())))
+    withRocksDb {
+      val data = Seq(ev(1, 1, 0, 2.0), ev(2, 1, 10, 3.0), ev(3, 1, 90, 1.0),
+        ev(4, 2, 0, 5.0))
+      val ms = MemoryStream[Event]
+      val q = StatefulSessionizer.sessionizeProcTime(ms.toDS(), idleMs = 500).toDF()
+        .writeStream.format("memory").queryName("proctime_sessions")
+        .outputMode("append").trigger(Trigger.ProcessingTime(100)).start()
+      try {
+        ms.addData(data)
+        // The gap-closed session (user1 {0,10}) emits with the batch; the
+        // still-open ones (user1 {90}, user2 {0}) must emit via the idle
+        // timer with NO further data and NO watermark movement — the
+        // guarantee an event-time timer cannot give on a stalled source.
+        // Poll the sink only: with processing-time timers the trigger keeps
+        // scheduling timer micro-batches itself, and processAllAvailable
+        // never sees a quiescent stream (it blocks indefinitely here).
+        val deadline = System.currentTimeMillis() + 30000
+        while (spark.table("proctime_sessions").count() < 3
+            && System.currentTimeMillis() < deadline) {
+          Thread.sleep(100)
+        }
+      } finally q.stop()
+      val canon = (df: DataFrame) => df
+        .select(col("user_id"), col("session_start"), col("session_end"),
+          col("n_events"), round(col("sum_value"), 6))
+        .collect().map(_.toSeq).toSet
+      // Session boundaries match the batch/event-time semantics exactly —
+      // the wall clock decides only WHEN the open tail emits, never its shape.
+      assert(canon(spark.table("proctime_sessions"))
+        == canon(Sessionization.nativeSessions(data.toDF())))
+    }
   }
 
   test("branch fan-out: each event lands in exactly one sink (KStream split)") {
