@@ -1,8 +1,12 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+import scala.util.Try
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Parquet table loaders + cross-engine determinism helpers.
   *
@@ -17,8 +21,52 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, TimestampN
 object Tables {
   type Q = (SparkSession, String) => DataFrame
 
-  def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Table `name` under `dir`, read with its schema inferred once per
+    * JVM. Inferring a Parquet schema runs a Spark job, and every key build
+    * calls `t`, so a short query paid one job per build. The inferred
+    * schema is kept per (path, Parquet type-resolution confs) together
+    * with the listing it came from; a changed listing (a rewritten table)
+    * infers again. Each call still returns a fresh relation with fresh
+    * attribute ids, so self-joins behave as with a plain read. */
+  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    listing(spark, path) match {
+      case None => spark.read.parquet(path) // missing path: Spark's own error
+      case Some(files) =>
+        val key = (path, schemaConfs.map(spark.conf.get))
+        val schema = Option(schemas.get(key)).collect { case (`files`, st) => st }
+          .getOrElse {
+            val st = spark.read.parquet(path).schema
+            schemas.put(key, (files, st))
+            st
+          }
+        spark.read.schema(schema).parquet(path)
+    }
+  }
+
+  /** Session confs that change the schema Parquet inference resolves. */
+  private val schemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  private type Listing = Seq[(String, Long, Long)]
+  private val schemas = new ConcurrentHashMap[(String, Seq[String]), (Listing, StructType)]()
+
+  /** (file, length, modification time) of every file under `path`, or
+    * None when the path cannot be listed. */
+  private def listing(spark: SparkSession, path: String): Option[Listing] = Try {
+    val p = new Path(path)
+    val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+    val b = Seq.newBuilder[(String, Long, Long)]
+    while (it.hasNext) {
+      val f = it.next()
+      b += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+    b.result().sorted
+  }.toOption
 
   /** Round-robin fan-out for SINGLE-SPLIT scans only (round 15, gating
     * the round-14 unconditional repartitions — guide §2.6 vs §2.4): the
@@ -82,6 +130,19 @@ object Tables {
 
   /** Same with 6 fractional digits for small-magnitude values (events.value). */
   def dsum6(c: Column): Column = sum(c.cast(DecimalType(18, 6))).cast(DoubleType)
+
+  /** First non-null `c` at or after the current row, in `order`
+    * (ascending, nulls first) within `partition`. Spark evaluates a
+    * `currentRow..unboundedFollowing` frame again from every row, O(n²)
+    * per partition, so this reads it as the running frame of the mirrored
+    * order: the last non-null up to the current row under each column's
+    * `desc_nulls_last`. Equal to `first(c, ignoreNulls)` over the
+    * following frame wherever rows that tie on `order` are null in `c`
+    * (the as-of joins' tie shape) or no rows tie. */
+  def nextNonNull(c: Column, partition: Column, order: Seq[Column]): Column =
+    last(c, ignoreNulls = true).over(Window.partitionBy(partition)
+      .orderBy(order.map(_.desc_nulls_last): _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow))
 
   /** Oracle-side SQL fragment matching [[dsum]]. */
   def dsumSql(x: String): String = s"CAST(sum(CAST($x AS DECIMAL(18,4))) AS DOUBLE)"

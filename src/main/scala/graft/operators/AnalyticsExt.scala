@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables._
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -394,27 +395,30 @@ object AnalyticsExt {
     // Ordered conversion funnel view → click → purchase: per user, the
     // first view, the first click strictly AFTER it, the first purchase
     // strictly after that — the chained-first-occurrence relational
-    // funnel (Spark has no MATCH_RECOGNIZE; this is the standard
-    // formulation). Every join and agg is keyed on user_id, so at 100 TB
-    // all three stages ride one hash partitioning (pre-bucketing events
-    // by user makes them co-located scans); step frames only ever carry
-    // (user_id, micros). Time-to-convert sums exact integer micros —
-    // engine-identical division at the end.
+    // funnel (Spark has no MATCH_RECOGNIZE). t1 and t2 are whole-user
+    // window minima and t3 a per-user aggregate, all on ONE user_id hash
+    // exchange (pre-bucketing events by user makes it a co-located scan);
+    // a user missing a step has a null there, so each step count is
+    // count(column) over the per-user rows, and a final 1-row aggregate
+    // replaces the old three self-joins and cross-joined step counts.
+    // Time-to-convert sums exact integer micros — engine-identical
+    // division at the end, null when no user converts.
     Op("funnel_steps", (s, dir) => {
-      val e = events(s, dir).select("user_id", "ts", "event_type")
-      val t1 = e.filter(col("event_type") === "view")
-        .groupBy("user_id").agg(min("ts").as("t1"))
-      val t2 = e.filter(col("event_type") === "click")
-        .join(t1, "user_id").filter(col("ts") > col("t1"))
-        .groupBy("user_id").agg(min("t1").as("t1"), min("ts").as("t2"))
-      val t3 = e.filter(col("event_type") === "purchase")
-        .join(t2, "user_id").filter(col("ts") > col("t2"))
-        .groupBy("user_id").agg(min("t1").as("t1"), min("ts").as("t3"))
-      t1.agg(count(lit(1)).as("n_view"))
-        .crossJoin(t2.agg(count(lit(1)).as("n_click_after_view")))
-        .crossJoin(t3.agg(count(lit(1)).as("n_purchase_after_click"),
-          round(sum(unix_micros(col("t3")) - unix_micros(col("t1")))
-            / count(lit(1)) / lit(1000000.0), 6).as("avg_view_to_purchase_s")))
+      val user = Window.partitionBy("user_id")
+      val ts = col("ts")
+      def firstOf(typ: String, after: Column = lit(true)): Column =
+        min(when(col("event_type") === typ && after, ts))
+      val steps = events(s, dir).select("user_id", "ts", "event_type")
+        .withColumn("t1", firstOf("view").over(user))
+        .withColumn("t2", firstOf("click", ts > col("t1")).over(user))
+        .groupBy("user_id")
+        .agg(min("t1").as("t1"), min("t2").as("t2"),
+          firstOf("purchase", ts > col("t2")).as("t3"))
+      steps.agg(count(col("t1")).as("n_view"),
+        count(col("t2")).as("n_click_after_view"),
+        count(col("t3")).as("n_purchase_after_click"),
+        round(sum(unix_micros(col("t3")) - unix_micros(col("t1")))
+          / count(col("t3")) / lit(1000000.0), 6).as("avg_view_to_purchase_s"))
     },
       Some("""WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_type FROM events),
              | t1 AS (SELECT user_id, min(ts) AS t1 FROM e
@@ -1138,14 +1142,17 @@ object AnalyticsExt {
     // sparse observed points (hourly purchase sums) are stretched onto the
     // gap-filled grid, and every missing bucket gets the value on the
     // straight line between its nearest observed neighbors. The bracketing
-    // neighbors come from two running windows (last/first IGNORE NULLS) —
-    // no self-join, no per-gap scan; the grid rides ONE user_id hash
-    // exchange shared by grid build + both windows. The interpolation
-    // fraction uses the grid row number (integer, timezone-free) rather
-    // than epoch arithmetic, and the double math mirrors the oracle
-    // op-for-op, so results hash-match bit-exactly. Rows outside the
-    // first/last observation (leading edge) stay NULL — interpolation
-    // never extrapolates.
+    // neighbors come from two running windows, the previous one from
+    // last IGNORE NULLS up to the row and the next one from
+    // `nextNonNull`'s mirrored running frame (buckets are unique per user,
+    // so it equals first IGNORE NULLS over the following rows without that
+    // frame's O(n²) re-evaluation) — no self-join, no per-gap scan; the
+    // grid rides ONE user_id hash exchange shared by grid build + both
+    // windows. The interpolation fraction uses the grid row number
+    // (integer, timezone-free) rather than epoch arithmetic, and the
+    // double math mirrors the oracle op-for-op, so results hash-match
+    // bit-exactly. Rows outside the first/last observation (leading edge)
+    // stay NULL — interpolation never extrapolates.
     Op("ts_interpolate", (s, dir) => {
       val obs = events(s, dir).filter(col("event_type") === "purchase")
         .groupBy(col("user_id"), date_trunc("hour", col("ts")).as("bucket"))
@@ -1157,15 +1164,15 @@ object AnalyticsExt {
             .as("bucket"))
       val wrn = Window.partitionBy("user_id").orderBy("bucket")
       val wp = wrn.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wn = wrn.rowsBetween(Window.currentRow, Window.unboundedFollowing)
+      val next = nextNonNull(_: Column, col("user_id"), Seq(col("bucket")))
       val obsRn = when(col("v").isNotNull, col("rn"))
       span.join(obs, Seq("user_id", "bucket"), "left")
         .withColumn("rn", row_number().over(wrn).cast("double"))
         .select(col("user_id"), col("bucket"), col("v"), col("rn"),
           last(col("v"), ignoreNulls = true).over(wp).as("v0"),
           last(obsRn, ignoreNulls = true).over(wp).as("rn0"),
-          first(col("v"), ignoreNulls = true).over(wn).as("v1"),
-          first(obsRn, ignoreNulls = true).over(wn).as("rn1"))
+          next(col("v")).as("v1"),
+          next(obsRn).as("rn1"))
         .select(col("user_id"), col("bucket"),
           // explicit floor(x·1e6 + ½)/1e6 rounding, mirrored in the
           // oracle: engine round() builtins disagree on exact .5 ties

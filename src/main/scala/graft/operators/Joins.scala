@@ -277,8 +277,12 @@ object Joins {
     // a following frame the first click strictly after (same-instant
     // clicks sort before the purchase, so they land in the backward
     // frame exactly once) — then the winner is a per-row comparison of
-    // the two µs gaps. Still one exchange on the user key (all four
-    // window columns share the same sort), no pair blowup.
+    // the two µs gaps. The following frame is `nextNonNull`'s mirrored
+    // running frame: rows tie on the sort only between purchases, whose
+    // click columns are null, so it picks what first IGNORE NULLS over the
+    // following rows would, in one pass instead of O(n²). Still one
+    // exchange on the user key (the two directions sort that partitioning
+    // twice), no pair blowup.
     Op("join_asof_nearest", (s, dir) => {
       val ev = events(s, dir)
       val c = ev.filter(col("event_type") === "click").select(
@@ -292,14 +296,12 @@ object Joins {
       val ord = Seq(col("ats"), col("typ"), col("c_key"))
       val back = Window.partitionBy("k").orderBy(ord: _*)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val fwd = Window.partitionBy("k").orderBy(ord: _*)
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
       val cts = when(col("typ") === 0, col("ats"))
       c.unionByName(p)
         .withColumn("b_key", last(col("c_key"), ignoreNulls = true).over(back))
         .withColumn("b_ts", last(cts, ignoreNulls = true).over(back))
-        .withColumn("f_key", first(col("c_key"), ignoreNulls = true).over(fwd))
-        .withColumn("f_ts", first(cts, ignoreNulls = true).over(fwd))
+        .withColumn("f_key", nextNonNull(col("c_key"), col("k"), ord))
+        .withColumn("f_ts", nextNonNull(cts, col("k"), ord))
         .filter(col("typ") === 1 &&
           (col("b_key").isNotNull || col("f_key").isNotNull))
         .withColumn("b_gap", unix_micros(col("ats")) - unix_micros(col("b_ts")))
@@ -391,9 +393,12 @@ object Joins {
     // "what did this order lead to" direction — join_asof reversed).
     // Same union-and-scan shape, mirrored: orders sort BEFORE events at
     // an equal timestamp (typ 0 < 1) so an exactly-simultaneous event is
-    // visible to the order, and the window runs current→following with
-    // `first(ignoreNulls)`. One exchange on the customer key, no pair
-    // blowup, ties broken by event_id ascending — all deterministic.
+    // visible to the order, and `nextNonNull` takes the first event at or
+    // after the row (rows tie on the sort only between orders, whose
+    // e_key is null, so its mirrored running frame equals the following
+    // frame without that frame's O(n²) re-evaluation). One exchange on the
+    // customer key, no pair blowup, ties broken by event_id ascending —
+    // all deterministic.
     Op("join_asof_forward", (s, dir) => {
       val o = t(s, dir, "orders").select(
         col("o_custkey").as("k"), col("o_orderdate").as("ats"),
@@ -403,11 +408,9 @@ object Joins {
         col("user_id").as("k"), col("ts").as("ats"),
         lit(null).cast("long").as("o_orderkey"), col("event_id").as("e_key"),
         lit(1).as("typ"))
-      val w = Window.partitionBy("k")
-        .orderBy(col("ats"), col("typ"), col("e_key"))
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
       o.unionByName(e)
-        .withColumn("next_event_id", first(col("e_key"), ignoreNulls = true).over(w))
+        .withColumn("next_event_id", nextNonNull(col("e_key"), col("k"),
+          Seq(col("ats"), col("typ"), col("e_key"))))
         .filter(col("typ") === 0 && col("next_event_id").isNotNull)
         .select("o_orderkey", "next_event_id")
         .orderBy("o_orderkey")

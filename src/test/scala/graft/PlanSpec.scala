@@ -122,7 +122,6 @@ class PlanSpec extends SparkSpec {
             "agg_cuped_adjustment", // 1-row moment-frame broadcast cross (theta)
             "graph_modularity_lang", // 1-row edge-count aggregate cross join
             "ts_psi_drift", // 1-row (totals, bucket-count) aggregate cross join
-            "funnel_steps",  // three 1-row step-count aggregates cross-joined
             "text_entropy_kl", // 1-row corpus-total aggregate cross join (as text_tfidf)
             "text_pmi_bigrams", // two 1-row totals (N tokens, N bigrams) cross-joined
             "agg_histogram_equidepth", // 1-row decile-boundary aggregate cross join
@@ -314,7 +313,8 @@ class PlanSpec extends SparkSpec {
       "pipeline_pack_sequences" -> 1, // one source-partitioned cumsum window + agg reuse
       "text_lm_score" -> 5,        // bigram agg + head agg + doc re-agg; LM broadcast
       "scan_orc_roundtrip" -> 0,   // pure scan
-      "funnel_steps" -> 5,         // three user_id-keyed step stages + tiny counts
+      "funnel_steps" -> 1,         // t1/t2 windows + t3 agg share the user_id
+                                   // exchange; the counts are one 1-row agg
       "pipeline_chunk_docs" -> 0,  // pure projection (sequence + slice)
       "sim_ivf_knn" -> 11,         // seed pick + 2 Lloyd assigns + probe ranks
       "sim_pq_knn" -> 56,          // STATIC count: the persisted codebook's
@@ -326,8 +326,9 @@ class PlanSpec extends SparkSpec {
       "sim_ivfpq_knn" -> 66,       // STATIC count, same cache-lineage inflation
                                    // (IVF index + codebook both persisted);
                                    // runtime = probe + packed-join + rank
-      "ts_interpolate" -> 2,       // obs agg + grid join; rn/prev/next windows
-                                   // all reuse the user_id sort order
+      "ts_interpolate" -> 2,       // obs agg + grid join; rn/prev windows and
+                                   // the mirrored next window (nextNonNull)
+                                   // all reuse the user_id partitioning
       "text_tfidf" -> 4,           // tf agg + df agg + idf attach
       "text_edit_distance" -> 0,   // blocked pairs broadcast-joined
       // round-2 pipelines (measured at their round-2 plan shapes):
@@ -410,7 +411,8 @@ class PlanSpec extends SparkSpec {
       "ts_ewma" -> 1,              // one (user, type) exchange; the fold is
                                    // a per-group array expression
       "join_asof_forward" -> 1,    // one customer-key exchange — the same
-                                   // union-and-scan shape as join_asof
+                                   // union-and-scan shape as join_asof, its
+                                   // following frame a mirrored running one
       "pipeline_cluster_sample" -> 1, // sizes agg + gate share the group_id
                                    // exchange (labels: checkpointed leaf)
       "join_interval_overlap" -> 3, // orderkey exchange per join side +
@@ -421,7 +423,8 @@ class PlanSpec extends SparkSpec {
       "win_running_distinct" -> 2, // (user, type) first-seen + user running sum
       "join_asof_tolerance" -> 1,  // the join_asof union-and-scan exchange
       "join_asof_nearest" -> 1,    // BOTH directional frames share one
-                                   // user-key exchange and sort
+                                   // user-key exchange (the forward one is
+                                   // nextNonNull's mirrored sort)
       "sim_range_search" -> 0,     // broadcast query ball: pure scan+filter
       "sim_nearest_exemplar" -> 1, // one c_id hash agg; exemplars broadcast
       "pipeline_mix_temperature" -> 2, // per-source counts + spec derivation;
