@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * smoke), graftbench's session and the test suite's shared session. None
   * of them changes a plan or a query result.
   *
-  * Stability. Round 14's driver runs died with exit code 56
+  * Stability. Round 14's bench sweeps and suite runs died with exit code 56
   * (`ExecutorExitCode.HEARTBEAT_FAILURE`): on a contended box one long
   * GC/CPU stall makes the local-mode executor miss enough heartbeats that
   * it kills its own JVM mid-sweep. The executor and driver share a JVM, so
